@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON metrics line (driver contract). Queries run in sorted
   * name order after a warmup action so no query pays the session/JIT
@@ -280,33 +278,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCpus
     val reps = math.max(1, sys.props.get("reps")
       .orElse(sys.env.get("SPARK_GRAFT_REPS")).map(_.toInt).getOrElse(3))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local file:// IO without client-side CRC sidecars: every tiny
-      // checkpoint/state/commit-log file otherwise writes twice (data
-      // + .crc) and re-verifies on read — measured ~30-50% of the
-      // streaming parity rows' wall clock (OPTIMIZATION_r20.md). The
-      // FileContext route (checkpoint manager) goes raw here; the
-      // FileSystem route keeps LocalFileSystem (RocksDB's
-      // copyFromLocalFile casts to it) with checksums turned off via
-      // LocalFsTuning below. At cluster scale checkpoints live on
-      // HDFS/S3 where this knob is moot; recoverability rides rename
-      // atomicity, not client CRC.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LocalFsTuning.disableLocalCrc(spark)
-    LogHygiene.quietStreamingProbes()
+    val spark = GraftSession.local(cpus)
 
     // warmup: session/codegen/parquet-footer costs land here, not on the
     // first timed query

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 import graft.sources.ChunkStore
@@ -12,26 +11,8 @@ import graft.streaming.EventStream
   * `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local file:// IO without client-side CRC sidecars: every tiny
-      // checkpoint/state/commit-log file otherwise writes twice (data
-      // + .crc) and re-verifies on read — measured ~30-50% of the
-      // streaming parity rows' wall clock (OPTIMIZATION_r20.md). The
-      // FileContext route (checkpoint manager) goes raw here; the
-      // FileSystem route keeps LocalFileSystem (RocksDB's
-      // copyFromLocalFile casts to it) with checksums turned off via
-      // LocalFsTuning below. At cluster scale checkpoints live on
-      // HDFS/S3 where this knob is moot; recoverability rides rename
-      // atomicity, not client CRC.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
-    LocalFsTuning.disableLocalCrc(spark)
     import spark.implicits._
 
     // chunk store: upsert-by-url + guarded cleanup

@@ -21,5 +21,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinColumnPruning)
+    // the IVF top-k rewrite (fires only for scans registered in
+    // KnnIndexRegistry)
+    e.injectOptimizerRule(_ => graft.plans.KnnIvfRewrite)
   }
 }

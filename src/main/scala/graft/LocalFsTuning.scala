@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Local-filesystem IO tuning for the driver-contract entry points
-  * (Bench / Verify / TimeQuery / TimeQ / Explain / ScaleProbe / Demo).
+/** Local-filesystem IO tuning for every session [[GraftSession.local]]
+  * builds (Bench / Verify / TimeQuery / Explain / ScaleProbe / Demo and
+  * the test suites) and for perfbench's own session.
   *
   * Hadoop's `LocalFileSystem` is a ChecksumFileSystem: every file it
   * writes lands TWICE (data + `.crc` sidecar) and every read re-hashes

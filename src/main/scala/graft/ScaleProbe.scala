@@ -258,36 +258,14 @@ object ScaleProbe {
     val deep = args.length > 2 && args(2) == "--deep"
     val only: Option[Set[String]] =
       if (args.length > 2 && !deep) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local file:// IO without client-side CRC sidecars: every tiny
-      // checkpoint/state/commit-log file otherwise writes twice (data
-      // + .crc) and re-verifies on read — measured ~30-50% of the
-      // streaming parity rows' wall clock (OPTIMIZATION_r20.md). The
-      // FileContext route (checkpoint manager) goes raw here; the
-      // FileSystem route keeps LocalFileSystem (RocksDB's
-      // copyFromLocalFile casts to it) with checksums turned off via
-      // LocalFsTuning below. At cluster scale checkpoints live on
-      // HDFS/S3 where this knob is moot; recoverability rides rename
-      // atomicity, not client CRC.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // sf0.1-scale files are far below the 128 MB default split, so
-      // without this every file is ONE scan task and parallelism stops
-      // tracking data size; 4 MB keeps split count proportional to
-      // bytes at all three scales, the way a real cluster's scan
-      // parallelism grows with the corpus
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LocalFsTuning.disableLocalCrc(spark)
+    val cpus = GraftSession.defaultCpus
+    // sf0.1-scale files are far below the 128 MB default split, so
+    // without this every file is ONE scan task and parallelism stops
+    // tracking data size; 4 MB keeps split count proportional to
+    // bytes at all three scales, the way a real cluster's scan
+    // parallelism grows with the corpus
+    val spark = GraftSession.local(cpus,
+      "spark.sql.files.maxPartitionBytes" -> "4m")
 
     val scales = if (deep) Seq(1, 3, 10, 30) else Seq(1, 3, 10)
     val dirs: Map[Int, String] = scales.map { k =>

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: time ONE named SparkEntry query N times under the same
+/** Dev tool: time named SparkEntry queries N times each under the same
   * session/caching conditions the bench uses (warmup action, streaming
   * StageCache active, curation cache staged when the row needs it).
   * Exists for regression adjudication — the round-14 verdict flagged
@@ -10,39 +8,15 @@ import org.apache.spark.sql.SparkSession
   * readings, undecidable without a repeated-measures run; the full
   * bench can't re-rep one row in isolation.
   *
-  * Usage: runMain graft.TimeQuery <queryName> [nReps=6]
+  * Usage: runMain graft.TimeQuery <queryName>[,<queryName>...] [nReps=6]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").toSeq
     val n = if (args.length > 1) args(1).toInt else 6
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local file:// IO without client-side CRC sidecars: every tiny
-      // checkpoint/state/commit-log file otherwise writes twice (data
-      // + .crc) and re-verifies on read — measured ~30-50% of the
-      // streaming parity rows' wall clock (OPTIMIZATION_r20.md). The
-      // FileContext route (checkpoint manager) goes raw here; the
-      // FileSystem route keeps LocalFileSystem (RocksDB's
-      // copyFromLocalFile casts to it) with checksums turned off via
-      // LocalFsTuning below. At cluster scale checkpoints live on
-      // HDFS/S3 where this knob is moot; recoverability rides rename
-      // atomicity, not client CRC.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LocalFsTuning.disableLocalCrc(spark)
-    LogHygiene.quietStreamingProbes()
+    val spark = GraftSession.local(GraftSession.defaultCpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).count()
     // shutdown hook (matching the bench's pattern) so a crashed run
@@ -53,7 +27,7 @@ object TimeQuery {
       .createTempDirectory("graft_timeq_streams")
     sys.props(graft.streaming.StageCache.Prop) = cacheRoot.toString
     val curationCache: Option[java.nio.file.Path] =
-      if (name.startsWith("curation_")) {
+      if (names.exists(_.startsWith("curation_"))) {
         val c = java.nio.file.Files.createTempDirectory("graft_timeq_cache")
         graft.operators.Curation.stageFunnelInputs(spark, sfDir, c.toString)
         sys.props(graft.operators.Curation.CacheProp) = c.toString
@@ -65,16 +39,18 @@ object TimeQuery {
       sys.props.remove(graft.streaming.StageCache.Prop)
       sys.props.remove(graft.operators.Curation.CacheProp)
     }))
-    val fn = SparkEntry.queries(name)
-    val times = (0 until n + 1).map { i =>
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val tag = if (i == 0) "warmup" else s"rep$i"
-      println(f"[timequery] $name $tag%-7s ${dt}%8.3f s")
-      dt
-    }.drop(1)
-    println(f"[timequery] $name median ${Bench.median(times)}%.3f min ${times.min}%.3f max ${times.max}%.3f")
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val times = (0 until n + 1).map { i =>
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        val tag = if (i == 0) "warmup" else s"rep$i"
+        println(f"[timequery] $name $tag%-7s ${dt}%8.3f s")
+        dt
+      }.drop(1)
+      println(f"[timequery] $name median ${Bench.median(times)}%.3f min ${times.min}%.3f max ${times.max}%.3f")
+    }
     spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -27,31 +26,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local dev)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Local file:// IO without client-side CRC sidecars: every tiny
-      // checkpoint/state/commit-log file otherwise writes twice (data
-      // + .crc) and re-verifies on read — measured ~30-50% of the
-      // streaming parity rows' wall clock (OPTIMIZATION_r20.md). The
-      // FileContext route (checkpoint manager) goes raw here; the
-      // FileSystem route keeps LocalFileSystem (RocksDB's
-      // copyFromLocalFile casts to it) with checksums turned off via
-      // LocalFsTuning below. At cluster scale checkpoints live on
-      // HDFS/S3 where this knob is moot; recoverability rides rename
-      // atomicity, not client CRC.
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LocalFsTuning.disableLocalCrc(spark)
-    LogHygiene.quietStreamingProbes()
+    val spark = GraftSession.local(GraftSession.defaultCpus)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

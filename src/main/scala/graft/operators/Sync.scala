@@ -288,11 +288,14 @@ object Sync {
     // both counters read from the PINNED rows in one cheap aggregate —
     // previously chunksEmbedded ran the semi+reuse joins once and the
     // newRows checkpoint ran them again, a second full pass per run.
-    // Counter semantics unchanged: was_embedded marks exactly the
-    // rows whose stored embedding was null, and urls_processed equals
-    // countDistinct(url) because processUrls is always a subset of
-    // inChunks' urls (both branches derive it from inChunks), so the
-    // semi-join drops none of them.
+    // was_embedded marks exactly the rows whose stored embedding was
+    // null. urls_processed = countDistinct(url) counts every processed
+    // url because a url that yields zero chunks (empty or blank text)
+    // never enters processUrls: the `new` and `updated` statuses need a
+    // non-null incoming signature, which only a chunked url has, and
+    // the force branch reads its urls from inChunks. So every url in
+    // processUrls keeps at least one row through the semi-join
+    // (pinned in MultiSyncE2ESpec on both branches).
     val newRowsFlagged = prepared
       .as[(String, Int, Int, String, String, Option[Array[Float]])]
       .map { case (u, i, t, id, c, e) =>

@@ -427,7 +427,7 @@ object EventStream {
       .localCheckpoint(true)
     val work = java.nio.file.Files.createTempDirectory("enrichwork")
     val outDir = work.resolve("out").toString
-    val sess = protocolSession(s, noDataBatches = false)
+    val sess = protocolSession(s)
     val stream = readStaged(sess, inBase, withEventId = true)
     val joined = stream
       .join(broadcast(dim), col("user_id") === col("c_custkey"),
@@ -489,7 +489,7 @@ object EventStream {
     val work = java.nio.file.Files.createTempDirectory("aggwork")
     val outDir = work.resolve("out").toString
     val stream = readStaged(
-      protocolSession(s, noDataBatches = false, rocksdb = rocksdb), inBase)
+      protocolSession(s, rocksdb = rocksdb), inBase)
     val agg = if (session) sessionWindows(stream) else windowedCounts(stream)
     val q = agg.writeStream.format("parquet")
       .option("path", outDir)
@@ -620,7 +620,6 @@ object EventStream {
     * counts; this is a fixture-size-to-partition-count match, not a
     * semantics switch. */
   private def protocolSession(s: SparkSession,
-      noDataBatches: Boolean = true,
       rocksdb: Boolean = false): SparkSession = {
     val child = s.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
@@ -644,9 +643,7 @@ object EventStream {
     // state-store instance commits across all partitions, x2 sides for
     // the join) buys nothing for any of them. Measured medians in
     // SCALEPROBE.md; oracle rows re-matched at sf0.01.
-    if (!noDataBatches)
-      child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        "false")
+    child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     // dev-only instrumentation (-Dgraft.stream.progress=true): dump
     // every micro-batch's durationMs/state metrics to stderr so the
     // per-trigger cost profile of a parity row is measurable (guide
@@ -801,7 +798,7 @@ object EventStream {
         sentinelTypes = Seq("click", "error"))
     val work = java.nio.file.Files.createTempDirectory("joinwork")
     val outDir = work.resolve("out").toString
-    val stream = protocolSession(s, noDataBatches = false).readStream
+    val stream = protocolSession(s).readStream
       .schema(StructType(Seq(
         StructField("ts", TimestampType), StructField("user_id", LongType),
         StructField("event_type", StringType),
@@ -905,7 +902,7 @@ object EventStream {
       s"replay_state_${StageCache.dirKey(dir)}", nSentinels = 0)
     val work = java.nio.file.Files.createTempDirectory("statework")
     val outDir = work.resolve("out").toString
-    val sess = protocolSession(s, noDataBatches = false, rocksdb = tws)
+    val sess = protocolSession(s, rocksdb = tws)
     val updates =
       if (tws) twsRunningTotals(sess, readStaged(sess, inBase))
       else sessionStates(sess, readStaged(sess, inBase))
@@ -992,7 +989,7 @@ object EventStream {
     }
     val work = java.nio.file.Files.createTempDirectory("dedupwork")
     val outDir = work.resolve("out").toString
-    val stream = protocolSession(s, noDataBatches = false).readStream
+    val stream = protocolSession(s).readStream
       .schema(StructType(Seq(
         StructField("ts", TimestampType),
         StructField("event_id", LongType),
@@ -1096,7 +1093,7 @@ object EventStream {
     }
     val work = java.nio.file.Files.createTempDirectory("latework")
     val outDir = work.resolve("out").toString
-    val stream = protocolSession(s, noDataBatches = false).readStream
+    val stream = protocolSession(s).readStream
       .schema(StructType(Seq(
         StructField("ts", TimestampType),
         StructField("event_type", StringType),

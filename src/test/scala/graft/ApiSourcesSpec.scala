@@ -1,20 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.ApiSources
 
-class ApiSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ApiSourcesSpec extends SparkSuite(cpus = 2) {
 
   private lazy val jsonPath: String = {
     val d = Files.createTempDirectory("issues")

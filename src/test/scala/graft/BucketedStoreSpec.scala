@@ -1,27 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Chunker
 import graft.sources.ChunkStore
 
 /** Bucketed chunk store: url-bucketed layout lets the url-keyed diff
   * joins of §2.5 run shuffle-free between two bucketed tables. */
-class BucketedStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private val warehouse =
-    java.nio.file.Files.createTempDirectory("wh").toString
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BucketedStoreSpec extends SparkSuite(cpus = 2, conf = Seq(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("wh").toString)) {
 
   test("bucketed write round-trips and the bucket spec is recorded") {
     import spark.implicits._

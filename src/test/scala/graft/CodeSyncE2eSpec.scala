@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.GitCode
 
 /** Pins the ingest_code_e2e composition's seams on the smoke corpus:
@@ -10,15 +7,7 @@ import graft.sources.GitCode
   * the unreachable-SHA full-scan fallback's obsolete cleanup, and the
   * identical-SHA no-op run. The DuckDB hash match is the full gate;
   * this spec asserts the state bits with readable messages. */
-class CodeSyncE2eSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CodeSyncE2eSpec extends SparkSuite {
 
   test("four-run composition: modes, rename handling, fallback cleanup") {
     val out = GitCode.codeSyncE2e(spark, "/root/testdata/sf0.001").collect()

@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Compliance, Similarity}
 
 /** Erasure-sweep semantics beyond the oracle row: the purged state must
   * equal a rebuild-from-scratch on every surface, and a cell whose
   * every code is purged must actually disappear from the index (the
   * dynamic-overwrite gap the kernel handles explicitly). */
-class ComplianceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ComplianceSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

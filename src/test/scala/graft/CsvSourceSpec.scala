@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.CsvSource
 
 /** CSV ingest semantics beyond the oracle row: the quoted comma-bearing
   * title must survive parsing intact, and exactly the planted lines may
   * land in the corrupt group. */
-class CsvSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class CsvSourceSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,26 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Curation, Similarity}
 
 /** Semantic invariants for the dataset-curation operators (the oracle
   * gate checks exact values at sf0.01; these pin the properties that
   * must survive ANY corpus). Runs at sf0.001. */
-class CurationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CurationSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("spanDedup: kept counts bounded; untouched docs rehash to their original text") {
     val out = Curation.spanDedup(spark, dir)

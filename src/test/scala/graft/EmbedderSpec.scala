@@ -50,18 +50,9 @@ class EmbedderSpec extends AnyFunSuite {
   }
 }
 
-class ServiceEmbedderSpec extends org.scalatest.funsuite.AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class ServiceEmbedderSpec extends SparkSuite(cpus = 2) {
   import graft.functions.ServiceEmbedder
   import graft.functions.ServiceEmbedder._
-
-  lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("batches embed; poison batch skips with empty vectors; truncation net") {
     import spark.implicits._

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Robustness gate: EVERY registered query must run (not throw) on an
   * empty corpus with the production schemas. A 100 TB pipeline's first
@@ -11,17 +8,7 @@ import org.scalatest.BeforeAndAfterAll
   * zero rows is a paged operator, not an edge case. Fixtures are
   * zero-row parquet files mirroring the driver tables' schemas, built
   * once per suite run. */
-class EmptyCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EmptyCorpusSpec extends SparkSuite {
 
   private lazy val emptyDir: String = {
     val src = "/root/testdata/sf0.001"

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.EvolvingSource
 
 /** Schema-merge semantics beyond the oracle row: the unioned read
   * carries the superset schema and resolves columns by NAME, so a
   * generation that never wrote a column reads pure nulls there. */
-class EvolvingSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class EvolvingSourceSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Graph
 
 /** Integer PageRank invariants at sf0.001. */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraphSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("pageRank: top-20 is positive, non-increasing, differentiated, deterministic") {
     val a = Graph.pageRank(spark, dir).collect()

@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Similarity
 import graft.plans.KnnIndexRegistry
 
@@ -15,17 +12,7 @@ import graft.plans.KnnIndexRegistry
   * for PQ/IVF-PQ even after the legacy `.centroids` parquet sidecar
   * is deleted, so the manifest is provably the load path and not a
   * bystander. */
-class IndexColdStartSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IndexColdStartSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

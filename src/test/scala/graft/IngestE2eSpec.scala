@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Ingest
 
 /** Pins the issues/tickets ingest-composition rows' semantics on the
@@ -11,17 +8,7 @@ import graft.operators.Ingest
   * class present, the watermark bound, excluded-org drop, and purge
   * rows landing exactly on the staged deletions — so a refactor that
   * silently collapses a branch fails here with a readable message. */
-class IngestE2eSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class IngestE2eSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.JsonlSource
 
 /** JSONL ingest semantics beyond the oracle row: both planted
   * malformation classes (typed and structural) must quarantine, and the
   * nested struct + tag array of a good line must parse field-exactly. */
-class JsonlSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class JsonlSourceSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The KnnIvfRewrite optimizer rule (SURVEY §4 optional-Catalyst item
@@ -11,18 +8,12 @@ import org.apache.spark.sql.functions._
   * guard rails (registration opt-in, limit-only, descending-only,
   * idempotency under the fixed-point batch) are pinned as hard as the
   * happy path. */
-class KnnRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KnnRewriteSpec extends SparkSuite(cpus = 2) {
 
   override def afterAll(): Unit = {
     graft.plans.KnnIndexRegistry.clear()
     graft.operators.Sync.deleteTree(tmp.toFile)
-    spark.stop()
+    super.afterAll()
   }
 
   private lazy val tmp = java.nio.file.Files.createTempDirectory("knnspec")

@@ -1,23 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.LocalDirectory
 
 /** Local-directory source: binaryFile scan, extension/size filters,
   * converter dispatch (reference contract:
   * content-processor.ts:1696-1947). */
-class LocalDirectorySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LocalDirectorySpec extends SparkSuite(cpus = 2) {
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("localdir")

@@ -2,9 +2,6 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.MatView
 
 /** Incremental-MV maintenance semantics: the incremental refresh must
@@ -12,16 +9,7 @@ import graft.operators.MatView
   * that forces every edge the kernel special-cases — brand-new groups,
   * fully-deleted groups, delete+insert in one group, and a delete that
   * removes the group's extremum. */
-class MatViewSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MatViewSpec extends SparkSuite {
 
   private def ts(d: String): Timestamp = Timestamp.valueOf(d + " 00:00:00")
 

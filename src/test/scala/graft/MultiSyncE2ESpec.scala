@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Sync
 import graft.sources.{ChunkStore, SyncState}
 
@@ -14,15 +12,7 @@ import graft.sources.{ChunkStore, SyncState}
   * Sync.syncRun = chunker → URL diff → force bypass → chunk-level
   * embed skip → Embedder → ChunkStore versioned upsert → guarded
   * cleanup → SyncState completion flag. */
-class MultiSyncE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class MultiSyncE2ESpec extends SparkSuite {
 
   private def docs(rows: (String, String)*): DataFrame = {
     import spark.implicits._
@@ -141,9 +131,27 @@ class MultiSyncE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
     val run5Rows = storeRows()
     assert(!run5Rows.exists(_._1 == "doc://3"))
     assert(run5Rows.toSeq == run4Rows.filter(_._1 != "doc://3").toSeq)
+
+    // ── Runs 6-7: urls that yield zero chunks (a new empty doc, a new
+    // blank doc, and doc2 edited to blank) are never processed, so
+    // urls_processed leaves them out on the normal branch (run 6) and
+    // on the forceFullSync branch (run 7 reads a state path no run has
+    // completed, over the same store; only doc1 is processed) ────────
+    val zeroChunkRun = docs("doc://1" -> doc1, "doc://2" -> "   ",
+      "doc://4" -> "", "doc://5" -> "      ")
+    val r6 = counters(Sync.syncRun(spark, zeroChunkRun, store, state,
+      runId = 6))
+    assert(r6("force") == 0L)
+    assert(r6("items_new") == 0 && r6("urls_processed") == 0)
+    assert(r6("chunks_embedded") == 0)
+    val r7 = counters(Sync.syncRun(spark, zeroChunkRun, store,
+      base.resolve("state-never-completed").toString, runId = 7))
+    assert(r7("force") == 1L)
+    assert(r7("items_new") == 0 && r7("urls_processed") == 1)
+    assert(r7("chunks_embedded") == 0)
     // versions advanced monotonically across runs
-    assert(Seq(r1, r2, r3, r4, r5).map(_("store_version")) ==
-      Seq(0L, 1L, 2L, 3L, 4L))
+    assert(Seq(r1, r2, r3, r4, r5, r6, r7).map(_("store_version")) ==
+      Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L))
   }
 
   test("dirty run leaves obsolete urls in place (guarded cleanup)") {

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Locks in the plan shapes the round-2 rewrites bought: these queries
   * hash-match the oracle regardless, but at 100 TB their PLANS are the
   * difference between working and melting down — so the shapes are
   * asserted, not just eyeballed in PLANS.md. */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanAuditSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString

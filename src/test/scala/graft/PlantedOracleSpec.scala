@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Similarity, TextAnalysis}
 
 /** Independent Scala-side derivations of the two planted-construction
@@ -10,18 +7,9 @@ import graft.operators.{Similarity, TextAnalysis}
   * BPE it relearns the merge table itself); here the expectations come
   * from the construction rule and a hand-derived merge list, so a
   * defect would have to fool three disagreeing derivations at once. */
-class PlantedOracleSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlantedOracleSpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
 
   test("planted Lloyd report equals the construction rule exactly") {
     val got = Similarity.clusterStatsLloydOracle(spark).collect()

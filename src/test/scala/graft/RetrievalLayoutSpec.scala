@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Dedup, Layout, Retrieval, TextAnalysis}
 
 /** Semantics pins for the round's retrieval / layout / LM-score
   * operators, on both constructed corpora (hand-derivable answers) and
   * the sf0.001 fixture (structural invariants). */
-class RetrievalLayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RetrievalLayoutSpec extends SparkSuite {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** Cross-implementation property checks for the second-session kernels:
   * each operator is recomputed by an INDEPENDENT implementation (the
   * relational form the typed kernel replaced, or a naive driver-side
   * scan) on randomized corpora — agreement across implementations is
   * stronger evidence than fixture goldens. */
-class RetrievalPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RetrievalPropertySpec extends SparkSuite {
 
   private val vocab = Array("table", "hash", "join", "scan", "merge",
     "group", "customer", "spark", "row", "batch", "filter", "q")

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
+import graft.SparkSuite
 
 /** Exactness pin for the wide SimHash kernel's adaptive m-of-n
   * compound banding: on planted signatures with pairs at Hamming
@@ -11,15 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * not assumed. The oracle row (dedup_simhash_wide) can only plant
   * dist-0 copies (text edits cannot guarantee a Hamming bound), so
   * dist 1..3 capture lives here. */
-class SimhashWideSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SimhashWideSpec extends SparkSuite {
 
   private def bruteForce(sigs: Seq[(Long, Long)]): Set[(Long, Long, Long)] =
     (for {

@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.{Chunker, Multimodal, Similarity}
 import graft.sources.ChunkStore
 import graft.streaming.EventStream
@@ -11,17 +9,7 @@ import graft.streaming.EventStream
 /** End-to-end incremental-sync scenarios over a local SparkSession —
   * the Spark port of the reference's e2e sync-count oracles
   * (reference: tests/e2e.test.ts:165-480). */
-class SparkE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SparkE2ESpec extends SparkSuite {
 
   private def chunkCorpus(docs: Seq[(String, String)]): DataFrame = {
     import spark.implicits._

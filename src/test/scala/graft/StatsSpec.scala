@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Stats
 
 /** Table-stats semantics: the one-pass HLL profile must calibrate
   * against the exact profile, and the broadcast flag must agree with
   * what the engine's adaptive plans actually do with the same tables. */
-class StatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StatsSpec extends SparkSuite {
 
   test("approx profile calibrates within 5% of exact NDV per column") {
     val dir = "/root/testdata/sf0.001"

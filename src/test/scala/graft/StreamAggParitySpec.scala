@@ -1,9 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.streaming.EventStream
 
 /** Pins the streaming windowed/session aggregation parity rows'
@@ -13,17 +10,7 @@ import graft.streaming.EventStream
   * spec asserts the protocol promises — sentinel rows never leak into
   * the output, the emitted set equals the batch aggregation — with
   * readable failures. */
-class StreamAggParitySpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class StreamAggParitySpec extends SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.operators.Sync
 
 /** Pins the sync_run_e2e oracle row's state-machine semantics on the
@@ -12,15 +9,7 @@ import graft.operators.Sync
   * cleanup). The DuckDB hash match is the full gate; this spec asserts
   * the packed payloads' state bits so a future refactor that silently
   * flips a flag fails here with a readable message. */
-class SyncRunE2eSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SyncRunE2eSpec extends SparkSuite {
 
   test("three-run composition: force flags, versions, guarded retention") {
     val out = Sync.syncRunE2e(spark, "/root/testdata/sf0.001").collect()

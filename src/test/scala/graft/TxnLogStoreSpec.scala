@@ -1,22 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.TxnLogStore
 
 /** Log-fold semantics of the transaction-log store beyond the oracle
   * row: ordered prefix folding, remove eviction, version boundaries,
   * and atomic commit publication. */
-class TxnLogStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
 
   test("snapshot = fold of the ordered log prefix; removes evict") {
     val root = java.nio.file.Files.createTempDirectory("txnspec").toString

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 import graft.sources.Warc
 
 /** The DataSource V2 WARC connector: fixed schema, one input
@@ -13,15 +10,7 @@ import graft.sources.Warc
   * property the generic binaryFile format cannot have: the reader
   * consumes the filesystem stream directly (no whole-file content
   * column). */
-class WarcSourceV2Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("warcv2spec")

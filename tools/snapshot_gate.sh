@@ -13,6 +13,16 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF_DIR="${1:-/root/testdata/sf0.001}"
 
+echo "[gate] 0/3 one session factory"
+STRAY="$(grep -rl 'SparkSession.builder' src/ |
+  grep -vx 'src/main/scala/graft/GraftSession.scala' || true)"
+if [ -n "$STRAY" ]; then
+  echo "$STRAY"
+  echo "[gate] FAIL: SparkSession.builder outside GraftSession.scala" \
+    "(get sessions from GraftSession.local)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
