@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** One stored/embedded chunk row — the versioned chunk store's schema
@@ -205,52 +204,117 @@ object Sync {
           .otherwise(col("watermark_old")))
   }
 
-  /** Token chunks with chunk_index/total_chunks bookkeeping for an
-    * arbitrary (url, text) corpus — the store-facing variant of
-    * chunksOf. */
+  /** Token chunks of an arbitrary (url, text) corpus as ONE row per
+    * doc: `contents` are the non-blank trimmed `chunkSize`-character
+    * pieces in text order, `chunk_ids` their sha2(url::content)
+    * identities, `n_chunks` their count. A piece's position in the
+    * arrays is its chunk_index and `n_chunks` its total_chunks, so
+    * [[embedDelta]] numbers the chunks as it explodes them. A doc whose
+    * text is null, empty or blank keeps its row with empty arrays.
+    *
+    * Scale: one narrow map over the docs: no shuffle, no sort, no
+    * Window. Chunk rows exist only after [[embedDelta]] explodes the
+    * docs a run actually processes, so an unchanged doc never becomes
+    * chunk rows. */
   private[graft] def chunksOfUrls(docs: DataFrame,
       chunkSize: Int): DataFrame = {
-    val idx = docs
-      .withColumn("i", explode(sequence(lit(0),
-        ceil(length(col("text")).cast("double") / chunkSize).cast("int") - 1)))
-      .withColumn("content",
-        trim(expr(s"substring(text, i*$chunkSize+1, $chunkSize)")))
-      .filter(col("content") =!= "")
-    idx
-      .withColumn("chunk_index",
-        row_number().over(Window.partitionBy("url").orderBy("i")) - 1)
-      .withColumn("total_chunks",
-        count(lit(1)).over(Window.partitionBy("url")).cast("int"))
-      .withColumn("chunk_id",
-        sha2(concat(col("url"), lit("::"), col("content")), 256))
-      .select("url", "chunk_index", "total_chunks", "chunk_id", "content")
+    val text = col("text")
+    val pieces = sequence(lit(0),
+      ceil(length(text) / chunkSize).cast("int") - 1)
+    val contents = coalesce(
+      filter(transform(pieces,
+        i => trim(substr(text, i * chunkSize + 1, lit(chunkSize)))),
+        c => c =!= ""),
+      array().cast("array<string>"))
+    docs.select(col("url"), contents.as("contents"))
+      .select(col("url"), col("contents"),
+        transform(col("contents"),
+          c => sha2(concat(col("url"), lit("::"), c), 256)).as("chunk_ids"),
+        size(col("contents")).as("n_chunks"))
   }
+
+  /** The embed stage of a sync run, shared by [[syncRun]] and
+    * [[graft.sources.GitCode.codeRun]]: the chunk rows of `processed`
+    * (a [[chunksOfUrls]] frame cut down to the docs the run processes)
+    * as store rows, plus a `was_embedded` flag. A chunk whose id is
+    * already stored reuses its stored embedding; only new chunk content
+    * reaches the embedder (doc2vec.ts:515-553).
+    *
+    * Reuse reads only the stored rows of the processed urls. That is
+    * exact: a chunk id hashes its url, so a stored row of any other url
+    * can never match. The same content under a new url (a moved doc)
+    * therefore re-embeds, as the reference's point ids do.
+    *
+    * Scale: posexplode is a narrow map over the processed docs only;
+    * the store scan passes a broadcast semi-join on url before its
+    * chunk_id dedup, so only the processed urls' stored rows are
+    * shuffled, never the whole store. */
+  private[graft] def embedDelta(processed: DataFrame,
+      stored: DataFrame): DataFrame = {
+    import processed.sparkSession.implicits._
+    val rows = processed
+      .select(col("url"), col("n_chunks").as("total_chunks"),
+        posexplode(arrays_zip(col("chunk_ids"), col("contents"))))
+      .select(col("url"), col("pos").as("chunk_index"),
+        col("total_chunks"), col("col.chunk_ids").as("chunk_id"),
+        col("col.contents").as("content"))
+    val reusable = stored
+      .join(broadcast(processed.select("url")), Seq("url"), "left_semi")
+      .select("chunk_id", "embedding")
+      .dropDuplicates("chunk_id")
+    rows.join(reusable, Seq("chunk_id"), "left")
+      .select(col("url"), col("chunk_index"), col("total_chunks"),
+        col("chunk_id"), col("content"), col("embedding"))
+      .as[(String, Int, Int, String, String, Option[Array[Float]])]
+      .map { case (u, i, t, id, c, e) =>
+        (u, i, t, id, c,
+          e.getOrElse(graft.functions.Embedder.embed(c)), e.isEmpty)
+      }
+      .toDF("url", "chunk_index", "total_chunks", "chunk_id", "content",
+        "embedding", "was_embedded")
+  }
+
+  /** urls_processed and chunks_embedded of an [[embedDelta]] frame:
+    * each processed url has exactly one chunk 0. */
+  private[graft] def deltaCounters(embedded: DataFrame): DataFrame =
+    embedded.agg(
+      count(when(col("chunk_index") === 0, 1)).as("urls_processed"),
+      coalesce(sum(col("was_embedded").cast("long")), lit(0L))
+        .as("chunks_embedded"))
 
   /** One complete incremental sync run — the reference's per-source run
     * loop (doc2vec.ts:675-790) composed from the operators above and the
     * versioned store:
     *
-    *   1. chunk the incoming (url, text) batch;
+    *   1. chunk the incoming (url, text) batch into per-doc arrays;
     *   2. URL-diff its per-url signatures against the current store
-    *      version → new/updated/unchanged/deleted statuses;
+    *      version → new/updated/unchanged/deleted statuses; a batch that
+    *      repeats a url fails here, before anything is written;
     *   3. pick urls to process: new+updated, or ALL incoming when the
     *      previous run never marked `sync_complete` (forceFullSync,
     *      doc2vec.ts:700-712) — the interrupted-sync recovery bypass;
-    *   4. chunk-level skip: chunks whose chunk_id is already stored
-    *      reuse their stored embedding; only genuinely new chunk
-    *      content reaches the embedder (doc2vec.ts:515-553);
+    *   4. chunk-level skip ([[embedDelta]]): chunks whose chunk_id is
+    *      already stored reuse their stored embedding; only genuinely
+    *      new chunk content reaches the embedder (doc2vec.ts:515-553);
     *   5. upsert-by-url + guarded obsolete cleanup, written as the next
-    *      complete store version (atomic pointer flip);
+    *      complete store version (atomic pointer flip). The visited set
+    *      is the urls that yielded chunks, so a doc edited to blank
+    *      loses its stored chunks on a clean run;
     *   6. mark sync complete only on a clean run (hasNetworkErrors
     *      false), so a failed run leaves the force-bypass armed.
     *
     * Returns a one-row counters frame (reference SourceRunStats):
     * run_id, force_full_sync, items_new/updated/unchanged/deleted,
-    * urls_processed, chunks_embedded, store_version.
+    * urls_processed, chunks_embedded, store_version. A url that yields
+    * no chunks has no incoming signature, so it is never new or updated
+    * and never counts in urls_processed.
     *
-    * Scale: the diff/skip/upsert layers are url- and chunk_id-keyed
-    * joins (hash-partitioned, no driver data motion); the driver-side
-    * work is the two scalar counts and the version-pointer flip. */
+    * Scale: three pinned stages, chunk → diff → embed. Chunking is a
+    * narrow map (one row per doc). The diff shuffles one row per url on
+    * each side: the incoming doc rows and the store's chunk ids grouped
+    * by url. Only the processed docs are exploded into chunk rows, and
+    * reuse reads only their urls' stored rows, so embed work follows the
+    * delta. The driver-side work is the version-pointer flip. */
   def syncRun(s: SparkSession, incoming: DataFrame, storeRoot: String,
       statePath: String, runId: Long, urlPrefix: String = "",
       hasNetworkErrors: Boolean = false, scanIncomplete: Boolean = false,
@@ -258,14 +322,21 @@ object Sync {
     import s.implicits._
     import graft.sources.{ChunkStore, SyncState}
     val force = SyncState.forceFullSync(s, statePath, urlPrefix)
-    val inChunks = chunksOfUrls(incoming, chunkSize).localCheckpoint(true)
+    val docs = chunksOfUrls(incoming, chunkSize).localCheckpoint(true)
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
       .getOrElse(s.emptyDataset[StoredChunk].toDF())
 
     val storedSig = signatures(storedChunks)
-      .withColumnRenamed("sig", "stored_sig")
-      .withColumnRenamed("n_chunks", "stored_chunks")
-    val joined = signatures(inChunks)
+      .select(col("url"), col("sig").as("stored_sig"))
+    val incomingSig = docs.groupBy("url")
+      .agg(count(lit(1)).as("n_rows"),
+        first(array_join(array_sort(col("chunk_ids")), ",")).as("sig"))
+      .select(col("url"),
+        when(col("n_rows") > 1, raise_error(
+            concat(lit("sync batch repeats url "), col("url"))))
+          .when(col("sig") =!= "", col("sig")).as("sig"))
+      .filter(col("sig").isNotNull)
+    val joined = incomingSig
       .join(storedSig, Seq("url"), "full_outer")
       .withColumn("status",
         when(col("sig").isNull, "deleted")
@@ -274,47 +345,17 @@ object Sync {
           .otherwise("unchanged"))
       .localCheckpoint(true)
 
-    val processUrls =
-      if (force) inChunks.select("url").distinct()
-      else joined.filter(col("status").isin("new", "updated")).select("url")
-    val prepared = inChunks
-      .join(processUrls, Seq("url"), "left_semi")
-      .join(storedChunks.select("chunk_id", "embedding")
-        .dropDuplicates("chunk_id"), Seq("chunk_id"), "left")
-      .select(col("url"), col("chunk_index"), col("total_chunks"),
-        col("chunk_id"), col("content"), col("embedding"))
-    // ONE pass over `prepared` (guide §1.2 driver round-trips): the
-    // embed map rides a `was_embedded` flag through the checkpoint, so
-    // both counters read from the PINNED rows in one cheap aggregate —
-    // previously chunksEmbedded ran the semi+reuse joins once and the
-    // newRows checkpoint ran them again, a second full pass per run.
-    // was_embedded marks exactly the rows whose stored embedding was
-    // null. urls_processed = countDistinct(url) counts every processed
-    // url because a url that yields zero chunks (empty or blank text)
-    // never enters processUrls: the `new` and `updated` statuses need a
-    // non-null incoming signature, which only a chunked url has, and
-    // the force branch reads its urls from inChunks. So every url in
-    // processUrls keeps at least one row through the semi-join
-    // (pinned in MultiSyncE2ESpec on both branches).
-    val newRowsFlagged = prepared
-      .as[(String, Int, Int, String, String, Option[Array[Float]])]
-      .map { case (u, i, t, id, c, e) =>
-        (u, i, t, id, c,
-          e.getOrElse(graft.functions.Embedder.embed(c)), e.isEmpty)
-      }
-      .toDF("url", "chunk_index", "total_chunks", "chunk_id", "content",
-        "embedding", "was_embedded")
-      .localCheckpoint(true)
-    val counterRow = newRowsFlagged.agg(
-      coalesce(sum(col("was_embedded").cast("long")), lit(0L)),
-      countDistinct(col("url"))).head()
-    val chunksEmbedded = counterRow.getLong(0)
-    val urlsProcessed = counterRow.getLong(1)
-    val newRows = newRowsFlagged.drop("was_embedded")
+    val processed =
+      if (force) docs
+      else docs.join(
+        broadcast(joined.filter(col("status").isin("new", "updated"))
+          .select("url")), Seq("url"), "left_semi")
+    val embedded = embedDelta(processed, storedChunks).localCheckpoint(true)
 
-    val merged = ChunkStore.upsertByUrl(storedChunks, newRows)
+    val merged = ChunkStore.upsertByUrl(storedChunks,
+      embedded.drop("was_embedded"))
     val cleaned = ChunkStore.cleanupObsolete(merged,
-      incoming.select("url"), hasNetworkErrors, scanIncomplete)
+      docs.filter(col("n_chunks") > 0), hasNetworkErrors, scanIncomplete)
     val version = ChunkStore.writeVersion(s, storeRoot, cleaned)
     SyncState.markSyncComplete(s, statePath, urlPrefix, runId,
       hasNetworkErrors)
@@ -326,8 +367,7 @@ object Sync {
       count(when(col("status") === "deleted", 1)).as("items_deleted"))
       .withColumn("run_id", lit(runId))
       .withColumn("force_full_sync", lit(force))
-      .withColumn("urls_processed", lit(urlsProcessed))
-      .withColumn("chunks_embedded", lit(chunksEmbedded))
+      .crossJoin(deltaCounters(embedded))
       .withColumn("store_version", lit(version))
   }
 

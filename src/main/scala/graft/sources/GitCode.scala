@@ -96,11 +96,13 @@ object GitCode {
     *      fallback;
     *   3. restrict the scan to the allowed set
     *      ([[LocalDirectory.restrictToAllowed]], the semi-join gate);
-    *   4. chunk the processed files and skip chunks whose chunk_id is
-    *      already stored — only genuinely new content reaches the
-    *      embedder (doc2vec.ts:515-553); a RENAME re-embeds (the
-    *      chunk identity is url-scoped), exactly as the reference's
-    *      point ids do;
+    *   4. chunk the processed files and embed them through
+    *      [[Sync.embedDelta]], the embed stage `Sync.syncRun` uses:
+    *      chunks whose chunk_id is already stored reuse their
+    *      embedding, only genuinely new content reaches the embedder
+    *      (doc2vec.ts:515-553), and a RENAME re-embeds (the chunk
+    *      identity is url-scoped), exactly as the reference's point
+    *      ids do;
     *   5. store update: upsert-by-url, then incremental runs purge
     *      exactly the diff's delete URLs while FULL runs purge every
     *      stored url the scan did not produce (removeObsoleteFiles,
@@ -150,40 +152,17 @@ object GitCode {
         set.toSeq.toDF("path"))
       case None => files
     }
-    // per-file URL through the real kernel (typed map: pure function).
-    // PINNED once: docs previously re-derived the tree scan + allowed
-    // semi-join three times (chunking, files_processed count, full-mode
-    // cleanup) — one pass, two cheap reads (guide §1.2).
-    val docs = processFiles.as[(String, String)]
+    // per-file URL through the real kernel (typed map: pure function),
+    // chunked and PINNED once: the chunk rows, files_processed and the
+    // full-mode cleanup all read this frame
+    val docs = Sync.chunksOfUrls(processFiles.as[(String, String)]
       .map { case (p, t) =>
         (codeFileUrl(p, repoPath, None, Some(urlPrefix)), t)
-      }.toDF("url", "text").localCheckpoint(true)
-
-    val inChunks = Sync.chunksOfUrls(docs, 128).localCheckpoint(true)
+      }.toDF("url", "text"), 128).localCheckpoint(true)
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
       .getOrElse(s.emptyDataset[StoredChunk].toDF())
-    val prepared = inChunks
-      .join(storedChunks.select("chunk_id", "embedding")
-        .dropDuplicates("chunk_id"), Seq("chunk_id"), "left")
-      .select(col("url"), col("chunk_index"), col("total_chunks"),
-        col("chunk_id"), col("content"), col("embedding"))
-    // ONE pass over `prepared` (guide §1.2): the embed map carries a
-    // was_embedded flag through the checkpoint so the counter reads
-    // from pinned rows — previously the chunks_embedded count ran the
-    // reuse join once and the newRows checkpoint ran it again.
-    val newRowsFlagged = prepared
-      .as[(String, Int, Int, String, String, Option[Array[Float]])]
-      .map { case (u, i, t, id, c, e) =>
-        (u, i, t, id, c,
-          e.getOrElse(graft.functions.Embedder.embed(c)), e.isEmpty)
-      }
-      .toDF("url", "chunk_index", "total_chunks", "chunk_id", "content",
-        "embedding", "was_embedded")
-      .localCheckpoint(true)
-    val chunksEmbedded = newRowsFlagged
-      .agg(coalesce(sum(col("was_embedded").cast("long")), lit(0L)))
-      .head().getLong(0)
-    val newRows = newRowsFlagged.drop("was_embedded")
+    val embedded = Sync.embedDelta(docs, storedChunks).localCheckpoint(true)
+    val newRows = embedded.drop("was_embedded")
     val filesProcessed = docs.count()
 
     val merged = ChunkStore.upsertByUrl(storedChunks, newRows)
@@ -206,10 +185,10 @@ object GitCode {
     val version = ChunkStore.writeVersion(s, storeRoot, cleaned)
     SyncState.setMetadata(s, statePath, shaKey, headSha, runId)
 
-    Seq((runId, mode, filesProcessed, chunksEmbedded, urlsDeleted,
-      version))
-      .toDF("run_id", "mode", "files_processed", "chunks_embedded",
-        "urls_deleted", "store_version")
+    Sync.deltaCounters(embedded).select(lit(runId).as("run_id"),
+      lit(mode).as("mode"), lit(filesProcessed).as("files_processed"),
+      col("chunks_embedded"), lit(urlsDeleted).as("urls_deleted"),
+      lit(version).as("store_version"))
   }
 
   /** The GitHub code source's FULL state machine across four syncs as

@@ -114,7 +114,10 @@ class MultiSyncE2ESpec extends SparkSuite {
     assert(doc2Rows.map(_._2).sorted.toSeq == (0 until doc2Rows.length))
     assert(doc2Rows.forall(_._3 == doc2Rows.length))
     // chunk-level skip: only doc2 chunks whose id is NOT already stored
-    // reached the embedder
+    // reached the embedder. syncRun looks reusable embeddings up only
+    // among the stored rows of the processed urls (here doc2's); this
+    // count equals the whole-store lookup because a chunk id hashes
+    // its url, so no other url's row can ever match
     val run1Ids = run1Rows.map(_._4).toSet
     val expectedEmbeds = doc2Rows.map(_._4).count(id => !run1Ids.contains(id))
     assert(expectedEmbeds > 0 && r4("chunks_embedded") == expectedEmbeds,
@@ -132,26 +135,37 @@ class MultiSyncE2ESpec extends SparkSuite {
     assert(!run5Rows.exists(_._1 == "doc://3"))
     assert(run5Rows.toSeq == run4Rows.filter(_._1 != "doc://3").toSeq)
 
-    // ── Runs 6-7: urls that yield zero chunks (a new empty doc, a new
+    // ── Runs 6-8: urls that yield zero chunks (a new empty doc, a new
     // blank doc, and doc2 edited to blank) are never processed, so
-    // urls_processed leaves them out on the normal branch (run 6) and
-    // on the forceFullSync branch (run 7 reads a state path no run has
-    // completed, over the same store; only doc1 is processed) ────────
+    // urls_processed leaves them out. doc2 counts as deleted: run 6's
+    // scan is incomplete, so the cleanup guard keeps its rows; run 7 is
+    // clean, so its rows go (the visited set is the urls that yielded
+    // chunks); run 8 takes the forceFullSync branch (a state path no
+    // run has completed, over the same store; only doc1 is processed) ─
     val zeroChunkRun = docs("doc://1" -> doc1, "doc://2" -> "   ",
       "doc://4" -> "", "doc://5" -> "      ")
     val r6 = counters(Sync.syncRun(spark, zeroChunkRun, store, state,
-      runId = 6))
-    assert(r6("force") == 0L)
+      runId = 6, scanIncomplete = true))
+    assert(r6("force") == 0L && r6("items_deleted") == 1)
     assert(r6("items_new") == 0 && r6("urls_processed") == 0)
     assert(r6("chunks_embedded") == 0)
-    val r7 = counters(Sync.syncRun(spark, zeroChunkRun, store,
-      base.resolve("state-never-completed").toString, runId = 7))
-    assert(r7("force") == 1L)
-    assert(r7("items_new") == 0 && r7("urls_processed") == 1)
+    assert(storeRows().toSeq == run5Rows.toSeq)
+    val r7 = counters(Sync.syncRun(spark, zeroChunkRun, store, state,
+      runId = 7))
+    assert(r7("force") == 0L && r7("items_deleted") == 1)
+    assert(r7("items_new") == 0 && r7("urls_processed") == 0)
     assert(r7("chunks_embedded") == 0)
+    val run7Rows = storeRows()
+    assert(!run7Rows.exists(_._1 == "doc://2"))
+    assert(run7Rows.toSeq == run5Rows.filter(_._1 == "doc://1").toSeq)
+    val r8 = counters(Sync.syncRun(spark, zeroChunkRun, store,
+      base.resolve("state-never-completed").toString, runId = 8))
+    assert(r8("force") == 1L)
+    assert(r8("items_new") == 0 && r8("urls_processed") == 1)
+    assert(r8("chunks_embedded") == 0)
     // versions advanced monotonically across runs
-    assert(Seq(r1, r2, r3, r4, r5, r6, r7).map(_("store_version")) ==
-      Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L))
+    assert(Seq(r1, r2, r3, r4, r5, r6, r7, r8).map(_("store_version")) ==
+      Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 7L))
   }
 
   test("dirty run leaves obsolete urls in place (guarded cleanup)") {
@@ -170,5 +184,59 @@ class MultiSyncE2ESpec extends SparkSuite {
     assert(urls == Set("doc://a", "doc://b"))
     // and the force flag is still armed for run 3
     assert(SyncState.forceFullSync(spark, state, ""))
+  }
+
+  test("embedding reuse is url-scoped: shared content, moved doc") {
+    val base = java.nio.file.Files.createTempDirectory("multisync3")
+    val store = base.resolve("store").toString
+    val state = base.resolve("state").toString
+    def run(id: Long, rows: (String, String)*): (Long, Map[String, Set[String]]) = {
+      val r = Sync.syncRun(spark, docs(rows: _*), store, state, id)
+        .collect().head
+      val ids = ChunkStore.readLatest(spark, store).get
+        .select("url", "chunk_id").collect()
+        .groupBy(_.getString(0)).map { case (u, rs) =>
+          u -> rs.map(_.getString(1)).toSet }
+      (r.getAs[Long]("chunks_embedded"), ids)
+    }
+    // the same content under two urls gets two disjoint id sets, so
+    // neither url's chunks reuse the other's embeddings
+    val (emb1, ids1) = run(1, "doc://a" -> doc1, "doc://b" -> doc1)
+    assert(ids1("doc://a").intersect(ids1("doc://b")).isEmpty)
+    assert(emb1 == ids1.values.map(_.size).sum)
+    // doc moved from a (and b) to c: every chunk re-embeds
+    val (emb2, ids2) = run(2, "doc://c" -> doc1)
+    assert(ids2.keySet == Set("doc://c"))
+    assert(emb2 == ids2("doc://c").size && emb2 == ids1("doc://a").size)
+    Sync.deleteTree(base.toFile)
+  }
+
+  test("a batch that repeats a url is rejected before anything is written") {
+    val base = java.nio.file.Files.createTempDirectory("multisync4")
+    val store = base.resolve("store").toString
+    val state = base.resolve("state").toString
+    Sync.syncRun(spark, docs("doc://a" -> doc1), store, state, runId = 1)
+      .collect()
+    def rejected(statePath: String, rows: (String, String)*): Unit = {
+      val e = intercept[Exception] {
+        Sync.syncRun(spark, docs(rows: _*), store, statePath, runId = 2)
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("sync batch repeats url doc://b")), e)
+      assert(ChunkStore.latestVersion(store) == 0L)
+    }
+    // two texts for one url, on the normal and the forceFullSync branch
+    rejected(state, "doc://a" -> doc1, "doc://b" -> doc2, "doc://b" -> doc3)
+    rejected(base.resolve("state-never-completed").toString,
+      "doc://b" -> doc2, "doc://b" -> doc3)
+    // the same text twice, and a url repeated only by blank rows
+    rejected(state, "doc://b" -> doc2, "doc://b" -> doc2)
+    rejected(state, "doc://a" -> doc1, "doc://b" -> "", "doc://b" -> "  ")
+    // the store and the completion flag are as run 1 left them
+    assert(!SyncState.forceFullSync(spark, state, ""))
+    assert(ChunkStore.readLatest(spark, store).get.select("url").distinct()
+      .collect().map(_.getString(0)).toSet == Set("doc://a"))
+    Sync.deleteTree(base.toFile)
   }
 }
