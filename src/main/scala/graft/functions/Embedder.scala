@@ -16,9 +16,8 @@ object Embedder {
   val Dim = 64
   val MaxChars = 32764
 
-  /** 32-bit integer hash of a token: first 8 hex chars of sha256. */
-  def tokenHash(w: String): Long =
-    java.lang.Long.parseLong(TextUtil.sha256Hex(w).substring(0, 8), 16)
+  /** 32-bit integer hash of a token: the first 32 bits of sha256. */
+  def tokenHash(w: String): Long = TextUtil.sha256Prefix(w, 32)
 
   /** Integer accumulator vector (pre-normalization) — the deterministic
     * core, oracle-checkable exactly. */

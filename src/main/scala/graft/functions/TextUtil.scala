@@ -20,10 +20,28 @@ object TextUtil {
   def sha256Hex(content: String): String =
     sha256HexBytes(content.getBytes(StandardCharsets.UTF_8))
 
-  def sha256HexBytes(bytes: Array[Byte]): String = {
+  private def sha256(bytes: Array[Byte]): Array[Byte] = {
     val md = sha256Local.get()
     md.reset()
-    val d = md.digest(bytes)
+    md.digest(bytes)
+  }
+
+  /** The first `bits` (1..63) bits of SHA-256 over the UTF-8 bytes, as
+    * a non-negative long read straight from the digest — for whole
+    * nibbles, the value of the first `bits / 4` chars of [[sha256Hex]]
+    * read as hex, without building or parsing that string. The one hash
+    * kernel of the shingle, winnowing and embedding-token signatures. */
+  def sha256Prefix(content: String, bits: Int): Long = {
+    require(bits >= 1 && bits <= 63, s"sha256Prefix bits $bits not in 1..63")
+    val d = sha256(content.getBytes(StandardCharsets.UTF_8))
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v >>> (64 - bits)
+  }
+
+  def sha256HexBytes(bytes: Array[Byte]): String = {
+    val d = sha256(bytes)
     val out = new Array[Char](d.length * 2)
     var i = 0
     while (i < d.length) {

@@ -18,15 +18,17 @@ import graft.Tables
   *   - MinHash: per-doc signatures in one pass; candidate pairs from a
   *     bucket join on (permutation, min-hash) agreement — classic LSH
   *     banding shape, shuffle ∝ signature size not corpus size.
-  *   - SimHash: 32-bit signatures; pairs by Hamming distance (≤6). At
-  *     scale, band the signature bytes to avoid the quadratic pair scan
-  *     (documented; the quadratic form here is the exact baseline).
-  *   - embedding cosine: exact O(n²) zip_with dot product as the
-  *     brute-force baseline; the LSH/IVF approximate path lives in
-  *     Similarity.scala.
+  *   - SimHash: 32-bit (report, Hamming ≤6) and 60-bit (scale,
+  *     Hamming ≤3) signatures; candidate pairs from an exact banded
+  *     equi-join on block values (pigeonhole), each pair emitted once
+  *     by its first agreeing band — never an all-pairs scan.
+  *   - embedding cosine: banded-LSH candidates with an exact cosine
+  *     re-rank ([[embeddingPairs]]); IVF-cell-bounded pairs in
+  *     [[semanticDedup]].
   *
-  * All hashes derive from sha256 hex prefixes so the DuckDB oracle can
-  * reproduce them exactly; all modular arithmetic stays below 2^62.
+  * All hashes derive from sha256 prefixes (`TextUtil.sha256Prefix`) so
+  * the DuckDB oracle can reproduce them exactly; all modular arithmetic
+  * stays below 2^62.
   */
 object Dedup {
 
@@ -78,12 +80,22 @@ object Dedup {
   }
 
   /** Distinct word-3-gram shingles, JVM-side (for the per-doc signature
-    * kernels — same output as the `shingles` plan). */
-  private def shingleSet(text: String): Iterator[String] = {
-    val ws = text.split(" ", -1)
-    if (ws.length < 3) Iterator.empty
-    else ws.iterator.sliding(3).withPartial(false)
-      .map(_.mkString(" ")).distinct
+    * kernels — same output as the `shingles` plan). Words are the
+    * `split(" ", -1)` pieces (empty ones included), so word j runs from
+    * just after the j-th space to the next one, and shingle i is the
+    * substring from word i's start to word i+2's end — cut straight
+    * from the text, with no per-word strings or joins. */
+  private[graft] def shingleSet(text: String): Iterator[String] = {
+    val spaces = Array.newBuilder[Int]
+    var p = text.indexOf(' ')
+    while (p >= 0) { spaces += p; p = text.indexOf(' ', p + 1) }
+    val sp = spaces.result()
+    // sp.length + 1 words; shingles exist from 3 words up
+    Iterator.range(0, sp.length - 1).map { i =>
+      val from = if (i == 0) 0 else sp(i - 1) + 1
+      val to = if (i + 2 < sp.length) sp(i + 2) else text.length
+      text.substring(from, to)
+    }.distinct
   }
 
   /** Exact deduplication over a simulated re-crawl (stored ∪ incoming):
@@ -174,8 +186,7 @@ object Dedup {
         var any = false
         shingleSet(text).foreach { sh =>
           any = true
-          val x = java.lang.Long.parseLong(
-            graft.functions.TextUtil.sha256Hex(sh).substring(0, 7), 16)
+          val x = graft.functions.TextUtil.sha256Prefix(sh, 28)
           var j = 0
           while (j < permArr.length) {
             val h = (permArr(j)._2 * x + permArr(j)._3) % P
@@ -320,17 +331,19 @@ object Dedup {
     * positive). Per-document kernel in one typed pass — the relational
     * form (shingles × 32 bit-rows through two shuffled groupBys) moves
     * 32× the postings for the same arithmetic. */
-  def simhashSignatures(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    Tables.documents(s, dir)
+  def simhashSignatures(s: SparkSession, dir: String): DataFrame =
+    simhashOf(Tables.documents(s, dir)).orderBy("doc_id")
+
+  private def simhashOf(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs
       .select("doc_id", "text").as[(Long, String)]
       .flatMap { case (docId, text) =>
         val sums = new Array[Long](32)
         var any = false
         shingleSet(text).foreach { sh =>
           any = true
-          val w32 = java.lang.Long.parseLong(
-            graft.functions.TextUtil.sha256Hex(sh).substring(0, 8), 16)
+          val w32 = graft.functions.TextUtil.sha256Prefix(sh, 32)
           var b = 0
           while (b < 32) {
             sums(b) += 2 * ((w32 >> b) & 1L) - 1
@@ -346,7 +359,6 @@ object Dedup {
         }
       }
       .toDF("doc_id", "simhash")
-      .orderBy("doc_id")
   }
 
   /** SimHash near-dup pairs: Hamming distance ≤ 6. Candidate generation
@@ -378,28 +390,58 @@ object Dedup {
         "size. Use simhashPairsWide (60/3 scale kernel) or " +
         "nearDupPairsAuto (size-routed), or pass acceptQuadratic=true " +
         "for a bounded-corpus report.")
-    val sig = simhashSignatures(s, dir).localCheckpoint(true) // reused 2×
+    simhashPairsOf(simhashOf(Tables.documents(s, dir)))
+      .orderBy("doc_a", "doc_b")
+  }
+
+  /** The 32/6 band layout: (bit offset, mask) of each band. */
+  private val SimhashBands: Seq[(Int, Long)] =
+    Seq((0, 31L), (5, 31L), (10, 31L), (15, 31L), (20, 15L), (24, 15L),
+      (28, 15L))
+
+  /** Unsorted 32/6 pairs of a (doc_id, simhash) frame, each
+    * (doc_a, doc_b) once. */
+  private[operators] def simhashPairsOf(sigDf: DataFrame): DataFrame = {
+    val sig = sigDf.localCheckpoint(true) // both join sides
     // (doc_id, simhash, band, value)
     val banded = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array(
-        expr("simhash & 31"), expr("(simhash >> 5) & 31"),
-        expr("(simhash >> 10) & 31"), expr("(simhash >> 15) & 31"),
-        expr("(simhash >> 20) & 15"), expr("(simhash >> 24) & 15"),
-        expr("(simhash >> 28) & 15"))).as(Seq("band", "value")))
+      posexplode(array(SimhashBands.map { case (off, mask) =>
+        shiftright(col("simhash"), off).bitwiseAND(mask)
+      }: _*)).as(Seq("band", "value")))
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.value") === col("b.value") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sa"), col("b.simhash").as("sb"))
-      // distance filter BEFORE the dedup shuffle: band-duplicates carry
-      // the same Hamming distance, so filtering first is order-safe and
-      // shrinks the dropDuplicates exchange from millions of candidate
-      // rows to the handful of qualifying pairs
+        col("a.simhash").as("sa"), col("b.simhash").as("sb"),
+        col("a.band").as("band"))
       .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= SimhashMaxDist)
-      .dropDuplicates("doc_a", "doc_b")
+      .filter(col("hamming") <= SimhashMaxDist &&
+        firstAgreeingBand(SimhashBands, SimhashBands.indices.map(Seq(_))))
       .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
+  }
+
+  /** Band-join row filter that emits each pair ONCE, with no dedup
+    * shuffle: a row survives only if its band is the pair's first
+    * agreeing band. `blocks` are the (bit offset, mask) blocks of the
+    * signature and `bands(i)` the blocks band i keys on. With
+    * eq = the blocks where `sa ^ sb` is zero and below(i) = the blocks
+    * under band i's highest block that band i leaves out, the row
+    * survives iff eq & below(i) == 0. Exactly one joined band passes:
+    * a band joins only if all its blocks agree, and the only agreeing
+    * band containing every agreeing block below its top is the one made
+    * of the lowest agreeing blocks (for single-block bands: the lowest
+    * agreeing band). Reads columns sa, sb and band. */
+  private def firstAgreeingBand(blocks: Seq[(Int, Long)],
+      bands: Seq[Seq[Int]]): Column = {
+    val x = col("sa").bitwiseXOR(col("sb"))
+    val eq = blocks.zipWithIndex.map { case ((off, mask), j) =>
+      when(shiftright(x, off).bitwiseAND(mask) === 0L, lit(1L << j))
+        .otherwise(lit(0L))
+    }.reduce(_ + _)
+    val below = bands.map { band =>
+      ((1L << band.max) - 1) & ~band.map(1L << _).sum
+    }
+    eq.bitwiseAND(element_at(array(below.map(lit): _*), col("band") + 1)) === 0L
   }
 
   /** Wide-signature bits (60 = 15 hex chars of sha256 — the widest
@@ -426,8 +468,7 @@ object Dedup {
         var any = false
         shingleSet(text).foreach { sh =>
           any = true
-          val w = java.lang.Long.parseLong(
-            graft.functions.TextUtil.sha256Hex(sh).substring(0, 15), 16)
+          val w = graft.functions.TextUtil.sha256Prefix(sh, SimhashWideBits)
           var b = 0
           while (b < SimhashWideBits) {
             sums(b) += 2 * ((w >> b) & 1L) - 1
@@ -469,22 +510,25 @@ object Dedup {
     * the bounded price of exact banding, not a corpus² term. */
   def simhashPairsWide(s: SparkSession, dir: String): DataFrame =
     simhashPairsWideOf(simhashWideSignatures(s, dir))
+      .orderBy("doc_a", "doc_b")
 
-  /** [[simhashPairsWideOf]] restricted to pairs whose HIGHER id is a
-    * new-batch document (`newFrom`): the incremental wide-kernel run —
-    * candidate generation is new×(store∪new), the store's banded rows
-    * are never joined against themselves, and the batch side
+  /** Unsorted wide pairs of a (doc_id, simhash) frame, each
+    * (doc_a, doc_b) once. `newFrom` restricts them to pairs whose
+    * HIGHER id is a new-batch document: the incremental wide-kernel
+    * run — candidate generation is new×(store∪new), the store's banded
+    * rows are never joined against themselves, and the batch side
     * broadcasts (C(n,m) ≤ 120 keyed rows per batch doc; above
     * [[DeltaBroadcastMaxDocs]]-scale deltas drop the hint and take the
-    * ordinary band-key shuffle). */
-  private[operators] def simhashPairsWideOf(sigDf: DataFrame): DataFrame =
-    simhashPairsWideOf(sigDf, None)
-
+    * ordinary band-key shuffle). `docCount` sizes the banding when the
+    * caller already counted the corpus; otherwise the signatures are
+    * counted. Any size gives the same pairs (the banding is exact), it
+    * only moves the candidate count. */
   private[operators] def simhashPairsWideOf(sigDf: DataFrame,
-      newFrom: Option[Long]): DataFrame = {
-    import sigDf.sparkSession.implicits._
-    val sig = sigDf.localCheckpoint(true) // reused: count + both join sides
-    val n0 = sig.count()
+      newFrom: Option[Long] = None,
+      docCount: Option[Long] = None): DataFrame = {
+    // reused: both join sides (and the size count when not given)
+    val sig = sigDf.localCheckpoint(true)
+    val n0 = docCount.getOrElse(sig.count())
     // smallest block count n (dividing 60, n = m+3) whose compound key
     // width m*60/n reaches log2(N)+8 bits
     val needBits = math.ceil(math.log(math.max(n0, 2).toDouble) /
@@ -495,6 +539,7 @@ object Dedup {
     val m = n - 3
     val blockBits = SimhashWideBits / n
     val blockMask = (1L << blockBits) - 1
+    val blocks = (0 until n).map(b => (b * blockBits, blockMask))
     val combos: Seq[Seq[Int]] =
       (0 until n).combinations(m).map(_.toSeq).toSeq
     // (doc_id, simhash, combo, key): C(n,m) compound keys per doc
@@ -524,12 +569,12 @@ object Dedup {
         col("a.combo") === col("b.combo") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sa"), col("b.simhash").as("sb"))
+        col("a.simhash").as("sa"), col("b.simhash").as("sb"),
+        col("a.combo").as("band"))
       .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= SimhashWideMaxDist)
-      .dropDuplicates("doc_a", "doc_b")
+      .filter(col("hamming") <= SimhashWideMaxDist &&
+        firstAgreeingBand(blocks, combos))
       .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** The ORACLE row for the wide kernel, on a corpus that actually
@@ -546,6 +591,7 @@ object Dedup {
     val copies = docs.filter(col("doc_id") % 25 === 0)
       .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
     simhashPairsWideOf(simhashWideOf(docs.unionByName(copies)))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** Incremental WIDE-kernel dedup — [[minhashPairsDelta]]'s twin on
@@ -610,11 +656,13 @@ object Dedup {
   def clusters(s: SparkSession, dir: String, pairs: DataFrame,
       driverThreshold: Long = 1000000L): DataFrame =
     clustersOf(Tables.documents(s, dir).select(col("doc_id")),
-      pairs, driverThreshold)
+      pairs, driverThreshold).orderBy("doc_id")
 
-  /** [[clusters]] over an explicit vertex frame — shared by the
-    * directory form above and corpora assembled in memory (the
-    * planted-copy wide-kernel row). */
+  /** Unsorted [[clusters]] over an explicit vertex frame — shared by the
+    * directory form above, [[keepBest]] and corpora assembled in memory
+    * (the planted-copy wide-kernel row). One row per vertex row:
+    * (doc_id, cluster_id, is_canonical) followed by every other vertex
+    * column, carried through on both routes. */
   def clustersOf(vertices: DataFrame, pairs: DataFrame,
       driverThreshold: Long = 1000000L): DataFrame = {
     val s = vertices.sparkSession
@@ -624,7 +672,14 @@ object Dedup {
     val pairsCk = pairs
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
       .localCheckpoint(true)
-    val docs = vertices.select(col("doc_id"))
+    val extras = vertices.columns.filter(_ != "doc_id").map(col).toSeq
+    def labelled(labels: DataFrame, how: String): DataFrame = {
+      val cid = coalesce(col("cluster_id"), col("doc_id"))
+      vertices.join(labels, Seq("doc_id"), how)
+        .select(Seq(col("doc_id"), cid.as("cluster_id"),
+          (col("doc_id") === cid).cast("long").as("is_canonical")) ++
+          extras: _*)
+    }
     if (pairsCk.count() <= driverThreshold) {
       // union-find over the collected pair list; only docs appearing in
       // pairs enter the structure, everything else stays a singleton
@@ -647,21 +702,17 @@ object Dedup {
           }
         }
       val labels = parent.keys.toSeq.map(k => (k, find(k)))
-      val labelDf = labels.toDF("doc_id", "cluster_id")
-      return docs
-        .join(broadcast(labelDf), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-        .withColumn("is_canonical",
-          (col("doc_id") === col("cluster_id")).cast("long"))
-        .orderBy("doc_id")
+      return labelled(broadcast(labels.toDF("doc_id", "cluster_id")), "left")
     }
     val edges = pairsCk
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairsCk
         .select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint(true) // joined every round
-    var labels = docs
+    // every vertex and every pair endpoint is a node from round 0, so
+    // each component's label is its minimum node, as on the driver route
+    var labels = vertices.select(col("doc_id"))
+      .unionByName(edges.select(col("src").as("doc_id"))).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id"))
       .localCheckpoint(true)
     // labels are monotonically non-increasing, so Σ(labels) strictly
@@ -674,11 +725,15 @@ object Dedup {
     var prevSum = labelSum(labels)
     var changed = true
     while (changed) {
-      // (a) neighbor-min
+      // (a) neighbor-min: the least label of v and its neighbours (a
+      // left join, not a union with the checkpointed labels: Spark's
+      // union constraint rewrite fails on a re-instanced checkpoint)
       val prop = labels.join(edges, col("doc_id") === col("src"))
-        .select(col("dst").as("doc_id"), col("cluster_id"))
-      val neighborMin = labels.unionByName(prop)
-        .groupBy("doc_id").agg(min("cluster_id").as("cluster_id"))
+        .groupBy(col("dst")).agg(min("cluster_id").as("nmin"))
+      val neighborMin = labels
+        .join(prop, col("doc_id") === col("dst"), "left")
+        .select(col("doc_id"),
+          least(col("cluster_id"), col("nmin")).as("cluster_id"))
       // (b) pointer jump: l(v) ← l(l(v)) — labels are doc ids, so the
       // jump is a self-join on cluster_id = doc_id, halving chain
       // lengths per round (convergence in O(log diameter) rounds)
@@ -692,10 +747,10 @@ object Dedup {
       prevSum = s2
       labels = next
     }
-    labels
-      .withColumn("is_canonical",
-        (col("doc_id") === col("cluster_id")).cast("long"))
-      .orderBy("doc_id")
+    // back onto the vertex rows: pair endpoints outside the vertex
+    // frame drop out and a repeated vertex id keeps all its rows, as on
+    // the driver route
+    labelled(labels, "inner")
   }
 
   /** Corpus-size ceiling for defaulting near-dup CONSUMERS to the 32/6
@@ -717,13 +772,15 @@ object Dedup {
     * stays available as the EXPLICIT report mode ([[simhashPairs]] /
     * the `dedup_simhash_pairs` row); only the default routing is
     * size-guarded. `corpusSize` overrides the counted size (tests /
-    * callers that already know it). */
+    * callers that already know it); the wide kernel's banding is sized
+    * by the same count. Pairs come unsorted: every consumer joins or
+    * aggregates them. */
   def nearDupPairsAuto(s: SparkSession, dir: String,
       corpusSize: Option[Long] = None): DataFrame = {
     val n = corpusSize.getOrElse(Ingest.docCount(s, dir))
     if (n <= SimhashAutoMaxDocs)
-      simhashPairs(s, dir, Some(n), acceptQuadratic = false)
-    else simhashPairsWide(s, dir)
+      simhashPairsOf(simhashOf(Tables.documents(s, dir)))
+    else simhashPairsWideOf(simhashWideSignatures(s, dir), docCount = Some(n))
   }
 
   /** Clusters over the size-routed near-dup pair evidence
@@ -744,26 +801,29 @@ object Dedup {
     * replays the component CTE and re-derives the argmax.
     *
     * Scale: inherits the clusters machinery (size-routed pair kernel,
-    * pointer-jumped components); keeper selection is one window over
-    * (cluster, member) rows — partitioned by cluster, never global. */
-  def keepBest(s: SparkSession, dir: String): DataFrame = {
-    val comp = simhashClusters(s, dir).select("doc_id", "cluster_id")
-    val sized = comp.join(
-      Tables.documents(s, dir).select("doc_id", "n_chars"), "doc_id")
-    val keepers = sized
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cluster_id"))
-          .orderBy(col("n_chars").desc, col("doc_id"))))
-      .filter(col("rn") === 1)
-      .select(col("cluster_id"), col("doc_id").as("keeper_id"),
-        col("n_chars").as("keeper_chars"))
-    comp.groupBy("cluster_id")
-      .agg(count(lit(1)).as("n_members"))
-      .join(keepers, "cluster_id")
-      .select(col("cluster_id"), col("n_members"), col("keeper_id"),
-        col("keeper_chars"), (col("n_members") - 1).as("n_dropped"))
+    * pointer-jumped components), which carries each member's length
+    * from the one documents scan; keeper selection is one aggregate per
+    * cluster ([[keepersOf]]) — hash-partitioned by cluster, never a
+    * window, a sort or a join. */
+  def keepBest(s: SparkSession, dir: String): DataFrame =
+    keepersOf(clustersOf(Tables.documents(s, dir).select("doc_id", "n_chars"),
+      nearDupPairsAuto(s, dir)))
+
+  /** One row per cluster of (doc_id, cluster_id, n_chars) members:
+    * size and the keeper, picked by a single `max(struct(n_chars,
+    * ~doc_id))` — the longest member, lowest id on ties (~ reverses
+    * the long order with no overflow), null lengths losing to any
+    * length: the `n_chars DESC NULLS LAST, doc_id` order. */
+  private[graft] def keepersOf(members: DataFrame): DataFrame =
+    members.groupBy("cluster_id")
+      .agg(count(lit(1)).as("n_members"),
+        max(struct(col("n_chars"), bitwise_not(col("doc_id")).as("not_id")))
+          .as("best"))
+      .select(col("cluster_id"), col("n_members"),
+        bitwise_not(col("best.not_id")).as("keeper_id"),
+        col("best.n_chars").as("keeper_chars"),
+        (col("n_members") - 1).as("n_dropped"))
       .orderBy("cluster_id")
-  }
 
   /** The dedup ENDGAME on the SCALE kernel: connected components over
     * the wide (60-bit/dist-3) pairs of the planted-copy corpus — the
@@ -777,7 +837,7 @@ object Dedup {
       .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
     val corpus = docs.unionByName(copies)
     clustersOf(corpus.select(col("doc_id")),
-      simhashPairsWideOf(simhashWideOf(corpus)))
+      simhashPairsWideOf(simhashWideOf(corpus))).orderBy("doc_id")
   }
 
   /** Embedding near-dup pairs: banded-LSH candidate generation (the same

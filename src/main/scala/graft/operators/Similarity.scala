@@ -688,13 +688,6 @@ object Similarity {
         expr(s"n_overlap * 1000 div $k").as("recall_permille"))
   }
 
-  /** Probe a built IVF index: rank the persisted centroids against the
-    * query on the driver (nlist dot products — pure math, no corpus
-    * pass), read only the `nprobe` best partitions, exact cosine
-    * re-rank. The cell filter is a partition filter on the scan
-    * (asserted in SparkE2ESpec "partition-pruned probe"). Pass
-    * `excludeId` to drop a known self-match *before* the limit so all
-    * `k` result slots are real neighbors. */
   /** Uniform index-metadata loader across the three persisted
     * families (ivf / pq / ivf-pq): centroids from the in-dir manifest
     * when present (one small-file read, bit-exact base64 floats — no
@@ -711,6 +704,16 @@ object Similarity {
           .orderBy("cell").select("embedding").as[Array[Float]].collect()
     }
 
+  /** Probe a built IVF index: rank the persisted centroids against the
+    * query on the driver (nlist dot products — pure math, no corpus
+    * pass), read only the `nprobe` best partitions, exact cosine
+    * re-rank. The cell filter is a partition filter on the scan
+    * (asserted in SparkE2ESpec "partition-pruned probe"). Pass
+    * `excludeId` to drop a known self-match *before* the limit so all
+    * `k` result slots are real neighbors.
+    * Zero-norm vectors have no direction, so they take no part in a
+    * cosine ranking: zero-norm candidates are skipped, and a zero-norm
+    * query returns no rows (the cosine would divide by zero). */
   def probeIvf(s: SparkSession, indexDir: String, queryVec: Array[Float],
       k: Int = 10, nprobe: Int = IvfNprobe,
       excludeId: Option[Long] = None): DataFrame = {
@@ -723,6 +726,7 @@ object Similarity {
       .filter(col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
     excludeId.fold(scan)(id => scan.filter(col("vec_id") =!= id))
       .crossJoin(broadcast(q))
+      .filter(expr("dot_f(qv, qv) > 0 AND dot_f(embedding, embedding) > 0"))
       .withColumn("cosine", cosineExpr("qv", "embedding"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)

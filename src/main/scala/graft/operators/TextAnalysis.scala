@@ -420,8 +420,7 @@ object TextAnalysis {
         var i = 0
         while (i < n) {
           val gram = text.substring(i, math.min(text.length, i + k))
-          hs(i) = java.lang.Long.parseLong(
-            graft.functions.TextUtil.sha256Hex(gram).substring(0, 12), 16)
+          hs(i) = graft.functions.TextUtil.sha256Prefix(gram, 48)
           i += 1
         }
         val minima = scala.collection.mutable.SortedSet.empty[Long]

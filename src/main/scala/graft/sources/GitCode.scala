@@ -104,10 +104,12 @@ object GitCode {
     *      identity is url-scoped), exactly as the reference's point
     *      ids do;
     *   5. store update: upsert-by-url, then incremental runs purge
-    *      exactly the diff's delete URLs while FULL runs purge every
-    *      stored url the scan did not produce (removeObsoleteFiles,
+    *      the diff's delete URLs while FULL runs purge every stored url
+    *      the scan did not chunk (removeObsoleteFiles,
     *      doc2vec.ts:1305-1316) — written as the next complete store
-    *      version;
+    *      version. Both purge a processed file that chunks to nothing
+    *      (a file edited to empty), as `Sync.syncRun`'s cleanup does;
+    *      it counts in `urls_deleted`;
     *   6. advance the SHA watermark to HEAD (doc2vec.ts:1320-1325).
     *
     * `tree` is the worktree scan at HEAD as (path relative to
@@ -169,18 +171,19 @@ object GitCode {
     val storedUrls = storedChunks.select("url").distinct()
     val (cleaned, urlsDeleted) =
       if (mode == "full") {
-        val processedUrls = docs.select("url").distinct()
+        val chunkedUrls = docs.filter(col("n_chunks") > 0).select("url")
         val removed = storedUrls
-          .join(processedUrls, Seq("url"), "left_anti").count()
-        (merged.join(processedUrls, Seq("url"), "left_semi"), removed)
-      } else if (deleteUrls.nonEmpty) {
+          .join(chunkedUrls, Seq("url"), "left_anti").count()
+        (merged.join(chunkedUrls, Seq("url"), "left_semi"), removed)
+      } else {
         val delDf = deleteUrls.toDF("url")
+          .unionByName(docs.filter(col("n_chunks") === 0).select("url"))
         // reference counters count urls whose delete actually removed
         // chunks (doc2vec.ts:1270-1273), not every requested url
         val removed = storedUrls.join(delDf, Seq("url"), "left_semi")
           .count()
         (merged.join(delDf, Seq("url"), "left_anti"), removed)
-      } else (merged, 0L)
+      }
 
     val version = ChunkStore.writeVersion(s, storeRoot, cleaned)
     SyncState.setMetadata(s, statePath, shaKey, headSha, runId)

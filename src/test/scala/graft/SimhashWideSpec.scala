@@ -11,40 +11,76 @@ import graft.SparkSuite
   * dist 1..3 capture lives here. */
 class SimhashWideSpec extends SparkSuite {
 
-  private def bruteForce(sigs: Seq[(Long, Long)]): Set[(Long, Long, Long)] =
+  private def bruteForce(sigs: Seq[(Long, Long)],
+      maxDist: Long): Set[(Long, Long, Long)] =
     (for {
       (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
       d = java.lang.Long.bitCount(sa ^ sb).toLong
-      if d <= Dedup.SimhashWideMaxDist
+      if d <= maxDist
     } yield (ia, ib, d)).toSet
 
-  test("banded wide pairs == brute force on planted distances 0..6") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(1234)
-    val mask60 = (1L << Dedup.SimhashWideBits) - 1
+  /** Random `bits`-wide signatures, the first 70 with a partner planted
+    * at distance i % (maxDist + 4): within the threshold (must be
+    * found) and up to 3 past it (must not). */
+  private def planted(seed: Int, bits: Int,
+      maxDist: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val mask = (1L << bits) - 1
     def flip(sig: Long, k: Int): Long = {
       var s = sig
       // k DISTINCT positions so the planted distance is exactly k
-      rnd.shuffle((0 until Dedup.SimhashWideBits).toList).take(k)
+      rnd.shuffle((0 until bits).toList).take(k)
         .foreach(b => s ^= (1L << b))
       s
     }
-    val base = (0 until 300).map(i =>
-      (i.toLong, rnd.nextLong() & mask60))
-    // partners at distance 0,1,2,3 (must be found) and 4,5,6 (must not)
+    val base = (0 until 300).map(i => (i.toLong, rnd.nextLong() & mask))
     val partners = base.take(70).zipWithIndex.map { case ((id, sig), i) =>
-      (1000L + id, flip(sig, i % 7))
+      (1000L + id, flip(sig, i % (maxDist.toInt + 4)))
     }
-    val all = base ++ partners
-    val expected = bruteForce(all)
+    base ++ partners
+  }
+
+  /** The kernel's rows equal the brute-force pair set, each pair once. */
+  private def assertExact(got: org.apache.spark.sql.DataFrame,
+      expected: Set[(Long, Long, Long)], what: String): Unit = {
+    val rows = got.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val pairs = rows.map(r => (r._1, r._2))
+    assert(pairs.distinct.size == pairs.size,
+      s"$what: ${pairs.size - pairs.distinct.size} repeated pairs")
+    assert(rows.toSet == expected,
+      s"$what: banding missed ${(expected -- rows).size} pairs / " +
+        s"invented ${(rows.toSet -- expected).size}")
+  }
+
+  test("banded wide pairs == brute force on planted distances 0..6") {
+    import spark.implicits._
+    val all = planted(1234, Dedup.SimhashWideBits, Dedup.SimhashWideMaxDist)
+    val expected = bruteForce(all, Dedup.SimhashWideMaxDist)
     assert(expected.size >= 40, s"degenerate plant: ${expected.size} pairs")
-    val got = Dedup
-      .simhashPairsWideOf(all.toDF("doc_id", "simhash"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == expected,
-      s"banding missed ${(expected -- got).size} pairs / " +
-        s"invented ${(got -- expected).size}")
+    assertExact(Dedup.simhashPairsWideOf(all.toDF("doc_id", "simhash")),
+      expected, "60/3")
+  }
+
+  test("wide pairs stay exact and unrepeated at every banding tier") {
+    import spark.implicits._
+    val all = planted(4321, Dedup.SimhashWideBits, Dedup.SimhashWideMaxDist)
+    val expected = bruteForce(all, Dedup.SimhashWideMaxDist)
+    // the claimed corpus size picks n = 4, 5, 6 and 10 blocks (m = 1, 2,
+    // 3 and 7 blocks per band): single-block and compound bands alike
+    Seq(10L, 9000L, 1000000L, 1L << 40).foreach { n =>
+      assertExact(Dedup.simhashPairsWideOf(all.toDF("doc_id", "simhash"),
+        docCount = Some(n)), expected, s"60/3 sized for $n docs")
+    }
+  }
+
+  test("banded 32/6 pairs == brute force on planted distances 0..9") {
+    import spark.implicits._
+    val all = planted(5678, 32, Dedup.SimhashMaxDist)
+    val expected = bruteForce(all, Dedup.SimhashMaxDist)
+    assert(expected.size >= 40, s"degenerate plant: ${expected.size} pairs")
+    assertExact(Dedup.simhashPairsOf(all.toDF("doc_id", "simhash")),
+      expected, "32/6")
   }
 
   test("adaptive banding stays exact at a larger corpus (wider keys)") {
@@ -82,8 +118,10 @@ class SimhashWideSpec extends SparkSuite {
 
   test("nearDupPairsAuto routes 32/6 below the gate, wide above it") {
     val dir = "/root/testdata/sf0.001"
+    // nearDupPairsAuto returns unsorted pairs; the report rows sort
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .toSeq.sorted
     val report = rows(Dedup.simhashPairs(spark, dir))
     val wide = rows(Dedup.simhashPairsWide(spark, dir))
     // forced small corpus → the 32/6 report kernel

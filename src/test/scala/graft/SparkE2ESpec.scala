@@ -729,6 +729,35 @@ class SparkE2ESpec extends SparkSuite {
       s"probe $got diverges from inline $want")
   }
 
+  test("IVF probe skips zero-norm candidates; a zero-norm query returns no rows") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("ivfzero")
+    try {
+      val rnd = new scala.util.Random(31)
+      val dim = graft.functions.Embedder.Dim
+      val zeroIds = Set(7L, 23L)
+      val vecs = (0L until 60L).map { id =>
+        val v =
+          if (zeroIds(id)) new Array[Float](dim)
+          else Array.fill(dim)(rnd.nextGaussian().toFloat)
+        (id, 0, v)
+      }
+      val embDir = base.resolve("vectors").toString
+      vecs.toDF("vec_id", "label", "embedding")
+        .write.parquet(s"$embDir/embeddings.parquet")
+      val idx = base.resolve("ivf").toString
+      Similarity.buildIvfIndex(spark, embDir, idx, lloydIters = 0)
+      // every cell probed, so the zero vectors' cell is among them
+      val all = Similarity.IvfNlist
+      val got = Similarity.probeIvf(spark, idx, vecs(1)._3, k = 100,
+        nprobe = all).collect().map(_.getAs[Long]("vec_id")).toSet
+      assert(got == vecs.map(_._1).toSet -- zeroIds)
+      val none = Similarity.probeIvf(spark, idx, new Array[Float](dim),
+        k = 10, nprobe = all).collect()
+      assert(none.isEmpty)
+    } finally graft.operators.Sync.deleteTree(base.toFile)
+  }
+
   test("Lloyd-refined IVF: mean recall at equal nprobe >= seed baseline") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"

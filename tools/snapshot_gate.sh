@@ -23,6 +23,15 @@ if [ -n "$STRAY" ]; then
   exit 1
 fi
 
+echo "[gate] 0b/3 one sha256-prefix hash kernel"
+HEXPARSE="$(grep -rnE 'sha256Hex\(.*\)\.substring\(' src/main || true)"
+if [ -n "$HEXPARSE" ]; then
+  echo "$HEXPARSE"
+  echo "[gate] FAIL: hex-parsed sha256 prefix under src/main" \
+    "(use TextUtil.sha256Prefix)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
