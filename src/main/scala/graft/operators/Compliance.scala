@@ -226,8 +226,7 @@ object Compliance {
     * micro-batch boundaries, or maintenance reading stale state
     * between triggers, lands as a hash mismatch. */
   def purgeSweepStream(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("purgestream")
-    try {
+    graft.streaming.Replay.work { base =>
       // surfaces AND the staged request slices are pure functions of
       // the corpus — one cached tree covers both; mtime-preserving
       // copy keeps the replay order
@@ -240,16 +239,11 @@ object Compliance {
           .filter(purged(col("doc_id")))
         keys.repartitionByRange(2, col("doc_id"))
           .write.parquet(s"$d/requests")
-        val t0 = System.currentTimeMillis() - 3600 * 1000L
-        new java.io.File(s"$d/requests").listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          .zipWithIndex
-          .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
+        graft.streaming.Replay.stamp(s"$d/requests")
       }
-      val stream = s.readStream
-        .schema(StoreSchema) // requests carry exactly the store shape
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/requests")
-      val q = stream.writeStream
+      // requests carry exactly the store shape
+      val q = graft.streaming.Replay.read(s, base, Seq("requests"))
+        .writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
           if (!b.isEmpty) applyPurgeBatch(s, base.toString, b, id)
           ()
@@ -257,6 +251,6 @@ object Compliance {
         .option("checkpointLocation", s"$base/ckpt").start()
       try q.processAllAvailable() finally q.stop()
       report(s, dir, base.toString)
-    } finally Sync.deleteTree(base.toFile)
+    }
   }
 }

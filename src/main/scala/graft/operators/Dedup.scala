@@ -1196,39 +1196,26 @@ object Dedup {
     val from = maxRow.getLong(0) * 4 / 5
     val W = SubstrWindow
 
-    val base = java.nio.file.Files.createTempDirectory("substrstream")
-    try {
-      // staged inputs are pure functions of the corpus: the delta
-      // slices AND the store-side window hashes (the expensive
-      // per-char kernel over 4/5 of the corpus) — bench sessions pay
-      // both once; marks/checkpoint stay per-run under the temp base
-      val (inBase, cachedIn) = graft.streaming.StageCache.resolve(
-        s"substrstream_${graft.streaming.StageCache.dirKey(dir)}") { d =>
-        Tables.documents(s, dir).select("doc_id", "text")
-          .filter(col("doc_id") >= from)
-          .repartitionByRange(2, col("doc_id"))
-          .write.mode("overwrite").parquet(s"$d/in")
-        val t0 = System.currentTimeMillis() - 3600 * 1000L
-        new java.io.File(s"$d/in").listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          .zipWithIndex
-          .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-        sampledWindows(s, dir)
-          .filter(col("doc_id") < from)
-          .select("h")
-          .write.mode("overwrite").parquet(s"$d/storewins")
-      }
+    // staged inputs are pure functions of the corpus: the delta slices
+    // AND the store-side window hashes (the expensive per-char kernel
+    // over 4/5 of the corpus) — bench sessions pay both once;
+    // marks/checkpoint stay per-run in the work dir
+    graft.streaming.Replay.staged(
+      s"substrstream_${graft.streaming.StageCache.dirKey(dir)}") { d =>
+      Tables.documents(s, dir).select("doc_id", "text")
+        .filter(col("doc_id") >= from)
+        .repartitionByRange(2, col("doc_id"))
+        .write.parquet(s"$d/in")
+      graft.streaming.Replay.stamp(s"$d/in")
+      sampledWindows(s, dir)
+        .filter(col("doc_id") < from)
+        .select("h")
+        .write.parquet(s"$d/storewins")
+    } { (inBase, base) =>
       val storeWins = s.read.schema("h STRING")
         .parquet(s"$inBase/storewins").localCheckpoint(true)
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1).parquet(s"$inBase/in")
       val marksDir = s"$base/marks"
-      val q = stream.writeStream
+      val q = graft.streaming.Replay.read(s, inBase, Seq("in")).writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
           sampledWindowsOf(stagedDocs(b))
             .join(storeWins, "h")
@@ -1246,12 +1233,9 @@ object Dedup {
         else s.emptyDataFrame
           .select(lit(0L).as("doc_id"), lit(0L).as("start"),
             lit(0L).as("end")).limit(0)
-      // materialize before the temp tree is deleted (the ivf stream
-      // parity's pattern)
-      val out = mergeSpans(marks).localCheckpoint(true)
-      if (!cachedIn) graft.operators.Sync.deleteTree(inBase.toFile)
-      out
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+      // materialize before the temp tree is deleted
+      mergeSpans(marks).localCheckpoint(true)
+    }
   }
 
   /** The APPLY side of [[substringSpans]]: what cutting the duplicated

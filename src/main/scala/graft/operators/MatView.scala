@@ -196,8 +196,7 @@ object MatView {
     if (Tables.lineitem(s, dir).take(1).isEmpty)
       return incrementalRefresh(s, dir)
     val (store, adds, dels) = parts(s, dir)
-    val base = java.nio.file.Files.createTempDirectory("mvstream")
-    try {
+    graft.streaming.Replay.work { base =>
       // the pristine tree (base store, MV v0, typed empty logs, staged
       // delta slices) is a pure function of the corpus — bench
       // sessions stage it once and copy it in (the run mutates the
@@ -216,19 +215,12 @@ object MatView {
           .unionByName(dels.withColumn("sgn", lit(-1L)))
           .repartitionByRange(2, col("l_orderkey"))
           .write.parquet(s"$d/in")
-        val t0 = System.currentTimeMillis() - 3600 * 1000L
-        new java.io.File(s"$d/in").listFiles()
-          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          .zipWithIndex
-          .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
+        graft.streaming.Replay.stamp(s"$d/in")
       }
-      // schema from the staged files themselves: the parquet timestamp
-      // shape (LTZ vs NTZ) must flow through unchanged or the
-      // streaming kernel type-diverges from the batch kernel
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$base/in").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val q = stream.writeStream
+      // the stream takes the staged files' own schema: the parquet
+      // timestamp shape (LTZ vs NTZ) must flow through unchanged or
+      // the streaming kernel type-diverges from the batch kernel
+      val q = graft.streaming.Replay.read(s, base, Seq("in")).writeStream
         .foreachBatch((b: DataFrame, id: Long) =>
           mvApplyBatch(s, base.toString, b, id))
         .option("checkpointLocation", s"$base/ckpt").start()
@@ -236,6 +228,6 @@ object MatView {
       val head = new java.io.File(s"$base/mv").listFiles()
         .map(_.getName.stripPrefix("v").toInt).max
       finish(s.read.parquet(s"$base/mv/v$head")).localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 }

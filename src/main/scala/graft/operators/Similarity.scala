@@ -596,29 +596,18 @@ object Similarity {
     if (maxRow.isNullAt(0)) return ivfAppendReport(s, dir)
     val cut = maxRow.getLong(0) * 4 / 5
     val seeds = ivfSeeds(s, dir, IvfNlist)
-    val base = java.nio.file.Files.createTempDirectory("ivfappendstream")
-    try {
+    val emb = Tables.embeddings(s, dir)
+    // the delta arrives as two ascending id-range slices
+    graft.streaming.Replay.staged(
+      s"ivfstream_${graft.streaming.StageCache.dirKey(dir)}") { d =>
+      emb.filter(col("vec_id") >= cut).select("vec_id", "embedding")
+        .repartitionByRange(2, col("vec_id")).write.parquet(s"$d/in")
+      graft.streaming.Replay.stamp(s"$d/in")
+    } { (in, base) =>
       val idx = s"$base/codes"
-      val emb = Tables.embeddings(s, dir)
       ivfAssignWith(emb.filter(col("vec_id") < cut), seeds)
         .write.partitionBy("cell").parquet(idx)
-      // the delta arrives as two ascending id-range slices
-      emb.filter(col("vec_id") >= cut).select("vec_id", "embedding")
-        .repartitionByRange(2, col("vec_id")).write.parquet(s"$base/in")
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
-      new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType)))))
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val q = stream.writeStream
+      val q = graft.streaming.Replay.read(s, in, Seq("in")).writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
           ivfAssignWith(b, seeds)
             .write.mode("append").partitionBy("cell").parquet(idx)
@@ -627,7 +616,7 @@ object Similarity {
         .option("checkpointLocation", s"$base/ckpt").start()
       try q.processAllAvailable() finally q.stop()
       ivfOccupancyReport(s, idx, cut)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** IVF rebalance decision report — the maintenance trigger that

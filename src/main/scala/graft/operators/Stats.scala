@@ -239,24 +239,18 @@ object Stats {
     * metadata; the data-scale work is each batch's distinct scan). */
   def kmvDistinctStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("kmvstream")
-    try {
-      val statePath = s"$base/state"
-      Seq.empty[(String, Array[Long])].toDF("event_type", "sk")
-        .write.parquet(statePath)
+    graft.streaming.Replay.staged(
+      s"kmvstream_${graft.streaming.StageCache.dirKey(dir)}") { d =>
       Tables.events(s, dir)
         .select("event_id", "event_type", "user_id")
         .repartitionByRange(2, col("event_id"))
-        .write.parquet(s"$base/in")
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
-      new java.io.File(s"$base/in").listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .zipWithIndex
-        .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-      val stream = s.readStream
-        .schema("event_id LONG, event_type STRING, user_id LONG")
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val q = stream.writeStream
+        .write.parquet(s"$d/in")
+      graft.streaming.Replay.stamp(s"$d/in")
+    } { (in, base) =>
+      val statePath = s"$base/state"
+      Seq.empty[(String, Array[Long])].toDF("event_type", "sk")
+        .write.parquet(statePath)
+      val q = graft.streaming.Replay.read(s, in, Seq("in")).writeStream
         .foreachBatch { (b: DataFrame, _: Long) =>
           if (!b.isEmpty) {
             val batchSk = b.select(col("event_type"),
@@ -289,7 +283,7 @@ object Stats {
         .parquet(statePath)
         .as[(String, Array[Long])].collect().toMap
       kmvReport(s, dir, sketches)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** Quantile probe points (permille) of [[quantileSketch]]. */

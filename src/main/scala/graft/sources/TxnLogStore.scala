@@ -206,32 +206,27 @@ object TxnLogStore {
   }
 
   def txnLogStreamReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("txnlogstream")
-    try {
+    graft.streaming.Replay.work { base =>
       val root = s"$base/store"
       stageDataFiles(s, dir, root)
-      val reqDir = new java.io.File(s"$base/requests")
-      reqDir.mkdirs()
-      val reqs = Seq(
-        """{"adds":"f0,f1","removes":""}""",
+      val reqDir = base.resolve("requests")
+      java.nio.file.Files.createDirectories(reqDir)
+      Seq("""{"adds":"f0,f1","removes":""}""",
         """{"adds":"f2","removes":"f0"}""",
-        """{"adds":"f3","removes":""}""")
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
-      reqs.zipWithIndex.foreach { case (line, i) =>
-        val f = new java.io.File(reqDir, s"commit$i.json")
-        java.nio.file.Files.writeString(f.toPath, line)
-        f.setLastModified(t0 + i * 60000L)
+        """{"adds":"f3","removes":""}""").zipWithIndex.foreach {
+        case (line, i) =>
+          java.nio.file.Files.writeString(reqDir.resolve(s"commit$i.json"),
+            line)
       }
-      val stream = s.readStream
-        .schema("adds STRING, removes STRING")
-        .option("maxFilesPerTrigger", 1).json(reqDir.toString)
-      val q = stream.writeStream
+      graft.streaming.Replay.stamp(reqDir.toString)
+      val q = graft.streaming.Replay.read(s, base, Seq("requests"), "json")
+        .writeStream
         .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
           applyCommitBatch(root, b, id))
         .option("checkpointLocation", s"$base/ckpt").start()
       try q.processAllAvailable() finally q.stop()
       snapshotReport(s, root)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** Compaction THROUGH the log — the job `store_compaction` plans,

@@ -112,40 +112,26 @@ object CurationStream {
     * hash mismatches. The 500‰ rate keeps the sha-bucket branch live
     * (1000‰ would pass everything). */
   def streamCurateParity(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{StructType, StructField, LongType,
-      StringType}
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("source"))
-    val emptySchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("source", StringType),
-      StructField("n_new_spans", LongType)))
-    if (docs.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-    val base = java.nio.file.Files.createTempDirectory("streamcurate")
-    docs.repartitionByRange(4, col("doc_id")).write.parquet(s"$base/in")
-    // ascending mtimes = ascending doc_id slices: deterministic replay
-    val t0 = System.currentTimeMillis() - 3600 * 1000L
-    new java.io.File(s"$base/in").listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      .zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(t0 + i * 60000L) }
-    val stream = s.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val kept = s"$base/kept"
-    val q = curateStream(stream, s"$base/index", kept,
-      s"$base/ckpt", ratePermille = 500)
-    try q.processAllAvailable() finally q.stop()
-    val keptFiles = new java.io.File(kept)
-    val result =
-      if (!keptFiles.exists) s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-      else s.read.parquet(kept)
-        .select(col("doc_id"), col("source"),
-          col("n_new_spans").cast("long").as("n_new_spans"))
-        .orderBy("doc_id")
-    val pinned = result.localCheckpoint(true)
-    graft.operators.Sync.deleteTree(base.toFile)
-    pinned
+    def readBack(kept: DataFrame) = kept
+      .select(col("doc_id"), col("source"),
+        col("n_new_spans").cast("long").as("n_new_spans"))
+      .orderBy("doc_id")
+    val noneKept = readBack(docs.select(col("doc_id"), col("source"),
+      lit(0L).as("n_new_spans")).limit(0))
+    if (docs.take(1).isEmpty) return noneKept
+    // ascending doc_id slices, stamped in order: deterministic replay
+    Replay.staged(s"curate_${StageCache.dirKey(dir)}") { d =>
+      docs.repartitionByRange(4, col("doc_id")).write.parquet(s"$d/in")
+      Replay.stamp(s"$d/in")
+    } { (in, work) =>
+      val kept = s"$work/kept"
+      val q = curateStream(Replay.read(s, in, Seq("in")), s"$work/index",
+        kept, s"$work/ckpt", ratePermille = 500)
+      try q.processAllAvailable() finally q.stop()
+      (if (new java.io.File(kept).exists) readBack(s.read.parquet(kept))
+       else noneKept).localCheckpoint(true)
+    }
   }
 }

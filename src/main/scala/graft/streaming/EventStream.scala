@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues,
@@ -294,22 +294,18 @@ object EventStream {
   /** Stream/batch parity as an ORACLE row: stage the documents table
     * as synthetic markdown pages split across 4 parquet files, ingest
     * them through [[ingestStream]] one file per micro-batch
-    * (maxFilesPerTrigger=1 → 4 incremental store merges), then return
-    * the resulting versioned store's LATEST contents. The DuckDB
-    * oracle reproduces the BATCH chunker's output for the same pages
-    * (the doc_chunk_markdown derivation), so a hash match proves the
-    * streamed store is bit-identical to what the batch path builds —
-    * chunk ids, indices, sections, content — after multiple
-    * micro-batch merges, regardless of how the file planner batched
-    * the pages.
+    * (4 incremental store merges), then return the resulting versioned
+    * store's LATEST contents. The DuckDB oracle reproduces the BATCH
+    * chunker's output for the same pages (the doc_chunk_markdown
+    * derivation), so a hash match proves the streamed store is
+    * bit-identical to what the batch path builds — chunk ids, indices,
+    * sections, content — after multiple micro-batch merges.
     *
     * Scale: chunk+embed is the same per-row kernel as the batch path
     * (no shuffle before the merge); the store merge is per-micro-batch
     * url-replacement, so state never accumulates in the query. */
   def streamBatchParity(s: SparkSession, dir: String): DataFrame =
-    parityRun(s, dir, deletePhase = false,
-      docFilter = Some(col("doc_id") < ParityFixtureDocs),
-      cacheTag = "p1000")
+    parityRun(s, dir, deletePhase = false)
 
   /** Streaming DELETION parity as an ORACLE row — [[streamBatchParity]]
     * plus the purge path: after the 4 ingest micro-batches build the
@@ -321,9 +317,7 @@ object EventStream {
     * exactly the batch cleanup's survivor set — across micro-batches,
     * with every surviving chunk bit-identical. */
   def streamDeleteParity(s: SparkSession, dir: String): DataFrame =
-    parityRun(s, dir, deletePhase = true,
-      docFilter = Some(col("doc_id") < ParityFixtureDocs),
-      cacheTag = "p1000")
+    parityRun(s, dir, deletePhase = true)
 
   /** Protocol rows prove PROTOCOL correctness (multi-micro-batch
     * versioned merges, purge, reuse) — their evidential value is in the
@@ -336,33 +330,227 @@ object EventStream {
 
   /** RE-SYNC parity — the embed-skip's oracle row: a 200-doc slice is
     * ingested with `embedReuse = true`, then the SAME pages are
-    * delivered again as a second streaming sync (fresh input files +
-    * checkpoint, the at-least-once world's full re-crawl). The second
-    * sync re-chunks but reuses every stored embedding (chunk ids all
-    * hit), and the final store must STILL hash-match the batch
-    * derivation — proving the reuse path leaves the store
-    * bit-identical across a full redundant re-sync. Flag-level reuse
-    * evidence is pinned separately in the embedWithReuse test. */
+    * delivered again as a second streaming sync (fresh checkpoint, the
+    * at-least-once world's full re-crawl). The second sync re-chunks
+    * but reuses every stored embedding (chunk ids all hit), and the
+    * final store must STILL hash-match the batch derivation — proving
+    * the reuse path leaves the store bit-identical across a full
+    * redundant re-sync. Flag-level reuse evidence is pinned separately
+    * in the embedWithReuse test. */
   def streamResyncParity(s: SparkSession, dir: String): DataFrame =
     parityRun(s, dir, deletePhase = false, resyncPhase = true,
-      docFilter = Some(col("doc_id") < 200), cacheTag = "p200")
+      docCap = 200)
 
-  /** Event cap for the aggregation-parity rows: like the store-parity
-    * rows, their evidence is in micro-batches crossed and watermark
-    * advances survived, not corpus size. */
+  /** The store rows: batch/delete parity keep the 4-micro-batch ingest
+    * contract; the resync row runs 2+2 (two syncs; per-trigger
+    * streaming overhead dominates this row, and two batches per sync
+    * already exercise cross-batch reuse). The staged page and tombstone
+    * files are pure functions of the corpus slice; the store and the
+    * checkpoints live in the run's work dir. */
+  private def parityRun(s: SparkSession, dir: String,
+      deletePhase: Boolean, resyncPhase: Boolean = false,
+      docCap: Long = ParityFixtureDocs): DataFrame = {
+    val docs = graft.Tables.documents(s, dir).filter(col("doc_id") < docCap)
+    val url = concat(lit("doc://"), col("doc_id")).as("url")
+    val nFiles = if (resyncPhase) 2 else 4
+    Replay.staged(
+      s"parity_in_p${docCap}_${nFiles}_${StageCache.dirKey(dir)}") { d =>
+      docs.select(url, concat(lit("# "), col("source"), lit("\n\n## "),
+          col("lang"), lit("\n\n"), col("text")).as("content"))
+        .repartition(nFiles).write.parquet(s"$d/in")
+      Replay.stamp(s"$d/in")
+    } { (in, work) =>
+      val store = s"$work/store"
+      def runIngest(ckpt: String): Unit = {
+        val q = ingestStream(Replay.read(s, in, Seq("in")), store,
+          s"$work/$ckpt", embedReuse = resyncPhase)
+        try q.processAllAvailable() finally q.stop()
+      }
+      runIngest("ckpt")
+      if (resyncPhase)
+        // the same pages again through a FRESH checkpoint: a fully
+        // redundant second sync (the at-least-once world's re-crawl)
+        runIngest("ckpt2")
+      if (deletePhase)
+        // the re-crawl's 404s arrive as a tombstone stream
+        Replay.staged(s"parity_tomb_p${docCap}_${StageCache.dirKey(dir)}") {
+          d =>
+            docs.filter(col("doc_id") % 13 === 0).select(url)
+              .repartition(2).write.parquet(s"$d/tomb")
+            Replay.stamp(s"$d/tomb")
+        } { (tomb, _) =>
+          val q = deleteStream(Replay.read(s, tomb, Seq("tomb")), store,
+            s"$work/ckpt_del")
+          try q.processAllAvailable() finally q.stop()
+        }
+      // an empty corpus stages only empty files — no micro-batch ever
+      // merges, the store is never created, and the row is 0 rows (the
+      // oracle's batch derivation is empty too)
+      val latest = graft.sources.ChunkStore.readLatest(s, store).getOrElse {
+        import s.implicits._
+        s.emptyDataset[graft.Chunk].toDF()
+      }
+      latest.select(col("url"),
+          col("chunk_index").cast("long").as("chunk_index"),
+          col("total_chunks").cast("long").as("total_chunks"),
+          col("section"), col("chunk_id"), col("content"))
+        .orderBy("url", "chunk_index")
+        .localCheckpoint(true)
+    }
+  }
+
+  /** Event cap for the event parity rows: like the store rows, their
+    * evidence is in micro-batches crossed and watermark advances
+    * survived, not corpus size. */
   val AggParityEvents = 20000L
+
+  /** How an event row is staged for replay: its [[StageCache]] key, the
+    * staged dirs it streams (in replay order), and the build that
+    * writes them from the capped events. */
+  private[graft] final case class Plan(key: String, dirs: Seq[String],
+      build: (DataFrame, java.nio.file.Path) => Unit)
+
+  /** One event parity row: how it is staged, whether its state lives in
+    * RocksDB, the streaming query, and the batch read-back of what the
+    * query emitted. */
+  private[graft] final case class EventRow(plan: Plan, rocksdb: Boolean,
+      query: DataFrame => DataFrame, readBack: DataFrame => DataFrame)
+
+  /** The range plans share ONE staging per corpus ([[stageRanges]]):
+    * the four time-range slices of the capped events, then each plan's
+    * sentinel files. */
+  private def rangePlan(sentinels: String*): Plan =
+    Plan("events", "in0" +: sentinels, stageRanges)
+
+  /** No sentinels. A stateless query (enrich) needs no watermark
+    * flush; inner and semi join emission is MATCH-driven (both sides
+    * replay in ts order and err_ts < click_ts puts every match in the
+    * click's own batch or earlier, so a stalled final watermark only
+    * retains state longer); the custom-state queries carry no
+    * watermark node at all. */
+  private[graft] val Slices: Plan = rangePlan()
+
+  /** Two `__sentinel__` flush files. The final watermark only advances
+    * past the last real window once MORE data arrives, and state
+    * eviction runs one trigger after that: the first file advances the
+    * watermark, the second triggers the batch that applies it. The
+    * sentinels' own window/session never closes, so they are never
+    * emitted. */
+  private[graft] val Flush: Plan = rangePlan("flush1", "flush2")
+
+  /** Three files of one click and one error sentinel each. The joins
+    * filter by event type below their watermark nodes, so they would
+    * never see a `__sentinel__` row; the outer rows' null emission rides
+    * state EVICTION, and under the lagged watermark
+    * (statefulOperator.allowMultiple) the eviction pass of sentinel
+    * batch k runs with batch k-1's watermark, so the corpus's final
+    * hour of unmatched rows needs a third batch to flush. */
+  private[graft] val Typed: Plan = rangePlan("typed1", "typed2", "typed3")
+
+  /** `repartitionByRange(4, ts)` slices in `in0` (the stamp replays them
+    * oldest first, so no real event ever falls behind the watermark),
+    * then every range plan's sentinel files: one row per sentinel type
+    * at 48 h past the corpus, user and event id -1. */
+  private def stageRanges(events: DataFrame,
+      base: java.nio.file.Path): Unit = {
+    import events.sparkSession.implicits._
+    events.repartitionByRange(4, col("ts")).write.parquet(s"$base/in0")
+    val future = new java.sql.Timestamp(
+      tsBounds(events)._2 + 48L * 3600 * 1000)
+    val sentinels = Flush.dirs.tail.map(_ -> Seq("__sentinel__")) ++
+      Typed.dirs.tail.map(_ -> Seq("click", "error"))
+    sentinels.foreach { case (d, types) =>
+      types.map(t => (-1L, future, -1L, t, 0.0)).toDF(events.columns: _*)
+        .coalesce(1).write.parquet(s"$base/$d")
+    }
+    Replay.stamp(("in0" +: sentinels.map(_._1)).map(d => s"$base/$d"): _*)
+  }
+
+  /** The capped events every event row replays. */
+  private def capped(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.events(s, dir).filter(col("event_id") < AggParityEvents)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** (first, last) event time in ms; (0, 0) when there are no events. */
+  private def tsBounds(events: DataFrame): (Long, Long) = {
+    val b = events.agg(min(col("ts")), max(col("ts"))).head()
+    if (b.isNullAt(0)) (0L, 0L)
+    else (b.getTimestamp(0).getTime, b.getTimestamp(1).getTime)
+  }
+
+  /** Each event's time quartile (0..3) over [lo, hi]. */
+  private def quartile(lo: Long, hi: Long): Column =
+    least(lit(3), floor((unix_millis(col("ts")) - lit(lo)) * 4.0 /
+      lit((hi - lo + 1).toDouble))).cast("int")
+
+  /** The one runner of the event rows: the row's staged dirs stream one
+    * file per trigger through its query into an append parquet sink in
+    * a protocol session; the pinned read-back of the sink is the
+    * result. On an empty corpus the result is the read-back of an empty
+    * frame of the query's own output schema. */
+  private[graft] def replayEvents(s: SparkSession, dir: String,
+      row: EventRow): DataFrame = {
+    val events = capped(s, dir)
+    if (events.take(1).isEmpty)
+      return row.readBack(s.createDataFrame(
+        s.sparkContext.emptyRDD[Row], row.query(events).schema))
+    Replay.staged(s"replay_${row.plan.key}_${StageCache.dirKey(dir)}")(
+        row.plan.build(events, _)) { (in, work) =>
+      val stream = Replay.read(protocolSession(s, row.rocksdb), in,
+        row.plan.dirs)
+      val q = row.query(stream).writeStream.format("parquet")
+        .option("path", s"$work/out")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      if (row.rocksdb) requireRocksdbState(new java.io.File(s"$work/ckpt"))
+      row.readBack(s.read.parquet(s"$work/out")).localCheckpoint(true)
+    }
+  }
+
+  /** Self-pin of the RocksDB rows: the checkpoint must hold RocksDB
+    * snapshot artifacts (NN.zip / NN.changelog; the default provider
+    * writes NN.delta) — a dropped conf would silently fall back and
+    * still "pass". */
+  private def requireRocksdbState(ckpt: java.io.File): Unit = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
+      else Seq(f)
+    val names = files(new java.io.File(ckpt, "state")).map(_.getName)
+    require(names.exists(n => n.endsWith(".zip") ||
+        n.endsWith(".changelog")) && !names.exists(_.endsWith(".delta")),
+      s"RocksDB state artifacts missing — provider fell back: " +
+        names.take(10).mkString(","))
+  }
+
+  private def readWindows(emitted: DataFrame): DataFrame =
+    emitted.select(unix_micros(col("window_start")).as("window_start_us"),
+        col("event_type"), col("n"),
+        round(col("total_value"), 2).as("total_value"))
+      .orderBy("window_start_us", "event_type")
 
   /** Windowed-aggregation parity as an ORACLE row: [[windowedCounts]]
     * (5-minute tumbling windows, 10-minute watermark, append mode) run
     * as a real multi-micro-batch streaming query over time-range-split
     * event files, hash-matched against the plain batch aggregation in
-    * DuckDB. Time-ordered replay (repartitionByRange on ts + ascending
-    * file mtimes) keeps every event inside the watermark — so the
-    * emitted set must equal the batch result EXACTLY; any state lost or
-    * double-counted across the 4 micro-batch merges, any window closed
-    * early or dropped late, is a hash mismatch. */
+    * DuckDB. Time-ordered replay keeps every event inside the watermark
+    * — so the emitted set must equal the batch result EXACTLY; any state
+    * lost or double-counted across the micro-batch merges, any window
+    * closed early or dropped late, is a hash mismatch. */
   def streamWindowParity(s: SparkSession, dir: String): DataFrame =
-    aggParityRun(s, dir, session = false)
+    replayEvents(s, dir,
+      EventRow(Flush, rocksdb = false, windowedCounts, readWindows))
+
+  /** [[streamWindowParity]] on the RocksDB state store — identical
+    * query, identical staged replay, identical ORACLE (the two rows
+    * share one DuckDB derivation): state-backend choice must be
+    * invisible to results. RocksDB is the backend a 100 TB deployment
+    * runs (state on executor-local disk, not heap); the run REQUIREs
+    * RocksDB snapshot artifacts in the checkpoint so a silent fallback
+    * to the default provider can never pass as parity. */
+  def streamRocksdbParity(s: SparkSession, dir: String): DataFrame =
+    replayEvents(s, dir,
+      EventRow(Flush, rocksdb = true, windowedCounts, readWindows))
 
   /** Session-window parity as an ORACLE row: [[sessionWindows]]
     * (30-minute gap sessions, per user, 10-minute watermark) streamed
@@ -371,16 +559,13 @@ object EventStream {
     * Sessions spanning micro-batch boundaries must merge across state,
     * and close only when the watermark passes their end. */
   def streamSessionParity(s: SparkSession, dir: String): DataFrame =
-    aggParityRun(s, dir, session = true)
+    replayEvents(s, dir, EventRow(Flush, rocksdb = false, sessionWindows(_),
+      _.select(unix_micros(col("session_start")).as("session_start_us"),
+          unix_micros(col("session_end")).as("session_end_us"),
+          col("user_id"), col("n_events"),
+          round(col("total_value"), 2).as("total_value"))
+        .orderBy("user_id", "session_start_us")))
 
-  /** Shared protocol for the two aggregation-parity rows. The final
-    * watermark only advances past the last real window once MORE data
-    * arrives, and state eviction runs one trigger after that — so two
-    * sentinel files (same far-future timestamp, 48 h past the corpus)
-    * are staged after the real ranges: the first advances the
-    * watermark, the second triggers the batch that applies it. The
-    * sentinels' own window/session never closes, so they are never
-    * emitted — the oracle is pure batch SQL over the real events. */
   /** Stream-static enrichment parity as an ORACLE row: the most common
     * streaming pattern of all — each micro-batch left-outer joins a
     * BROADCAST static dimension (customer × nation, with every 3rd
@@ -391,223 +576,34 @@ object EventStream {
     * unbounded streams for free. The DuckDB oracle is the plain batch
     * left join; a dropped unmatched row, a duplicated match across the
     * micro-batch boundary, or a stale dim snapshot is a hash mismatch.
-    * Replays the 4 range slices WITHOUT the sentinel files — a
-    * stateless query needs no watermark flush, so the two sentinel
-    * trigger rounds would be pure overhead. */
+    * event_id rides along purely as the ORDER BY tie-breaker: the
+    * (ts_us, user_id, event_type) prefix is tie-free at today's SFs
+    * but not guaranteed unique. */
   def streamEnrichParity(s: SparkSession, dir: String): DataFrame = {
-    // event_id rides along purely as the ORDER BY tie-breaker: the
-    // (ts_us, user_id, event_type) prefix is tie-free at today's SFs
-    // but not guaranteed unique, and a tie at a larger corpus would
-    // make Spark-vs-DuckDB row order nondeterministic (r15 ADVICE)
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("ts_us", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("nation", StringType),
-          StructField("segment", StringType))))
-    val (inBase, cached) = stageReplay(s, real,
-      s"replay_enrich_${StageCache.dirKey(dir)}", nSentinels = 0)
     // materialize the dim once: the stream re-plans (and re-broadcasts)
     // the static side EVERY micro-batch, so without this each trigger
     // re-runs the customer×nation join from the parquet scans
-    val dim = graft.Tables.customer(s, dir)
+    lazy val dim = graft.Tables.customer(s, dir)
       .filter(col("c_custkey") % 3 =!= 0)
       .join(graft.Tables.nation(s, dir),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"), col("c_mktsegment"))
       .localCheckpoint(true)
-    val work = java.nio.file.Files.createTempDirectory("enrichwork")
-    val outDir = work.resolve("out").toString
-    val sess = protocolSession(s)
-    val stream = readStaged(sess, inBase, withEventId = true)
-    val joined = stream
-      .join(broadcast(dim), col("user_id") === col("c_custkey"),
-        "left_outer")
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value"),
-        coalesce(col("n_name"), lit("unknown")).as("nation"),
-        coalesce(col("c_mktsegment"), lit("unknown")).as("segment"))
-    val q = joined.writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val result = s.read.parquet(outDir)
-      .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("user_id"),
-        col("event_type"), round(col("value"), 2).as("value"),
-        col("nation"), col("segment"))
-      .orderBy("ts_us", "user_id", "event_type", "event_id")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
+    replayEvents(s, dir, EventRow(Slices, rocksdb = false,
+      _.join(broadcast(dim), col("user_id") === col("c_custkey"),
+          "left_outer")
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"),
+          coalesce(col("n_name"), lit("unknown")).as("nation"),
+          coalesce(col("c_mktsegment"), lit("unknown")).as("segment")),
+      _.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+          col("user_id"), col("event_type"),
+          round(col("value"), 2).as("value"), col("nation"),
+          col("segment"))
+        .orderBy("ts_us", "user_id", "event_type", "event_id")))
   }
 
-  /** [[streamWindowParity]] on the RocksDB state store — identical
-    * query, identical staged replay, identical ORACLE (the two rows
-    * share one DuckDB derivation): state-backend choice must be
-    * invisible to results. RocksDB is the backend a 100 TB deployment
-    * runs (state on executor-local disk, not heap); the run REQUIREs
-    * RocksDB snapshot artifacts in the checkpoint so a silent fallback
-    * to the default provider can never pass as parity. */
-  def streamRocksdbParity(s: SparkSession, dir: String): DataFrame =
-    aggParityRun(s, dir, session = false, rocksdb = true)
-
-  private def aggParityRun(s: SparkSession, dir: String,
-      session: Boolean, rocksdb: Boolean = false): DataFrame = {
-    import s.implicits._
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-    val emptySchema =
-      if (session) StructType(Seq(
-        StructField("session_start_us", LongType),
-        StructField("session_end_us", LongType),
-        StructField("user_id", LongType),
-        StructField("n_events", LongType),
-        StructField("total_value", DoubleType)))
-      else StructType(Seq(
-        StructField("window_start_us", LongType),
-        StructField("event_type", StringType),
-        StructField("n", LongType),
-        StructField("total_value", DoubleType)))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-    val (inBase, cached) = stageReplay(s, real,
-      s"replay_agg_${StageCache.dirKey(dir)}")
-    val work = java.nio.file.Files.createTempDirectory("aggwork")
-    val outDir = work.resolve("out").toString
-    val stream = readStaged(
-      protocolSession(s, rocksdb = rocksdb), inBase)
-    val agg = if (session) sessionWindows(stream) else windowedCounts(stream)
-    val q = agg.writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    if (rocksdb) {
-      // self-pin: the checkpoint must hold RocksDB snapshot artifacts
-      // (NN.zip / NN.changelog; the default provider writes NN.delta)
-      // — a dropped conf would silently fall back and still "pass"
-      val stateRoot = work.resolve("ckpt").resolve("state").toFile
-      def files(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(files)
-        else Seq(f)
-      val names = files(stateRoot).map(_.getName)
-      require(names.exists(n => n.endsWith(".zip") ||
-          n.endsWith(".changelog")) && !names.exists(_.endsWith(".delta")),
-        s"RocksDB state artifacts missing — provider fell back: " +
-          names.take(10).mkString(","))
-    }
-    val emitted = s.read.parquet(outDir)
-    val result =
-      if (session) emitted.select(
-        unix_micros(col("session_start")).as("session_start_us"),
-        unix_micros(col("session_end")).as("session_end_us"),
-        col("user_id"), col("n_events"),
-        round(col("total_value"), 2).as("total_value"))
-        .orderBy("user_id", "session_start_us")
-      else emitted.select(
-        unix_micros(col("window_start")).as("window_start_us"),
-        col("event_type"), col("n"),
-        round(col("total_value"), 2).as("total_value"))
-        .orderBy("window_start_us", "event_type")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
-  }
-
-  /** Stages a chronological event replay for the parity rows: 4
-    * time-range slices with ascending file mtimes (the source replays
-    * oldest first, so no real event ever falls behind the watermark),
-    * then two sentinel files (same far-future timestamp, user -1) that
-    * flush the final watermark. Session-cached under `cacheKey` when
-    * the bench's [[StageCache]] is active (the staged replay is a pure
-    * function of the corpus — cached files keep their mtimes, so
-    * replay order is unchanged); returns (staging root, cached). */
-  /** Stamp a staged dir's part files with explicit, all-in-the-past,
-    * name-ordered ascending mtimes: the file source replays oldest
-    * mtime first, so replay order is fully deterministic — including
-    * WITHIN a multi-part dir. The single stamping implementation for
-    * every replay stager (three copies drifted before r15 hoisted it:
-    * the single-part stagers had silently dropped the name sort). */
-  private def stampParts(d: String, t: Long): Unit =
-    // listFiles() returns null (not empty) for a missing/unreadable
-    // dir — fail with the path, not an anonymous NPE (r15 ADVICE)
-    Option(new java.io.File(d).listFiles())
-      .getOrElse(sys.error(s"staged replay dir missing or unreadable: $d"))
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      .zipWithIndex
-      .foreach { case (f, i) => f.setLastModified(t + i * 60000L) }
-
-  private def stageReplay(s: SparkSession, real: DataFrame,
-      cacheKey: String, nSentinels: Int = 2,
-      sentinelTypes: Seq[String] = Seq("__sentinel__")):
-      (java.nio.file.Path, Boolean) = {
-    import s.implicits._
-    StageCache.resolve(cacheKey) { base =>
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
-      real.repartitionByRange(4, col("ts")).write
-        .mode("overwrite").parquet(s"$base/in0")
-      stampParts(s"$base/in0", t0)
-      // sentinel count is per-consumer: stateless rows (enrich) need
-      // no watermark flush and take 0; the stateful rows take the
-      // standard 2 (advance, then apply); the OUTER join takes 3 —
-      // its null emission rides state EVICTION, and under the lagged
-      // watermark (statefulOperator.allowMultiple) the eviction pass
-      // of sentinel batch k runs with batch k-1's watermark, so the
-      // corpus's final hour of unmatched rows needs one extra batch
-      // under the far-future watermark to flush
-      if (nSentinels > 0) {
-        val maxTs = real.agg(max(col("ts"))).head().getTimestamp(0)
-        val future =
-          new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)
-        // sentinelTypes: consumers that FILTER BY event_type before
-        // their watermark node (the joins) never see a '__sentinel__'
-        // row, so their watermark would stall at the last real event —
-        // they stage one sentinel row per REAL type instead (id/user
-        // -1, filtered out of the result after the join)
-        val sentinelBase = sentinelTypes.map(t => (future, -1L, t, 0.0))
-          .toDF("ts", "user_id", "event_type", "value")
-        // mirror any extra caller columns (e.g. event_id) so every
-        // staged file carries one schema
-        val sentinel = real.columns.foldLeft(sentinelBase) { (df, c) =>
-          if (df.columns.contains(c)) df else df.withColumn(c, lit(-1L)) }
-        (1 to nSentinels).foreach { i =>
-          sentinel.coalesce(1).write.mode("overwrite")
-            .parquet(s"$base/in$i")
-          stampParts(s"$base/in$i", t0 + (9 + i) * 60000L)
-        }
-      }
-    }
-  }
-
-  private def readStaged(s: SparkSession,
-      base: java.nio.file.Path, withEventId: Boolean = false): DataFrame = {
-    val core = Seq(
-      StructField("ts", TimestampType), StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType))
-    val fields =
-      if (withEventId) StructField("event_id", LongType) +: core else core
-    s.readStream
-      .schema(StructType(fields))
-      .option("maxFilesPerTrigger", 1).parquet(s"$base/in*")
-  }
-
-  /** Child session for the stateful parity rows' streaming queries.
+  /** Child session for the event rows' streaming queries.
     * The state-store instance count per stateful operator is pinned to
     * shuffle.partitions at query start, and 32 instances × checkpoint
     * IO × micro-batch (× two sides for the interval join) dominated
@@ -620,7 +616,7 @@ object EventStream {
     * counts; this is a fixture-size-to-partition-count match, not a
     * semantics switch. */
   private def protocolSession(s: SparkSession,
-      rocksdb: Boolean = false): SparkSession = {
+      rocksdb: Boolean): SparkSession = {
     val child = s.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
     // RocksDB state store: the 100 TB state backend (state spills to
@@ -633,48 +629,17 @@ object EventStream {
       child.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
-    // The staged-replay stateful rows opt out of no-data micro-batches:
-    // the two-sentinel protocol already provides the flush a no-data
-    // batch exists for (the first sentinel DATA file advances the
-    // watermark, the second triggers the batch that applies it — see
-    // aggParityRun), the join's inner join emits matches only on data
-    // batches, and the custom-state row uses NoTimeout — so the extra
+    // The event rows opt out of no-data micro-batches: the flush
+    // sentinels already provide the flush a no-data batch exists for
+    // (see [[Flush]]), the inner joins emit matches only on data
+    // batches, and the custom-state rows use NoTimeout — so the extra
     // empty batch after every watermark advance (each paying
     // state-store instance commits across all partitions, x2 sides for
     // the join) buys nothing for any of them. Measured medians in
     // SCALEPROBE.md; oracle rows re-matched at sf0.01.
     child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    // dev-only instrumentation (-Dgraft.stream.progress=true): dump
-    // every micro-batch's durationMs/state metrics to stderr so the
-    // per-trigger cost profile of a parity row is measurable (guide
-    // §1: decide whether time goes to addBatch, walCommit, state
-    // commit, or query planning before touching anything). Registered
-    // ONCE per underlying StreamingQueryManager — child sessions share
-    // the manager, so a per-makeChild registration accumulated
-    // duplicate listeners and printed each progress line once per
-    // prior row (r20 ADVICE).
-    if (sys.props.get("graft.stream.progress").contains("true") &&
-        progressListenerManagers.putIfAbsent(child.streams,
-          java.lang.Boolean.TRUE) == null)
-      child.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          import org.apache.spark.sql.streaming.StreamingQueryListener._
-          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: QueryProgressEvent): Unit =
-            System.err.println("[stream-progress] " + e.progress.json)
-          override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-            ()
-        })
     child
   }
-
-  /** Managers that already carry the dev progress listener (see
-    * [[protocolSession]] — dedup across child sessions sharing one
-    * StreamingQueryManager). */
-  private val progressListenerManagers = new java.util.concurrent
-    .ConcurrentHashMap[
-      org.apache.spark.sql.streaming.StreamingQueryManager,
-      java.lang.Boolean]()
 
   /** Stream-stream join parity as an ORACLE row: [[clickErrorJoin]]
     * (watermarked interval self-join — each click joins the same
@@ -689,14 +654,14 @@ object EventStream {
     * early, a match emitted twice across the micro-batch boundary, or
     * a boundary condition flipped (>= vs >) is a hash mismatch. */
   def streamJoinParity(s: SparkSession, dir: String): DataFrame =
-    joinParityRun(s, dir, "inner")
+    joinParity(s, dir, "inner")
 
   /** Stream-stream LEFT OUTER interval join as an ORACLE row — the
     * semantics the inner row cannot pin: an unmatched click emits
     * exactly once, with nulls, and only AFTER the watermark has passed
     * its join window (emitting it earlier would be wrong if a matching
     * error could still arrive; never emitting it loses the row). The
-    * two sentinel data files push the final watermark 48 h past the
+    * typed sentinel files push the final watermark 48 h past the
     * corpus, so every held click flushes — matched rows with their
     * matches, unmatched ones with null err columns — and the DuckDB
     * oracle is the plain batch LEFT JOIN: a null row emitted early
@@ -707,7 +672,7 @@ object EventStream {
     * evict at the watermark minus the interval bound; the outer
     * emission rides the same eviction pass, costing nothing extra. */
   def streamOuterJoinParity(s: SparkSession, dir: String): DataFrame =
-    joinParityRun(s, dir, "left_outer")
+    joinParity(s, dir, "left_outer")
 
   /** Stream-stream FULL OUTER interval join as an ORACLE row — the one
     * join mode the family still lacked: BOTH sides' unmatched rows must
@@ -716,13 +681,10 @@ object EventStream {
     * join window; an unmatched error when it passes err_ts + 1 h, the
     * latest click that could still reference it). The DuckDB oracle is
     * the plain batch FULL JOIN with null ordering pinned on both
-    * engines. Reuses the LEFT OUTER machinery end-to-end: typed
-    * click+error sentinels (the event-type filters sit below the
-    * watermark nodes) and the 3-sentinel replay for the lagged
-    * eviction pass. Same bounded-state contract at 100 TB: both sides
-    * evict at the watermark minus the interval bound. */
+    * engines. Same bounded-state contract at 100 TB: both sides evict
+    * at the watermark minus the interval bound. */
   def streamFullOuterJoinParity(s: SparkSession, dir: String): DataFrame =
-    joinParityRun(s, dir, "full_outer")
+    joinParity(s, dir, "full_outer")
 
   /** Stream-stream LEFT SEMI interval join as an ORACLE row — the last
     * join mode Spark's symmetric hash join supports that the family
@@ -733,12 +695,10 @@ object EventStream {
     * join must remember per-left-row matched state across micro-batches
     * — a re-emission on a second match in a later batch, or a miss when
     * the first match arrives after the click, is a hash mismatch
-    * against DuckDB's EXISTS. Shares the outer rows' staged replay
-    * (identical corpus, typed sentinels) so the bench stages it once;
-    * like the other modes, state is watermark-evicted on both sides at
-    * 100 TB. */
+    * against DuckDB's EXISTS. Like the other modes, state is
+    * watermark-evicted on both sides at 100 TB. */
   def streamSemiJoinParity(s: SparkSession, dir: String): DataFrame =
-    joinParityRun(s, dir, "left_semi")
+    joinParity(s, dir, "left_semi")
 
   /** Stream-stream RIGHT OUTER interval join as an ORACLE row —
     * completes the join-mode family (inner, left/right/full outer,
@@ -746,111 +706,51 @@ object EventStream {
     * click side when the watermark passes the last click that could
     * still reference it (err_ts + 1 h), while matched rows emit as the
     * inner join does. Mirror of the LEFT OUTER row, exercising the
-    * opposite side's state-eviction emission; same staged replay, same
-    * bounded-state contract. Oracle: DuckDB's batch RIGHT JOIN with
-    * NULLS FIRST pinned on both engines. */
+    * opposite side's state-eviction emission; same bounded-state
+    * contract. Oracle: DuckDB's batch RIGHT JOIN with NULLS FIRST
+    * pinned on both engines. */
   def streamRightOuterJoinParity(s: SparkSession, dir: String): DataFrame =
-    joinParityRun(s, dir, "right_outer")
+    joinParity(s, dir, "right_outer")
 
-  private def joinParityRun(s: SparkSession, dir: String,
+  /** The five join rows. NO sentinel filter inside the streaming query:
+    * a filter on a left-side column is pushed below the click branch's
+    * EventTimeWatermark node (observed in the physical plan), which
+    * would remove the typed sentinel rows BEFORE the watermark they
+    * exist to advance. The sentinel rows never surface on their own
+    * either — their eviction bound (future + 1 h) lies past the final
+    * watermark — so they are dropped on the read-back side, belt and
+    * braces. Inner/left rows always carry the click-side id, so
+    * click_id != -1 suffices; a FULL/RIGHT OUTER unmatched-error row has
+    * a NULL click_id (which != -1 would silently drop), so there the
+    * coalesced user column is the discriminator: sentinel rows on
+    * EITHER side carry user -1, real events never do. Ordering:
+    * click_id is null for unmatched errors and err_ts_us for unmatched
+    * clicks — NULLS FIRST explicitly on both engines (Spark defaults
+    * nulls-first on ASC, DuckDB nulls-LAST), with user_id + err_ts_us
+    * completing a deterministic key for the null-click rows. */
+  private def joinParity(s: SparkSession, dir: String,
       joinType: String): DataFrame = {
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("ts"), col("user_id"), col("event_type"), col("value"),
-        col("event_id"))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(
-          if (joinType == "left_semi") Seq(
-            StructField("click_id", LongType),
-            StructField("user_id", LongType),
-            StructField("click_ts_us", LongType))
-          else Seq(
-            StructField("click_id", LongType),
-            StructField("user_id", LongType),
-            StructField("click_ts_us", LongType),
-            StructField("err_ts_us", LongType),
-            StructField("err_value", DoubleType))))
-    // Sentinel count is per-JOIN-MODE (r21, guide §1.2 — the per-batch
-    // fixed cost of these protocol rows IS the row, so batches that
-    // buy no evidence are pure overhead):
-    //   - inner and left_semi emission is MATCH-driven: a click
-    //     surfaces when its match arrives (both sides replay in ts
-    //     order, and err_ts < click_ts puts every match in the click's
-    //     own batch or earlier), never on state eviction — so the
-    //     final-watermark flush batches contribute NOTHING to the
-    //     output, exactly like the stateless enrich row, and the two
-    //     modes take 0 sentinels (4 micro-batches, not 6/7). A stalled
-    //     final watermark only RETAINS state longer — it can never
-    //     drop an emission. Oracle re-proven (same hash) at both gate
-    //     SFs after the change.
-    //   - the outer rows' null emission DOES ride state eviction, and
-    //     under the lagged multi-stateful-operator watermark the
-    //     eviction pass of sentinel batch k runs with batch k-1's
-    //     watermark — they keep the 3 typed sentinels.
-    val (inBase, cached) =
-      if (joinType == "inner" || joinType == "left_semi")
-        stageReplay(s, real, s"replay_join_${StageCache.dirKey(dir)}",
-          nSentinels = 0)
-      else stageReplay(s, real,
-        s"replay_ojoin_${StageCache.dirKey(dir)}", nSentinels = 3,
-        sentinelTypes = Seq("click", "error"))
-    val work = java.nio.file.Files.createTempDirectory("joinwork")
-    val outDir = work.resolve("out").toString
-    val stream = protocolSession(s).readStream
-      .schema(StructType(Seq(
-        StructField("ts", TimestampType), StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType),
-        StructField("event_id", LongType))))
-      .option("maxFilesPerTrigger", 1).parquet(s"$inBase/in*")
-    // NO sentinel filter inside the streaming query: a filter on a
-    // left-side column is pushed below the click branch's
-    // EventTimeWatermark node (observed in the physical plan), which
-    // silently removes the typed sentinel rows BEFORE the watermark
-    // they exist to advance. The sentinel rows also never surface on
-    // their own — their eviction bound (future + 1 h) lies past the
-    // final watermark — so they are dropped on the batch read-back
-    // side below, belt and braces.
-    val q = clickErrorJoin(stream, joinType).writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    // Sentinel drop: inner/left rows always carry the click-side id, so
-    // click_id != -1 suffices. A FULL OUTER unmatched-error row has a
-    // NULL click_id (which != -1 would silently drop) — there the
-    // coalesced user column is the discriminator: sentinel rows on
-    // EITHER side carry user -1, real events never do.
-    // Ordering: click_id is null for unmatched errors and err_ts_us for
-    // unmatched clicks — NULLS FIRST explicitly on both engines (Spark
-    // defaults nulls-first on ASC, DuckDB nulls-LAST), with user_id +
-    // err_ts_us completing a deterministic key for the null-click rows.
-    val raw = s.read.parquet(outDir)
-    val result =
-      if (joinType == "left_semi")
-        raw.filter(col("click_id") =!= -1L)
-          .select(col("click_id"), col("user_id"),
-            unix_micros(col("click_ts")).as("click_ts_us"))
-          .orderBy("click_id")
-      else if (joinType == "full_outer" || joinType == "right_outer")
-        raw.filter(col("user_id") =!= -1L)
-          .select(col("click_id"), col("user_id"),
-            unix_micros(col("click_ts")).as("click_ts_us"),
-            unix_micros(col("err_ts")).as("err_ts_us"), col("err_value"))
-          .orderBy(col("click_id").asc_nulls_first, col("user_id"),
-            col("err_ts_us").asc_nulls_first, col("err_value"))
-      else
-        raw.filter(col("click_id") =!= -1L)
-          .select(col("click_id"), col("user_id"),
-            unix_micros(col("click_ts")).as("click_ts_us"),
-            unix_micros(col("err_ts")).as("err_ts_us"), col("err_value"))
-          .orderBy("click_id", "err_ts_us")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
+    val errCols = Seq(unix_micros(col("err_ts")).as("err_ts_us"),
+      col("err_value"))
+    val readBack: DataFrame => DataFrame = joinType match {
+      case "left_semi" => _.filter(col("click_id") =!= -1L)
+        .select(col("click_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_ts_us"))
+        .orderBy("click_id")
+      case "full_outer" | "right_outer" => _.filter(col("user_id") =!= -1L)
+        .select(Seq(col("click_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_ts_us")) ++ errCols: _*)
+        .orderBy(col("click_id").asc_nulls_first, col("user_id"),
+          col("err_ts_us").asc_nulls_first, col("err_value"))
+      case _ => _.filter(col("click_id") =!= -1L)
+        .select(Seq(col("click_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_ts_us")) ++ errCols: _*)
+        .orderBy("click_id", "err_ts_us")
+    }
+    val plan =
+      if (joinType == "inner" || joinType == "left_semi") Slices else Typed
+    replayEvents(s, dir, EventRow(plan, rocksdb = false,
+      clickErrorJoin(_, joinType), readBack))
   }
 
   /** Custom-state parity as an ORACLE row: [[sessionStates]]
@@ -860,9 +760,9 @@ object EventStream {
     * (the one with the maximal n_events — strictly increasing, so
     * unambiguous) must equal the plain batch aggregation: state
     * carried across every micro-batch with nothing lost or double
-    * counted. The sentinel user's updates are excluded. */
+    * counted. */
   def streamStateParity(s: SparkSession, dir: String): DataFrame =
-    statefulParityRun(s, dir, tws = false)
+    runningTotalsParity(s, dir, tws = false)
 
   /** The SAME running-totals contract on `transformWithState` — Spark
     * 4's arbitrary-state successor to flatMapGroupsWithState
@@ -876,54 +776,18 @@ object EventStream {
     * provider refusing (or silently falling back — the operator
     * itself throws on any other provider) fails the row loudly. */
   def streamTwsParity(s: SparkSession, dir: String): DataFrame =
-    statefulParityRun(s, dir, tws = true)
+    runningTotalsParity(s, dir, tws = true)
 
-  private def statefulParityRun(s: SparkSession, dir: String,
-      tws: Boolean): DataFrame = {
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("ts"), col("user_id"), col("event_type"), col("value"))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("n_events", LongType),
-          StructField("total_value", DoubleType))))
-    // 0 sentinels (r21): neither flatMapGroupsWithState(NoTimeout) nor
-    // transformWithState(TimeMode.None) carries a WATERMARK node —
-    // emission is one cumulative update per touched key per DATA batch,
-    // and the read-back takes the max per user — so the agg rows' two
-    // far-future sentinel batches processed one user(-1) row each and
-    // emitted nothing that survives the filter: two pure-overhead
-    // triggers (~0.5 s each) per invocation. Own staging key (the agg
-    // rows still need their 2-sentinel replay for window close).
-    val (inBase, cached) = stageReplay(s, real,
-      s"replay_state_${StageCache.dirKey(dir)}", nSentinels = 0)
-    val work = java.nio.file.Files.createTempDirectory("statework")
-    val outDir = work.resolve("out").toString
-    val sess = protocolSession(s, rocksdb = tws)
-    val updates =
-      if (tws) twsRunningTotals(sess, readStaged(sess, inBase))
-      else sessionStates(sess, readStaged(sess, inBase))
-    val q = updates.toDF()
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val result = s.read.parquet(outDir)
-      .filter(col("user_id") =!= -1L)
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"),
-        round(max_by(col("total_value"), col("n_events")), 2)
-          .as("total_value"))
-      .orderBy("user_id")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
-  }
+  private def runningTotalsParity(s: SparkSession, dir: String,
+      tws: Boolean): DataFrame =
+    replayEvents(s, dir, EventRow(Slices, rocksdb = tws,
+      stream => (if (tws) twsRunningTotals _ else sessionStates _)(
+        stream.sparkSession, stream).toDF(),
+      _.groupBy(col("user_id"))
+        .agg(max(col("n_events")).as("n_events"),
+          round(max_by(col("total_value"), col("n_events")), 2)
+            .as("total_value"))
+        .orderBy("user_id")))
 
   /** Exactly-once ingestion parity as an ORACLE row: the at-least-once
     * world's event dedup. The staged replay deterministically plants
@@ -931,16 +795,17 @@ object EventStream {
     * batch duplicates (every `event_id % 101 == 0` row appears twice
     * in its own slice) and cross-batch redeliveries (every
     * `event_id % 5 == 0` row of slice k is delivered AGAIN in slice
-    * k+1) — then streams the 4 slices one file per micro-batch through
-    * `withWatermark(ts, delay).dropDuplicatesWithinWatermark
-    * ("event_id")`, with `delay` = one slice's time width + 1 h margin
-    * so every redelivery lands inside the dedup guarantee window at
-    * ANY corpus scale (watermark after batch k-1 sits a full margin
-    * below slice k-1's oldest event — nothing redeliverable is evicted
-    * or late). The DuckDB oracle is the plain batch DISTINCT of the
-    * real events: a duplicate leaking through (state lost across a
-    * micro-batch boundary, or evicted before the redelivery landed) or
-    * a first occurrence suppressed is a hash mismatch.
+    * k+1) — then streams the 4 time-quartile slices one file per
+    * micro-batch through `withWatermark(ts, delay)
+    * .dropDuplicatesWithinWatermark("event_id")`, with `delay` = one
+    * slice's time width + 1 h margin so every redelivery lands inside
+    * the dedup guarantee window at ANY corpus scale (watermark after
+    * batch k-1 sits a full margin below slice k-1's oldest event —
+    * nothing redeliverable is evicted or late). The DuckDB oracle is
+    * the plain batch DISTINCT of the real events: a duplicate leaking
+    * through (state lost across a micro-batch boundary, or evicted
+    * before the redelivery landed) or a first occurrence suppressed is
+    * a hash mismatch.
     *
     * Scale: dedup state is keyed by event_id and evicted at
     * `ts + delay` as the watermark passes — bounded by the redelivery
@@ -948,79 +813,40 @@ object EventStream {
     * makes exactly-once ingestion viable at 100 TB (state never holds
     * the corpus, only the watermark window). */
   def streamDedupParity(s: SparkSession, dir: String): DataFrame = {
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("ts"), col("event_id"), col("user_id"),
-        col("event_type"), col("value"))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("ts_us", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType))))
-    val b = real.agg(min(col("ts")), max(col("ts"))).head()
-    val lo = b.getTimestamp(0).getTime
-    val span = math.max(1L, b.getTimestamp(1).getTime - lo + 1)
-    // delay covers one replay slice plus margin: watermark after batch
-    // k-1 = max(k-1) - delay <= min(k-1) - 1h, so slice k-1's state is
-    // fully alive and none of its redeliveries arrive late
-    val delayMs = span / 4 + 3600 * 1000L
-    val (inBase, cached) = StageCache.resolve(
-      s"replay_dedup_${StageCache.dirKey(dir)}") { base =>
-      val sliced = real.withColumn("slice",
-        least(lit(3), floor((unix_millis(col("ts")) - lit(lo)) * 4.0 /
-          lit(span.toDouble))).cast("int"))
+    lazy val (lo, hi) = tsBounds(capped(s, dir))
+    val dirs = (0 to 3).map(k => s"in$k")
+    val plan = Plan("dedup", dirs, { (events, base) =>
+      val sliced = events.withColumn("slice", quartile(lo, hi))
         .localCheckpoint(true)
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
+      def slice(k: Int) = sliced.filter(col("slice") === k).drop("slice")
       (0 to 3).foreach { k =>
-        val slice = sliced.filter(col("slice") === k).drop("slice")
-        val withinDups = slice.filter(col("event_id") % 101 === 0)
+        val withinDups = slice(k).filter(col("event_id") % 101 === 0)
         val redelivered =
-          if (k == 0) slice.limit(0)
-          else sliced.filter(col("slice") === k - 1).drop("slice")
-            .filter(col("event_id") % 5 === 0)
-        slice.unionAll(withinDups).unionAll(redelivered)
-          .coalesce(1).write.mode("overwrite").parquet(s"$base/in$k")
-        stampParts(s"$base/in$k", t0 + k * 60000L)
+          if (k == 0) slice(k).limit(0)
+          else slice(k - 1).filter(col("event_id") % 5 === 0)
+        slice(k).unionAll(withinDups).unionAll(redelivered)
+          .coalesce(1).write.parquet(s"$base/in$k")
       }
-    }
-    val work = java.nio.file.Files.createTempDirectory("dedupwork")
-    val outDir = work.resolve("out").toString
-    val stream = protocolSession(s).readStream
-      .schema(StructType(Seq(
-        StructField("ts", TimestampType),
-        StructField("event_id", LongType),
-        StructField("user_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1).parquet(s"$inBase/in*")
-    val q = stream.withWatermark("ts", s"$delayMs milliseconds")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val result = s.read.parquet(outDir)
-      .select(col("event_id"), col("user_id"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"),
-        round(col("value"), 2).as("value"))
-      .orderBy("event_id")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
+      Replay.stamp(dirs.map(d => s"$base/$d"): _*)
+    })
+    // one slice's width plus margin: watermark after batch k-1 =
+    // max(k-1) - delay <= min(k-1) - 1h, so slice k-1's state is
+    // fully alive and none of its redeliveries arrive late
+    replayEvents(s, dir, EventRow(plan, rocksdb = false,
+      dedupWithinWatermark(_,
+        s"${(hi - lo + 1) / 4 + 3600 * 1000L} milliseconds"),
+      _.select(col("event_id"), col("user_id"),
+          unix_micros(col("ts")).as("ts_us"), col("event_type"),
+          round(col("value"), 2).as("value"))
+        .orderBy("event_id")))
   }
 
   /** Watermark LATE-DATA semantics as an ORACLE row — the complement
     * of [[streamWindowParity]]: that row proves time-ordered replay
     * loses nothing; this one pins exactly what the watermark DROPS
-    * when data arrives out of order. The four time-range slices replay
-    * as 0, 2, 3, 1 — slice 1 is delivered LAST, two slices late — so
-    * every slice-1 row sits below even the LATE-EVENTS watermark,
+    * when data arrives out of order. The four time-quartile slices
+    * replay as 0, 2, 3, 1 — slice 1 is delivered LAST, two slices late
+    * — so every slice-1 row sits below even the LATE-EVENTS watermark,
     * which under Spark's multi-stateful-operator default
     * (`statefulOperator.allowMultiple=true`) lags the eviction
     * watermark by one micro-batch: a row is dropped against the
@@ -1036,8 +862,8 @@ object EventStream {
     * leaking into a window, or an on-time row dropped with it, is a
     * hash mismatch.
     * Two far-future sentinel data files flush slice 3's windows, as in
-    * [[aggParityRun]]; the builder REQUIRES the late construction to
-    * be decidable (slice 2 advances the watermark past slice 1) so a
+    * [[Flush]]; the builder REQUIRES the late construction to be
+    * decidable (slice 2 advances the watermark past slice 1) so a
     * pathological corpus fails loudly instead of silently mismatching.
     *
     * Scale: this is the semantics that bounds state at 100 TB — the
@@ -1045,27 +871,12 @@ object EventStream {
     * the row pins that eviction drops late stragglers deterministically
     * rather than corrupting closed aggregates. */
   def streamLateParity(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val real = graft.Tables.events(s, dir)
-      .filter(col("event_id") < AggParityEvents)
-      .select(col("ts"), col("event_type"), col("value"))
-    if (real.take(1).isEmpty)
-      return s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("window_start_us", LongType),
-          StructField("event_type", StringType),
-          StructField("n", LongType),
-          StructField("total_value", DoubleType))))
-    val (inBase, cached) = StageCache.resolve(
-      s"replay_late_${StageCache.dirKey(dir)}") { base =>
-      val b = real.agg(min(col("ts")), max(col("ts"))).head()
-      val lo = b.getTimestamp(0).getTime
-      val maxTs = b.getTimestamp(1)
-      val span = math.max(1L, maxTs.getTime - lo + 1)
-      val sliced = real.withColumn("slice",
-        least(lit(3), floor((unix_millis(col("ts")) - lit(lo)) * 4.0 /
-          lit(span.toDouble))).cast("int"))
+    val dirs = (0 to 5).map(i => s"in$i")
+    val plan = Plan("late", dirs, { (capped, base) =>
+      import s.implicits._
+      val events = capped.select("ts", "event_type", "value")
+      val (lo, hi) = tsBounds(events)
+      val sliced = events.withColumn("slice", quartile(lo, hi))
         .localCheckpoint(true)
       // decidability: by slice-1's batch, the LAGGED late-events
       // watermark is max(slice 2) - 10 min (the watermark the previous
@@ -1077,145 +888,21 @@ object EventStream {
       require(mx.contains(1) && mx.contains(2) &&
         mx(2) - 10 * 60000L > mx(1),
         s"late-parity corpus not decidable: slice maxes $mx")
-      val future = new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)
+      val future = new java.sql.Timestamp(hi + 48L * 3600 * 1000)
       val sentinel = Seq((future, "__sentinel__", 0.0))
         .toDF("ts", "event_type", "value")
       // replay order: slice 0, slice 2, slice 3, slice 1 (LATE),
       // sentinel, sentinel
-      val files: Seq[DataFrame] = Seq(0, 2, 3, 1)
+      val files = Seq(0, 2, 3, 1)
         .map(k => sliced.filter(col("slice") === k).drop("slice")) ++
         Seq(sentinel, sentinel)
-      val t0 = System.currentTimeMillis() - 3600 * 1000L
-      files.zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$base/in$i")
-        stampParts(s"$base/in$i", t0 + i * 60000L)
-      }
-    }
-    val work = java.nio.file.Files.createTempDirectory("latework")
-    val outDir = work.resolve("out").toString
-    val stream = protocolSession(s).readStream
-      .schema(StructType(Seq(
-        StructField("ts", TimestampType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1).parquet(s"$inBase/in*")
-    val q = windowedCounts(stream).writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", work.resolve("ckpt").toString)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    val result = s.read.parquet(outDir)
-      .select(unix_micros(col("window_start")).as("window_start_us"),
-        col("event_type"), col("n"),
-        round(col("total_value"), 2).as("total_value"))
-      .orderBy("window_start_us", "event_type")
-    val pinned = result.localCheckpoint(true)
-    deleteRecursively(work.toFile)
-    if (!cached) deleteRecursively(inBase.toFile)
-    pinned
+      files.zip(dirs).foreach { case (df, d) =>
+        df.coalesce(1).write.parquet(s"$base/$d") }
+      Replay.stamp(dirs.map(d => s"$base/$d"): _*)
+    })
+    replayEvents(s, dir,
+      EventRow(plan, rocksdb = false, windowedCounts, readWindows))
   }
-
-  private def parityRun(s: SparkSession, dir: String,
-      deletePhase: Boolean, resyncPhase: Boolean = false,
-      docFilter: Option[Column] = None,
-      cacheTag: String = "all"): DataFrame = {
-    def phase[T](label: String)(f: => T): T =
-      if (sys.props.contains("graft.parity.debug")) {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[parity] $label%-16s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      } else f
-    val base = java.nio.file.Files.createTempDirectory("streamparity")
-    val store = base.resolve("store").toString
-    val pages = graft.Tables.documents(s, dir)
-      .filter(docFilter.getOrElse(lit(true)))
-      .select(concat(lit("doc://"), col("doc_id")).as("url"),
-        concat(lit("# "), col("source"), lit("\n\n## "), col("lang"),
-          lit("\n\n"), col("text")).as("content"))
-    val pageSchema = StructType(Seq(
-      StructField("url", StringType), StructField("content", StringType)))
-    // batch/delete parity keep the r10 4-micro-batch contract; the
-    // resync row runs 2+2 (two syncs; per-trigger streaming overhead
-    // dominates this row, and two batches per sync already exercise
-    // cross-batch reuse). The staged page files are session-cached
-    // (pure function of the corpus slice); store/checkpoints are
-    // always fresh.
-    val nFiles = if (resyncPhase) 2 else 4
-    val (inBase, cachedIn) = StageCache.resolve(
-      s"parity_in_${cacheTag}_${nFiles}_${StageCache.dirKey(dir)}") { d =>
-      phase("stage_input") {
-        pages.repartition(nFiles).write.mode("overwrite")
-          .parquet(d.resolve("in").toString) }
-    }
-    def runIngest(ckpt: String): Unit = {
-      val stream = s.readStream.schema(pageSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(inBase.resolve("in").toString)
-      val q = ingestStream(stream, store, ckpt,
-        embedReuse = resyncPhase)
-      phase("ingest_stream") {
-        try q.processAllAvailable() finally q.stop() }
-    }
-    runIngest(base.resolve("ckpt").toString)
-    if (resyncPhase)
-      // the same pages again through a FRESH checkpoint: a fully
-      // redundant second sync (the at-least-once world's re-crawl)
-      runIngest(base.resolve("ckpt2").toString)
-    if (deletePhase) {
-      // second run: the re-crawl's 404s arrive as a tombstone stream
-      val (tombBase, cachedTomb) = StageCache.resolve(
-        s"parity_tomb_${cacheTag}_${StageCache.dirKey(dir)}") { d =>
-        graft.Tables.documents(s, dir)
-          .filter(docFilter.getOrElse(lit(true)))
-          .filter(col("doc_id") % 13 === 0)
-          .select(concat(lit("doc://"), col("doc_id")).as("url"))
-          .repartition(2)
-          .write.mode("overwrite").parquet(d.resolve("tomb").toString)
-      }
-      val tombStream = s.readStream
-        .schema(StructType(Seq(StructField("url", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(tombBase.resolve("tomb").toString)
-      val dq = deleteStream(tombStream, store,
-        base.resolve("ckpt_del").toString)
-      try dq.processAllAvailable() finally dq.stop()
-      if (!cachedTomb) deleteRecursively(tombBase.toFile)
-    }
-    // an empty corpus stages only empty files — no micro-batch ever
-    // merges, the store is never created, and the row is 0 rows (the
-    // oracle's batch derivation is empty too)
-    val result = graft.sources.ChunkStore.readLatest(s, store) match {
-      case Some(latest) => latest
-        .select(col("url"),
-          col("chunk_index").cast("long").as("chunk_index"),
-          col("total_chunks").cast("long").as("total_chunks"),
-          col("section"), col("chunk_id"), col("content"))
-        .orderBy("url", "chunk_index")
-      case None => s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("url", StringType),
-          StructField("chunk_index", LongType),
-          StructField("total_chunks", LongType),
-          StructField("section", StringType),
-          StructField("chunk_id", StringType),
-          StructField("content", StringType))))
-    }
-    // the returned frame reads LAZILY from the temp store, so pin it in
-    // block storage (eager localCheckpoint) before deleting the tree —
-    // as a registered bench row this otherwise leaks a corpus-sized
-    // temp copy (input + versioned store + checkpoint) per invocation
-    val pinned = phase("pin_result") { result.localCheckpoint(true) }
-    phase("teardown") {
-      deleteRecursively(base.toFile)
-      if (!cachedIn) deleteRecursively(inBase.toFile)
-    }
-    pinned
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.operators.Sync.deleteTree(f)
 
   /** Watermarked stream-stream interval join: each click joins error
     * events of the same user from the preceding hour. Both sides carry

@@ -96,8 +96,9 @@ object StageCache {
   /** Resolve the staging dir for `key`: under the cache root when the
     * prop is set (building at most once; concurrent callers of the
     * same key serialize on a per-key lock), else a fresh temp dir
-    * built unconditionally. Returns (path, cached) — a cached dir must
-    * NOT be deleted by the caller's teardown. */
+    * built unconditionally, and deleted again if its build throws.
+    * Returns (path, cached) — a cached dir must NOT be deleted by the
+    * caller's teardown. */
   def resolve(key: String)(
       build: java.nio.file.Path => Unit): (java.nio.file.Path, Boolean) =
     sys.props.get(Prop) match {
@@ -115,7 +116,9 @@ object StageCache {
         }
       case None =>
         val dir = java.nio.file.Files.createTempDirectory("graftstage")
-        build(dir)
+        try build(dir)
+        catch { case e: Throwable =>
+          graft.operators.Sync.deleteTree(dir.toFile); throw e }
         (dir, false)
     }
 }

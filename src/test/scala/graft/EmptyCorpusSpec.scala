@@ -1,18 +1,13 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 
-/** Robustness gate: EVERY registered query must run (not throw) on an
-  * empty corpus with the production schemas. A 100 TB pipeline's first
-  * run, a fully-filtered partition, or a source that produced nothing
-  * this sync all present exactly this input; a query that crashes on
-  * zero rows is a paged operator, not an edge case. Fixtures are
-  * zero-row parquet files mirroring the driver tables' schemas, built
-  * once per suite run. */
-class EmptyCorpusSpec extends SparkSuite {
-
-  private lazy val emptyDir: String = {
+/** Zero-row parquet copies of the driver tables, with the production
+  * schemas, in a fresh temp dir the caller deletes. */
+object EmptyCorpus {
+  def stage(spark: SparkSession): java.nio.file.Path = {
     val src = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory("sf-empty").toString
+    val base = java.nio.file.Files.createTempDirectory("sf-empty")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$src/$t.parquet").limit(0)
@@ -20,16 +15,25 @@ class EmptyCorpusSpec extends SparkSuite {
     }
     base
   }
+}
+
+/** Robustness gate: EVERY registered query must run (not throw) on an
+  * empty corpus with the production schemas. A 100 TB pipeline's first
+  * run, a fully-filtered partition, or a source that produced nothing
+  * this sync all present exactly this input; a query that crashes on
+  * zero rows is a paged operator, not an edge case. */
+class EmptyCorpusSpec extends SparkSuite {
 
   test("every registered query runs on an empty corpus") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, emptyDir).count(); None }
+    val emptyDir = EmptyCorpus.stage(spark)
+    val failures =
+      try SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+        try { fn(spark, emptyDir.toString).count(); None }
         catch { case e: Throwable =>
           Some(s"$name: ${e.getClass.getSimpleName}: " +
             s"${Option(e.getMessage).getOrElse("").linesIterator.toSeq.headOption.getOrElse("")}")
         }
-    }
+      } finally graft.operators.Sync.deleteTree(emptyDir.toFile)
     assert(failures.isEmpty,
       s"${failures.length} queries crash on an empty corpus:\n" +
         failures.mkString("\n"))

@@ -33,55 +33,61 @@ class IndexColdStartSpec extends SparkSuite {
 
   test("PQ cold start: new session + cold registry + deleted " +
       ".centroids sidecar still probes via the manifest") {
-    val idx = java.nio.file.Files.createTempDirectory("coldpq")
-      .toString + "/pq"
-    Similarity.buildPqIndex(spark, dir, idx)
-    val qv = queryVec
-    val warm = Similarity.probePq(spark, idx, dir, qv, k = 10,
-      excludeId = Some(0L)).collect().map(_.getLong(0)).toSeq
-    assert(KnnIndexRegistry.readManifest(idx).exists(_._1 == "pq"))
-    deleteRecursive(idx + ".centroids") // manifest must be the loader
-    KnnIndexRegistry.clear() // simulate process restart
-    val s2 = spark.newSession()
-    val cold = Similarity.probePq(s2, idx, dir, qv, k = 10,
-      excludeId = Some(0L)).collect().map(_.getLong(0)).toSeq
-    assert(cold == warm, s"cold-start PQ diverged: $cold vs $warm")
+    val root = java.nio.file.Files.createTempDirectory("coldpq")
+    val idx = root.toString + "/pq"
+    try {
+      Similarity.buildPqIndex(spark, dir, idx)
+      val qv = queryVec
+      val warm = Similarity.probePq(spark, idx, dir, qv, k = 10,
+        excludeId = Some(0L)).collect().map(_.getLong(0)).toSeq
+      assert(KnnIndexRegistry.readManifest(idx).exists(_._1 == "pq"))
+      deleteRecursive(idx + ".centroids") // manifest must be the loader
+      KnnIndexRegistry.clear() // simulate process restart
+      val s2 = spark.newSession()
+      val cold = Similarity.probePq(s2, idx, dir, qv, k = 10,
+        excludeId = Some(0L)).collect().map(_.getLong(0)).toSeq
+      assert(cold == warm, s"cold-start PQ diverged: $cold vs $warm")
+    } finally deleteRecursive(root.toString)
   }
 
   test("IVF-PQ cold start: manifest-only seed recovery keeps the " +
       "partition-pruned probe identical") {
-    val idx = java.nio.file.Files.createTempDirectory("coldivfpq")
-      .toString + "/ix"
-    Similarity.buildIvfPqIndex(spark, dir, idx)
-    val qv = queryVec
-    val warm = Similarity.probeIvfPq(spark, idx, dir, qv, k = 10,
-      nprobe = 4, excludeId = Some(0L))
-      .collect().map(_.getLong(0)).toSeq
-    assert(KnnIndexRegistry.readManifest(idx).exists(_._1 == "ivf-pq"))
-    deleteRecursive(idx + ".centroids")
-    KnnIndexRegistry.clear()
-    val s2 = spark.newSession()
-    // seeds recover bit-exact from the manifest alone
-    val seeds = Similarity.indexSeeds(s2, idx)
-    assert(seeds.nonEmpty, "manifest seed recovery failed")
-    val cold = Similarity.probeIvfPq(s2, idx, dir, qv, k = 10,
-      nprobe = 4, excludeId = Some(0L))
-      .collect().map(_.getLong(0)).toSeq
-    assert(cold == warm, s"cold-start IVF-PQ diverged: $cold vs $warm")
+    val root = java.nio.file.Files.createTempDirectory("coldivfpq")
+    val idx = root.toString + "/ix"
+    try {
+      Similarity.buildIvfPqIndex(spark, dir, idx)
+      val qv = queryVec
+      val warm = Similarity.probeIvfPq(spark, idx, dir, qv, k = 10,
+        nprobe = 4, excludeId = Some(0L))
+        .collect().map(_.getLong(0)).toSeq
+      assert(KnnIndexRegistry.readManifest(idx).exists(_._1 == "ivf-pq"))
+      deleteRecursive(idx + ".centroids")
+      KnnIndexRegistry.clear()
+      val s2 = spark.newSession()
+      // seeds recover bit-exact from the manifest alone
+      val seeds = Similarity.indexSeeds(s2, idx)
+      assert(seeds.nonEmpty, "manifest seed recovery failed")
+      val cold = Similarity.probeIvfPq(s2, idx, dir, qv, k = 10,
+        nprobe = 4, excludeId = Some(0L))
+        .collect().map(_.getLong(0)).toSeq
+      assert(cold == warm, s"cold-start IVF-PQ diverged: $cold vs $warm")
+    } finally deleteRecursive(root.toString)
   }
 
   test("LSH cold start: the model dir carries the kind=lsh manifest " +
       "and a new session's probe matches the warm one") {
-    val modelDir = java.nio.file.Files.createTempDirectory("coldlsh")
-      .resolve("model").toString
-    Similarity.buildMllibLsh(spark, dir, modelDir)
-    val warm = Similarity.probeMllibLsh(spark, dir, modelDir)
-      .collect().map(_.getLong(0)).toSeq
-    assert(KnnIndexRegistry.readManifest(modelDir).exists(_._1 == "lsh"))
-    KnnIndexRegistry.clear()
-    val s2 = spark.newSession()
-    val cold = Similarity.probeMllibLsh(s2, dir, modelDir)
-      .collect().map(_.getLong(0)).toSeq
-    assert(cold == warm, s"cold-start LSH diverged: $cold vs $warm")
+    val root = java.nio.file.Files.createTempDirectory("coldlsh")
+    val modelDir = root.resolve("model").toString
+    try {
+      Similarity.buildMllibLsh(spark, dir, modelDir)
+      val warm = Similarity.probeMllibLsh(spark, dir, modelDir)
+        .collect().map(_.getLong(0)).toSeq
+      assert(KnnIndexRegistry.readManifest(modelDir).exists(_._1 == "lsh"))
+      KnnIndexRegistry.clear()
+      val s2 = spark.newSession()
+      val cold = Similarity.probeMllibLsh(s2, dir, modelDir)
+        .collect().map(_.getLong(0)).toSeq
+      assert(cold == warm, s"cold-start LSH diverged: $cold vs $warm")
+    } finally deleteRecursive(root.toString)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStream
 
@@ -15,29 +16,38 @@ class StreamAggParitySpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("staged-replay cache reuses inputs and leaves results identical") {
+    // the 11 range-sliced rows share ONE staged slice set per corpus
+    // (all five event columns, every sentinel plan beside it), and a
+    // second round re-stages nothing and returns the same rows
     import graft.streaming.StageCache
+    val rangeRows = Seq[(SparkSession, String) => DataFrame](
+      EventStream.streamWindowParity, EventStream.streamSessionParity,
+      EventStream.streamRocksdbParity, EventStream.streamStateParity,
+      EventStream.streamTwsParity, EventStream.streamJoinParity,
+      EventStream.streamSemiJoinParity, EventStream.streamOuterJoinParity,
+      EventStream.streamFullOuterJoinParity,
+      EventStream.streamRightOuterJoinParity,
+      EventStream.streamEnrichParity)
     val cache = java.nio.file.Files.createTempDirectory("stagecache")
     sys.props(StageCache.Prop) = cache.toString
+    def tree(f: java.io.File): Seq[(String, Long)] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
+        .sortBy(_.getName).flatMap(tree)
+      else Seq(f.getPath -> f.lastModified)
     try {
-      val first = EventStream.streamWindowParity(spark, dir).collect().toSeq
-      // the replay landed in the cache with its completion marker
-      val stagedDirs = cache.toFile.listFiles().filter(_.isDirectory)
-      assert(stagedDirs.exists(d =>
-        d.getName.startsWith("replay_agg_") &&
-          new java.io.File(d, "_STAGED").exists()),
-        s"expected a marker-gated replay dir, got " +
-          s"${stagedDirs.map(_.getName).mkString(",")}")
-      val stamp = stagedDirs.head.lastModified()
-      // second invocation: same result, inputs NOT re-staged
-      val second = EventStream.streamWindowParity(spark, dir).collect().toSeq
-      assert(first == second, "cached replay changed the result")
-      assert(stagedDirs.head.lastModified() == stamp,
-        "second run re-staged the cached inputs")
-      // the state row shares the agg rows' staged replay (same corpus)
-      EventStream.streamStateParity(spark, dir).collect()
-      assert(cache.toFile.listFiles()
-        .count(d => d.getName.startsWith("replay_agg_")) == 1,
-        "state row must reuse the agg rows' replay, not stage its own")
+      val first = rangeRows.map(_(spark, dir).collect().toSeq)
+      val staged = cache.toFile.listFiles().filter(_.isDirectory)
+      assert(staged.length == 1, "expected one staged slice set, got " +
+        staged.map(_.getName).mkString(","))
+      assert(new java.io.File(staged.head, "_STAGED").exists(),
+        "the staged slice set lacks its completion marker")
+      assert(spark.read.parquet(s"${staged.head}/in0").columns.toSet ==
+        Set("event_id", "ts", "user_id", "event_type", "value"))
+      val stamps = tree(cache.toFile)
+      val second = rangeRows.map(_(spark, dir).collect().toSeq)
+      assert(first == second, "cached replay changed a result")
+      assert(tree(cache.toFile) == stamps,
+        "the second round re-staged the cached inputs")
     } finally {
       sys.props.remove(StageCache.Prop)
       graft.operators.Sync.deleteTree(cache.toFile)

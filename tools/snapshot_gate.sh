@@ -32,6 +32,16 @@ if [ -n "$HEXPARSE" ]; then
   exit 1
 fi
 
+echo "[gate] 0c/3 one staged-replay protocol"
+REPLAY="$(grep -rnE 'setLastModified\(|"maxFilesPerTrigger"' src/main |
+  grep -v '^src/main/scala/graft/streaming/Replay.scala:' || true)"
+if [ -n "$REPLAY" ]; then
+  echo "$REPLAY"
+  echo "[gate] FAIL: replay-order stamp or file-per-trigger read outside" \
+    "Replay.scala (use Replay.stamp / Replay.read)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
