@@ -341,29 +341,20 @@ object Bench {
     // run, and a flagged segment names exactly the medians to re-check
     // against their mins.
     val segmentSize = 20
-    // Protocol rows run a full multi-query pipeline (streaming syncs
-    // with checkpoints) per invocation — their timing is the protocol
-    // itself and their variance profile is FLAT, so one timed rep after
-    // the warmup suffices; 3 reps of a 3-5 s pipeline bought ~20 s of
-    // wall clock for no extra signal (round-11 verdict item 7). The
-    // retime pass still covers them if their segment is load-flagged.
-    // crawl_frontier is deliberately NOT here: its iterative
-    // checkpoint loop wobbles 2.5-6 s run-to-run and a single-rep
-    // reading would land the wobble straight in the artifact of a
-    // judge-watched row — it keeps median-of-3. stream_join_parity
-    // moved OFF this list in r15 for the same reason: its r14
-    // single-rep read 10.56 s where six quiet back-to-back reps
-    // cluster at 6.4 ± 0.5 s (TimeQuery adjudication, SCALEPROBE.md)
-    // — the slowest row on the board deserves a median.
-    val protocolRows = Set("stream_batch_parity", "stream_delete_parity",
-      "stream_resync_parity", "stream_window_parity", "stream_dedup_parity",
-      "stream_late_parity", "stream_rocksdb_parity", "stream_enrich_parity",
-      "stream_outer_join_parity", "stream_full_outer_join_parity",
-      "stream_session_parity", "stream_state_parity",
-      "stream_curate_parity", "stream_ivf_parity",
-      "stream_substr_parity", "stream_mv_parity", "stream_warc_parity",
-      "stream_warc_ingest", "sync_run_e2e",
-      "ingest_issues_e2e", "ingest_tickets_e2e", "ingest_articles_e2e")
+    // Protocol rows (`QuerySpec.protocol`) run a full multi-query
+    // pipeline (streaming syncs with checkpoints) per invocation — their
+    // timing is the protocol itself and their variance profile is FLAT,
+    // so one timed rep after the warmup suffices; 3 reps of a 3-5 s
+    // pipeline bought ~20 s of wall clock for no extra signal (round-11
+    // verdict item 7). The retime pass still covers them if their
+    // segment is load-flagged. crawl_frontier is deliberately NOT a
+    // protocol row: its iterative checkpoint loop wobbles 2.5-6 s
+    // run-to-run and a single-rep reading would land the wobble
+    // straight in the artifact of a judge-watched row — it keeps
+    // median-of-3. stream_join_parity stopped being one in r15 for the
+    // same reason: its r14 single-rep read 10.56 s where six quiet
+    // back-to-back reps cluster at 6.4 ± 0.5 s (TimeQuery adjudication,
+    // SCALEPROBE.md) — the slowest row on the board deserves a median.
     val sentinels = scala.collection.mutable.ArrayBuffer[Double]()
     sentinels += sentinel()
     // A query whose every rep THROWS is an errored row: named loudly on
@@ -385,8 +376,9 @@ object Bench {
     val singleRepRows = scala.collection.mutable.LinkedHashSet[String]()
     // protocol rows that ran 2 reps and publish the MIN (see below)
     val minOf2Rows = scala.collection.mutable.LinkedHashSet[String]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex.map {
-      case ((name, fn), qi) =>
+    val results = SparkEntry.specs.sortBy(_.name).zipWithIndex.map {
+      case (spec, qi) =>
+        val (name, fn) = (spec.name, SparkEntry.queries(spec.name))
         if (qi > 0 && qi % segmentSize == 0) sentinels += sentinel()
         // One untimed warmup rep per query: round 7 showed untouched
         // queries drifting 2-4x purely because NEW queries sorted in
@@ -407,7 +399,7 @@ object Bench {
         // for little extra signal. Additive methodology change,
         // documented in OPTIMIZATION_r21.md; the env/JSON contract is
         // unchanged.
-        val isProtocol = protocolRows.contains(name)
+        val isProtocol = spec.protocol
         val nReps = repsFor(isProtocol, warmupSec, reps)
         if (isProtocol && nReps == 2) minOf2Rows += name
         if (nReps == 1) singleRepRows += name

@@ -2,20 +2,18 @@ package graft
 
 /** Plan auditor: prints the formatted physical plan of selected queries
   * so pushdown/broadcast/codegen can be inspected.
-  * `sbt "runMain graft.Explain q2_filter_project q3_join_agg"` (no args =
-  * a default audit set). */
+  * `sbt "runMain graft.Explain q2_filter_project q3_join_agg"`. */
 object Explain {
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: graft.Explain <query-name>... " +
+        "(SPARK_GRAFT_SF_DIR picks the scale factor, default sf0.01)")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("q2_filter_project", "q3_join_agg", "q8_topk",
-        "q16_star_join", "doc_chunk_markdown", "dedup_embedding",
-        "emb_knn_exact", "doc_get_chunks", "q_query_documentation",
-        "q17_asof_custom", "sitemap_parse", "doc_pdf_lines",
-        "doc_quality_filter")
-    names.foreach { n =>
+    args.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
       // the registered indexed-BM25 row returns a checkpoint-pinned

@@ -281,24 +281,17 @@ object ScaleProbe {
     // session/JIT warmup
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
-    // The 32/6-consumer ORACLE rows now refuse above the size gate
-    // (guard3206 — a DuckDB-parity artifact, not engine behavior); the
-    // probe's question is how the ENGINE behaves at scale, so for those
-    // names it times the auto-routed operator underneath the guard —
-    // the exact production path, which size-routes to the wide kernel
-    // at 3x/10x.
-    import graft.operators.{Curation, Dedup}
-    val engineUnderGuard: Map[String, (SparkSession, String) => DataFrame] =
-      Map(
-        "dedup_clusters"     -> ((s, d) => Dedup.simhashClusters(s, d)),
-        "dedup_cross_source" -> ((s, d) => Dedup.crossSourceLeakage(s, d)),
-        "curation_funnel"    -> ((s, d) => Curation.funnelAuto(s, d)),
-        "curation_runs"      -> ((s, d) => Curation.curationRunsAuto(s, d)))
+    // The 32/6-consumer ORACLE rows refuse above the size gate
+    // (`QuerySpec.sizeGuarded` — a DuckDB-parity artifact, not engine
+    // behavior); the probe's question is how the ENGINE behaves at
+    // scale, so it times each row's unguarded `run` — the exact
+    // production path, which size-routes to the wide kernel at 3x/10x.
+    val runs = SparkEntry.specs.map(q => q.name -> q.run).toMap
     // A query may still REFUSE above its size gate (the r12 simhashPairs
     // guardrail) — for the probe that refusal IS the scale result:
     // recorded as -1 and rendered as "refused" with e marked "guarded".
     def timeOnce(name: String, dir: String): Double = {
-      val fn = engineUnderGuard.getOrElse(name, SparkEntry.queries(name))
+      val fn = runs(name)
       val t0 = System.nanoTime()
       try fn(spark, dir).count()
       catch {
@@ -446,7 +439,7 @@ consumes staged inputs (`graft.curation.cache`), staging the same
 size-routed kernel.
 
 **The 32/6-consumer rows are timed through the engine path**: their
-ORACLE rows now refuse above the gate (guard3206, a DuckDB-parity
+ORACLE rows now refuse above the gate (`QuerySpec.sizeGuarded`, a DuckDB-parity
 artifact — the oracle SQL encodes one route, so above the gate a hash
 mismatch would be routing, not a bug), and the probe times the
 auto-routed operator underneath (`Dedup.simhashClusters`,

@@ -1,16 +1,30 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{Compliance, Curation, Dedup, DocPipeline, Ingest, Layout, MatView, Notifier, Relational, Retrieval, Similarity, Stats, Sync, TextAnalysis}
+import graft.operators.{CurationQueries, Dedup, DedupQueries,
+  DocPipelineQueries, GraphQueries, Ingest, IngestQueries,
+  MaintenanceQueries, Relational, RelationalQueries, RetrievalQueries,
+  SimilarityQueries, StatsQueries, SyncQueries, TextAnalysisQueries}
+import graft.sources.{SourceQueries, StoreQueries}
+import graft.streaming.StreamQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` maps operator names (SURVEY.md §2 inventory) to DataFrame
-  * plans over the driver's parquet tables; `oracleSql` gives the DuckDB
-  * equivalent for the hash-match correctness gate. Column names are kept
-  * identical on both sides (the driver sorts columns by name and hashes
+/** One query row, declared once next to its operators: the engine plan
+  * `run` and the DuckDB SQL `oracle` it must hash-match (column names
+  * identical on both sides; the driver sorts columns by name and hashes
   * values).
-  */
+  *
+  * @param protocol    the row runs a whole multi-query pipeline per call
+  *                    (streaming syncs with checkpoints); Bench gives it
+  *                    the protocol rep policy ([[Bench.repsFor]])
+  * @param sizeGuarded the oracle encodes the 32/6 SimHash route, so the
+  *                    registered query refuses corpora above
+  *                    [[graft.operators.Dedup.SimhashAutoMaxDocs]] */
+final case class QuerySpec(name: String, run: SparkEntry.Q, oracle: String,
+    protocol: Boolean = false, sizeGuarded: Boolean = false)
+
+/** Driver contract — see SURVEY.md §7. The row registry: `queries` and
+  * `oracleSql` are derived from the family spec objects, so a row and
+  * its oracle cannot drift apart. */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -18,6 +32,19 @@ object SparkEntry {
     Relational.q3JoinAgg(spark, "/root/testdata/sf0.001")
 
   type Q = (SparkSession, String) => DataFrame
+
+  /** Every row, in family order. */
+  lazy val specs: Seq[QuerySpec] = {
+    val all = Seq(RelationalQueries.specs, DocPipelineQueries.specs,
+      IngestQueries.specs, DedupQueries.specs, SimilarityQueries.specs,
+      StreamQueries.specs, CurationQueries.specs, SyncQueries.specs,
+      TextAnalysisQueries.specs, GraphQueries.specs, RetrievalQueries.specs,
+      MaintenanceQueries.specs, StatsQueries.specs, StoreQueries.specs,
+      SourceQueries.specs).flatten
+    val dups = all.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"query rows declared twice: ${dups.mkString(", ")}")
+    all
+  }
 
   /** Size-aware oracle guard for the rows whose DuckDB SQL encodes the
     * 32/6 SimHash route: above [[Dedup.SimhashAutoMaxDocs]] the engine
@@ -27,5850 +54,23 @@ object SparkEntry {
     * parity honest instead of confusing (the wide chain has its own
     * row, `dedup_clusters_wide`). Verify (sf0.01 = 500 docs) and bench
     * (sf0.1 = 5,000) corpora sit under the gate. */
-  private def guard3206(s: SparkSession, d: String, row: String): Unit = {
+  private def guard3206(q: QuerySpec): Q = (s, d) => {
     val n = Ingest.docCount(s, d)
     // the "SimhashAutoMaxDocs" token is load-bearing: ScaleProbe's
     // refusal catch keys on it to render a guarded row as "refused"
     // instead of crashing the run
     require(n <= Dedup.SimhashAutoMaxDocs,
-      s"$row: its DuckDB oracle encodes the 32/6 route but the corpus " +
+      s"${q.name}: its DuckDB oracle encodes the 32/6 route but the corpus " +
         s"has $n docs (> SimhashAutoMaxDocs=${Dedup.SimhashAutoMaxDocs}) " +
         "and the engine would route to the wide kernel — run this row " +
         "on a corpus under the gate; dedup_clusters_wide pins the wide " +
         "chain.")
+    q.run(s, d)
   }
 
-  def queries: Map[String, Q] = Map[String, Q](
-    "q1_pricing_summary"  -> (Relational.q1PricingSummary _),
-    "q2_filter_project"   -> (Relational.q2FilterProject _),
-    "q3_join_agg"         -> (Relational.q3JoinAgg _),
-    "q4_semi_join"        -> (Relational.q4SemiJoin _),
-    "q5_anti_join"        -> (Relational.q5AntiJoin _),
-    "q6_latest_per_key"   -> (Relational.q6LatestPerKey _),
-    "q7_running_window"   -> (Relational.q7RunningWindow _),
-    "q8_topk"             -> (Relational.q8TopK _),
-    "q9_set_ops"          -> (Relational.q9SetOps _),
-    "q10_distinct"        -> (Relational.q10Distinct _),
-    "q11_hash_multiset"   -> (Relational.q11HashMultiset _),
-    "q12_conditional_agg" -> (Relational.q12ConditionalAgg _),
-    "q13_rollup"          -> (Relational.q13Rollup _),
-    "q14_event_windows"   -> (Relational.q14EventWindows _),
-    "q15_sessionize"      -> (Relational.q15Sessionize _),
-    "q16_star_join"       -> (Relational.q16StarJoin _),
-    "q17_asof_join"       -> (Relational.q17AsOfJoin _),
-    "q17_asof_custom"     -> (Relational.q17AsOfCustom _),
-    "q18_keyset_page"     -> (Relational.q18KeysetPage _),
-    "q19_range_pred_join" -> (Relational.q19RangePredJoin _),
-    "q20_percentiles"     -> (Relational.q20Percentiles _),
-    "q23_rank_functions"  -> (Relational.q23RankFunctions _),
-    "q24_string_funcs"    -> (Relational.q24StringFuncs _),
-    "q25_json_funcs"      -> (Relational.q25JsonFuncs _),
-    "q26_date_funcs"      -> (Relational.q26DateFuncs _),
-    "q27_hll_sketch"      -> (Relational.q27HllSketch _),
-    "q28_grouping_sets"   -> (Relational.q28GroupingSets _),
-    "q29_pivot"           -> (Relational.q29Pivot _),
-    "q30_activity_islands" -> (Relational.q30ActivityIslands _),
-    "q32_range_frame"     -> (Relational.q32RangeFrame _),
-    "q34_sql_correlated"  -> (Relational.q34SqlCorrelated _),
-    "q35_null_semantics"  -> (Relational.q35NullSemantics _),
-    "q21_intersect"       -> (Relational.q21Intersect _),
-    "q22_cube"            -> (Relational.q22Cube _),
-    "doc_chunk_markdown"  -> (DocPipeline.chunkMarkdownDocs _),
-    "stream_batch_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamBatchParity(s, d)),
-    "stream_delete_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamDeleteParity(s, d)),
-    "stream_resync_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamResyncParity(s, d)),
-    "stream_window_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamWindowParity(s, d)),
-    "stream_session_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamSessionParity(s, d)),
-    "stream_state_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamStateParity(s, d)),
-    "stream_tws_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamTwsParity(s, d)),
-    "stream_join_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamJoinParity(s, d)),
-    "stream_dedup_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamDedupParity(s, d)),
-    "stream_late_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamLateParity(s, d)),
-    "stream_rocksdb_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamRocksdbParity(s, d)),
-    "stream_enrich_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamEnrichParity(s, d)),
-    "stream_outer_join_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamOuterJoinParity(s, d)),
-    "stream_full_outer_join_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamFullOuterJoinParity(s, d)),
-    "stream_semi_join_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamSemiJoinParity(s, d)),
-    "stream_right_outer_join_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.EventStream.streamRightOuterJoinParity(s, d)),
-    "stream_curate_parity" -> ((s: SparkSession, d: String) =>
-      graft.streaming.CurationStream.streamCurateParity(s, d)),
-    "stream_ivf_parity"   -> ((s: SparkSession, d: String) =>
-      Similarity.ivfAppendStreamParity(s, d)),
-    "ingest_tabs"         -> (Ingest.ingestTabs _),
-    "crawl_url_dedup"     -> (Ingest.urlCanonicalDedup _),
-    "ingest_api_headers"  -> (Ingest.parseApiHeaders _),
-    "crawl_link_resolve"  -> (Ingest.resolveLinks _),
-    "doc_chunk_code"      -> (DocPipeline.codeChunkDocs _),
-    "doc_chunk_overlap"   -> (DocPipeline.chunkOverlapDocs _),
-    "doc_chunk_token"     -> (DocPipeline.chunkTokenDocs _),
-    "doc_get_chunks"      -> ((s: SparkSession, d: String) =>
-      DocPipeline.getChunks(s, d)),
-    "doc_binary_meta"     -> (DocPipeline.binaryMeta _),
-    "doc_audio_levels"    -> (DocPipeline.audioLevelReport _),
-    "doc_media_resize"    -> (DocPipeline.mediaResize _),
-    "doc_png_resize"      -> (DocPipeline.pngResize _),
-    "doc_mp4_demux"       -> (DocPipeline.mp4Demux _),
-    "doc_gif_resize"      -> (DocPipeline.gifResize _),
-    "doc_jpeg_resize"     -> (DocPipeline.jpegResize _),
-    "doc_jpeg_color"      -> (DocPipeline.jpegColorResize _),
-    "doc_jpeg_prog"       -> (DocPipeline.jpegProgResize _),
-    "doc_bmp_resize"      -> (DocPipeline.bmpResize _),
-    "doc_avi_frames"      -> (DocPipeline.aviFrames _),
-    "doc_avi_rgb"         -> (DocPipeline.aviRgbFrames _),
-    "doc_avi_delta"       -> (DocPipeline.aviDeltaFrames _),
-    "doc_audio_resample"  -> (DocPipeline.audioResample _),
-    "src_scan_warc"       -> (DocPipeline.warcScan _),
-    "ingest_warc_e2e"     -> (DocPipeline.warcIngest _),
-    "src_warc_quarantine" -> (DocPipeline.warcQuarantineScan _),
-    "src_scan_wet"        -> (DocPipeline.wetScan _),
-    "src_scan_warc_v2"    -> (DocPipeline.warcV2Scan _),
-    "stream_warc_parity"  -> (DocPipeline.warcStreamParity _),
-    "stream_warc_ingest"  -> (DocPipeline.warcStreamIngest _),
-    "layout_warc_cdx"     -> (DocPipeline.warcCdxPruned _),
-    "layout_warc_cdx_gz"  -> (DocPipeline.warcCdxGzPruned _),
-    "sync_warc_revisit"   -> (DocPipeline.warcRevisitSync _),
-    "doc_frame_sample"    -> (DocPipeline.frameSample _),
-    "doc_media_features"  -> (DocPipeline.mediaFeatures _),
-    "doc_pdf_lines"       -> (DocPipeline.pdfLines _),
-    "doc_pdf_crypt"       -> (DocPipeline.pdfCryptLines _),
-    "doc_pdf_cid"         -> (DocPipeline.pdfCidLines _),
-    "doc_word_lines"      -> (DocPipeline.wordLines _),
-    "doc_langid"          -> (TextAnalysis.langId _),
-    "doc_quality"         -> (TextAnalysis.qualityScore _),
-    "doc_quality_filter"  -> (TextAnalysis.qualityFilter _),
-    "doc_pii_redact"      -> (TextAnalysis.piiRedact _),
-    "doc_token_count"     -> (TextAnalysis.tokenCount _),
-    "doc_fingerprint"     -> (TextAnalysis.fingerprint _),
-    "dedup_exact"         -> (Dedup.exactDedup _),
-    "dedup_ngram_jaccard" -> ((s: SparkSession, d: String) =>
-      Dedup.ngramJaccard(s, d)),
-    "dedup_minhash_sig"   -> (Dedup.minhashSignatures _),
-    "dedup_minhash_pairs" -> (Dedup.minhashPairs _),
-    "dedup_minhash_delta" -> (Dedup.minhashPairsDelta _),
-    "dedup_minhash_calib" -> (Dedup.minhashCalibration _),
-    "dedup_semantic"      -> ((s: SparkSession, d: String) =>
-      Dedup.semanticDedup(s, d)),
-    "dedup_cross_source"  -> ((s: SparkSession, d: String) => {
-      guard3206(s, d, "dedup_cross_source")
-      Dedup.crossSourceLeakage(s, d)
-    }),
-    "dedup_simhash_sig"   -> (Dedup.simhashSignatures _),
-    "dedup_simhash_pairs" -> (Dedup.simhashPairs _),
-    "dedup_simhash_wide"  -> (Dedup.simhashWideDemo _),
-    "dedup_simhash_wide_delta" -> (Dedup.simhashWideDelta _),
-    "dedup_clusters_wide" -> (Dedup.simhashWideClusters _),
-    "dedup_embedding"     -> (Dedup.embeddingPairs _),
-    "dedup_keep_best"     -> ((s: SparkSession, d: String) => {
-      guard3206(s, d, "dedup_keep_best")
-      Dedup.keepBest(s, d)
-    }),
-    "dedup_clusters"      -> ((s: SparkSession, d: String) => {
-      guard3206(s, d, "dedup_clusters")
-      Dedup.simhashClusters(s, d)
-    }),
-    "emb_embed_sig"       -> (DocPipeline.embedDocs _),
-    "emb_embed_batched"   -> (DocPipeline.embedDocsBatched _),
-    "emb_knn_exact"       -> ((s: SparkSession, d: String) =>
-      Similarity.knnExact(s, d)),
-    "emb_ann_lsh"         -> ((s: SparkSession, d: String) =>
-      Similarity.annTopK(s, d)),
-    "q_query_documentation" -> (Similarity.queryDocumentation _),
-    "q_query_code_diag"   -> (Similarity.queryCodeDiagnostics _),
-    "sync_url_diff"       -> (Sync.urlDiff _),
-    "sync_chunk_delta"    -> (Sync.chunkDelta _),
-    "sync_cleanup"        -> (Sync.cleanup _),
-    "sync_watermark"      -> (Sync.watermark _),
-    "sync_run_counters"   -> (Sync.runCounters _),
-    "sync_skip_cascade"   -> ((s: SparkSession, d: String) =>
-      Sync.skipCascade(s, d)),
-    "sync_cascade_storegap" -> (Sync.skipCascadeStoreGap _),
-    "sync_list_diff"      -> (Sync.listDiff _),
-    "sync_resume"         -> (Sync.resumeDecisions _),
-    "sync_run_e2e"        -> (Sync.syncRunE2e _),
-    "ingest_code_e2e"     -> (graft.sources.GitCode.codeSyncE2e _),
-    "store_markdown_upsert" -> (graft.sources.MarkdownStore.upsertQuery _),
-    "ctl_chunk_inspect"   -> (graft.sources.ChunkStore.inspectQuery _),
-    "ingest_html"         -> (Ingest.ingestHtml _),
-    "ingest_page"         -> (Ingest.ingestPage _),
-    "ingest_render_issue" -> (Ingest.renderIssues _),
-    "ingest_render_article" -> (Ingest.renderArticles _),
-    "ingest_render_ticket" -> (Ingest.renderTickets _),
-    "ingest_issues_e2e"   -> (Ingest.ingestIssuesE2e _),
-    "ingest_tickets_e2e"  -> (Ingest.ingestTicketsE2e _),
-    "ingest_articles_e2e" -> (Ingest.ingestArticlesE2e _),
-    "crawl_frontier"      -> (Ingest.crawlFrontier _),
-    "sitemap_prefix_lastmod" -> (Ingest.prefixLastmod _),
-    "sitemap_parse"       -> (Ingest.sitemapParse _),
-    "sync_etag_skip"      -> (Ingest.etagSkip _),
-    "sync_lastmod_skip"   -> ((s: SparkSession, d: String) =>
-      Ingest.lastmodSkip(s, d)),
-    "sync_lastmod_storegap" -> (Ingest.lastmodStoreGap _),
-    "crawl_broken_links"  -> (Ingest.brokenLinks _),
-    "ctl_overlap_detect"  -> (Ingest.overlapDetect _),
-    "ctl_log_level_counts" -> (Ingest.logLevelCounts _),
-    "ctl_log_tail_seq"    -> ((s: SparkSession, d: String) =>
-      Ingest.logTailStartSeq(s, d)),
-    "ctl_log_retention"   -> ((s: SparkSession, d: String) =>
-      Ingest.logRetention(s, d)),
-    "sync_metadata_exclusion" -> (Sync.metadataExclusion _),
-    "ctl_run_stats"       -> (Ingest.runStatsDaily _),
-    "ctl_schedule_reconcile" -> (Ingest.scheduleReconcile _),
-    "ctl_config_registry" -> (Ingest.configRegistry _),
-    "ctl_notify"          -> (Notifier.notifyReport _),
-    "src_scan_filters" -> (graft.sources.LocalDirectory.scanFilters _),
-    "src_scan_allowed" -> (graft.sources.LocalDirectory.scanAllowed _),
-    "src_scan_s3" -> (graft.sources.LocalDirectory.scanS3 _),
-    "emb_ann_mllib"       -> ((s: SparkSession, d: String) =>
-      Similarity.annMllibPlanted(s, d)),
-    "emb_ann_ivf"         -> ((s: SparkSession, d: String) =>
-      Similarity.annIvf(s, d)),
-    "emb_knn_rewrite"     -> ((s: SparkSession, d: String) =>
-      Similarity.knnRewriteIvf(s, d)),
-    "emb_ivf_append"      -> ((s: SparkSession, d: String) =>
-      Similarity.ivfAppendReport(s, d)),
-    "emb_ann_recall"      -> ((s: SparkSession, d: String) =>
-      Similarity.ivfRecall(s, d)),
-    "emb_pq_recall"       -> ((s: SparkSession, d: String) =>
-      Similarity.pqRecall(s, d)),
-    "emb_mrl_recall"      -> ((s: SparkSession, d: String) =>
-      Similarity.mrlRecall(s, d)),
-    "emb_bq_recall"       -> ((s: SparkSession, d: String) =>
-      Similarity.bqRecall(s, d)),
-    "emb_ivf_rebalance"   -> ((s: SparkSession, d: String) =>
-      Similarity.ivfRebalanceReport(s, d)),
-    "emb_ann_pq"          -> ((s: SparkSession, d: String) =>
-      Similarity.annPq(s, d)),
-    "dedup_spans"         -> (Curation.spanDedup _),
-    "dedup_spans_delta"   -> (Curation.spanDedupDelta _),
-    "dedup_decontaminate" -> (Curation.decontaminate _),
-    "doc_rep_ngrams"      -> (Curation.repetitionSignals _),
-    "doc_domain_stats"    -> (Curation.domainMixture _),
-    "doc_sample_stratified" -> (Curation.stratifiedSample _),
-    "doc_pack_sequences"  -> (Curation.packSequences _),
-    "doc_shard_shuffle"   -> ((s: SparkSession, d: String) =>
-      Curation.shardShuffle(s, d)),
-    "curation_shards_e2e" -> ((s: SparkSession, d: String) =>
-      Curation.trainingShards(s, d)),
-    "doc_keywords"        -> ((s: SparkSession, d: String) =>
-      TextAnalysis.keywords(s, d)),
-    "curation_funnel"     -> ((s: SparkSession, d: String) => {
-      guard3206(s, d, "curation_funnel")
-      Curation.funnelAuto(s, d)
-    }),
-    "curation_runs"       -> ((s: SparkSession, d: String) => {
-      guard3206(s, d, "curation_runs")
-      Curation.curationRunsAuto(s, d)
-    }),
-    "doc_sample_balanced" -> (Curation.balancedSample _),
-    "curation_token_budget" -> (Curation.tokenBudgetSample _),
-    "graph_pagerank"      -> ((s: SparkSession, d: String) =>
-      graft.operators.Graph.pageRank(s, d)),
-    "graph_sssp"          -> (graft.operators.Graph.sssp _),
-    "graph_pagerank_sink" -> ((s: SparkSession, d: String) =>
-      graft.operators.Graph.pageRank(s, d,
-        sinkEvery = graft.operators.Graph.SinkEvery)),
-    "graph_degree"        -> (graft.operators.Graph.degreeStats _),
-    "graph_components"    -> (graft.operators.Graph.components _),
-    "graph_components_delta" -> (graft.operators.Graph.componentsDelta _),
-    "graph_triangles"     -> (graft.operators.Graph.triangleStats _),
-    "doc_blocklist_filter" -> (Curation.blocklistFilter _),
-    "doc_mixture_epochs"  -> (Curation.mixtureEpochs _),
-    "doc_length_histogram" -> (Curation.lengthHistogram _),
-    "emb_ann_range"       -> ((s: SparkSession, d: String) =>
-      Similarity.rangeSearch(s, d)),
-    "emb_cluster_stats"   -> ((s: SparkSession, d: String) =>
-      Similarity.clusterStats(s, d)),
-    // full oracle since r13: planted separated-cluster geometry whose
-    // Lloyd fixed point is analytic (integer-only output re-derived by
-    // DuckDB from the construction rule); the real-corpus refinement
-    // stays pinned in ScalaTest (refined balance beats raw seeds)
-    "emb_cluster_stats_lloyd" -> ((s: SparkSession, _: String) =>
-      Similarity.clusterStatsLloydOracle(s)),
-    // full oracle since r13: planted 6-word construction whose merge
-    // table DuckDB RELEARNS in six unrolled SQL training rounds (the
-    // real-corpus 200-merge variant stays in the library as
-    // TextAnalysis.tokenCountBpe, pinned by BpeTokenizerSpec)
-    "doc_token_bpe"       -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tokenCountBpeOracle(s, d)),
-    "emb_quantize_int8"   -> (Similarity.quantizeInt8 _),
-    "doc_quality_model"   -> (TextAnalysis.qualityModelProbes _),
-    "q_search_bm25"       -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25Search(s, d)),
-    "q_search_hybrid"     -> ((s: SparkSession, d: String) =>
-      Retrieval.hybridSearch(s, d)),
-    "q_search_phrase"     -> ((s: SparkSession, d: String) =>
-      Retrieval.phraseSearch(s, d)),
-    "q_search_bm25_indexed" -> ((s: SparkSession, d: String) =>
-      Retrieval.bm25SearchIndexed(s, d)),
-    "q31_salted_skew_join" -> (graft.operators.Skew.saltedJoinStats _),
-    "q33_salted_agg"      -> (graft.operators.Skew.saltedAggStats _),
-    "dedup_substring"     -> (Dedup.substringSpans _),
-    "dedup_substring_delta" -> (Dedup.substringSpansDelta _),
-    "dedup_substring_apply" -> (Dedup.substringApplyStats _),
-    "stream_substr_parity" -> (Dedup.substrDeltaStreamParity _),
-    "sync_bloom_prefilter" -> (Sync.bloomPrefilterStats _),
-    "doc_heavy_hitters_cms" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.cmsHeavyHitters(s, d)),
-    "store_compaction"    -> (Layout.compactionPlan _),
-    "layout_zorder"       -> (Layout.zorderStats _),
-    "layout_zorder_prune" -> (Layout.zorderPruneStats _),
-    "layout_hilbert_prune" -> (Layout.hilbertPruneStats _),
-    "doc_ngram_lm"        -> (TextAnalysis.ngramLm _),
-    "mv_incremental"      -> (MatView.incrementalRefresh _),
-    "compliance_purge_e2e" -> (graft.operators.Compliance.purgeSweep _),
-    "stream_purge_parity" -> (graft.operators.Compliance.purgeSweepStream _),
-    "store_time_travel"   -> (graft.sources.ChunkStore.timeTravelReport _),
-    "store_txn_log"       -> (graft.sources.TxnLogStore.txnLogReport _),
-    "stream_txn_parity"   -> (graft.sources.TxnLogStore.txnLogStreamReport _),
-    "store_compact_txn"   -> (graft.sources.TxnLogStore.compactionTxnReport _),
-    "store_vacuum_txn"    -> (graft.sources.TxnLogStore.vacuumTxnReport _),
-    "store_change_feed"   -> (graft.sources.ChunkStore.changeFeedReport _),
-    "crawl_robots"        -> (graft.sources.RobotsTxt.robotsReport _),
-    "crawl_politeness"    -> (graft.sources.Crawler.politenessSchedule _),
-    "stream_mv_parity"    -> (MatView.mvStreamParity _),
-    "stats_table_profile" -> (Stats.tableProfile _),
-    "stats_quantile_sketch" -> (Stats.quantileSketch _),
-    "stats_kmv_distinct"  -> (Stats.kmvDistinct _),
-    "stream_kmv_parity"   -> (Stats.kmvDistinctStream _),
-    "src_scan_csv"        -> (graft.sources.CsvSource.scanCsv _),
-    "src_scan_orc"        -> (graft.sources.OrcSource.scanOrc _),
-    "src_scan_jsonl"      -> (graft.sources.JsonlSource.scanJsonl _),
-    "src_scan_evolution"  -> (graft.sources.EvolvingSource.scanEvolved _),
-    "src_scan_contract"   -> (graft.sources.EvolvingSource.scanContract _)
-  )
+  lazy val queries: Map[String, Q] = specs.map(q =>
+    q.name -> (if (q.sizeGuarded) guard3206(q) else q.run)).toMap
 
-  /** One unrolled BPE training round for the `doc_token_bpe` oracle:
-    * weighted adjacent-pair count over the bracketed symbol strings →
-    * argmax (count desc, then pair lexicographic — BpeTokenizer.train's
-    * exact tie-break, though the planted frequencies make every round's
-    * best pair strictly unique) → one left-to-right non-overlapping
-    * rewrite (`replace` on the `[a][b]` form IS that pass: brackets make
-    * multi-char symbols unambiguous and adjacent matches share no
-    * delimiter). MATERIALIZED is load-bearing: inlined, the six chained
-    * rounds re-evaluate each other combinatorially. */
-  private def bpeRoundSql(k: Int): String = {
-    val prev = if (k == 1) "freqs" else s"s${k - 1}"
-    s"""pairs$k AS MATERIALIZED (
-           SELECT toks[i] AS a, toks[i + 1] AS b, SUM(freq) AS cnt
-           FROM (SELECT freq,
-                   regexp_extract_all(syms, '\\[([^\\]]*)\\]', 1) AS toks
-                 FROM $prev WHERE freq > 0),
-                UNNEST(range(1, len(toks))) AS u(i)
-           GROUP BY 1, 2),
-         best$k AS MATERIALIZED (
-           SELECT a, b FROM pairs$k ORDER BY cnt DESC, a, b LIMIT 1),
-         s$k AS MATERIALIZED (
-           SELECT f.word, f.m, f.freq,
-             replace(f.syms,
-               '[' || COALESCE(b.a, '') || '][' || COALESCE(b.b, '') || ']',
-               '[' || COALESCE(b.a, '') || COALESCE(b.b, '') || ']') AS syms
-           FROM $prev f LEFT JOIN best$k b ON TRUE)"""
-  }
-
-  /** The IVF top-k oracle — shared verbatim by `emb_ann_ivf` (the
-    * explicit declarative IVF plan) and `emb_knn_rewrite` (the same
-    * result computed through the KnnIvfRewrite optimizer rule): both
-    * engine paths must reproduce this quantizer arithmetic exactly. */
-  private def annIvfOracleSql: String =
-    s"""WITH e AS (SELECT vec_id,
-           list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-         FROM embeddings),
-       -- data-adaptive centroids: the embeddings of seed vectors
-       -- vec_id 1..16 (cell c = seed vec_id c+1). list_dot_product
-       -- accumulates left-to-right, the same order as the Scala
-       -- kernel, so the doubles (and thus the argmax below) are
-       -- bit-identical across engines
-       seeds AS (
-         SELECT vec_id - 1 AS c, emb AS cv FROM e
-         WHERE vec_id BETWEEN 1 AND ${Similarity.IvfNlist}),
-       proj AS (
-         SELECT e.vec_id, s.c,
-           list_dot_product(e.emb, s.cv) AS proj
-         FROM e CROSS JOIN seeds s),
-       assigned AS (
-         SELECT vec_id, c AS cell FROM (
-           SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-             ORDER BY proj DESC, c) AS rn FROM proj) WHERE rn = 1),
-       qcells AS (
-         SELECT c AS cell FROM (
-           SELECT c, row_number() OVER (ORDER BY proj DESC, c) AS rn
-           FROM proj WHERE vec_id = 0) WHERE rn <= ${Similarity.IvfNprobe}),
-       qv AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-       cand AS (
-         SELECT a.vec_id FROM assigned a JOIN qcells q ON a.cell = q.cell
-         WHERE a.vec_id != 0),
-       scored AS (
-         SELECT c.vec_id,
-           list_dot_product(qv, emb) /
-             (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(emb,emb)))
-             AS cosine
-         FROM cand c JOIN e ON e.vec_id = c.vec_id CROSS JOIN qv),
-       topk AS (
-         SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id)
-           AS rank
-         FROM scored)
-       SELECT rank, vec_id FROM topk WHERE rank <= 10 ORDER BY rank"""
-
-  /** Seed-quantizer assignment CTE (bit-exact emb_ann_ivf machinery)
-    * plus the delta id-cut — shared prefix of the IVF maintenance
-    * oracles (`emb_ivf_append`, `stream_ivf_parity`,
-    * `emb_ivf_rebalance`). */
-  private def ivfAssignedCteSql: String =
-    s"""WITH e AS (SELECT vec_id,
-           list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-         FROM embeddings),
-       seeds AS (
-         SELECT vec_id - 1 AS c, emb AS cv FROM e
-         WHERE vec_id BETWEEN 1 AND ${Similarity.IvfNlist}),
-       proj AS (
-         SELECT e.vec_id, s.c,
-           list_dot_product(e.emb, s.cv) AS proj
-         FROM e CROSS JOIN seeds s),
-       assigned AS (
-         SELECT vec_id, c AS cell FROM (
-           SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-             ORDER BY proj DESC, c) AS rn FROM proj) WHERE rn = 1),
-       cut AS (SELECT (MAX(vec_id) * 4) // 5 AS cut FROM embeddings)"""
-
-  /** Shared oracle of `emb_ivf_append` and `stream_ivf_parity`: the
-    * final index occupancy from the bit-exact seed-quantizer
-    * assignment rule (emb_ann_ivf's machinery), appended share broken
-    * out at the id cut. */
-  private def ivfAppendOracleSql: String =
-    ivfAssignedCteSql +
-    s"""
-       SELECT CAST(a.cell AS BIGINT) AS cell, COUNT(*) AS n_vectors,
-         CAST(SUM(CASE WHEN a.vec_id >= c.cut THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_appended,
-         MIN(a.vec_id) AS min_vec, MAX(a.vec_id) AS max_vec
-       FROM assigned a CROSS JOIN cut c
-       GROUP BY a.cell ORDER BY cell"""
-
-  /** Oracle of `emb_ivf_rebalance`: per-cell occupancy before/after
-    * the delta append and the split decision (occupancy > 2x the mean
-    * after absorbing the delta) — the trigger a 100 TB index uses to
-    * schedule quantizer refresh instead of re-clustering on a timer. */
-  private def ivfRebalanceOracleSql: String =
-    ivfAssignedCteSql +
-    s""",
-       occ AS (
-         SELECT a.cell, COUNT(*) AS n_after,
-           CAST(SUM(CASE WHEN a.vec_id < c.cut THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_before
-         FROM assigned a CROSS JOIN cut c GROUP BY 1),
-       tot AS (SELECT CAST(SUM(n_after) AS BIGINT) AS total FROM occ)
-       SELECT CAST(cell AS BIGINT) AS cell, n_before, n_after,
-         (n_after - n_before) * 1000 // nullif(n_before, 0)
-           AS growth_permille,
-         CAST(CASE WHEN n_after * ${Similarity.IvfNlist} > 2 * total
-           THEN 1 ELSE 0 END AS BIGINT) AS needs_split
-       FROM occ CROSS JOIN tot ORDER BY cell"""
-
-  /** Shared oracle of `store_txn_log` and `stream_txn_parity`: each
-    * snapshot's membership re-derived from the slice arithmetic
-    * (v0: slices 0,1; v1: 1,2; v2: 1,2,3). */
-  private def txnLogOracleSql: String =
-    """WITH d AS (SELECT doc_id, doc_id % 4 AS r FROM documents)
-       SELECT CAST(0 AS BIGINT) AS version, CAST(2 AS BIGINT) AS n_files,
-         count(*) AS n_rows, CAST(sum(doc_id) AS BIGINT) AS sum_doc_id
-       FROM d WHERE r IN (0, 1)
-       UNION ALL
-       SELECT 1, 2, count(*), CAST(sum(doc_id) AS BIGINT)
-       FROM d WHERE r IN (1, 2)
-       UNION ALL
-       SELECT 2, 3, count(*), CAST(sum(doc_id) AS BIGINT)
-       FROM d WHERE r IN (1, 2, 3)
-       ORDER BY version"""
-
-  /** Shared oracle of `compliance_purge_e2e` and `stream_purge_parity`:
-    * every surface rebuilt from scratch minus the purge subjects — the
-    * index side rides the bit-exact seed-quantizer assignment CTE the
-    * IVF maintenance oracles share. */
-  private def compliancePurgeOracleSql: String = ivfAssignedCteSql +
-    s""",
-       cp_d AS (SELECT doc_id, source, (length(text) + 3) // 4 AS tok
-           FROM documents),
-       cp_lv AS (SELECT * FROM cp_d
-           WHERE doc_id % ${Compliance.PurgeMod} <> ${Compliance.PurgeRes}),
-       cp_np AS (SELECT count(*) AS np FROM cp_d
-           WHERE doc_id % ${Compliance.PurgeMod} = ${Compliance.PurgeRes}),
-       cp_ilv AS (SELECT vec_id FROM assigned
-           WHERE vec_id % ${Compliance.PurgeMod} <> ${Compliance.PurgeRes}),
-       cp_ipg AS (SELECT vec_id, cell FROM assigned
-           WHERE vec_id % ${Compliance.PurgeMod} = ${Compliance.PurgeRes})
-       SELECT 'index' AS surface, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(COALESCE(sum(vec_id), 0) AS BIGINT) AS checksum,
-         CAST((SELECT count(DISTINCT cell) FROM cp_ipg) AS BIGINT)
-           AS n_groups,
-         CAST((SELECT count(*) FROM cp_ipg) AS BIGINT) AS n_purged
-       FROM cp_ilv
-       UNION ALL
-       SELECT 'mv', CAST(count(*) AS BIGINT),
-         CAST(COALESCE(sum(tok), 0) AS BIGINT),
-         CAST(count(DISTINCT source) AS BIGINT),
-         CAST((SELECT np FROM cp_np) AS BIGINT)
-       FROM cp_lv
-       UNION ALL
-       SELECT 'store', CAST(count(*) AS BIGINT),
-         CAST(COALESCE(sum(doc_id), 0) AS BIGINT),
-         CAST(0 AS BIGINT),
-         CAST((SELECT np FROM cp_np) AS BIGINT)
-       FROM cp_lv
-       ORDER BY surface"""
-
-  /** BM25 oracle CTE stack (through per-query ranking, unlimited) —
-    * shared by the `q_search_bm25` and `q_search_hybrid` oracles so the
-    * scoring arithmetic cannot drift between them. Mirrors
-    * Retrieval.bm25Search's integer rationalization exactly. */
-  private val bm25RankedCte: String =
-    s"""bm_d AS (SELECT doc_id, string_split(text,' ') AS toks
-                FROM documents),
-       bm_dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM bm_d),
-       bm_tok AS (SELECT doc_id, unnest(toks) AS term FROM bm_d),
-       bm_tf AS (SELECT doc_id, term, count(*) AS tf FROM bm_tok
-                 GROUP BY 1, 2),
-       bm_dft AS (SELECT term, count(*) AS df FROM bm_tf GROUP BY 1),
-       bm_stats AS (SELECT count(*) AS n_docs,
-                      CAST(sum(dl) AS BIGINT) // count(*) AS avg_dl
-                    FROM bm_dl),
-       bm_q(query_id, term) AS (VALUES ${Retrieval.benchQueries
-      .map { case (q, t) => s"($q,'$t')" }.mkString(",")}),
-       bm_scored AS (
-         SELECT q.query_id, tf.doc_id,
-           ((2*s.n_docs - 2*dft.df + 1) * 1000000) // (2*dft.df + 1)
-             AS idf_scaled,
-           (44*s.avg_dl*tf.tf*1000000)
-             // (20*s.avg_dl*tf.tf + 6*s.avg_dl + 18*dl.dl)
-             AS tfpart_micro
-         FROM bm_tf tf JOIN bm_q q USING (term)
-           JOIN bm_dft dft USING (term)
-           JOIN bm_dl dl ON tf.doc_id = dl.doc_id
-           CROSS JOIN bm_stats s),
-       bm_agg AS (
-         SELECT query_id, doc_id,
-           CAST(sum(idf_scaled * tfpart_micro // 1000000) AS BIGINT)
-             AS score,
-           count(*) AS matched_terms
-         FROM bm_scored GROUP BY 1, 2),
-       bm25_ranked AS (
-         SELECT query_id, doc_id, matched_terms, score,
-           row_number() OVER (PARTITION BY query_id
-             ORDER BY score DESC, doc_id) AS rank
-         FROM bm_agg)"""
-
-  /** Staged-corpus + sampled-window CTE stack shared by the
-    * `dedup_substring` and `dedup_substring_delta` oracles — mirrors
-    * Dedup.sampledWindows exactly (planted %7 boilerplate, length
-    * guard, md5 content-defined 1/4 sampling). Window width and
-    * boilerplate interpolate from the Scala constants (repo anti-drift
-    * convention). */
-  private val substrSelCte: String =
-    s"""staged AS (
-         SELECT doc_id, CASE WHEN doc_id % 7 = 0
-           THEN text || '${Dedup.SubstrBoilerplate}'
-           ELSE text END AS text
-         FROM documents),
-       w0 AS (
-         SELECT doc_id, text,
-           unnest(range(0, length(text) - ${Dedup.SubstrWindow - 1})) AS gs
-         FROM staged WHERE length(text) >= ${Dedup.SubstrWindow}),
-       wins AS (
-         SELECT doc_id, CAST(gs AS BIGINT) AS start,
-           md5(substring(text, CAST(gs + 1 AS INT), ${Dedup.SubstrWindow}))
-             AS h
-         FROM w0),
-       sel AS (SELECT doc_id, start, h FROM wins
-               WHERE substring(h, 1, 1) IN ('0','4','8','c'))"""
-
-  /** Island-merge CTEs (over a `marked(doc_id, start, e)` CTE) ending
-    * in a `spans` CTE — shared by the three substring-dedup oracles;
-    * mirrors Dedup.mergeSpans. */
-  private val substrSpansCte: String =
-    """flagged AS (
-         SELECT doc_id, start, e,
-           CASE WHEN start > coalesce(max(e) OVER (
-               PARTITION BY doc_id ORDER BY start
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-             THEN 1 ELSE 0 END AS opens
-         FROM marked),
-       isl AS (
-         SELECT doc_id, start, e,
-           CAST(sum(opens) OVER (PARTITION BY doc_id ORDER BY start
-             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS island
-         FROM flagged),
-       spans AS (
-         SELECT doc_id, min(start) AS span_start, max(e) AS span_end,
-           max(e) - min(start) AS span_chars
-         FROM isl GROUP BY doc_id, island)"""
-
-  /** Default span-row projection over [[substrSpansCte]]. */
-  private val substrSpansSelect: String =
-    """SELECT doc_id, span_start, span_end, span_chars
-       FROM spans ORDER BY doc_id, span_start"""
-
-  /** Shared oracle of `dedup_substring_delta` and
-    * `stream_substr_parity`: batch windows (ids ≥ the 4/5 cut) probed
-    * against the store's window set only. */
-  private lazy val substrDeltaOracleSql: String =
-    s"""WITH $substrSelCte,
-       cut AS (SELECT max(doc_id) * 4 // 5 AS cut FROM documents),
-       sel2 AS (SELECT s.*, c.cut FROM sel s CROSS JOIN cut c),
-       store AS (SELECT h FROM sel2 WHERE doc_id < cut),
-       marked AS (
-         SELECT doc_id, start, start + ${Dedup.SubstrWindow} AS e FROM sel2
-         WHERE doc_id >= cut AND h IN (SELECT h FROM store)),
-       $substrSpansCte
-       $substrSpansSelect"""
-
-  /** SimHash 32/6 signatures → pairs → edges → recursive reachability,
-    * through the `reach` CTE — shared by the `dedup_clusters` and
-    * `dedup_keep_best` oracles (both rows sit behind guard3206, so the
-    * 32/6 route in this SQL is always the route the engine took). */
-  private lazy val simhashReachCte: String =
-    s"""WITH RECURSIVE
-       ws AS (SELECT doc_id, string_split(text,' ') AS w
-              FROM documents
-              WHERE len(string_split(text,' ')) >= 3),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                range(1, len(w)-1),
-                i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-              FROM ws),
-       x AS (SELECT doc_id,
-               ('0x'||substr(sha256(shingle),1,8))::BIGINT AS w32 FROM sh),
-       bits AS (SELECT unnest(range(0,32)) AS b),
-       sgn AS (SELECT doc_id, b, sum(2*((w32 >> b) & 1) - 1) AS s
-               FROM x CROSS JOIN bits GROUP BY 1,2),
-       sig AS (SELECT doc_id,
-                 CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                          ELSE 0 END) AS BIGINT) AS simhash
-               FROM sgn GROUP BY 1),
-       pairs AS (
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash))
-           <= ${graft.operators.Dedup.SimhashMaxDist}),
-       edges AS (
-         SELECT doc_a AS s, doc_b AS d FROM pairs
-         UNION ALL SELECT doc_b, doc_a FROM pairs),
-       reach AS (
-         SELECT doc_id AS start, doc_id AS node FROM documents
-         UNION
-         SELECT r.start, e.d FROM reach r JOIN edges e ON e.s = r.node)"""
-
-  /** Shared oracle of `q_search_bm25` and `q_search_bm25_indexed`. */
-  private lazy val bm25TopOracleSql: String =
-    s"""WITH $bm25RankedCte
-       SELECT CAST(query_id AS BIGINT) AS query_id, rank, doc_id,
-         matched_terms, score
-       FROM bm25_ranked WHERE rank <= 5 ORDER BY query_id, rank"""
-
-  /** Shared by stream_window_parity and stream_rocksdb_parity: the two
-    * rows run the same windowed aggregation on different state
-    * backends and must hash-match the same batch derivation. */
-  private val windowParityOracleSql: String =
-    s"""WITH e AS (
-         SELECT ts::TIMESTAMP AS ts, event_type, value
-         FROM events WHERE event_id < ${
-           graft.streaming.EventStream.AggParityEvents})
-       SELECT (epoch_us(ts) // 300000000) * 300000000
-           AS window_start_us,
-         event_type, count(*) AS n,
-         round(sum(value), 2) AS total_value
-       FROM e GROUP BY 1, 2 ORDER BY 1, 2"""
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity),2) AS sum_qty,
-         round(sum(l_extendedprice),2) AS sum_base_price,
-         round(sum(l_extendedprice*(1.0-l_discount)),2) AS sum_disc_price,
-         round(avg(l_quantity),4) AS avg_qty,
-         count(*) AS count_order
-         FROM lineitem GROUP BY 1,2 ORDER BY 1,2""",
-    "q2_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity,
-         l_extendedprice*l_discount AS disc_amount
-         FROM lineitem
-         WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-           AND l_shipdate < TIMESTAMP '1996-01-01'
-           AND l_discount >= 0.05 AND l_quantity < 10
-         ORDER BY l_orderkey, l_linenumber""",
-    "q3_join_agg" ->
-      """SELECT c_mktsegment,
-         round(sum(l_extendedprice*(1.0-l_discount)),2) AS revenue,
-         count(DISTINCT o_orderkey) AS n_orders
-         FROM lineitem
-         JOIN orders ON l_orderkey=o_orderkey
-         JOIN customer ON o_custkey=c_custkey
-         GROUP BY 1 ORDER BY 1""",
-    "q4_semi_join" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-         FROM orders
-         WHERE EXISTS (SELECT 1 FROM lineitem
-                       WHERE l_orderkey=o_orderkey AND l_quantity>=45)
-         GROUP BY 1 ORDER BY 1""",
-    "q5_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey=c_custkey
-                             AND year(o_orderdate)=2001)
-         ORDER BY c_custkey""",
-    "q6_latest_per_key" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, o_orderstatus
-         FROM (SELECT *, row_number() OVER
-                 (PARTITION BY o_custkey
-                  ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-               FROM orders) t
-         WHERE rn=1 ORDER BY o_custkey""",
-    "q7_running_window" ->
-      """SELECT o_custkey, o_orderkey,
-         round(sum(o_totalprice) OVER
-           (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2)
-           AS running_spend,
-         coalesce(lag(o_totalprice,1) OVER
-           (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),0.0)
-           AS prev_price
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q8_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""",
-    "q9_set_ops" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate)=1995
-         EXCEPT
-         SELECT o_custkey FROM orders WHERE year(o_orderdate)=1996
-         ORDER BY o_custkey""",
-    "q10_distinct" ->
-      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-         ORDER BY 1,2""",
-    "q11_hash_multiset" ->
-      """SELECT l_orderkey,
-         string_agg(line_hash, ',' ORDER BY line_hash) AS sig,
-         count(*) AS n_chunks
-         FROM (SELECT l_orderkey,
-                 sha256(l_orderkey || '|' || l_linenumber || '|' ||
-                        l_partkey || '|' || l_suppkey) AS line_hash
-               FROM lineitem) t
-         GROUP BY 1 ORDER BY 1""",
-    "q12_conditional_agg" ->
-      """SELECT strftime(ts, '%Y-%m-%d') AS day,
-         count(*) AS n_events,
-         count(*) FILTER (WHERE event_type='error') AS n_errors,
-         count(*) FILTER (WHERE event_type='click') AS n_clicks,
-         round(sum(CASE WHEN event_type='purchase' THEN value
-                        ELSE 0.0 END),2) AS purchase_value,
-         count(DISTINCT user_id) AS n_users
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q13_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-         round(sum(o_totalprice),2) AS total
-         FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q14_event_windows" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-         event_type, count(*) AS n,
-         round(sum(value),2) AS total_value,
-         round(min(value),2) AS min_value,
-         round(max(value),2) AS max_value
-         FROM events GROUP BY 1,2 ORDER BY 1,2""",
-    "q15_sessionize" ->
-      """WITH g AS (
-           SELECT user_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts::TIMESTAMP)
-                       - epoch_us((lag(ts) OVER w)::TIMESTAMP) > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-           FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         s AS (
-           SELECT user_id, value,
-             CAST(sum(new_session) OVER
-               (PARTITION BY user_id ORDER BY ts
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS BIGINT) AS session_id
-           FROM g)
-         SELECT user_id, session_id, count(*) AS n_events,
-           round(sum(value),2) AS session_value
-         FROM s GROUP BY 1,2 ORDER BY 1,2""",
-    "q16_star_join" ->
-      """SELECT r_name, round(sum(o_totalprice),2) AS revenue,
-         count(*) AS n_orders
-         FROM orders
-         JOIN customer ON o_custkey=c_custkey
-         JOIN nation ON c_nationkey=n_nationkey
-         JOIN region ON n_regionkey=r_regionkey
-         GROUP BY 1 ORDER BY 1""",
-    "q17_asof_join" ->
-      """SELECT c.event_id, c.user_id, e.value AS prior_error_value
-         FROM (SELECT * FROM events WHERE event_type='click') c
-         ASOF JOIN (SELECT * FROM events WHERE event_type='error') e
-           ON c.user_id = e.user_id AND e.ts < c.ts
-         ORDER BY c.event_id""",
-    "q17_asof_custom" ->
-      """SELECT c.event_id, c.user_id, e.value AS prior_error_value
-         FROM (SELECT * FROM events WHERE event_type='click') c
-         ASOF JOIN (SELECT * FROM events WHERE event_type='error') e
-           ON c.user_id = e.user_id AND e.ts < c.ts
-         ORDER BY c.event_id""",
-    "q18_keyset_page" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
-         o_totalprice
-         FROM orders WHERE o_orderkey < 500
-         ORDER BY o_orderkey DESC LIMIT 25""",
-    "q19_range_pred_join" ->
-      """SELECT p_brand, count(*) AS n_lines,
-         round(avg(l_extendedprice),2) AS avg_price
-         FROM lineitem JOIN part
-           ON l_partkey=p_partkey AND l_extendedprice > p_retailprice*20
-         GROUP BY 1 ORDER BY 1""",
-    "q20_percentiles" ->
-      """SELECT o_orderstatus,
-         round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
-         round(quantile_cont(o_totalprice, 0.9), 2) AS p90,
-         round(quantile_cont(o_totalprice, 0.99), 2) AS p99,
-         count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY 1""",
-    "q23_rank_functions" ->
-      """SELECT o_orderstatus, o_orderkey,
-         rank() OVER w AS rnk,
-         dense_rank() OVER w AS drnk,
-         CAST(ntile(4) OVER w AS BIGINT) AS tile4,
-         percent_rank() OVER w AS pct_rank
-         FROM orders WHERE o_orderkey < 2000
-         WINDOW w AS (PARTITION BY o_orderstatus
-                      ORDER BY o_totalprice DESC, o_orderkey)
-         ORDER BY o_orderstatus, o_orderkey""",
-    "q24_string_funcs" ->
-      """SELECT c_custkey,
-         upper(c_name) AS up, lower(c_mktsegment) AS lo,
-         CAST(length(c_name) AS BIGINT) AS len,
-         substring(c_name, 1, 8) AS pre,
-         regexp_replace(c_name, '[0-9]+', '#', 'g') AS masked,
-         lpad(c_custkey::VARCHAR, 8, '0') AS padded,
-         c_mktsegment||'-'||c_custkey AS joined,
-         string_split(c_name, '#')[1] AS head_part,
-         reverse(c_mktsegment) AS rev
-         FROM customer ORDER BY c_custkey""",
-    "q25_json_funcs" ->
-      """SELECT event_type, count(*) AS n,
-         CAST(sum(json_extract_string(props, '$.k')::BIGINT) AS BIGINT)
-           AS sum_k,
-         min(json_extract_string(props, '$.k')::BIGINT) AS min_k,
-         max(json_extract_string(props, '$.k')::BIGINT) AS max_k
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "q26_date_funcs" ->
-      """SELECT o_orderkey,
-         strftime(o_orderdate, '%Y-%m-%d') AS d,
-         strftime(o_orderdate + INTERVAL 30 DAY, '%Y-%m-%d') AS plus30,
-         strftime(last_day(o_orderdate), '%Y-%m-%d') AS month_end,
-         CAST(datediff('day', o_orderdate::DATE, DATE '2002-01-01')
-           AS BIGINT) AS days_to_2002,
-         CAST(year(o_orderdate) AS BIGINT) AS y,
-         CAST(quarter(o_orderdate) AS BIGINT) AS q,
-         CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow
-         FROM orders WHERE o_orderkey < 1000 ORDER BY o_orderkey""",
-    "doc_pii_redact" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN
-               (CASE WHEN doc_id % 5 = 0
-                     THEN text || ' contact user' || doc_id || '@example.com'
-                     ELSE text END)
-               || ' from 10.0.' || (doc_id % 256) || '.' || (doc_id % 100)
-             WHEN doc_id % 5 = 0
-               THEN text || ' contact user' || doc_id || '@example.com'
-             ELSE text END AS text
-           FROM documents)
-         SELECT doc_id,
-           CAST(len(regexp_extract_all(text,
-             '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT)
-             AS n_emails,
-           CAST(len(regexp_extract_all(text,
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT)
-             AS n_ips,
-           sha256(regexp_replace(regexp_replace(text,
-             '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '[EMAIL]', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'))
-             AS scrubbed_hash
-         FROM t ORDER BY doc_id""",
-    "doc_quality_filter" ->
-      """WITH t AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 13 = 0 THEN text || ' ' || repeat('x', 1000)
-                  WHEN doc_id % 10 = 0 THEN text ||
-                    repeat(' #', len(string_split(text, ' ')) // 10 + 1)
-                  ELSE text END AS text
-           FROM documents),
-         m AS (
-           SELECT doc_id, text, string_split(text, ' ') AS ws,
-             CAST(length(text) AS BIGINT) AS n_chars
-           FROM t),
-         x AS (
-           SELECT doc_id,
-             CAST(len(ws) AS BIGINT) AS n_words,
-             n_chars - (CAST(len(ws) AS BIGINT) - 1) AS letters,
-             CAST(n_chars - length(replace(text, '#', '')) AS BIGINT)
-               AS hash_cnt,
-             CAST((n_chars - length(replace(text, '...', ''))) // 3
-               AS BIGINT) AS ellipsis_cnt,
-             CAST((CASE WHEN list_contains(ws, 'the') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'be') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'to') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'of') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'and') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'that') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'have') THEN 1 ELSE 0 END)
-               + (CASE WHEN list_contains(ws, 'with') THEN 1 ELSE 0 END)
-               AS BIGINT) AS stop_present
-           FROM m),
-         r AS (
-           SELECT *,
-             CASE WHEN n_words < 30 OR n_words > 100000 THEN 'word_count'
-                  WHEN letters < n_words * 3 OR letters > n_words * 10
-                    THEN 'mean_word_length'
-                  WHEN (hash_cnt + ellipsis_cnt) * 10 > n_words
-                    THEN 'symbol_ratio'
-                  WHEN stop_present < 1 THEN 'stopword_absence'
-                  ELSE NULL END AS drop_reason
-           FROM x)
-         SELECT doc_id, n_words, letters, hash_cnt, ellipsis_cnt,
-           stop_present, drop_reason,
-           CAST(CASE WHEN drop_reason IS NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS keep
-         FROM r ORDER BY doc_id""",
-    "q27_hll_sketch" ->
-      """SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS day,
-         count(DISTINCT user_id) AS exact_users,
-         CAST(abs(approx_count_distinct(user_id) - count(DISTINCT user_id))
-           * 1000 <= count(DISTINCT user_id) * 50 AS BIGINT) AS hll_ok
-         FROM events GROUP BY 1 ORDER BY day""",
-    "q28_grouping_sets" ->
-      """SELECT grouping_id(l_returnflag, l_linestatus) AS gid,
-         l_returnflag, l_linestatus, count(*) AS n,
-         round(sum(l_extendedprice),2) AS total
-         FROM lineitem
-         GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-           (l_returnflag), ())
-         ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-    "q29_pivot" ->
-      """SELECT l_returnflag,
-         round(sum(l_extendedprice) FILTER (l_linestatus = 'F'), 2) AS "F",
-         round(sum(l_extendedprice) FILTER (l_linestatus = 'O'), 2) AS "O"
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-    "q30_activity_islands" ->
-      """WITH days AS (
-           SELECT DISTINCT user_id,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-               AS BIGINT) AS d
-           FROM events),
-         g AS (SELECT user_id, d,
-                 d - row_number() OVER (PARTITION BY user_id ORDER BY d)
-                   AS grp
-               FROM days),
-         runs AS (SELECT user_id, grp, CAST(count(*) AS BIGINT) AS len,
-                    min(d) AS start_d
-                  FROM g GROUP BY 1,2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_islands,
-           CAST(max(len) AS BIGINT) AS longest_streak,
-           CAST(sum(len) AS BIGINT) AS active_days,
-           CAST(min(start_d) AS BIGINT) AS first_day
-         FROM runs GROUP BY 1 ORDER BY 1""",
-    "q21_intersect" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate)=1995
-         INTERSECT
-         SELECT o_custkey FROM orders WHERE year(o_orderdate)=1996
-         ORDER BY o_custkey""",
-    "q22_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n
-         FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "doc_chunk_overlap" ->
-      """WITH b AS (
-           SELECT doc_id,
-             rtrim(repeat(text||' ',
-               CAST(floor(4500/(length(text)+1)) AS INT) + 2)) AS big
-           FROM documents),
-         sl AS (
-           SELECT doc_id, big,
-             unnest(range(0, CAST(ceil(length(big)/3600.0) AS BIGINT))) AS i
-           FROM b),
-         ch AS (
-           SELECT doc_id, i,
-             trim(substring(big, CAST(i*3600+1 AS INT), 4000)) AS content
-           FROM sl)
-         SELECT 'doc://'||doc_id AS url, i AS chunk_index,
-           count(*) OVER (PARTITION BY doc_id) AS total_chunks,
-           sha256(content) AS chunk_id, content
-         FROM ch ORDER BY url, chunk_index""",
-    "doc_chunk_markdown" ->
-      """SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,
-         CAST(1 AS BIGINT) AS total_chunks, lang AS section,
-         sha256(content) AS chunk_id, content,
-         source||' > '||lang AS breadcrumb, source AS product_name
-         FROM (SELECT *,
-           '[Topic: '||source||' > '||lang||']'||chr(10)||
-           '# '||source||chr(10)||chr(10)||
-           '## '||lang||chr(10)||chr(10)||text AS content
-           FROM documents) t
-         ORDER BY url, chunk_index""",
-    // the BATCH aggregations the streaming windowed/session rows must
-    // emit exactly (time-ordered replay + sentinel watermark flush →
-    // the append-mode output equals the full batch result); caps
-    // interpolate EventStream.AggParityEvents so engine and oracle
-    // can never drift apart by hand-edit
-    "stream_window_parity" -> windowParityOracleSql,
-    // the RocksDB-backend run shares the default-backend oracle BY
-    // DESIGN: state-backend choice must be invisible to results
-    "stream_rocksdb_parity" -> windowParityOracleSql,
-    // the batch derivation of the streaming curation pipeline: gate
-    // (word floor + the stratified sampler's sha bucket at 500‰) then
-    // global (doc_id, pos) first-claim span dedup — ascending-order
-    // replay makes the streamed cross-batch claims equal this exactly
-    "stream_curate_parity" ->
-      s"""WITH d AS (
-           SELECT doc_id, source, text FROM documents
-           WHERE len(string_split(text, ' ')) >= 20
-             AND ('0x'||substr(sha256('smp:'||doc_id),1,12))::BIGINT
-                 % 1000 < 500),
-         w AS (SELECT doc_id, string_split(text,' ') AS ws FROM d),
-         p AS (SELECT doc_id, ws,
-                 unnest(range((len(ws)+${Curation.SpanWords - 1})
-                              //${Curation.SpanWords})) AS pos
-               FROM w),
-         segs AS (SELECT doc_id, pos,
-                    array_to_string(ws[pos*${Curation.SpanWords}+1 :
-                      pos*${Curation.SpanWords}+${Curation.SpanWords}],
-                      ' ') AS span
-                  FROM p),
-         h AS (SELECT doc_id, pos,
-                 ('0x'||substr(sha256(span),1,14))::BIGINT AS h
-               FROM segs),
-         r AS (SELECT doc_id, pos,
-                 row_number() OVER (PARTITION BY h
-                                    ORDER BY doc_id, pos) AS rn
-               FROM h),
-         pd AS (SELECT doc_id,
-                  CAST(sum(CASE WHEN rn=1 THEN 1 ELSE 0 END) AS BIGINT)
-                    AS n_new_spans
-                FROM r GROUP BY doc_id)
-         SELECT d.doc_id, d.source, pd.n_new_spans
-         FROM pd JOIN d ON pd.doc_id = d.doc_id
-         WHERE pd.n_new_spans > 0 ORDER BY d.doc_id""",
-    "stream_join_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, event_type, value,
-             event_id
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents})
-         SELECT c.event_id AS click_id, c.user_id,
-           epoch_us(c.ts) AS click_ts_us, epoch_us(r.ts) AS err_ts_us,
-           r.value AS err_value
-         FROM e c JOIN e r
-           ON c.event_type = 'click' AND r.event_type = 'error'
-           AND r.user_id = c.user_id
-           AND r.ts >= c.ts - INTERVAL 1 HOUR AND r.ts < c.ts
-         ORDER BY click_id, err_ts_us""",
-    // the late-replay drop rule: the same quartile assignment the
-    // stager uses (identical double arithmetic on epoch millis), with
-    // slice 1 — the slice delivered after the watermark passed it —
-    // excluded row-by-row, straddling windows keeping their other rows
-    "stream_late_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, event_type, value
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         b AS (
-           SELECT min(epoch_ms(ts)) AS lo,
-             max(epoch_ms(ts)) - min(epoch_ms(ts)) + 1 AS span
-           FROM e),
-         s AS (
-           SELECT ts, event_type, value,
-             least(3, floor((epoch_ms(ts) - lo) * 4.0 / span)) AS slice
-           FROM e CROSS JOIN b)
-         SELECT (epoch_us(ts) // 300000000) * 300000000
-             AS window_start_us,
-           event_type, count(*) AS n,
-           round(sum(value), 2) AS total_value
-         FROM s WHERE slice <> 1
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    // stream-static enrichment: batch left join against the gapped
-    // broadcast dim — per-micro-batch re-broadcast must be invisible
-    // event_id rides along as the ORDER BY tie-breaker so the sort key
-    // is unique by construction (a (ts,user,type) tie at a larger
-    // corpus would otherwise make row order engine-dependent)
-    "stream_enrich_parity" ->
-      s"""WITH e AS (
-           SELECT event_id, ts::TIMESTAMP AS ts, user_id, event_type,
-             value
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         d AS (
-           SELECT c_custkey, n_name, c_mktsegment
-           FROM customer JOIN nation ON c_nationkey = n_nationkey
-           WHERE c_custkey % 3 <> 0)
-         SELECT e.event_id,
-           CAST(epoch_us(e.ts) AS BIGINT) AS ts_us, e.user_id,
-           e.event_type, round(e.value, 2) AS value,
-           COALESCE(d.n_name, 'unknown') AS nation,
-           COALESCE(d.c_mktsegment, 'unknown') AS segment
-         FROM e LEFT JOIN d ON e.user_id = d.c_custkey
-         ORDER BY ts_us, user_id, event_type, e.event_id""",
-    "stream_dedup_parity" ->
-      s"""SELECT event_id, user_id,
-           CAST(epoch_us(ts::TIMESTAMP) AS BIGINT) AS ts_us,
-           event_type, round(value, 2) AS value
-         FROM events WHERE event_id < ${
-           graft.streaming.EventStream.AggParityEvents}
-         ORDER BY event_id""",
-    // the outer variant: unmatched clicks must surface exactly once
-    // with null err columns — the filtered CTEs keep the event_type
-    // predicates out of the LEFT JOIN's ON clause, where they would
-    // wrongly preserve non-click rows
-    "stream_outer_join_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, event_type, value,
-             event_id
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         c AS (
-           SELECT event_id AS click_id, user_id, ts FROM e
-           WHERE event_type = 'click'),
-         r AS (
-           SELECT user_id, ts, value FROM e WHERE event_type = 'error')
-         SELECT c.click_id, c.user_id,
-           epoch_us(c.ts) AS click_ts_us, epoch_us(r.ts) AS err_ts_us,
-           r.value AS err_value
-         FROM c LEFT JOIN r
-           ON r.user_id = c.user_id
-           AND r.ts >= c.ts - INTERVAL 1 HOUR AND r.ts < c.ts
-         ORDER BY click_id, err_ts_us""",
-    // the FULL variant: unmatched rows from BOTH sides, user taken
-    // from whichever side is present; null ordering pinned NULLS FIRST
-    // (DuckDB defaults nulls-last on ASC, Spark nulls-first)
-    "stream_full_outer_join_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, event_type, value,
-             event_id
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         c AS (
-           SELECT event_id AS click_id, user_id, ts FROM e
-           WHERE event_type = 'click'),
-         r AS (
-           SELECT user_id, ts, value FROM e WHERE event_type = 'error')
-         SELECT c.click_id,
-           COALESCE(c.user_id, r.user_id) AS user_id,
-           epoch_us(c.ts) AS click_ts_us, epoch_us(r.ts) AS err_ts_us,
-           r.value AS err_value
-         FROM c FULL JOIN r
-           ON r.user_id = c.user_id
-           AND r.ts >= c.ts - INTERVAL 1 HOUR AND r.ts < c.ts
-         ORDER BY click_id NULLS FIRST, user_id,
-           err_ts_us NULLS FIRST, err_value""",
-    // the RIGHT variant: unmatched errors surface once with a null
-    // click side — mirror of the left row, exercising the error
-    // side's eviction-driven null emission
-    "stream_right_outer_join_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, event_type, value,
-             event_id
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         c AS (
-           SELECT event_id AS click_id, user_id, ts FROM e
-           WHERE event_type = 'click'),
-         r AS (
-           SELECT user_id, ts, value FROM e WHERE event_type = 'error')
-         SELECT c.click_id,
-           COALESCE(c.user_id, r.user_id) AS user_id,
-           epoch_us(c.ts) AS click_ts_us, epoch_us(r.ts) AS err_ts_us,
-           r.value AS err_value
-         FROM c RIGHT JOIN r
-           ON r.user_id = c.user_id
-           AND r.ts >= c.ts - INTERVAL 1 HOUR AND r.ts < c.ts
-         ORDER BY click_id NULLS FIRST, user_id,
-           err_ts_us NULLS FIRST, err_value""",
-    // the SEMI variant: a click surfaces once iff ANY error matched
-    // its interval — EXISTS, not a join, so a click with three matches
-    // stays one row and carries no error columns
-    "stream_semi_join_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, event_type, value,
-             event_id
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         c AS (
-           SELECT event_id AS click_id, user_id, ts FROM e
-           WHERE event_type = 'click'),
-         r AS (
-           SELECT user_id, ts FROM e WHERE event_type = 'error')
-         SELECT c.click_id, c.user_id, epoch_us(c.ts) AS click_ts_us
-         FROM c
-         WHERE EXISTS (
-           SELECT 1 FROM r
-           WHERE r.user_id = c.user_id
-             AND r.ts >= c.ts - INTERVAL 1 HOUR AND r.ts < c.ts)
-         ORDER BY click_id""",
-    "stream_state_parity" ->
-      s"""SELECT user_id, count(*) AS n_events,
-           round(sum(value), 2) AS total_value
-         FROM events WHERE event_id < ${
-           graft.streaming.EventStream.AggParityEvents}
-         GROUP BY user_id ORDER BY user_id""",
-    // transformWithState twin: shares stream_state_parity's oracle
-    // VERBATIM — the two arbitrary-state APIs must be result-
-    // indistinguishable (and this row runs on the RocksDB provider).
-    "stream_tws_parity" ->
-      s"""SELECT user_id, count(*) AS n_events,
-           round(sum(value), 2) AS total_value
-         FROM events WHERE event_id < ${
-           graft.streaming.EventStream.AggParityEvents}
-         GROUP BY user_id ORDER BY user_id""",
-    "stream_session_parity" ->
-      s"""WITH e AS (
-           SELECT ts::TIMESTAMP AS ts, user_id, value
-           FROM events WHERE event_id < ${
-             graft.streaming.EventStream.AggParityEvents}),
-         g AS (
-           SELECT user_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                       > 1800000000
-                  THEN 1 ELSE 0 END AS brk
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-         s AS (
-           SELECT user_id, ts, value,
-             sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-           FROM g)
-         SELECT epoch_us(min(ts)) AS session_start_us,
-           epoch_us(max(ts)) + 1800000000 AS session_end_us,
-           user_id, count(*) AS n_events,
-           round(sum(value), 2) AS total_value
-         FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start_us""",
-    // the BATCH derivation of the same pages the streaming entry
-    // ingests: a hash match against the streamed store's contents IS
-    // the stream/batch parity proof (chunk ids are content hashes)
-    // the corpus cap interpolates EventStream.ParityFixtureDocs so the
-    // engine fixture and this oracle can never drift apart by hand-edit
-    "stream_batch_parity" ->
-      s"""SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,
-         CAST(1 AS BIGINT) AS total_chunks, lang AS section,
-         sha256(content) AS chunk_id, content
-         FROM (SELECT *,
-           '[Topic: '||source||' > '||lang||']'||chr(10)||
-           '# '||source||chr(10)||chr(10)||
-           '## '||lang||chr(10)||chr(10)||text AS content
-           FROM documents
-           WHERE doc_id < ${streaming.EventStream.ParityFixtureDocs}) t
-         ORDER BY url, chunk_index""",
-    // after a fully REDUNDANT second sync with embed-reuse on, the
-    // store must still match the batch derivation of the 200-doc slice
-    "stream_resync_parity" ->
-      """SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,
-         CAST(1 AS BIGINT) AS total_chunks, lang AS section,
-         sha256(content) AS chunk_id, content
-         FROM (SELECT *,
-           '[Topic: '||source||' > '||lang||']'||chr(10)||
-           '# '||source||chr(10)||chr(10)||
-           '## '||lang||chr(10)||chr(10)||text AS content
-           FROM documents WHERE doc_id < 200) t
-         ORDER BY url, chunk_index""",
-    // the same batch derivation MINUS the tombstoned docs: the streamed
-    // store after the 404-purge micro-batches must hold exactly the
-    // batch cleanup's survivor set, every chunk bit-identical
-    "stream_delete_parity" ->
-      s"""SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,
-         CAST(1 AS BIGINT) AS total_chunks, lang AS section,
-         sha256(content) AS chunk_id, content
-         FROM (SELECT *,
-           '[Topic: '||source||' > '||lang||']'||chr(10)||
-           '# '||source||chr(10)||chr(10)||
-           '## '||lang||chr(10)||chr(10)||text AS content
-           FROM documents
-           WHERE doc_id < ${streaming.EventStream.ParityFixtureDocs}
-             AND doc_id % 13 <> 0) t
-         ORDER BY url, chunk_index""",
-    "doc_chunk_token" ->
-      """WITH idx AS (
-           SELECT doc_id, text,
-             unnest(range(0, CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-           FROM documents
-         ), w AS (
-           SELECT doc_id, i,
-             trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-           FROM idx
-         ), kept AS (
-           SELECT doc_id, piece,
-             row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY doc_id) AS total_chunks
-           FROM w WHERE piece <> ''
-         )
-         SELECT 'doc://'||doc_id AS url, chunk_index, total_chunks,
-           sha256('doc://'||doc_id||'::'||piece) AS chunk_id,
-           piece AS content
-         FROM kept ORDER BY url, chunk_index""",
-    "doc_get_chunks" ->
-      """WITH idx AS (
-           SELECT doc_id, text,
-             unnest(range(0, CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-           FROM documents
-         ), w AS (
-           SELECT doc_id, i,
-             trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-           FROM idx
-         ), kept AS (
-           SELECT doc_id, piece,
-             row_number() OVER (PARTITION BY doc_id ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY doc_id) AS total_chunks
-           FROM w WHERE piece <> ''
-         )
-         SELECT 'doc://'||doc_id AS url, chunk_index, total_chunks,
-           sha256('doc://'||doc_id||'::'||piece) AS chunk_id,
-           piece AS content
-         FROM kept
-         WHERE doc_id = 42 AND chunk_index BETWEEN 0 AND 2
-         ORDER BY chunk_index""",
-    "doc_binary_meta" ->
-      """SELECT doc_id,
-         CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-         sha256(text) AS content_sha,
-         'application/octet-stream' AS mime
-         FROM documents ORDER BY doc_id""",
-    "doc_media_resize" ->
-      """SELECT 'doc://'||doc_id AS path,
-           'application/octet-stream' AS mime,
-           224 AS width, 224 AS height,
-           sha256(sha256(text) || ':224x224:' ||
-             CAST(octet_length(encode(text)) AS VARCHAR)) AS resized_sha
-         FROM documents ORDER BY path""",
-    // real PNG decode+resample replay: DuckDB recomputes the resized
-    // raster checksum from the pixel formula and the integer
-    // nearest-neighbor mapping (sx = tx*w//5, sy = ty*h//3) — PNG is
-    // lossless, so encode→inflate→defilter→resample must land on
-    // exactly these values
-    "doc_png_resize" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(8 + doc_id % 9 AS INTEGER) AS src_w,
-             CAST(8 + doc_id % 7 AS INTEGER) AS src_h,
-             CAST(CASE WHEN doc_id % 3 = 0 THEN 1
-                       WHEN doc_id % 3 = 1 THEN 4
-                       ELSE 3 END AS INTEGER) AS channels
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, channels, t.i AS i,
-             (t.i // (5 * channels)) AS ty,
-             (t.i % (5 * channels)) // channels AS tx,
-             t.i % channels AS c
-           FROM d, unnest(range(0, 3 * 5 * d.channels)) AS t(i)),
-         v AS (
-           SELECT doc_id, src_w, src_h, channels, i,
-             (doc_id * 31 + (tx * src_w // 5) * 7 +
-              (ty * src_h // 3) * 13 + c * 101) % 256 AS val
-           FROM px)
-         SELECT doc_id, src_w, src_h, channels,
-           CAST(15 * channels AS BIGINT) AS n_resized_bytes,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h, channels
-         ORDER BY doc_id""",
-    // real baseline-JPEG decode replay: DC-only fixture blocks decode
-    // to exactly flat 128 + dc*2 (quant 16, dc*16 ≡ 0 mod 8 → the
-    // IDCT value is integral), so DuckDB replays the resized raster
-    // checksum from the block formula; resample mapping as in the
-    // PNG/GIF rows (sx = tx*w//5, sy = ty*h//3)
-    "doc_jpeg_resize" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(8 * (2 + doc_id % 3) AS INTEGER) AS src_w,
-             CAST(8 * (2 + doc_id % 2) AS INTEGER) AS src_h
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, t.i AS i,
-             (t.i // 5) AS ty, t.i % 5 AS tx
-           FROM d, unnest(range(0, 15)) AS t(i)),
-         v AS (
-           SELECT doc_id, src_w, src_h, i,
-             128 + 2 * (((doc_id + ((tx * src_w // 5) // 8) * 3 +
-                          ((ty * src_h // 3) // 8) * 7) % 50) - 25) AS val
-           FROM px)
-         SELECT doc_id, src_w, src_h,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h
-         ORDER BY doc_id""",
-    // real COLOR-JPEG decode replay: per-component flat YCbCr blocks
-    // (128 + 2*dc, same exact-IDCT argument as doc_jpeg_resize), then
-    // DuckDB recomputes the SAME fixed-point YCbCr->RGB the decoder
-    // uses (libjpeg 16-bit constants; numerators provably >= 0, so
-    // `//` floor-division == the decoder's arithmetic shift)
-    "doc_jpeg_color" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(8 * (2 + doc_id % 3) AS INTEGER) AS src_w,
-             CAST(8 * (2 + doc_id % 2) AS INTEGER) AS src_h
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, t.i AS i,
-             (t.i // 15) AS ty,
-             (t.i % 15) // 3 AS tx,
-             t.i % 3 AS c
-           FROM d, unnest(range(0, 45)) AS t(i)),
-         blk AS (
-           SELECT doc_id, src_w, src_h, i, c,
-             ((tx * src_w // 5) // 8) AS bx,
-             ((ty * src_h // 3) // 8) AS by
-           FROM px),
-         ycc AS (
-           SELECT doc_id, src_w, src_h, i, c,
-             128 + 2 * (((doc_id + bx * 3 + by * 7) % 50) - 25) AS yv,
-             128 + 2 * (((doc_id * 5 + bx * 11 + by * 2) % 40) - 20) AS cb,
-             128 + 2 * (((doc_id * 3 + bx * 5 + by * 13) % 40) - 20) AS cr
-           FROM blk),
-         v AS (
-           SELECT doc_id, src_w, src_h, i,
-             CASE c
-               WHEN 0 THEN least(255, greatest(0,
-                 (yv * 65536 + 91881 * (cr - 128) + 32768) // 65536))
-               WHEN 1 THEN least(255, greatest(0,
-                 (yv * 65536 - 22554 * (cb - 128)
-                  - 46802 * (cr - 128) + 32768) // 65536))
-               ELSE least(255, greatest(0,
-                 (yv * 65536 + 116130 * (cb - 128) + 32768) // 65536))
-             END AS val
-           FROM ycc)
-         SELECT doc_id, src_w, src_h,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h
-         ORDER BY doc_id""",
-    // real PROGRESSIVE-JPEG decode replay: identical contract to
-    // doc_jpeg_color (flat YCbCr blocks, fixed-point RGB) but the
-    // Spark side decodes a multi-scan SOF2 file — only the DC-grid
-    // formulas differ, so a progressive-path bug (scan sequencing,
-    // EOB runs, coefficient buffer) shifts the checksum
-    "doc_jpeg_prog" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(8 * (2 + doc_id % 3) AS INTEGER) AS src_w,
-             CAST(8 * (2 + doc_id % 2) AS INTEGER) AS src_h
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, t.i AS i,
-             (t.i // 15) AS ty,
-             (t.i % 15) // 3 AS tx,
-             t.i % 3 AS c
-           FROM d, unnest(range(0, 45)) AS t(i)),
-         blk AS (
-           SELECT doc_id, src_w, src_h, i, c,
-             ((tx * src_w // 5) // 8) AS bx,
-             ((ty * src_h // 3) // 8) AS by
-           FROM px),
-         ycc AS (
-           SELECT doc_id, src_w, src_h, i, c,
-             128 + 2 * (((doc_id * 7 + bx * 5 + by * 3) % 50) - 25) AS yv,
-             128 + 2 * (((doc_id + bx * 2 + by * 11) % 40) - 20) AS cb,
-             128 + 2 * (((doc_id * 11 + bx * 7 + by * 5) % 40) - 20) AS cr
-           FROM blk),
-         v AS (
-           SELECT doc_id, src_w, src_h, i,
-             CASE c
-               WHEN 0 THEN least(255, greatest(0,
-                 (yv * 65536 + 91881 * (cr - 128) + 32768) // 65536))
-               WHEN 1 THEN least(255, greatest(0,
-                 (yv * 65536 - 22554 * (cb - 128)
-                  - 46802 * (cr - 128) + 32768) // 65536))
-               ELSE least(255, greatest(0,
-                 (yv * 65536 + 116130 * (cb - 128) + 32768) // 65536))
-             END AS val
-           FROM ycc)
-         SELECT doc_id, src_w, src_h,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h
-         ORDER BY doc_id""",
-    // real WARC parse replay: DuckDB rebuilds both records' bodies
-    // from the fixture formulas (warcinfo constant; response html/404
-    // by id) and replays length + weighted byte checksum; odd ids are
-    // gzipped on the Spark side, so a broken gunzip fails half the
-    // corpus while the oracle stays compression-blind
-    "src_scan_warc" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         r1 AS (
-           SELECT doc_id, 0 AS record_idx, 'warcinfo' AS warc_type,
-             -1 AS http_status,
-             'software: graft' || chr(13) || chr(10) AS body
-           FROM d),
-         r2 AS (
-           SELECT doc_id, 1 AS record_idx, 'response' AS warc_type,
-             CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END
-               AS http_status,
-             CASE WHEN doc_id % 13 = 0 THEN 'Not Found'
-               ELSE '<html><body><h1>Doc ' || doc_id || '</h1><p>' ||
-                    repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) ||
-                    '</p></body></html>'
-             END AS body
-           FROM d),
-         u AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2),
-         px AS (
-           SELECT doc_id, record_idx, warc_type, http_status, body,
-             t.i AS i
-           FROM u, unnest(range(0, 200)) AS t(i)
-           WHERE t.i < length(body)),
-         v AS (
-           SELECT doc_id, record_idx, warc_type, http_status,
-             CAST(length(body) AS BIGINT) AS n_body_bytes,
-             ord(substr(body, CAST(i + 1 AS INTEGER), 1))
-               * (1 + i % 97) AS term
-           FROM px)
-         SELECT doc_id, record_idx, warc_type, http_status,
-           n_body_bytes, CAST(sum(term) AS BIGINT) AS body_checksum
-         FROM v
-         GROUP BY doc_id, record_idx, warc_type, http_status,
-           n_body_bytes
-         ORDER BY doc_id, record_idx""",
-    // WARC -> markdown end-to-end: the 404 fixtures drop at the
-    // 200/text-html filter; the survivors' markdown is the real
-    // converter's output, rebuilt verbatim by DuckDB
-    "ingest_warc_e2e" ->
-      """SELECT doc_id,
-           'https://archive.example.com/doc/' || doc_id AS url,
-           '# Doc ' || doc_id || chr(10) || chr(10) ||
-             repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) AS markdown
-         FROM documents
-         WHERE doc_id % 13 != 0
-         ORDER BY doc_id""",
-    // archive-stream INGEST parity: the streaming markdown derivation
-    // over two landing waves equals the batch ingest_warc_e2e rows —
-    // the 404s drop at the status filter, the markdown is the real
-    // converter's output rebuilt verbatim
-    "stream_warc_ingest" ->
-      """SELECT doc_id,
-           'https://archive.example.com/doc/' || doc_id AS url,
-           '# Doc ' || doc_id || chr(10) || chr(10) ||
-             repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) AS markdown
-         FROM documents
-         WHERE doc_id % 13 != 0
-         ORDER BY doc_id""",
-    // archive-stream parity: two landing waves through the
-    // checkpointed micro-batch stream must union to exactly the batch
-    // connector's response rows — a re-read or skipped file breaks
-    // the count or a checksum
-    "stream_warc_parity" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         r2 AS (
-           SELECT doc_id, 'response' AS warc_type,
-             CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END
-               AS http_status,
-             CASE WHEN doc_id % 13 = 0 THEN 'Not Found'
-               ELSE '<html><body><h1>Doc ' || doc_id || '</h1><p>' ||
-                    repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) ||
-                    '</p></body></html>'
-             END AS body
-           FROM d),
-         px AS (
-           SELECT doc_id, warc_type, http_status, body, t.i AS i
-           FROM r2, unnest(range(0, 200)) AS t(i)
-           WHERE t.i < length(body)),
-         v AS (
-           SELECT doc_id, warc_type, http_status,
-             CAST(length(body) AS BIGINT) AS n_body_bytes,
-             ord(substr(body, CAST(i + 1 AS INTEGER), 1))
-               * (1 + i % 97) AS term
-           FROM px)
-         SELECT doc_id, warc_type, http_status, n_body_bytes,
-           CAST(sum(term) AS BIGINT) AS body_checksum
-         FROM v
-         GROUP BY doc_id, warc_type, http_status, n_body_bytes
-         ORDER BY doc_id""",
-    // V2-connector replay: the response rows of src_scan_warc (the
-    // warcinfo rows drop at the pushed warc_type filter)
-    "src_scan_warc_v2" ->
-      """WITH d AS (SELECT doc_id FROM documents),
-         r2 AS (
-           SELECT doc_id, 'response' AS warc_type,
-             CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END
-               AS http_status,
-             CASE WHEN doc_id % 13 = 0 THEN 'Not Found'
-               ELSE '<html><body><h1>Doc ' || doc_id || '</h1><p>' ||
-                    repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) ||
-                    '</p></body></html>'
-             END AS body
-           FROM d),
-         px AS (
-           SELECT doc_id, warc_type, http_status, body, t.i AS i
-           FROM r2, unnest(range(0, 200)) AS t(i)
-           WHERE t.i < length(body)),
-         v AS (
-           SELECT doc_id, warc_type, http_status,
-             CAST(length(body) AS BIGINT) AS n_body_bytes,
-             ord(substr(body, CAST(i + 1 AS INTEGER), 1))
-               * (1 + i % 97) AS term
-           FROM px)
-         SELECT doc_id, warc_type, http_status, n_body_bytes,
-           CAST(sum(term) AS BIGINT) AS body_checksum
-         FROM v
-         GROUP BY doc_id, warc_type, http_status, n_body_bytes
-         ORDER BY doc_id""",
-    // WET replay: DuckDB rebuilds the conversion record's extracted
-    // text verbatim (odd ids gzip on the Spark side — compression
-    // must stay invisible, exactly as in src_scan_warc)
-    "src_scan_wet" ->
-      """WITH t AS (
-           SELECT doc_id,
-             'Doc ' || doc_id || chr(10) ||
-               repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) AS text
-           FROM documents)
-         SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars, text
-         FROM t
-         ORDER BY doc_id""",
-    // quarantine surface replay: every 17th archive truncates
-    // mid-header -> (0 records, 'truncated' at record 0); everyone
-    // else parses both records cleanly with no error
-    "src_warc_quarantine" ->
-      """SELECT doc_id,
-           CASE WHEN doc_id % 17 = 0 THEN 0 ELSE 2 END AS n_records,
-           CASE WHEN doc_id % 17 = 0 THEN 'truncated' ELSE '' END
-             AS err_kind,
-           CASE WHEN doc_id % 17 = 0 THEN 0 ELSE -1 END AS err_at
-         FROM documents
-         ORDER BY doc_id""",
-    // CDX replay: DuckDB reconstructs each response record's byte
-    // offset and framed length from the encoder's exact header lines
-    // (every line length + CRLF + the Content-Length arithmetic) and
-    // replays the payload checksum — a one-CRLF drift in the
-    // parser's byte count fails every row
-    "layout_warc_cdx" ->
-      """WITH d AS (SELECT doc_id FROM documents
-                    WHERE CAST(doc_id AS VARCHAR) LIKE '1%'),
-         b AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 13 = 0 THEN 'Not Found'
-               ELSE '<html><body><h1>Doc ' || doc_id || '</h1><p>' ||
-                    repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) ||
-                    '</p></body></html>' END AS body,
-             CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END
-               AS http_status,
-             CASE WHEN doc_id % 13 = 0
-               THEN 'HTTP/1.1 404 Not Found' || chr(13) || chr(10) ||
-                    'Content-Type: text/plain'
-               ELSE 'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-                    'Content-Type: text/html' END AS http_head
-           FROM d),
-         n AS (
-           SELECT doc_id, body, http_status,
-             length(http_head) + 4 + length(body) AS content_length
-           FROM b),
-         h AS (
-           SELECT doc_id, body, http_status, content_length,
-             length('WARC/1.0') + 2 + length('WARC-Type: warcinfo') + 2
-             + length('WARC-Record-ID: <urn:uuid:rec-0>') + 2
-             + length('WARC-Date: 2026-01-01T00:00:00Z') + 2
-             + length('Content-Length: 17') + 2 + 2
-             + length('software: graft') + 2 + 4 AS rec_offset,
-             length('WARC/1.0') + 2 + length('WARC-Type: response') + 2
-             + length('WARC-Record-ID: <urn:uuid:rec-1>') + 2
-             + length('WARC-Date: 2026-01-01T00:00:00Z') + 2
-             + length('WARC-Target-URI: https://archive.example.com/doc/'
-                      || doc_id) + 2
-             + length('Content-Type: application/http; msgtype=response')
-             + 2
-             + length('Content-Length: ' || content_length) + 2 + 2
-             + content_length AS rec_bytes
-           FROM n),
-         px AS (
-           SELECT doc_id, http_status, rec_offset, rec_bytes,
-             CAST(length(body) AS BIGINT) AS n_body_bytes, body, t.i AS i
-           FROM h, unnest(range(0, 200)) AS t(i)
-           WHERE t.i < length(body))
-         SELECT doc_id, http_status,
-           CAST(rec_offset AS BIGINT) AS rec_offset,
-           CAST(rec_bytes AS BIGINT) AS rec_bytes, n_body_bytes,
-           CAST(sum(ord(substr(body, CAST(i + 1 AS INTEGER), 1))
-                    * (1 + i % 97)) AS BIGINT) AS body_checksum
-         FROM px
-         GROUP BY doc_id, http_status, rec_offset, rec_bytes,
-           n_body_bytes
-         ORDER BY doc_id""",
-    // compressed-seek CDX replay: member offsets are deflate-output-
-    // dependent, so the oracle replays the FETCHED record content —
-    // the url-prefix selection's status/length/checksum — which only
-    // match if the member boundaries and seeks were right
-    "layout_warc_cdx_gz" ->
-      """WITH d AS (SELECT doc_id FROM documents
-                    WHERE CAST(doc_id AS VARCHAR) LIKE '1%'),
-         b AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 13 = 0 THEN 'Not Found'
-               ELSE '<html><body><h1>Doc ' || doc_id || '</h1><p>' ||
-                    repeat('ab', CAST(5 + doc_id % 7 AS INTEGER)) ||
-                    '</p></body></html>' END AS body,
-             CASE WHEN doc_id % 13 = 0 THEN 404 ELSE 200 END
-               AS http_status
-           FROM d),
-         px AS (
-           SELECT doc_id, http_status,
-             CAST(length(body) AS BIGINT) AS n_body_bytes, body, t.i AS i
-           FROM b, unnest(range(0, 200)) AS t(i)
-           WHERE t.i < length(body))
-         SELECT doc_id, http_status, n_body_bytes,
-           CAST(sum(ord(substr(body, CAST(i + 1 AS INTEGER), 1))
-                    * (1 + i % 97)) AS BIGINT) AS body_checksum
-         FROM px
-         GROUP BY doc_id, http_status, n_body_bytes
-         ORDER BY doc_id""",
-    // revisit reconciliation replay: record type from the fixture
-    // formula (404 every 13th, changed response every 3rd, revisit
-    // otherwise), then store gap (every 11th dropped) and digest
-    // corruption (every 7th) — same precedence as the engine's CASE
-    "sync_warc_revisit" ->
-      """WITH dec AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 13 = 0 THEN 'error_page'
-                  WHEN doc_id % 3 = 0 THEN 'ingest_response'
-                  WHEN doc_id % 11 = 0 THEN 'fetch_store_gap'
-                  WHEN doc_id % 7 = 0 THEN 'fetch_digest_gap'
-                  ELSE 'skip_revisit' END AS decision
-           FROM documents)
-         SELECT decision, count(*) AS n
-         FROM dec
-         GROUP BY decision
-         ORDER BY decision""",
-    // real audio resample replay: DuckDB recomputes the integer
-    // linear interpolation (pos/frac via //-division and mod on
-    // non-negative fixture samples, last-sample clamp via least) and
-    // the output length — floor-vs-truncate or off-by-one drift on
-    // the Spark side shifts the checksum or the n_out column
-    "doc_audio_resample" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(40 + doc_id % 17 AS BIGINT) AS n_in,
-             CAST(16000 - (doc_id % 5) * 1600 AS INTEGER) AS dst_rate
-           FROM documents),
-         o AS (
-           SELECT doc_id, n_in, dst_rate,
-             CAST((n_in * dst_rate) // 8000 AS BIGINT) AS n_out
-           FROM d),
-         jj AS (
-           SELECT doc_id, n_in, dst_rate, n_out, t.j AS j
-           FROM o, unnest(range(0, 120)) AS t(j)
-           WHERE t.j < n_out),
-         p AS (
-           SELECT doc_id, n_in, dst_rate, n_out, j,
-             (j * 8000) // dst_rate AS pos,
-             (j * 8000) % dst_rate AS frac
-           FROM jj),
-         v AS (
-           SELECT doc_id, n_in, dst_rate, n_out, j,
-             (((doc_id * 13 + pos * 7) % 2048) * (dst_rate - frac)
-              + ((doc_id * 13 + least(pos + 1, n_in - 1) * 7) % 2048)
-                * frac) // dst_rate AS val
-           FROM p)
-         SELECT doc_id, n_in, dst_rate, n_out,
-           CAST(sum(val * (1 + j % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, n_in, dst_rate, n_out
-         ORDER BY doc_id""",
-    // real MJPEG-AVI video decode replay: one row per (doc, frame);
-    // ts replays the avih 40ms period, checksum the per-frame
-    // flat-block + fixed-point-RGB formulas (frames are 16x16 DC-only
-    // color JPEGs whose DC grids mix doc id and frame index, so a
-    // frame served from the wrong movi offset cannot hash-match)
-    "doc_avi_frames" ->
-      """WITH d AS (
-           SELECT doc_id, CAST(2 + doc_id % 3 AS INTEGER) AS nf
-           FROM documents),
-         fr AS (
-           SELECT doc_id, t.f AS frame_idx
-           FROM d, unnest(range(0, 4)) AS t(f)
-           WHERE t.f < nf),
-         px AS (
-           SELECT doc_id, frame_idx, t.i AS i,
-             ((t.i // 3) % 16) AS x,
-             (t.i // 48) AS y,
-             t.i % 3 AS c
-           FROM fr, unnest(range(0, 768)) AS t(i)),
-         blk AS (
-           SELECT doc_id, frame_idx, i, c,
-             (x // 8) AS bx, (y // 8) AS by
-           FROM px),
-         ycc AS (
-           SELECT doc_id, frame_idx, i, c,
-             128 + 2 * (((doc_id + frame_idx * 9 + bx * 3 + by * 7)
-                         % 50) - 25) AS yv,
-             128 + 2 * (((doc_id * 5 + frame_idx + bx * 11 + by * 2)
-                         % 40) - 20) AS cb,
-             128 + 2 * (((doc_id * 3 + frame_idx * 7 + bx * 5 + by * 13)
-                         % 40) - 20) AS cr
-           FROM blk),
-         v AS (
-           SELECT doc_id, frame_idx, i,
-             CASE c
-               WHEN 0 THEN least(255, greatest(0,
-                 (yv * 65536 + 91881 * (cr - 128) + 32768) // 65536))
-               WHEN 1 THEN least(255, greatest(0,
-                 (yv * 65536 - 22554 * (cb - 128)
-                  - 46802 * (cr - 128) + 32768) // 65536))
-               ELSE least(255, greatest(0,
-                 (yv * 65536 + 116130 * (cb - 128) + 32768) // 65536))
-             END AS val
-           FROM ycc)
-         SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-           CAST(frame_idx * 40 AS BIGINT) AS ts_ms,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, frame_idx
-         ORDER BY doc_id, frame_idx""",
-    // DIB-video replay: lossless codecs (BI_RGB / BI_RLE8), so DuckDB
-    // recomputes the decoded raster checksum straight from the pixel
-    // formulas — every 3rd id is RLE8 (gray palette: all channels =
-    // the index), every 5th declares audio first (video as '01db'),
-    // so a stream-0-only demuxer or a broken RLE walk fails whole
-    // residue classes
-    "doc_avi_rgb" ->
-      """WITH d AS (
-           SELECT doc_id, 4 + doc_id % 3 AS w, 3 + doc_id % 2 AS h
-           FROM documents),
-         f AS (
-           SELECT doc_id, w, h, t.f AS frame_idx
-           FROM d, unnest(range(0, 2)) AS t(f)),
-         px AS (
-           SELECT doc_id, w, h, frame_idx, t.j AS j,
-             CASE WHEN doc_id % 3 = 0
-               THEN (doc_id * 11 + frame_idx * 17 + (t.j // 3) * 5) % 256
-               ELSE (doc_id * 7 + frame_idx * 13 + t.j * 3) % 256
-             END AS val
-           FROM f, unnest(range(0, 90)) AS t(j)
-           WHERE t.j < w * h * 3)
-         SELECT doc_id, frame_idx, CAST(w AS BIGINT) AS w,
-           CAST(h AS BIGINT) AS h,
-           CAST(sum(val * (1 + j % 97)) AS BIGINT) AS checksum
-         FROM px
-         GROUP BY doc_id, frame_idx, w, h
-         ORDER BY doc_id, frame_idx""",
-    // inter-frame (Microsoft RLE) replay: canvas evolution as a
-    // latest-update-wins CASE over the three pixel formulas — a
-    // canvas reset between frames or a mis-walked delta jump shifts
-    // every delta frame's checksum
-    "doc_avi_delta" ->
-      """WITH d AS (
-           SELECT doc_id, 4 + doc_id % 3 AS w, 3 + doc_id % 2 AS h
-           FROM documents),
-         f AS (
-           SELECT doc_id, w, h, t.f AS frame_idx
-           FROM d, unnest(range(0, 3)) AS t(f)),
-         px AS (
-           SELECT doc_id, frame_idx, t.j AS j, (t.j // 3) AS p
-           FROM f, unnest(range(0, 90)) AS t(j)
-           WHERE t.j < w * h * 3),
-         v AS (
-           SELECT doc_id, frame_idx, j,
-             CASE
-               WHEN frame_idx >= 2 AND (p + doc_id) % 5 = 0
-                 THEN (doc_id * 9 + p * 13) % 256
-               WHEN frame_idx >= 1 AND (p + doc_id) % 4 = 0
-                 THEN (doc_id * 5 + p * 11) % 256
-               ELSE (doc_id * 3 + p * 7) % 256
-             END AS val
-           FROM px)
-         SELECT doc_id, frame_idx,
-           CAST(sum(val * (1 + j % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, frame_idx
-         ORDER BY doc_id, frame_idx""",
-    // real BMP decode replay: lossless like PNG, so DuckDB recomputes
-    // the resized-raster checksum straight from the pixel formula; a
-    // missed bottom-up flip, stride-phase error, or unswapped BGR on
-    // the Spark side shifts it
-    "doc_bmp_resize" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(5 + doc_id % 8 AS INTEGER) AS src_w,
-             CAST(4 + doc_id % 6 AS INTEGER) AS src_h
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, t.i AS i,
-             (t.i // 15) AS ty,
-             (t.i % 15) // 3 AS tx,
-             t.i % 3 AS c
-           FROM d, unnest(range(0, 45)) AS t(i)),
-         v AS (
-           SELECT doc_id, src_w, src_h, i,
-             (doc_id * 17 + (tx * src_w // 5) * 11 +
-              (ty * src_h // 3) * 5 + c * 71) % 256 AS val
-           FROM px)
-         SELECT doc_id, src_w, src_h,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h
-         ORDER BY doc_id""",
-    // real GIF-LZW decode replay: same checksum contract as
-    // doc_png_resize, with the raster derived from the palette/index
-    // formulas (GIF is lossless, palette expansion included)
-    "doc_gif_resize" ->
-      """WITH d AS (
-           SELECT doc_id,
-             CAST(6 + doc_id % 8 AS INTEGER) AS src_w,
-             CAST(6 + doc_id % 6 AS INTEGER) AS src_h,
-             CAST(4 + doc_id % 5 AS INTEGER) AS n_colors
-           FROM documents),
-         px AS (
-           SELECT doc_id, src_w, src_h, n_colors, t.i AS i,
-             (t.i // 15) AS ty,
-             (t.i % 15) // 3 AS tx,
-             t.i % 3 AS c
-           FROM d, unnest(range(0, 45)) AS t(i)),
-         v AS (
-           SELECT doc_id, src_w, src_h, n_colors, i,
-             (doc_id * 7 +
-              (((tx * src_w // 5) * 3 + (ty * src_h // 3) * 5 + doc_id)
-                % n_colors) * 29 +
-              c * 47) % 256 AS val
-           FROM px)
-         SELECT doc_id, src_w, src_h, n_colors,
-           CAST(sum(val * (1 + i % 97)) AS BIGINT) AS checksum
-         FROM v
-         GROUP BY doc_id, src_w, src_h, n_colors
-         ORDER BY doc_id""",
-    // real ISO-BMFF sample-table demux replay: absolute offsets are
-    // 24 (ftyp 16 B + mdat header 8 B, the fixture's mdat-first
-    // layout) plus the running size prefix sum; timestamps are the
-    // stts delta prefix sum at timescale 1000
-    "doc_mp4_demux" ->
-      """WITH d AS (
-           SELECT doc_id, CAST(5 + doc_id % 7 AS INTEGER) AS n
-           FROM documents),
-         s AS (
-           SELECT doc_id, t.k AS k,
-             10 + (doc_id * 7 + t.k * 13) % 50 AS sz,
-             100 + (t.k % 3) * 50 AS delta
-           FROM d, unnest(range(0, n)) AS t(k))
-         SELECT doc_id, CAST(k AS BIGINT) AS frame_idx,
-           CAST(24 + COALESCE(sum(sz) OVER (PARTITION BY doc_id
-             ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-             PRECEDING), 0) AS BIGINT) AS byte_offset,
-           CAST(sz AS BIGINT) AS n_bytes,
-           CAST(COALESCE(sum(delta) OVER (PARTITION BY doc_id
-             ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-             PRECEDING), 0) AS BIGINT) AS ts_ms
-         FROM s ORDER BY doc_id, frame_idx""",
-    "doc_frame_sample" ->
-      """WITH d AS (
-           SELECT 'doc://'||doc_id AS path,
-             greatest(1, octet_length(encode(text)) // 16) AS n_frames
-           FROM documents)
-         SELECT path, CAST(t.f AS BIGINT) AS frame_idx,
-           CAST(t.f * 1000 // 30 AS BIGINT) AS ts_ms
-         FROM d, unnest(range(0, n_frames, 5)) AS t(f)
-         ORDER BY path, frame_idx""",
-    "doc_media_features" ->
-      """WITH b AS (
-           SELECT doc_id,
-             ascii(substring(text, CAST(i AS INTEGER) + 1, 1)) AS byte
-           FROM documents,
-             unnest(range(0, octet_length(encode(text)), 16)) AS t(i)
-         ), sl AS (
-           SELECT doc_id, (byte * 31) % 32 AS slot,
-             SUM(CASE WHEN byte % 2 = 1 THEN 1 ELSE -1 END) AS acc,
-             COUNT(*) AS n
-           FROM b GROUP BY 1, 2)
-         SELECT 'doc://'||doc_id AS path,
-           CAST(SUM(n) AS BIGINT) AS n_samples,
-           CAST(COUNT(*) FILTER (WHERE acc <> 0) AS BIGINT) AS nnz,
-           CAST(SUM(acc * (slot + 1)) AS BIGINT) AS checksum
-         FROM sl GROUP BY doc_id ORDER BY path""",
-    // Real PCM decode audit: Spark ENCODES a WAV per doc and must
-    // decode it back sample-exactly (RIFF walk, 16-bit LE sign
-    // extension); the oracle re-derives every level from the
-    // construction arithmetic without seeing a byte — any container or
-    // sample-read drift fails the hash.
-    "doc_audio_levels" ->
-      s"""WITH n AS (SELECT doc_id, 100 + doc_id % 50 AS ns
-             FROM documents),
-         sm AS (SELECT doc_id, ns,
-             abs(((doc_id * 31 + k * 7919) % 65536) - 32768) AS a
-           FROM n, unnest(range(0, ns)) AS t(k))
-         SELECT doc_id, CAST(ns AS BIGINT) AS n_samples,
-           CAST(max(a) AS BIGINT) AS peak,
-           CAST(sum(a) AS BIGINT) AS sum_abs,
-           CAST(COUNT(*) FILTER (WHERE a >=
-             ${graft.operators.Multimodal.NearClipAbs}) AS BIGINT)
-             AS n_clip
-         FROM sm GROUP BY doc_id, ns ORDER BY doc_id""",
-    "doc_langid" ->
-      """WITH h AS (
-           SELECT doc_id, lang,
-             CAST(len(list_filter(string_split(text,' '), w ->
-               list_contains(['the','a','and','of','to','is','in','it'], w)))
-               AS BIGINT) AS en_hits,
-             CAST(len(list_filter(string_split(text,' '), w ->
-               list_contains(['el','la','los','de','que','y','un','es'], w)))
-               AS BIGINT) AS es_hits,
-             CAST(len(list_filter(string_split(text,' '), w ->
-               list_contains(['der','die','das','und','ist','ein','zu','nicht'], w)))
-               AS BIGINT) AS de_hits,
-             CAST(len(list_filter(string_split(text,' '), w ->
-               list_contains(['le','la','les','et','est','une','que','des'], w)))
-               AS BIGINT) AS fr_hits
-           FROM documents)
-         SELECT doc_id, en_hits, es_hits, de_hits, fr_hits,
-           CASE WHEN greatest(en_hits,es_hits,de_hits,fr_hits)=0 THEN 'und'
-                WHEN en_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'en'
-                WHEN es_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'es'
-                WHEN de_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'de'
-                ELSE 'fr' END AS predicted_lang,
-           (CASE WHEN greatest(en_hits,es_hits,de_hits,fr_hits)=0 THEN 'und'
-                WHEN en_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'en'
-                WHEN es_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'es'
-                WHEN de_hits = greatest(en_hits,es_hits,de_hits,fr_hits) THEN 'de'
-                ELSE 'fr' END) = lang AS matches_label
-         FROM h ORDER BY doc_id""",
-    "doc_quality" ->
-      """SELECT doc_id,
-           CAST(len(string_split(text,' ')) AS BIGINT) AS n_words,
-           CAST(len(list_distinct(string_split(text,' '))) AS BIGINT)
-             AS n_distinct_words,
-           CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(len(list_filter(string_split(text,' '), w ->
-             list_contains(['the','a','and','of','to','is','in','it'], w)))
-             AS BIGINT) AS stop_hits,
-           round(CAST(length(text) AS DOUBLE) /
-             len(string_split(text,' ')), 4) AS avg_word_len,
-           CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) * 1000
-             // CAST(len(string_split(text,' ')) AS BIGINT)
-             AS distinct_permille,
-           (len(string_split(text,' ')) >= 20 AND length(text) >= 100 AND
-            (CAST(len(list_distinct(string_split(text,' '))) AS BIGINT) * 1000
-             // CAST(len(string_split(text,' ')) AS BIGINT)) >= 300) AS keep
-         FROM documents ORDER BY doc_id""",
-    "doc_token_count" ->
-      """SELECT doc_id,
-           CAST(len(string_split(text,' ')) AS BIGINT) AS ws_tokens,
-           CAST(ceil(CAST(length(text) AS DOUBLE)/4) AS BIGINT)
-             AS est_bpe_tokens,
-           CAST(len(regexp_extract_all(text,'[a-z]+')) AS BIGINT)
-             AS alpha_tokens,
-           (length(text) > 32764) AS over_embed_cap
-         FROM documents ORDER BY doc_id""",
-    "doc_fingerprint" ->
-      """WITH grams AS (
-           SELECT doc_id,
-             unnest(range(1, greatest(1, length(text)-7)+1)) AS i, text
-           FROM documents
-         ), hashed AS (
-           SELECT doc_id, i,
-             ('0x'||substr(sha256(substring(text, CAST(i AS INT), 8)),1,12))::BIGINT AS h
-           FROM grams
-         ), wins AS (
-           SELECT doc_id,
-             min(h) OVER (PARTITION BY doc_id ORDER BY i
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS win_min
-           FROM hashed)
-         SELECT doc_id,
-           CAST(count(DISTINCT win_min) AS BIGINT) AS n_fingerprints,
-           array_to_string(list_sort(list_distinct(list(win_min))), ',')
-             AS fp_sig
-         FROM wins GROUP BY doc_id ORDER BY doc_id""",
-    "dedup_exact" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-                    UNION ALL SELECT doc_id, text FROM documents)
-         SELECT sha256(text) AS content_hash,
-           min(doc_id) AS keeper_id, count(*) AS n_copies
-         FROM u GROUP BY 1 ORDER BY content_hash""",
-    "dedup_ngram_jaccard" ->
-      """WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         -- join key = 8-byte sha256 prefix, mirroring the engine's
-         -- shuffle-shrinking hash (identical hash ⇒ identical result)
-         sh AS (SELECT doc_id,
-                  ('0x'||substr(sha256(shingle),1,14))::BIGINT AS sh_h
-                FROM sh0),
-         cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-         inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     count(*) AS inter
-                   FROM sh a JOIN sh b
-                     ON a.sh_h=b.sh_h AND a.doc_id < b.doc_id
-                   GROUP BY 1,2)
-         SELECT doc_a, doc_b, inter,
-           ca.n_sh + cb.n_sh - inter AS union_size
-         FROM inter
-         JOIN cnt ca ON ca.doc_id=doc_a JOIN cnt cb ON cb.doc_id=doc_b
-         WHERE inter*2 >= ca.n_sh + cb.n_sh - inter
-         ORDER BY doc_a, doc_b""",
-    "dedup_minhash_sig" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,7))::BIGINT AS x FROM sh),
-         perms(j, a, b) AS (VALUES ${Dedup.perms.map {
-           case (j, a, b) => s"($j,$a,$b)" }.mkString(",")}),
-         t AS (SELECT doc_id, j, min((a*x+b) % 2147483647) AS h
-               FROM x CROSS JOIN perms GROUP BY 1,2)
-         SELECT doc_id, string_agg(h, ',' ORDER BY j) AS sig
-         FROM t GROUP BY 1 ORDER BY doc_id""",
-    "dedup_minhash_pairs" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,7))::BIGINT AS x FROM sh),
-         perms(j, a, b) AS (VALUES ${Dedup.perms.map {
-           case (j, a, b) => s"($j,$a,$b)" }.mkString(",")}),
-         t AS (SELECT doc_id, j, min((a*x+b) % 2147483647) AS h
-               FROM x CROSS JOIN perms GROUP BY 1,2)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS agree
-         FROM t a JOIN t b
-           ON a.j=b.j AND a.h=b.h AND a.doc_id < b.doc_id
-         GROUP BY 1,2 HAVING count(*) >= ${Dedup.NumPerms / 2}
-         ORDER BY doc_a, doc_b""",
-    // incremental form: only new-batch docs (top fifth of the id
-    // range) pair against the corpus; per-new-doc verdict with
-    // pristine docs kept at zeros / -1
-    "dedup_minhash_delta" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,7))::BIGINT AS x FROM sh),
-         perms(j, a, b) AS (VALUES ${Dedup.perms.map {
-           case (j, a, b) => s"($j,$a,$b)" }.mkString(",")}),
-         t AS (SELECT doc_id, j, min((a*x+b) % 2147483647) AS h
-               FROM x CROSS JOIN perms GROUP BY 1,2),
-         cut AS (SELECT (MAX(doc_id) * 4) // 5 AS batch_from
-                 FROM documents),
-         pairs AS (
-           SELECT b.doc_id AS doc_id, a.doc_id AS partner,
-             count(*) AS agree
-           FROM t a JOIN t b ON a.j=b.j AND a.h=b.h
-             AND a.doc_id < b.doc_id
-           JOIN cut c ON b.doc_id >= c.batch_from
-           GROUP BY 1,2 HAVING count(*) >= ${Dedup.NumPerms / 2}),
-         verdict AS (
-           SELECT doc_id, count(*) AS n_partners,
-             max(agree) AS best_agree, min(partner) AS first_partner
-           FROM pairs GROUP BY 1),
-         newdocs AS (SELECT DISTINCT t.doc_id FROM t, cut
-                     WHERE t.doc_id >= cut.batch_from)
-         SELECT n.doc_id,
-           COALESCE(v.n_partners, 0) AS n_partners,
-           COALESCE(v.best_agree, 0) AS best_agree,
-           COALESCE(v.first_partner, -1) AS first_partner
-         FROM newdocs n LEFT JOIN verdict v USING (doc_id)
-         ORDER BY doc_id""",
-    "dedup_semantic" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         seeds AS (
-           SELECT vec_id - 1 AS c, emb AS cv FROM e
-           WHERE vec_id BETWEEN 1 AND ${Similarity.IvfNlist}),
-         proj AS (
-           SELECT e.vec_id, s.c,
-             list_dot_product(e.emb, s.cv) AS proj
-           FROM e CROSS JOIN seeds s),
-         assigned AS (
-           SELECT vec_id, c AS cell FROM (
-             SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-               ORDER BY proj DESC, c) AS rn FROM proj) WHERE rn = 1),
-         v AS (SELECT a.vec_id, a.cell, e.emb
-               FROM assigned a JOIN e ON e.vec_id = a.vec_id),
-         pairs AS (
-           SELECT a.vec_id AS keep_id, b.vec_id AS drop_id,
-             CAST(floor(list_dot_product(a.emb, b.emb) /
-               (sqrt(list_dot_product(a.emb, a.emb)) *
-                sqrt(list_dot_product(b.emb, b.emb))) * 1000) AS BIGINT)
-               AS cos_permille
-           FROM v a JOIN v b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-         SELECT drop_id, CAST(min(keep_id) AS BIGINT) AS keeper_id,
-           max(cos_permille) AS max_cos_permille,
-           count(*) AS n_dups
-         FROM pairs WHERE cos_permille >= ${Dedup.SemanticMinCosPermille}
-         GROUP BY 1 ORDER BY drop_id""",
-    "dedup_minhash_calib" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh0 AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,7))::BIGINT AS x FROM sh0),
-         perms(j, a, b) AS (VALUES ${Dedup.perms.map {
-           case (j, a, b) => s"($j,$a,$b)" }.mkString(",")}),
-         t AS (SELECT doc_id, j, min((a*x+b) % 2147483647) AS h
-               FROM x CROSS JOIN perms GROUP BY 1,2),
-         pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                  count(*) AS agree
-                FROM t a JOIN t b
-                  ON a.j=b.j AND a.h=b.h AND a.doc_id < b.doc_id
-                GROUP BY 1,2 HAVING count(*) >= ${Dedup.NumPerms / 2}),
-         cand AS (SELECT DISTINCT doc_a AS doc_id FROM pr
-                  UNION SELECT DISTINCT doc_b FROM pr),
-         shc AS (SELECT h.doc_id,
-                   ('0x'||substr(sha256(h.shingle),1,14))::BIGINT AS sh_h
-                 FROM sh0 h JOIN cand USING (doc_id)),
-         cnt AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-         ix AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                  count(*) AS inter
-                FROM shc a JOIN shc b
-                  ON a.sh_h=b.sh_h AND a.doc_id < b.doc_id
-                GROUP BY 1,2)
-         SELECT pr.doc_a, pr.doc_b, pr.agree,
-           (pr.agree*1000)//${Dedup.NumPerms} AS est_permille,
-           (coalesce(ix.inter,0)*1000)
-             //(ca.n_sh+cb.n_sh-coalesce(ix.inter,0)) AS exact_permille,
-           abs((pr.agree*1000)//${Dedup.NumPerms}
-             - (coalesce(ix.inter,0)*1000)
-               //(ca.n_sh+cb.n_sh-coalesce(ix.inter,0))) AS err_permille
-         FROM pr
-         LEFT JOIN ix ON ix.doc_a=pr.doc_a AND ix.doc_b=pr.doc_b
-         JOIN cnt ca ON ca.doc_id=pr.doc_a
-         JOIN cnt cb ON cb.doc_id=pr.doc_b
-         ORDER BY pr.doc_a, pr.doc_b""",
-    "dedup_cross_source" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,8))::BIGINT AS w32 FROM sh),
-         bits AS (SELECT unnest(range(0,32)) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w32 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1),
-         pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-                WHERE bit_count(xor(a.simhash, b.simhash))
-                  <= ${Dedup.SimhashMaxDist}),
-         lk AS (SELECT least(da.source, db.source) AS source_lo,
-                  greatest(da.source, db.source) AS source_hi,
-                  pr.doc_a, pr.doc_b
-                FROM pr JOIN documents da ON da.doc_id = pr.doc_a
-                        JOIN documents db ON db.doc_id = pr.doc_b
-                WHERE da.source <> db.source)
-         SELECT source_lo, source_hi, count(*) AS n_pairs,
-           min(doc_a) AS min_doc_a, min(doc_b) AS min_doc_b
-         FROM lk GROUP BY 1,2 ORDER BY source_lo, source_hi""",
-    "dedup_simhash_sig" ->
-      """WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,8))::BIGINT AS w32 FROM sh),
-         bits AS (SELECT unnest(range(0,32)) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w32 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2)
-         SELECT doc_id,
-           CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                         ELSE 0 END) AS BIGINT) AS simhash
-         FROM sgn GROUP BY 1 ORDER BY doc_id""",
-    "dedup_simhash_pairs" ->
-      s"""WITH ws AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,8))::BIGINT AS w32 FROM sh),
-         bits AS (SELECT unnest(range(0,32)) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w32 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash)) <= ${Dedup.SimhashMaxDist}
-         ORDER BY doc_a, doc_b""",
-    // all-pairs mirror of the SCALE kernel on the planted-copy corpus:
-    // the banding layout is a Spark-side candidate strategy only, so
-    // the oracle checks the SEMANTIC (every pair within the wide
-    // Hamming bound) and the planted copies make the row non-empty
-    "dedup_simhash_wide" ->
-      s"""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000000, text FROM documents
-           WHERE doc_id % 25 = 0),
-         ws AS (SELECT doc_id, string_split(text,' ') AS w FROM corpus
-                WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,15))::BIGINT AS w60
-               FROM sh),
-         bits AS (SELECT unnest(range(0,${Dedup.SimhashWideBits})) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w60 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1)
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-         FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-         WHERE bit_count(xor(a.simhash, b.simhash))
-           <= ${Dedup.SimhashWideMaxDist}
-         ORDER BY doc_a, doc_b""",
-    // the incremental wide-kernel verdict: pairs restricted to a new-
-    // batch higher side (the planted copies), folded per new doc; the
-    // all-pairs mirror is exact ground truth at 3-of-60
-    "dedup_simhash_wide_delta" ->
-      s"""WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000000, text FROM documents
-           WHERE doc_id % 25 = 0),
-         ws AS (SELECT doc_id, string_split(text,' ') AS w FROM corpus
-                WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,15))::BIGINT AS w60
-               FROM sh),
-         bits AS (SELECT unnest(range(0,${Dedup.SimhashWideBits})) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w60 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1),
-         pairs AS (
-           SELECT b.doc_id AS doc_id, a.doc_id AS partner,
-             CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS ham
-           FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-             AND b.doc_id >= 10000000
-           WHERE bit_count(xor(a.simhash, b.simhash))
-             <= ${Dedup.SimhashWideMaxDist}),
-         verdict AS (
-           SELECT doc_id, count(*) AS n_partners,
-             min(ham) AS best_hamming, min(partner) AS first_partner
-           FROM pairs GROUP BY 1),
-         newdocs AS (SELECT doc_id FROM sig WHERE doc_id >= 10000000)
-         SELECT n.doc_id,
-           COALESCE(v.n_partners, 0) AS n_partners,
-           COALESCE(v.best_hamming, -1) AS best_hamming,
-           COALESCE(v.first_partner, -1) AS first_partner
-         FROM newdocs n LEFT JOIN verdict v USING (doc_id)
-         ORDER BY doc_id""",
-    // the full scale chain (wide sigs -> banding -> components) closed
-    // by the same recursive-CTE oracle pattern on the planted corpus
-    "dedup_clusters_wide" ->
-      s"""WITH RECURSIVE
-         corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT doc_id + 10000000, text FROM documents
-           WHERE doc_id % 25 = 0),
-         ws AS (SELECT doc_id, string_split(text,' ') AS w FROM corpus
-                WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,15))::BIGINT AS w60
-               FROM sh),
-         bits AS (SELECT unnest(range(0,${Dedup.SimhashWideBits})) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w60 >> b) & 1) - 1) AS s
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-           WHERE bit_count(xor(a.simhash, b.simhash))
-             <= ${Dedup.SimhashWideMaxDist}),
-         edges AS (
-           SELECT doc_a AS s, doc_b AS d FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach AS (
-           SELECT doc_id AS start, doc_id AS node FROM corpus
-           UNION
-           SELECT r.start, e.d FROM reach r JOIN edges e ON e.s = r.node)
-         SELECT start AS doc_id, CAST(min(node) AS BIGINT) AS cluster_id,
-           CAST(CASE WHEN start = min(node) THEN 1 ELSE 0 END AS BIGINT)
-             AS is_canonical
-         FROM reach GROUP BY 1 ORDER BY 1""",
-    "dedup_clusters" ->
-      s"""$simhashReachCte
-         SELECT start AS doc_id, CAST(min(node) AS BIGINT) AS cluster_id,
-           CAST(CASE WHEN start = min(node) THEN 1 ELSE 0 END AS BIGINT)
-             AS is_canonical
-         FROM reach GROUP BY 1 ORDER BY 1""",
-    // Quality-aware retention over the same components: keep the
-    // LONGEST member per cluster — see Dedup.keepBest scaladoc. The
-    // component CTE stack is shared with dedup_clusters.
-    "dedup_keep_best" ->
-      s"""$simhashReachCte,
-         comp AS (SELECT start AS doc_id,
-                    CAST(min(node) AS BIGINT) AS cluster_id
-                  FROM reach GROUP BY 1),
-         sized AS (SELECT c.cluster_id, c.doc_id, d.n_chars
-                   FROM comp c JOIN documents d ON c.doc_id = d.doc_id),
-         keepers AS (
-           SELECT cluster_id, doc_id AS keeper_id,
-             n_chars AS keeper_chars
-           FROM (SELECT cluster_id, doc_id, n_chars,
-                   row_number() OVER (PARTITION BY cluster_id
-                     ORDER BY n_chars DESC, doc_id) AS rn
-                 FROM sized) WHERE rn = 1),
-         sizes AS (SELECT cluster_id, count(*) AS n_members
-                   FROM comp GROUP BY 1)
-         SELECT s.cluster_id, s.n_members, k.keeper_id, k.keeper_chars,
-           s.n_members - 1 AS n_dropped
-         FROM sizes s JOIN keepers k ON s.cluster_id = k.cluster_id
-         ORDER BY s.cluster_id""",
-    "dedup_embedding" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         proj AS (
-           -- ordered accumulation via list_dot_product (an unordered
-           -- sum() over doubles could flip a near-zero projection's
-           -- sign between engines)
-           SELECT e.vec_id, i.i AS i,
-             list_dot_product(e.emb,
-               list_transform(range(0, len(e.emb)), d ->
-                 CAST(CASE WHEN (((i.i*37 + d*101) * 2654435761) >> 13)
-                        % 2 != 0 THEN 1 ELSE -1 END AS DOUBLE))) AS proj
-           FROM e CROSS JOIN (SELECT unnest(range(0,8)) AS i) i
-         ), sig AS (
-           SELECT vec_id,
-             CAST(sum(CASE WHEN i < 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket0,
-             CAST(sum(CASE WHEN i >= 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i-4 AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket1
-           FROM proj GROUP BY 1
-         ),
-         v AS (SELECT s.vec_id, bucket0, bucket1, emb
-               FROM sig s JOIN e ON e.vec_id = s.vec_id),
-         cand AS (
-           SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-             a.emb AS ea, b.emb AS eb
-           FROM v a JOIN v b
-             ON a.bucket0 = b.bucket0 AND a.vec_id < b.vec_id
-           UNION ALL
-           SELECT a.vec_id, b.vec_id, a.emb, b.emb
-           FROM v a JOIN v b
-             ON a.bucket1 = b.bucket1 AND a.vec_id < b.vec_id
-         )
-         SELECT DISTINCT vec_a, vec_b FROM cand
-         WHERE list_dot_product(ea, eb) /
-           (sqrt(list_dot_product(ea, ea)) *
-            sqrt(list_dot_product(eb, eb))) > 0.4
-         ORDER BY 1,2""",
-    "emb_embed_sig" -> embedSigOracle,
-    "emb_embed_batched" -> embedSigOracle,
-    "emb_knn_exact" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qv FROM e WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, emb AS cv FROM e
-               WHERE vec_id >= 5),
-         scored AS (
-           SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(cv,cv)))
-               AS cosine
-           FROM q CROSS JOIN c),
-         ranked AS (
-           SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id FROM ranked
-         WHERE rank <= 10 ORDER BY query_id, rank""",
-    "emb_ann_lsh" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         proj AS (
-           -- ordered accumulation via list_dot_product (an unordered
-           -- sum() over doubles could flip a near-zero projection's
-           -- sign between engines)
-           SELECT e.vec_id, i.i AS i,
-             list_dot_product(e.emb,
-               list_transform(range(0, len(e.emb)), d ->
-                 CAST(CASE WHEN (((i.i*37 + d*101) * 2654435761) >> 13)
-                        % 2 != 0 THEN 1 ELSE -1 END AS DOUBLE))) AS proj
-           FROM e CROSS JOIN (SELECT unnest(range(0,8)) AS i) i
-         ), sig AS (
-           SELECT vec_id,
-             CAST(sum(CASE WHEN i < 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket0,
-             CAST(sum(CASE WHEN i >= 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i-4 AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket1
-           FROM proj GROUP BY 1
-         ),
-         q AS (SELECT s.vec_id AS query_id, bucket0 AS qb0, bucket1 AS qb1,
-                 emb AS qv
-               FROM sig s JOIN e ON e.vec_id = s.vec_id WHERE s.vec_id < 5),
-         c AS (SELECT s.vec_id AS neighbor_id, bucket0, bucket1, emb AS cv
-               FROM sig s JOIN e ON e.vec_id = s.vec_id WHERE s.vec_id >= 5),
-         cand AS (
-           SELECT query_id, neighbor_id, qv, cv FROM c JOIN q
-             ON c.bucket0 = q.qb0
-           UNION
-           SELECT query_id, neighbor_id, qv, cv FROM c JOIN q
-             ON c.bucket1 = q.qb1
-         ), scored AS (
-           SELECT query_id, neighbor_id,
-             list_dot_product(qv, cv) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(cv,cv)))
-               AS cosine
-           FROM cand),
-         ranked AS (
-           SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, neighbor_id) AS rank
-           FROM scored)
-         SELECT query_id, rank, neighbor_id FROM ranked
-         WHERE rank <= 5 ORDER BY query_id, rank""",
-    // incremental index maintenance: store codes built below the cut,
-    // batch codes APPENDED against the frozen seed quantizer; the
-    // final index's per-cell occupancy (appended share broken out)
-    // re-derived from the same bit-exact assignment rule as
-    // emb_ann_ivf
-    "emb_ivf_append" -> ivfAppendOracleSql,
-    // the streaming append (foreachBatch per micro-batch) must land
-    // the IDENTICAL final index — one oracle serves both rows
-    "stream_ivf_parity" -> ivfAppendOracleSql,
-    "emb_ivf_rebalance" -> ivfRebalanceOracleSql,
-    // construction-rule oracle for the planted Lloyd geometry
-    // (Similarity.lloydPlantedCluster): vec_ids 1..16 are the seeds,
-    // one per cell in order; the rest land on (i % 37) % 16. The
-    // engine runs the real seed → 4×Lloyd → occupancy-report pipeline;
-    // separation makes its converged partition equal this rule exactly,
-    // so every integer in the report is derivable without float math.
-    "emb_cluster_stats_lloyd" ->
-      s"""WITH v AS (
-           SELECT CAST(i AS BIGINT) AS vec_id,
-             CASE WHEN i <= 16 THEN (i - 1) % 16
-                  ELSE i % 37 % 16 END AS cell
-           FROM (SELECT unnest(range(1, ${Similarity.LloydPlantedN + 1}))
-                   AS i)),
-         tot AS (SELECT COUNT(*) AS total FROM v)
-         SELECT CAST(v.cell AS BIGINT) AS cell,
-           COUNT(*) AS n_vectors,
-           COUNT(*) * 1000 // t.total AS share_permille,
-           COUNT(*) * 16 * 1000 // t.total AS load_permille,
-           MIN(v.vec_id) AS min_vec, MAX(v.vec_id) AS max_vec
-         FROM v CROSS JOIN tot t
-         GROUP BY v.cell, t.total
-         ORDER BY cell""",
-    // an INDEPENDENT BPE implementation in SQL: relearn the merge
-    // table from the planted construction (word j of BpeOracleWords
-    // repeats doc_id % (j+3) times per document; training sample =
-    // doc_id < 50, the entry's rule), then re-derive each document's
-    // token stream — for in-vocabulary words encode ≡ training replay,
-    // since a merge's components always form at earlier ranks. '!' is
-    // the end-of-word sentinel (the Spark side prints it as '!' too).
-    "doc_token_bpe" ->
-      s"""WITH sample AS (SELECT doc_id FROM documents WHERE doc_id < 50),
-         w0 AS (
-           SELECT * FROM (VALUES
-             ('ab',   '[a][b][!]',       3),
-             ('abc',  '[a][b][c][!]',    4),
-             ('cd',   '[c][d][!]',       5),
-             ('cde',  '[c][d][e][!]',    6),
-             ('de',   '[d][e][!]',       7),
-             ('abcd', '[a][b][c][d][!]', 8)) AS t(word, syms, m)),
-         freqs AS MATERIALIZED (
-           SELECT w.word, w.syms, w.m,
-             (SELECT COALESCE(SUM(doc_id % w.m), 0) FROM sample) AS freq
-           FROM w0 w),
-         ${(1 to 6).map(bpeRoundSql).mkString(",\n         ")},
-         final AS (
-           SELECT m, regexp_extract_all(syms, '\\[([^\\]]*)\\]', 1) AS toks
-           FROM s6),
-         per_doc AS (
-           SELECT d.doc_id,
-             flatten(list(
-               flatten(list_transform(
-                 range(CAST(d.doc_id % f.m AS INT)), x -> f.toks))
-               ORDER BY f.m)) AS toks
-           FROM documents d CROSS JOIN final f
-           GROUP BY d.doc_id)
-         SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_bpe_tokens,
-           COALESCE(array_to_string(toks[1:5], '|'), '') AS first_tokens
-         FROM per_doc ORDER BY doc_id""",
-    // planted-margin classifier probes: odd probes sit at +(41..56)
-    // along the training separator's axis, even at the negative — far
-    // outside the 0.5-3.0 margin band, so any model that fit the
-    // planted training data classifies them by construction. Empty
-    // corpus → empty on both sides.
-    "doc_quality_model" ->
-      """SELECT CAST(j AS BIGINT) AS probe_id,
-           CAST(j % 2 AS BIGINT) AS predicted_keep
-         FROM (SELECT unnest(range(1, 17)) AS j)
-         WHERE EXISTS (SELECT 1 FROM documents WHERE doc_id < 50)
-         ORDER BY probe_id""",
-    // planted ground truth: ten synthetic neighbors at 0.001*j from
-    // query vector 0 — orders of magnitude inside any natural
-    // neighbor, so the seeded LSH must return exactly ids
-    // 9000000+1..10 in j order (ids and ranks only, floats never
-    // hashed). Empty corpus → empty result on both sides.
-    "emb_ann_mllib" ->
-      """SELECT CAST(9000000 + j AS BIGINT) AS vec_id,
-           CAST(j AS BIGINT) AS rank
-         FROM (SELECT unnest(range(1, 11)) AS j)
-         WHERE EXISTS (SELECT 1 FROM embeddings WHERE vec_id = 0)
-         ORDER BY rank""",
-    "emb_ann_ivf" -> annIvfOracleSql,
-    // the optimizer-rewrite row computes the SAME result through
-    // KnnIvfRewrite (declarative top-k rewritten onto the registered
-    // index) — one oracle, two paths, pinning the rewrite's semantics
-    "emb_knn_rewrite" -> annIvfOracleSql,
-    "q_query_documentation" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         qv AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-         store AS (SELECT d.doc_id, d.lang, d.source, d.text, e.emb
-                   FROM documents d JOIN e ON d.doc_id = e.vec_id),
-         scored AS (
-           SELECT doc_id, source,
-             1.0 - list_dot_product(qv, emb) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(emb,emb)))
-               AS distance
-           FROM store CROSS JOIN qv
-           WHERE doc_id <> 0 AND lang = 'en'
-             AND source LIKE 'src1%' AND length(trim(text)) > 0),
-         ranked AS (
-           SELECT doc_id, source,
-             row_number() OVER (ORDER BY distance, doc_id) AS rank
-           FROM scored)
-         SELECT rank, doc_id, 'doc://'||doc_id AS url, source
-         FROM ranked WHERE rank <= 4 ORDER BY rank""",
-    "q_query_code_diag" ->
-      """WITH files AS (
-           SELECT doc_id, text, source,
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS ext
-           FROM documents)
-         SELECT count(*) AS raw_count,
-           count(*) FILTER (WHERE length(trim(text)) = 0)
-             AS empty_content_count,
-           least(count(*), 4) AS returned
-         FROM files
-         WHERE (source||'/'||doc_id||ext) LIKE 'src1%'
-           AND ext IN ('.py', '.go')""",
-    "sync_url_diff" -> (syncCtes +
-      """SELECT i.url,
-           CASE WHEN s.sig IS NULL THEN 'new'
-                WHEN i.sig <> s.sig THEN 'updated'
-                ELSE 'unchanged' END AS status,
-           i.n AS n_chunks
-         FROM i_sig i LEFT JOIN s_sig s ON i.url = s.url
-         ORDER BY i.url"""),
-    "sync_chunk_delta" -> (syncCtes +
-      """SELECT url, count(*) AS chunks_to_embed
-         FROM i_chunks c
-         WHERE NOT EXISTS (SELECT 1 FROM s_chunks s
-                           WHERE s.chunk_id = c.chunk_id)
-         GROUP BY 1 ORDER BY url"""),
-    "sync_skip_cascade" -> cascadeSql(
-      """lm AS (
-           SELECT s.url,
-             CASE WHEN t.stored_lastmod IS NULL THEN 'fetch_new'
-                  WHEN t.stored_lastmod = s.lastmod THEN 'skip'
-                  ELSE 'fetch_changed' END AS lm_dec
-           FROM sitemap_lm s LEFT JOIN stored_lm t ON s.url = t.url)"""),
-    "sync_cascade_storegap" -> cascadeSql(
-      """md_store AS (
-           SELECT 'doc://'||doc_id AS url FROM documents
-           WHERE doc_id % 7 <> 0),
-         lm AS (
-           SELECT s.url,
-             CASE WHEN t.stored_lastmod IS NULL THEN 'fetch_new'
-                  WHEN t.stored_lastmod = s.lastmod AND g.url IS NULL
-                    THEN 'fetch_store_gap'
-                  WHEN t.stored_lastmod = s.lastmod THEN 'skip'
-                  ELSE 'fetch_changed' END AS lm_dec
-           FROM sitemap_lm s LEFT JOIN stored_lm t ON s.url = t.url
-           LEFT JOIN md_store g ON s.url = g.url)"""),
-    "sync_cleanup" -> (syncCtes +
-      """SELECT url, count(*) AS chunks_deleted
-         FROM s_chunks c
-         WHERE NOT EXISTS (SELECT 1 FROM i_docs d
-                           WHERE 'doc://'||d.doc_id = c.url)
-         GROUP BY 1 ORDER BY url"""),
-    "sync_watermark" ->
-      """SELECT '2024-01-10 00:00:00' AS watermark_old,
-           count(*) AS n_processed,
-           count(*) FILTER (WHERE event_type='error') AS n_failures,
-           strftime(max(ts)::TIMESTAMP, '%Y-%m-%d %H:%M:%S.%f')
-             AS candidate_watermark,
-           CASE WHEN count(*) FILTER (WHERE event_type='error') = 0
-                THEN strftime(max(ts)::TIMESTAMP, '%Y-%m-%d %H:%M:%S.%f')
-                ELSE '2024-01-10 00:00:00' END AS watermark_new
-         FROM events WHERE ts > TIMESTAMP '2024-01-10 00:00:00'""",
-    "sync_run_counters" -> (syncCtes +
-      """, j AS (
-           SELECT coalesce(i.url, s.url) AS url,
-             CASE WHEN i.sig IS NULL THEN 'deleted'
-                  WHEN s.sig IS NULL THEN 'new'
-                  WHEN i.sig <> s.sig THEN 'updated'
-                  ELSE 'unchanged' END AS status,
-             coalesce(i.n, 0) AS n_chunks, coalesce(s.n, 0) AS stored_chunks
-           FROM i_sig i FULL OUTER JOIN s_sig s ON i.url = s.url)
-         SELECT
-           count(*) FILTER (WHERE status='new') AS items_new,
-           count(*) FILTER (WHERE status='updated') AS items_updated,
-           count(*) FILTER (WHERE status='unchanged') AS items_unchanged,
-           count(*) FILTER (WHERE status='deleted') AS items_deleted,
-           CAST(sum(CASE WHEN status IN ('new','updated') THEN n_chunks
-                    ELSE 0 END) AS BIGINT) AS chunks_added,
-           CAST(sum(CASE WHEN status IN ('updated','deleted')
-                    THEN stored_chunks ELSE 0 END) AS BIGINT)
-             AS chunks_deleted
-         FROM j"""),
-    // Full 3-run sync state machine (Sync.syncRunE2e). The scenario
-    // constants (which run had errors / an incomplete scan) are staged
-    // facts, so the force flags and store versions they imply are SQL
-    // literals — run 1 fails ⇒ run 2 still forced ⇒ run 3 incremental —
-    // while every item status, processed-url count, embedded-chunk
-    // count, and the final store's chunk set are derived relationally.
-    "sync_run_e2e" ->
-      """WITH a_docs AS (
-           SELECT 'doc://'||doc_id AS url, text
-           FROM documents WHERE doc_id < 250 AND doc_id % 5 <> 4),
-         b_docs AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 10 = 6 THEN text || ' v2 tokens'
-                  ELSE text END AS text
-           FROM documents WHERE doc_id < 280 AND doc_id % 7 <> 3),
-         c_docs AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 9 = 2 THEN text || ' v3 tokens'
-                  ELSE text END AS text
-           FROM documents WHERE doc_id < 280 AND doc_id % 6 <> 5),
-         a_chunks AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM a_docs) t1) t2
-           WHERE piece <> ''),
-         b_chunks AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM b_docs) t1) t2
-           WHERE piece <> ''),
-         c_chunks AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM c_docs) t1) t2
-           WHERE piece <> ''),
-         a_sig AS (SELECT url,
-             string_agg(chunk_id, ',' ORDER BY chunk_id) AS sig
-           FROM a_chunks GROUP BY 1),
-         b_sig AS (SELECT url,
-             string_agg(chunk_id, ',' ORDER BY chunk_id) AS sig
-           FROM b_chunks GROUP BY 1),
-         c_sig AS (SELECT url,
-             string_agg(chunk_id, ',' ORDER BY chunk_id) AS sig
-           FROM c_chunks GROUP BY 1),
-         r2_status AS (
-           SELECT coalesce(b.url, a.url) AS url,
-             CASE WHEN b.sig IS NULL THEN 'deleted'
-                  WHEN a.sig IS NULL THEN 'new'
-                  WHEN b.sig <> a.sig THEN 'updated'
-                  ELSE 'unchanged' END AS status
-           FROM b_sig b FULL OUTER JOIN a_sig a ON b.url = a.url),
-         r3_status AS (
-           SELECT coalesce(c.url, b.url) AS url,
-             CASE WHEN c.sig IS NULL THEN 'deleted'
-                  WHEN b.sig IS NULL THEN 'new'
-                  WHEN c.sig <> b.sig THEN 'updated'
-                  ELSE 'unchanged' END AS status
-           FROM c_sig c FULL OUTER JOIN b_sig b ON c.url = b.url),
-         proc3 AS (
-           SELECT url FROM r3_status WHERE status IN ('new','updated')),
-         -- final store: run 3's processed urls carry corpus-C text;
-         -- everything else survives from the run-2 store (= corpus B,
-         -- run 2 was forced + clean), INCLUDING urls dropped from C —
-         -- run 3's incomplete scan skips the obsolete cleanup
-         store3_docs AS (
-           SELECT url, text FROM c_docs
-           WHERE url IN (SELECT url FROM proc3)
-           UNION ALL
-           SELECT url, text FROM b_docs
-           WHERE url NOT IN (SELECT url FROM proc3)),
-         store3_chunks AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM store3_docs) t1) t2
-           WHERE piece <> '')
-         SELECT 'counters' AS kind, 'run:1' AS key,
-           'force=true|new='||(SELECT count(*) FROM a_sig)
-           ||'|upd=0|unch=0|del=0'
-           ||'|proc='||(SELECT count(*) FROM a_sig)
-           ||'|emb='||(SELECT count(*) FROM a_chunks)
-           ||'|ver=0' AS payload
-         UNION ALL
-         SELECT 'counters', 'run:2',
-           'force=true'
-           ||'|new='||(SELECT count(*) FROM r2_status WHERE status='new')
-           ||'|upd='||(SELECT count(*) FROM r2_status WHERE status='updated')
-           ||'|unch='||(SELECT count(*) FROM r2_status
-                        WHERE status='unchanged')
-           ||'|del='||(SELECT count(*) FROM r2_status WHERE status='deleted')
-           ||'|proc='||(SELECT count(*) FROM b_sig)
-           ||'|emb='||(SELECT count(*) FROM b_chunks
-                       WHERE chunk_id NOT IN
-                         (SELECT chunk_id FROM a_chunks))
-           ||'|ver=1'
-         UNION ALL
-         SELECT 'counters', 'run:3',
-           'force=false'
-           ||'|new='||(SELECT count(*) FROM r3_status WHERE status='new')
-           ||'|upd='||(SELECT count(*) FROM r3_status WHERE status='updated')
-           ||'|unch='||(SELECT count(*) FROM r3_status
-                        WHERE status='unchanged')
-           ||'|del='||(SELECT count(*) FROM r3_status WHERE status='deleted')
-           ||'|proc='||(SELECT count(*) FROM proc3)
-           ||'|emb='||(SELECT count(*) FROM c_chunks ch
-                       WHERE ch.url IN (SELECT url FROM proc3)
-                         AND ch.chunk_id NOT IN
-                           (SELECT chunk_id FROM b_chunks))
-           ||'|ver=2'
-         UNION ALL
-         SELECT 'store', url||'#'||lpad(chunk_index::VARCHAR, 4, '0'),
-           chunk_id||'|'||total_chunks
-         FROM store3_chunks
-         ORDER BY kind, key""",
-    "ingest_code_e2e" ->
-      """WITH t1 AS (
-           SELECT doc_id, 'src/f'||doc_id||'.py' AS path, text
-           FROM documents WHERE doc_id < 120),
-         t2 AS (
-           SELECT doc_id,
-             CASE WHEN doc_id < 120 AND doc_id % 10 = 7
-                  THEN 'src/moved/f'||doc_id||'.py'
-                  ELSE 'src/f'||doc_id||'.py' END AS path,
-             CASE WHEN doc_id < 120 AND doc_id % 10 = 1 THEN text||' v2'
-                  ELSE text END AS text
-           FROM documents
-           WHERE (doc_id < 120 AND doc_id % 10 <> 3)
-              OR (doc_id >= 120 AND doc_id < 135)),
-         t3 AS (
-           SELECT doc_id, path,
-             CASE WHEN doc_id % 12 = 5 THEN text||' v3' ELSE text END
-               AS text
-           FROM t2 WHERE NOT (doc_id % 9 = 0 AND doc_id < 135)
-           UNION ALL
-           SELECT doc_id, 'src/f'||doc_id||'.py', text
-           FROM documents WHERE doc_id >= 135 AND doc_id < 145),
-         u1 AS (SELECT doc_id,
-             'https://github.com/acme/docs/blob/main/'||path AS url, text
-           FROM t1),
-         u2 AS (SELECT doc_id,
-             'https://github.com/acme/docs/blob/main/'||path AS url, text
-           FROM t2),
-         u3 AS (SELECT doc_id,
-             'https://github.com/acme/docs/blob/main/'||path AS url, text
-           FROM t3),
-         c1 AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM u1) a) b
-           WHERE piece <> ''),
-         c2 AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM u2) a) b
-           WHERE piece <> ''),
-         c3 AS (
-           SELECT url,
-             row_number() OVER (PARTITION BY url ORDER BY i) - 1
-               AS chunk_index,
-             count(*) OVER (PARTITION BY url) AS total_chunks,
-             sha256(url||'::'||piece) AS chunk_id
-           FROM (SELECT url, i,
-                   trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-                 FROM (SELECT url, text,
-                         unnest(range(0,
-                           CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                       FROM u3) a) b
-           WHERE piece <> ''),
-         -- run 2's processed set: diff adds + modifies + rename-new
-         proc2 AS (
-           SELECT url FROM u2
-           WHERE (doc_id >= 120 AND doc_id < 135)
-              OR (doc_id < 120 AND (doc_id % 10 = 1 OR doc_id % 10 = 7))),
-         -- run 2's delete urls that actually held chunks (D + R-old)
-         del2 AS (
-           SELECT DISTINCT c1.url FROM c1
-           WHERE c1.url IN (
-             SELECT 'https://github.com/acme/docs/blob/main/'||path
-             FROM t1 WHERE doc_id % 10 = 3 OR doc_id % 10 = 7)),
-         -- run 3 (full-scan fallback) obsolete cleanup: stored urls
-         -- (store v1 = exactly t2's chunks) absent from the new scan
-         del3 AS (
-           SELECT DISTINCT url FROM c2
-           WHERE url NOT IN (SELECT url FROM u3))
-         SELECT 'counters' AS kind, 'run:1' AS key,
-           'mode=full|files='||(SELECT count(*) FROM t1)
-           ||'|emb='||(SELECT count(*) FROM c1)
-           ||'|del=0|ver=0' AS payload
-         UNION ALL
-         SELECT 'counters', 'run:2',
-           'mode=incremental|files='||(SELECT count(*) FROM proc2)
-           ||'|emb='||(SELECT count(*) FROM c2
-                       WHERE url IN (SELECT url FROM proc2)
-                         AND chunk_id NOT IN (SELECT chunk_id FROM c1))
-           ||'|del='||(SELECT count(*) FROM del2)
-           ||'|ver=1'
-         UNION ALL
-         SELECT 'counters', 'run:3',
-           'mode=full|files='||(SELECT count(*) FROM t3)
-           ||'|emb='||(SELECT count(*) FROM c3
-                       WHERE chunk_id NOT IN (SELECT chunk_id FROM c2))
-           ||'|del='||(SELECT count(*) FROM del3)
-           ||'|ver=2'
-         UNION ALL
-         SELECT 'counters', 'run:4',
-           'mode=incremental|files=0|emb=0|del=0|ver=3'
-         UNION ALL
-         SELECT 'store', url||'#'||lpad(chunk_index::VARCHAR, 4, '0'),
-           chunk_id||'|'||total_chunks
-         FROM c3
-         ORDER BY kind, key""",
-    "ingest_html" ->
-      """SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,
-         CAST(1 AS BIGINT) AS total_chunks, lang AS section,
-         sha256(content) AS chunk_id, content
-         FROM (SELECT *,
-           '[Topic: '||source||' > '||lang||']'||chr(10)||
-           '# '||source||chr(10)||chr(10)||
-           '## '||lang||chr(10)||chr(10)||text AS content
-           FROM documents) t
-         ORDER BY url, chunk_index""",
-    "ingest_page" ->
-      """SELECT 'doc://'||doc_id AS url, md AS markdown,
-           '/home,/about,doc://next' AS links_csv,
-           CAST(3 AS BIGINT) AS n_links, sha256(md) AS md_hash
-         FROM (SELECT doc_id,
-           (CASE WHEN doc_id % 2 = 0 THEN '# '||source||' guide'
-                 ELSE '# Site' END)
-           ||chr(10)||chr(10)||'## '||lang||chr(10)||chr(10)||
-           trim(text||' [Next](doc://next)') AS md
-           FROM documents) t
-         ORDER BY url""",
-    // the AST code chunker on the fixed-width staged corpus: 10
-    // 41-char function spans per file, greedy '\n' merge at 200 chars
-    // ⇒ exactly 4 spans per chunk (3 chunks: 4+4+2) — integer
-    // arithmetic DuckDB replays span-for-span
-    "doc_chunk_code" ->
-      """WITH f AS (
-           SELECT doc_id, str_split(text, ' ') AS ws,
-             unnest(range(0, 10)) AS i
-           FROM documents
-         ), fn AS (
-           SELECT doc_id, i,
-             'function f'||lpad(CAST(i AS VARCHAR), 3, '0')||'() {'||
-             chr(10)||'  return "'||
-             rpad(substring(ws[CAST(i % len(ws) AS INT) + 1], 1, 8),
-                  8, 'x')||'";'||chr(10)||'}' AS ftext
-           FROM f
-         ), grp AS (
-           SELECT doc_id, i // 4 AS chunk_index,
-             string_agg(ftext, chr(10) ORDER BY i) AS body
-           FROM fn GROUP BY doc_id, i // 4
-         )
-         SELECT 'code://'||doc_id||'/main.ts' AS url,
-           CAST(chunk_index AS BIGINT) AS chunk_index,
-           CAST(3 AS BIGINT) AS total_chunks,
-           'src/main.ts' AS section,
-           sha256('code://'||doc_id||'/main.ts'||'::'||
-             '[File: src/main.ts]'||chr(10)||body) AS chunk_id,
-           '[File: src/main.ts]'||chr(10)||body AS content
-         FROM grp
-         ORDER BY url, chunk_index""",
-    // RFC 3986 href resolution reconstructed arithmetically: absolute,
-    // root-relative, document-relative (+query), ../ traversal, and
-    // protocol-relative, with the query-stripped prefix alongside
-    "crawl_link_resolve" ->
-      """SELECT doc_id,
-           CASE doc_id % 5
-             WHEN 0 THEN 'https://other.example.com/abs' || doc_id
-             WHEN 1 THEN 'https://docs.example.com/root' || doc_id
-                         || '.html'
-             WHEN 2 THEN 'https://docs.example.com/guide' || doc_id
-                         || '/sib' || doc_id || '.html?v=2'
-             WHEN 3 THEN 'https://docs.example.com/up' || doc_id || '/'
-             ELSE 'https://cdn.example.com/p' || doc_id || '.js'
-           END AS resolved_url,
-           CASE doc_id % 5
-             WHEN 0 THEN 'https://other.example.com/abs' || doc_id
-             WHEN 1 THEN 'https://docs.example.com/root' || doc_id
-                         || '.html'
-             WHEN 2 THEN 'https://docs.example.com/guide' || doc_id
-                         || '/sib' || doc_id || '.html'
-             WHEN 3 THEN 'https://docs.example.com/up' || doc_id || '/'
-             ELSE 'https://cdn.example.com/p' || doc_id || '.js'
-           END AS url_prefix
-         FROM documents ORDER BY doc_id""",
-    // Link rel=next + Retry-After through the production parsers,
-    // checked against the staged decision table: %5∈{0,1,2} carry a
-    // next link (quoted / unquoted / second-member forms), %4 rotates
-    // numeric seconds / sub-second floor (→1000) / HTTP-date 40 s out
-    // / unparseable (→ -1)
-    "ingest_api_headers" ->
-      """SELECT event_id,
-           CASE WHEN event_id % 5 IN (0, 1, 2)
-                THEN 'https://api.example.com/items?page=' || (event_id + 1)
-                ELSE '' END AS next_url,
-           CAST(CASE event_id % 4
-                  WHEN 0 THEN (event_id % 30 + 1) * 1000
-                  WHEN 1 THEN 1000
-                  WHEN 2 THEN 40000
-                  ELSE -1 END AS BIGINT) AS retry_ms
-         FROM events WHERE event_id < 500 ORDER BY event_id""",
-    // the url kernels checked against an ARITHMETIC expectation: the
-    // canonical string, variant count (3 per doc in the pair group),
-    // and the eligibility decision table (png ineligible, pdf flagged)
-    // are all reconstructed from doc_id arithmetic, never by rerunning
-    // the normalization
-    "crawl_url_dedup" ->
-      """WITH grp AS (
-           SELECT doc_id // 2 AS g, count(*) AS nd,
-             min(doc_id) AS first_doc
-           FROM documents GROUP BY 1)
-         SELECT
-           'https://docs.example.com/p' || g ||
-             CASE g % 5 WHEN 0 THEN '.pdf' WHEN 1 THEN '.html'
-                        WHEN 2 THEN '' WHEN 3 THEN '.png'
-                        ELSE '/' END AS canonical_url,
-           CAST(nd * 3 AS BIGINT) AS n_variants,
-           first_doc,
-           CAST(CASE WHEN g % 5 = 3 THEN 0 ELSE 1 END AS BIGINT)
-             AS should_process,
-           CAST(CASE WHEN g % 5 = 0 THEN 1 ELSE 0 END AS BIGINT)
-             AS is_pdf
-         FROM grp ORDER BY canonical_url""",
-    // the tab-flattening contract: even docs' first tab claims the
-    // SECOND panel via aria-controls, so the second tab's positional
-    // fallback injects nothing; odd docs match positionally (the
-    // second label empty — and thus uninjected — for doc_id % 5 = 0)
-    "ingest_tabs" ->
-      """SELECT 'doc://'||doc_id AS url, md AS markdown,
-           sha256(md) AS md_hash
-         FROM (SELECT doc_id,
-           '# '||source||' tabs'||chr(10)||chr(10)||
-           (CASE
-              WHEN doc_id % 2 = 0 THEN
-                trim(substring(text, 1, 40))||chr(10)||chr(10)||
-                '**Overview '||lang||':**'||chr(10)||chr(10)||
-                'More on '||doc_id
-              WHEN doc_id % 5 = 0 THEN
-                '**Overview '||lang||':**'||chr(10)||chr(10)||
-                trim(substring(text, 1, 40))||chr(10)||chr(10)||
-                'More on '||doc_id
-              ELSE
-                '**Overview '||lang||':**'||chr(10)||chr(10)||
-                trim(substring(text, 1, 40))||chr(10)||chr(10)||
-                '**Advanced:**'||chr(10)||chr(10)||
-                'More on '||doc_id
-            END) AS md
-           FROM documents) t
-         ORDER BY url""",
-    "ingest_render_issue" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS d
-           FROM events WHERE event_id < 100),
-         md AS (
-           SELECT id,
-             '# ' || (CASE WHEN id % 5 = 0 THEN 'PR' ELSE 'Issue' END) ||
-             ' #' || id || ': Event ' || etype || ' ' || id ||
-             chr(10) || chr(10) ||
-             '- **Type:** ' ||
-               (CASE WHEN id % 5 = 0 THEN 'Pull request' ELSE 'Issue' END) ||
-               chr(10) ||
-             '- **Author:** user' || user_id || chr(10) ||
-             '- **State:** ' ||
-               (CASE WHEN etype='error' THEN 'closed' ELSE 'open' END) ||
-               chr(10) ||
-             '- **Created on:** ' || d || chr(10) ||
-             '- **Updated on:** ' || d || chr(10) ||
-             '- **Labels:** ' ||
-               (CASE WHEN etype='click' THEN '`ui`, `p1`' ELSE 'None' END) ||
-               chr(10) || chr(10) ||
-             '## Description' || chr(10) || chr(10) ||
-             'Body for event ' || id || '.' || chr(10) || chr(10) ||
-             '## Comments' || chr(10) || chr(10) ||
-             '_No comments._' || chr(10) AS markdown
-           FROM e)
-         SELECT id AS issue_id, markdown, sha256(markdown) AS md_hash
-         FROM md ORDER BY issue_id""",
-    "doc_pdf_lines" ->
-      """WITH words AS (
-           SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS ws
-           FROM documents),
-         tok AS (
-           SELECT doc_id, unnest(ws) AS str,
-             generate_subscripts(ws, 1) - 1 AS i
-           FROM words),
-         it AS (
-           SELECT doc_id, (i % 2) + 1 AS page, i // 2 AS j, str
-           FROM tok WHERE i < 12),
-         piece AS (
-           SELECT doc_id, page, j,
-             (CASE WHEN j = 0 THEN ''
-                   WHEN j % 2 = 0 OR j % 3 = 0 THEN ' ' ELSE '' END)
-               || str AS piece
-           FROM it),
-         pages AS (
-           SELECT doc_id, page, string_agg(piece, '' ORDER BY j) AS ptext
-           FROM piece GROUP BY 1,2),
-         np AS (SELECT doc_id, max(page) AS num_pages
-                FROM pages GROUP BY 1),
-         md AS (
-           SELECT p.doc_id,
-             '# doc_' || p.doc_id || chr(10) || chr(10) ||
-             string_agg(
-               (CASE WHEN n.num_pages > 1
-                     THEN '## Page ' || p.page || chr(10) || chr(10)
-                     ELSE '' END)
-               || trim(p.ptext) || chr(10) || chr(10), '' ORDER BY p.page)
-               AS raw
-           FROM pages p JOIN np n ON n.doc_id = p.doc_id
-           WHERE length(trim(p.ptext)) > 0
-           GROUP BY p.doc_id)
-         SELECT doc_id, rtrim(raw, chr(10) || ' ') AS markdown
-         FROM md ORDER BY doc_id""",
-    // encrypted PDFs (standard security handler): RC4 R3/128-bit
-    // (default and the id%11 literal-O/U spelling), RC4 R2/40-bit
-    // (id%13), AESV2 V4/R4 (id%7), AES-256 V5/R6 (id%97, sparse — the
-    // R6 hash is a KDF, deliberately slow), and the
-    // owner-locked route (id%17, checked first) where the
-    // empty-user-password authentication must fail into the stub — all
-    // decode routes emit the same 6 words, so DuckDB only needs the
-    // route for the stub shape
-    "doc_pdf_crypt" ->
-      """WITH w AS (
-           SELECT doc_id,
-             list_filter(string_split(replace(text, chr(10), ' '), ' '),
-               x -> x <> '')[1:6] AS words
-           FROM documents),
-         md AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 17 = 0 THEN
-               ['# f' || doc_id, '', '## Page 1', '', '[stub]']
-             ELSE ['# f' || doc_id, '', array_to_string(words, ' ')]
-             END AS lines
-           FROM w),
-         sl AS (SELECT doc_id, lines,
-                  unnest(range(0, len(lines))) AS i FROM md)
-         SELECT doc_id, CAST(i AS INT) AS line_no,
-           lines[CAST(i + 1 AS INT)] AS line
-         FROM sl ORDER BY doc_id, line_no""",
-    // subset/CID-font PDFs through the /ToUnicode CMap: every route
-    // (1-byte shift-3, 2-byte indirect-resources, 2-byte + RC4) decodes
-    // to the same words, so the replay needs no routing at all — any
-    // skipped-CMap bug emits shifted gibberish and hash-fails
-    "doc_pdf_cid" ->
-      """WITH w AS (
-           SELECT doc_id,
-             list_filter(string_split(replace(text, chr(10), ' '), ' '),
-               x -> x <> '')[1:6] AS words
-           FROM documents),
-         md AS (
-           SELECT doc_id,
-             ['# f' || doc_id, '', array_to_string(words, ' ')] AS lines
-           FROM w),
-         sl AS (SELECT doc_id, lines,
-                  unnest(range(0, len(lines))) AS i FROM md)
-         SELECT doc_id, CAST(i AS INT) AS line_no,
-           lines[CAST(i + 1 AS INT)] AS line
-         FROM sl ORDER BY doc_id, line_no""",
-    // legacy .doc byte-walk: piece-table text (CP1252 + UTF-16 pieces),
-    // the fcMin/fcMac legacy route (id%13), the fast-saved route
-    // (id%11: fComplex + out-of-order pieces + ccpText body truncation
-    // — first 8 words / rest as two paragraphs), the Office Binary RC4
-    // route (id%17, checked first: REALLY decrypted with the verified
-    // password, so it replays as the same two-piece text — a decoder
-    // that failed authentication or misapplied the block keystream
-    // would emit the stub or mojibake and miss the hash), and the
-    // XOR-obfuscated route (id%19: REALLY de-obfuscated via the
-    // verifier-matched 16-byte array, replaying as the same two-piece
-    // text — a decoder that declined or mis-rotated would emit the
-    // stub or mojibake and miss the hash)
-    "doc_word_lines" ->
-      """WITH w AS (
-           SELECT doc_id,
-             list_filter(string_split(replace(text, chr(10), ' '), ' '),
-               x -> x <> '')[1:12] AS words
-           FROM documents),
-         md AS (
-           SELECT doc_id,
-             CASE WHEN doc_id % 17 = 0 AND len(words) > 6 THEN
-               ['# f' || doc_id, '', array_to_string(words[1:6], ' '),
-                array_to_string(words[7:12], ' ')]
-             WHEN doc_id % 17 = 0 THEN
-               ['# f' || doc_id, '', array_to_string(words, ' ')]
-             WHEN doc_id % 19 = 0 AND len(words) > 6 THEN
-               ['# f' || doc_id, '', array_to_string(words[1:6], ' '),
-                array_to_string(words[7:12], ' ')]
-             WHEN doc_id % 19 = 0 THEN
-               ['# f' || doc_id, '', array_to_string(words, ' ')]
-             WHEN doc_id % 13 = 0 THEN
-               ['# f' || doc_id, '', array_to_string(words, ' ')]
-             WHEN doc_id % 11 = 0 AND len(words) > 8 THEN
-               ['# f' || doc_id, '', array_to_string(words[1:8], ' '),
-                array_to_string(words[9:12], ' ')]
-             WHEN doc_id % 11 = 0 THEN
-               ['# f' || doc_id, '', array_to_string(words, ' ')]
-             WHEN len(words) > 6 THEN
-               ['# f' || doc_id, '', array_to_string(words[1:6], ' '),
-                array_to_string(words[7:12], ' ')]
-             ELSE ['# f' || doc_id, '', array_to_string(words, ' ')]
-             END AS lines
-           FROM w),
-         sl AS (SELECT doc_id, lines,
-                  unnest(range(0, len(lines))) AS i FROM md)
-         SELECT doc_id, CAST(i AS INT) AS line_no,
-           lines[CAST(i + 1 AS INT)] AS line
-         FROM sl ORDER BY doc_id, line_no""",
-    "ingest_render_article" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS d
-           FROM events WHERE event_id < 100),
-         md AS (
-           SELECT id,
-             '# Article ' || etype || ' ' || id || chr(10) || chr(10) ||
-             '- **Author:** ' || user_id || chr(10) ||
-             '- **Section:** ' || (id % 7) || chr(10) ||
-             '- **Created:** ' || d || chr(10) ||
-             '- **Updated:** ' || d || chr(10) ||
-             '- **Vote Sum:** ' || (id % 11 - 3) || chr(10) ||
-             '- **Vote Count:** ' || (id % 11) || chr(10) ||
-             (CASE WHEN etype='click'
-                   THEN '- **Labels:** `howto`, `faq`' || chr(10)
-                   ELSE '' END) ||
-             chr(10) || '## Content' || chr(10) || chr(10) ||
-             (CASE WHEN id % 7 = 0 THEN '_No content._'
-                   ELSE 'Article body for event ' || id || '.' END) ||
-             chr(10) AS markdown
-           FROM e)
-         SELECT id AS article_id, markdown, sha256(markdown) AS md_hash
-         FROM md ORDER BY article_id""",
-    "ingest_render_ticket" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS d
-           FROM events WHERE event_id < 100),
-         md AS (
-           SELECT id,
-             '# Ticket #' || id || ': Ticket ' || etype || ' ' || id ||
-               chr(10) || chr(10) ||
-             '- **Status:** ' ||
-               (CASE WHEN etype='error' THEN 'open' ELSE 'solved' END) ||
-               chr(10) ||
-             '- **Priority:** ' ||
-               (CASE WHEN id % 3 = 0 THEN 'None'
-                     WHEN id % 2 = 0 THEN 'high' ELSE 'low' END) ||
-               chr(10) ||
-             '- **Type:** ' ||
-               (CASE WHEN etype='error' THEN 'incident' ELSE 'None' END) ||
-               chr(10) ||
-             '- **Requester:** ' || user_id || chr(10) ||
-             '- **Assignee:** ' ||
-               (CASE WHEN id % 4 = 0 THEN 'Unassigned'
-                     ELSE CAST(user_id + 1 AS VARCHAR) END) || chr(10) ||
-             '- **Created:** ' || d || chr(10) ||
-             '- **Updated:** ' || d || chr(10) ||
-             (CASE WHEN etype='click'
-                   THEN '- **Tags:** `ui`, `bug`' || chr(10)
-                   ELSE '' END) ||
-             chr(10) || '## Description' || chr(10) || chr(10) ||
-             (CASE WHEN id % 7 = 0 THEN '_No description._'
-                   ELSE 'Ticket description ' || id || '.' END) ||
-             chr(10) || chr(10) ||
-             '## Comments' || chr(10) || chr(10) ||
-             '### ' || (user_id + 1000) || ' - ' || d ||
-               chr(10) || chr(10) ||
-             (CASE WHEN id % 5 = 0 THEN '_No content._'
-                   ELSE 'Reply for ticket ' || id || '.' END) ||
-             chr(10) || chr(10) || '---' || chr(10) || chr(10) AS markdown
-           FROM e)
-         SELECT id AS ticket_id, markdown, sha256(markdown) AS md_hash
-         FROM md ORDER BY ticket_id""",
-    "ingest_issues_e2e" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS dc,
-             '2024-02-' ||
-               lpad(CAST((event_id % 28) + 1 AS VARCHAR), 2, '0') AS ud
-           FROM events WHERE event_id < 200),
-         m AS (
-           SELECT id, ud,
-             (CASE WHEN id % 5 = 0 THEN 'PR' ELSE 'Issue' END) ||
-               ' #' || id || ': Event ' || etype || ' ' || id AS h1,
-             '- **Type:** ' ||
-               (CASE WHEN id % 5 = 0 THEN 'Pull request' ELSE 'Issue' END) ||
-               chr(10) ||
-             '- **Author:** user' || user_id || chr(10) ||
-             '- **State:** ' ||
-               (CASE WHEN etype = 'error' THEN 'closed' ELSE 'open' END) ||
-               chr(10) ||
-             '- **Created on:** ' || dc || chr(10) ||
-             '- **Updated on:** ' ||
-               strftime(ud::TIMESTAMP, '%a %b %d %Y') || chr(10) ||
-             '- **Labels:** ' ||
-               (CASE WHEN etype = 'click' THEN '`ui`, `p1`' ELSE 'None' END) ||
-               chr(10) || chr(10) ||
-             '## Description' || chr(10) || chr(10) ||
-             'Body for event ' || id AS stem,
-             chr(10) || chr(10) || '## Comments' || chr(10) || chr(10) ||
-               '_No comments._' AS tail
-           FROM e),
-         c AS (
-           SELECT id, ud, 'github://issues/' || id AS url, h1,
-             sha256('[Topic: ' || h1 || ']' || chr(10) ||
-               '# ' || h1 || chr(10) || chr(10) || stem ||
-               (CASE WHEN id % 3 = 0 THEN '. (edited)' ELSE '.' END) ||
-               tail) AS chunk_id,
-             sha256('[Topic: ' || h1 || ']' || chr(10) ||
-               '# ' || h1 || chr(10) || chr(10) || stem || '.' || tail)
-               AS prior_id
-           FROM m)
-         SELECT url, chunk_id, h1 AS section,
-           CAST(1 AS BIGINT) AS total_chunks,
-           CASE WHEN id >= 150 THEN 'new'
-                WHEN prior_id <> chunk_id THEN 'changed'
-                ELSE 'unchanged' END AS action
-         FROM c
-         WHERE ud || 'T00:00:00Z' > '2024-02-14T12:00:00Z'
-         ORDER BY url""",
-    "ingest_articles_e2e" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id AS u, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS dc,
-             '2024-02-' ||
-               lpad(CAST((event_id % 28) + 1 AS VARCHAR), 2, '0') AS ud
-           FROM events WHERE event_id < 200),
-         w AS (
-           SELECT * FROM e
-           WHERE ud || 'T00:00:00Z' > '2024-02-14T12:00:00Z'),
-         m AS (
-           SELECT id, 'Article ' || etype || ' ' || id AS t,
-             '- **Author:** ' || u || chr(10) ||
-             '- **Section:** ' || (id % 10) || chr(10) ||
-             '- **Created:** ' || dc || chr(10) ||
-             '- **Updated:** ' ||
-               strftime(ud::TIMESTAMP, '%a %b %d %Y') || chr(10) ||
-             '- **Vote Sum:** ' ||
-               (CASE WHEN id % 9 = 0 THEN 0 ELSE id % 7 - 3 END) ||
-               chr(10) ||
-             '- **Vote Count:** ' ||
-               (CASE WHEN id % 9 = 0 THEN 0 ELSE id % 5 + 1 END) ||
-               chr(10) ||
-             (CASE WHEN etype = 'click'
-                   THEN '- **Labels:** `faq`, `howto`' || chr(10)
-                   ELSE '' END) ||
-             chr(10) || '## Content' || chr(10) || chr(10) AS head,
-             CASE WHEN id % 7 = 0 THEN '_No content._'
-                  WHEN id % 4 = 0
-                    THEN 'Body for article ' || id || ' with **bold** text'
-                  ELSE 'Body for article ' || id END AS stem
-           FROM w),
-         c AS (
-           SELECT id,
-             CASE WHEN id % 5 = 0 THEN 'zendesk://article/' || id
-                  ELSE 'https://help.example.com/articles/' || id
-                  END AS url,
-             t,
-             sha256('[Topic: ' || t || ' > Content]' || chr(10) ||
-               '# ' || t || chr(10) || chr(10) || head || stem ||
-               (CASE WHEN id % 7 = 0 THEN ''
-                     WHEN id % 3 = 0 THEN '. (edited)'
-                     ELSE '.' END)) AS chunk_id,
-             sha256('[Topic: ' || t || ' > Content]' || chr(10) ||
-               '# ' || t || chr(10) || chr(10) || head || stem ||
-               (CASE WHEN id % 7 = 0 THEN '' ELSE '.' END)) AS prior_id
-           FROM m)
-         SELECT url, chunk_id, 'Content' AS section,
-           CAST(1 AS BIGINT) AS total_chunks,
-           CASE WHEN id >= 150 THEN 'new'
-                WHEN prior_id <> chunk_id THEN 'changed'
-                ELSE 'unchanged' END AS action
-         FROM c ORDER BY url""",
-    "ingest_tickets_e2e" ->
-      """WITH e AS (
-           SELECT event_id AS id, user_id AS u, event_type AS etype,
-             strftime(ts::TIMESTAMP, '%a %b %d %Y') AS dc,
-             '2024-02-' ||
-               lpad(CAST((event_id % 28) + 1 AS VARCHAR), 2, '0') AS ud
-           FROM events WHERE event_id < 200),
-         w AS (
-           SELECT * FROM e
-           WHERE ud || 'T00:00:00Z' > '2024-02-14T12:00:00Z'),
-         m AS (
-           SELECT id,
-             'Ticket #' || id || ': Ticket ' || etype || ' ' || id AS h1,
-             CAST(u + 1000 AS VARCHAR) || ' - ' || dc AS ch,
-             '- **Status:** ' ||
-               (CASE WHEN etype = 'error' THEN 'open' ELSE 'solved' END) ||
-               chr(10) ||
-             '- **Priority:** ' ||
-               (CASE WHEN id % 3 = 0 THEN 'None'
-                     WHEN id % 2 = 0 THEN 'high' ELSE 'low' END) ||
-               chr(10) ||
-             '- **Type:** ' ||
-               (CASE WHEN etype = 'error' THEN 'incident' ELSE 'None' END) ||
-               chr(10) ||
-             '- **Requester:** ' || u || chr(10) ||
-             '- **Assignee:** ' ||
-               (CASE WHEN id % 4 = 0 THEN 'Unassigned'
-                     ELSE CAST(u + 1 AS VARCHAR) END) || chr(10) ||
-             '- **Created:** ' || dc || chr(10) ||
-             '- **Updated:** ' ||
-               strftime(ud::TIMESTAMP, '%a %b %d %Y') || chr(10) ||
-             (CASE WHEN etype = 'click'
-                   THEN '- **Tags:** `ui`, `bug`' || chr(10)
-                   ELSE '' END) ||
-             chr(10) || '## Description' || chr(10) || chr(10) AS head,
-             chr(10) || chr(10) || '## Comments' || chr(10) || chr(10) ||
-               '### ' || (u + 1000) || ' - ' || dc || chr(10) || chr(10) ||
-               (CASE WHEN id % 4 = 0
-                     THEN 'Plain reply for ticket ' || id || '.'
-                     WHEN id % 5 = 0 THEN '_No content._'
-                     ELSE 'Reply for ticket ' || id || '.' END) ||
-               chr(10) || chr(10) || '---' AS tail
-           FROM w
-           WHERE id % 11 <> 0
-             AND NOT (id % 6 <> 0 AND u % 25 IN (3, 7))),
-         c AS (
-           SELECT id, 'zendesk://ticket/' || id AS url, h1, ch,
-             sha256('[Topic: ' || h1 || ' > Comments > ' || ch || ']' ||
-               chr(10) || '# ' || h1 || chr(10) || chr(10) || head ||
-               (CASE WHEN id % 7 = 0 THEN '_No description._'
-                     ELSE 'Ticket description ' || id ||
-                       (CASE WHEN id % 3 = 0 THEN '. (edited)'
-                             ELSE '.' END) END) || tail) AS chunk_id,
-             sha256('[Topic: ' || h1 || ' > Comments > ' || ch || ']' ||
-               chr(10) || '# ' || h1 || chr(10) || chr(10) || head ||
-               (CASE WHEN id % 7 = 0 THEN '_No description._'
-                     ELSE 'Ticket description ' || id || '.' END) ||
-               tail) AS prior_id
-           FROM m)
-         SELECT url, chunk_id, ch AS section,
-           CAST(1 AS BIGINT) AS total_chunks,
-           CASE WHEN id >= 150 THEN 'new'
-                WHEN prior_id <> chunk_id THEN 'changed'
-                ELSE 'unchanged' END AS action
-         FROM c
-         UNION ALL
-         SELECT 'zendesk://ticket/' || id, '', '',
-           CAST(0 AS BIGINT), 'purge'
-         FROM w WHERE id % 11 = 0
-         ORDER BY url, action""",
-    "crawl_frontier" ->
-      """WITH RECURSIVE
-         edges AS (
-           SELECT 'doc://'||doc_id AS src,
-             'doc://'||((doc_id*7+1) % (SELECT count(*) FROM documents))
-               AS dst
-           FROM documents
-           UNION ALL
-           SELECT 'doc://'||doc_id,
-             'doc://'||((doc_id*13+5) % (SELECT count(*) FROM documents))
-           FROM documents),
-         bfs AS (
-           SELECT 'doc://0' AS url, 0 AS depth
-           UNION
-           SELECT e.dst, b.depth + 1
-           FROM bfs b JOIN edges e ON e.src = b.url
-           WHERE b.depth < 25)
-         SELECT url, CAST(min(depth) AS BIGINT) AS depth
-         FROM bfs GROUP BY 1 ORDER BY url""",
-    "sitemap_parse" ->
-      """WITH u AS (
-           SELECT 'doc://home' AS url, '2024-01-01' AS lastmod,
-             'sitemap://index' AS sitemap_url, CAST(0 AS BIGINT) AS depth
-           UNION ALL
-           SELECT 'doc://'||doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN NULL
-                  ELSE '2024-01-'||
-                    lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') END,
-             'sitemap://part'||(doc_id % 4),
-             CAST(1 AS BIGINT)
-           FROM documents)
-         SELECT url, lastmod, sitemap_url, depth FROM u ORDER BY url""",
-    "sitemap_prefix_lastmod" ->
-      """WITH prefixes(prefix, lastmod) AS (VALUES
-           ('doc://','2024-01-16'),
-           ('doc://0','2024-01-17'),('doc://1','2024-01-17'),
-           ('doc://2','2024-01-17'),('doc://3','2024-01-17'),
-           ('doc://4','2024-01-17'),('doc://5','2024-01-17'),
-           ('doc://6','2024-01-17'),('doc://7','2024-01-17'),
-           ('doc://8','2024-01-17'),('doc://9','2024-01-17')),
-         urls AS (SELECT 'doc://'||doc_id AS url FROM documents),
-         ranked AS (
-           SELECT url, prefix, lastmod,
-             row_number() OVER (PARTITION BY url
-               ORDER BY length(prefix) DESC, prefix) AS rn
-           FROM urls JOIN prefixes ON url LIKE prefix||'%')
-         SELECT url, prefix, lastmod FROM ranked WHERE rn = 1
-         ORDER BY url""",
-    "sync_list_diff" ->
-      """WITH previous AS (
-           SELECT '/data/'||doc_id||'.md' AS path FROM documents),
-         current AS (
-           SELECT '/data/'||doc_id||'.md' AS path FROM documents
-           WHERE doc_id % 6 <> 0
-           UNION ALL
-           SELECT '/data/new_'||doc_id||'.md' AS path FROM documents
-           WHERE doc_id % 11 = 0)
-         SELECT path FROM previous
-         WHERE path NOT IN (SELECT path FROM current)
-         ORDER BY path""",
-    "sync_resume" ->
-      """WITH prefixes AS (
-           SELECT DISTINCT 'src://'||(doc_id % 25) AS url_prefix
-           FROM documents),
-         log AS (
-           SELECT 'sync_complete:src://'||(doc_id % 25) AS key,
-             CASE WHEN doc_id % 3 = 1 THEN 'false' ELSE 'true' END AS value,
-             doc_id AS run_id
-           FROM documents WHERE doc_id % 25 < 20
-           UNION ALL
-           SELECT 'watermark:src://'||(doc_id % 25), doc_id::VARCHAR,
-             doc_id + 1000
-           FROM documents),
-         latest AS (
-           SELECT key, arg_max(value, run_id) AS flag,
-             max(run_id) AS last_run_id
-           FROM log GROUP BY key),
-         sc AS (
-           SELECT substr(key, length('sync_complete:') + 1) AS url_prefix,
-             flag, last_run_id
-           FROM latest WHERE key LIKE 'sync_complete:%')
-         SELECT p.url_prefix,
-           coalesce(sc.last_run_id, -1) AS last_run_id,
-           CASE WHEN sc.flag IS NULL THEN 'full_first_sync'
-                WHEN sc.flag <> 'true' THEN 'full_incomplete'
-                ELSE 'incremental' END AS decision
-         FROM prefixes p LEFT JOIN sc ON p.url_prefix = sc.url_prefix
-         ORDER BY p.url_prefix""",
-    "store_markdown_upsert" ->
-      """WITH stored AS (
-           SELECT 'doc://'||doc_id AS url,
-             'v1:'||substr(text, 1, 24) AS markdown
-           FROM documents WHERE doc_id % 5 <> 4),
-         incoming AS (
-           SELECT 'doc://'||doc_id AS url,
-             'v2:'||substr(text, 1, 24) AS markdown
-           FROM documents WHERE doc_id % 3 = 0),
-         nf AS (
-           SELECT 'doc://'||doc_id AS url FROM documents
-           WHERE doc_id % 13 = 0),
-         up AS (
-           SELECT url, markdown FROM stored
-           WHERE url NOT IN (SELECT url FROM incoming)
-           UNION ALL
-           SELECT url, markdown FROM incoming)
-         SELECT url, markdown FROM up
-         WHERE url NOT IN (SELECT url FROM nf)
-         ORDER BY url""",
-    "ctl_chunk_inspect" ->
-      """WITH hot AS (
-           SELECT 'doc://hot' AS url,
-             'c'||lpad(doc_id::VARCHAR, 4, '0') AS chunk_id,
-             CASE WHEN doc_id % 17 = 0 THEN NULL ELSE doc_id END
-               AS chunk_index,
-             substr(text, 1, 16) AS content
-           FROM documents),
-         dates AS (
-           SELECT 'c'||lpad(doc_id::VARCHAR, 4, '0') AS chunk_id,
-             '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0')
-               AS created_at
-           FROM documents WHERE doc_id % 2 = 0),
-         joined AS (
-           SELECT h.chunk_id, h.url, h.chunk_index, h.content, d.created_at
-           FROM hot h LEFT JOIN dates d ON h.chunk_id = d.chunk_id),
-         capped AS (
-           SELECT * FROM joined
-           ORDER BY coalesce(chunk_index, 9223372036854775807), chunk_id
-           LIMIT 480)
-         SELECT chunk_id, url,
-           coalesce(chunk_index::VARCHAR, '') AS chunk_index,
-           content, coalesce(created_at, '') AS created_at
-         FROM capped ORDER BY chunk_id""",
-    "sync_etag_skip" ->
-      """WITH current AS (
-           SELECT 'doc://'||doc_id AS url, sha256(text) AS etag, doc_id
-           FROM documents),
-         stored AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 3 = 0 THEN sha256(text)
-                  ELSE sha256(text||'stale') END AS stored_etag
-           FROM documents WHERE doc_id % 3 <> 2)
-         SELECT c.url,
-           CASE WHEN s.stored_etag IS NULL THEN 'fetch_new'
-                WHEN s.stored_etag = c.etag THEN 'skip'
-                ELSE 'fetch_changed' END AS decision
-         FROM current c LEFT JOIN stored s ON c.url = s.url
-         ORDER BY c.url""",
-    "sync_lastmod_storegap" ->
-      """WITH sitemap AS (
-           SELECT 'doc://'||doc_id AS url,
-             '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0') AS lastmod
-           FROM documents),
-         stored AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 4 = 0 THEN '2023-12-31'
-                  ELSE '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0')
-             END AS stored_lastmod
-           FROM documents WHERE doc_id % 9 <> 0),
-         mdstore AS (
-           SELECT 'doc://'||doc_id AS url FROM documents
-           WHERE doc_id % 7 <> 0)
-         SELECT s.url,
-           CASE WHEN t.stored_lastmod IS NULL THEN 'fetch_new'
-                WHEN t.stored_lastmod = s.lastmod AND m.url IS NULL
-                  THEN 'fetch_store_gap'
-                WHEN t.stored_lastmod = s.lastmod THEN 'skip'
-                ELSE 'fetch_changed' END AS decision
-         FROM sitemap s LEFT JOIN stored t ON s.url = t.url
-                        LEFT JOIN mdstore m ON s.url = m.url
-         ORDER BY s.url""",
-    "sync_lastmod_skip" ->
-      """WITH sitemap AS (
-           SELECT 'doc://'||doc_id AS url,
-             '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0') AS lastmod
-           FROM documents),
-         stored AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 4 = 0 THEN '2023-12-31'
-                  ELSE '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0')
-             END AS stored_lastmod
-           FROM documents WHERE doc_id % 9 <> 0)
-         SELECT s.url,
-           CASE WHEN t.stored_lastmod IS NULL THEN 'fetch_new'
-                WHEN t.stored_lastmod = s.lastmod THEN 'skip'
-                ELSE 'fetch_changed' END AS decision
-         FROM sitemap s LEFT JOIN stored t ON s.url = t.url
-         ORDER BY s.url""",
-    "crawl_broken_links" ->
-      """WITH links AS (
-           SELECT 'doc://'||doc_id AS source,
-             'doc://'||((doc_id*7+1) % (SELECT count(*) FROM documents))
-               AS target
-           FROM documents
-           UNION ALL
-           SELECT 'doc://'||doc_id,
-             'doc://'||((doc_id*13+5) % (SELECT count(*) FROM documents))
-           FROM documents),
-         notfound AS (
-           SELECT 'doc://'||doc_id AS target FROM documents
-           WHERE doc_id % 13 = 0)
-         SELECT DISTINCT source, target
-         FROM links WHERE target IN (SELECT target FROM notfound)
-         ORDER BY source, target""",
-    "ctl_overlap_detect" ->
-      """WITH r AS (
-           SELECT event_id, user_id,
-             epoch_us(ts::TIMESTAMP) AS start_us,
-             epoch_us(ts::TIMESTAMP)
-               + CAST(floor(value*1000000) AS BIGINT) AS end_us
-           FROM events),
-         marked AS (
-           SELECT user_id,
-             CASE WHEN max(end_us) OVER
-                 (PARTITION BY user_id ORDER BY start_us, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                 IS NOT NULL
-               AND start_us < max(end_us) OVER
-                 (PARTITION BY user_id ORDER BY start_us, event_id
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               THEN 'skipped' ELSE 'run' END AS status
-           FROM r)
-         SELECT user_id,
-           count(*) FILTER (WHERE status='skipped') AS n_skipped,
-           count(*) FILTER (WHERE status='run') AS n_run
-         FROM marked GROUP BY 1 ORDER BY user_id""",
-    "ctl_log_level_counts" ->
-      """SELECT user_id AS run_id, event_type AS level,
-           count(*) AS n_lines
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "ctl_log_tail_seq" ->
-      """WITH r AS (
-           SELECT user_id AS run_id, event_id AS seq,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY event_id DESC) AS rn
-           FROM events)
-         SELECT run_id,
-           coalesce(max(seq) FILTER (WHERE rn = 21), 0) AS tail_start_seq
-         FROM r GROUP BY 1 ORDER BY 1""",
-    "ctl_run_stats" ->
-      """SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS day,
-           event_type AS status, count(*) AS n_runs,
-           CAST(sum(CAST(floor(value * 1000000) AS BIGINT)) // count(*)
-             AS BIGINT) AS avg_duration_us
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "src_scan_filters" ->
-      """WITH l AS (
-           SELECT source || '/f' || doc_id ||
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS path,
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS ext,
-             CAST(n_chars AS BIGINT) AS size,
-             CAST(doc_id * 60000 AS BIGINT) AS mod_ms
-           FROM documents)
-         SELECT path, ext, size, mod_ms,
-           CASE WHEN size > 500 THEN 'skip_size'
-                WHEN ext NOT IN ('.py','.go','.md') THEN 'skip_not_included'
-                WHEN ext IN ('.md') THEN 'skip_excluded'
-                WHEN mod_ms <= 120*60000 THEN 'skip_mtime'
-                ELSE 'kept' END AS decision
-         FROM l ORDER BY path""",
-    // the incremental scan: the kept cascade SEMI-JOINED to the run's
-    // changed-file (git diff) list — doc_id % 4 IN (0,1)
-    "src_scan_allowed" ->
-      """WITH l AS (
-           SELECT doc_id,
-             source || '/f' || doc_id ||
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS path,
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS ext,
-             CAST(n_chars AS BIGINT) AS size,
-             CAST(doc_id * 60000 AS BIGINT) AS mod_ms
-           FROM documents)
-         SELECT path, ext, size, mod_ms
-         FROM l
-         WHERE size <= 500 AND ext IN ('.py','.go')
-           AND mod_ms > 120*60000
-           AND doc_id % 4 < 2
-         ORDER BY path""",
-    // the S3 source composition: the reference's own decision order
-    // (folder -> excluded -> not-included -> mtime -> size), metadata()
-    // product/version indirection, url rewrite, and the deletion diff
-    // in which mtime/size-skipped objects still count as present
-    "src_scan_s3" ->
-      """WITH l AS (
-           SELECT doc_id, n_chars,
-             CASE WHEN lang='en' THEN '.py' WHEN lang='es' THEN '.go'
-                  WHEN lang='de' THEN '.rs' WHEN lang='fr' THEN '.ts'
-                  ELSE '.md' END AS ext
-           FROM documents),
-         listing AS (
-           SELECT doc_id, ext,
-             CASE WHEN doc_id % 23 = 0 THEN 'docs/d' || doc_id || '/'
-                  ELSE 'docs/f' || doc_id || ext END AS key,
-             CAST(n_chars AS BIGINT) AS size,
-             CAST(doc_id * 60000 AS BIGINT) AS mod_ms
-           FROM l),
-         cls AS (
-           SELECT *,
-             CASE WHEN key LIKE '%/' THEN 'skip_folder'
-                  WHEN ext IN ('.md','.rs') THEN 'skip_excluded'
-                  WHEN ext NOT IN ('.py','.go') THEN 'skip_not_included'
-                  WHEN mod_ms <= 120*60000 THEN 'skip_mtime'
-                  WHEN size > 500 THEN 'skip_size'
-                  ELSE 'kept' END AS decision
-           FROM listing),
-         live AS (
-           SELECT key, decision, size, mod_ms,
-             CASE WHEN decision = 'kept'
-                  THEN 'https://docs.example.com/' || substr(key, 6)
-             END AS url,
-             CASE WHEN decision = 'kept'
-                  THEN CASE WHEN doc_id % 5 <> 0 THEN 'prod_' || (doc_id % 3)
-                            ELSE '' END
-             END AS product_name,
-             CASE WHEN decision = 'kept'
-                  THEN CASE WHEN doc_id % 11 <> 0 THEN 'v' || (doc_id % 7)
-                            ELSE '' END
-             END AS version
-           FROM cls),
-         prev AS (
-           SELECT 'docs/f' || doc_id || ext AS key
-           FROM l WHERE doc_id % 4 <> 3
-           UNION ALL
-           SELECT 'docs/gone' || doc_id || '.py' AS key
-           FROM l WHERE doc_id % 29 = 0),
-         deleted AS (
-           SELECT p.key, 'deleted' AS decision,
-             CAST(NULL AS BIGINT) AS size, CAST(NULL AS BIGINT) AS mod_ms,
-             'https://docs.example.com/' || substr(p.key, 6) AS url,
-             CAST(NULL AS VARCHAR) AS product_name,
-             CAST(NULL AS VARCHAR) AS version
-           FROM prev p
-           WHERE NOT EXISTS (SELECT 1 FROM cls c
-             WHERE c.key = p.key
-               AND c.decision IN ('kept','skip_mtime','skip_size')))
-         SELECT key, decision, size, mod_ms, url, product_name, version
-         FROM live
-         UNION ALL
-         SELECT key, decision, size, mod_ms, url, product_name, version
-         FROM deleted
-         ORDER BY key, decision""",
-    "ctl_config_registry" ->
-      """WITH scanned AS (
-           SELECT doc_id AS config_id,
-             sha256(CASE WHEN doc_id % 10 = 0 THEN text || ' updated'
-                         ELSE text END) AS content_hash,
-             CASE WHEN doc_id % 17 = 0 THEN 'invalid yaml' END
-               AS parse_error,
-             CASE WHEN doc_id % 7 = 0 THEN 'cfg_' || doc_id
-                  ELSE source END AS name
-           FROM documents WHERE doc_id % 11 <> 0),
-         stored AS (
-           SELECT doc_id AS config_id, sha256(text) AS stored_hash
-           FROM documents WHERE doc_id % 13 <> 0)
-         SELECT coalesce(sc.config_id, st.config_id) AS config_id,
-           coalesce(sc.name,
-             'cfg_' || coalesce(sc.config_id, st.config_id)) AS name,
-           CASE WHEN sc.content_hash IS NULL THEN 'deleted'
-                WHEN st.stored_hash IS NULL THEN 'new'
-                WHEN sc.content_hash <> st.stored_hash THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           sc.parse_error, sc.content_hash
-         FROM scanned sc FULL OUTER JOIN stored st
-           ON sc.config_id = st.config_id
-         ORDER BY config_id""",
-    "ctl_notify" ->
-      """WITH runs AS (
-           SELECT doc_id AS id,
-             CASE doc_id % 5 WHEN 0 THEN 'succeeded' WHEN 1 THEN 'failed'
-               WHEN 2 THEN 'canceled' WHEN 3 THEN 'skipped'
-               ELSE 'running' END AS status,
-             'cfg_'||(doc_id % 7) AS cfg,
-             CASE WHEN doc_id % 2 = 0 THEN 'all' ELSE 'failures' END
-               AS mode,
-             CASE WHEN doc_id % 2 = 0 THEN 'schedule' ELSE 'manual' END
-               AS trig,
-             (doc_id % 6 < 3) AS has_url,
-             (doc_id % 9 <> 0) AS has_dur,
-             (doc_id * 7919) % 8000 AS dur_s,
-             doc_id % 3 AS warn, doc_id % 2 AS err,
-             doc_id % 20 AS n_src
-           FROM documents WHERE doc_id < 60),
-         srcs AS (
-           SELECT id, unnest(range(0, n_src)) AS j FROM runs),
-         srcs2 AS (
-           SELECT id, j, 'prod_'||j AS product,
-             ((id + j) % 3 = 0) AS failed,
-             CASE WHEN (id + j) % 2 = 0 THEN 'boom_'||j END AS serr
-           FROM srcs),
-         fails AS (
-           SELECT id, j, product, coalesce(serr, 'failed') AS emsg,
-             row_number() OVER (PARTITION BY id ORDER BY j) AS rk,
-             count(*) OVER (PARTITION BY id) AS total
-           FROM srcs2 WHERE failed),
-         fail_agg AS (
-           SELECT id, max(total) AS n_failed,
-             string_agg(
-               CASE WHEN rk <= 5 THEN '• *'||product||'*: '||emsg END,
-               chr(10) ORDER BY rk) AS shown
-           FROM fails GROUP BY id),
-         assembled AS (
-           SELECT r.*, coalesce(f.n_failed, 0) AS n_failed, f.shown,
-             CASE r.status WHEN 'succeeded' THEN '✅'
-               WHEN 'failed' THEN '❌' ELSE '⚠️' END AS emoji,
-             CASE r.status WHEN 'canceled' THEN 'was canceled'
-               ELSE r.status END AS verb,
-             CASE WHEN r.status IN ('failed','canceled') AND r.id % 4 = 0
-               THEN 'exit code '||(r.id % 3) END AS rerr
-           FROM runs r LEFT JOIN fail_agg f ON f.id = r.id),
-         payload AS (
-           SELECT id, mode, status,
-             (status IN ('succeeded','failed','canceled')
-               AND NOT (mode = 'failures' AND status = 'succeeded'))
-               AS notified,
-             emoji||' doc2vec sync *'||cfg||'* '||verb||
-               CASE WHEN has_url
-                 THEN ' — <https://ctl.example.com/runs/'||id
-                   ||'|view run #'||id||'>'
-                 ELSE ' (run #'||id||')' END
-             || CASE WHEN n_src > 0
-                  THEN chr(10)||(n_src - n_failed)||'/'||n_src
-                    ||' sources ok' ELSE '' END
-             || CASE WHEN n_failed > 0 THEN chr(10)||shown||
-                  CASE WHEN n_failed > 5
-                    THEN chr(10)||'• …and '||(n_failed - 5)
-                      ||' more'
-                    ELSE '' END
-                ELSE '' END
-             || CASE WHEN rerr IS NOT NULL AND n_failed = 0
-                  THEN chr(10)||rerr ELSE '' END AS body,
-             'doc2vec sync '||cfg||' '||verb AS fallback,
-             'trigger: '||trig
-             || CASE WHEN has_dur THEN ' · duration: '||
-                  CASE WHEN dur_s < 60 THEN dur_s||'s'
-                    WHEN dur_s // 60 < 60
-                      THEN (dur_s // 60)||'m '||(dur_s % 60)||'s'
-                    ELSE (dur_s // 3600)||'h '||((dur_s // 60) % 60)||'m'
-                  END
-                ELSE '' END
-             || CASE WHEN warn > 0 THEN ' · warnings: '||warn
-                ELSE '' END
-             || CASE WHEN err > 0 THEN ' · errors: '||err
-                ELSE '' END AS meta
-           FROM assembled)
-         SELECT id AS run_id, mode AS notify_mode, status,
-           CAST(notified AS VARCHAR) AS notified,
-           CASE WHEN notified THEN fallback ELSE '' END AS fallback,
-           CASE WHEN notified THEN body ELSE '' END AS body,
-           CASE WHEN notified THEN meta ELSE '' END AS meta
-         FROM payload ORDER BY run_id""",
-    "ctl_schedule_reconcile" ->
-      """WITH last AS (
-           SELECT user_id AS config_id,
-             CAST(max(epoch_us(ts::TIMESTAMP)) AS BIGINT) AS last_us
-           FROM events GROUP BY 1),
-         n AS (SELECT max(last_us) AS now_us FROM last),
-         x AS (SELECT config_id, last_us,
-                 5 + (config_id % 6) * 5 AS interval_min,
-                 last_us + (5 + (config_id % 6) * 5) * 60000000
-                   AS next_due_us,
-                 now_us
-               FROM last CROSS JOIN n)
-         SELECT config_id, CAST(interval_min AS BIGINT) AS interval_min,
-           last_us,
-           CAST(CASE WHEN next_due_us <= now_us THEN 1 ELSE 0 END
-             AS BIGINT) AS due,
-           CAST(CASE WHEN next_due_us <= now_us
-             THEN (now_us - next_due_us) // 1000000 ELSE 0 END
-             AS BIGINT) AS overdue_s
-         FROM x ORDER BY config_id""",
-    "ctl_log_retention" ->
-      """WITH fin AS (
-           SELECT user_id AS run_id, max(ts) AS finished_at
-           FROM events GROUP BY 1)
-         SELECT e.user_id AS run_id, count(*) AS logs_pruned
-         FROM events e JOIN fin f ON e.user_id = f.run_id
-         WHERE f.finished_at < TIMESTAMP '2024-01-29 12:00:00'
-         GROUP BY 1 ORDER BY 1"""
-  ) ++ Map(
-    "sync_metadata_exclusion" -> (syncCtes +
-      """, meta AS (
-           SELECT 'metadata://etag:doc://'||doc_id AS url
-           FROM documents WHERE doc_id % 25 = 0),
-         del AS (
-           SELECT 'deleted' AS category, url, count(*) AS n_points
-           FROM s_chunks c
-           WHERE NOT EXISTS (SELECT 1 FROM i_docs d
-                             WHERE 'doc://'||d.doc_id = c.url)
-           GROUP BY 2),
-         kept AS (
-           SELECT 'kept_metadata' AS category, url,
-             CAST(1 AS BIGINT) AS n_points
-           FROM meta)
-         SELECT category, url, n_points
-         FROM (SELECT * FROM del UNION ALL SELECT * FROM kept)
-         ORDER BY category, url""")
-  ) ++ Map(
-    // ── Curation operators (pretraining dataset curation layer) ──────
-    "dedup_spans" ->
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws
-                     FROM documents),
-         p AS (SELECT doc_id, ws,
-                 unnest(range((len(ws)+${Curation.SpanWords - 1})
-                              //${Curation.SpanWords})) AS pos
-               FROM w),
-         segs AS (SELECT doc_id, pos,
-                    array_to_string(ws[pos*${Curation.SpanWords}+1 :
-                      pos*${Curation.SpanWords}+${Curation.SpanWords}],
-                      ' ') AS span
-                  FROM p),
-         h AS (SELECT doc_id, pos, span,
-                 ('0x'||substr(sha256(span),1,14))::BIGINT AS h FROM segs),
-         r AS (SELECT doc_id, pos, span,
-                 row_number() OVER (PARTITION BY h
-                                    ORDER BY doc_id, pos) AS rn
-               FROM h)
-         SELECT doc_id, count(*) AS n_spans,
-           CAST(sum(CASE WHEN rn=1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           sha256(coalesce(string_agg(CASE WHEN rn=1 THEN span END,
-             ' ' ORDER BY pos), '')) AS kept_hash
-         FROM r GROUP BY 1 ORDER BY doc_id""",
-    "dedup_spans_delta" ->
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws
-                     FROM documents),
-         p AS (SELECT doc_id, ws,
-                 unnest(range((len(ws)+${Curation.SpanWords - 1})
-                              //${Curation.SpanWords})) AS pos
-               FROM w),
-         segs AS (SELECT doc_id, pos,
-                    array_to_string(ws[pos*${Curation.SpanWords}+1 :
-                      pos*${Curation.SpanWords}+${Curation.SpanWords}],
-                      ' ') AS span
-                  FROM p),
-         hs AS (SELECT doc_id, pos,
-                  ('0x'||substr(sha256(span),1,14))::BIGINT AS h
-                FROM segs),
-         stored AS (SELECT DISTINCT h FROM hs WHERE doc_id % 3 <> 0),
-         inc AS (SELECT doc_id, pos, h FROM hs WHERE doc_id % 3 = 0),
-         r AS (SELECT i.doc_id, i.pos,
-                 (s.h IS NOT NULL) AS in_stored,
-                 row_number() OVER (PARTITION BY i.h
-                   ORDER BY i.doc_id, i.pos) AS rn
-               FROM inc i LEFT JOIN stored s ON i.h = s.h)
-         SELECT doc_id, count(*) AS n_spans,
-           CAST(sum(CASE WHEN in_stored THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dropped_stored,
-           CAST(sum(CASE WHEN NOT in_stored AND rn > 1 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_dropped_dup,
-           CAST(sum(CASE WHEN NOT in_stored AND rn = 1 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_kept
-         FROM r GROUP BY 1 ORDER BY doc_id""",
-    "dedup_decontaminate" ->
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') AS ws
-                     FROM documents
-                     WHERE len(string_split(text,' ')) >= ${Curation.ContamN}),
-         g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                 range(0, len(ws)-${Curation.ContamN - 1}),
-                 i -> array_to_string(ws[i+1 : i+${Curation.ContamN}],
-                   ' ')))) AS gram
-               FROM w),
-         e AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-         t AS (SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0)
-         SELECT doc_id, count(*) AS n_shared_ngrams
-         FROM t JOIN e USING (gram) GROUP BY 1 ORDER BY doc_id""",
-    "doc_rep_ngrams" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws
-                    FROM documents
-                    WHERE len(string_split(text,' ')) >= 2),
-         g AS (SELECT doc_id, unnest(list_transform(range(0, len(ws)-1),
-                 i -> array_to_string(ws[i+1 : i+2], ' '))) AS gram
-               FROM w),
-         c AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1,2)
-         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-           count(*) AS n_distinct_bigrams,
-           (max(c) * 1000) // CAST(sum(c) AS BIGINT)
-             AS top_bigram_permille,
-           (count(*) * 1000) // CAST(sum(c) AS BIGINT)
-             AS distinct_bigram_permille,
-           ((max(c) * 1000) // CAST(sum(c) AS BIGINT)) <= 60 AS keep
-         FROM c GROUP BY 1 ORDER BY doc_id""",
-    "doc_domain_stats" ->
-      """WITH d AS (SELECT source, lang, (length(text)+3)//4 AS tok
-                    FROM documents),
-         p AS (SELECT source, count(*) AS n_docs,
-                 CAST(sum(tok) AS BIGINT) AS total_tokens,
-                 CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-               FROM d GROUP BY 1),
-         t AS (SELECT CAST(sum(tok) AS BIGINT) AS grand_total FROM d)
-         SELECT source, n_docs, total_tokens, n_langs,
-           (total_tokens * 1000) // grand_total AS weight_permille
-         FROM p CROSS JOIN t ORDER BY source""",
-    "doc_sample_stratified" ->
-      """WITH ix AS (SELECT doc_id, source,
-           CAST(coalesce(nullif(
-             regexp_extract(source, 'src([0-9]+)', 1), ''), '9999') AS INT)
-             AS src_idx
-         FROM documents),
-         x AS (SELECT doc_id, source,
-           CAST(CASE WHEN src_idx < 5 THEN 800
-                     WHEN src_idx < 15 THEN 300
-                     ELSE 100 END AS BIGINT) AS rate_permille,
-           ('0x'||substr(sha256('smp:'||doc_id),1,12))::BIGINT % 1000
-             AS bucket
-         FROM ix)
-         SELECT doc_id, source, rate_permille, bucket FROM x
-         WHERE bucket < rate_permille ORDER BY doc_id""",
-    // the composed daily shard-prep job: gate -> exact keep-first
-    // dedup -> hash shuffle -> per-shard packing manifest, re-derived
-    // end to end (each stage also has its own standalone row)
-    "curation_shards_e2e" ->
-      s"""WITH gated AS (
-           SELECT doc_id, text FROM documents
-           WHERE len(string_split(text,' ')) >= 20
-             AND length(text) >= 100
-             AND (CAST(len(list_distinct(string_split(text,' ')))
-                    AS BIGINT) * 1000
-                  // CAST(len(string_split(text,' ')) AS BIGINT)) >= 300),
-         kept AS (
-           SELECT doc_id, text FROM (
-             SELECT doc_id, text,
-               min(doc_id) OVER (PARTITION BY sha256(text)) AS keeper
-             FROM gated) WHERE doc_id = keeper),
-         sharded AS (
-           SELECT doc_id, (length(text)+3)//4 AS tok,
-             ('0x'||substr(sha256('shuf:'||doc_id),1,12))::BIGINT AS k
-           FROM kept),
-         p AS (
-           SELECT doc_id, tok, k % ${Curation.ShuffleShards} AS shard,
-             row_number() OVER (PARTITION BY k % ${Curation.ShuffleShards}
-               ORDER BY k, doc_id) AS pos
-           FROM sharded)
-         SELECT CAST(shard AS BIGINT) AS shard, COUNT(*) AS n_docs,
-           CAST(SUM(tok) AS BIGINT) AS n_tokens,
-           CAST((SUM(tok) - 1) // 2048 + 1 AS BIGINT) AS n_seqs,
-           CAST(min_by(doc_id, pos) AS BIGINT) AS head_doc,
-           CAST(max_by(doc_id, pos) AS BIGINT) AS tail_doc
-         FROM p GROUP BY shard ORDER BY shard""",
-    // the hash-sort global shuffle: position = per-shard sort rank of
-    // the salted sha key; ties break by doc_id on both sides
-    "doc_shard_shuffle" ->
-      s"""WITH k AS (SELECT doc_id,
-           ('0x'||substr(sha256('shuf:'||doc_id),1,12))::BIGINT
-             AS shuffle_key
-         FROM documents)
-         SELECT doc_id,
-           CAST(shuffle_key % ${Curation.ShuffleShards} AS BIGINT)
-             AS shard,
-           CAST(row_number() OVER (
-             PARTITION BY shuffle_key % ${Curation.ShuffleShards}
-             ORDER BY shuffle_key, doc_id) AS BIGINT) AS pos,
-           shuffle_key
-         FROM k ORDER BY shard, pos""",
-    "doc_pack_sequences" ->
-      s"""WITH d AS (SELECT doc_id, source, (length(text)+3)//4 AS n_tokens
-                     FROM documents),
-         w AS (SELECT doc_id, source, CAST(n_tokens AS BIGINT) AS n_tokens,
-                 CAST(sum(n_tokens) OVER (PARTITION BY source
-                   ORDER BY doc_id) AS BIGINT) AS end_off
-               FROM d)
-         SELECT doc_id, source, n_tokens,
-           end_off - n_tokens AS start_off,
-           (end_off - n_tokens) // ${Curation.SeqLen} AS seq_first,
-           (end_off - 1) // ${Curation.SeqLen} AS seq_last,
-           (end_off - 1) // ${Curation.SeqLen}
-             - (end_off - n_tokens) // ${Curation.SeqLen} + 1 AS n_seqs
-         FROM w ORDER BY doc_id""",
-    // Bounded-hop weighted SSSP: 8 unrolled Bellman-Ford relaxations
-    // over the id-space link graph with the deterministic weight rule
-    // — all-integer, so distances hash-match exactly.
-    "graph_sssp" -> ssspOracleSql,
-    "graph_pagerank" -> (graphCteHeader +
-      pagerankIterCtes(withSinks = false) +
-      "\nSELECT url, r FROM r10 ORDER BY r DESC, url LIMIT 20"),
-    "graph_pagerank_sink" -> (graphCteHeader +
-      pagerankIterCtes(withSinks = true) +
-      "\nSELECT url, r FROM r10 ORDER BY r DESC, url LIMIT 20"),
-    "graph_degree" -> (graphCteHeader +
-      """o AS (SELECT src, count(*) AS c FROM edges GROUP BY 1),
-         i AS (SELECT dst, count(*) AS c FROM edges GROUP BY 1)
-         SELECT nodes.url, CAST(coalesce(o.c, 0) AS BIGINT) AS out_deg,
-           CAST(coalesce(i.c, 0) AS BIGINT) AS in_deg
-         FROM nodes LEFT JOIN o ON o.src = nodes.url
-                    LEFT JOIN i ON i.dst = nodes.url
-         ORDER BY url"""),
-    "graph_components" -> graphComponentsOracleSql,
-    // the incremental path (quotient-graph merge over yesterday's
-    // labels) must land the IDENTICAL labelling as full recompute —
-    // one shared oracle, so a wrong quotient merge or a label left
-    // stale hash-mismatches
-    "graph_components_delta" -> graphComponentsOracleSql,
-    "graph_triangles" -> (graphCteHeader +
-      """und AS (SELECT DISTINCT least(src,dst) AS u, greatest(src,dst) AS v
-                 FROM edges WHERE least(src,dst) < greatest(src,dst)),
-         tri AS (SELECT count(*) AS triangles
-                 FROM und a JOIN und b ON a.v = b.u
-                      JOIN und c ON a.u = c.u AND b.v = c.v),
-         deg AS (SELECT x, count(*) AS deg FROM
-                   (SELECT u AS x FROM und UNION ALL SELECT v FROM und)
-                 GROUP BY 1),
-         w AS (SELECT CAST(sum(deg*(deg-1)//2) AS BIGINT) AS wedges
-               FROM deg),
-         ne AS (SELECT count(*) AS n_edges FROM und)
-         SELECT (SELECT n FROM nn) AS n_nodes, n_edges, triangles, wedges,
-           (3000 * triangles) // nullif(wedges, 0) AS clustering_permille
-         FROM tri CROSS JOIN ne CROSS JOIN w"""),
-    "doc_blocklist_filter" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS w
-                     FROM documents),
-         x AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-                 CAST(len(list_filter(w, t -> t IN
-                   (${Curation.Blocklist.map(b => s"'$b'").mkString(",")})))
-                   AS BIGINT) AS bad_hits
-               FROM d)
-         SELECT doc_id, n_words, bad_hits,
-           (bad_hits * 1000) // n_words AS bad_permille,
-           CAST(CASE WHEN (bad_hits * 1000) // n_words
-                  < ${Curation.BlockMaxPermille} THEN 1 ELSE 0 END
-             AS BIGINT) AS keep
-         FROM x ORDER BY doc_id""",
-    "doc_mixture_epochs" ->
-      s"""WITH d AS (SELECT source, (length(text)+3)//4 AS tok
-                     FROM documents),
-         p AS (SELECT source, CAST(sum(tok) AS BIGINT) AS src_tokens
-               FROM d GROUP BY 1),
-         t AS (SELECT CAST(sum(src_tokens) AS BIGINT) AS grand_total,
-                 CAST(count(*) AS BIGINT) AS n_sources FROM p),
-         e AS (SELECT source, src_tokens,
-                 (grand_total * ${Curation.MixtureBudgetFactor})
-                   // n_sources AS target_tokens
-               FROM p CROSS JOIN t),
-         f AS (SELECT source, src_tokens, target_tokens,
-                 least(${Curation.MaxEpochsPermille},
-                   (target_tokens * 1000) // nullif(src_tokens, 0))
-                   AS epochs_permille
-               FROM e)
-         SELECT source, src_tokens, target_tokens, epochs_permille,
-           (src_tokens * epochs_permille) // 1000 AS planned_tokens
-         FROM f ORDER BY source""",
-    "doc_length_histogram" ->
-      s"""WITH d AS (SELECT CAST(length(text) AS BIGINT) AS len
-                     FROM documents),
-         h AS (SELECT len // ${Curation.HistBucketChars} AS bucket,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(len) AS BIGINT) AS total_chars
-               FROM d GROUP BY 1),
-         g AS (SELECT CAST(sum(n_docs) AS BIGINT) AS grand_docs FROM h),
-         c AS (SELECT bucket, n_docs, total_chars,
-                 CAST(sum(n_docs) OVER (ORDER BY bucket) AS BIGINT)
-                   AS cum_docs, grand_docs
-               FROM h CROSS JOIN g)
-         SELECT bucket, n_docs, total_chars, cum_docs,
-           (cum_docs * 1000) // grand_docs AS cum_permille
-         FROM c ORDER BY bucket""",
-    "emb_ann_range" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         proj AS (
-           SELECT e.vec_id, i.i AS i,
-             list_dot_product(e.emb,
-               list_transform(range(0, len(e.emb)), d ->
-                 CAST(CASE WHEN (((i.i*37 + d*101) * 2654435761) >> 13)
-                        % 2 != 0 THEN 1 ELSE -1 END AS DOUBLE))) AS proj
-           FROM e CROSS JOIN (SELECT unnest(range(0,8)) AS i) i
-         ), sig AS (
-           SELECT vec_id,
-             CAST(sum(CASE WHEN i < 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket0,
-             CAST(sum(CASE WHEN i >= 4 AND proj > 0
-               THEN (1::BIGINT << CAST(i-4 AS INT)) ELSE 0 END) AS BIGINT)
-               AS bucket1
-           FROM proj GROUP BY 1
-         ),
-         v AS (SELECT s.vec_id, bucket0, bucket1, emb
-               FROM sig s JOIN e ON e.vec_id = s.vec_id),
-         q AS (SELECT vec_id AS query_id, bucket0 AS qb0, bucket1 AS qb1,
-                 emb AS qv
-               FROM v WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, bucket0, bucket1, emb AS cv
-               FROM v WHERE vec_id >= 5),
-         cand AS (
-           SELECT query_id, neighbor_id, qv, cv
-           FROM c JOIN q ON c.bucket0 = q.qb0
-           UNION ALL
-           SELECT query_id, neighbor_id, qv, cv
-           FROM c JOIN q ON c.bucket1 = q.qb1),
-         scored AS (
-           SELECT DISTINCT query_id, neighbor_id,
-             list_dot_product(qv, cv) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(cv,cv)))
-               AS cosine
-           FROM cand)
-         SELECT query_id, neighbor_id,
-           CAST(floor(cosine * 1000) AS BIGINT) AS cosine_permille
-         FROM scored WHERE cosine >= ${graft.operators.Similarity.RangeMinCosine}
-         ORDER BY query_id, neighbor_id""",
-    "emb_cluster_stats" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         seeds AS (
-           SELECT vec_id - 1 AS c, emb AS cv FROM e
-           WHERE vec_id BETWEEN 1 AND ${Similarity.IvfNlist}),
-         proj AS (
-           SELECT e.vec_id, s.c,
-             list_dot_product(e.emb, s.cv) AS proj
-           FROM e CROSS JOIN seeds s),
-         assigned AS (
-           SELECT vec_id, c AS cell FROM (
-             SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-               ORDER BY proj DESC, c) AS rn FROM proj) WHERE rn = 1),
-         t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM assigned),
-         g AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_vectors,
-                 CAST(min(vec_id) AS BIGINT) AS min_vec,
-                 CAST(max(vec_id) AS BIGINT) AS max_vec
-               FROM assigned GROUP BY 1)
-         SELECT CAST(cell AS BIGINT) AS cell, n_vectors,
-           (n_vectors * 1000) // total AS share_permille,
-           (n_vectors * ${Similarity.IvfNlist} * 1000) // total AS load_permille,
-           min_vec, max_vec
-         FROM g CROSS JOIN t ORDER BY cell""",
-    "doc_sample_balanced" ->
-      """WITH d AS (SELECT doc_id, source, (length(text)+3)//4 AS tok
-                    FROM documents),
-         p AS (SELECT source, CAST(sum(tok) AS BIGINT) AS src_tokens
-               FROM d GROUP BY 1),
-         m AS (SELECT min(src_tokens) AS min_tokens FROM p),
-         rates AS (SELECT source,
-             least(1000, (min_tokens * 1000) // src_tokens)
-               AS rate_permille
-           FROM p CROSS JOIN m),
-         x AS (SELECT d.doc_id, d.source, r.rate_permille,
-             ('0x'||substr(sha256('smp:'||d.doc_id),1,12))::BIGINT % 1000
-               AS bucket
-           FROM d JOIN rates r ON d.source = r.source)
-         SELECT doc_id, source, rate_permille, bucket FROM x
-         WHERE bucket < rate_permille ORDER BY doc_id""",
-    // Exact token-budget assembly: per source, documents in sha-bucket
-    // order until the cumulative token count reaches the budget — the
-    // running-sum cutoff is re-derived with the identical window.
-    "curation_token_budget" ->
-      s"""WITH d AS (SELECT doc_id, source,
-             CAST((length(text)+3)//4 AS BIGINT) AS tok,
-             ('0x'||substr(sha256('smp:'||doc_id),1,12))::BIGINT % 1000
-               AS bucket
-           FROM documents),
-         c AS (SELECT source, tok, bucket,
-             sum(tok) OVER (PARTITION BY source ORDER BY bucket, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum_tok
-           FROM d)
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(tok) AS BIGINT) AS tokens_kept,
-           CAST(max(cum_tok) AS BIGINT) AS cum_at_cut,
-           CAST(max(bucket) AS BIGINT) AS last_bucket,
-           CAST(${graft.operators.Curation.TokenBudget} AS BIGINT)
-             AS budget,
-           CAST(sum(tok) * 1000 //
-             ${graft.operators.Curation.TokenBudget} AS BIGINT)
-             AS fill_permille
-         FROM c WHERE cum_tok <= ${graft.operators.Curation.TokenBudget}
-         GROUP BY 1 ORDER BY source""",
-    "curation_funnel" -> (funnelCtes +
-      "\nSELECT stage, n_docs, n_tokens FROM fun ORDER BY stage"),
-    "curation_runs" -> (funnelCtes + """
-      , prov AS (SELECT stage, n_docs, n_tokens,
-           coalesce(lag(n_docs) OVER (ORDER BY stage), n_docs) AS docs_in,
-           coalesce(lag(n_tokens) OVER (ORDER BY stage), n_tokens)
-             AS tokens_in,
-           array_to_string(list_sort(
-             list(stage||'='||n_docs||'='||n_tokens) OVER
-               (ORDER BY stage ROWS BETWEEN UNBOUNDED PRECEDING
-                AND UNBOUNDED FOLLOWING)), ',') AS sig
-         FROM fun)
-      SELECT substr(sha256('curation:'||sig),1,16)
-          AS run_id,
-        stage, docs_in, n_docs AS docs_out,
-        docs_in - n_docs AS docs_dropped,
-        tokens_in, n_tokens AS tokens_out,
-        tokens_in - n_tokens AS tokens_dropped
-      FROM prov ORDER BY stage"""),
-    "doc_keywords" ->
-      """WITH t AS (SELECT doc_id, unnest(string_split(text,' ')) AS term
-                    FROM documents),
-         tf AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY 1,2),
-         df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         scored AS (
-           SELECT tf.doc_id, tf.term, tf.tf, df.df,
-             (tf.tf * 1000000) // df.df AS score
-           FROM tf JOIN df USING (term)),
-         ranked AS (
-           SELECT doc_id, term, tf, df, score,
-             row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, term) AS rank
-           FROM scored)
-         SELECT doc_id, rank, term, tf, df, score FROM ranked
-         WHERE rank <= 3 ORDER BY doc_id, rank""",
-    "emb_ann_pq" -> (pqTopkCteSql +
-      " SELECT rank, vec_id FROM topk WHERE rank <= 10 ORDER BY rank"),
-    // PQ recall calibration: the shortlist-reranked top-10 against the
-    // exact top-10 for the same query — the PQ twin of emb_ann_recall,
-    // sharing the PQ CTE stack so the scorers cannot drift.
-    "emb_pq_recall" -> (pqTopkCteSql + """,
-         allscored AS (
-           SELECT e.vec_id,
-             list_dot_product(qv, emb) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(emb,emb)))
-               AS cosine
-           FROM e CROSS JOIN qv WHERE e.vec_id != 0),
-         exactk AS (
-           SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id)
-             AS rank FROM allscored)
-         SELECT CAST(count(*) AS BIGINT) AS n_overlap,
-           CAST(count(*) * 1000 // 10 AS BIGINT) AS recall_permille
-         FROM (SELECT vec_id FROM topk WHERE rank <= 10) t
-           JOIN (SELECT vec_id FROM exactk WHERE rank <= 10) x
-           USING (vec_id)"""),
-    "emb_quantize_int8" ->
-      """WITH e AS (SELECT vec_id,
-           CAST(list_min(embedding) AS DOUBLE) AS vmin,
-           CAST(list_max(embedding) AS DOUBLE) AS vmax, embedding
-         FROM embeddings)
-         SELECT vec_id, vmin, vmax,
-           array_to_string(list_transform(embedding, x ->
-             CAST(CASE WHEN vmax = vmin THEN 0
-                  ELSE least(floor((CAST(x AS DOUBLE) - vmin) * 255.0
-                                   / (vmax - vmin)), 255.0)
-                  END AS BIGINT)), ',') AS codes
-         FROM e ORDER BY vec_id""",
-    // BM25 with integer-rationalized k1=1.2/b=0.75 tf saturation and the
-    // scaled RSJ idf ratio (log-free) — see Retrieval.bm25Search scaladoc.
-    // CTE stack shared with the hybrid-fusion oracle (bm25RankedCte).
-    "q_search_bm25" -> bm25TopOracleSql,
-    // The persisted-index path must score identically to the inline
-    // path — one oracle pins both (Retrieval.bm25SearchIndexed).
-    "q_search_bm25_indexed" -> bm25TopOracleSql,
-    // Reciprocal Rank Fusion of the BM25 and cosine-KNN top-20 lists
-    // (k=60) — integer arithmetic; see Retrieval.hybridSearch scaladoc.
-    "q_search_hybrid" ->
-      s"""WITH $bm25RankedCte,
-         b AS (SELECT query_id, doc_id, rank AS brank FROM bm25_ranked
-               WHERE rank <= 20),
-         e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         vq AS (SELECT vec_id AS query_id, emb AS qv FROM e
-                WHERE vec_id < 3),
-         vc AS (SELECT vec_id AS doc_id, emb AS cv FROM e
-                WHERE vec_id >= 5),
-         vs AS (
-           SELECT query_id, doc_id,
-             list_dot_product(qv, cv) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(cv,cv)))
-               AS cosine
-           FROM vq CROSS JOIN vc),
-         vr AS (
-           SELECT query_id, doc_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, doc_id) AS vrank
-           FROM vs),
-         v AS (SELECT query_id, doc_id, vrank FROM vr WHERE vrank <= 20),
-         fused AS (
-           SELECT coalesce(b.query_id, v.query_id) AS query_id,
-             coalesce(b.doc_id, v.doc_id) AS doc_id,
-             coalesce(1000000 // (60 + b.brank), 0)
-               + coalesce(1000000 // (60 + v.vrank), 0) AS rrf_micro,
-             CASE WHEN b.brank IS NULL THEN 0 ELSE 1 END AS in_bm25,
-             CASE WHEN v.vrank IS NULL THEN 0 ELSE 1 END AS in_vec
-           FROM b FULL OUTER JOIN v
-             ON b.query_id = v.query_id AND b.doc_id = v.doc_id),
-         rf AS (
-           SELECT query_id, doc_id, rrf_micro, in_bm25, in_vec,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY rrf_micro DESC, doc_id) AS rank
-           FROM fused)
-         SELECT CAST(query_id AS BIGINT) AS query_id, rank, doc_id,
-           CAST(rrf_micro AS BIGINT) AS rrf_micro,
-           CAST(in_bm25 AS BIGINT) AS in_bm25,
-           CAST(in_vec AS BIGINT) AS in_vec
-         FROM rf WHERE rank <= 5 ORDER BY query_id, rank""",
-    // Positional-phrase search: anchored postings intersection — see
-    // Retrieval.phraseSearch scaladoc. Phrase VALUES interpolate from
-    // the same constant the Spark side broadcasts.
-    "q_search_phrase" ->
-      s"""WITH d AS (SELECT doc_id, string_split(text,' ') AS toks
-                     FROM documents),
-         p0 AS (SELECT doc_id, toks,
-                  unnest(range(1, len(toks) + 1)) AS i FROM d),
-         postings AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                        toks[CAST(i AS INT)] AS term FROM p0),
-         q(query_id, idx, term) AS (VALUES ${Retrieval.phraseQueries
-        .map { case (q, i, t) => s"($q,$i,'$t')" }.mkString(",")}),
-         plen AS (SELECT query_id, CAST(max(idx) + 1 AS BIGINT)
-                    AS phrase_len FROM q GROUP BY 1),
-         anch AS (SELECT q.query_id, p.doc_id, p.pos - q.idx AS anchor,
-                    q.idx
-                  FROM postings p JOIN q USING (term)),
-         occ AS (SELECT query_id, doc_id, anchor,
-                   count(DISTINCT idx) AS n_terms
-                 FROM anch GROUP BY 1, 2, 3),
-         hits AS (SELECT o.query_id, o.doc_id,
-                    count(*) AS n_occurrences
-                  FROM occ o JOIN plen USING (query_id)
-                  WHERE o.n_terms = plen.phrase_len GROUP BY 1, 2),
-         ranked AS (SELECT query_id, doc_id, n_occurrences,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY n_occurrences DESC, doc_id) AS rank
-           FROM hits)
-         SELECT CAST(query_id AS BIGINT) AS query_id, rank, doc_id,
-           CAST(n_occurrences AS BIGINT) AS n_occurrences
-         FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""",
-    // Bloom prefilter over the known-URL set, fp-priced against ground
-    // truth — see Sync.bloomPrefilterStats scaladoc. m/k interpolate.
-    "sync_bloom_prefilter" ->
-      s"""WITH urls AS (SELECT doc_id, source,
-             'doc://' || CAST(doc_id AS VARCHAR) AS url FROM documents),
-         known AS (SELECT url FROM urls WHERE doc_id % 3 != 0),
-         kj AS (SELECT url,
-                  unnest(range(0, ${Sync.BloomHashes})) AS j FROM known),
-         kb AS (SELECT DISTINCT
-             ('0x'||substr(md5(CAST(j AS VARCHAR)||':'||url), 1, 8))::BIGINT
-               % ${Sync.BloomBits} AS bit
-           FROM kj),
-         cj AS (SELECT url,
-                  unnest(range(0, ${Sync.BloomHashes})) AS j FROM urls),
-         cb AS (SELECT url, j,
-             ('0x'||substr(md5(CAST(j AS VARCHAR)||':'||url), 1, 8))::BIGINT
-               % ${Sync.BloomBits} AS bit
-           FROM cj),
-         pass AS (
-           SELECT url FROM cb JOIN kb USING (bit)
-           GROUP BY url
-           HAVING count(DISTINCT j) = ${Sync.BloomHashes}),
-         agg AS (
-           SELECT source, count(*) AS n_candidates,
-             CAST(sum(CASE WHEN doc_id % 3 != 0 THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_members,
-             CAST(sum(CASE WHEN p.url IS NOT NULL THEN 1 ELSE 0 END)
-               AS BIGINT) AS n_bloom_pass,
-             CAST(sum(CASE WHEN p.url IS NOT NULL AND doc_id % 3 = 0
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_false_positives
-           FROM urls u LEFT JOIN pass p ON u.url = p.url
-           GROUP BY source)
-         SELECT source, n_candidates, n_members, n_bloom_pass,
-           n_false_positives,
-           CASE WHEN n_candidates - n_members = 0 THEN 0
-             ELSE n_false_positives * 1000 // (n_candidates - n_members)
-             END AS fp_permille
-         FROM agg ORDER BY source""",
-    // Salting must be RESULT-INVISIBLE: the oracle is the plain join.
-    "q31_salted_skew_join" ->
-      """WITH ev AS (SELECT ((user_id % 10) + 10) % 10 AS ubucket, value
-                     FROM events),
-         dim AS (SELECT CAST(i AS BIGINT) AS ubucket,
-                   CAST(i*3 + 1 AS BIGINT) AS weight
-                 FROM (SELECT unnest(range(0, 10)) AS i)),
-         j AS (SELECT ev.ubucket, value, weight FROM ev
-               JOIN dim ON ev.ubucket = dim.ubucket)
-         SELECT ubucket, count(*) AS n_events,
-           round(CAST(sum(value * weight) AS DOUBLE), 2) AS sum_weighted
-         FROM j GROUP BY 1 ORDER BY 1""",
-    // Two-stage salted aggregation must also be result-invisible: the
-    // oracle is the direct unsalted aggregate. Values rationalize to
-    // integer cents before summing so partial-then-merge BIGINT
-    // addition is associative — no float-ulp drift between the staged
-    // and single-pass shapes.
-    // Three-valued-logic battery: the null corners engines classically
-    // diverge on, every cell re-derived — `= NULL` never true,
-    // null-safe self-equality total, NOT IN null-drop, null-bearing
-    // NOT IN list matching nothing, count(col) vs count(*), aggregate
-    // null-skip, all-null-sum sentinel.
-    "q35_null_semantics" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus,
-             nullif(o_orderpriority, '3-MEDIUM') AS p FROM orders)
-         SELECT count(*) AS n_total,
-           CAST(count(*) FILTER (WHERE p IS NULL) AS BIGINT) AS n_p_null,
-           CAST(count(p) AS BIGINT) AS n_count_p,
-           CAST(count(*) FILTER (WHERE p = NULL) AS BIGINT)
-             AS n_eq_null_true,
-           CAST(count(*) FILTER (WHERE p IS NOT DISTINCT FROM p)
-             AS BIGINT) AS n_nullsafe_self,
-           CAST(count(*) FILTER (WHERE p NOT IN ('1-URGENT', '2-HIGH'))
-             AS BIGINT) AS n_not_in,
-           CAST(count(*) FILTER (WHERE o_orderstatus NOT IN ('F', NULL))
-             AS BIGINT) AS n_not_in_nullable_list,
-           CAST(min(CASE WHEN p IS NULL THEN o_orderkey END) AS BIGINT)
-             AS min_key_null_p,
-           min(p) AS min_p,
-           CAST(COALESCE(sum(CASE WHEN FALSE THEN 1 END), -1) AS BIGINT)
-             AS all_null_sum_sentinel
-         FROM o""",
-    // SQL front-end row: the ORACLE IS THE SAME STRING the Spark side
-    // executes — cross-engine drift is impossible by construction;
-    // what's under test is Catalyst's subquery decorrelation
-    // (EXISTS/NOT EXISTS/scalar-agg → semi/anti/agg-join).
-    "q34_sql_correlated" -> Relational.CorrelatedSql,
-    "q33_salted_agg" ->
-      """WITH e AS (SELECT ((user_id % 10) + 10) % 10 AS ubucket,
-                     user_id, CAST(round(value * 100) AS BIGINT) AS c
-                   FROM events)
-         SELECT ubucket, count(*) AS n_events,
-           count(DISTINCT user_id) AS n_users,
-           CAST(sum(c) AS BIGINT) AS sum_cents,
-           min(c) AS min_cents, max(c) AS max_cents
-         FROM e GROUP BY 1 ORDER BY 1""",
-    // Value-based RANGE frame (peer-inclusive, preceding hour);
-    // floor-before-sum is the portable integer rationalization —
-    // Spark's double→long cast truncates, DuckDB's rounds.
-    "q32_range_frame" ->
-      """SELECT user_id, event_id,
-         count(*) OVER w AS n_last_hour,
-         CAST(sum(CAST(floor(value) AS BIGINT)) OVER w AS BIGINT)
-           AS sum_floor_last_hour
-         FROM (SELECT event_id, user_id, epoch_us(ts) AS us, value
-               FROM events)
-         WINDOW w AS (PARTITION BY user_id ORDER BY us
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-         ORDER BY user_id, event_id""",
-    // Exact substring-span dedup: stride-1 40-char windows, md5
-    // content-defined 1/4 sampling, cross-doc duplicate test, island
-    // merge — see Dedup.substringSpans scaladoc. CTE stacks shared with
-    // the delta oracle (substrSelCte / substrIslandsSql).
-    "dedup_substring" ->
-      s"""WITH $substrSelCte,
-         duph AS (SELECT h FROM sel GROUP BY h
-                  HAVING count(DISTINCT doc_id) >= 2),
-         marked AS (SELECT doc_id, start, start + ${Dedup.SubstrWindow} AS e
-                    FROM sel JOIN duph USING (h)),
-         $substrSpansCte
-         $substrSpansSelect""",
-    // Incremental form: batch (top fifth of ids) windows tested against
-    // the STORE's windows only — see Dedup.substringSpansDelta scaladoc.
-    "dedup_substring_delta" -> substrDeltaOracleSql,
-    // The SAME oracle pins the micro-batched streaming form — a mark
-    // lost or replayed across micro-batch boundaries is a hash
-    // mismatch (see Dedup.substrDeltaStreamParity).
-    "stream_substr_parity" -> substrDeltaOracleSql,
-    // Apply-side accounting of the span cut, per source — see
-    // Dedup.substringApplyStats scaladoc.
-    "dedup_substring_apply" ->
-      s"""WITH $substrSelCte,
-         duph AS (SELECT h FROM sel GROUP BY h
-                  HAVING count(DISTINCT doc_id) >= 2),
-         marked AS (SELECT doc_id, start, start + ${Dedup.SubstrWindow} AS e
-                    FROM sel JOIN duph USING (h)),
-         $substrSpansCte,
-         per_doc AS (
-           SELECT doc_id, count(*) AS n_spans,
-             CAST(sum(span_chars) AS BIGINT) AS cut_chars
-           FROM spans GROUP BY 1),
-         sizes AS (
-           SELECT d.doc_id, d.source,
-             CAST(length(st.text) AS BIGINT) AS chars
-           FROM documents d JOIN staged st ON d.doc_id = st.doc_id)
-         SELECT source, count(*) AS n_docs,
-           CAST(sum(CASE WHEN p.doc_id IS NULL THEN 0 ELSE 1 END)
-             AS BIGINT) AS n_docs_affected,
-           CAST(sum(coalesce(p.cut_chars, 0)) AS BIGINT) AS cut_chars,
-           CAST(sum(chars) AS BIGINT) AS total_chars,
-           CAST(sum(coalesce(p.cut_chars, 0)) * 1000 // sum(chars)
-             AS BIGINT) AS removed_permille
-         FROM sizes LEFT JOIN per_doc p USING (doc_id)
-         GROUP BY source ORDER BY source""",
-    // Recall@10 of the IVF probe vs exact KNN, per query — see
-    // Similarity.ivfRecall scaladoc. Same seeds/argmax/cosine CTE
-    // machinery as the emb_ann_ivf and emb_knn_exact oracles.
-    // Binary-quantization recall: sign-bit packing re-derived via
-    // shift arithmetic, Hamming via bit_count, exact-cosine rerank of
-    // the shortlist — quantize/popcount/rerank all cross-engine exact.
-    "emb_bq_recall" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         pk AS (SELECT vec_id,
-             CAST(list_sum(list_transform(range(0, 32), d ->
-               CASE WHEN emb[CAST(d AS INTEGER) + 1] >= 0
-                 THEN CAST(1 AS BIGINT) << CAST(d AS INTEGER)
-                 ELSE 0 END)) AS BIGINT) AS w0,
-             CAST(list_sum(list_transform(range(32, 64), d ->
-               CASE WHEN emb[CAST(d AS INTEGER) + 1] >= 0
-                 THEN CAST(1 AS BIGINT) << (CAST(d AS INTEGER) - 32)
-                 ELSE 0 END)) AS BIGINT) AS w1
-           FROM e),
-         q AS (SELECT vec_id AS query_id, emb AS qv FROM e
-               WHERE vec_id < 5),
-         qp AS (SELECT vec_id AS query_id, w0 AS qw0, w1 AS qw1
-               FROM pk WHERE vec_id < 5),
-         cand AS (
-           SELECT query_id, vec_id FROM (
-             SELECT qp.query_id, p.vec_id, row_number() OVER (
-               PARTITION BY qp.query_id ORDER BY
-                 bit_count(xor(p.w0, qp.qw0))
-                   + bit_count(xor(p.w1, qp.qw1)), p.vec_id) AS hrank
-             FROM pk p CROSS JOIN qp WHERE p.vec_id != qp.query_id)
-           WHERE hrank <= ${Similarity.BqShortlist}),
-         ann AS (
-           SELECT query_id, vec_id FROM (
-             SELECT c.query_id, c.vec_id, row_number() OVER (
-               PARTITION BY c.query_id ORDER BY
-                 list_dot_product(q.qv, e.emb) /
-                   (sqrt(list_dot_product(q.qv, q.qv))
-                    * sqrt(list_dot_product(e.emb, e.emb))) DESC,
-                 c.vec_id) AS rank
-             FROM cand c JOIN e ON e.vec_id = c.vec_id
-               JOIN q ON q.query_id = c.query_id) WHERE rank <= 10),
-         exact AS (
-           SELECT query_id, vec_id FROM (
-             SELECT q.query_id, e.vec_id, row_number() OVER (
-               PARTITION BY q.query_id ORDER BY
-                 list_dot_product(q.qv, e.emb) /
-                   (sqrt(list_dot_product(q.qv, q.qv))
-                    * sqrt(list_dot_product(e.emb, e.emb))) DESC,
-                 e.vec_id) AS rank
-             FROM e CROSS JOIN q WHERE e.vec_id != q.query_id)
-           WHERE rank <= 10),
-         ov AS (
-           SELECT a.query_id, count(*) AS n_overlap
-           FROM ann a JOIN exact x
-             ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-           GROUP BY 1)
-         SELECT q.query_id,
-           CAST(coalesce(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(coalesce(ov.n_overlap, 0) * 1000 // 10 AS BIGINT)
-             AS recall_permille
-         FROM q LEFT JOIN ov USING (query_id) ORDER BY query_id""",
-    // Matryoshka-truncation recall: exact prefix-dim top-k vs exact
-    // full-dim top-k, both re-derived with list slicing and the same
-    // ascending-dimension double accumulation.
-    "emb_mrl_recall" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         q AS (SELECT vec_id AS query_id, emb AS qv FROM e
-               WHERE vec_id < 5),
-         pairs AS (SELECT q.query_id, q.qv, e.vec_id, e.emb
-           FROM e CROSS JOIN q WHERE e.vec_id != q.query_id),
-         fulltop AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, row_number() OVER (
-               PARTITION BY query_id ORDER BY
-                 list_dot_product(qv, emb) /
-                   (sqrt(list_dot_product(qv, qv))
-                    * sqrt(list_dot_product(emb, emb))) DESC, vec_id)
-               AS rank
-             FROM pairs) WHERE rank <= 10),
-         trunctop AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, row_number() OVER (
-               PARTITION BY query_id ORDER BY
-                 list_dot_product(qv[1:${Similarity.MrlPrefixDims}],
-                     emb[1:${Similarity.MrlPrefixDims}]) /
-                   (sqrt(list_dot_product(qv[1:${Similarity.MrlPrefixDims}],
-                       qv[1:${Similarity.MrlPrefixDims}]))
-                    * sqrt(list_dot_product(emb[1:${Similarity.MrlPrefixDims}],
-                       emb[1:${Similarity.MrlPrefixDims}]))) DESC, vec_id)
-               AS rank
-             FROM pairs) WHERE rank <= 10),
-         ov AS (
-           SELECT f.query_id, count(*) AS n_overlap
-           FROM fulltop f JOIN trunctop t
-             ON f.query_id = t.query_id AND f.vec_id = t.vec_id
-           GROUP BY 1)
-         SELECT q.query_id,
-           CAST(coalesce(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(coalesce(ov.n_overlap, 0) * 1000 // 10 AS BIGINT)
-             AS recall_permille
-         FROM q LEFT JOIN ov USING (query_id) ORDER BY query_id""",
-    "emb_ann_recall" ->
-      """WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         seeds AS (
-           SELECT vec_id - 1 AS c, emb AS cv FROM e
-           WHERE vec_id BETWEEN 1 AND 16),
-         proj AS (
-           SELECT e.vec_id, s.c,
-             list_dot_product(e.emb, s.cv) AS proj
-           FROM e CROSS JOIN seeds s),
-         assigned AS (
-           SELECT vec_id, c AS cell FROM (
-             SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-               ORDER BY proj DESC, c) AS rn FROM proj) WHERE rn = 1),
-         q AS (SELECT vec_id AS query_id, emb AS qv FROM e
-               WHERE vec_id < 5),
-         qc AS (
-           SELECT vec_id AS query_id, c AS cell FROM (
-             SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id
-               ORDER BY proj DESC, c) AS rn
-             FROM proj WHERE vec_id < 5) WHERE rn <= 4),
-         cand AS (
-           SELECT qc.query_id, a.vec_id
-           FROM assigned a JOIN qc ON a.cell = qc.cell
-           WHERE a.vec_id != qc.query_id),
-         ann_scored AS (
-           SELECT c.query_id, c.vec_id,
-             list_dot_product(q.qv, e.emb) /
-               (sqrt(list_dot_product(q.qv, q.qv))
-                * sqrt(list_dot_product(e.emb, e.emb))) AS cosine
-           FROM cand c JOIN e ON e.vec_id = c.vec_id
-             JOIN q ON q.query_id = c.query_id),
-         ann AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-             FROM ann_scored) WHERE rank <= 10),
-         ex_scored AS (
-           SELECT q.query_id, e.vec_id,
-             list_dot_product(q.qv, e.emb) /
-               (sqrt(list_dot_product(q.qv, q.qv))
-                * sqrt(list_dot_product(e.emb, e.emb))) AS cosine
-           FROM e CROSS JOIN q WHERE e.vec_id != q.query_id),
-         exact AS (
-           SELECT query_id, vec_id FROM (
-             SELECT query_id, vec_id, row_number() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
-             FROM ex_scored) WHERE rank <= 10),
-         ov AS (
-           SELECT a.query_id, count(*) AS n_overlap
-           FROM ann a JOIN exact x
-             ON a.query_id = x.query_id AND a.vec_id = x.vec_id
-           GROUP BY 1)
-         SELECT q.query_id,
-           CAST(coalesce(ov.n_overlap, 0) AS BIGINT) AS n_overlap,
-           CAST(coalesce(ov.n_overlap, 0) * 1000 // 10 AS BIGINT)
-             AS recall_permille
-         FROM q LEFT JOIN ov USING (query_id) ORDER BY query_id""",
-    // Count-min-sketch heavy hitters calibrated against exact counts —
-    // see TextAnalysis.cmsHeavyHitters scaladoc.
-    "doc_heavy_hitters_cms" ->
-      s"""WITH tok AS (SELECT unnest(string_split(text,' ')) AS term
-                      FROM documents),
-         rows0 AS (SELECT term,
-             unnest(range(0, ${TextAnalysis.CmsRows})) AS r FROM tok),
-         rb AS (SELECT r,
-             ('0x'||substr(md5(CAST(r AS VARCHAR)||':'||term), 1, 8))::BIGINT
-               % ${TextAnalysis.CmsWidth} AS b
-           FROM rows0),
-         sketch AS (SELECT r, b, count(*) AS cnt FROM rb GROUP BY 1, 2),
-         exact AS (SELECT term, count(*) AS exact_count FROM tok
-                   GROUP BY 1),
-         top AS (SELECT term, exact_count FROM exact
-                 ORDER BY exact_count DESC, term LIMIT 20),
-         cand AS (SELECT term, exact_count,
-             unnest(range(0, ${TextAnalysis.CmsRows})) AS r FROM top),
-         cb AS (SELECT term, exact_count, r,
-             ('0x'||substr(md5(CAST(r AS VARCHAR)||':'||term), 1, 8))::BIGINT
-               % ${TextAnalysis.CmsWidth} AS b
-           FROM cand),
-         est AS (SELECT term, exact_count, min(cnt) AS est_count
-                 FROM cb JOIN sketch USING (r, b) GROUP BY 1, 2)
-         SELECT term, exact_count, est_count,
-           est_count - exact_count AS overcount
-         FROM est ORDER BY exact_count DESC, term""",
-    // Next-fit-decreasing compaction bins over the per-partition file
-    // listing — see Layout.compactionPlan scaladoc.
-    "store_compaction" ->
-      s"""WITH files AS (SELECT source AS part, doc_id AS file_id,
-             n_chars AS bytes FROM documents),
-         w AS (
-           SELECT part, file_id, bytes,
-             CAST(coalesce(sum(bytes) OVER (
-               PARTITION BY part ORDER BY bytes DESC, file_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS cum_before
-           FROM files),
-         b AS (SELECT part, file_id, bytes,
-                 cum_before // ${Layout.CompactionTarget} AS bin FROM w)
-         SELECT part, bin, count(*) AS n_files,
-           CAST(sum(bytes) AS BIGINT) AS total_bytes,
-           max(bytes) AS max_file_bytes, min(file_id) AS first_file
-         FROM b GROUP BY 1, 2 ORDER BY part, bin""",
-    // Corpus-bigram LM surprise score (scaled inverse conditional
-    // probability, truncated mean) — see TextAnalysis.ngramLm scaladoc.
-    "doc_ngram_lm" ->
-      """WITH d AS (SELECT doc_id, string_split(text,' ') AS toks
-                    FROM documents),
-         b0 AS (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-                FROM d),
-         bg AS (SELECT doc_id, toks[CAST(i AS INT)] AS w1,
-                  toks[CAST(i + 1 AS INT)] AS w2 FROM b0),
-         c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY 1, 2),
-         c1 AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1
-                FROM c2 GROUP BY 1),
-         sc AS (SELECT bg.doc_id, (c1.c1 * 1000000) // c2.c2 AS surprise
-                FROM bg JOIN c2 USING (w1, w2) JOIN c1 USING (w1))
-         SELECT doc_id, count(*) AS n_bigrams,
-           CAST(sum(surprise) // count(*) AS BIGINT) AS lm_score_micro
-         FROM sc GROUP BY doc_id ORDER BY doc_id"""
-  ) ++ Map(
-    // File-skipping comparison: the same rows laid out z-ordered vs
-    // time-linear, pruned by min/max stats under an x-only slice — see
-    // Layout.zorderPruneStats scaladoc. All constants interpolate.
-    // Hilbert vs Z vs linear: the Morton key re-derives from the
-    // shared bit recipe; the Hilbert key walks the generated CTE
-    // rounds (same reflect-and-swap recipe as the Scala kernel).
-    "layout_hilbert_prune" ->
-      s"""WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-         bounds AS (SELECT min(user_id) AS min_u, max(user_id) AS max_u,
-           min(us) AS min_us, max(us) AS max_us FROM ev),
-         dims AS (
-           SELECT ((user_id - min_u) * ${1L << graft.operators.Layout.ZBits})
-               // (max_u - min_u + 1) AS x,
-             ((us - min_us) * ${1L << graft.operators.Layout.ZBits})
-               // (max_us - min_us + 1) AS y
-           FROM ev CROSS JOIN bounds),
-         ${graft.operators.Layout.hilbertCteSql("dims")},
-         z AS (SELECT x, y,
-             ${graft.operators.Layout.zInterleaveSql("x", "y")} AS zkey
-           FROM dims),
-         lay AS (
-           SELECT 'hilbert' AS layout,
-             d >> ${2 * graft.operators.Layout.ZBits - 6} AS file_id,
-             x0 AS x
-           FROM h${graft.operators.Layout.ZBits}
-           UNION ALL
-           SELECT 'linear_time',
-             y >> ${graft.operators.Layout.ZBits - 6}, x FROM z
-           UNION ALL
-           SELECT 'zorder',
-             zkey >> ${2 * graft.operators.Layout.ZBits - 6}, x FROM z),
-         pf AS (
-           SELECT layout, file_id, count(*) AS n_rows,
-             min(x) AS x_min, max(x) AS x_max,
-             CAST(sum(CASE WHEN x BETWEEN ${graft.operators.Layout.PruneXLo}
-                 AND ${graft.operators.Layout.PruneXHi} THEN 1 ELSE 0 END)
-               AS BIGINT) AS rows_matched
-           FROM lay GROUP BY 1, 2)
-         SELECT layout, count(*) AS n_files,
-           CAST(sum(CASE WHEN x_max >= ${graft.operators.Layout.PruneXLo}
-               AND x_min <= ${graft.operators.Layout.PruneXHi}
-               THEN 1 ELSE 0 END) AS BIGINT) AS files_kept,
-           CAST(sum(CASE WHEN x_max >= ${graft.operators.Layout.PruneXLo}
-               AND x_min <= ${graft.operators.Layout.PruneXHi}
-               THEN n_rows ELSE 0 END) AS BIGINT) AS rows_read,
-           CAST(sum(rows_matched) AS BIGINT) AS rows_matched
-         FROM pf GROUP BY 1 ORDER BY layout""",
-    "layout_zorder_prune" ->
-      s"""WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-         bounds AS (SELECT min(user_id) AS min_u, max(user_id) AS max_u,
-           min(us) AS min_us, max(us) AS max_us FROM ev),
-         dims AS (
-           SELECT ((user_id - min_u) * ${1L << graft.operators.Layout.ZBits})
-               // (max_u - min_u + 1) AS x,
-             ((us - min_us) * ${1L << graft.operators.Layout.ZBits})
-               // (max_us - min_us + 1) AS y
-           FROM ev CROSS JOIN bounds),
-         z AS (SELECT x, y,
-             ${graft.operators.Layout.zInterleaveSql("x", "y")} AS zkey
-           FROM dims),
-         lay AS (
-           SELECT 'linear_time' AS layout,
-             y >> ${graft.operators.Layout.ZBits - 6} AS file_id, x FROM z
-           UNION ALL
-           SELECT 'zorder',
-             zkey >> ${2 * graft.operators.Layout.ZBits - 6}, x FROM z),
-         pf AS (
-           SELECT layout, file_id, count(*) AS n_rows,
-             min(x) AS x_min, max(x) AS x_max,
-             CAST(sum(CASE WHEN x BETWEEN ${graft.operators.Layout.PruneXLo}
-                 AND ${graft.operators.Layout.PruneXHi} THEN 1 ELSE 0 END)
-               AS BIGINT) AS rows_matched
-           FROM lay GROUP BY 1, 2)
-         SELECT layout, count(*) AS n_files,
-           CAST(sum(CASE WHEN x_max >= ${graft.operators.Layout.PruneXLo}
-               AND x_min <= ${graft.operators.Layout.PruneXHi}
-               THEN 1 ELSE 0 END) AS BIGINT) AS files_kept,
-           CAST(sum(CASE WHEN x_max >= ${graft.operators.Layout.PruneXLo}
-               AND x_min <= ${graft.operators.Layout.PruneXHi}
-               THEN n_rows ELSE 0 END) AS BIGINT) AS rows_read,
-           CAST(sum(rows_matched) AS BIGINT) AS rows_matched
-         FROM pf GROUP BY 1 ORDER BY layout""",
-    // Z-order layout stats: the interleave expression is generated from
-    // the same bit recipe the Spark side folds over
-    // (Layout.zInterleaveSql), so the two cannot drift.
-    "layout_zorder" ->
-      s"""WITH ev AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-         bounds AS (SELECT min(user_id) AS min_u, max(user_id) AS max_u,
-           min(us) AS min_us, max(us) AS max_us FROM ev),
-         dims AS (
-           SELECT ((user_id - min_u) * ${1L << graft.operators.Layout.ZBits})
-               // (max_u - min_u + 1) AS x,
-             ((us - min_us) * ${1L << graft.operators.Layout.ZBits})
-               // (max_us - min_us + 1) AS y
-           FROM ev CROSS JOIN bounds),
-         z AS (SELECT x, y,
-             ${graft.operators.Layout.zInterleaveSql("x", "y")} AS zkey
-           FROM dims),
-         f AS (SELECT x, y,
-             zkey >> ${2 * graft.operators.Layout.ZBits - 6} AS file_id
-           FROM z)
-         SELECT CAST(file_id AS BIGINT) AS file_id, count(*) AS n_rows,
-           min(x) AS x_min, max(x) AS x_max,
-           min(y) AS y_min, max(y) AS y_max
-         FROM f GROUP BY 1 ORDER BY file_id""",
-    // Incremental MV maintenance: the engine refreshes through the
-    // signed-merge + affected-group-recompute path (MatView.scala);
-    // the oracle recomputes the same aggregates from the final base
-    // state (store minus %10=3 deletes plus %10=7 inserts =
-    // l_orderkey % 10 <> 3), so any defect in the signed merge, the
-    // zero-count drop, or the delete-affected min/max recompute
-    // shifts a value and fails the hash.
-    "mv_incremental" -> mvRefreshOracleSql,
-    // Subject-erasure sweep: the engine purges through each surface's
-    // own incremental path (store tombstones, MV signed delta, index
-    // partition-pruned rewrite); the oracle rebuilds every surface
-    // from scratch minus the subjects — a surface the sweep missed, a
-    // lost tombstone, or a fully-purged index cell left behind all
-    // shift a count or checksum. The index side shares the bit-exact
-    // seed-quantizer assignment CTE with the IVF maintenance oracles.
-    "compliance_purge_e2e" -> compliancePurgeOracleSql,
-    // The streaming sweep must land the IDENTICAL final state: shared
-    // oracle, so a request lost/replayed across micro-batch boundaries
-    // or maintenance reading stale state between triggers is a hash
-    // mismatch.
-    "stream_purge_parity" -> compliancePurgeOracleSql,
-    // The streaming MV maintenance must land the IDENTICAL view as the
-    // batch refresh — one shared oracle, so rows lost/replayed across
-    // micro-batch boundaries or stale-store maintenance hash-mismatch.
-    "stream_mv_parity" -> mvRefreshOracleSql,
-    // CSV ingest accounting: Spark PARSES the staged lines (schema-on-
-    // read, quoted commas, PERMISSIVE corrupt capture); the oracle
-    // re-derives every count by arithmetic from documents — a parse
-    // that shifts a column, loses a quoted comma, or misroutes a
-    // malformed line changes a sum and fails the hash. Good-row-only
-    // sums keep the row independent of which FIELDS of a malformed
-    // line the parser salvages (version-specific behavior).
-    // ORC round-trip: Spark stages documents as lang-partitioned ORC
-    // (token array riding along) and reads back through a pruned,
-    // pushed-down scan; the oracle computes the same aggregate from
-    // the ORIGINAL parquet, so format fidelity feeds the hash
-    "src_scan_orc" ->
-      """SELECT lang, source, count(*) AS n_rows,
-           CAST(sum(doc_id) AS BIGINT) AS sum_doc_id,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-             AS sum_tokens
-         FROM documents
-         WHERE lang IN ('en', 'fr') AND n_chars >= 200
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "src_scan_csv" ->
-      """WITH base AS (
-           SELECT doc_id, lang, n_chars,
-             CASE WHEN doc_id % 13 = 5 THEN '_corrupt' ELSE lang END
-               AS grp,
-             doc_id % 13 <> 5 AS good
-           FROM documents)
-         SELECT grp AS lang, count(*) AS n_rows,
-           CAST(COALESCE(sum(CASE WHEN good THEN doc_id END), 0)
-             AS BIGINT) AS sum_doc_id,
-           CAST(COALESCE(sum(CASE WHEN good THEN n_chars END), 0)
-             AS BIGINT) AS sum_chars,
-           CAST(COALESCE(sum(CASE WHEN good
-             THEN 2 + length(CAST(doc_id AS VARCHAR)) END), 0)
-             AS BIGINT) AS sum_title_len
-         FROM base GROUP BY 1 ORDER BY lang""",
-    // JSONL ingest accounting: Spark PARSES the staged lines (nested
-    // struct, string array, two planted malformation classes — typed
-    // and structural); the oracle re-derives every count by arithmetic
-    // from documents. Nested-field extraction, array sizing, and
-    // quarantine routing all feed the hash; good-row-only sums keep
-    // the row independent of what the parser salvages from a corrupt
-    // line.
-    "src_scan_jsonl" ->
-      """WITH base AS (
-           SELECT doc_id, lang, n_chars,
-             CASE WHEN doc_id % 13 = 5 OR doc_id % 17 = 3
-               THEN '_corrupt' ELSE lang END AS grp,
-             doc_id % 13 <> 5 AND doc_id % 17 <> 3 AS good
-           FROM documents)
-         SELECT grp AS lang, count(*) AS n_rows,
-           CAST(COALESCE(sum(CASE WHEN good THEN doc_id END), 0)
-             AS BIGINT) AS sum_doc_id,
-           CAST(COALESCE(sum(CASE WHEN good THEN n_chars END), 0)
-             AS BIGINT) AS sum_chars,
-           CAST(COALESCE(sum(CASE WHEN good THEN doc_id % 3 + 1 END), 0)
-             AS BIGINT) AS sum_tags
-         FROM base GROUP BY 1 ORDER BY lang""",
-    // Time travel over the versioned store: three upserts (inserts +
-    // planted updates), every version read back as-of its pointer;
-    // the oracle re-derives each snapshot's membership and content
-    // lengths from the construction arithmetic — a leaked write, a
-    // dropped update, or a pointer off-by-one shifts a sum.
-    "store_time_travel" ->
-      """WITH d AS (SELECT doc_id, length(text) AS len FROM documents)
-         SELECT CAST(0 AS BIGINT) AS version, count(*) AS n_urls,
-           CAST(sum(doc_id) AS BIGINT) AS sum_doc_id,
-           CAST(sum(len) AS BIGINT) AS sum_len
-         FROM d WHERE doc_id % 3 = 0
-         UNION ALL
-         SELECT 1, count(*), CAST(sum(doc_id) AS BIGINT),
-           CAST(sum(len + CASE WHEN doc_id % 6 = 0 THEN 3 ELSE 0 END)
-             AS BIGINT)
-         FROM d WHERE doc_id % 3 IN (0, 1)
-         UNION ALL
-         SELECT 2, count(*), CAST(sum(doc_id) AS BIGINT),
-           CAST(sum(len + CASE WHEN doc_id % 6 IN (0, 3) THEN 3 ELSE 0
-             END) AS BIGINT)
-         FROM d WHERE doc_id % 3 IN (0, 1, 2)
-         ORDER BY version""",
-    // Politeness token bucket: the engine walks per-URL ranks; the
-    // oracle derives the same aggregates in CLOSED FORM (n over burst
-    // B at delay D: makespan = max(0, n-B)·D, total wait =
-    // D·(n-B)(n-B+1)/2) — two independent derivations of the contract.
-    "crawl_politeness" -> {
-      import graft.sources.Crawler.{PolitenessBurst => B,
-        PolitenessDelayMs => D}
-      s"""WITH d AS (SELECT doc_id % 20 AS domain, count(*) AS n
-             FROM documents GROUP BY 1),
-         x AS (SELECT domain, n,
-             CASE WHEN n > $B THEN n - $B ELSE 0 END AS q FROM d)
-         SELECT domain, CAST(n AS BIGINT) AS n_urls,
-           CAST(CASE WHEN n < $B THEN n ELSE $B END AS BIGINT)
-             AS n_immediate,
-           CAST(q * $D AS BIGINT) AS makespan_ms,
-           CAST(q * (q + 1) * $D // 2 AS BIGINT) AS total_wait_ms
-         FROM x ORDER BY domain"""
-    },
-    // robots.txt evaluation: the engine PARSES the staged per-domain
-    // robots text (group selection incl. a poisoned `*` group,
-    // longest-match precedence, Allow tie-break); the oracle
-    // re-derives every verdict as pure prefix arithmetic.
-    "crawl_robots" ->
-      """WITH d AS (SELECT doc_id, doc_id % 20 AS domain,
-             CAST(doc_id AS VARCHAR) AS ds,
-             CAST((doc_id % 20) % 10 AS VARCHAR) AS f,
-             CAST((doc_id % 20 + 3) % 10 AS VARCHAR) AS g
-           FROM documents),
-         v AS (SELECT domain, doc_id,
-             NOT (starts_with(ds, f) AND NOT starts_with(ds, f || g))
-               AS allowed
-           FROM d)
-         SELECT domain, count(*) AS n_urls,
-           CAST(sum(CASE WHEN allowed THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_allowed,
-           CAST(sum(CASE WHEN allowed THEN 0 ELSE 1 END) AS BIGINT)
-             AS n_blocked,
-           CAST(COALESCE(sum(CASE WHEN NOT allowed THEN doc_id END), 0)
-             AS BIGINT) AS sum_id_blocked
-         FROM v GROUP BY 1 ORDER BY domain""",
-    // CDC between consecutive store versions: change classes
-    // re-derived from the fixture's residue arithmetic — a feed that
-    // compares keys instead of content misses every update.
-    "store_change_feed" ->
-      """WITH d AS (SELECT doc_id, doc_id % 3 AS r3, doc_id % 6 AS r6
-           FROM documents)
-         SELECT CAST(0 AS BIGINT) AS from_v, CAST(1 AS BIGINT) AS to_v,
-           CAST(count(*) FILTER (WHERE r3 = 1) AS BIGINT) AS n_inserted,
-           CAST(count(*) FILTER (WHERE r6 = 0) AS BIGINT) AS n_updated,
-           CAST(count(*) FILTER (WHERE r3 = 0 AND r6 <> 0) AS BIGINT)
-             AS n_unchanged,
-           CAST(0 AS BIGINT) AS n_deleted,
-           CAST(COALESCE(sum(doc_id) FILTER (WHERE r3 = 1), 0) AS BIGINT)
-             AS sum_id_inserted,
-           CAST(COALESCE(sum(doc_id) FILTER (WHERE r6 = 0), 0) AS BIGINT)
-             AS sum_id_updated
-         FROM d
-         UNION ALL
-         SELECT 1, 2,
-           CAST(count(*) FILTER (WHERE r3 = 2) AS BIGINT),
-           CAST(count(*) FILTER (WHERE r6 = 3) AS BIGINT),
-           CAST(count(*) FILTER (WHERE r3 IN (0, 1) AND r6 <> 3)
-             AS BIGINT),
-           CAST(0 AS BIGINT),
-           CAST(COALESCE(sum(doc_id) FILTER (WHERE r3 = 2), 0) AS BIGINT),
-           CAST(COALESCE(sum(doc_id) FILTER (WHERE r6 = 3), 0) AS BIGINT)
-         FROM d ORDER BY from_v""",
-    // Transaction-log snapshots: three commits (add A+B; add C remove
-    // A; add D) folded per version — the oracle re-derives membership
-    // from the slice arithmetic (v0: slices 0,1; v1: 1,2; v2: 1,2,3).
-    "store_txn_log" -> txnLogOracleSql,
-    // The streamed commits must fold to IDENTICAL snapshots — shared
-    // oracle; a commit lost, re-versioned by a replay, or applied out
-    // of order is a hash mismatch.
-    "stream_txn_parity" -> txnLogOracleSql,
-    // Vacuum to the head after compaction: 5 staged file dirs, only
-    // the compacted one referenced — 4 vacuumed, head content intact.
-    "store_vacuum_txn" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 AS r FROM documents)
-         SELECT CAST(5 AS BIGINT) AS n_disk_before,
-           CAST(1 AS BIGINT) AS n_disk_after,
-           CAST(4 AS BIGINT) AS n_vacuumed,
-           count(*) AS head_rows,
-           CAST(sum(doc_id) AS BIGINT) AS head_sum
-         FROM d WHERE r IN (1, 2, 3)""",
-    // Compaction through the log: v3 swaps every live file for one
-    // compacted file — membership identical to v2 (content
-    // preservation), n_files drops to 1, earlier snapshots untouched.
-    "store_compact_txn" -> (txnLogOracleSql.replace("ORDER BY version",
-      """UNION ALL
-       SELECT 3, 1, count(*), CAST(sum(doc_id) AS BIGINT)
-       FROM d WHERE r IN (1, 2, 3)
-       ORDER BY version""")),
-    // Schema-contract enforcement: a rogue fourth producer's rows are
-    // quarantined (any out-of-contract column non-null), never
-    // silently projected into the contract shape.
-    "src_scan_contract" ->
-      """WITH d AS (SELECT doc_id, doc_id % 3 AS gen FROM documents)
-         SELECT gen,
-           CAST(count(*) * CASE WHEN gen = 0 THEN 2 ELSE 1 END AS BIGINT)
-             AS n_rows,
-           count(*) AS n_in_contract,
-           CAST(count(*) * CASE WHEN gen = 0 THEN 1 ELSE 0 END AS BIGINT)
-             AS n_quarantined,
-           CAST(sum(doc_id) AS BIGINT) AS sum_id_in_contract,
-           'chars_total,debug_blob' AS rogue_columns
-         FROM d GROUP BY gen ORDER BY gen""",
-    // Schema-evolution read: Spark must merge three producer
-    // generations' file schemas and null-backfill retired/not-yet-born
-    // columns; the oracle re-derives the per-generation null
-    // accounting from the documents table and the generation rules
-    // alone.
-    "src_scan_evolution" ->
-      """WITH g AS (SELECT doc_id % 3 AS gen, doc_id, source, lang,
-             n_chars FROM documents)
-         SELECT gen, count(*) AS n_rows,
-           CAST(sum(CASE WHEN gen = 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_source_null,
-           CAST(sum(CASE WHEN gen = 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_lang_null,
-           CAST(sum(CASE WHEN gen <> 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_chars_null,
-           CAST(COALESCE(sum(CASE WHEN gen = 2 THEN n_chars END), 0)
-             AS BIGINT) AS sum_chars,
-           CAST(sum(doc_id) AS BIGINT) AS sum_doc_id
-         FROM g GROUP BY 1 ORDER BY gen""",
-    // ANALYZE-style stats: every cell recomputed from scratch per
-    // column; min/max aggregate in native type then cast, exactly as
-    // the Spark side does, and the broadcast flag re-derives from the
-    // same byte rollup.
-    "stats_table_profile" -> statsProfileOracleSql,
-    // KMV distinct sketching with first-class MERGE: per-type sketch
-    // estimates and pairwise union estimates derived by folding
-    // finished sketches (never re-scanning), all re-derived in SQL —
-    // 52-bit sha hashes, k smallest distinct, integer estimate.
-    "stats_kmv_distinct" -> kmvOracleSql,
-    // The micro-batched sketch maintenance must land IDENTICAL
-    // estimates — shared oracle, so a batch lost/double-merged or a
-    // non-associative merge is a hash mismatch.
-    "stream_kmv_parity" -> kmvOracleSql,
-    // Mergeable-histogram quantile estimate CALIBRATED against the
-    // exact rank statistic — the whole kernel (milli-unit BIGINT
-    // rationalization, scan-derived bucket width, deterministic
-    // in-bucket interpolation, domain-permille error) re-derives in
-    // pure integer SQL; the oracle's exact side uses a global
-    // row_number where the engine uses histogram-located bucket
-    // refinement, so the two must agree on the rank VALUE.
-    "stats_quantile_sketch" ->
-      s"""WITH v AS (SELECT CAST(floor(value * 1000) AS BIGINT) AS v
-             FROM events),
-         st AS (SELECT min(v) AS vmin, max(v) AS vmax, count(*) AS n,
-             (max(v) - min(v)) // ${graft.operators.Stats.QuantileBuckets}
-               + 1 AS w
-           FROM v),
-         b AS (SELECT v, (v - vmin) // w AS bucket FROM v, st),
-         hist AS (SELECT bucket, count(*) AS cnt FROM b GROUP BY 1),
-         cum AS (SELECT bucket, cnt,
-             CAST(COALESCE(sum(cnt) OVER (ORDER BY bucket
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS BIGINT) AS cum_before
-           FROM hist),
-         tgt AS (SELECT p, 1 + (n - 1) * p // 1000 AS target
-           FROM (SELECT unnest([${
-             graft.operators.Stats.QuantilesPermille.mkString(",")}]) AS p),
-             st),
-         loc AS (SELECT p, target, c.bucket, c.cnt, c.cum_before
-           FROM tgt JOIN cum c
-             ON target > c.cum_before AND target <= c.cum_before + c.cnt),
-         ranked AS (SELECT v, row_number() OVER (ORDER BY v) AS rk FROM v),
-         ex AS (SELECT p, v AS exact_v FROM loc JOIN ranked ON rk = target)
-         SELECT CAST(l.p AS BIGINT) AS p,
-           CAST(l.target AS BIGINT) AS target_rank,
-           CAST(l.bucket AS BIGINT) AS bucket,
-           CAST(st.vmin + l.bucket * st.w
-             + (l.target - l.cum_before - 1) * st.w // l.cnt AS BIGINT)
-             AS est_v,
-           CAST(ex.exact_v AS BIGINT) AS exact_v,
-           CAST(CASE WHEN st.vmax > st.vmin THEN
-             abs(st.vmin + l.bucket * st.w
-               + (l.target - l.cum_before - 1) * st.w // l.cnt
-               - ex.exact_v) * 1000 // (st.vmax - st.vmin)
-             ELSE 0 END AS BIGINT) AS err_permille
-         FROM loc l CROSS JOIN st JOIN ex ON l.p = ex.p
-         ORDER BY p"""
-  )
-
-  /** Oracle for `stats_table_profile`: one UNION ALL branch per
-    * profiled (table, column), generated from THE spec list
-    * (Stats.ProfileSpec) the exact and approx profiles consume — the
-    * three cannot drift. */
-  private lazy val statsProfileOracleSql: String = {
-    val branches = graft.operators.Stats.ProfileSpec.flatMap { case (t, cols) =>
-      cols.map { c =>
-        s"""SELECT '$t' AS tbl, '$c' AS col_name,
-           count(*) AS n_rows,
-           count(*) - count($c) AS n_null,
-           count(DISTINCT $c) AS ndv,
-           CAST(min($c) AS VARCHAR) AS min_s,
-           CAST(max($c) AS VARCHAR) AS max_s,
-           CAST(COALESCE(sum(length(CAST($c AS VARCHAR))), 0) AS BIGINT)
-             AS total_len
-           FROM $t"""
-      }
-    }.mkString(" UNION ALL ")
-    s"""WITH p AS ($branches),
-       t AS (SELECT tbl, CAST(sum(total_len) AS BIGINT) AS tbl_est_bytes
-             FROM p GROUP BY 1)
-       SELECT p.tbl, p.col_name, p.n_rows, p.n_null, p.ndv, p.min_s,
-         p.max_s, p.total_len, t.tbl_est_bytes,
-         t.tbl_est_bytes < ${graft.operators.Stats.BroadcastBytes}
-           AS broadcastable
-       FROM p JOIN t USING (tbl) ORDER BY tbl, col_name"""
-  }
-
-  /** PQ shortlist-then-rerank top-k CTE stack shared by emb_ann_pq
-    * and emb_pq_recall: ends at `topk` (exact-cosine rerank of the
-    * ADC shortlist) with `e` and `qv` still in scope. */
-  private lazy val pqTopkCteSql: String =
-    s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb
-           FROM embeddings),
-         -- codebooks: subvectors of the 16 seed embeddings (vec_id
-         -- 1..16), 8 subspaces x 8 dims. Every distance is
-         -- (dot(a,a) - 2*dot(a,b)) + dot(b,b) over list_dot_product's
-         -- left-to-right accumulation, and the ADC total is the
-         -- explicitly left-associated 8-term chain — bit-identical to
-         -- the Scala kernel's ascending loops (grouped sum() would be
-         -- order-unspecified and near-dup vectors share codes).
-         seeds AS (
-           SELECT vec_id - 1 AS c, emb AS cv FROM e
-           WHERE vec_id BETWEEN 1 AND ${Similarity.IvfNlist}),
-         ms AS (SELECT unnest(range(0,8)) AS m),
-         d AS (
-           SELECT e.vec_id, ms.m, s.c,
-             (list_dot_product(e.emb[ms.m*8+1 : ms.m*8+8],
-                               e.emb[ms.m*8+1 : ms.m*8+8])
-              - 2 * list_dot_product(e.emb[ms.m*8+1 : ms.m*8+8],
-                                     s.cv[ms.m*8+1 : ms.m*8+8]))
-             + list_dot_product(s.cv[ms.m*8+1 : ms.m*8+8],
-                                s.cv[ms.m*8+1 : ms.m*8+8]) AS d2
-           FROM e CROSS JOIN ms CROSS JOIN seeds s),
-         codes AS (
-           SELECT vec_id, m, c FROM (
-             SELECT vec_id, m, c, row_number() OVER (
-               PARTITION BY vec_id, m ORDER BY d2 ASC, c) AS rn
-             FROM d WHERE vec_id != 0) WHERE rn = 1),
-         p AS (
-           SELECT vec_id,
-             max(CASE WHEN m=0 THEN c END) AS c0,
-             max(CASE WHEN m=1 THEN c END) AS c1,
-             max(CASE WHEN m=2 THEN c END) AS c2,
-             max(CASE WHEN m=3 THEN c END) AS c3,
-             max(CASE WHEN m=4 THEN c END) AS c4,
-             max(CASE WHEN m=5 THEN c END) AS c5,
-             max(CASE WHEN m=6 THEN c END) AS c6,
-             max(CASE WHEN m=7 THEN c END) AS c7
-           FROM codes GROUP BY 1),
-         t AS (SELECT m, c, d2 FROM d WHERE vec_id = 0),
-         adc AS (
-           SELECT p.vec_id,
-             ((((((t0.d2 + t1.d2) + t2.d2) + t3.d2) + t4.d2)
-               + t5.d2) + t6.d2) + t7.d2 AS adc
-           FROM p
-             JOIN t t0 ON t0.m=0 AND t0.c=p.c0
-             JOIN t t1 ON t1.m=1 AND t1.c=p.c1
-             JOIN t t2 ON t2.m=2 AND t2.c=p.c2
-             JOIN t t3 ON t3.m=3 AND t3.c=p.c3
-             JOIN t t4 ON t4.m=4 AND t4.c=p.c4
-             JOIN t t5 ON t5.m=5 AND t5.c=p.c5
-             JOIN t t6 ON t6.m=6 AND t6.c=p.c6
-             JOIN t t7 ON t7.m=7 AND t7.c=p.c7),
-         short AS (
-           SELECT vec_id FROM (
-             SELECT vec_id, row_number() OVER (ORDER BY adc ASC, vec_id)
-               AS rn FROM adc) WHERE rn <= 50),
-         qv AS (SELECT emb AS qv FROM e WHERE vec_id = 0),
-         scored AS (
-           SELECT sh.vec_id,
-             list_dot_product(qv, emb) /
-               (sqrt(list_dot_product(qv,qv)) * sqrt(list_dot_product(emb,emb)))
-               AS cosine
-           FROM short sh JOIN e ON e.vec_id = sh.vec_id CROSS JOIN qv),
-         topk AS (
-           SELECT vec_id, row_number() OVER (ORDER BY cosine DESC, vec_id)
-             AS rank FROM scored)"""
-
-  /** Shared full-recompute oracle for graph_components and its
-    * incremental form: min-reachable-node labelling over the hub
-    * overlay edges via a recursive CTE. */
-  private lazy val graphComponentsOracleSql: String =
-    s"""WITH RECURSIVE
-       p AS (SELECT doc_id//2 AS a, doc_id AS b FROM documents
-             WHERE doc_id % ${graft.operators.Graph.HubEvery} = 0
-               AND doc_id > 0),
-       edges AS (SELECT a AS s, b AS d FROM p
-                 UNION ALL SELECT b, a FROM p),
-       reach AS (
-         SELECT doc_id AS start, doc_id AS node FROM documents
-         UNION
-         SELECT r.start, e.d FROM reach r JOIN edges e ON e.s = r.node)
-       SELECT start AS doc_id, CAST(min(node) AS BIGINT) AS cluster_id,
-         CAST(CASE WHEN start = min(node) THEN 1 ELSE 0 END AS BIGINT)
-           AS is_canonical
-       FROM reach GROUP BY 1 ORDER BY 1"""
-
-  /** Shared full-recompute oracle for the incremental-MV rows: the
-    * engine refreshes through the signed-merge + affected-group-
-    * recompute path (MatView.scala); the oracle recomputes the same
-    * aggregates from the final base state (store minus the %10=3
-    * deletes plus the %10=7 inserts = `l_orderkey % 10 <> 3`). */
-  private lazy val mvRefreshOracleSql: String =
-    """SELECT l_partkey, count(*) AS n_rows,
-       CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-       strftime(min(l_shipdate), '%Y-%m-%d') AS min_ship,
-       strftime(max(l_shipdate), '%Y-%m-%d') AS max_ship
-       FROM lineitem WHERE l_orderkey % 10 <> 3
-       GROUP BY 1 ORDER BY l_partkey"""
-
-  /** Shared CTE stack for the sync oracles: deterministic stored/incoming
-    * corpora + 128-char token chunks + per-url hash-multiset signatures. */
-  /** Shared WITH-header for the link-graph oracles — node list + the
-    * synthetic edge relation with Graph's affine-map constants
-    * interpolated, so the oracle can't drift from the implementation
-    * when a parameter changes. Ends mid-WITH: callers append their own
-    * CTEs and the final SELECT. */
-  /** Shared oracle of `stats_kmv_distinct` and `stream_kmv_parity`:
-    * 52-bit sha hashes, k smallest distinct per scope, integer
-    * estimate — the streaming sketch maintenance must land the
-    * identical report. */
-  private def kmvOracleSql: String =
-    s"""WITH ev AS (SELECT DISTINCT event_type, user_id FROM events),
-       uh AS (SELECT DISTINCT event_type,
-           ('0x'||substr(sha256(CAST(user_id AS VARCHAR)),1,13))::BIGINT
-             AS h
-         FROM ev),
-       rk AS (SELECT event_type, h, row_number() OVER
-           (PARTITION BY event_type ORDER BY h) AS rn FROM uh),
-       sk AS (SELECT event_type, count(*) AS sz, max(h) AS hk
-         FROM rk WHERE rn <= ${Stats.KmvK} GROUP BY 1),
-       tex AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
-         FROM ev GROUP BY 1),
-       trow AS (SELECT 'type:'||s.event_type AS scope, t.n_exact,
-           CASE WHEN s.sz < ${Stats.KmvK} THEN s.sz
-             ELSE ${Stats.KmvK - 1} * ${Stats.KmvDomain} // s.hk END
-             AS n_est
-         FROM sk s JOIN tex t USING (event_type)),
-       types AS (SELECT DISTINCT event_type AS t FROM ev),
-       prs AS (SELECT a.t AS ta, b.t AS tb FROM types a
-         JOIN types b ON a.t < b.t),
-       puh AS (SELECT DISTINCT ta, tb, h FROM prs
-         JOIN uh ON uh.event_type IN (ta, tb)),
-       prk AS (SELECT ta, tb, h, row_number() OVER
-           (PARTITION BY ta, tb ORDER BY h) AS rn FROM puh),
-       psk AS (SELECT ta, tb, count(*) AS sz, max(h) AS hk
-         FROM prk WHERE rn <= ${Stats.KmvK} GROUP BY 1, 2),
-       pex AS (SELECT ta, tb, count(DISTINCT user_id) AS n_exact
-         FROM prs JOIN ev ON ev.event_type IN (ta, tb) GROUP BY 1, 2),
-       prow AS (SELECT 'union:'||p.ta||'|'||p.tb AS scope, x.n_exact,
-           CASE WHEN p.sz < ${Stats.KmvK} THEN p.sz
-             ELSE ${Stats.KmvK - 1} * ${Stats.KmvDomain} // p.hk END
-             AS n_est
-         FROM psk p JOIN pex x ON p.ta = x.ta AND p.tb = x.tb)
-       SELECT scope, CAST(n_exact AS BIGINT) AS n_exact,
-         CAST(n_est AS BIGINT) AS n_est,
-         CAST(abs(n_est - n_exact) * 1000 // n_exact AS BIGINT)
-           AS err_permille
-       FROM (SELECT * FROM trow UNION ALL SELECT * FROM prow)
-       ORDER BY scope"""
-
-  /** Oracle of `graph_sssp`: the id-space weighted link graph plus
-    * [[graft.operators.Graph.SsspRounds]] unrolled relaxation rounds
-    * (recursive CTEs can't aggregate in the recursive term; unrolling
-    * is exact), every constant interpolated from the Graph object so
-    * the two sides cannot drift. */
-  private def ssspOracleSql: String = {
-    import graft.operators.Graph._
-    val rounds = (1 to SsspRounds).map { k =>
-      s"""d$k AS (SELECT node, min(dist) AS dist FROM (
-           SELECT node, dist FROM d${k - 1}
-           UNION ALL
-           SELECT e.dst, d.dist + e.w FROM d${k - 1} d
-             JOIN ed e ON d.node = e.src) GROUP BY 1)"""
-    }.mkString(",\n         ")
-    s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-       ed AS (
-         SELECT src, dst, 1 + (3 * src + dst) % $SsspWeightMod AS w
-         FROM (
-           SELECT doc_id AS src,
-             (doc_id*$LinkMulA+$LinkAddA) % (SELECT n FROM nn) AS dst
-           FROM documents
-           UNION
-           SELECT doc_id,
-             (doc_id*$LinkMulB+$LinkAddB) % (SELECT n FROM nn)
-           FROM documents
-           UNION
-           SELECT doc_id, doc_id//2
-           FROM documents WHERE doc_id % $HubEvery = 0)),
-       d0 AS (SELECT CAST($SsspSource AS BIGINT) AS node,
-           CAST(0 AS BIGINT) AS dist
-         FROM documents WHERE doc_id = $SsspSource),
-       $rounds
-       SELECT 'doc://'||node AS url, CAST(dist AS BIGINT) AS dist
-       FROM d$SsspRounds ORDER BY url"""
-  }
-
-  private val graphCteHeader: String = {
-    import graft.operators.Graph._
-    s"""WITH nn AS (SELECT count(*) AS n FROM documents),
-       nodes AS (SELECT 'doc://'||doc_id AS url FROM documents),
-       edges AS (
-         SELECT 'doc://'||doc_id AS src,
-           'doc://'||((doc_id*$LinkMulA+$LinkAddA) % (SELECT n FROM nn))
-             AS dst
-         FROM documents
-         UNION
-         SELECT 'doc://'||doc_id,
-           'doc://'||((doc_id*$LinkMulB+$LinkAddB) % (SELECT n FROM nn))
-         FROM documents
-         UNION
-         SELECT 'doc://'||doc_id, 'doc://'||(doc_id//2)
-         FROM documents WHERE doc_id % $HubEvery = 0),
-       """
-  }
-
-  /** 10 unrolled integer-PageRank iterations (recursive CTEs can't
-    * aggregate in the recursive term; unrolling is exact and cheap).
-    * With sinks, every SinkEvery-th page loses its out-edges and each
-    * round redistributes the dangling mass Σr_sinks div n — the same
-    * integer arithmetic as Graph.pageRank. */
-  private def pagerankIterCtes(withSinks: Boolean): String = {
-    import graft.operators.Graph.{Scale, DampNum, SinkEvery}
-    val edgesPr =
-      if (withSinks)
-        s"""sinks AS (SELECT 'doc://'||doc_id AS url FROM documents
-             WHERE doc_id % $SinkEvery = 0),
-           e_pr AS (SELECT e.src, e.dst FROM edges e
-             WHERE e.src NOT IN (SELECT url FROM sinks)),"""
-      else "e_pr AS (SELECT src, dst FROM edges),"
-    val iters = (1 to 10).map { i =>
-      val p = i - 1
-      val dangCte =
-        if (withSinks)
-          s"""d$p AS (SELECT CAST(coalesce(sum(r), 0) AS BIGINT)
-               // (SELECT n FROM nn) AS dm
-               FROM r$p WHERE url IN (SELECT url FROM sinks)),
-             """
-        else ""
-      val dangTerm = if (withSinks) s" + (SELECT dm FROM d$p)" else ""
-      // MATERIALIZED: with sinks each r$p is referenced twice (contrib
-      // join + dangling-mass aggregate); DuckDB inlines CTEs by default,
-      // which re-evaluates the whole chain per reference — exponential
-      // over 10 unrolled iterations
-      val mat = if (withSinks) "MATERIALIZED " else ""
-      s"""${dangCte}r$i AS $mat(
-         SELECT n.url,
-           (SELECT (15 * $Scale // 100) // n FROM nn)
-           + ($DampNum * (coalesce(c.contrib, 0)$dangTerm)) // 100 AS r
-         FROM nodes n LEFT JOIN (
-           SELECT e.dst AS url,
-             CAST(sum(r$p.r // d.deg) AS BIGINT) AS contrib
-           FROM r$p JOIN e_pr e ON r$p.url = e.src
-                    JOIN deg d ON d.src = e.src
-           GROUP BY 1) c ON n.url = c.url)"""
-    }.mkString(",\n")
-    s"""$edgesPr
-       deg AS (SELECT src, count(*) AS deg FROM e_pr GROUP BY 1),
-       r0 AS (SELECT url, $Scale // (SELECT n FROM nn) AS r FROM nodes),
-       $iters"""
-  }
-
-
-  /** Shared funnel pipeline CTEs (quality/simhash-dup/contamination/
-    * sample flags folded to the per-stage `fun` table) — the base of
-    * both the curation_funnel and curation_runs oracles. */
-  private val funnelCtes: String =
-    s"""WITH d AS (SELECT doc_id, source, text, (length(text)+3)//4 AS tok
-                    FROM documents),
-         ws AS (SELECT doc_id, string_split(text,' ') AS w FROM documents
-                WHERE len(string_split(text,' ')) >= 3),
-         sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                  range(1, len(w)-1),
-                  i -> w[i]||' '||w[i+1]||' '||w[i+2]))) AS shingle
-                FROM ws),
-         x AS (SELECT doc_id,
-                 ('0x'||substr(sha256(shingle),1,8))::BIGINT AS w32 FROM sh),
-         bits AS (SELECT unnest(range(0,32)) AS b),
-         sgn AS (SELECT doc_id, b, sum(2*((w32 >> b) & 1) - 1) AS s0
-                 FROM x CROSS JOIN bits GROUP BY 1,2),
-         sig AS (SELECT doc_id,
-                   CAST(sum(CASE WHEN s0 > 0 THEN (1::BIGINT << b)
-                            ELSE 0 END) AS BIGINT) AS simhash
-                 FROM sgn GROUP BY 1),
-         dup AS (SELECT DISTINCT b.doc_id
-                 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-                 WHERE bit_count(xor(a.simhash, b.simhash)) <= ${Dedup.SimhashMaxDist}),
-         cw AS (SELECT doc_id, string_split(text,' ') AS ws2
-                FROM documents
-                WHERE len(string_split(text,' ')) >= 4),
-         g AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                 range(0, len(ws2)-3),
-                 i -> array_to_string(ws2[i+1 : i+4], ' ')))) AS gram
-               FROM cw),
-         ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-         ct AS (SELECT DISTINCT doc_id FROM g JOIN ev USING (gram)
-                WHERE doc_id % 97 <> 0),
-         f AS (SELECT d.doc_id, d.tok,
-                 (len(string_split(d.text,' ')) >= 20 AND
-                  length(d.text) >= 100 AND
-                  (CAST(len(list_distinct(string_split(d.text,' ')))
-                     AS BIGINT) * 1000
-                   // CAST(len(string_split(d.text,' ')) AS BIGINT))
-                    >= 300) AS q,
-                 (dup.doc_id IS NULL) AS dk,
-                 (ct.doc_id IS NOT NULL OR d.doc_id % 97 = 0) AS c,
-                 (('0x'||substr(sha256('smp:'||d.doc_id),1,12))::BIGINT
-                    % 1000 <
-                  CASE WHEN CAST(coalesce(nullif(regexp_extract(d.source,
-                         'src([0-9]+)',1),''),'9999') AS INT) < 5 THEN 800
-                       WHEN CAST(coalesce(nullif(regexp_extract(d.source,
-                         'src([0-9]+)',1),''),'9999') AS INT) < 15 THEN 300
-                       ELSE 100 END) AS smp
-               FROM d LEFT JOIN dup ON d.doc_id = dup.doc_id
-                      LEFT JOIN ct ON d.doc_id = ct.doc_id),
-         agg AS (SELECT
-           count(*) AS d1, CAST(sum(tok) AS BIGINT) AS t1,
-           CAST(sum(CASE WHEN q THEN 1 ELSE 0 END) AS BIGINT) AS d2,
-           CAST(sum(CASE WHEN q THEN tok ELSE 0 END) AS BIGINT) AS t2,
-           CAST(sum(CASE WHEN q AND dk THEN 1 ELSE 0 END) AS BIGINT) AS d3,
-           CAST(sum(CASE WHEN q AND dk THEN tok ELSE 0 END) AS BIGINT) AS t3,
-           CAST(sum(CASE WHEN q AND dk AND NOT c THEN 1 ELSE 0 END)
-             AS BIGINT) AS d4,
-           CAST(sum(CASE WHEN q AND dk AND NOT c THEN tok ELSE 0 END)
-             AS BIGINT) AS t4,
-           CAST(sum(CASE WHEN q AND dk AND NOT c AND smp THEN 1 ELSE 0 END)
-             AS BIGINT) AS d5,
-           CAST(sum(CASE WHEN q AND dk AND NOT c AND smp THEN tok
-             ELSE 0 END) AS BIGINT) AS t5
-          FROM f),
-         fun AS (
-           SELECT '1_ingested' AS stage, d1 AS n_docs, t1 AS n_tokens FROM agg
-           UNION ALL SELECT '2_quality', d2, t2 FROM agg
-           UNION ALL SELECT '3_near_dedup', d3, t3 FROM agg
-           UNION ALL SELECT '4_decontaminated', d4, t4 FROM agg
-           UNION ALL SELECT '5_sampled', d5, t5 FROM agg)"""
-
-  /** Shared integer-accumulator embedding oracle — checked against both
-    * the direct kernel (emb_embed_sig) and the batched service path
-    * (emb_embed_batched), which must be bit-identical. */
-  private val embedSigOracle: String =
-    """WITH tok AS (
-           SELECT doc_id, unnest(list_filter(
-             string_split(substring(text,1,32764),' '), w -> w <> '')) AS w
-           FROM documents
-         ), h AS (
-           SELECT doc_id, ('0x'||substr(sha256(w),1,8))::BIGINT AS x FROM tok
-         ), sums AS (
-           SELECT doc_id, x % 64 AS idx,
-             CAST(sum(CASE WHEN (x >> 6) & 1 = 1 THEN 1 ELSE -1 END)
-               AS BIGINT) AS v
-           FROM h GROUP BY 1,2
-         ), filled AS (
-           SELECT d.doc_id, g.idx, coalesce(s.v, 0) AS v
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           CROSS JOIN (SELECT unnest(range(0,64)) AS idx) g
-           LEFT JOIN sums s ON s.doc_id = d.doc_id AND s.idx = g.idx
-         )
-         SELECT doc_id, string_agg(v, ',' ORDER BY idx) AS acc_sig
-         FROM filled GROUP BY 1 ORDER BY doc_id"""
-
-  private val syncCtes: String =
-    """WITH s_docs AS (
-         SELECT doc_id, text FROM documents WHERE doc_id % 13 <> 0),
-       i_docs AS (
-         SELECT doc_id,
-           CASE WHEN doc_id % 10 = 0 THEN text || ' updated marker tokens'
-                ELSE text END AS text
-         FROM documents WHERE doc_id % 11 <> 0),
-       s_chunks AS (
-         SELECT 'doc://'||doc_id AS url,
-           sha256('doc://'||doc_id||'::'||piece) AS chunk_id
-         FROM (SELECT doc_id,
-                 trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-               FROM (SELECT doc_id, text,
-                       unnest(range(0,
-                         CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                     FROM s_docs) t1) t2
-         WHERE piece <> ''),
-       i_chunks AS (
-         SELECT 'doc://'||doc_id AS url,
-           sha256('doc://'||doc_id||'::'||piece) AS chunk_id
-         FROM (SELECT doc_id,
-                 trim(substring(text, CAST(i*128+1 AS INT), 128)) AS piece
-               FROM (SELECT doc_id, text,
-                       unnest(range(0,
-                         CAST(ceil(length(text)/128.0) AS BIGINT))) AS i
-                     FROM i_docs) t1) t2
-         WHERE piece <> ''),
-       s_sig AS (
-         SELECT url, string_agg(chunk_id, ',' ORDER BY chunk_id) AS sig,
-           count(*) AS n
-         FROM s_chunks GROUP BY 1),
-       i_sig AS (
-         SELECT url, string_agg(chunk_id, ',' ORDER BY chunk_id) AS sig,
-           count(*) AS n
-         FROM i_chunks GROUP BY 1)
-    """
-
-  /** The composed 4-layer skip-cascade oracle, parameterized by the
-    * layer-1 (`lm`) CTE block so the plain row and the store-gap
-    * variant (`sync_cascade_storegap`) share everything downstream —
-    * the cascade counting logic exists exactly once on the oracle side,
-    * mirroring Sync.skipCascade being the single Spark kernel. Any
-    * non-'skip' lastmod decision (including 'fetch_store_gap') forwards
-    * to layer 2, matching `pass1 = lm_dec =!= "skip"` in Scala. */
-  private def cascadeSql(lmCtes: String): String = syncCtes +
-    s""", sitemap_lm AS (
-           SELECT 'doc://'||doc_id AS url,
-             '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0') AS lastmod
-           FROM documents),
-         stored_lm AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 4 = 0 THEN '2023-12-31'
-                  ELSE '2024-01-'||lpad((doc_id % 28 + 1)::VARCHAR, 2, '0')
-             END AS stored_lastmod
-           FROM documents WHERE doc_id % 9 <> 0),
-         $lmCtes,
-         cur_et AS (
-           SELECT 'doc://'||doc_id AS url, sha256(text) AS etag
-           FROM documents),
-         stored_et AS (
-           SELECT 'doc://'||doc_id AS url,
-             CASE WHEN doc_id % 3 = 0 THEN sha256(text)
-                  ELSE sha256(text||'stale') END AS stored_etag
-           FROM documents WHERE doc_id % 3 <> 2),
-         et AS (
-           SELECT c.url,
-             CASE WHEN s.stored_etag IS NULL THEN 'fetch_new'
-                  WHEN s.stored_etag = c.etag THEN 'skip'
-                  ELSE 'fetch_changed' END AS et_dec
-           FROM cur_et c LEFT JOIN stored_et s ON c.url = s.url),
-         ud AS (
-           SELECT i.url,
-             CASE WHEN s.sig IS NULL THEN 'new'
-                  WHEN i.sig <> s.sig THEN 'updated'
-                  ELSE 'unchanged' END AS status,
-             i.n AS n_chunks
-           FROM i_sig i LEFT JOIN s_sig s ON i.url = s.url),
-         cd AS (
-           SELECT url, count(*) AS chunks_to_embed
-           FROM i_chunks c
-           WHERE NOT EXISTS (SELECT 1 FROM s_chunks s
-                             WHERE s.chunk_id = c.chunk_id)
-           GROUP BY 1),
-         wide AS (
-           SELECT l.url, l.lm_dec, e.et_dec, u.status,
-             coalesce(u.n_chunks, 0) AS n_chunks,
-             coalesce(c.chunks_to_embed, 0) AS chunks_to_embed
-           FROM lm l JOIN et e ON l.url = e.url
-           LEFT JOIN ud u ON l.url = u.url
-           LEFT JOIN cd c ON l.url = c.url),
-         agg AS (
-           SELECT
-             count(*) AS l1_in,
-             count(*) FILTER (WHERE lm_dec = 'skip') AS l1_skip,
-             count(*) FILTER (WHERE lm_dec <> 'skip') AS l2_in,
-             count(*) FILTER (WHERE lm_dec <> 'skip' AND et_dec = 'skip')
-               AS l2_skip,
-             count(*) FILTER (WHERE lm_dec <> 'skip' AND et_dec <> 'skip'
-               AND status IS NOT NULL) AS l3_in,
-             count(*) FILTER (WHERE lm_dec <> 'skip' AND et_dec <> 'skip'
-               AND status = 'unchanged') AS l3_skip,
-             CAST(coalesce(sum(n_chunks) FILTER (WHERE lm_dec <> 'skip'
-               AND et_dec <> 'skip' AND status IN ('new','updated')), 0)
-               AS BIGINT) AS l4_in,
-             CAST(coalesce(sum(n_chunks - chunks_to_embed) FILTER (
-               WHERE lm_dec <> 'skip' AND et_dec <> 'skip'
-               AND status IN ('new','updated')), 0) AS BIGINT) AS l4_skip
-           FROM wide)
-         SELECT layer, n_in, n_skipped, n_in - n_skipped AS n_forward
-         FROM (
-           SELECT '1_lastmod' AS layer, l1_in AS n_in, l1_skip AS n_skipped
-           FROM agg
-           UNION ALL SELECT '2_etag', l2_in, l2_skip FROM agg
-           UNION ALL SELECT '3_url_diff', l3_in, l3_skip FROM agg
-           UNION ALL SELECT '4_chunk_hash', l4_in, l4_skip FROM agg)
-         ORDER BY layer"""
+  lazy val oracleSql: Map[String, String] =
+    specs.map(q => q.name -> q.oracle).toMap
 }

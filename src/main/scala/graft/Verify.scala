@@ -11,13 +11,11 @@ object Verify {
     * "green" with 205 registered). Pure so the gate is testable without
     * a session. Returns the failure report, or None when clean. */
   def gateReport(registered: Set[String], executed: Set[String],
-      failed: Seq[(String, String)],
-      orphanOracles: Set[String] = Set.empty): Option[String] = {
+      failed: Seq[(String, String)]): Option[String] = {
     val missing = (registered -- executed).toSeq.sorted
-    if (missing.isEmpty && failed.isEmpty && orphanOracles.isEmpty) None
+    if (missing.isEmpty && failed.isEmpty) None
     else Some((missing.map(n => s"NOT EXECUTED: $n") ++
-      failed.sortBy(_._1).map { case (n, e) => s"FAILED: $n — $e" } ++
-      orphanOracles.toSeq.sorted.map(n => s"ORPHAN ORACLE: $n"))
+      failed.sortBy(_._1).map { case (n, e) => s"FAILED: $n — $e" })
       .mkString("\n"))
   }
 
@@ -65,11 +63,7 @@ object Verify {
     // the driver's compare even when one row is broken — but the broken
     // row itself exits the process nonzero with a named report instead
     // of silently shrinking the oracle surface (round-14 #2a)
-    // an oracle key with no registered query would compare nothing,
-    // silently — same failure class as a throwing query
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    gateReport(selected.keySet, executed, failed.toSeq,
-      orphans).foreach {
+    gateReport(selected.keySet, executed, failed.toSeq).foreach {
       report =>
         System.err.println(
           s"[verify] CORRECTNESS GATE FAILED (${failed.size} failed)\n" +

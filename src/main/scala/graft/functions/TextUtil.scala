@@ -52,75 +52,6 @@ object TextUtil {
     new String(out)
   }
 
-  /** MD5("metadata_"+key) formatted as a v4-style UUID
-    * (reference: utils.ts:10-15). */
-  def metadataUuid(key: String): String = {
-    val d = MessageDigest.getInstance("MD5")
-      .digest(s"metadata_$key".getBytes(StandardCharsets.UTF_8))
-    val h = d.map(b => f"${b & 0xff}%02x").mkString
-    s"${h.substring(0, 8)}-${h.substring(8, 12)}-4${h.substring(13, 16)}-${h.substring(16, 20)}-${h.substring(20, 32)}"
-  }
-
-  /** sha-prefix → UUID layout with version-5 / variant-8 nibbles
-    * (reference: utils.ts:76-86) — deterministic chunk-id → point-id
-    * mapping for stores that require UUID keys. */
-  def hashToUuid(hash: String): String = {
-    val h = (hash + "0" * 32).substring(0, 32)
-    s"${h.substring(0, 8)}-${h.substring(8, 12)}-5${h.substring(13, 16)}-8${h.substring(17, 20)}-${h.substring(20, 32)}"
-  }
-
-  /** RFC-4122-strict: the version nibble must be 1-5 and the variant
-    * nibble 8/9/a/b (reference utils.ts:71-74) — a loose hex-shape
-    * check would let malformed ids bypass the hashToUuid normalization
-    * the UUID-keyed store path depends on. */
-  private val uuidRe =
-    "^[0-9a-f]{8}-[0-9a-f]{4}-[1-5][0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$".r
-
-  def isValidUuid(s: String): Boolean =
-    s != null && uuidRe.matches(s.toLowerCase)
-
-  /** Whitespace-preserving tokenization (reference Utils.tokenize,
-    * utils.ts:88-90): split on whitespace runs but KEEP them as tokens,
-    * so the concatenation of all tokens reproduces the input exactly. */
-  def tokenize(text: String): Seq[String] = {
-    if (text == null || text.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    val m = java.util.regex.Pattern.compile("\\s+").matcher(text)
-    var last = 0
-    while (m.find()) {
-      if (m.start > last) out += text.substring(last, m.start)
-      out += m.group()
-      last = m.end
-    }
-    if (last < text.length) out += text.substring(last)
-    out.toSeq
-  }
-
-  /** Neutralise LIKE wildcards so a keyword search stays a literal
-    * substring match (reference controller/store.ts:22-24). */
-  def escapeLike(value: String): String =
-    value.replaceAll("([\\\\%_])", "\\\\$1")
-
-  /** `${VAR}` substitution in config content (reference doc2vec.ts:
-    * 129-137, mirrored in controller/chunk-inspector.ts:75-77): known
-    * variables expand, unknown ones stay verbatim. The environment is a
-    * parameter (not a process read) so the scalar stays deterministic. */
-  def substituteEnvVars(content: String,
-      env: Map[String, String]): String = {
-    if (content == null) return null
-    val m = java.util.regex.Pattern.compile("\\$\\{([^}]+)\\}")
-      .matcher(content)
-    val sb = new StringBuilder
-    var last = 0
-    while (m.find()) {
-      sb.append(content.substring(last, m.start))
-      sb.append(env.getOrElse(m.group(1), m.group()))
-      last = m.end
-    }
-    sb.append(content.substring(last))
-    sb.toString
-  }
-
   @inline private def isHigh(c: Char): Boolean = c >= 0xd800 && c <= 0xdbff
   @inline private def isLow(c: Char): Boolean = c >= 0xdc00 && c <= 0xdfff
 

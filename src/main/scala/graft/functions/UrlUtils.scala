@@ -45,15 +45,6 @@ object UrlUtils {
   def isPdfUrl(url: String): Boolean =
     normalizeUrl(url).toLowerCase.endsWith(".pdf")
 
-  /** Extension-filter normalization (reference mcp/src/server.ts:70-98):
-    * lowercase, dot-prefixed, blanks dropped — `["ts", ".JS", "Md"]`
-    * and `[".ts", ".js", ".md"]` must filter identically. */
-  def normalizeExtensions(exts: Seq[String]): Seq[String] =
-    Option(exts).getOrElse(Seq.empty)
-      .map(e => Option(e).getOrElse("").trim.toLowerCase)
-      .filter(_.nonEmpty)
-      .map(e => if (e.startsWith(".")) e else "." + e)
-
   /** RFC 5988 Link-header rel=next extraction (utils.ts:92-108). */
   def parseNextLink(linkHeader: String): Option[String] = {
     if (linkHeader == null) return None

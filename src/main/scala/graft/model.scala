@@ -32,16 +32,3 @@ final case class RawDoc(
     content: String,
     modification_time: java.sql.Timestamp
 )
-
-/** Per-source sync run counters (reference: types.ts:158-190). */
-final case class RunStats(
-    product_name: String,
-    source_type: String,
-    version: String,
-    items_new: Long,
-    items_updated: Long,
-    items_unchanged: Long,
-    items_deleted: Long,
-    chunks_added: Long,
-    chunks_deleted: Long
-)

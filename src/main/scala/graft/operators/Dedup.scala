@@ -56,7 +56,7 @@ object Dedup {
         expr("transform(sequence(0, size(ws)-3), i -> concat_ws(' ', ws[i], ws[i+1], ws[i+2]))")))
         .as("shingle"))
 
-  private def shingles(s: SparkSession, dir: String): DataFrame =
+  private[graft] def shingles(s: SparkSession, dir: String): DataFrame =
     shinglesOf(Tables.documents(s, dir))
 
   /** Postings with the optional document-frequency cap applied: shingles
@@ -198,55 +198,6 @@ object Dedup {
         else mins.iterator.zipWithIndex.map { case (h, j) => (docId, j, h) }
       }
       .toDF("doc_id", "j", "h")
-  }
-
-  /** Typed `Aggregator` form of the MinHash signature (the UDAF
-    * extension surface): buffer = running minima per permutation,
-    * reduce = fold one 28-bit shingle hash through all permutations,
-    * merge = elementwise min — associative and commutative, so Spark
-    * runs it with map-side partial aggregation. The per-document typed
-    * kernel stays the default (zero shuffle when input is already one
-    * row per document); this form is for when shingles arrive as an
-    * EXPLODED relation (e.g. out of a join) and grouping is unavoidable
-    * anyway. Output identical to [[minhashSignatures]]. */
-  object MinHashAgg extends org.apache.spark.sql.expressions
-      .Aggregator[Long, Array[Long], String] {
-    override def zero: Array[Long] = Array.fill(NumPerms)(Long.MaxValue)
-    override def reduce(buf: Array[Long], x: Long): Array[Long] = {
-      var j = 0
-      while (j < NumPerms) {
-        val h = (perms(j)._2 * x + perms(j)._3) % P
-        if (h < buf(j)) buf(j) = h
-        j += 1
-      }
-      buf
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var j = 0
-      while (j < NumPerms) { if (b(j) < a(j)) a(j) = b(j); j += 1 }
-      a
-    }
-    override def finish(buf: Array[Long]): String = buf.mkString(",")
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-  }
-
-  /** [[minhashSignatures]] via the Aggregator over exploded shingle
-    * postings (28-bit sha prefix per shingle, as everywhere). */
-  def minhashSignaturesAgg(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val x = shingles(s, dir)
-      .select(col("doc_id"),
-        conv(substring(sha2(col("shingle"), 256), 1, 7), 16, 10)
-          .cast("long").as("x"))
-    x.as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(MinHashAgg.toColumn.name("sig"))
-      .toDF("doc_id", "sig")
-      .orderBy("doc_id")
   }
 
   /** Per-document MinHash signature (16 permutations, comma-joined in

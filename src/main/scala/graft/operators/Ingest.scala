@@ -35,9 +35,6 @@ object Ingest {
         n
     }
   }
-  /** Test hook: the cached directory keys (one per dir by design). */
-  private[graft] def docCountCacheKeys: Iterable[String] =
-    docCountCache.keys
   private def tableFingerprint(s: SparkSession, dir: String): Long = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
     try {

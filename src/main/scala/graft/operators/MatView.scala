@@ -36,7 +36,7 @@ object MatView {
     * maintained base table is exactly `l_orderkey % 10 <> 3`.
     * `(l_orderkey, l_linenumber)` rides along as the row identity the
     * streaming path's store MERGE deletes by. */
-  private def parts(s: SparkSession, dir: String) = {
+  private[graft] def parts(s: SparkSession, dir: String) = {
     val li = Tables.lineitem(s, dir).select(
       col("l_partkey"), col("l_orderkey"), col("l_linenumber"),
       col("l_quantity").cast("long").as("qty"), col("l_shipdate"))
@@ -47,7 +47,7 @@ object MatView {
   }
 
   /** Aggregate a base slice into MV shape. */
-  private def aggMv(base: DataFrame): DataFrame =
+  private[graft] def aggMv(base: DataFrame): DataFrame =
     base.groupBy("l_partkey").agg(
       count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
       min(col("l_shipdate")).as("min_ship"),
@@ -58,7 +58,7 @@ object MatView {
     * across the LTZ/NTZ parquet shapes; strings are shape-invariant
     * under the pinned UTC session). The internal kernel stays on
     * native timestamps. */
-  private def finish(mv: DataFrame): DataFrame =
+  private[graft] def finish(mv: DataFrame): DataFrame =
     mv.select(col("l_partkey"), col("n_rows"), col("sum_qty"),
       date_format(col("min_ship"), "yyyy-MM-dd").as("min_ship"),
       date_format(col("max_ship"), "yyyy-MM-dd").as("max_ship"))
@@ -125,15 +125,6 @@ object MatView {
     val newBase = store
       .filter(pmod(col("l_orderkey"), lit(10)) =!= 3).unionByName(adds)
     finish(applyDelta(aggMv(store), delta, newBase))
-  }
-
-  /** Full-recompute MV over the maintained base state — the expensive
-    * path [[incrementalRefresh]] exists to avoid; specs reconcile the
-    * two so the kernel can never drift from recompute semantics. */
-  def fullRefresh(s: SparkSession, dir: String): DataFrame = {
-    val (store, adds, _) = parts(s, dir)
-    finish(aggMv(store.filter(pmod(col("l_orderkey"), lit(10)) =!= 3)
-      .unionByName(adds)))
   }
 
   /** Streaming form — the delta ARRIVES as a stream and each

@@ -36,10 +36,6 @@ import graft.functions.TextUtil
   */
 object Multimodal {
 
-  /** Typed metadata extracted from a binary payload. */
-  case class MediaMeta(path: String, mime: String, n_bytes: Long,
-      sha: String, width: Int, height: Int, channels: Int)
-
   val FeatureDim = 32
   private val BatchSize = 64
 
@@ -1641,84 +1637,6 @@ object Multimodal {
     out
   }
 
-  // ── Audio / video container headers (dependency-free) ────────────────
-  // Same philosophy as the image headers: the metadata a pipeline
-  // catalogs (sample rate, channel count, duration) lives in trivially
-  // parseable container structures — WAV's RIFF chunks and MP4's
-  // ISO-BMFF box tree — and never needs a codec.
-
-  /** (channels, sampleRate, bitsPerSample, durationMs) from a WAV/RIFF
-    * header: chunk-walks to 'fmt ' and 'data' (chunks are word-aligned,
-    * so odd sizes skip a pad byte). Duration = data bytes / byte rate. */
-  def decodeWavHeader(b: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    if (b.length < 44 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' ||
-      b(3) != 'F' || b(8) != 'W' || b(9) != 'A' || b(10) != 'V' ||
-      b(11) != 'E') return None
-    // Long offset: a corrupt chunk size just under 2^31 would wrap an
-    // Int offset negative and index out of bounds instead of ending
-    // the walk
-    var i = 12L
-    var fmt: Option[(Int, Int, Int, Int)] = None // ch, rate, byteRate, bits
-    var dataLen = -1L
-    while (i + 8 <= b.length) {
-      val o = i.toInt
-      val id = new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val size = i32le(b, o + 4).toLong & 0xffffffffL
-      if (id == "fmt " && i + 24 <= b.length)
-        fmt = Some((u16le(b, o + 10), i32le(b, o + 12), i32le(b, o + 16),
-          u16le(b, o + 22)))
-      if (id == "data") dataLen = size
-      i += 8 + size + (size & 1)
-    }
-    fmt.collect {
-      case (ch, rate, byteRate, bits)
-          if dataLen >= 0 && byteRate > 0 && ch > 0 && rate > 0 =>
-        (ch, rate, bits, dataLen * 1000L / byteRate)
-    }
-  }
-
-  /** Duration in ms from an MP4 (ISO BMFF) moov/mvhd box, version 0 or
-    * 1. Top-level box walk to moov, child walk to mvhd; 64-bit
-    * largesize boxes are out of scope (None). */
-  def decodeMp4Header(b: Array[Byte]): Option[Long] = {
-    def boxWalk(from: Int, to: Int, name: String): Option[Int] = {
-      var i = from
-      while (i + 8 <= to) {
-        val size = i32be(b, i).toLong & 0xffffffffL
-        val typ = new String(b, i + 4, 4,
-          java.nio.charset.StandardCharsets.US_ASCII)
-        if (typ == name) return Some(i)
-        if (size < 8 || size > to - i) return None // largesize / corrupt
-        i += size.toInt
-      }
-      None
-    }
-    // a plausible file starts with a well-formed box of known type
-    if (b.length < 16) return None
-    val firstType = new String(b, 4, 4,
-      java.nio.charset.StandardCharsets.US_ASCII)
-    if (!Set("ftyp", "moov", "mdat", "free", "wide", "styp")
-      .contains(firstType)) return None
-    for {
-      moov <- boxWalk(0, b.length, "moov")
-      moovEnd = moov + (i32be(b, moov).toLong & 0xffffffffL).toInt
-      mvhd <- boxWalk(moov + 8, math.min(moovEnd, b.length), "mvhd")
-      // boxWalk only guarantees mvhd+8 bytes exist — guard BEFORE
-      // reading the version byte (a truncated mvhd must yield None,
-      // not an index error that kills the task)
-      if mvhd + 9 <= b.length
-      ver = b(mvhd + 8) & 0xff
-      if mvhd + (if (ver == 1) 40 else 32) <= b.length
-      timescale = (if (ver == 1) i32be(b, mvhd + 28)
-                   else i32be(b, mvhd + 20)).toLong & 0xffffffffL
-      duration = if (ver == 1)
-        ((i32be(b, mvhd + 32).toLong & 0xffffffffL) << 32) |
-          (i32be(b, mvhd + 36).toLong & 0xffffffffL)
-      else i32be(b, mvhd + 24).toLong & 0xffffffffL
-      if timescale > 0
-    } yield duration * 1000L / timescale
-  }
-
   /** One demuxed MP4 sample: index, absolute byte offset into the
     * file, size in bytes, presentation time in ms. */
   final case class Mp4Sample(idx: Int, offset: Long, size: Long,
@@ -2180,11 +2098,6 @@ object Multimodal {
       else None
     }
 
-  /** MJPEG compat view of [[decodeAviVideoFrames]] (same decline
-    * contract; DIB streams now also decode rather than declining). */
-  def decodeMjpegFrames(b: Array[Byte]): Option[Seq[PngImage]] =
-    decodeAviVideoFrames(b)
-
   /** Minimal MJPEG AVI encoder (fixture-builder twin): RIFF('AVI ')
     * with LIST hdrl (avih carrying µs/frame and geometry; strl with a
     * 'vids'/'MJPG' strh and a BITMAPINFOHEADER strf) and LIST movi of
@@ -2376,40 +2289,6 @@ object Multimodal {
     val body = "AVI ".getBytes("ISO-8859-1") ++ hdrl ++ movi
     tag("RIFF"); u32(body.length.toLong); out.write(body)
     out.toByteArray
-  }
-
-  /** Binary corpus → one typed-metadata row per payload, dispatching on
-    * the real container headers: images get dimensions, WAV audio gets
-    * channel/rate/duration, MP4 video gets duration; unrecognized
-    * payloads are cataloged as opaque (no fabricated values). Pure
-    * per-row map, zero shuffle. */
-  def mediaMeta(s: SparkSession, binaries: DataFrame): DataFrame = {
-    import s.implicits._
-    binaries.select("path", "mime", "content")
-      .as[(String, String, Array[Byte])]
-      .map { case (path, mime, bytes) =>
-        val sha = TextUtil.sha256HexBytes(bytes)
-        decodeImageHeader(bytes) match {
-          case Some((w, h, c)) =>
-            (path, mime, bytes.length.toLong, sha, "image",
-              Some(w), Some(h), Some(c), None: Option[Int], None: Option[Long])
-          case None => decodeWavHeader(bytes) match {
-            case Some((ch, rate, _, durMs)) =>
-              (path, mime, bytes.length.toLong, sha, "audio",
-                None, None, Some(ch), Some(rate), Some(durMs))
-            case None => decodeMp4Header(bytes) match {
-              case Some(durMs) =>
-                (path, mime, bytes.length.toLong, sha, "video",
-                  None, None, None, None, Some(durMs))
-              case None =>
-                (path, mime, bytes.length.toLong, sha, "opaque",
-                  None, None, None, None, None)
-            }
-          }
-        }
-      }
-      .toDF("path", "mime", "n_bytes", "sha", "kind", "width", "height",
-        "channels", "sample_rate", "duration_ms")
   }
 
   /** Fallback for payloads without a recognizable image header:
@@ -2724,28 +2603,6 @@ object Multimodal {
       j += 1
     }
     out
-  }
-
-  /** Audio resample over a binary corpus: mono 16-bit PCM WAVs are
-    * REALLY decoded ([[decodePcmSamples]]) and rate-converted through
-    * the integer-exact [[resamplePcmLinear]]; undecodable payloads
-    * surface with src_rate = -1 (quarantined, never fabricated). Pure
-    * per-row kernel, zero shuffle. */
-  def resampleAudio(s: SparkSession, binaries: DataFrame,
-      dstRate: Int = 16000): DataFrame = {
-    import s.implicits._
-    binaries.select("path", "content")
-      .as[(String, Array[Byte])]
-      .map { case (path, bytes) =>
-        decodePcmSamples(bytes) match {
-          case Some((rate, samples)) =>
-            val rs = resamplePcmLinear(samples, rate, dstRate)
-            val sha = TextUtil.sha256Hex(rs.mkString(","))
-            (path, rate, samples.length.toLong, rs.length.toLong, sha)
-          case None => (path, -1, 0L, 0L, "")
-        }
-      }
-      .toDF("path", "src_rate", "n_in", "n_out", "resampled_sha")
   }
 
   /** Per-payload PCM level report over an audio binary corpus: decode

@@ -7,8 +7,8 @@ import graft.Tables
 
 /** Relational operator surface (SURVEY.md §2.10).
   *
-  * Each method is one entry in `SparkEntry.queries`, with a matching DuckDB
-  * oracle in `SparkEntry.oracleSql`. Declarative DataFrame plans only —
+  * Each method is one row of `RelationalQueries`, with its matching DuckDB
+  * oracle declared beside it. Declarative DataFrame plans only —
   * Catalyst handles pushdown/pruning; broadcast hints are applied where one
   * side is a dimension table (scale-safe at 100 TB: dims stay small).
   *

@@ -103,52 +103,24 @@ object Similarity {
         least(count(lit(1)), lit(4L)).as("returned"))
   }
 
-  /** MLlib scale path: BucketedRandomProjectionLSH approximate
-    * neighbors of vector 0 (seeded model — deterministic within Spark,
-    * but not reproducible in SQL, so this query has a rows-only check).
-    *
-    * The fitted model (just the seeded random hyperplanes — a few KB)
-    * is memoized per corpus directory: fit once, probe many times is
-    * the serving shape, mirroring buildIvfIndex/probeIvf; repeated
-    * queries time the probe, which is the recurring cost. */
+  /** Fitted MLlib LSH models (just the seeded random hyperplanes — a few
+    * KB), memoized per corpus: fit once, probe many times is the serving
+    * shape, mirroring buildIvfIndex/probeIvf; repeated queries time the
+    * probe, which is the recurring cost. */
   private val mllibModelCache = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel]
 
-  def annMllib(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
-    import s.implicits._
-    val vecs = Tables.embeddings(s, dir)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, e) => (id, Vectors.dense(e.map(_.toDouble))) }
-      .toDF("vec_id", "features")
-    // empty corpus (or absent query vector): no neighbors, not a crash —
-    // and never fit/memoize a model on zero rows
-    val keyRow = vecs.filter(col("vec_id") === 0).select("features").take(1)
-    if (keyRow.isEmpty) return s.emptyDataset[Long].toDF("vec_id")
-    val model = mllibModelCache.getOrElseUpdate(dir,
-      new BucketedRandomProjectionLSH()
-        .setInputCol("features").setOutputCol("hashes")
-        .setBucketLength(1.0).setNumHashTables(4).setSeed(42L)
-        .fit(vecs))
-    val key = keyRow.head.getAs[org.apache.spark.ml.linalg.Vector](0)
-    model.approxNearestNeighbors(vecs.filter(col("vec_id") =!= 0), key, k)
-      .select(col("vec_id"), col("distCol").as("distance"))
-      .orderBy("distance", "vec_id")
-      .select(col("vec_id"))
-  }
-
-  /** [[annMllib]] with a PLANTED ground truth, giving the MLlib LSH
-    * path a full-match oracle instead of a rows-only declaration: ten
+  /** MLlib BucketedRandomProjectionLSH approximate neighbors of vector 0
+    * with a PLANTED ground truth — the seeded model is deterministic
+    * within Spark but not reproducible in SQL, so the planted neighbors
+    * give it a full-match oracle instead of a rows-only declaration: ten
     * synthetic neighbors are planted at Euclidean distances
     * 0.001·j (j = 1..10) from query vector 0 by perturbing its first
     * dimension — three orders of magnitude inside the nearest natural
     * neighbor and far inside the 1.0 bucket length, so the seeded
     * 4-table LSH returns exactly the planted ids in j order. The
     * returned columns are the ID SET and its rank (never a float), so
-    * the DuckDB oracle is pure arithmetic: vec_id = 9000000 + rank.
-    * Natural-corpus recall quality stays pinned by the ≥0.8 recall
-    * gates in the ScalaTest suites. */
+    * the DuckDB oracle is pure arithmetic: vec_id = 9000000 + rank. */
   def annMllibPlanted(s: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
     import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
@@ -180,53 +152,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("vec_id"), col("rank"))
       .orderBy("rank")
-  }
-
-  /** Disk-persisted form of the MLlib path, completing the
-    * fit-once/probe-many serving shape across SESSIONS (the in-memory
-    * memo above only survives one driver): the fitted model — just the
-    * seeded hyperplanes, a few KB — is written with MLlib's native
-    * writer and reloadable by any later job. Mirrors
-    * [[buildIvfIndex]]/[[probeIvf]]. */
-  def buildMllibLsh(s: SparkSession, dir: String, modelDir: String): Unit = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
-    import s.implicits._
-    val vecs = Tables.embeddings(s, dir)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, e) => (id, Vectors.dense(e.map(_.toDouble))) }
-      .toDF("vec_id", "features")
-    new BucketedRandomProjectionLSH()
-      .setInputCol("features").setOutputCol("hashes")
-      .setBucketLength(1.0).setNumHashTables(4).setSeed(42L)
-      .fit(vecs)
-      .write.overwrite().save(modelDir)
-    // uniform index contract: the same manifest schema as the IVF/PQ
-    // families marks this directory as a graft index (kind=lsh); the
-    // hyperplanes themselves live in MLlib's own persisted model
-    graft.plans.KnnIndexRegistry
-      .writeManifest(modelDir, Array.empty, 0, "lsh")
-  }
-
-  /** Probe a [[buildMllibLsh]] model: load (KB-sized, no fit) and run
-    * the same approximate-neighbors query as [[annMllib]]. */
-  def probeMllibLsh(s: SparkSession, dir: String, modelDir: String,
-      k: Int = 10): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSHModel
-    import org.apache.spark.ml.linalg.Vectors
-    import s.implicits._
-    val model = BucketedRandomProjectionLSHModel.load(modelDir)
-    val vecs = Tables.embeddings(s, dir)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, e) => (id, Vectors.dense(e.map(_.toDouble))) }
-      .toDF("vec_id", "features")
-    val keyRow = vecs.filter(col("vec_id") === 0).select("features").take(1)
-    if (keyRow.isEmpty) return s.emptyDataset[Long].toDF("vec_id")
-    val key = keyRow.head.getAs[org.apache.spark.ml.linalg.Vector](0)
-    model.approxNearestNeighbors(vecs.filter(col("vec_id") =!= 0), key, k)
-      .select(col("vec_id"), col("distCol").as("distance"))
-      .orderBy("distance", "vec_id")
-      .select(col("vec_id"))
   }
 
   // ── IVF (inverted-file) ANN with a data-adaptive, SQL-reproducible
@@ -389,12 +314,14 @@ object Similarity {
   @volatile private var lloydPlantedDir: String = null
 
   /** Stage the planted embeddings table once per JVM (4,800 tiny rows;
-    * bench reps re-read, not re-write). */
+    * bench reps re-read, not re-write), deleted at JVM exit. */
   private def stageLloydPlanted(s: SparkSession): String = synchronized {
     if (lloydPlantedDir == null) {
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("lloydplanted")
-        .toString
+      val root = java.nio.file.Files.createTempDirectory("lloydplanted")
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        graft.operators.Sync.deleteTree(root.toFile)))
+      val dir = root.toString
       s.range(1, LloydPlantedN + 1L).as[Long]
         .map(i => (i, lloydPlantedVec(i)))
         .toDF("vec_id", "embedding")
@@ -677,12 +604,10 @@ object Similarity {
         expr(s"n_overlap * 1000 div $k").as("recall_permille"))
   }
 
-  /** Uniform index-metadata loader across the three persisted
-    * families (ivf / pq / ivf-pq): centroids from the in-dir manifest
-    * when present (one small-file read, bit-exact base64 floats — no
-    * Spark job), else the legacy `.centroids` parquet sidecar. Every
-    * probe routes through here, so "index exists → query accelerates"
-    * behaves identically whichever build wrote the index. */
+  /** Index-metadata loader of a persisted IVF index: centroids from the
+    * in-dir manifest when present (one small-file read, bit-exact base64
+    * floats — no Spark job), else the legacy `.centroids` parquet
+    * sidecar. */
   private[graft] def indexSeeds(s: SparkSession,
       indexDir: String): Array[Array[Float]] =
     graft.plans.KnnIndexRegistry.readManifest(indexDir) match {
@@ -1245,128 +1170,6 @@ object Similarity {
         Window.orderBy(col("cosine").desc, col("vec_id"))))
       .select(col("rank").cast("long").as("rank"), col("vec_id"))
       .orderBy("rank")
-  }
-
-  /** One-time PQ index build: (vec_id, codes[8]) written to
-    * `indexDir` — 8 small ints per vector instead of 64 floats — with
-    * the seed centroids persisted beside it (`<indexDir>.centroids`),
-    * exactly like [[buildIvfIndex]]. At 100 TB the codes table is
-    * ~1/30th the bytes of the vectors: the ADC scan phase of every
-    * probe reads ONLY this table. */
-  def buildPqIndex(s: SparkSession, dir: String, indexDir: String): Unit = {
-    import s.implicits._
-    val seeds = ivfSeeds(s, dir, 16)
-    Tables.embeddings(s, dir)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, emb) => (id, pqEncode(emb, seeds)) }
-      .toDF("vec_id", "codes")
-      .write.mode("overwrite").parquet(indexDir)
-    seeds.zipWithIndex.map { case (emb, c) => (c, emb) }.toSeq
-      .toDF("cell", "embedding")
-      .write.mode("overwrite").parquet(indexDir + ".centroids")
-    graft.plans.KnnIndexRegistry.writeManifest(indexDir, seeds, 0, "pq")
-  }
-
-  /** Probe a built PQ index: ADC-score the codes table (the only
-    * corpus-wide scan — 8 ints/vector), shortlist, then fetch JUST the
-    * shortlisted float vectors from the source table via an IN filter
-    * pushed to the parquet scan (a k-row driver list, not a join that
-    * would stream the whole vector table) and exact-re-rank. */
-  def probePq(s: SparkSession, indexDir: String, sourceDir: String,
-      queryVec: Array[Float], k: Int = 10, shortlist: Int = 50,
-      excludeId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    val seeds = indexSeeds(s, indexDir)
-    val subDim = queryVec.length / PqM
-    val t = Array.tabulate(PqM, seeds.length)((m, c) =>
-      pqSubDist(queryVec, seeds(c), m, subDim))
-    val codes = s.read.parquet(indexDir).as[(Long, Array[Int])]
-    val scored = excludeId.fold(codes)(id => codes.filter(_._1 != id))
-      .map { case (id, cs) =>
-        var approx = 0.0
-        var m = 0
-        while (m < PqM) { approx += t(m)(cs(m)); m += 1 }
-        (id, approx)
-      }
-      .toDF("vec_id", "adc")
-      .orderBy(col("adc").asc, col("vec_id"))
-      .limit(shortlist)
-    // the shortlist is k-scale driver metadata; an IN filter reaches
-    // the parquet scan so the vector fetch reads only matching row
-    // groups (plan-asserted in SparkE2ESpec)
-    val ids = scored.select("vec_id").as[Long].collect()
-    val q = s.createDataFrame(Seq(Tuple1(queryVec))).toDF("qv")
-    Tables.embeddings(s, sourceDir)
-      .filter(col("vec_id").isin(ids.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", cosineExpr("qv", "embedding"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
-      .select("vec_id", "cosine")
-  }
-
-  /** One-time IVF-PQ index build — the canonical 100 TB ANN layout
-    * (coarse quantizer for partition pruning × product codes for scan
-    * compression, the FAISS IVF,PQ architecture): every vector's PQ
-    * codes written partitioned by its IVF cell, centroids persisted
-    * beside. A probe then reads `nprobe`/`nlist` of the corpus AND
-    * only 8 ints per vector — the two reductions compose. */
-  def buildIvfPqIndex(s: SparkSession, dir: String, indexDir: String,
-      nlist: Int = IvfNlist): Unit = {
-    import s.implicits._
-    val seeds = ivfSeeds(s, dir, nlist)
-    Tables.embeddings(s, dir)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        (id, argmaxCell(emb, seeds), pqEncode(emb, seeds)) }
-      .toDF("vec_id", "cell", "codes")
-      .write.mode("overwrite").partitionBy("cell").parquet(indexDir)
-    seeds.zipWithIndex.map { case (emb, c) => (c, emb) }.toSeq
-      .toDF("cell", "embedding")
-      .write.mode("overwrite").parquet(indexDir + ".centroids")
-    graft.plans.KnnIndexRegistry
-      .writeManifest(indexDir, seeds, IvfNprobe, "ivf-pq")
-  }
-
-  /** Probe an IVF-PQ index: rank centroids on the driver, read ONLY
-    * the `nprobe` best cell partitions (partition-pruned scan), ADC-
-    * score their codes, then exact-re-rank the shortlist fetched from
-    * the source table via a pushed IN filter — [[probeIvf]]'s I/O
-    * pruning and [[probePq]]'s byte pruning in one plan. */
-  def probeIvfPq(s: SparkSession, indexDir: String, sourceDir: String,
-      queryVec: Array[Float], k: Int = 10, nprobe: Int = IvfNprobe,
-      shortlist: Int = 50, excludeId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    val seeds = indexSeeds(s, indexDir)
-    val cells = topCells(queryVec, seeds, nprobe)
-    val subDim = queryVec.length / PqM
-    val t = Array.tabulate(PqM, seeds.length)((m, c) =>
-      pqSubDist(queryVec, seeds(c), m, subDim))
-    val scan = s.read.parquet(indexDir)
-      .filter(col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
-    val scored = excludeId.fold(scan)(id =>
-        scan.filter(col("vec_id") =!= id))
-      .select("vec_id", "codes").as[(Long, Array[Int])]
-      .map { case (id, cs) =>
-        var approx = 0.0
-        var m = 0
-        while (m < PqM) { approx += t(m)(cs(m)); m += 1 }
-        (id, approx)
-      }
-      .toDF("vec_id", "adc")
-      .orderBy(col("adc").asc, col("vec_id"))
-      .limit(shortlist)
-    val ids = scored.select("vec_id").as[Long].collect()
-    val q = s.createDataFrame(Seq(Tuple1(queryVec))).toDF("qv")
-    Tables.embeddings(s, sourceDir)
-      .filter(col("vec_id").isin(ids.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", cosineExpr("qv", "embedding"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
-      .select("vec_id", "cosine")
   }
 
   /** Scalar int8 quantization of the embedding column: per-vector

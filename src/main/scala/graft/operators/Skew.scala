@@ -33,13 +33,6 @@ object Skew {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Top-k hot keys of a prospective join column — the sensing half of a
-    * manual skew mitigation (run cheaply via sampling at scale). */
-  def hotKeys(df: DataFrame, key: String, k: Int = 10): DataFrame =
-    df.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col(key))
-      .limit(k)
-
   /** Oracle-checked salted-join composition: events bucketed to a hot
     * key domain (user_id mod 10 — every bucket carries ~10% of the
     * fact table, a stand-in for the one-viral-url shape) joined to a

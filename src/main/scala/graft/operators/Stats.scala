@@ -14,12 +14,9 @@ import graft.Tables
   * Shape: one aggregate PER COLUMN over a single-column projection —
   * each scan is column-pruned to the one column it profiles (parquet
   * reads only that column's pages), and exact NDV costs one distinct
-  * aggregate per column. The production path for very wide corpora is
-  * one pass with `approx_count_distinct` (mergeable HLL sketches, all
-  * columns at once); StatsSpec pins that calibration (approx within
-  * 5% of exact on every profiled column) plus the decision's ground
-  * truth: the tables flagged broadcastable here are exactly the ones
-  * q3/q16's adaptive plans broadcast.
+  * aggregate per column. StatsSpec pins the decision's ground truth:
+  * the tables flagged broadcastable here are exactly the ones q3/q16's
+  * adaptive plans broadcast.
   */
 object Stats {
 
@@ -31,10 +28,10 @@ object Stats {
   val BroadcastBytes = 100000L
 
   /** The single (table → profiled columns) spec list: the exact
-    * profile, the one-pass approx profile, and the generated DuckDB
-    * oracle (SparkEntry.statsProfileOracleSql) all consume THIS value,
-    * so a column added or renamed in one place cannot drift from the
-    * other two. */
+    * profile and the generated DuckDB oracle
+    * (StatsQueries.statsProfileOracleSql) both consume THIS value, so a
+    * column added or renamed in one place cannot drift from the
+    * other. */
   val ProfileSpec: Seq[(String, Seq[String])] = Seq(
     "nation" -> Seq("n_nationkey", "n_name", "n_regionkey"),
     "customer" -> Seq("c_custkey", "c_mktsegment", "c_nationkey"),
@@ -46,11 +43,6 @@ object Stats {
       (t, Tables.load(s, dir, t), cols)
     }
 
-  /** Per-(table, column) stats + per-table byte estimate + broadcast
-    * flag. The DuckDB oracle recomputes every cell from scratch —
-    * min/max are aggregated in the column's native type and THEN cast
-    * to string, so numeric and lexicographic orderings both stay
-    * engine-exact. */
   /** The un-materialized per-(table, column) aggregate union — exposed
     * so PlanAuditSpec can assert its scans are column-pruned (the
     * production path materializes it before the rollup/join reuse,
@@ -72,6 +64,11 @@ object Stats {
       }
     }.reduce(_ unionByName _)
 
+  /** Per-(table, column) stats + per-table byte estimate + broadcast
+    * flag. The DuckDB oracle recomputes every cell from scratch —
+    * min/max are aggregated in the column's native type and THEN cast
+    * to string, so numeric and lexicographic orderings both stay
+    * engine-exact. */
   def tableProfile(s: SparkSession, dir: String): DataFrame = {
     // materialized once: perCol feeds both the rollup and the join
     // probe side — without this every column scan + NDV aggregate
@@ -82,28 +79,6 @@ object Stats {
     perCol.join(broadcast(perTbl), Seq("tbl"))
       .withColumn("broadcastable", col("tbl_est_bytes") < BroadcastBytes)
       .orderBy("tbl", "col_name")
-  }
-
-  /** One-pass approximate profile (the 100 TB shape): every column's
-    * HLL NDV estimate from a single scan per table, no distinct
-    * shuffle. Spec-calibrated against [[tableProfile]]'s exact NDVs;
-    * not an oracle row itself (sketch estimates are
-    * implementation-defined). */
-  def tableProfileApprox(s: SparkSession, dir: String): DataFrame = {
-    specTables(s, dir).map { case (t, df, cols) =>
-      val aggs = cols.flatMap { c => Seq(
-        approx_count_distinct(col(c), 0.02).as(s"ndv_$c"),
-        coalesce(sum(length(col(c).cast("string"))), lit(0L))
-          .as(s"len_$c"))
-      }
-      val row = df.agg(count(lit(1)).as("n_rows"), aggs: _*)
-      val stacked = cols.map { c =>
-        row.select(lit(t).as("tbl"), lit(c).as("col_name"),
-          col("n_rows"), col(s"ndv_$c").as("ndv_approx"),
-          col(s"len_$c").as("total_len"))
-      }.reduce(_ unionByName _)
-      stacked
-    }.reduce(_ unionByName _).orderBy("tbl", "col_name")
   }
 
   /** Sketch size of [[kmvDistinct]]. */

@@ -342,32 +342,6 @@ object TextAnalysis {
       .orderBy("probe_id")
   }
 
-  /** The real-corpus distillation: train on the corpus's own quality
-    * signals with [[qualityScore]]'s gate verdict as the label, return
-    * the model's train-set agreement permille. The gate is a
-    * conjunction of one-sided thresholds over the same signals, so a
-    * linear model recovers it nearly exactly — ScalaTest gates the
-    * agreement (a robust pin; exact weights are float-iteration
-    * artifacts no oracle should hash). */
-  def distillQuality(s: SparkSession, dir: String): Long = {
-    import org.apache.spark.ml.classification.LogisticRegression
-    import org.apache.spark.ml.feature.VectorAssembler
-    val feats = qualityScore(s, dir)
-      .select(col("n_words").cast("double").as("f1"),
-        col("n_chars").cast("double").as("f2"),
-        col("distinct_permille").cast("double").as("f3"),
-        col("keep").cast("double").as("label"))
-    val assembled = new VectorAssembler()
-      .setInputCols(Array("f1", "f2", "f3")).setOutputCol("features")
-      .transform(feats)
-    val model = new LogisticRegression()
-      .setMaxIter(100).setRegParam(0.0).fit(assembled)
-    val pred = model.transform(assembled)
-    val n = pred.count()
-    if (n == 0) 0L
-    else pred.filter(col("prediction") === col("label")).count() * 1000 / n
-  }
-
   /** Keyword extraction: top-3 terms per document by a tf/df relevance
     * score. Shapes exactly like distributed TF-IDF — per-doc term
     * frequencies (map-side combinable groupBy), corpus document

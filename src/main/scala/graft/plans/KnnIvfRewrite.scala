@@ -73,8 +73,6 @@ object KnnIndexRegistry {
     register(indexPath, seeds, nprobe)
   }
 
-  def unregister(indexPath: String): Unit = entries.remove(canon(indexPath))
-
   def clear(): Unit = { entries.clear(); misses.clear() }
 
   private def seedsToB64(seeds: Array[Array[Float]]): String = {
@@ -93,18 +91,16 @@ object KnnIndexRegistry {
       Array.fill(dim)(bb.getFloat))
   }
 
-  /** One manifest schema for every index family (`kind`: `ivf`,
-    * `ivf-pq`, `pq`, `lsh`) — "index exists → query accelerates" is
-    * uniform: each family's loader reads the same file; only the
-    * `ivf` kind additionally opts the path into the KNN→IVF optimizer
-    * rewrite (the other kinds' tables don't expose a raw `embedding`
-    * column, so pruning them under a cosine sort would be meaningless). */
+  /** The IVF index manifest (`kind=ivf`): the loaders read it back,
+    * and the reader rejects any other `kind` for the KNN→IVF optimizer
+    * rewrite (a table without a raw `embedding` column cannot be pruned
+    * under a cosine sort). */
   def writeManifest(indexPath: String, seeds: Array[Array[Float]],
-      nprobe: Int, kind: String = "ivf"): Unit = {
+      nprobe: Int): Unit = {
     val dim = if (seeds.isEmpty) 0 else seeds(0).length
     val body =
       s"""graft-knn-manifest v1
-         |kind=$kind
+         |kind=ivf
          |nprobe=$nprobe
          |dim=$dim
          |seeds=${seedsToB64(seeds)}
@@ -116,7 +112,7 @@ object KnnIndexRegistry {
     finally out.close()
   }
 
-  /** Generic manifest read for the family loaders: (kind, seeds,
+  /** Generic manifest read for the index loaders: (kind, seeds,
     * nprobe); malformed or absent → None. */
   def readManifest(indexPath: String)
       : Option[(String, Array[Array[Float]], Int)] =

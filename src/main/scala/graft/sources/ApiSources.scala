@@ -205,14 +205,4 @@ object ApiSources {
           a.html_url.getOrElse(s"zendesk://article/${a.id}"))
       }
   }
-
-  /** Watermark for the next run: max(updated_at) of the batch, held at
-    * the previous value when failures occurred (doc2vec.ts:584-591). */
-  def nextWatermark(batch: DataFrame, previous: String,
-      failures: Long): String =
-    if (failures > 0) previous
-    else batch.agg(max(col("updated_at"))).head().getString(0) match {
-      case null => previous
-      case w => w
-    }
 }

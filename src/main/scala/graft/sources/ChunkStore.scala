@@ -38,12 +38,6 @@ object ChunkStore {
     else stored.join(visitedUrls.select("url").distinct(),
       Seq("url"), "left_semi")
 
-  /** Watermark advance/hold (doc2vec.ts:584-591): only a failure-free
-    * run moves the watermark. */
-  def advanceWatermark(old: String, candidate: String,
-      failures: Long): String =
-    if (failures == 0) candidate else old
-
   /** Partitioned by (product_name, version) — the collection scope of
     * SURVEY §1.3 (reference database.ts:28 keys one collection per
     * `<product>_<version>`): a query scoped to one product+version
@@ -277,17 +271,6 @@ object ChunkStore {
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Collection routing (reference chunk-inspector.ts:59-62 +
-    * database.ts): the Qdrant collection name is the lowercased product
-    * with whitespace collapsed to `_`, suffixed `_version`. */
-  def collectionName(product: String, version: String): String =
-    product.toLowerCase.replaceAll("\\s+", "_") + "_" + version
-
-  /** SQLite path routing (reference chunk-inspector.ts:48-50): product
-    * with whitespace → `_` (case preserved), `-version.db` suffix. */
-  def sqliteDbName(product: String, version: String): String =
-    product.replaceAll("\\s+", "_") + "-" + version + ".db"
 
   /** Chunk inspector (reference controller/chunk-inspector.ts:42-206):
     * all chunks of one url, created_at attached via LEFT JOIN on

@@ -22,8 +22,6 @@ object LocalDirectory {
 
   val DefaultMaxBytes: Long = 10L * 1024 * 1024
 
-  case class FileDoc(path: String, modTimeMs: Long, content: Array[Byte])
-
   /** Per-file scan decision in [[readFiles]]'s cascade order (size cap
     * → include set → exclude set → mtime cutoff): one LABELED row per
     * listed file instead of a silent drop — the skip accounting a
@@ -115,17 +113,6 @@ object LocalDirectory {
       .select("path", "ext", "size", "mod_ms")
       .orderBy("path")
   }
-
-  /** S3 source (SURVEY.md §2.1, reference processS3 doc2vec.ts:898-1103):
-    * the binaryFile source reads `s3a://bucket/prefix` identically to a
-    * local path — listing, mtime skip, and size cap are the same plain
-    * filters. Kept as a named entry point for the source inventory. */
-  def readS3(spark: SparkSession, bucket: String, prefix: String,
-      includeExtensions: Seq[String] = Seq.empty,
-      maxBytes: Long = DefaultMaxBytes,
-      lastSyncMs: Option[Long] = None): DataFrame =
-    readFiles(spark, s"s3a://$bucket/$prefix", includeExtensions,
-      Seq.empty, maxBytes, lastSyncMs)
 
   /** S3 object-listing decision cascade in the reference's own order
     * (doc2vec.ts:938-980), which differs from the local cascade in

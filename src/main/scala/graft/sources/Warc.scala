@@ -58,23 +58,6 @@ object Warc {
     * residency bound. Generous for web pages; far below task heap. */
   val DefaultMaxRecordBytes: Long = 256L << 20
 
-  /** Transparently gunzip a (possibly multi-member) gzip buffer;
-    * plain buffers pass through. FIXTURE-SCALE ONLY — the distributed
-    * paths stream via [[parseWarcEvents]] and never call this. */
-  def gunzipIfNeeded(b: Array[Byte]): Array[Byte] =
-    if (b.length >= 2 && (b(0) & 0xff) == 0x1f && (b(1) & 0xff) == 0x8b) {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (n > 0) out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      out.toByteArray
-    } else b
-
   private def parseHeaders(s: String): Map[String, String] =
     s.split("\r\n").iterator.drop(1).flatMap { line =>
       val c = line.indexOf(':')
@@ -263,13 +246,6 @@ object Warc {
       }
     }
 
-  /** Whole-buffer convenience walk (fixtures, specs, single sliced
-    * records): the streaming parser over a ByteArrayInputStream,
-    * errors dropped. Distributed paths use [[parseWarcEvents]]. */
-  def parseWarc(bytes: Array[Byte]): Seq[WarcRecord] =
-    parseWarcEvents(new java.io.ByteArrayInputStream(bytes))
-      .collect { case Right(r) => r }.toVector
-
   /** WARC ENCODER (fixture-builder twin): writes spec-conforming
     * records — version line, WARC headers with exact Content-Length,
     * CRLFCRLF framing — so the parser is exercised against real
@@ -440,13 +416,6 @@ object Warc {
       .toDF("path", "n_records", "err_kind", "err_at")
   }
 
-  /** WARC files on disk → records, streaming end-to-end:
-    * `binaryFiles`' PortableDataStream opens on demand inside the
-    * task, the parser walks it record-at-a-time, and nothing ever
-    * holds the archive — THE production entry for real `.warc.gz`
-    * sizes. One partition per file (archives are splittable only at
-    * gzip-member boundaries, which a CDX index — [[warcCdxIndex]] —
-    * restores record-level parallelism for). */
   /** Close `c` the first time the iterator observes exhaustion:
     * binaryFiles COMBINES many small archives into one partition, so a
     * drained file's stream should release promptly rather than pile up
@@ -464,37 +433,6 @@ object Warc {
       }
       override def next(): T = it.next()
     }
-
-  def warcRecordsFromFiles(s: SparkSession, pathGlob: String): DataFrame = {
-    import s.implicits._
-    // minPartitions = defaultParallelism: binaryFiles COMBINES small
-    // files into very few splits by default (CombineFileInputFormat),
-    // collapsing scan parallelism on many-small-archive sets; large
-    // archives still get their own partition either way
-    s.sparkContext.binaryFiles(pathGlob,
-      s.sparkContext.defaultParallelism)
-      .flatMap { case (path, pds) =>
-        val in = pds.open()
-        // close on exhaustion (closeOnExhaust) for the common drained
-        // case, and on task END for a downstream limit/take or task
-        // failure that stops iterating early (r19 ADVICE)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ =>
-            scala.util.Try(in.close())))
-        closeOnExhaust(parseWarcEvents(in), in).collect { case Right(r) =>
-          var sum = 0L
-          var i = 0
-          while (i < r.body.length) {
-            sum += (r.body(i) & 0xff).toLong * (1 + i % 97)
-            i += 1
-          }
-          (path, r.idx, r.warcType, r.targetUri, r.httpStatus,
-            r.httpContentType, r.body.length.toLong, sum)
-        }
-      }
-      .toDF("path", "record_idx", "warc_type", "url", "http_status",
-        "content_type", "n_body_bytes", "body_checksum")
-  }
 
   /** The ingest hookup: 200-status text/html response records as
     * (url, html) rows — exactly the shape the crawler hands to
@@ -793,8 +731,8 @@ object Warc {
     * STREAMING [[memberWalk]] (max residency one member = one record
     * in the CC layout), plain archives through the streaming record
     * walk — so building a CDX over archives far past the 2 GiB cap is
-    * bounded-memory end to end. One partition per file, exactly like
-    * [[warcRecordsFromFiles]]. */
+    * bounded-memory end to end. One partition per file (archives are
+    * splittable only at gzip-member boundaries). */
   def warcCdxIndexCompressedFromFiles(s: SparkSession,
       pathGlob: String): DataFrame = {
     import s.implicits._
@@ -1172,16 +1110,10 @@ object Warc {
         http.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)))))
   }
 
-  /** WET fixture twin: a `warcinfo` plus one `conversion` record whose
-    * block is the extracted text of [[fixtureHtml]] — the exact text
-    * the HTML pipeline's markdown carries, so the two distributions
-    * stay consistent. Gzipped for odd ids like [[fixtureWarc]]. */
-  def fixtureWet(id: Long): Array[Byte] = {
-    val raw = fixtureWetRaw(id)
-    if (id % 2 == 1) gzip(raw) else raw
-  }
-
-  /** Uncompressed [[fixtureWet]] — the form bucketed multi-doc WET
+  /** WET fixture: a `warcinfo` plus one `conversion` record whose block
+    * is the extracted text of [[fixtureHtml]] — the exact text the HTML
+    * pipeline's markdown carries, so the two distributions stay
+    * consistent. Uncompressed — the form bucketed multi-doc WET
     * files are concatenated from (a gzip blob mid-way through a plain
     * stream would break framing; per-file encoding must be uniform). */
   def fixtureWetRaw(id: Long): Array[Byte] = {

@@ -18,18 +18,9 @@ import graft.operators.Curation
   * Idempotence: re-delivery of a batch re-appends hashes the index
   * already holds; the dedup anti-join is insensitive to duplicate index
   * rows, so at-least-once delivery converges to the same kept set (the
-  * same contract as EventStream.upsertStream).
+  * same contract as EventStream.ingestStream).
   */
 object CurationStream {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("source", StringType)))
-
-  /** File-source stream over a documents directory. */
-  def readDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docSchema).parquet(dir)
 
   /** Stateless curation gate: minimum word count plus the
     * deterministic sha-bucket sample at `ratePermille` — the SAME

@@ -119,30 +119,6 @@ object EventStream {
       ()
     }
 
-  /** Streaming upsert sink: each micro-batch merges into the versioned
-    * chunk store through `foreachBatch` — the same plan-level
-    * upsert-by-url the batch path uses, applied per batch. Because the
-    * upsert is idempotent per url-set, at-least-once re-delivery of a
-    * batch converges to the same store state (the streaming-sink
-    * contract without a transactional table format). Returns the
-    * started query; callers own its lifecycle. `vacuumKeepLast`
-    * bounds store growth for long-running streams (see
-    * [[maybeVacuum]]). */
-  def upsertStream(chunks: DataFrame, storeRoot: String,
-      checkpointDir: String, vacuumKeepLast: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    chunks.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batchIsEmpty(batch)) {
-          graft.sources.ChunkStore.upsertVersioned(
-            batch.sparkSession, storeRoot, batch)
-          maybeVacuum(storeRoot, vacuumKeepLast)
-        }
-        ()
-      }
-      .start()
-
   /** The reference's whole WRITE path as one Structured Streaming job
     * (readStream pages → chunk → embed → merge): each micro-batch of
     * (url, content) markdown pages runs the SAME heading-aware chunker
@@ -152,7 +128,8 @@ object EventStream {
     * DocumentChunk identity columns plus the embedding, so a streamed
     * store answers the same retrieval queries as a batch-built one.
     * At-least-once redelivery converges: chunk ids are content hashes
-    * and the merge replaces whole urls ([[upsertStream]]'s contract). */
+    * and the merge replaces whole urls
+    * ([[graft.sources.ChunkStore.upsertVersioned]]'s contract). */
   /** Chunk-level EMBED SKIP for the streaming sink — the reference's
     * hash check (doc2vec.ts:515-553) applied per micro-batch: a chunk
     * id is the sha-256 of its url::content, so an id already in the
@@ -263,7 +240,7 @@ object EventStream {
     * with a semi-join `take(1)` before rewriting) mints no version, so
     * a long-running 404 stream of absent urls cannot grow the store by
     * one full copy per no-op batch. At-least-once redelivery thus
-    * converges, matching [[upsertStream]]'s contract. An empty store
+    * converges, matching [[ingestStream]]'s contract. An empty store
     * stays empty (no version is ever minted). */
   def deleteStream(tombstones: DataFrame, storeRoot: String,
       checkpointDir: String, vacuumKeepLast: Option[Int] = None)

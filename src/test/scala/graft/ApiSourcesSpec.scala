@@ -150,81 +150,4 @@ class ApiSourcesSpec extends SparkSuite(cpus = 2) {
     assert(md.contains("PLAIN") && !md.contains("RAW"))
     assert(md.contains("<p>H2</p>") && !md.contains("RAW2"))
   }
-
-  test("env-var substitution: known vars expand, unknown stay verbatim") {
-    import graft.functions.TextUtil.substituteEnvVars
-    val env = Map("TOKEN" -> "abc", "DIR" -> "/data")
-    assert(substituteEnvVars("key: ${TOKEN} path: ${DIR}/x", env) ==
-      "key: abc path: /data/x")
-    assert(substituteEnvVars("keep ${UNSET} as-is", env) ==
-      "keep ${UNSET} as-is")
-    assert(substituteEnvVars("no vars", env) == "no vars")
-  }
-
-  test("watermark advances on success and holds on failure") {
-    val batch = spark.read.json(jsonPath)
-    assert(ApiSources.nextWatermark(batch, "2024-01-01T00:00:00Z", 0) ==
-      "2024-03-01T00:00:00Z")
-    assert(ApiSources.nextWatermark(batch, "2024-01-01T00:00:00Z", 2) ==
-      "2024-01-01T00:00:00Z")
-    val empty = batch.filter("number > 99")
-    assert(ApiSources.nextWatermark(empty, "prev", 0) == "prev")
-  }
-
-  test("retry classification: 5xx/429/network retry, 4xx fail fast, 403 rate-limit waits") {
-    import graft.sources.RetryPolicy
-    // deterministic failures burn exactly zero retries (reference pins
-    // 422 and 404 to one attempt)
-    assert(!RetryPolicy.isRetryableStatus(Some(422)))
-    assert(!RetryPolicy.isRetryableStatus(Some(404)))
-    assert(!RetryPolicy.isRetryableStatus(Some(403)))
-    assert(!RetryPolicy.isRetryableStatus(Some(400)))
-    // transient: network error (no status), 5xx, 429
-    assert(RetryPolicy.isRetryableStatus(None))
-    assert(RetryPolicy.isRetryableStatus(Some(500)))
-    assert(RetryPolicy.isRetryableStatus(Some(503)))
-    assert(RetryPolicy.isRetryableStatus(Some(429)))
-    // 403 + exhausted rate limit: wait until the reset, floored at 1 s
-    val now = 1700000000000L
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"),
-      Some("1700000060"), now).contains(60000L))
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"),
-      Some("1600000000"), now).contains(1000L)) // reset in the past
-    // genuine 403s (remaining > 0, or headers missing) fail fast
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("42"),
-      Some("1700000060"), now).isEmpty)
-    assert(RetryPolicy.rateLimitWaitMs(403, None, None, now).isEmpty)
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"), None, now).isEmpty)
-    // parseInt fidelity (doc2vec.ts:300): a leading digit run is
-    // honored even with trailing junk; non-numeric still fails fast
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"),
-      Some("1700000060\n"), now).contains(60000L))
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"),
-      Some("1700000060;burst=5"), now).contains(60000L))
-    assert(RetryPolicy.rateLimitWaitMs(403, Some("0"),
-      Some("soon"), now).isEmpty)
-    assert(RetryPolicy.rateLimitWaitMs(500, Some("0"),
-      Some("1700000060"), now).isEmpty)
-  }
-
-  test("network-error classification gates the cleanup veto like the reference") {
-    import graft.sources.RetryPolicy.isNetworkError
-    // transport error codes
-    Seq("ENOTFOUND", "ECONNREFUSED", "ETIMEDOUT", "ECONNRESET",
-      "EHOSTUNREACH", "ENETUNREACH").foreach { c =>
-      assert(isNetworkError(Some(c), None), c)
-    }
-    // client error with no HTTP response = network; with a response = not
-    assert(isNetworkError(None, None, isTransportError = true))
-    assert(!isNetworkError(None, None, isTransportError = true,
-      hadResponse = true))
-    // message-term fallback (reference errs broad on purpose)
-    assert(isNetworkError(None, Some("getaddrinfo ENOTFOUND")))
-    assert(isNetworkError(None, Some("network error")))
-    assert(isNetworkError(None, Some("connection timeout")))
-    assert(isNetworkError(None, Some("dns resolution failed")))
-    // non-network failures must NOT veto cleanup
-    assert(!isNetworkError(Some("ENOENT"), Some("file not found")))
-    assert(!isNetworkError(None, None))
-  }
 }

@@ -98,6 +98,10 @@ class BenchRetimeSpec extends AnyFunSuite {
     // unrelated files are ignored
     assert(Bench.artifactRound(
       Seq("CORRECTNESS_r12.json", "BENCH_DETAIL_r08.json.bak")) == 1)
+    // so are non-default core-count runs (`_c<N>`): an 8-core artifact
+    // never pins or advances the round
+    assert(Bench.artifactRound(Seq("BENCH_r20.json", "BENCH_r21_c8.json",
+      "BENCH_DETAIL_r22_c8.json")) == 21)
   }
 
   test("a load-flagged run never replaces a clean detail artifact") {
@@ -206,8 +210,8 @@ class BenchRetimeSpec extends AnyFunSuite {
   test("drift gate reference selection: newest prior-round clean-slot " +
       "detail, never a _loaded sibling, never this round's own file") {
     val files = Seq("BENCH_DETAIL_r13.json", "BENCH_DETAIL_r14.json",
-      "BENCH_DETAIL_r15_loaded.json", "BENCH_DETAIL_r16.json",
-      "BENCH_r15.json", "CORRECTNESS_r15.json")
+      "BENCH_DETAIL_r15_loaded.json", "BENCH_DETAIL_r15_c8.json",
+      "BENCH_DETAIL_r16.json", "BENCH_r15.json", "CORRECTNESS_r15.json")
     assert(Bench.priorDetailName(files, 16).contains(
       "BENCH_DETAIL_r14.json"))
     assert(Bench.priorDetailName(Seq("BENCH_DETAIL_r16.json"), 16).isEmpty)
@@ -251,8 +255,5 @@ class BenchRetimeSpec extends AnyFunSuite {
       s.contains("PATH_NOT_FOUND")))
     val r2 = Verify.gateReport(Set("a", "b", "c"), Set("a"), Seq.empty)
     assert(r2.contains("NOT EXECUTED: b\nNOT EXECUTED: c"))
-    // an oracle key with no registered query compares nothing — gate it
-    val r3 = Verify.gateReport(Set("a"), Set("a"), Seq.empty, Set("ghost"))
-    assert(r3.contains("ORPHAN ORACLE: ghost"))
   }
 }

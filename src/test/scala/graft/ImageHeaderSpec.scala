@@ -98,67 +98,9 @@ class ImageHeaderSpec extends AnyFunSuite {
         0x00, 0x00).map(_.toByte)).isEmpty)
   }
 
-  // ── audio / video container fixtures ───────────────────────────────
-
-  /** 44-byte canonical PCM WAV header (no payload bytes needed for the
-    * chunk walk). */
-  private def wav(channels: Int, rate: Int, bits: Int,
-      dataLen: Int): Array[Byte] = {
-    val byteRate = rate * channels * (bits / 8)
-    "RIFF".getBytes ++ le32(36 + dataLen) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(channels) ++
-      le32(rate) ++ le32(byteRate) ++ le16(channels * (bits / 8)) ++
-      le16(bits) ++
-      "data".getBytes ++ le32(dataLen)
-  }
-
-  private def mvhdV0(timescale: Int, duration: Int): Array[Byte] =
-    be32(108) ++ "mvhd".getBytes ++ Array.fill[Byte](4)(0) ++ // ver 0
-      be32(0) ++ be32(0) ++ be32(timescale) ++ be32(duration) ++
-      Array.fill[Byte](108 - 32)(0)
-
-  private def mvhdV1(timescale: Int, duration: Long): Array[Byte] =
-    be32(120) ++ "mvhd".getBytes ++
-      Array[Byte](1, 0, 0, 0) ++                             // ver 1
-      be32(0) ++ be32(0) ++ be32(0) ++ be32(0) ++            // 64-bit times
-      be32(timescale) ++
-      be32((duration >> 32).toInt) ++ be32(duration.toInt) ++
-      Array.fill[Byte](120 - 40)(0)
-
-  private def mp4(mvhd: Array[Byte]): Array[Byte] =
-    be32(16) ++ "ftyp".getBytes ++ "isom".getBytes ++ be32(0) ++
-      be32(8 + mvhd.length) ++ "moov".getBytes ++ mvhd
-
-  test("WAV RIFF chunk walk: format fields and data-length duration") {
-    // 1 second of 44.1kHz stereo 16-bit: data = byteRate bytes
-    assert(Multimodal.decodeWavHeader(wav(2, 44100, 16, 176400))
-      .contains((2, 44100, 16, 1000L)))
-    // half a second of mono 8kHz 8-bit
-    assert(Multimodal.decodeWavHeader(wav(1, 8000, 8, 4000))
-      .contains((1, 8000, 8, 500L)))
-    assert(Multimodal.decodeWavHeader("RIFFxxxxNOPE".getBytes).isEmpty)
-    assert(Multimodal.decodeWavHeader("garbage".getBytes).isEmpty)
-  }
-
-  test("MP4 moov/mvhd box walk: v0 and v1 durations") {
-    assert(Multimodal.decodeMp4Header(mp4(mvhdV0(600, 1200)))
-      .contains(2000L))
-    assert(Multimodal.decodeMp4Header(mp4(mvhdV1(1000, 3500L)))
-      .contains(3500L))
-    assert(Multimodal.decodeMp4Header("random bytes here".getBytes).isEmpty)
-    // well-formed ftyp but no moov
-    assert(Multimodal.decodeMp4Header(
-      be32(16) ++ "ftyp".getBytes ++ "isom".getBytes ++ be32(0)).isEmpty)
-    // zero timescale must not divide
-    assert(Multimodal.decodeMp4Header(mp4(mvhdV0(0, 1200))).isEmpty)
-  }
-
   test("PCM encode/decode roundtrip: sign extension, peak, clip count") {
     val samples = Array(0, 1, -1, 32767, -32768, 12345, -12345, 32700)
     val bytes = Multimodal.encodeWavPcm16(samples, 8000)
-    // the header the catalog path reads agrees with the encode
-    assert(Multimodal.decodeWavHeader(bytes)
-      .contains((1, 8000, 16, samples.length * 2 * 1000L / 16000L)))
     val Some((n, peak, sumAbs, clip)) = Multimodal.decodePcmLevels(bytes)
     assert(n == samples.length)
     assert(peak == 32768L, "|-32768| is the true peak — unsigned reads would miss it")
@@ -739,7 +681,7 @@ class ImageHeaderSpec extends AnyFunSuite {
         (fr.offset + fr.size).toInt)
       assert(body.sameElements(frames(k)), s"frame $k bytes drifted")
     }
-    val imgs = Multimodal.decodeMjpegFrames(avi)
+    val imgs = Multimodal.decodeAviVideoFrames(avi)
       .getOrElse(fail("mjpeg decode failed"))
     assert(imgs.length == 3)
     imgs.zipWithIndex.foreach { case (img, f) =>
@@ -762,11 +704,11 @@ class ImageHeaderSpec extends AnyFunSuite {
     // whose video chunk is not a decodable JPEG
     val wav = Multimodal.encodeWavPcm16(Array(1, 2, 3), 8000)
     assert(Multimodal.demuxAviFrames(wav).isEmpty)
-    assert(Multimodal.decodeMjpegFrames(avi.take(40)).isEmpty)
+    assert(Multimodal.decodeAviVideoFrames(avi.take(40)).isEmpty)
     val junk = Multimodal.aviEncodeMjpeg(16, 16, 40000,
       Seq(Array[Byte](1, 2, 3, 4)))
     assert(Multimodal.demuxAviFrames(junk).isDefined) // demux is fine
-    assert(Multimodal.decodeMjpegFrames(junk).isEmpty) // decode declines
+    assert(Multimodal.decodeAviVideoFrames(junk).isEmpty) // decode declines
   }
 
   test("DIB AVI: BI_RGB and RLE8 frames round-trip through the raw-" +
@@ -890,8 +832,6 @@ class ImageHeaderSpec extends AnyFunSuite {
     val sizes = Seq(10L, 25L, 40L, 15L)
     val deltas = Seq(100L, 100L, 150L, 150L)
     val mp4 = Multimodal.mp4Fixture(sizes, deltas, timescale = 1000)
-    // sanity: the header walk also recognizes it
-    assert(Multimodal.decodeMp4Header(mp4).contains(500L))
     val samples = Multimodal.demuxMp4Samples(mp4)
       .getOrElse(fail("demux failed"))
     assert(samples.map(_.size) == sizes)

@@ -152,22 +152,6 @@ class IngestSpec extends AnyFunSuite {
     assert(md.indexOf("**B:**") < md.indexOf("second"))
   }
 
-  test("uuid scalars") {
-    import graft.functions.TextUtil
-    val u = TextUtil.hashToUuid(TextUtil.sha256Hex("chunk-content"))
-    assert(TextUtil.isValidUuid(u))
-    assert(u.charAt(14) == '5' && u.charAt(19) == '8') // version/variant
-    assert(TextUtil.hashToUuid("abc").length == 36) // short hash padded
-    assert(!TextUtil.isValidUuid("not-a-uuid"))
-    // RFC-4122 strictness (reference utils.test.ts:257-266): version
-    // nibble 1-5, variant nibble 8/9/a/b, case-insensitive
-    assert(TextUtil.isValidUuid("550e8400-e29b-41d4-a716-446655440000"))
-    assert(TextUtil.isValidUuid("550E8400-E29B-51D4-A716-446655440000"))
-    assert(!TextUtil.isValidUuid("550e8400-e29b-61d4-a716-446655440000"))
-    assert(!TextUtil.isValidUuid("550e8400-e29b-41d4-0716-446655440000"))
-    assert(TextUtil.metadataUuid("repo-x") == TextUtil.metadataUuid("repo-x"))
-  }
-
   // ── renderers ───────────────────────────────────────────────────────
   test("issue renderer matches the reference template") {
     val issue = Renderers.Issue(42, "Crash on load", "octocat", "open",
@@ -311,22 +295,6 @@ class IngestSpec extends AnyFunSuite {
       "# rep\n\n## Section\n\nBody **text**.")
   }
 
-  test("tokenize keeps whitespace runs as tokens (lossless)") {
-    import graft.functions.TextUtil.tokenize
-    assert(tokenize("a  b\tc") == Seq("a", "  ", "b", "\t", "c"))
-    assert(tokenize("  lead") == Seq("  ", "lead"))
-    assert(tokenize("trail ") == Seq("trail", " "))
-    assert(tokenize("") == Seq.empty)
-    val s = "x  y \n z"
-    assert(tokenize(s).mkString == s)
-  }
-
-  test("escapeLike neutralises wildcards") {
-    import graft.functions.TextUtil.escapeLike
-    assert(escapeLike("100%_done\\x") == "100\\%\\_done\\\\x")
-    assert(escapeLike("plain") == "plain")
-  }
-
   test("parseRetryAfter: seconds, http-date, floors and failures") {
     import graft.functions.UrlUtils.parseRetryAfter
     assert(parseRetryAfter("120").contains(120000L))
@@ -358,10 +326,6 @@ class IngestSpec extends AnyFunSuite {
     assert(UrlUtils.shouldProcessUrl("https://a.io/INDEX.HTML"))
     assert(!UrlUtils.shouldProcessUrl("https://a.io/LOGO.PNG"))
     assert(UrlUtils.isPdfUrl("https://a.io/m.PDF?v=2"))
-    // reference mcp-server.test.ts:24-27
-    assert(UrlUtils.normalizeExtensions(Seq("ts", ".JS", "Md")) ==
-      Seq(".ts", ".js", ".md"))
-    assert(UrlUtils.normalizeExtensions(null) == Seq.empty)
     assert(UrlUtils.parseNextLink(
       """<https://api.x.io/p?page=2>; rel="next", <https://api.x.io/p?page=9>; rel="last"""")
       .contains("https://api.x.io/p?page=2"))

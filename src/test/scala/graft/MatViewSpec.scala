@@ -45,7 +45,7 @@ class MatViewSpec extends SparkSuite {
 
   test("incremental refresh equals full recompute on the planted edges") {
     val inc = MatView.incrementalRefresh(spark, plantedDir).collect()
-    val full = MatView.fullRefresh(spark, plantedDir).collect()
+    val full = MatViewReference.fullRefresh(spark, plantedDir).collect()
     assert(inc.toSeq == full.toSeq)
     val byKey = inc.map(r => r.getLong(0) -> r).toMap
     assert(!byKey.contains(200L), "fully-deleted group must drop")
@@ -63,13 +63,13 @@ class MatViewSpec extends SparkSuite {
   test("incremental refresh equals full recompute at sf0.001") {
     val dir = "/root/testdata/sf0.001"
     val inc = MatView.incrementalRefresh(spark, dir).collect()
-    val full = MatView.fullRefresh(spark, dir).collect()
+    val full = MatViewReference.fullRefresh(spark, dir).collect()
     assert(inc.length == full.length && inc.toSeq == full.toSeq)
   }
 
   test("streaming maintenance lands the identical MV (planted edges)") {
     val st = MatView.mvStreamParity(spark, plantedDir).collect()
-    val full = MatView.fullRefresh(spark, plantedDir).collect()
+    val full = MatViewReference.fullRefresh(spark, plantedDir).collect()
     assert(st.toSeq == full.toSeq)
   }
 

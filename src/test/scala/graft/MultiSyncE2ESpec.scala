@@ -33,7 +33,7 @@ class MultiSyncE2ESpec extends SparkSuite {
     "Rate limits apply to every endpoint listed in this guide."
 
   test("multi-run sync: delta embeds, forceFullSync recovery, deletion") {
-    val base = java.nio.file.Files.createTempDirectory("multisync")
+    val base = tempDir("multisync")
     val store = base.resolve("store").toString
     val state = base.resolve("state").toString
 
@@ -169,7 +169,7 @@ class MultiSyncE2ESpec extends SparkSuite {
   }
 
   test("dirty run leaves obsolete urls in place (guarded cleanup)") {
-    val base = java.nio.file.Files.createTempDirectory("multisync2")
+    val base = tempDir("multisync2")
     val store = base.resolve("store").toString
     val state = base.resolve("state").toString
     // both runs dirty → completion flag never written, cleanup skipped
@@ -187,7 +187,7 @@ class MultiSyncE2ESpec extends SparkSuite {
   }
 
   test("embedding reuse is url-scoped: shared content, moved doc") {
-    val base = java.nio.file.Files.createTempDirectory("multisync3")
+    val base = tempDir("multisync3")
     val store = base.resolve("store").toString
     val state = base.resolve("state").toString
     def run(id: Long, rows: (String, String)*): (Long, Map[String, Set[String]]) = {
@@ -208,11 +208,10 @@ class MultiSyncE2ESpec extends SparkSuite {
     val (emb2, ids2) = run(2, "doc://c" -> doc1)
     assert(ids2.keySet == Set("doc://c"))
     assert(emb2 == ids2("doc://c").size && emb2 == ids1("doc://a").size)
-    Sync.deleteTree(base.toFile)
   }
 
   test("a batch that repeats a url is rejected before anything is written") {
-    val base = java.nio.file.Files.createTempDirectory("multisync4")
+    val base = tempDir("multisync4")
     val store = base.resolve("store").toString
     val state = base.resolve("state").toString
     Sync.syncRun(spark, docs("doc://a" -> doc1), store, state, runId = 1)
@@ -237,6 +236,5 @@ class MultiSyncE2ESpec extends SparkSuite {
     assert(!SyncState.forceFullSync(spark, state, ""))
     assert(ChunkStore.readLatest(spark, store).get.select("url").distinct()
       .collect().map(_.getString(0)).toSet == Set("doc://a"))
-    Sync.deleteTree(base.toFile)
   }
 }

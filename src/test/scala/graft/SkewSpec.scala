@@ -79,7 +79,7 @@ class SkewSpec extends SparkSuite {
     val dir = "/root/testdata/sf0.001"
     val kernel = Dedup.minhashSignatures(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val agg = Dedup.minhashSignaturesAgg(spark, dir).collect()
+    val agg = DedupReference.minhashSignaturesAgg(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     assert(kernel.nonEmpty && kernel.sameElements(agg))
   }
@@ -102,14 +102,5 @@ class SkewSpec extends SparkSuite {
     // the partial stage really groups by (key, salt)
     val plan = staged.queryExecution.optimizedPlan.toString
     assert(plan.contains("__salt"), plan.take(2000))
-  }
-
-  test("hotKeys surfaces the dominant key") {
-    import spark.implicits._
-    val big = (1 to 500).map(i =>
-      (if (i % 5 == 0) s"k$i" else "dominant", i)).toDF("k", "v")
-    val hot = Skew.hotKeys(big, "k", 1).collect()
-    assert(hot.head.getString(0) == "dominant")
-    assert(hot.head.getLong(1) == 400L)
   }
 }

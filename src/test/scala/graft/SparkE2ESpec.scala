@@ -133,11 +133,6 @@ class SparkE2ESpec extends SparkSuite {
     assert(guarded2.count() == stored.count())
   }
 
-  test("watermark advances only on failure-free runs") {
-    assert(ChunkStore.advanceWatermark("t0", "t1", failures = 0) == "t1")
-    assert(ChunkStore.advanceWatermark("t0", "t1", failures = 3) == "t0")
-  }
-
   test("chunk store writes partitioned parquet and reads back losslessly") {
     import spark.implicits._
     val chunks = chunkCorpus(run1Docs)
@@ -190,7 +185,7 @@ class SparkE2ESpec extends SparkSuite {
   }
 
   test("streaming windowed aggregation over the events table") {
-    val tmp = java.nio.file.Files.createTempDirectory("evstream").toString
+    val tmp = tempDir("evstream").toString
     // stage a small slice of real events as the stream input
     Tables.events(spark, "/root/testdata/sf0.001")
       .limit(500).coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -290,18 +285,6 @@ class SparkE2ESpec extends SparkSuite {
       (3L, "failed", Some("net"))))
   }
 
-  test("MLlib ANN recall >= 0.8 against exact KNN") {
-    val dir = "/root/testdata/sf0.001"
-    val exact = Similarity.knnExact(spark, dir, k = 10)
-      .filter(org.apache.spark.sql.functions.col("query_id") === 0)
-      .collect().map(_.getAs[Long]("neighbor_id")).toSet
-    val approx = Similarity.annMllib(spark, dir, k = 10)
-      .collect().map(_.getLong(0)).toSet
-    assert(exact.size == 10)
-    val recall = (exact & approx).size.toDouble / exact.size
-    assert(recall >= 0.8, s"recall $recall below 0.8: got $approx vs $exact")
-  }
-
   test("semanticDedup matches a driver-side within-cell brute force") {
     import spark.implicits._
     import graft.operators.Dedup
@@ -376,22 +359,6 @@ class SparkE2ESpec extends SparkSuite {
     }
   }
 
-  test("distilled quality model agrees with the heuristic gate") {
-    import graft.operators.TextAnalysis
-    val dir = "/root/testdata/sf0.001"
-    val agree = TextAnalysis.distillQuality(spark, dir)
-    // the gate is an AND of thresholds — a linear probe on raw signals
-    // ceilings near 89% here, so the meaningful pins are "well above
-    // the majority-class baseline" (constant predictor = keep rate)
-    // and an absolute floor with margin under LBFGS wobble
-    val scored = TextAnalysis.qualityScore(spark, dir)
-    val majority = scored.filter(col("keep")).count() * 1000 /
-      math.max(1L, scored.count())
-    info(s"train-set agreement: $agree permille (majority $majority)")
-    assert(agree > majority, s"model $agree no better than majority $majority")
-    assert(agree >= 870, s"distilled model agreement $agree below 870")
-  }
-
   test("streaming IVF append lands the identical index as batch append") {
     import graft.operators.Similarity
     val dir = "/root/testdata/sf0.001"
@@ -454,46 +421,6 @@ class SparkE2ESpec extends SparkSuite {
     assert(fed.toSeq == report.toSeq)
   }
 
-  test("warcRecordsFromFiles streams archives from disk and matches " +
-      "the column path record-for-record") {
-    import graft.sources.Warc
-    val tmp = java.nio.file.Files.createTempDirectory("warcsrc")
-    val ids = 0L until 20L
-    ids.foreach { id =>
-      java.nio.file.Files.write(tmp.resolve(f"doc$id%03d.warc"),
-        Warc.fixtureWarc(id))
-    }
-    import spark.implicits._
-    val fromFiles = Warc.warcRecordsFromFiles(spark, tmp + "/*.warc")
-      .withColumn("doc_id",
-        expr("CAST(regexp_extract(path, 'doc(\\\\d+)', 1) AS BIGINT)"))
-      .select("doc_id", "record_idx", "warc_type", "http_status",
-        "n_body_bytes", "body_checksum")
-      .as[(Long, Int, String, Int, Long, Long)].collect().sorted.toSeq
-    val cols = ids.map(id => ("warc://" + id, Warc.fixtureWarc(id)))
-      .toDF("path", "content")
-    val fromCols = Warc.warcRecords(spark, cols)
-      .withColumn("doc_id", expr("CAST(substring(path, 8) AS BIGINT)"))
-      .select("doc_id", "record_idx", "warc_type", "http_status",
-        "n_body_bytes", "body_checksum")
-      .as[(Long, Int, String, Int, Long, Long)].collect().sorted.toSeq
-    assert(fromFiles.nonEmpty && fromFiles == fromCols,
-      s"disk-streamed records diverged from the column path")
-  }
-
-  test("persisted MLlib LSH model: probe after reload matches the inline path") {
-    val dir = "/root/testdata/sf0.001"
-    val modelDir = java.nio.file.Files
-      .createTempDirectory("mlliblsh").resolve("model").toString
-    Similarity.buildMllibLsh(spark, dir, modelDir)
-    val probed = Similarity.probeMllibLsh(spark, dir, modelDir)
-      .collect().map(_.getLong(0)).toSeq
-    val inline = Similarity.annMllib(spark, dir)
-      .collect().map(_.getLong(0)).toSeq
-    assert(probed == inline,
-      s"reloaded model diverged: $probed vs $inline")
-  }
-
   test("IVF ANN recall >= 0.8 against exact KNN; probes a cell subset") {
     val dir = "/root/testdata/sf0.001"
     val exact = Similarity.knnExact(spark, dir, k = 10)
@@ -540,42 +467,6 @@ class SparkE2ESpec extends SparkSuite {
     assert(hits.map(h => (h._1, h._2)).distinct.length == hits.length)
   }
 
-  test("mediaMeta dispatches on real container headers per payload kind") {
-    import spark.implicits._
-    def be32(v: Int) = Array(((v >> 24) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def le32(v: Int) = be32(v).reverse
-    def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    val png = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte) ++ be32(13) ++ "IHDR".getBytes ++ be32(320) ++
-      be32(200) ++ Array[Byte](8, 2, 0, 0, 0)
-    val wavB = "RIFF".getBytes ++ le32(36 + 16000) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ le32(16) ++ le16(1) ++ le16(1) ++ le32(8000) ++
-      le32(16000) ++ le16(2) ++ le16(16) ++ "data".getBytes ++ le32(16000)
-    val mp4B = be32(16) ++ "ftyp".getBytes ++ "isom".getBytes ++ be32(0) ++
-      be32(8 + 108) ++ "moov".getBytes ++
-      be32(108) ++ "mvhd".getBytes ++ Array.fill[Byte](4)(0) ++
-      be32(0) ++ be32(0) ++ be32(90000) ++ be32(450000) ++
-      Array.fill[Byte](108 - 32)(0)
-    val rows = Seq(
-      ("a.png", "image/png", png),
-      ("b.wav", "audio/wav", wavB),
-      ("c.mp4", "video/mp4", mp4B),
-      ("d.bin", "application/octet-stream", "whatever".getBytes))
-      .toDF("path", "mime", "content")
-    val out = graft.operators.Multimodal.mediaMeta(spark, rows)
-      .collect().map(r => r.getAs[String]("path") -> r).toMap
-    assert(out("a.png").getAs[String]("kind") == "image")
-    assert(out("a.png").getAs[Int]("width") == 320)
-    assert(out("b.wav").getAs[String]("kind") == "audio")
-    assert(out("b.wav").getAs[Int]("sample_rate") == 8000)
-    assert(out("b.wav").getAs[Long]("duration_ms") == 1000L)
-    assert(out("c.mp4").getAs[String]("kind") == "video")
-    assert(out("c.mp4").getAs[Long]("duration_ms") == 5000L)
-    assert(out("d.bin").getAs[String]("kind") == "opaque")
-    assert(out("d.bin").isNullAt(out("d.bin").fieldIndex("width")))
-  }
-
   test("streaming curation: gate filters, span index dedups across micro-batches") {
     import spark.implicits._
     import graft.streaming.CurationStream
@@ -592,8 +483,9 @@ class SparkE2ESpec extends SparkSuite {
         .write.mode("overwrite").parquet(s"$in/$name")
     // batch 1: one normal doc, one too short for the gate
     stage("b1", Seq((1L, words, "src1"), (2L, "too short", "src1")))
-    val q = CurationStream.curateStream(
-      CurationStream.readDocs(spark, s"$in/*"), idx, kept, ckpt)
+    val q = CurationStream.curateStream(spark.readStream
+      .schema("doc_id BIGINT, text STRING, source STRING")
+      .parquet(s"$in/*"), idx, kept, ckpt)
     try {
       q.processAllAvailable()
       val k1 = spark.read.parquet(kept).collect()
@@ -635,71 +527,6 @@ class SparkE2ESpec extends SparkSuite {
       .collect().map(_.getAs[Long]("vec_id")).toSet
     val recall = (exact & pq).size.toDouble / exact.size
     assert(recall >= 0.8, s"PQ recall $recall below 0.8: $pq vs $exact")
-  }
-
-  test("PQ build/probe: codes-only scan + pushed-IN vector fetch match inline PQ") {
-    val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("pqidx").toString + "/pq"
-    Similarity.buildPqIndex(spark, dir, idx)
-    val qv = graft.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 0)
-      .select("embedding").head().getAs[scala.collection.Seq[Float]](0)
-      .toArray
-    val probe = Similarity.probePq(spark, idx, dir, qv, k = 10,
-      excludeId = Some(0L))
-    val got = probe.collect().map(_.getAs[Long]("vec_id")).toSet
-    val inline = Similarity.annPq(spark, dir, k = 10)
-      .collect().map(_.getAs[Long]("vec_id")).toSet
-    assert(got == inline, s"probe $got != inline $inline")
-    // the vector fetch must push the shortlist IN filter to the scan
-    val leaves = probe.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(leaves.contains("PushedFilters: [In(vec_id"), leaves.take(2000))
-    // and the codes scan must never read a float vector column
-    val codesScan = spark.read.parquet(idx)
-    assert(!codesScan.schema.fieldNames.contains("embedding"))
-  }
-
-  test("IVF-PQ build/probe: partition-pruned codes scan + decent recall") {
-    val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/ix"
-    Similarity.buildIvfPqIndex(spark, dir, idx)
-    val qv = graft.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 0)
-      .select("embedding").head().getAs[scala.collection.Seq[Float]](0)
-      .toArray
-    // wide probing on the weakly-clustered synthetic corpus (same
-    // rationale as the IVF recall gate's nprobe=10)
-    val probe = Similarity.probeIvfPq(spark, idx, dir, qv, k = 10,
-      nprobe = 10, excludeId = Some(0L))
-    val got = probe.collect().map(_.getAs[Long]("vec_id")).toSet
-    assert(got.size == 10)
-    // the codes scan must prune by cell partition AND read no vectors
-    val codesScan = spark.read.parquet(idx)
-    assert(!codesScan.schema.fieldNames.contains("embedding"))
-    val leaves = Similarity.probeIvfPq(spark, idx, dir, qv, nprobe = 2)
-      .queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(leaves.contains("PushedFilters: [In(vec_id"), leaves.take(2000))
-    // recall vs exact top-10 over the same corpus (vec_id != 0)
-    val all = graft.Tables.embeddings(spark, dir)
-      .select("vec_id", "embedding").collect()
-      .map(r => (r.getAs[Long]("vec_id"),
-        r.getAs[scala.collection.Seq[Float]]("embedding").toArray))
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var ab = 0.0; var aa = 0.0; var bb = 0.0
-      var i = 0
-      while (i < a.length) {
-        ab += a(i).toDouble * b(i); aa += a(i).toDouble * a(i)
-        bb += b(i).toDouble * b(i); i += 1
-      }
-      ab / (math.sqrt(aa) * math.sqrt(bb))
-    }
-    val exact = all.filter(_._1 != 0L)
-      .map { case (id, v) => (id, cos(qv, v)) }
-      .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
-    val recall = (exact & got).size.toDouble / exact.size
-    assert(recall >= 0.7, s"IVF-PQ recall $recall below 0.7: $got vs $exact")
   }
 
   test("IVF build/probe: partition-pruned probe matches the inline plan") {
@@ -896,34 +723,6 @@ class SparkE2ESpec extends SparkSuite {
     assert(refined > seed,
       s"refined recall $refined not strictly above seed $seed")
     assert(refined >= 0.9, s"refined recall $refined below 0.9")
-
-    // recall gates for the OTHER two index families on the same
-    // clustered corpus (the sf0.001 gates cover the near-uniform
-    // regime; cluster structure is the regime LSH banding and PQ
-    // codes can actually exploit or break on)
-    def recallOf(got: Set[Long], q: Long): Double = {
-      val exact = byId.toSeq.filter(_._1 != q)
-        .sortBy { case (id, v) => (-cos(byId(q), v), id) }
-        .take(10).map(_._1).toSet
-      (exact & got).size.toDouble / exact.size
-    }
-    val pqIdx = base.resolve("pq").toString
-    Similarity.buildPqIndex(spark, dirC, pqIdx)
-    val pqRecall = queries.map { q =>
-      recallOf(Similarity.probePq(spark, pqIdx, dirC, byId(q), k = 10,
-        excludeId = Some(q)).collect().map(_.getAs[Long]("vec_id")).toSet, q)
-    }.sum / queries.size
-    info(s"clustered corpus: PQ recall=$pqRecall (shortlist=50)")
-    assert(pqRecall >= 0.8, s"PQ recall $pqRecall below 0.8 on clustered data")
-    val lshDir = base.resolve("lsh").toString
-    Similarity.buildMllibLsh(spark, dirC, lshDir)
-    val lshRecall = recallOf(
-      Similarity.probeMllibLsh(spark, dirC, lshDir, k = 10)
-        .collect().map(_.getAs[Long]("vec_id")).toSet, 0L)
-    info(s"clustered corpus: MLlib LSH recall (query 0)=$lshRecall " +
-      "(4 hash tables)")
-    assert(lshRecall >= 0.8,
-      s"LSH recall $lshRecall below 0.8 on clustered data")
   }
 
   test("streaming ingest: pages chunk+embed per micro-batch, parity with batch chunker") {
@@ -976,41 +775,6 @@ class SparkE2ESpec extends SparkSuite {
       assert(longIds2 != streamedIds, "updated page must re-chunk")
       assert(v2.filter(col("url") === "doc://short").count() ==
         v1.filter(col("url") === "doc://short").count())
-    } finally q.stop()
-  }
-
-  test("streaming upsert sink: micro-batches merge into the versioned store") {
-    import spark.implicits._
-    import graft.sources.ChunkStore
-    val base = java.nio.file.Files.createTempDirectory("upsink")
-    val in = base.resolve("in").toString
-    val store = base.resolve("store").toString
-    val ckpt = base.resolve("ckpt").toString
-    new java.io.File(in).mkdirs()
-    def stage(name: String, rows: Seq[(String, String)]): Unit =
-      rows.toDF("url", "content").coalesce(1)
-        .write.mode("overwrite").parquet(s"$in/$name")
-    // batch 1: two documents
-    stage("b1", Seq("doc://a" -> "a1", "doc://b" -> "b1"))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("url",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("content",
-        org.apache.spark.sql.types.StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$in/*")
-    val q = EventStream.upsertStream(stream, store, ckpt)
-    try {
-      q.processAllAvailable()
-      assert(ChunkStore.readLatest(spark, store).get.count() == 2)
-      // batch 2: doc a updated, doc c new -> store merges to 3 urls
-      stage("b2", Seq("doc://a" -> "a2", "doc://c" -> "c1"))
-      q.processAllAvailable()
-      val after = ChunkStore.readLatest(spark, store).get
-        .orderBy("url").collect().map(r => (r.getString(0), r.getString(1)))
-      assert(after.toSeq == Seq("doc://a" -> "a2", "doc://b" -> "b1",
-        "doc://c" -> "c1"))
-      assert(ChunkStore.latestVersion(store) >= 1)
     } finally q.stop()
   }
 
@@ -1177,14 +941,6 @@ class SparkE2ESpec extends SparkSuite {
       q.processAllAvailable()
       assert(spark.table("dedup_stream").count() == slice.count())
     } finally q.stop()
-  }
-
-  test("collection and sqlite-path routing") {
-    import graft.sources.ChunkStore
-    assert(ChunkStore.collectionName("My Product", "2.1") ==
-      "my_product_2.1")
-    assert(ChunkStore.sqliteDbName("My Product", "2.1") ==
-      "My_Product-2.1.db")
   }
 
   test("multimodal binary pipeline: metadata + batched feature extraction") {

@@ -7,11 +7,24 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Base of every suite that needs Spark: one lazy session per suite
   * from [[GraftSession.local]], stopped in `afterAll`, so the tests run
   * the SQL and filesystem configuration the entry points run. `conf`
-  * adds suite-specific settings, such as a warehouse dir. */
+  * adds suite-specific settings, such as a warehouse dir. Directories
+  * from [[tempDir]] are deleted in `afterAll`, after the session stops. */
 abstract class SparkSuite(cpus: Int = 4, conf: Seq[(String, String)] = Nil)
     extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = GraftSession.local(cpus, conf: _*)
 
-  override def afterAll(): Unit = spark.stop()
+  private val tempDirs =
+    scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
+
+  /** A fresh temp directory, deleted when the suite ends. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try spark.stop()
+    finally tempDirs.foreach(d => graft.operators.Sync.deleteTree(d.toFile))
 }

@@ -13,7 +13,7 @@ import graft.sources.Warc
 class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("warcv2spec")
+    val d = tempDir("warcv2spec")
     // two plain multi-record buckets + one gzipped archive
     Files.write(d.resolve("a.warc"),
       Warc.fixtureWarcRaw(2) ++ Warc.fixtureWarcRaw(4))
@@ -82,9 +82,9 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
 
   test("micro-batch stream: archive waves drain exactly once across a " +
       "checkpointed restart") {
-    val land = Files.createTempDirectory("warcland")
-    val ckpt = Files.createTempDirectory("warcckpt").toString
-    val out = Files.createTempDirectory("warcout").toString
+    val land = tempDir("warcland")
+    val ckpt = tempDir("warcckpt").toString
+    val out = tempDir("warcout").toString
     def drain(): Unit = {
       val q = spark.readStream.format("graft.sources.v2.WarcSource")
         .load(land.toString)
@@ -187,8 +187,8 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
       assert(df.rdd.getNumPartitions == 1)
       assert(df.count() == 2) // warcinfo + response; no marker scan
       // streaming listing skips them too
-      val ckpt = Files.createTempDirectory("warchiddenckpt").toString
-      val out = Files.createTempDirectory("warchiddenout").toString
+      val ckpt = tempDir("warchiddenckpt").toString
+      val out = tempDir("warchiddenout").toString
       val q = spark.readStream.format("graft.sources.v2.WarcSource")
         .load(d.toString).select("url")
         .writeStream.format("parquet")
@@ -202,9 +202,9 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
 
   test("a file landing BEFORE the committed watermark fails loudly " +
       "instead of silently re-reading / skipping") {
-    val land = Files.createTempDirectory("warcv2order")
-    val ckpt = Files.createTempDirectory("warcv2orderckpt").toString
-    val out = Files.createTempDirectory("warcv2orderout").toString
+    val land = tempDir("warcv2order")
+    val ckpt = tempDir("warcv2orderckpt").toString
+    val out = tempDir("warcv2orderout").toString
     def drain(): Unit = {
       val q = spark.readStream.format("graft.sources.v2.WarcSource")
         .load(land.toString)

@@ -19,7 +19,7 @@ class WarcSpec extends AnyFunSuite {
       ("warcinfo", "", iso("software: test\r\n")),
       ("response", "https://x.example/a", iso(http)),
       ("request", "https://x.example/a", iso("GET /a HTTP/1.1\r\n"))))
-    val rs = Warc.parseWarc(warc)
+    val rs = WarcReference.parseWarc(warc)
     assert(rs.length == 3)
     assert(rs(0).warcType == "warcinfo" && rs(0).httpStatus == -1)
     assert(new String(rs(0).body, "ISO-8859-1") == "software: test\r\n")
@@ -36,10 +36,10 @@ class WarcSpec extends AnyFunSuite {
     val mk = (n: Int) => Warc.warcEncode(Seq(("response", s"https://x/$n",
       iso(s"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\nbody$n"))))
     // whole-file single member
-    val one = Warc.parseWarc(Warc.gzip(mk(1)))
+    val one = WarcReference.parseWarc(Warc.gzip(mk(1)))
     assert(one.length == 1 && new String(one(0).body, "UTF-8") == "body1")
     // concatenated members, one per record
-    val multi = Warc.parseWarc(Warc.gzip(mk(1)) ++ Warc.gzip(mk(2)))
+    val multi = WarcReference.parseWarc(Warc.gzip(mk(1)) ++ Warc.gzip(mk(2)))
     assert(multi.length == 2)
     assert(new String(multi(0).body, "UTF-8") == "body1")
     assert(new String(multi(1).body, "UTF-8") == "body2")
@@ -47,35 +47,35 @@ class WarcSpec extends AnyFunSuite {
 
   test("broken framing never guesses: bad magic, short block, bad " +
       "content-length all end the walk cleanly") {
-    assert(Warc.parseWarc(iso("HTTP/1.1 200 OK\r\n\r\n")).isEmpty)
+    assert(WarcReference.parseWarc(iso("HTTP/1.1 200 OK\r\n\r\n")).isEmpty)
     val good = Warc.warcEncode(Seq(("response", "https://x/1",
       iso("HTTP/1.1 200 OK\r\n\r\nabc"))))
-    assert(Warc.parseWarc(good).length == 1)
+    assert(WarcReference.parseWarc(good).length == 1)
     // truncating into the block drops the record, parses nothing past
-    assert(Warc.parseWarc(good.take(good.length - 10)).isEmpty)
+    assert(WarcReference.parseWarc(good.take(good.length - 10)).isEmpty)
     // a corrupt Content-Length ends the walk instead of mis-framing
     val bad = iso(new String(good, "ISO-8859-1")
       .replace("Content-Length: ", "Content-Length: x"))
-    assert(Warc.parseWarc(bad).isEmpty)
+    assert(WarcReference.parseWarc(bad).isEmpty)
     // corrupt gzip declines
     val gz = Warc.gzip(good)
     gz(gz.length / 2) = (gz(gz.length / 2) ^ 0x55).toByte
-    assert(Warc.parseWarc(gz).isEmpty ||
-      Warc.parseWarc(gz).forall(_.warcType.nonEmpty))
+    assert(WarcReference.parseWarc(gz).isEmpty ||
+      WarcReference.parseWarc(gz).forall(_.warcType.nonEmpty))
   }
 
   test("fixtureWarc: 404 route, gzip parity, and the checksum the " +
       "oracle replays") {
-    val r13 = Warc.parseWarc(Warc.fixtureWarc(13)) // 404, odd -> gzip
+    val r13 = WarcReference.parseWarc(Warc.fixtureWarc(13)) // 404, odd -> gzip
     assert(r13.length == 2 && r13(1).httpStatus == 404 &&
       new String(r13(1).body, "UTF-8") == "Not Found")
-    val r2 = Warc.parseWarc(Warc.fixtureWarc(2)) // 200, even -> plain
+    val r2 = WarcReference.parseWarc(Warc.fixtureWarc(2)) // 200, even -> plain
     assert(r2.length == 2 && r2(1).httpStatus == 200)
     val body = new String(r2(1).body, "UTF-8")
     assert(body == "<html><body><h1>Doc 2</h1><p>" + ("ab" * 7) +
       "</p></body></html>")
     // gzip/plain parity: same ids decode to identical records
-    assert(Warc.parseWarc(Warc.gzip(Warc.fixtureWarc(2)))
+    assert(WarcReference.parseWarc(Warc.gzip(Warc.fixtureWarc(2)))
       .map(r => new String(r.body, "UTF-8")) ==
       r2.map(r => new String(r.body, "UTF-8")))
   }
@@ -168,7 +168,7 @@ class WarcSpec extends AnyFunSuite {
       "holds") {
     for (id <- Seq(2L, 1L)) { // even=plain, odd=gzip
       val bytes = Warc.fixtureWarc(id)
-      val rs = Warc.parseWarc(bytes)
+      val rs = WarcReference.parseWarc(bytes)
       assert(rs.length == 2)
       assert(rs(0).offset == 0)
       assert(rs(1).offset == 141, // pinned by the layout_warc_cdx SQL
@@ -225,7 +225,7 @@ class WarcSpec extends AnyFunSuite {
     walked.foreach { case (off, len, dec) =>
       val viaSlice = Warc.readRecordSlice(bytes, off, len,
         compressedCoords = true).get
-      val viaWalk = Warc.parseWarc(dec).head
+      val viaWalk = WarcReference.parseWarc(dec).head
       assert(viaWalk.warcType == viaSlice.warcType &&
         viaWalk.targetUri == viaSlice.targetUri &&
         java.util.Arrays.equals(viaWalk.body, viaSlice.body),
@@ -264,7 +264,7 @@ class WarcSpec extends AnyFunSuite {
       java.util.Arrays.fill(body, (i % 31).toByte)
       ("resource", s"u://rec$i", body)
     })
-    val recs = Warc.parseWarc(raw)
+    val recs = WarcReference.parseWarc(raw)
     val dir = java.nio.file.Files.createTempDirectory("slicefetch")
     val file = dir.resolve("whole.warc.gz")
     java.nio.file.Files.write(file, Warc.gzip(raw))
@@ -279,7 +279,7 @@ class WarcSpec extends AnyFunSuite {
         case (r, i) if i % 3 == 0 => r }
       picks.foreach { r =>
         val slice = fetcher.readUncompressed(r.offset, r.recBytes).get
-        val rec = Warc.parseWarc(slice).head
+        val rec = WarcReference.parseWarc(slice).head
         assert(rec.targetUri == r.targetUri &&
           java.util.Arrays.equals(rec.body, r.body),
           s"slice at ${r.offset} decoded wrong record ${rec.targetUri}")
@@ -302,7 +302,7 @@ class WarcSpec extends AnyFunSuite {
       val first = recs.head
       val slice0 = fetcher.readUncompressed(first.offset,
         first.recBytes).get
-      assert(Warc.parseWarc(slice0).head.targetUri == first.targetUri)
+      assert(WarcReference.parseWarc(slice0).head.targetUri == first.targetUri)
       assert(fetcher.gzRestarts == 2)
     } finally {
       scala.util.Try(in.close())
@@ -313,7 +313,7 @@ class WarcSpec extends AnyFunSuite {
   test("WET fixture: the conversion record's extracted text matches " +
       "the HTML fixture's content, gzip-invariant") {
     for (id <- Seq(2L, 3L)) { // even=plain, odd=gzip
-      val rs = Warc.parseWarc(Warc.fixtureWet(id))
+      val rs = WarcReference.parseWarc(WarcReference.fixtureWet(id))
       assert(rs.length == 2 && rs(1).warcType == "conversion")
       val text = new String(rs(1).body, "UTF-8")
       assert(text == s"Doc $id\n" + ("ab" * (5 + (id % 7)).toInt))
@@ -323,13 +323,13 @@ class WarcSpec extends AnyFunSuite {
 
   test("revisit fixture: spec-shaped record whose payload digest " +
       "matches the REAL first-crawl payload's sha1") {
-    val firstBody = Warc.parseWarc(Warc.fixtureWarc(2))(1).body
-    val rs = Warc.parseWarc(Warc.fixtureWarcSecondCrawl(2))
+    val firstBody = WarcReference.parseWarc(Warc.fixtureWarc(2))(1).body
+    val rs = WarcReference.parseWarc(Warc.fixtureWarcSecondCrawl(2))
     assert(rs.length == 1 && rs(0).warcType == "revisit")
     assert(rs(0).payloadDigest == Warc.sha1Base32(firstBody))
     assert(rs(0).refersTo == "<urn:uuid:first-2>")
     // changed ids carry a full response instead
-    val changed = Warc.parseWarc(Warc.fixtureWarcSecondCrawl(6))
+    val changed = WarcReference.parseWarc(Warc.fixtureWarcSecondCrawl(6))
     assert(changed.length == 1 && changed(0).warcType == "response" &&
       changed(0).httpStatus == 200 &&
       new String(changed(0).body, "UTF-8").contains("updated"))

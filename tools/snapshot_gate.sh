@@ -42,6 +42,16 @@ if [ -n "$REPLAY" ]; then
   exit 1
 fi
 
+echo "[gate] 0d/3 one row registry"
+HANDMAP="$(grep -rnE 'Map\[String, Q\]\(|oracleSql[^=]*= *Map\(|protocolRows|engineUnderGuard' \
+  src/main || true)"
+if [ -n "$HANDMAP" ]; then
+  echo "$HANDMAP"
+  echo "[gate] FAIL: hand-written row map or row-name list under src/main" \
+    "(declare each row once as a QuerySpec; SparkEntry derives the maps)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
