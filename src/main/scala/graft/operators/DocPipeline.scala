@@ -143,14 +143,20 @@ object DocPipeline {
     * store whose schema predates `chunk_index` gets the reduced
     * projection with the range filter and index ordering DROPPED —
     * never an analysis failure (the Spark analog of SQLite's "no such
-    * column" retry; schema inspection replaces the error probe). */
+    * column" retry; schema inspection replaces the error probe).
+    *
+    * Cost: at most two Spark jobs. The url and range filters run in the
+    * parallel scan; only the page's rows cross one exchange into a
+    * single partition, which is sorted by `chunk_index` in place. A
+    * global `orderBy` would add a range-sampling job that re-scans the
+    * whole store. */
   def getChunksFromStore(chunks: DataFrame, url: String,
       range: Option[(Int, Int)] = None): DataFrame = {
     val page = chunks.filter(col("url") === url)
     if (chunks.columns.contains("chunk_index")) {
       range.fold(page) { case (a, b) =>
         page.filter(col("chunk_index").between(a, b)) }
-        .orderBy("chunk_index")
+        .repartition(1).sortWithinPartitions("chunk_index")
     } else {
       val legacy = Seq("chunk_id", "content", "url", "section",
         "heading_hierarchy").filter(chunks.columns.contains)

@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.Tables
 
 /** Similarity-search operators over the embeddings table: exact cosine
@@ -25,7 +32,7 @@ object Similarity {
   /** cosine(a, b) in double precision via the codegen'd dot_f expression
     * (left-to-right accumulation, matching the oracle's
     * list_dot_product). */
-  private def cosineExpr(a: String, b: String): Column =
+  private[graft] def cosineExpr(a: String, b: String): Column =
     expr(s"dot_f($a, $b) / (sqrt(dot_f($a, $a)) * sqrt(dot_f($b, $b)))")
 
   /** Exact brute-force cosine top-k: queries = vec_id < 5, corpus =
@@ -404,14 +411,19 @@ object Similarity {
   }
 
   /** One-time IVF index build: the corpus written partitioned by cell
-    * id, so a probe is a partition-pruned read of `nprobe` directories —
+    * id, so a probe reads the files of `nprobe` cell directories —
     * candidate I/O ∝ nprobe/nlist of the corpus. At 100 TB this is the
     * scale path: build once, probe many times; no per-query fit, no
     * cached blocks to leak. The centroids are Lloyd-refined from the
     * seeds (`lloydIters` spherical k-means rounds — better cell balance
     * and recall at the same nprobe cost; FAISS builds its IVF coarse
-    * quantizer the same way) and persisted beside the index
-    * (`<indexDir>.centroids`) so probes don't need the source table. */
+    * quantizer the same way). They go into the in-dir manifest, which
+    * probes read, and into a `<indexDir>.centroids` parquet copy.
+    *
+    * The build registers the index in [[graft.plans.KnnIndexRegistry]].
+    * The first [[probeIvf]] of this build loads its cell files and
+    * schema into that entry, and later probes reuse them until the
+    * manifest changes. */
   def buildIvfIndex(s: SparkSession, dir: String, indexDir: String,
       nlist: Int = IvfNlist, lloydIters: Int = IvfLloydIters): Unit = {
     import s.implicits._
@@ -604,47 +616,112 @@ object Similarity {
         expr(s"n_overlap * 1000 div $k").as("recall_permille"))
   }
 
-  /** Index-metadata loader of a persisted IVF index: centroids from the
-    * in-dir manifest when present (one small-file read, bit-exact base64
-    * floats — no Spark job), else the legacy `.centroids` parquet
-    * sidecar. */
-  private[graft] def indexSeeds(s: SparkSession,
-      indexDir: String): Array[Array[Float]] =
-    graft.plans.KnnIndexRegistry.readManifest(indexDir) match {
-      case Some((_, seeds, _)) if seeds.nonEmpty => seeds
-      case _ =>
-        import s.implicits._
-        s.read.parquet(indexDir + ".centroids")
-          .orderBy("cell").select("embedding").as[Array[Float]].collect()
-    }
+  /** The result schema of [[probeIvf]]. */
+  private val ProbeSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cosine", DoubleType)))
 
-  /** Probe a built IVF index: rank the persisted centroids against the
-    * query on the driver (nlist dot products — pure math, no corpus
-    * pass), read only the `nprobe` best partitions, exact cosine
-    * re-rank. The cell filter is a partition filter on the scan
-    * (asserted in SparkE2ESpec "partition-pruned probe"). Pass
-    * `excludeId` to drop a known self-match *before* the limit so all
-    * `k` result slots are real neighbors.
-    * Zero-norm vectors have no direction, so they take no part in a
-    * cosine ranking: zero-norm candidates are skipped, and a zero-norm
-    * query returns no rows (the cosine would divide by zero). */
+  /** A probe's answer order: cosine descending under Spark's double
+    * ordering (NaN first, -0.0 equal to 0.0), then vec_id ascending. */
+  private val probeOrder: Ordering[(Long, Double)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._2, a._2)
+    if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+  }
+
+  /** The `k` first of `rows` in [[probeOrder]], in that order, holding
+    * at most `k` rows at a time (the head of the heap is the worst one
+    * kept). */
+  private def firstK(rows: Iterator[(Long, Double)],
+      k: Int): Array[(Long, Double)] = {
+    val heap = new java.util.PriorityQueue[(Long, Double)](probeOrder.reverse)
+    rows.foreach { r =>
+      if (heap.size < k) heap.add(r)
+      else if (probeOrder.lt(r, heap.peek)) { heap.poll(); heap.add(r) }
+    }
+    heap.toArray(new Array[(Long, Double)](0)).sorted(probeOrder)
+  }
+
+  /** `dot_f`'s arithmetic: products in double, accumulated in ascending
+    * index over the shorter length. */
+  private def dotF(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
+  /** The candidates of a probe: `vec_id` and `embedding` of the vectors
+    * in the query's `nprobe` cells, read from exactly those cells' leaf
+    * files with the build's known schema, so the scan lists and infers
+    * nothing. None when the cells hold no file. */
+  private[graft] def probeCandidates(s: SparkSession, indexDir: String,
+      queryVec: Array[Float], nprobe: Int,
+      excludeId: Option[Long]): Option[DataFrame] = {
+    val entry = graft.plans.KnnIndexRegistry.probeEntry(s, indexDir)
+    val files = entry.files.get
+    val chosen = topCells(queryVec, entry.seeds, nprobe).toSeq
+      .flatMap(c => files.cells.getOrElse(c, Nil))
+    if (chosen.isEmpty) None
+    else {
+      // the listing answers from the loaded build, so the file index
+      // asks the filesystem nothing
+      val leaves = chosen.groupBy(_.getPath.getParent)
+      val listing = new FileStatusCache {
+        override def getLeafFiles(p: Path) = leaves.get(p).map(_.toArray)
+        override def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val scan = s.baseRelationToDataFrame(HadoopFsRelation(
+        new InMemoryFileIndex(s, leaves.keys.toSeq.sortBy(_.toString),
+          Map.empty, Some(files.schema), listing),
+        new StructType(), files.schema, None, new ParquetFileFormat,
+        Map.empty)(s))
+      val live = scan.filter(col("vec_id").isNotNull &&
+        col("embedding").isNotNull)
+      Some(excludeId.fold(live)(id => live.filter(col("vec_id") =!= id))
+        .select("vec_id", "embedding"))
+    }
+  }
+
+  /** Probe a built IVF index: rank the build's centroids against the
+    * query on the driver, read only the `nprobe` best cells' files, and
+    * return the `k` best `(vec_id, cosine)` rows, cosine descending and
+    * vec_id ascending on ties. Pass `excludeId` to drop a known
+    * self-match *before* the limit so all `k` result slots are real
+    * neighbors.
+    *
+    * Cost: one Spark job. The index's seeds, cell files and schema are
+    * loaded once per on-disk build and kept in its
+    * [[graft.plans.KnnIndexRegistry]] entry; each probe checks them
+    * against one status call on the manifest. Each partition keeps its
+    * `k` best candidates in a bounded heap, and the driver merges at
+    * most `k` × partitions rows into a local frame.
+    *
+    * The cosine is `dot_f`'s: double accumulation over the shorter
+    * length, each norm over its own vector. Zero-norm vectors have no
+    * direction: zero-norm candidates (and rows without an id or an
+    * embedding) are skipped, and a zero-norm query scores every other
+    * candidate 0.0, so it returns the `k` lowest ids of the probed
+    * cells, which are cells 0 until `nprobe`. */
   def probeIvf(s: SparkSession, indexDir: String, queryVec: Array[Float],
       k: Int = 10, nprobe: Int = IvfNprobe,
       excludeId: Option[Long] = None): DataFrame = {
     import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    val seeds = indexSeeds(s, indexDir)
-    val cells = topCells(queryVec, seeds, nprobe)
-    val q = s.createDataFrame(Seq(Tuple1(queryVec))).toDF("qv")
-    val scan = s.read.parquet(indexDir)
-      .filter(col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
-    excludeId.fold(scan)(id => scan.filter(col("vec_id") =!= id))
-      .crossJoin(broadcast(q))
-      .filter(expr("dot_f(qv, qv) > 0 AND dot_f(embedding, embedding) > 0"))
-      .withColumn("cosine", cosineExpr("qv", "embedding"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
-      .select("vec_id", "cosine")
+    val qq = dotF(queryVec, queryVec)
+    val kept = probeCandidates(s, indexDir, queryVec, nprobe, excludeId) match {
+      case Some(candidates) if k > 0 =>
+        candidates.as[(Long, Array[Float])].mapPartitions { it =>
+          firstK(it.flatMap { case (id, e) =>
+            val ee = dotF(e, e)
+            if (SQLOrderingUtil.compareDoubles(ee, 0.0) <= 0) None
+            else if (qq == 0.0) Some(id -> 0.0)
+            else Some(id -> dotF(queryVec, e) / (math.sqrt(qq) * math.sqrt(ee)))
+          }, k).iterator
+        }.collect()
+      case _ => Array.empty[(Long, Double)]
+    }
+    s.createDataFrame(firstK(kept.iterator, k).map { case (id, c) =>
+      Row(id, c) }.toSeq.asJava, ProbeSchema)
   }
 
   /** IVF ANN as one declarative plan (the oracle-checked entry):

@@ -2,6 +2,7 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 
 import graft.functions.DotProductF
 
@@ -25,7 +26,16 @@ import graft.functions.DotProductF
   * paths, so ordinary sorts are untouched.
   */
 object KnnIndexRegistry {
-  final case class Entry(seeds: Array[Array[Float]], nprobe: Int)
+  /** An index's quantizer, plus what a probe reads of one on-disk build
+    * once a probe has loaded it ([[probeEntry]]). */
+  final case class Entry(seeds: Array[Array[Float]], nprobe: Int,
+      files: Option[ProbeFiles] = None)
+
+  /** One on-disk build as a probe reads it: each cell's leaf data files
+    * and their schema, loaded when the manifest had `fingerprint`
+    * (modification time, length). */
+  final case class ProbeFiles(fingerprint: (Long, Long),
+      cells: Map[Int, Seq[FileStatus]], schema: StructType)
 
   /** Manifest file written INSIDE the index directory. The underscore
     * prefix makes Spark's file index treat it as metadata (like
@@ -112,27 +122,24 @@ object KnnIndexRegistry {
     finally out.close()
   }
 
-  /** Generic manifest read for the index loaders: (kind, seeds,
-    * nprobe); malformed or absent → None. */
-  def readManifest(indexPath: String)
-      : Option[(String, Array[Array[Float]], Int)] =
-    readManifestAt(new org.apache.hadoop.fs.Path(indexPath))
-
   /** Probe `<dir>/_graft_knn_manifest` on the index's own filesystem;
     * malformed, absent, or a non-`ivf` kind → None for the REWRITE
     * path (the rewrite stands down, exact scan runs — degraded
     * performance, never a wrong answer). */
   private[plans] def loadManifest(dir: org.apache.hadoop.fs.Path)
       : Option[Entry] =
-    readManifestAt(dir).collect {
+    readManifestAt(dir, new org.apache.hadoop.conf.Configuration()).collect {
       case ("ivf", seeds, nprobe) => Entry(seeds, nprobe)
     }
 
-  private def readManifestAt(dir: org.apache.hadoop.fs.Path)
+  /** (kind, seeds, nprobe) of the manifest in `dir`; malformed or
+    * absent → None. */
+  private def readManifestAt(dir: org.apache.hadoop.fs.Path,
+      conf: org.apache.hadoop.conf.Configuration)
       : Option[(String, Array[Array[Float]], Int)] =
     try {
       val p = new org.apache.hadoop.fs.Path(dir, ManifestName)
-      val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) return None
       val in = fs.open(p)
       val text =
@@ -159,6 +166,51 @@ object KnnIndexRegistry {
         b64 <- kv.get("seeds")
       } yield (kv.getOrElse("kind", "ivf"), seedsFromB64(b64, dim), nprobe)
     } catch { case _: Exception => None }
+
+  private val CellDir = """cell=(\d+)""".r
+
+  /** The entry of the index at `indexDir` with its [[ProbeFiles]]. A
+    * build is loaded once: its seeds from the manifest, each cell's leaf
+    * files from one listing, the schema from one footer. Every call
+    * compares the manifest's fingerprint, one status call through the
+    * session's Hadoop conf, with the loaded one, so a rebuild at the
+    * same path by any writer is reloaded. (A rebuild rewrites the
+    * manifest after its data, far later than the filesystem's
+    * modification-time resolution.) */
+  private[graft] def probeEntry(s: SparkSession, indexDir: String): Entry = {
+    val conf = s.sessionState.newHadoopConf()
+    val dir = new org.apache.hadoop.fs.Path(indexDir)
+    val manifest = new org.apache.hadoop.fs.Path(dir, ManifestName)
+    val fs = manifest.getFileSystem(conf)
+    val st =
+      try fs.getFileStatus(manifest)
+      catch { case _: java.io.FileNotFoundException =>
+        throw new IllegalArgumentException(
+          s"$indexDir is not an IVF index: it has no $ManifestName") }
+    val fingerprint = (st.getModificationTime, st.getLen)
+    val key = canon(indexDir)
+    entries.get(key) match {
+      case Some(e) if e.files.exists(_.fingerprint == fingerprint) => e
+      case _ =>
+        val (_, seeds, nprobe) = readManifestAt(dir, conf).getOrElse(
+          throw new IllegalArgumentException(s"$indexDir: malformed $ManifestName"))
+        val cells = fs.listStatus(dir).toSeq.flatMap { d =>
+          d.getPath.getName match {
+            case CellDir(c) if d.isDirectory =>
+              Some(c.toInt -> fs.listStatus(d.getPath).toSeq
+                .filter(graft.sources.ChunkStore.isDataFile))
+            case _ => None
+          }
+        }.toMap
+        val schema = graft.sources.ChunkStore
+          .footerSchema(s, cells.values.flatten.toSeq)
+          .getOrElse(new StructType())
+        val e = Entry(seeds, nprobe,
+          Some(ProbeFiles(fingerprint, cells, schema)))
+        entries(key) = e
+        e
+    }
+  }
 
   private[plans] def lookup(
       rootPaths: Seq[org.apache.hadoop.fs.Path]): Option[Entry] =

@@ -1,7 +1,12 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The engine's chunk store (SURVEY.md §2.6): a Parquet table partitioned
   * by `product_name` (≅ one collection per product, reference
@@ -81,11 +86,49 @@ object ChunkStore {
     }
   }
 
-  /** Current contents, or None for an empty store. */
+  /** Current contents, or None for an empty store. The read runs no
+    * Spark job: a `v<N>` directory is immutable once `LATEST` names it,
+    * so its schema is taken from one footer on the driver
+    * ([[footerSchema]]) and handed to the reader, which then lists the
+    * directory and nothing else. Nothing is cached between calls, so a
+    * store deleted and re-synced (its version numbers repeat) reads its
+    * new rows. */
   def readLatest(spark: SparkSession, root: String): Option[DataFrame] = {
     val v = latestVersion(root)
-    if (v < 0) None else Some(spark.read.parquet(s"$root/v$v"))
+    if (v < 0) None
+    else {
+      val dir = s"$root/v$v"
+      val p = new Path(dir)
+      val files = p.getFileSystem(spark.sessionState.newHadoopConf())
+        .listStatus(p).toSeq
+      Some(footerSchema(spark, files).fold(spark.read)(spark.read.schema)
+        .parquet(dir))
+    }
   }
+
+  /** A file Spark's listing keeps as data: not hidden (`_` or `.`
+    * prefix) and not a copy in flight. */
+  private[graft] def isDataFile(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    f.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+      !n.endsWith("._COPYING_")
+  }
+
+  /** The schema Spark infers for a non-merged parquet read of `files`,
+    * without its inference job: the footer of the first data file by
+    * path, its `org.apache.spark.sql.parquet.row.metadata` (or, from a
+    * writer other than Spark, the converted parquet schema). None when
+    * no file is data, so the caller leaves inference, and its error
+    * for an empty directory, to Spark. */
+  private[graft] def footerSchema(spark: SparkSession,
+      files: Seq[FileStatus]): Option[StructType] =
+    files.filter(isDataFile).sortBy(_.getPath.toString).headOption.map { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
 
   /** Upsert-by-url into the versioned store; returns the new version.
     * Idempotent per incoming batch (re-running the same batch rewrites

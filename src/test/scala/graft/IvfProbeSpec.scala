@@ -1,0 +1,191 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import graft.operators.{DocPipeline, Similarity, Sync}
+import graft.sources.ChunkStore
+
+/** `Similarity.probeIvf`'s per-partition top-k kernel against the plan
+  * it replaced ([[IvfReference]]: crossJoin, `dot_f` cosine, global
+  * sort), bit for bit, and the loaded index handle and store reads
+  * against rebuilds. */
+class IvfProbeSpec extends SparkSuite {
+  import Similarity.{IvfNlist, IvfNprobe}
+
+  private val dir = "/root/testdata/sf0.001"
+
+  private lazy val sfIndex: String = {
+    val idx = tempDir("ivfprobe").resolve("ivf").toString
+    Similarity.buildIvfIndex(spark, dir, idx)
+    idx
+  }
+
+  private lazy val sfVecs: Map[Long, Array[Float]] = {
+    import spark.implicits._
+    Tables.embeddings(spark, dir).select("vec_id", "embedding")
+      .as[(Long, Array[Float])].collect().toMap
+  }
+
+  /** An index over `vecs`, built with the raw seed quantizer (the
+    * vectors with ids 1..16). */
+  private def build(vecs: Seq[(Long, Array[Float])],
+      at: Option[String] = None): String = {
+    import spark.implicits._
+    val base = tempDir("ivfvecs")
+    vecs.map { case (id, v) => (id, 0, v) }.toDF("vec_id", "label", "embedding")
+      .repartition(3).write.parquet(base.resolve("embeddings.parquet").toString)
+    val idx = at.getOrElse(base.resolve("ivf").toString)
+    Similarity.buildIvfIndex(spark, base.toString, idx, lloydIters = 0)
+    idx
+  }
+
+  private def gaussian(seed: Int, n: Int): IndexedSeq[Array[Float]] = {
+    val rnd = new scala.util.Random(seed)
+    IndexedSeq.fill(n)(Array.fill(graft.functions.Embedder.Dim)(
+      rnd.nextGaussian().toFloat))
+  }
+
+  private def bits(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().toSeq.map(r =>
+      (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+
+  /** The kernel's rows equal the reference plan's, in order and bit for
+    * bit; returns them. */
+  private def parity(idx: String, q: Array[Float], k: Int = 10,
+      nprobe: Int = IvfNprobe, excludeId: Option[Long] = None): Seq[(Long, Long)] = {
+    val got = Similarity.probeIvf(spark, idx, q, k, nprobe, excludeId)
+    assert(got.columns.toSeq == Seq("vec_id", "cosine"))
+    val want = bits(IvfReference.probeIvf(spark, idx, q, k, nprobe, excludeId))
+    assert(bits(got) == want)
+    want
+  }
+
+  test("kernel equals the reference plan on the sf0.001 index") {
+    (0L until 5L).foreach { q =>
+      assert(parity(sfIndex, sfVecs(q)).size == 10)
+    }
+  }
+
+  test("kernel equals the reference plan with excludeId") {
+    (0L until 5L).foreach { q =>
+      val rows = parity(sfIndex, sfVecs(q), excludeId = Some(q))
+      assert(rows.size == 10 && !rows.exists(_._1 == q))
+    }
+  }
+
+  test("kernel equals the reference plan with nprobe = IvfNlist") {
+    (0L until 3L).foreach { q =>
+      assert(parity(sfIndex, sfVecs(q), k = 25, nprobe = IvfNlist).size == 25)
+    }
+  }
+
+  test("kernel equals the reference plan on tied cosines of duplicate vectors") {
+    val base = gaussian(5, 30)
+    // every vector twice (ids i and 100 + i), and vector 3 four times
+    val vecs = base.indices.map(i => i.toLong -> base(i)) ++
+      base.indices.map(i => (100L + i) -> base(i).clone()) ++
+      Seq(200L -> base(3).clone(), 201L -> base(3).clone())
+    val idx = build(vecs)
+    val rows = parity(idx, base(3), k = 12, nprobe = IvfNlist)
+    assert(rows.take(4).map(_._1) == Seq(3L, 103L, 200L, 201L))
+    assert(rows.take(4).map(_._2).distinct.size == 1)
+    Seq(0, 7, 21).foreach(i => parity(idx, base(i), k = 7))
+  }
+
+  test("kernel equals the reference plan when k exceeds the candidates") {
+    val base = gaussian(9, 40)
+    val idx = build(base.indices.map(i => i.toLong -> base(i)))
+    val few = parity(idx, base(2), k = 1000)
+    assert(few.nonEmpty && few.size < 40)
+    assert(parity(idx, base(2), k = 1000, nprobe = IvfNlist).size == 40)
+  }
+
+  test("kernel equals the reference plan over zero-norm candidates") {
+    val base = gaussian(13, 50)
+    val zeros = Set(7L, 23L, 40L)
+    val vecs = base.indices.map { i =>
+      val id = i.toLong
+      id -> (if (zeros(id)) new Array[Float](base(i).length) else base(i))
+    }
+    val idx = build(vecs)
+    val rows = parity(idx, base(4), k = 100, nprobe = IvfNlist)
+    assert(rows.map(_._1).toSet == vecs.map(_._1).toSet -- zeros)
+    parity(idx, base(30), k = 5)
+  }
+
+  test("kernel equals the reference plan when chosen cells have no files") {
+    val base = gaussian(17, 60)
+    val idx = build(base.indices.map(i => i.toLong -> base(i)))
+    val q = base(5)
+    val best = Similarity.topCells(q, IvfReference.indexSeeds(spark, idx), 2)
+    // the best cell loses its files before the first probe loads the build
+    Sync.deleteTree(new java.io.File(idx, s"cell=${best(0)}"))
+    val rest = parity(idx, q, k = 50, nprobe = 2)
+    assert(rest.nonEmpty)
+    assert(parity(idx, q, nprobe = 1).isEmpty)
+  }
+
+  test("a rebuild at the same path is seen by the next probe, by any writer") {
+    // both builds hold seed ids 1..16; past those, b's ids are new
+    val a = gaussian(21, 40).zipWithIndex.map { case (v, i) => i.toLong -> v }
+    val b = gaussian(22, 40).zipWithIndex.map { case (v, i) =>
+      (if (i <= IvfNlist) i.toLong else 1000L + i) -> v }
+    val p = tempDir("ivfrebuild").resolve("ivf")
+    // every cell probed: the answer is the exact top 5 of what is on
+    // disk, led by the query's own vector
+    def check(q: (Long, Array[Float])): Unit = {
+      val got = bits(Similarity.probeIvf(spark, p.toString, q._2, k = 5,
+        nprobe = IvfNlist))
+      assert(got.size == 5 && got.head._1 == q._1)
+      assert(got == bits(IvfReference.probeIvf(spark, p.toString, q._2, k = 5,
+        nprobe = IvfNlist)))
+    }
+    build(a, Some(p.toString))
+    check(a(30))
+    // this process rebuilds P over other vectors
+    build(b, Some(p.toString))
+    check(b(30))
+    // another writer replaces P with its own build of the first vectors;
+    // this process's registry still holds the loaded build of `b`
+    val other = java.nio.file.Paths.get(build(a))
+    Sync.deleteTree(p.toFile)
+    java.nio.file.Files.move(other, p)
+    check(a(30))
+  }
+
+  test("a store deleted and re-synced reads its new rows") {
+    import spark.implicits._
+    val base = tempDir("storeresync")
+    val (store, state) = (base.resolve("store").toString,
+      base.resolve("state").toString)
+    def sync(text: String): Unit =
+      Sync.syncRun(spark, Seq("doc://p" -> text).toDF("url", "text"),
+        store, state, 1L).collect()
+    def contents(): (Seq[String], Seq[String]) = {
+      val stored = ChunkStore.readLatest(spark, store).get
+      (stored.select("content").as[String].collect().toSeq.sorted,
+        DocPipeline.getChunksFromStore(stored, "doc://p", Some((0, 5)))
+          .select("content").as[String].collect().toSeq)
+    }
+    sync("# First\n\nThe first text of this page.")
+    val v = ChunkStore.latestVersion(store)
+    val (first, firstPage) = contents()
+    assert(first.exists(_.contains("first text")) && firstPage == first)
+    Sync.deleteTree(base.toFile)
+    sync("# Second\n\nA second text replaces it.")
+    assert(ChunkStore.latestVersion(store) == v)
+    val (second, secondPage) = contents()
+    assert(second.exists(_.contains("second text")) && secondPage == second)
+    assert(!second.exists(_.contains("first text")))
+  }
+
+  // last: it stops the suite's session
+  test("a build loaded in a stopped session serves the next session") {
+    val idx = sfIndex
+    val q = sfVecs(0L)
+    val before = bits(Similarity.probeIvf(spark, idx, q))
+    spark.stop()
+    val next = GraftSession.local(2)
+    try assert(bits(Similarity.probeIvf(next, idx, q)) == before)
+    finally next.stop()
+  }
+}

@@ -95,3 +95,44 @@ object DedupReference {
       .orderBy("doc_id")
   }
 }
+
+/** From [[graft.operators.Similarity]]. */
+object IvfReference {
+  import graft.operators.Similarity._
+
+  /** The seeds of a built index, read from its `.centroids` parquet
+    * copy rather than the manifest the probe kernel reads. */
+  def indexSeeds(s: SparkSession, indexDir: String): Array[Array[Float]] = {
+    import s.implicits._
+    s.read.parquet(indexDir + ".centroids")
+      .orderBy("cell").select("embedding").as[Array[Float]].collect()
+  }
+
+  /** Probe a built IVF index: rank the persisted centroids against the
+    * query on the driver (nlist dot products — pure math, no corpus
+    * pass), read only the `nprobe` best partitions, exact cosine
+    * re-rank. The cell filter is a partition filter on the scan. Pass
+    * `excludeId` to drop a known self-match *before* the limit so all
+    * `k` result slots are real neighbors.
+    * Zero-norm vectors have no direction, so they take no part in a
+    * cosine ranking: zero-norm candidates are skipped, and a zero-norm
+    * query returns no rows (the cosine would divide by zero). */
+  def probeIvf(s: SparkSession, indexDir: String, queryVec: Array[Float],
+      k: Int = 10, nprobe: Int = IvfNprobe,
+      excludeId: Option[Long] = None): DataFrame = {
+    import s.implicits._
+    graft.functions.VectorExprs.register(s)
+    val seeds = indexSeeds(s, indexDir)
+    val cells = topCells(queryVec, seeds, nprobe)
+    val q = s.createDataFrame(Seq(Tuple1(queryVec))).toDF("qv")
+    val scan = s.read.parquet(indexDir)
+      .filter(col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
+    excludeId.fold(scan)(id => scan.filter(col("vec_id") =!= id))
+      .crossJoin(broadcast(q))
+      .filter(expr("dot_f(qv, qv) > 0 AND dot_f(embedding, embedding) > 0"))
+      .withColumn("cosine", cosineExpr("qv", "embedding"))
+      .orderBy(col("cosine").desc, col("vec_id"))
+      .limit(k)
+      .select("vec_id", "cosine")
+  }
+}

@@ -531,7 +531,7 @@ class SparkE2ESpec extends SparkSuite {
 
   test("IVF build/probe: partition-pruned probe matches the inline plan") {
     val dir = "/root/testdata/sf0.001"
-    val idx = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val idx = tempDir("ivfidx").resolve("ivf").toString
     // lloydIters=0 keeps the raw seed quantizer, so the persisted-index
     // probe must agree bit-for-bit with the inline (oracle-checked) plan
     Similarity.buildIvfIndex(spark, dir, idx, lloydIters = 0)
@@ -544,11 +544,19 @@ class SparkE2ESpec extends SparkSuite {
     // (which excludes vec_id 0 internally)
     val probe = Similarity.probeIvf(spark, idx, qv, k = 10,
       excludeId = Some(0L))
-    // the cell filter must prune partitions at the scan, not post-filter
-    val scan = probe.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(scan.contains("PartitionFilters") && scan.contains("cell"),
-      scan.take(2000))
+    // the probe must read its cells' files only, not filter the index:
+    // its scan is exactly the leaf files of the query's topCells cells,
+    // listed here from disk
+    val cells = Similarity.topCells(qv, IvfReference.indexSeeds(spark, idx),
+      Similarity.IvfNprobe)
+    val leaves = cells.toSeq.flatMap { c =>
+      Option(new java.io.File(idx, s"cell=$c").listFiles()).toSeq.flatten
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
+    }.toSet
+    val scanned = Similarity.probeCandidates(spark, idx, qv,
+      Similarity.IvfNprobe, Some(0L)).get.inputFiles
+      .map(u => new java.io.File(new java.net.URI(u)).getAbsolutePath).toSet
+    assert(leaves.nonEmpty && scanned == leaves, s"$scanned vs $leaves")
     val got = probe.collect().map(_.getAs[Long]("vec_id")).toSet
     val want = Similarity.annIvf(spark, dir, k = 10)
       .collect().map(_.getAs[Long]("vec_id")).toSet
@@ -556,39 +564,51 @@ class SparkE2ESpec extends SparkSuite {
       s"probe $got diverges from inline $want")
   }
 
-  test("IVF probe skips zero-norm candidates; a zero-norm query returns no rows") {
+  test("IVF probe skips zero-norm candidates; a zero-norm query returns the k lowest ids of cells 0 until nprobe") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ivfzero")
-    try {
-      val rnd = new scala.util.Random(31)
-      val dim = graft.functions.Embedder.Dim
-      val zeroIds = Set(7L, 23L)
-      val vecs = (0L until 60L).map { id =>
-        val v =
-          if (zeroIds(id)) new Array[Float](dim)
-          else Array.fill(dim)(rnd.nextGaussian().toFloat)
-        (id, 0, v)
-      }
-      val embDir = base.resolve("vectors").toString
-      vecs.toDF("vec_id", "label", "embedding")
-        .write.parquet(s"$embDir/embeddings.parquet")
-      val idx = base.resolve("ivf").toString
-      Similarity.buildIvfIndex(spark, embDir, idx, lloydIters = 0)
-      // every cell probed, so the zero vectors' cell is among them
-      val all = Similarity.IvfNlist
-      val got = Similarity.probeIvf(spark, idx, vecs(1)._3, k = 100,
-        nprobe = all).collect().map(_.getAs[Long]("vec_id")).toSet
-      assert(got == vecs.map(_._1).toSet -- zeroIds)
-      val none = Similarity.probeIvf(spark, idx, new Array[Float](dim),
-        k = 10, nprobe = all).collect()
-      assert(none.isEmpty)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    val base = tempDir("ivfzero")
+    val rnd = new scala.util.Random(31)
+    val dim = graft.functions.Embedder.Dim
+    val zeroIds = Set(7L, 23L)
+    val vecs = (0L until 60L).map { id =>
+      val v =
+        if (zeroIds(id)) new Array[Float](dim)
+        else Array.fill(dim)(rnd.nextGaussian().toFloat)
+      (id, 0, v)
+    }
+    val embDir = base.resolve("vectors").toString
+    vecs.toDF("vec_id", "label", "embedding")
+      .write.parquet(s"$embDir/embeddings.parquet")
+    val idx = base.resolve("ivf").toString
+    Similarity.buildIvfIndex(spark, embDir, idx, lloydIters = 0)
+    // every cell probed, so the zero vectors' cell is among them
+    val all = Similarity.IvfNlist
+    val got = Similarity.probeIvf(spark, idx, vecs(1)._3, k = 100,
+      nprobe = all).collect().map(_.getAs[Long]("vec_id")).toSet
+    assert(got == vecs.map(_._1).toSet -- zeroIds)
+    // a zero-norm query scores every non-zero candidate 0.0: the k
+    // lowest ids of the probed cells come back, and under topCells'
+    // tie-break those cells are 0 until nprobe
+    val zero = new Array[Float](dim)
+    def zeroProbe(nprobe: Int) = Similarity.probeIvf(spark, idx, zero,
+      k = 10, nprobe = nprobe).collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("cosine"))).toSeq
+    assert(zeroProbe(all) ==
+      (0L until 11L).filterNot(zeroIds).map(_ -> 0.0))
+    val seeds = vecs.slice(1, all + 1).map(_._3).toArray
+    val inFirstCells = vecs.filter { case (id, _, v) =>
+      !zeroIds(id) && Similarity.argmaxCell(v, seeds) < Similarity.IvfNprobe
+    }.map(_._1)
+    assert(Similarity.topCells(zero, seeds, Similarity.IvfNprobe).toSeq ==
+      (0 until Similarity.IvfNprobe))
+    assert(zeroProbe(Similarity.IvfNprobe) ==
+      inFirstCells.sorted.take(10).map(_ -> 0.0))
   }
 
   test("Lloyd-refined IVF: mean recall at equal nprobe >= seed baseline") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory("ivflloyd")
+    val base = tempDir("ivflloyd")
     val seedIdx = base.resolve("seed").toString
     val refIdx = base.resolve("refined").toString
     // identical probe machinery on both indexes; ONLY the quantizer
@@ -694,7 +714,7 @@ class SparkE2ESpec extends SparkSuite {
       val v = unit(centers(c).map(_.toDouble).zip(noise).map { case (a, b) => a + b })
       (i.toLong, v, c)
     }
-    val base = java.nio.file.Files.createTempDirectory("ivfclustered")
+    val base = tempDir("ivfclustered")
     rows.toDF("vec_id", "embedding", "label")
       .repartition(4).write.parquet(base.resolve("embeddings.parquet").toString)
     val dirC = base.toString
