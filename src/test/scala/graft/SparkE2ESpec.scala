@@ -564,7 +564,7 @@ class SparkE2ESpec extends SparkSuite {
       s"probe $got diverges from inline $want")
   }
 
-  test("IVF probe skips zero-norm candidates; a zero-norm query returns the k lowest ids of cells 0 until nprobe") {
+  test("IVF probe skips zero-norm candidates; a zero-norm query returns k lowest ids") {
     import spark.implicits._
     val base = tempDir("ivfzero")
     val rnd = new scala.util.Random(31)
