@@ -6,7 +6,7 @@ import graft.sources.ChunkStore
 import graft.streaming.EventStream
 
 /** Runnable walkthrough of the library surface that is not covered by
-  * SparkEntry.queries: the chunk store's upsert/cleanup disciplines, the
+  * SparkEntry.queries: the chunk store's upsert-by-url commit, the
   * Structured Streaming path, and the multimodal binary pipeline.
   * `sbt "runMain graft.Demo"`. */
 object Demo {
@@ -15,18 +15,16 @@ object Demo {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    // chunk store: upsert-by-url + guarded cleanup
-    val stored = Seq(("doc://a", "h1"), ("doc://a", "h2"), ("doc://b", "h3"))
-      .toDF("url", "chunk_id")
-    val incoming = Seq(("doc://b", "h9")).toDF("url", "chunk_id")
-    println("UPSERT -> " + ChunkStore.upsertByUrl(stored, incoming)
+    // chunk store: upsert-by-url through the commit log
+    val store = java.nio.file.Files.createTempDirectory("store")
+      .resolve("chunks").toString
+    ChunkStore.upsertVersioned(spark, store,
+      Seq(("doc://a", "h1"), ("doc://a", "h2"), ("doc://b", "h3"))
+        .toDF("url", "chunk_id"))
+    ChunkStore.upsertVersioned(spark, store,
+      Seq(("doc://b", "h9")).toDF("url", "chunk_id"))
+    println("UPSERT -> " + ChunkStore.readLatest(spark, store).get
       .orderBy("url", "chunk_id").collect().mkString(" "))
-    println("CLEANUP guarded (network errors) -> " +
-      ChunkStore.cleanupObsolete(stored, Seq("doc://a").toDF("url"),
-        hasNetworkErrors = true, scanIncomplete = false).count() + " rows kept")
-    println("CLEANUP clean scan -> " +
-      ChunkStore.cleanupObsolete(stored, Seq("doc://a").toDF("url"),
-        hasNetworkErrors = false, scanIncomplete = false).count() + " rows kept")
 
     // structured streaming over a staged slice of the events table
     val tmp = java.nio.file.Files.createTempDirectory("ev").toString

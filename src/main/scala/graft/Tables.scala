@@ -1,13 +1,53 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
-/** Loaders for the driver-provided parquet tables (TESTDATA.md). */
+/** Loaders for the driver-provided parquet tables (TESTDATA.md), and the
+  * footer-schema parquet read the engine's own stores share. */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `spark.read.parquet` of `dir/name.parquet` without its
+    * schema-inference job: the schema comes from one footer read on the
+    * driver ([[footerSchema]]), so the load runs no Spark job. A path
+    * with no data file at its top level (missing, partitioned, empty)
+    * leaves inference, and its error, to Spark. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
+    footerSchema(spark, files).fold(spark.read)(spark.read.schema)
+      .parquet(path)
+  }
+
+  /** A file Spark's listing keeps as data: not hidden (`_` or `.`
+    * prefix) and not a copy in flight. */
+  private[graft] def isDataFile(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    f.isFile && !n.startsWith("_") && !n.startsWith(".") &&
+      !n.endsWith("._COPYING_")
+  }
+
+  /** The schema Spark infers for a non-merged parquet read of `files`,
+    * without its inference job: the footer of the first data file by
+    * path, its `org.apache.spark.sql.parquet.row.metadata` (or, from a
+    * writer other than Spark, the converted parquet schema). None when
+    * no file is data, so the caller leaves inference, and its error
+    * for an empty directory, to Spark. */
+  private[graft] def footerSchema(spark: SparkSession,
+      files: Seq[FileStatus]): Option[StructType] =
+    files.filter(isDataFile).sortBy(_.getPath.toString).headOption.map { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
+      val footer = try reader.getFooter finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
 
   /** Normalize events.ts to TimestampType whatever the parquet carries.
     * Earlier driver testdata wrote TIMESTAMP(NANOS), which Spark 4 reads

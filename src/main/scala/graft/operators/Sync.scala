@@ -68,6 +68,18 @@ object Sync {
       .agg(array_join(sort_array(collect_list(col("chunk_id"))), ",")
         .as("sig"), count(lit(1)).as("n_chunks"))
 
+  /** The two 30-bit slices of a chunk id's xxhash64 whose per-url sums,
+    * with the url's chunk count, are [[syncRun]]'s diff signature: a
+    * multiset fingerprint that, unlike a sorted id list, aggregates
+    * before the shuffle, so the diff moves a few numbers per url instead
+    * of every stored chunk id. Two chunk multisets of one url compare
+    * equal only when the count and both sums agree, a chance of about
+    * 2^-60 for different content. Each sum stays far below a long's
+    * range (2^30 per chunk). */
+  private def lowSlice(id: Column): Column =
+    xxhash64(id).bitwiseAND((1L << 30) - 1)
+  private def highSlice(id: Column): Column = shiftrightunsigned(xxhash64(id), 34)
+
   /** URL-level diff: status ∈ {new, updated, unchanged} for every
     * incoming url. */
   def urlDiff(s: SparkSession, dir: String): DataFrame =
@@ -237,20 +249,20 @@ object Sync {
     * [[graft.sources.GitCode.codeRun]]: the chunk rows of `processed`
     * (a [[chunksOfUrls]] frame cut down to the docs the run processes)
     * as store rows, plus a `was_embedded` flag. A chunk whose id is
-    * already stored reuses its stored embedding; only new chunk content
-    * reaches the embedder (doc2vec.ts:515-553).
+    * among the `reusable` stored rows reuses its stored embedding; only
+    * new chunk content reaches the embedder (doc2vec.ts:515-553).
     *
-    * Reuse reads only the stored rows of the processed urls. That is
-    * exact: a chunk id hashes its url, so a stored row of any other url
-    * can never match. The same content under a new url (a moved doc)
-    * therefore re-embeds, as the reference's point ids do.
+    * Callers pass the stored rows of the processed urls, or the whole
+    * store when they process every url. Both are exact: a chunk id
+    * hashes its url, so a stored row of any other url can never match.
+    * The same content under a new url (a moved doc) therefore re-embeds,
+    * as the reference's point ids do.
     *
     * Scale: posexplode is a narrow map over the processed docs only;
-    * the store scan passes a broadcast semi-join on url before its
-    * chunk_id dedup, so only the processed urls' stored rows are
-    * shuffled, never the whole store. */
+    * only the reusable rows are deduplicated by chunk_id, so a run that
+    * restricts them to its processed urls never shuffles the store. */
   private[graft] def embedDelta(processed: DataFrame,
-      stored: DataFrame): DataFrame = {
+      reusable: DataFrame): DataFrame = {
     import processed.sparkSession.implicits._
     val rows = processed
       .select(col("url"), col("n_chunks").as("total_chunks"),
@@ -258,11 +270,8 @@ object Sync {
       .select(col("url"), col("pos").as("chunk_index"),
         col("total_chunks"), col("col.chunk_ids").as("chunk_id"),
         col("col.contents").as("content"))
-    val reusable = stored
-      .join(broadcast(processed.select("url")), Seq("url"), "left_semi")
-      .select("chunk_id", "embedding")
-      .dropDuplicates("chunk_id")
-    rows.join(reusable, Seq("chunk_id"), "left")
+    rows.join(reusable.select("chunk_id", "embedding")
+        .dropDuplicates("chunk_id"), Seq("chunk_id"), "left")
       .select(col("url"), col("chunk_index"), col("total_chunks"),
         col("chunk_id"), col("content"), col("embedding"))
       .as[(String, Int, Int, String, String, Option[Array[Float]])]
@@ -274,47 +283,55 @@ object Sync {
         "embedding", "was_embedded")
   }
 
-  /** urls_processed and chunks_embedded of an [[embedDelta]] frame:
-    * each processed url has exactly one chunk 0. */
-  private[graft] def deltaCounters(embedded: DataFrame): DataFrame =
-    embedded.agg(
-      count(when(col("chunk_index") === 0, 1)).as("urls_processed"),
-      coalesce(sum(col("was_embedded").cast("long")), lit(0L))
-        .as("chunks_embedded"))
+  /** chunks_embedded of an [[embedDelta]] frame, counted in one job. */
+  private[graft] def chunksEmbedded(embedded: DataFrame): Long = {
+    import embedded.sparkSession.implicits._
+    embedded.select("was_embedded").as[Boolean].rdd.filter(identity).count()
+  }
 
   /** One complete incremental sync run — the reference's per-source run
     * loop (doc2vec.ts:675-790) composed from the operators above and the
-    * versioned store:
+    * chunk store's commit log:
     *
     *   1. chunk the incoming (url, text) batch into per-doc arrays;
-    *   2. URL-diff its per-url signatures against the current store
-    *      version → new/updated/unchanged/deleted statuses; a batch that
-    *      repeats a url fails here, before anything is written;
+    *   2. URL-diff its per-url chunk fingerprints ([[lowSlice]]) against
+    *      the current store → new/updated/unchanged/deleted statuses; a
+    *      batch that repeats a url fails here, before anything is
+    *      written. The statuses other than `unchanged` come to the
+    *      driver in one action, with the count of the unchanged urls;
     *   3. pick urls to process: new+updated, or ALL incoming when the
     *      previous run never marked `sync_complete` (forceFullSync,
     *      doc2vec.ts:700-712) — the interrupted-sync recovery bypass;
     *   4. chunk-level skip ([[embedDelta]]): chunks whose chunk_id is
     *      already stored reuse their stored embedding; only genuinely
     *      new chunk content reaches the embedder (doc2vec.ts:515-553);
-    *   5. upsert-by-url + guarded obsolete cleanup, written as the next
-    *      complete store version (atomic pointer flip). The visited set
-    *      is the urls that yielded chunks, so a doc edited to blank
-    *      loses its stored chunks on a clean run;
+    *   5. one store commit ([[graft.sources.ChunkStore.commit]]): the
+    *      processed rows, retracting the older rows of the updated urls
+    *      and, when the cleanup guard allows (no network errors, a
+    *      complete scan), of the `deleted` ones — the urls that yielded
+    *      no chunks, so a doc edited to blank loses its stored chunks on
+    *      a clean run. A forced run retracts every url, so it writes a
+    *      new base: its rows, plus the stored rows of the `deleted` urls
+    *      when the guard keeps them. Every run mints one version, an
+    *      empty commit when nothing changed;
     *   6. mark sync complete only on a clean run (hasNetworkErrors
     *      false), so a failed run leaves the force-bypass armed.
     *
     * Returns a one-row counters frame (reference SourceRunStats):
-    * run_id, force_full_sync, items_new/updated/unchanged/deleted,
+    * items_new/updated/unchanged/deleted, run_id, force_full_sync,
     * urls_processed, chunks_embedded, store_version. A url that yields
     * no chunks has no incoming signature, so it is never new or updated
     * and never counts in urls_processed.
     *
     * Scale: three pinned stages, chunk → diff → embed. Chunking is a
-    * narrow map (one row per doc). The diff shuffles one row per url on
-    * each side: the incoming doc rows and the store's chunk ids grouped
-    * by url. Only the processed docs are exploded into chunk rows, and
-    * reuse reads only their urls' stored rows, so embed work follows the
-    * delta. The driver-side work is the version-pointer flip. */
+    * narrow map (one row per doc). The diff shuffles a few numbers per
+    * url on each side: the incoming doc's fingerprint and the store's
+    * partial fingerprint sums; only the changed urls reach the driver.
+    * Only the processed docs are exploded into chunk rows, reuse reads
+    * only their urls' stored rows, and the commit writes only those
+    * rows: embed and write work follow the delta, not the store (but
+    * for a fold, once per [[graft.sources.ChunkStore.MaxLiveDirs]]
+    * commits). */
   def syncRun(s: SparkSession, incoming: DataFrame, storeRoot: String,
       statePath: String, runId: Long, urlPrefix: String = "",
       hasNetworkErrors: Boolean = false, scanIncomplete: Boolean = false,
@@ -326,15 +343,23 @@ object Sync {
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
       .getOrElse(s.emptyDataset[StoredChunk].toDF())
 
-    val storedSig = signatures(storedChunks)
-      .select(col("url"), col("sig").as("stored_sig"))
-    val incomingSig = docs.groupBy("url")
-      .agg(count(lit(1)).as("n_rows"),
-        first(array_join(array_sort(col("chunk_ids")), ",")).as("sig"))
+    val storedSig = storedChunks
+      .groupBy("url").agg(count(lit(1)).as("n"),
+        sum(lowSlice(col("chunk_id"))).as("lo"),
+        sum(highSlice(col("chunk_id"))).as("hi"))
+      .select(col("url"),
+        concat_ws(":", col("n"), col("lo"), col("hi")).as("stored_sig"))
+    def total(slice: Column => Column): Column =
+      aggregate(transform(col("chunk_ids"), slice), lit(0L), _ + _)
+    val incomingSig = docs
+      .select(col("url"), when(col("n_chunks") > 0, concat_ws(":",
+        col("n_chunks"), total(lowSlice), total(highSlice))).as("sig"))
+      .groupBy("url")
+      .agg(count(lit(1)).as("n_rows"), first(col("sig")).as("sig"))
       .select(col("url"),
         when(col("n_rows") > 1, raise_error(
             concat(lit("sync batch repeats url "), col("url"))))
-          .when(col("sig") =!= "", col("sig")).as("sig"))
+          .otherwise(col("sig")).as("sig"))
       .filter(col("sig").isNotNull)
     val joined = incomingSig
       .join(storedSig, Seq("url"), "full_outer")
@@ -345,30 +370,45 @@ object Sync {
           .otherwise("unchanged"))
       .localCheckpoint(true)
 
-    val processed =
-      if (force) docs
-      else docs.join(
-        broadcast(joined.filter(col("status").isin("new", "updated"))
-          .select("url")), Seq("url"), "left_semi")
-    val embedded = embedDelta(processed, storedChunks).localCheckpoint(true)
+    // one job, no shuffle: the changed urls' statuses and the count of
+    // the unchanged ones
+    val (changed, nUnchanged) = joined.select("url", "status")
+      .as[(String, String)].rdd
+      .aggregate((Vector.empty[(String, String)], 0L))(
+        { case ((xs, n), r) =>
+            if (r._2 == "unchanged") (xs, n + 1) else (xs :+ r, n) },
+        { case ((xs, n), (ys, m)) => (xs ++ ys, n + m) })
+    val statuses = changed.groupMap(_._2)(_._1).withDefaultValue(Vector.empty)
+    val upserted = statuses("new") ++ statuses("updated")
+    val cleanup = !hasNetworkErrors && !scanIncomplete
+    val (processed, reusable) =
+      if (force) (docs, storedChunks)
+      else (docs.filter(col("url").isin(upserted: _*)),
+        storedChunks.filter(col("url").isin(upserted: _*)))
+    val embedded = embedDelta(processed, reusable).localCheckpoint(true)
+    val rows = embedded.drop("was_embedded")
 
-    val merged = ChunkStore.upsertByUrl(storedChunks,
-      embedded.drop("was_embedded"))
-    val cleaned = ChunkStore.cleanupObsolete(merged,
-      docs.filter(col("n_chunks") > 0), hasNetworkErrors, scanIncomplete)
-    val version = ChunkStore.writeVersion(s, storeRoot, cleaned)
+    // a forced run rewrites the store as its rows, plus the stored rows
+    // of the urls it did not chunk when the cleanup guard keeps them
+    val version =
+      if (force) ChunkStore.commit(s, storeRoot, Some(
+          if (cleanup) rows
+          else rows.unionByName(storedChunks.join(
+            docs.filter(col("n_chunks") > 0).select("url"), Seq("url"),
+            "left_anti"))), Nil, replace = true)
+      else ChunkStore.commit(s, storeRoot,
+        Option.when(upserted.nonEmpty)(rows),
+        statuses("updated") ++ (if (cleanup) statuses("deleted") else Nil))
     SyncState.markSyncComplete(s, statePath, urlPrefix, runId,
       hasNetworkErrors)
 
-    joined.agg(
-      count(when(col("status") === "new", 1)).as("items_new"),
-      count(when(col("status") === "updated", 1)).as("items_updated"),
-      count(when(col("status") === "unchanged", 1)).as("items_unchanged"),
-      count(when(col("status") === "deleted", 1)).as("items_deleted"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("force_full_sync", lit(force))
-      .crossJoin(deltaCounters(embedded))
-      .withColumn("store_version", lit(version))
+    def n(status: String): Long = statuses(status).size.toLong
+    Seq((n("new"), n("updated"), nUnchanged, n("deleted"), runId, force,
+        upserted.size + (if (force) nUnchanged else 0L),
+        chunksEmbedded(embedded), version))
+      .toDF("items_new", "items_updated", "items_unchanged",
+        "items_deleted", "run_id", "force_full_sync", "urls_processed",
+        "chunks_embedded", "store_version")
   }
 
   /** The FULL sync state machine across three consecutive runs as one

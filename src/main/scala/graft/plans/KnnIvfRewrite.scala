@@ -198,11 +198,11 @@ object KnnIndexRegistry {
           d.getPath.getName match {
             case CellDir(c) if d.isDirectory =>
               Some(c.toInt -> fs.listStatus(d.getPath).toSeq
-                .filter(graft.sources.ChunkStore.isDataFile))
+                .filter(graft.Tables.isDataFile))
             case _ => None
           }
         }.toMap
-        val schema = graft.sources.ChunkStore
+        val schema = graft.Tables
           .footerSchema(s, cells.values.flatten.toSeq)
           .getOrElse(new StructType())
         val e = Entry(seeds, nprobe,

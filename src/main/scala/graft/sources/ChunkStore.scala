@@ -1,16 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-/** The engine's chunk store (SURVEY.md §2.6): a Parquet table partitioned
-  * by `product_name` (≅ one collection per product, reference
-  * database.ts:28), with the reference's two write disciplines:
+/** The engine's chunk store (SURVEY.md §2.6), with the reference's two
+  * write disciplines:
   *
   *   - upsert-by-url (delete-then-reinsert all chunks of a changed
   *     document, doc2vec.ts:1957-1969) so chunk_index/total_chunks stay
@@ -18,30 +13,28 @@ import org.apache.spark.sql.types.StructType
   *   - cleanup guards: obsolete-url deletion is *skipped entirely* when
   *     the scan was incomplete or had network errors
   *     (doc2vec.ts:760-781) — never purge live documents on partial
-  *     information.
+  *     information (the callers decide what to retract).
   *
-  * Without a transactional table format in this build, upsert is
-  * expressed as plan-level replacement (stored minus incoming-urls, union
-  * incoming) written atomically per run directory; on a cluster with
-  * Delta/Iceberg the same plan becomes MERGE / replaceWhere keyed on url.
-  */
+  * Layout: a merge-on-read transaction log on [[TxnLogStore]]'s core. A
+  * store root holds the commits `_log/NNNNN.json` and one data
+  * directory `v<N>` per commit that adds rows. Commit N records the
+  * directory it adds, if any, and the urls it retracts; the snapshot at
+  * N is, for each live `v<i>`, its rows whose url no commit in (i, N]
+  * retracted. An upsert therefore writes only the rows of the urls it
+  * replaces and logs their urls, so a resync costs its delta, as the
+  * reference's upsert-by-url into SQLite or Qdrant does. Version
+  * numbers are commit numbers.
+  *
+  * The fold is bounded by one fixed rule ([[MaxLiveDirs]],
+  * [[MaxRetractedUrls]]): a commit that would pass either bound writes
+  * the folded snapshot as a new base directory instead (a full rewrite)
+  * and removes every older directory from the live set.
+  *
+  * SINGLE WRITER per root: the log's link(2) arbitration rejects a
+  * second commit at the same version, but the data directory `v<N>` is
+  * written before that, so two writers would race on it. The reference
+  * has the same discipline (one sync process per collection). */
 object ChunkStore {
-
-  /** Plan-level upsert: replace every document (url) present in
-    * `incoming`, keep all other stored chunks. */
-  def upsertByUrl(stored: DataFrame, incoming: DataFrame): DataFrame = {
-    val incomingUrls = incoming.select("url").distinct()
-    stored.join(incomingUrls, Seq("url"), "left_anti")
-      .unionByName(incoming)
-  }
-
-  /** Obsolete cleanup with the reference's guards: returns the store
-    * unchanged when the visited set is untrustworthy. */
-  def cleanupObsolete(stored: DataFrame, visitedUrls: DataFrame,
-      hasNetworkErrors: Boolean, scanIncomplete: Boolean): DataFrame =
-    if (hasNetworkErrors || scanIncomplete) stored
-    else stored.join(visitedUrls.select("url").distinct(),
-      Seq("url"), "left_semi")
 
   /** Partitioned by (product_name, version) — the collection scope of
     * SURVEY §1.3 (reference database.ts:28 keys one collection per
@@ -54,175 +47,135 @@ object ChunkStore {
       .partitionBy("product_name", "version")
       .parquet(path)
 
-  // ── Versioned store: the MERGE pattern without a transactional table
-  // format. Data lives in `root/v<N>`; `root/LATEST` names the current
-  // version. An upsert reads the current version, merges at plan level,
-  // writes v<N+1> COMPLETELY, then flips the pointer — readers never
-  // observe a half-written version, and a crashed writer leaves the
-  // store on the old version (the new directory is simply orphaned).
-  // On a cluster with Delta/Iceberg this whole block becomes MERGE.
+  /** Most live data directories a snapshot may have. A read lists
+    * every live directory on the driver and its filter maps each file
+    * to its directory, so the fixed cost of a read grows with the
+    * count; 8 keeps it near a one-directory store's, while a fold, which
+    * rewrites the whole store as every commit did before, runs on at
+    * most one commit in eight. */
+  private[graft] val MaxLiveDirs = 8
 
-  private def latestFile(root: String) = new java.io.File(root, "LATEST")
+  /** Most retract entries a snapshot may carry. Every entry is a url on
+    * the driver and one literal in the read's filter (an `InSet`
+    * shipped with every scan task): 100,000 urls of about 100 bytes
+    * keep that near 10 MB, far above a 1%-edit resync (tens of urls)
+    * and below a rewrite's memory. A commit that would pass it folds,
+    * as one that would pass [[MaxLiveDirs]] does, and a fold resets
+    * both counts. */
+  private[graft] val MaxRetractedUrls = 100000
 
-  /** Current version number, or -1 when the store is empty. The
-    * pointer is authoritative; a missing or unreadable pointer falls
-    * back to scanning the version directories (so a reader racing the
-    * pointer flip, or a store whose pointer write died, still resolves
-    * the newest COMPLETE version — versions are only ever written
-    * before the pointer). Local/HDFS-style rename semantics assumed; on
-    * an object store this whole layout is replaced by a transactional
-    * table format (see class doc). */
-  def latestVersion(root: String): Long = {
-    val f = latestFile(root)
-    val fromPointer: Option[Long] =
-      if (!f.exists) None
-      else scala.util.Try(
-        java.nio.file.Files.readString(f.toPath).trim.toLong).toOption
-    fromPointer.getOrElse {
-      val vs = Option(new java.io.File(root).listFiles()).getOrElse(Array())
-        .filter(d => d.isDirectory && d.getName.matches("v\\d+"))
-        .map(_.getName.substring(1).toLong)
-      if (vs.isEmpty) -1L else vs.max
-    }
-  }
+  /** Current version number (the newest commit), or -1 for an empty
+    * store. */
+  def latestVersion(root: String): Long = TxnLogStore.latestVersion(root)
 
-  /** Current contents, or None for an empty store. The read runs no
-    * Spark job: a `v<N>` directory is immutable once `LATEST` names it,
-    * so its schema is taken from one footer on the driver
-    * ([[footerSchema]]) and handed to the reader, which then lists the
-    * directory and nothing else. Nothing is cached between calls, so a
-    * store deleted and re-synced (its version numbers repeat) reads its
-    * new rows. */
-  def readLatest(spark: SparkSession, root: String): Option[DataFrame] = {
-    val v = latestVersion(root)
-    if (v < 0) None
-    else {
-      val dir = s"$root/v$v"
-      val p = new Path(dir)
-      val files = p.getFileSystem(spark.sessionState.newHadoopConf())
-        .listStatus(p).toSeq
-      Some(footerSchema(spark, files).fold(spark.read)(spark.read.schema)
-        .parquet(dir))
-    }
-  }
+  /** Current contents, or None for an empty store. */
+  def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
+    readVersion(spark, root, latestVersion(root))
 
-  /** A file Spark's listing keeps as data: not hidden (`_` or `.`
-    * prefix) and not a copy in flight. */
-  private[graft] def isDataFile(f: FileStatus): Boolean = {
-    val n = f.getPath.getName
-    f.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-      !n.endsWith("._COPYING_")
-  }
+  /** Contents as of commit `version` (time travel), or None when that
+    * snapshot has no data directory. The log is folded on the driver and
+    * the live `v<i>` are listed and read with the schema of one footer
+    * ([[graft.Tables.footerSchema]]), so the read runs no Spark job: the
+    * result is the rows of each `v<i>` whose url no commit after i
+    * retracted. Nothing is cached between calls, so a store deleted and
+    * re-synced (its version numbers repeat) reads its new rows. */
+  def readVersion(spark: SparkSession, root: String,
+      version: Long): Option[DataFrame] =
+    readSnapshot(spark, root, TxnLogStore.snapshot(root, version))
 
-  /** The schema Spark infers for a non-merged parquet read of `files`,
-    * without its inference job: the footer of the first data file by
-    * path, its `org.apache.spark.sql.parquet.row.metadata` (or, from a
-    * writer other than Spark, the converted parquet schema). None when
-    * no file is data, so the caller leaves inference, and its error
-    * for an empty directory, to Spark. */
-  private[graft] def footerSchema(spark: SparkSession,
-      files: Seq[FileStatus]): Option[StructType] =
-    files.filter(isDataFile).sortBy(_.getPath.toString).headOption.map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
-      val footer = try reader.getFooter finally reader.close()
-      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  /** One scan over every live directory, so Spark packs their small
+    * files into few tasks, minus the rows whose url a commit after
+    * their directory's retracted. A row's directory is looked up by its
+    * `_metadata.file_name` (every file of the store comes from a Spark
+    * write, whose file names carry the write's unique job id), and each
+    * retracted url is one literal, tested against the directories
+    * older than its retraction. */
+  private def readSnapshot(spark: SparkSession, root: String,
+      snap: TxnLogStore.Snapshot): Option[DataFrame] =
+    Option.when(snap.live.nonEmpty) {
+      val conf = spark.sessionState.newHadoopConf()
+      val dirs = snap.live.map { case (dir, gone) =>
+        val p = new Path(root, dir)
+        (p, p.getFileSystem(conf).listStatus(p).toSeq
+          .filter(graft.Tables.isDataFile), gone)
+      }
+      val scan = graft.Tables.footerSchema(spark, dirs.flatMap(_._2))
+        .fold(spark.read)(spark.read.schema)
+        .parquet(dirs.map(_._1.toString): _*)
+      val dirOf = typedLit(dirs.zipWithIndex.flatMap { case ((_, fs, _), i) =>
+        fs.map(_.getPath.getName -> i) }.toMap).apply(col("_metadata.file_name"))
+      val dead = dirs.zipWithIndex.collect { case ((_, _, gone), i)
+          if gone.nonEmpty => dirOf <= i && col("url").isin(gone.toSeq: _*)
+      }
+      dead.reduceOption(_ || _)
+        .fold(scan)(d => scan.filter(!coalesce(d, lit(false))))
     }
 
-  /** Upsert-by-url into the versioned store; returns the new version.
-    * Idempotent per incoming batch (re-running the same batch rewrites
-    * the same urls to the same contents), which is exactly what an
-    * at-least-once streaming sink needs.
+  /** The one write path of the store: commit `rows` (every row of the
+    * urls they carry) and retract the older rows of `retract`, as the
+    * next version; returns it. `replace` drops every older row instead
+    * (a forced full sync retracts every url). A commit with no rows and
+    * nothing to retract still mints its version.
     *
-    * SINGLE-WRITER assumed: two concurrent upserts would both read
-    * version N and race writing v(N+1) — last pointer flip wins and the
-    * other batch's rows are silently dropped. The reference has the
-    * same discipline (one sync process per collection); under a
-    * multi-writer scheduler, serialize per store root or use a
-    * transactional table format (Delta/Iceberg MERGE). */
-  def upsertVersioned(spark: SparkSession, root: String,
-      incoming: DataFrame): Long = {
-    val merged = readLatest(spark, root) match {
-      case Some(stored) => upsertByUrl(stored, incoming)
-      case None => incoming
-    }
-    writeVersion(spark, root, merged)
-  }
-
-  /** Write `contents` as the next complete version and flip the
-    * pointer. The building block under upsertVersioned; callers that
-    * compute their own merge (e.g. a sync run that also deletes
-    * obsolete urls) use this directly. */
-  def writeVersion(spark: SparkSession, root: String,
-      contents: DataFrame): Long = {
-    val next = latestVersion(root) + 1
-    contents.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
-    // atomic pointer flip: write a temp file, then ATOMIC_MOVE over
-    // LATEST — a reader never observes a truncated pointer (and the
-    // directory-scan fallback in latestVersion covers a writer that
-    // died between the data write and the flip)
-    val f = latestFile(root)
-    f.getParentFile.mkdirs()
-    val tmp = new java.io.File(root, s"LATEST.tmp$next")
-    java.nio.file.Files.writeString(tmp.toPath, next.toString)
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    * Cost: `rows` are written as `v<N>`, and the log gets one line per
+    * retracted url. A commit that finds no live directory, that
+    * replaces, or that would pass [[MaxLiveDirs]] or
+    * [[MaxRetractedUrls]] writes the folded snapshot (older rows minus
+    * `retract`, plus `rows`) as the base `v<N>` and removes the older
+    * directories from the live set: that is the full rewrite every
+    * commit paid before, now paid once per bound. A crash after the data
+    * write and before the log append leaves an orphan `v<N>` that no
+    * snapshot reads; the next commit at N overwrites it. */
+  private[graft] def commit(spark: SparkSession, root: String,
+      rows: Option[DataFrame], retract: Seq[String],
+      replace: Boolean = false): Long = {
+    val head = latestVersion(root)
+    val snap = TxnLogStore.snapshot(root, head)
+    val next = head + 1
+    val dir = s"v$next"
+    val fold = replace || snap.live.isEmpty ||
+      snap.live.size + rows.size > MaxLiveDirs ||
+      snap.pending + retract.size > MaxRetractedUrls
+    val contents =
+      if (!fold) rows
+      else {
+        val kept = if (replace) None else readSnapshot(spark, root, snap)
+          .map(df => if (retract.isEmpty) df
+            else df.filter(!col("url").isin(retract: _*)))
+        (kept ++ rows).reduceOption(_ unionByName _)
+      }
+    contents.foreach(_.write.mode(SaveMode.Overwrite).parquet(s"$root/$dir"))
+    TxnLogStore.commit(root, next, contents.map(_ => dir).toSeq,
+      if (fold) snap.live.map(_._1) else Nil,
+      if (fold) Nil else retract)
     next
   }
 
-  /** Version retention: delete all but the newest `keepLast` version
-    * directories (plus any stranded pointer temp files). The versioned
-    * layout trades write simplicity for a FULL copy per upsert — at
-    * 100 TB, retention is what keeps the store from growing by one
-    * corpus per sync. `keepLast >= 2` leaves the previous version
-    * intact for a reader that resolved the pointer just before a flip;
-    * the LATEST pointer itself is never touched. Single-writer
-    * discipline applies, same as [[upsertVersioned]]; as a belt-and-
-    * braces guard against a vacuum racing an in-flight pointer flip,
-    * stranded `LATEST.tmp*` files are only reaped once older than
-    * `tmpMaxAgeMs` (a live flip's temp file exists for milliseconds).
-    * Returns the deleted version ids. */
-  def vacuumVersions(root: String, keepLast: Int = 2,
-      tmpMaxAgeMs: Long = 60000L): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val dir = new java.io.File(root)
-    val versions = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.matches("v\\d+"))
-      .map(_.getName.substring(1).toLong).sorted.toSeq
-    val doomed = versions.dropRight(keepLast)
-    doomed.foreach { v =>
-      val p = new java.io.File(root, s"v$v").toPath
-      val walk = java.nio.file.Files.walk(p)
-      try
-        walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => { java.nio.file.Files.delete(q); () })
-      finally walk.close()
-    }
-    val cutoff = System.currentTimeMillis() - tmpMaxAgeMs
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith("LATEST.tmp")
-        && f.lastModified() < cutoff)
-      .foreach(_.delete())
-    doomed
+  /** Upsert-by-url: `incoming` replaces every stored row of the urls it
+    * carries; returns the new version. Idempotent per incoming batch
+    * (re-running the same batch commits the same urls with the same
+    * contents), which is exactly what an at-least-once streaming sink
+    * needs. */
+  def upsertVersioned(spark: SparkSession, root: String,
+      incoming: DataFrame): Long = {
+    val rows = incoming.localCheckpoint(true)
+    val urls = rows.select("url").distinct().collect().map(_.getString(0))
+    commit(spark, root, Some(rows), urls.toSeq)
   }
 
-  /** Snapshot-isolation (time-travel) report over the versioned store:
-    * three upserts build versions v0..v2 — inserts plus planted
-    * UPDATES (`doc_id % 6 = 0` re-written in the second upsert,
-    * `% 6 = 3` in the third) — and then every historical version is
-    * read back AS OF its pointer. The full-version layout makes time
-    * travel a directory read (Delta/Iceberg resolve the same question
-    * through their log); this row pins that versions are genuinely
-    * immutable snapshots: a later upsert that leaked into an earlier
-    * version's directory, a merge that dropped an update, or a
-    * pointer off-by-one all shift a sum. The DuckDB oracle re-derives
-    * every snapshot's membership and content lengths from the
-    * construction arithmetic.
-    *
-    * Scale: each upsert is the plan-level MERGE (anti-join + union —
-    * one shuffle on url); reports are one aggregate per version. */
+  /** Version retention: delete every data directory that no snapshot
+    * among the newest `keepLast` versions reads ([[TxnLogStore.vacuum]]),
+    * an orphan a crashed commit left included, and return their version
+    * ids. A directory is live from its commit until a fold removes it,
+    * so most directories outlive many versions. The log is kept: time
+    * travel to a version before the horizon fails at read.
+    * Single-writer discipline, as for [[commit]]. */
+  def vacuumVersions(root: String, keepLast: Int = 2): Seq[Long] = {
+    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
+    TxnLogStore.vacuum(root, latestVersion(root) - keepLast + 1)
+      .map(_.substring(1).toLong).sorted
+  }
+
   /** Stage the shared three-upsert fixture of [[timeTravelReport]] and
     * [[changeFeedReport]] under `root`: inserts per `doc_id % 3`
     * residue, planted UPDATES (`% 6 = 0` re-written in the second
@@ -242,13 +195,26 @@ object ChunkStore {
     Seq(b0, b1, b2).foreach(b => upsertVersioned(s, root, b))
   }
 
+  /** Snapshot-isolation (time-travel) report over the versioned store:
+    * three upserts build versions v0..v2 — inserts plus planted
+    * UPDATES (`doc_id % 6 = 0` re-written in the second upsert,
+    * `% 6 = 3` in the third) — and then every historical version is
+    * read back AS OF its commit ([[readVersion]]). This row pins that
+    * versions are genuinely immutable snapshots: a later upsert that
+    * leaked into an earlier version, a merge that dropped an update, a
+    * retraction folded into the wrong version, or a commit off-by-one
+    * all shift a sum. The DuckDB oracle re-derives every snapshot's
+    * membership and content lengths from the construction arithmetic.
+    *
+    * Scale: each upsert writes only its batch and logs its urls;
+    * reports are one aggregate per version. */
   def timeTravelReport(s: SparkSession, dir: String): DataFrame = {
     val base = java.nio.file.Files.createTempDirectory("ttravel")
     try {
       val root = s"$base/store"
       buildVersionedFixture(s, dir, root)
       (0L to 2L).map { v =>
-        s.read.parquet(s"$root/v$v").agg(
+        readVersion(s, root, v).get.agg(
           lit(v).as("version"), count(lit(1)).as("n_urls"),
           sum(col("doc_id")).as("sum_doc_id"),
           sum(length(col("text")).cast("long")).as("sum_len"))
@@ -279,10 +245,10 @@ object ChunkStore {
       val root = s"$base/store"
       buildVersionedFixture(s, dir, root)
       (0L to 1L).map { v =>
-        val prev = s.read.parquet(s"$root/v$v")
+        val prev = readVersion(s, root, v).get
           .select(col("url"), col("doc_id").as("id_a"),
             col("text").as("text_a"))
-        val next = s.read.parquet(s"$root/v${v + 1}")
+        val next = readVersion(s, root, v + 1).get
           .select(col("url"), col("doc_id").as("id_b"),
             col("text").as("text_b"))
         prev.join(next, Seq("url"), "full_outer")
@@ -380,17 +346,4 @@ object ChunkStore {
       .withColumn("created_at", coalesce(col("created_at"), lit("")))
       .orderBy("chunk_id")
   }
-
-  /** Bucketed variant: 8 buckets on url, sorted by chunk_index within
-    * each bucket. At scale this co-locates all of a document's chunks
-    * (and two bucketed tables joined on url skip the shuffle entirely —
-    * the right layout for the url-diff joins of §2.5). Bucketing
-    * requires a managed table (`saveAsTable`). */
-  def writeBucketed(df: DataFrame, table: String,
-      nBuckets: Int = 8): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(nBuckets, "url")
-      .sortBy("url", "chunk_index")
-      .format("parquet")
-      .saveAsTable(table)
 }

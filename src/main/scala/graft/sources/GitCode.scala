@@ -103,13 +103,15 @@ object GitCode {
     *      (doc2vec.ts:515-553), and a RENAME re-embeds (the chunk
     *      identity is url-scoped), exactly as the reference's point
     *      ids do;
-    *   5. store update: upsert-by-url, then incremental runs purge
-    *      the diff's delete URLs while FULL runs purge every stored url
-    *      the scan did not chunk (removeObsoleteFiles,
-    *      doc2vec.ts:1305-1316) — written as the next complete store
-    *      version. Both purge a processed file that chunks to nothing
-    *      (a file edited to empty), as `Sync.syncRun`'s cleanup does;
-    *      it counts in `urls_deleted`;
+    *   5. store update, one commit
+    *      ([[ChunkStore.commit]]): incremental runs upsert the processed
+    *      files and retract the stored rows of them and of the diff's
+    *      delete URLs, while FULL runs replace the store with the
+    *      chunked scan, purging every stored url it did not chunk
+    *      (removeObsoleteFiles, doc2vec.ts:1305-1316). Both purge a
+    *      processed file that chunks to nothing (a file edited to
+    *      empty), as `Sync.syncRun`'s cleanup does; it counts in
+    *      `urls_deleted`;
     *   6. advance the SHA watermark to HEAD (doc2vec.ts:1320-1325).
     *
     * `tree` is the worktree scan at HEAD as (path relative to
@@ -119,9 +121,11 @@ object GitCode {
     * run_id, mode, files_processed, chunks_embedded, urls_deleted,
     * store_version.
     *
-    * Scale: the allowed-set gate and both cleanup forms are url-keyed
-    * joins; per-run cost tracks the DIFF (changed files + their
-    * chunks), never the repo — the reference's cost model. */
+    * Scale: the allowed-set gate is a url-keyed semi-join, and the
+    * processed files come to the driver as (url, chunk count) pairs;
+    * an incremental run's reuse, retraction and commit follow the DIFF
+    * (changed files + their chunks), never the repo — the reference's
+    * cost model. A FULL run lists the stored urls to count its purge. */
   def codeRun(s: SparkSession, tree: DataFrame, storeRoot: String,
       statePath: String, runId: Long, headSha: String,
       diffOutput: Option[String], repoPath: String,
@@ -155,43 +159,53 @@ object GitCode {
       case None => files
     }
     // per-file URL through the real kernel (typed map: pure function),
-    // chunked and PINNED once: the chunk rows, files_processed and the
-    // full-mode cleanup all read this frame
+    // chunked and PINNED once: the chunk rows and the driver-side file
+    // list both read this frame
     val docs = Sync.chunksOfUrls(processFiles.as[(String, String)]
       .map { case (p, t) =>
         (codeFileUrl(p, repoPath, None, Some(urlPrefix)), t)
       }.toDF("url", "text"), 128).localCheckpoint(true)
+    // the processed files on the driver: files_processed, the urls to
+    // upsert and the files that chunk to nothing
+    val processed = docs.select("url", "n_chunks").as[(String, Int)].collect()
+    val chunked = processed.collect { case (u, n) if n > 0 => u }.toSeq
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
       .getOrElse(s.emptyDataset[StoredChunk].toDF())
-    val embedded = Sync.embedDelta(docs, storedChunks).localCheckpoint(true)
+    val embedded = Sync.embedDelta(docs,
+        if (mode == "full") storedChunks
+        else storedChunks.filter(col("url").isin(chunked: _*)))
+      .localCheckpoint(true)
     val newRows = embedded.drop("was_embedded")
-    val filesProcessed = docs.count()
 
-    val merged = ChunkStore.upsertByUrl(storedChunks, newRows)
-    val storedUrls = storedChunks.select("url").distinct()
-    val (cleaned, urlsDeleted) =
+    val (version, urlsDeleted) =
       if (mode == "full") {
-        val chunkedUrls = docs.filter(col("n_chunks") > 0).select("url")
-        val removed = storedUrls
-          .join(chunkedUrls, Seq("url"), "left_anti").count()
-        (merged.join(chunkedUrls, Seq("url"), "left_semi"), removed)
+        // the whole store becomes the chunked scan: every stored url it
+        // did not chunk is purged
+        val stored = storedChunks.select("url").distinct().as[String]
+          .collect().toSet
+        (ChunkStore.commit(s, storeRoot, Some(newRows), Nil, replace = true),
+          (stored -- chunked).size.toLong)
       } else {
-        val delDf = deleteUrls.toDF("url")
-          .unionByName(docs.filter(col("n_chunks") === 0).select("url"))
+        val gone = (deleteUrls ++ processed.collect { case (u, 0) => u }).toSet
+        val upserted = chunked.filterNot(gone)
+        val stale =
+          if (chunked.isEmpty && gone.isEmpty) Set.empty[String]
+          else storedChunks.filter(col("url").isin(chunked ++ gone: _*))
+            .select("url").as[String].collect().toSet
         // reference counters count urls whose delete actually removed
         // chunks (doc2vec.ts:1270-1273), not every requested url
-        val removed = storedUrls.join(delDf, Seq("url"), "left_semi")
-          .count()
-        (merged.join(delDf, Seq("url"), "left_anti"), removed)
+        (ChunkStore.commit(s, storeRoot,
+          Option.when(upserted.nonEmpty)(
+            if (upserted.size == chunked.size) newRows
+            else newRows.filter(!col("url").isin(gone.toSeq: _*))),
+          stale.toSeq), (stale & gone).size.toLong)
       }
-
-    val version = ChunkStore.writeVersion(s, storeRoot, cleaned)
     SyncState.setMetadata(s, statePath, shaKey, headSha, runId)
 
-    Sync.deltaCounters(embedded).select(lit(runId).as("run_id"),
-      lit(mode).as("mode"), lit(filesProcessed).as("files_processed"),
-      col("chunks_embedded"), lit(urlsDeleted).as("urls_deleted"),
-      lit(version).as("store_version"))
+    Seq((runId, mode, processed.length.toLong, Sync.chunksEmbedded(embedded),
+        urlsDeleted, version))
+      .toDF("run_id", "mode", "files_processed", "chunks_embedded",
+        "urls_deleted", "store_version")
   }
 
   /** The GitHub code source's FULL state machine across four syncs as

@@ -4,41 +4,52 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
-/** Transaction-log table layout — the third store discipline in this
-  * engine, completing the spectrum:
+/** Transaction-log table layout: commits as ordered JSON action files
+  * `_log/NNNNN.json` over immutable data files, where the snapshot at
+  * version v is the fold of commits 0..v — the Delta/Iceberg layout,
+  * scaled down to its essence. Three actions exist:
   *
-  *   - full-version copies ([[ChunkStore.upsertVersioned]]): O(table)
-  *     per commit, trivial time travel;
-  *   - merge-on-read tombstones (the `stream_mv_parity` store):
-  *     O(delta) writes, reads reconstruct;
-  *   - TRANSACTION LOG (this): O(delta) commits as ordered JSON action
-  *     files (`add` / `remove` of immutable data files), where a
-  *     snapshot at version v is the fold of actions 0..v — the
-  *     Delta/Iceberg layout, scaled down to its essence. Data files
-  *     are immutable; logical deletes and rewrites are log entries;
-  *     readers at any version see exactly the files its prefix of the
-  *     log retains.
+  *   - `add` a data file (or directory) to the live set;
+  *   - `remove` one from the live set (a rewrite or a compaction);
+  *   - `retract` a url: rows of that url in files added BEFORE the
+  *     retracting commit drop out of every later snapshot. This is the
+  *     merge-on-read half of the layout; the chunk store
+  *     ([[ChunkStore]]) upserts by adding the new rows of a url and
+  *     retracting its older ones.
   *
-  * The row stages three commits over document slices (add A+B; add C
-  * while removing A — a rewrite; add D) and reads EVERY version back by
-  * folding the log — the DuckDB oracle re-derives each snapshot's
-  * membership from the slice arithmetic, so a mis-folded remove, a
-  * commit applied out of order, or a snapshot reading an evicted file
-  * all shift a sum.
+  * Data files are immutable; logical deletes and rewrites are log
+  * entries; readers at any version see exactly what its prefix of the
+  * log retains. Every action line is written and read with Jackson, so
+  * a file name or url holding quotes, backslashes, newlines or any
+  * other character round-trips.
+  *
+  * The four txn rows stage three commits over document slices (add A+B;
+  * add C while removing A — a rewrite; add D) and read EVERY version
+  * back by folding the log — the DuckDB oracle re-derives each
+  * snapshot's membership from the slice arithmetic, so a mis-folded
+  * remove, a commit applied out of order, or a snapshot reading an
+  * evicted file all shift a sum.
   *
   * Scale: a commit writes one action file + the new data files
   * (O(delta)); a snapshot read is a log fold (metadata-scale) + a scan
   * of exactly the retained files. */
 object TxnLogStore {
 
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def action(act: String, field: String, value: String): String =
+    json.writeValueAsString(json.createObjectNode()
+      .put("act", act).put(field, value))
+
   /** Append one commit (ordered action file `NNNNN.json`). */
   private[graft] def commit(root: String, version: Long,
-      adds: Seq[String], removes: Seq[String]): Unit = {
+      adds: Seq[String], removes: Seq[String],
+      retracts: Seq[String] = Nil): Unit = {
     val dir = new java.io.File(s"$root/_log")
     dir.mkdirs()
-    val lines =
-      adds.map(f => s"""{"act":"add","file":"$f"}""") ++
-        removes.map(f => s"""{"act":"remove","file":"$f"}""")
+    val lines = adds.map(action("add", "file", _)) ++
+      removes.map(action("remove", "file", _)) ++
+      retracts.map(action("retract", "url", _))
     val tmp = new java.io.File(dir,
       f"$version%05d.json.tmp${java.lang.Thread.currentThread().getId}%d")
     java.nio.file.Files.writeString(tmp.toPath, lines.mkString("\n"))
@@ -51,9 +62,7 @@ object TxnLogStore {
     finally java.nio.file.Files.deleteIfExists(tmp.toPath)
   }
 
-  /** Optimistic-concurrency commit — the multi-writer discipline the
-    * full-version store explicitly disclaims
-    * ([[ChunkStore.upsertVersioned]] is single-writer by contract):
+  /** Optimistic-concurrency commit — the multi-writer discipline:
     * read the latest version, attempt version+1, and let the
     * FILESYSTEM arbitrate — link(2) onto an existing action
     * file fails, so exactly one of two racing writers wins each
@@ -84,36 +93,58 @@ object TxnLogStore {
     * become invisible to its own readers (which would stall
     * [[latestVersion]] and make [[commitOptimistic]] exhaust retries
     * against its own commit). */
-  private def actionFiles(root: String): Array[java.io.File] =
+  private def actionFiles(root: String): Array[(Long, java.io.File)] =
     Option(new java.io.File(s"$root/_log").listFiles())
       .getOrElse(Array.empty)
       .filter(_.getName.matches("\\d+\\.json"))
-      .sortBy(_.getName.stripSuffix(".json").toLong)
+      .map(f => f.getName.stripSuffix(".json").toLong -> f)
+      .sortBy(_._1)
 
   /** Highest committed version in the log (-1 when empty). */
-  private[graft] def latestVersion(root: String): Long = {
-    val fs = actionFiles(root)
-    if (fs.isEmpty) -1L
-    else fs.map(_.getName.stripSuffix(".json").toLong).max
+  private[graft] def latestVersion(root: String): Long =
+    actionFiles(root).lastOption.fold(-1L)(_._1)
+
+  /** The fold of a log prefix: the live files in the order they were
+    * added, each with the urls retracted after it was added and before
+    * the next live file was, and `pending`, the number of retract
+    * entries that still apply to some live file (what a reader filters
+    * on). A retract applies to every live file added before it, so the
+    * urls retracted from file i are those listed with files i and
+    * later: each entry is listed once. */
+  private[graft] final case class Snapshot(
+      live: Vector[(String, Set[String])], pending: Int)
+
+  /** Fold commits 0..`version`. Retract entries older than every live
+    * file apply to nothing and are dropped, so a commit that removes
+    * every live file (a rewrite) resets the fold. */
+  private[graft] def snapshot(root: String, version: Long): Snapshot = {
+    val (live, retracts) = actionFiles(root).takeWhile(_._1 <= version)
+      .foldLeft((Vector.empty[(String, Long)],
+          Vector.empty[(Long, Vector[String])])) {
+        case ((files, gone), (v, f)) =>
+          val acts = java.nio.file.Files.readString(f.toPath)
+            .split("\n").filter(_.nonEmpty).map(json.readTree)
+          def values(act: String, field: String) = acts.toVector
+            .filter(_.get("act").asText == act).map(_.get(field).asText)
+          val removes = values("remove", "file").toSet
+          val kept = (files ++ values("add", "file").map(_ -> v))
+            .filterNot(x => removes.contains(x._1))
+          val urls = values("retract", "url")
+          (kept, if (urls.isEmpty) gone else gone :+ (v -> urls))
+      }
+    val oldest = live.map(_._2).minOption.getOrElse(Long.MaxValue)
+    val pending = retracts.filter(_._1 > oldest)
+    val until = live.drop(1).map(_._2) :+ Long.MaxValue
+    Snapshot(live.zip(until).map { case ((f, added), next) =>
+        f -> pending.filter(r => r._1 > added && r._1 <= next)
+          .flatMap(_._2).toSet },
+      pending.map(_._2.size).sum)
   }
 
   /** Live file set at `version`: fold of the ordered log prefix. */
   private[graft] def liveFiles(s: SparkSession, root: String,
-      version: Long): Seq[String] = {
-    val actions = actionFiles(root)
-      .takeWhile(_.getName.stripSuffix(".json").toLong <= version)
-    actions.foldLeft(Vector.empty[String]) { (live, f) =>
-      val lines = java.nio.file.Files.readString(f.toPath)
-        .split("\n").filter(_.nonEmpty)
-      lines.foldLeft(live) { (acc, l) =>
-        // minimal, dependency-free action parse (fields are paths the
-        // writer itself produced — no escaping needed)
-        val file = l.split("\"file\":\"")(1).takeWhile(_ != '"')
-        if (l.contains("\"act\":\"add\"")) acc :+ file
-        else acc.filterNot(_ == file)
-      }
-    }
-  }
+      version: Long): Seq[String] =
+    snapshot(root, version).live.map(_._1)
 
   /** Stage the immutable data files of the three-commit fixture. */
   private def stageDataFiles(s: SparkSession, dir: String,
@@ -278,11 +309,10 @@ object TxnLogStore {
     * now fails at read, which is exactly Delta VACUUM's contract).
     * Returns the deleted file names. Metadata-scale: a log fold per
     * retained version. */
-  private[graft] def vacuum(s: SparkSession, root: String,
-      retainFrom: Long): Seq[String] = {
+  private[graft] def vacuum(root: String, retainFrom: Long): Seq[String] = {
     val head = latestVersion(root)
     val referenced = (retainFrom to head)
-      .flatMap(v => liveFiles(s, root, v)).toSet
+      .flatMap(v => snapshot(root, v).live.map(_._1)).toSet
     val onDisk = Option(new java.io.File(root).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName != "_log")
@@ -317,7 +347,7 @@ object TxnLogStore {
         .count(f => f.isDirectory && f.getName != "_log").toLong
       val before = diskFiles
       val head = latestVersion(root)
-      val deleted = vacuum(s, root, retainFrom = head)
+      val deleted = vacuum(root, retainFrom = head)
       val after = diskFiles
       s.read.schema("doc_id LONG")
         .parquet(liveFiles(s, root, head).map(f => s"$root/$f"): _*)

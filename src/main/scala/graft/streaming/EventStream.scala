@@ -99,19 +99,22 @@ object EventStream {
         col("user_id"), col("n_events"), col("total_value"))
 
   /** An EMPTY micro-batch (a trigger that found only empty files, or a
-    * replayed no-op) must not mint a store version: the versioned
-    * layout writes a FULL copy per version, so a quiet stream would
-    * otherwise grow the store by one corpus per trigger doing nothing.
-    * take(1) is a bounded action — never a full count of the batch. */
+    * replayed no-op) must not mint a store version: every version is a
+    * commit, so a quiet stream would otherwise grow the log by one
+    * commit per trigger doing nothing and fold the store once per
+    * [[graft.sources.ChunkStore.MaxLiveDirs]] triggers. take(1) is a
+    * bounded action — never a full count of the batch. */
   private def batchIsEmpty(
       batch: Dataset[org.apache.spark.sql.Row]): Boolean =
     batch.take(1).isEmpty
 
   /** Post-merge retention for the streaming sinks: with `keepLast`
-    * set, all but the newest N versions are vacuumed after each merge
-    * — a long-running stream otherwise accumulates one full store
-    * copy per micro-batch ([[graft.sources.ChunkStore.vacuumVersions]]
-    * keeps ≥2 so a reader racing the pointer flip stays safe). */
+    * set, the data directories no snapshot among the newest N versions
+    * reads are vacuumed after each merge — a long-running stream
+    * otherwise keeps every folded-away directory
+    * ([[graft.sources.ChunkStore.vacuumVersions]]; ≥2 keeps the
+    * previous snapshot whole for a reader that resolved it just before
+    * the commit). */
   private def maybeVacuum(storeRoot: String,
       keepLast: Option[Int]): Unit =
     keepLast.foreach { k =>
@@ -231,17 +234,15 @@ object EventStream {
   /** Streaming DELETION sink — the 404/deleted-url purge path as a
     * stream: each micro-batch of tombstone urls (a crawl's 404
     * responses, an S3 listing's deleted keys) removes those urls'
-    * chunks from the versioned store, the same
-    * stored-anti-join-tombstones plan the batch cleanup uses
-    * ([[graft.operators.Sync.cleanup]]; reference markdown-store
-    * 404-delete, doc2vec.ts:1973-1986). Idempotent per url set —
-    * re-deleting an absent url is a no-op in CONTENT and in STORAGE:
-    * a micro-batch whose tombstones match nothing in the store (probed
-    * with a semi-join `take(1)` before rewriting) mints no version, so
-    * a long-running 404 stream of absent urls cannot grow the store by
-    * one full copy per no-op batch. At-least-once redelivery thus
-    * converges, matching [[ingestStream]]'s contract. An empty store
-    * stays empty (no version is ever minted). */
+    * chunks from the chunk store by one commit that retracts them
+    * (reference markdown-store 404-delete, doc2vec.ts:1973-1986).
+    * Idempotent per url set — re-deleting an absent url is a no-op in
+    * CONTENT and in STORAGE: the batch's urls come to the driver, one
+    * action finds those the store holds, and a micro-batch whose
+    * tombstones match nothing mints no version, so a long-running 404
+    * stream of absent urls cannot grow the log. At-least-once
+    * redelivery thus converges, matching [[ingestStream]]'s contract.
+    * An empty store stays empty (no version is ever minted). */
   def deleteStream(tombstones: DataFrame, storeRoot: String,
       checkpointDir: String, vacuumKeepLast: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -251,15 +252,12 @@ object EventStream {
         val s = batch.sparkSession
         if (!batchIsEmpty(batch)) {
           graft.sources.ChunkStore.readLatest(s, storeRoot).foreach { stored =>
-            val urls = batch.select("url").distinct().localCheckpoint(true)
-            // no-op probe: a batch-sized broadcast semi-join that stops
-            // at the first hit — absent-url batches touch no storage
-            val hits = stored
-              .join(org.apache.spark.sql.functions.broadcast(urls),
-                Seq("url"), "left_semi")
-            if (hits.take(1).nonEmpty) {
-              graft.sources.ChunkStore.writeVersion(s, storeRoot,
-                stored.join(urls, Seq("url"), "left_anti"))
+            import s.implicits._
+            val urls = batch.select("url").distinct().as[String].collect()
+            val hits = stored.filter(col("url").isin(urls.toSeq: _*))
+              .select("url").distinct().as[String].collect()
+            if (hits.nonEmpty) {
+              graft.sources.ChunkStore.commit(s, storeRoot, None, hits.toSeq)
               maybeVacuum(storeRoot, vacuumKeepLast)
             }
           }

@@ -1,38 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.operators.Chunker
-import graft.sources.ChunkStore
+import graft.sources.{ChunkStore, TxnLogStore}
 
-/** Bucketed chunk store: url-bucketed layout lets the url-keyed diff
-  * joins of §2.5 run shuffle-free between two bucketed tables. */
-class BucketedStoreSpec extends SparkSuite(cpus = 2, conf = Seq(
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("wh").toString)) {
-
-  test("bucketed write round-trips and the bucket spec is recorded") {
-    import spark.implicits._
-    val chunks = Seq("doc://a", "doc://b", "doc://c")
-      .map(u => u -> ("# T\n\n" + s"content for $u. " * 60))
-      .toDF("url", "md").as[(String, String)]
-      .flatMap { case (u, md) =>
-        Chunker.chunkMarkdown(md, "P", "1.0", u)
-      }
-    ChunkStore.writeBucketed(chunks.toDF(), "chunks_bucketed")
-    val back = spark.table("chunks_bucketed")
-    assert(back.count() == chunks.count())
-    val ddl = spark.sql("SHOW CREATE TABLE chunks_bucketed")
-      .head().getString(0)
-    assert(ddl.contains("CLUSTERED BY (url)"))
-    assert(ddl.contains("8 BUCKETS"))
-
-    // a self-join on the bucketed key plans without an exchange on the
-    // bucketed side (the point of the layout)
-    val joined = back.as("x").join(back.as("y"), Seq("url"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning(url"),
-      s"unexpected shuffle on bucketed join:\n$plan")
-  }
+/** Chunk-store surface outside the sync path: the chunk inspector, the
+  * legacy-schema fallbacks, version retention and the sync flag. */
+class BucketedStoreSpec extends SparkSuite(cpus = 2) {
 
   test("chunk inspector: created_at join, null-last order, 500 cap") {
     import spark.implicits._
@@ -93,46 +65,47 @@ class BucketedStoreSpec extends SparkSuite(cpus = 2, conf = Seq(
     assert(ranged.map(_.getAs[String]("chunk_id")).toSeq == Seq("c1", "c2"))
   }
 
-  test("vacuumVersions keeps the newest versions, never the pointer or its target") {
+  test("vacuumVersions deletes only the dirs no kept snapshot reads") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("vac").toString
-    (0 until 4).foreach { i =>
-      ChunkStore.upsertVersioned(spark, root,
-        Seq((s"doc://$i", s"c$i")).toDF("url", "content"))
+    val root = tempDir("vac").resolve("store").toString
+    def upsert(url: String, c: String): Unit = {
+      ChunkStore.upsertVersioned(spark, root, Seq((url, c)).toDF("url", "content"))
+      ()
     }
-    assert(ChunkStore.latestVersion(root) == 3)
-    val deleted = ChunkStore.vacuumVersions(root, keepLast = 2)
-    assert(deleted == Seq(0L, 1L), s"deleted $deleted")
-    // pointer and its target untouched; previous version kept for
-    // readers racing the flip
-    assert(ChunkStore.latestVersion(root) == 3)
-    assert(new java.io.File(root, "v2").isDirectory)
-    assert(!new java.io.File(root, "v0").exists)
-    val latest = ChunkStore.readLatest(spark, root).get
-    assert(latest.count() == 4) // all 4 urls merged through the upserts
-    // idempotent: nothing left to delete
+    def rows(v: Long): Set[(String, String)] =
+      ChunkStore.readVersion(spark, root, v).get.as[(String, String)]
+        .collect().toSet
+    (0 until 4).foreach(i => upsert(s"doc://$i", s"c$i"))
+    // v4 retracts doc://1's row in v1, which stays live for the read
+    // filter, so every dir is still read by the newest snapshot
+    upsert("doc://1", "c1b")
     assert(ChunkStore.vacuumVersions(root, keepLast = 2).isEmpty)
-    // stranded-pointer reaping is age-gated: a fresh LATEST.tmp (an
-    // in-flight flip) survives, a stale one is reaped
-    val fresh = new java.io.File(root, "LATEST.tmp9")
-    val stale = new java.io.File(root, "LATEST.tmp8")
-    java.nio.file.Files.writeString(fresh.toPath, "9")
-    java.nio.file.Files.writeString(stale.toPath, "8")
-    stale.setLastModified(System.currentTimeMillis() - 3600 * 1000L)
-    ChunkStore.vacuumVersions(root, keepLast = 2)
-    assert(fresh.exists && !stale.exists)
-    fresh.delete()
-    // the store keeps working after a vacuum
-    ChunkStore.upsertVersioned(spark, root,
-      Seq(("doc://new", "n")).toDF("url", "content"))
-    assert(ChunkStore.latestVersion(root) == 4)
-    assert(ChunkStore.readLatest(spark, root).get.count() == 5)
+    assert(rows(4) == Set("doc://0" -> "c0", "doc://1" -> "c1b",
+      "doc://2" -> "c2", "doc://3" -> "c3"))
+    // fill the live set to its bound; the commit after that folds into
+    // one base dir
+    (0 to ChunkStore.MaxLiveDirs - 5).foreach(i => upsert(s"doc://f$i", s"f$i"))
+    val head = ChunkStore.latestVersion(root)
+    assert(TxnLogStore.snapshot(root, head).live.map(_._1) == Seq(s"v$head"))
+    val last = rows(head)
+    assert(last.size == 4 + ChunkStore.MaxLiveDirs - 4)
+    // the snapshot before the fold still reads every older dir
+    assert(ChunkStore.vacuumVersions(root, keepLast = 2).isEmpty)
+    assert(ChunkStore.vacuumVersions(root, keepLast = 1) == (0L until head))
+    assert(new java.io.File(root, s"v$head").isDirectory)
+    assert(rows(head) == last)
+    // time travel before the horizon now fails at read
+    intercept[Exception](rows(head - 1))
+    // idempotent, and the store keeps working after a vacuum
+    assert(ChunkStore.vacuumVersions(root, keepLast = 1).isEmpty)
+    upsert("doc://new", "n")
+    assert(ChunkStore.latestVersion(root) == head + 1)
+    assert(rows(head + 1) == last + ("doc://new" -> "n"))
   }
 
   test("sync_complete flag: interrupted run forces full sync, clean run clears it") {
     import graft.sources.SyncState
-    val metaPath =
-      java.nio.file.Files.createTempDirectory("syncmeta").toString + "/kv"
+    val metaPath = tempDir("syncmeta").resolve("kv").toString
     val prefix = "https://docs.example.com"
     // never synced -> force
     assert(SyncState.forceFullSync(spark, metaPath, prefix))

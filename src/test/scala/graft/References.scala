@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 // Reference implementations the specs compare live engine paths against,
@@ -134,5 +134,104 @@ object IvfReference {
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select("vec_id", "cosine")
+  }
+}
+
+/** From [[graft.sources.ChunkStore]] and [[graft.operators.Sync]]: the
+  * full-copy store every sync wrote before the commit log — the
+  * plan-level upsert and guarded cleanup, written as a complete `v<N>`
+  * per run behind a `LATEST` pointer — and the store half of the sync
+  * run that drove it. Specs replay the same runs through both stores and
+  * compare them row for row. */
+object StoreReference {
+  import graft.operators.{StoredChunk, Sync}
+
+  /** Plan-level upsert: replace every document (url) present in
+    * `incoming`, keep all other stored chunks. */
+  def upsertByUrl(stored: DataFrame, incoming: DataFrame): DataFrame = {
+    val incomingUrls = incoming.select("url").distinct()
+    stored.join(incomingUrls, Seq("url"), "left_anti")
+      .unionByName(incoming)
+  }
+
+  /** Obsolete cleanup with the reference's guards: returns the store
+    * unchanged when the visited set is untrustworthy. */
+  def cleanupObsolete(stored: DataFrame, visitedUrls: DataFrame,
+      hasNetworkErrors: Boolean, scanIncomplete: Boolean): DataFrame =
+    if (hasNetworkErrors || scanIncomplete) stored
+    else stored.join(visitedUrls.select("url").distinct(),
+      Seq("url"), "left_semi")
+
+  private def latestFile(root: String) = new java.io.File(root, "LATEST")
+
+  /** Current version number, or -1 when the store is empty. The
+    * pointer is authoritative; a missing or unreadable pointer falls
+    * back to scanning the version directories. */
+  def latestVersion(root: String): Long = {
+    val f = latestFile(root)
+    val fromPointer: Option[Long] =
+      if (!f.exists) None
+      else scala.util.Try(
+        java.nio.file.Files.readString(f.toPath).trim.toLong).toOption
+    fromPointer.getOrElse {
+      val vs = Option(new java.io.File(root).listFiles()).getOrElse(Array())
+        .filter(d => d.isDirectory && d.getName.matches("v\\d+"))
+        .map(_.getName.substring(1).toLong)
+      if (vs.isEmpty) -1L else vs.max
+    }
+  }
+
+  def readLatest(spark: SparkSession, root: String): Option[DataFrame] = {
+    val v = latestVersion(root)
+    if (v < 0) None else Some(spark.read.parquet(s"$root/v$v"))
+  }
+
+  /** Write `contents` as the next complete version and flip the
+    * pointer. */
+  def writeVersion(spark: SparkSession, root: String,
+      contents: DataFrame): Long = {
+    val next = latestVersion(root) + 1
+    contents.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
+    val f = latestFile(root)
+    f.getParentFile.mkdirs()
+    val tmp = new java.io.File(root, s"LATEST.tmp$next")
+    java.nio.file.Files.writeString(tmp.toPath, next.toString)
+    java.nio.file.Files.move(tmp.toPath, f.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    next
+  }
+
+  /** The store half of a sync run as it was: URL diff on the whole
+    * signature strings, new+updated (or, when `force`, every incoming
+    * url) processed with chunk-level reuse, upsert-by-url, guarded
+    * cleanup against the urls that yielded chunks, and the whole result
+    * rewritten as the next version. `force` is the live run's
+    * force_full_sync, so the reference needs no metadata log. */
+  def sync(s: SparkSession, incoming: DataFrame, root: String,
+      force: Boolean, hasNetworkErrors: Boolean = false,
+      scanIncomplete: Boolean = false, chunkSize: Int = 128): Long = {
+    import s.implicits._
+    val docs = Sync.chunksOfUrls(incoming, chunkSize).localCheckpoint(true)
+    val stored = readLatest(s, root)
+      .getOrElse(s.emptyDataset[StoredChunk].toDF())
+    val storedSig = stored.groupBy(col("url"))
+      .agg(array_join(sort_array(collect_list(col("chunk_id"))), ",")
+        .as("stored_sig"))
+    val incomingSig = docs
+      .select(col("url"), array_join(array_sort(col("chunk_ids")), ",")
+        .as("sig"))
+      .filter(col("sig") =!= "")
+    val fresh = incomingSig.join(storedSig, Seq("url"), "left")
+      .filter(col("stored_sig").isNull || col("sig") =!= col("stored_sig"))
+      .select("url")
+    val processed =
+      if (force) docs else docs.join(fresh, Seq("url"), "left_semi")
+    val embedded = Sync.embedDelta(processed,
+        stored.join(broadcast(processed.select("url")), Seq("url"),
+          "left_semi"))
+      .drop("was_embedded")
+    writeVersion(s, root, cleanupObsolete(upsertByUrl(stored, embedded),
+      docs.filter(col("n_chunks") > 0), hasNetworkErrors, scanIncomplete))
   }
 }

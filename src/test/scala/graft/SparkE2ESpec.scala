@@ -49,7 +49,7 @@ class SparkE2ESpec extends SparkSuite {
     assert(joined.filter(!col("unchanged")).count() == 1)
 
     // upsert keeps store consistent: same urls, b fully replaced
-    val upserted = ChunkStore.upsertByUrl(stored,
+    val upserted = StoreReference.upsertByUrl(stored,
       incoming.join(deltaUrlsDf, Seq("url"), "left_semi"))
     assert(upserted.select("url").distinct().count() == 3)
     val bChunks = upserted.filter(col("url") === "doc://b")
@@ -119,16 +119,16 @@ class SparkE2ESpec extends SparkSuite {
     val stored = chunkCorpus(run1Docs)
     val visited = Seq("doc://a", "doc://b").toDF("url") // c was deleted
 
-    val cleaned = ChunkStore.cleanupObsolete(stored, visited,
+    val cleaned = StoreReference.cleanupObsolete(stored, visited,
       hasNetworkErrors = false, scanIncomplete = false)
     assert(cleaned.select("url").distinct().collect().map(_.getString(0))
       .toSet == Set("doc://a", "doc://b"))
 
     // guard: network errors ⇒ nothing is purged
-    val guarded = ChunkStore.cleanupObsolete(stored, visited,
+    val guarded = StoreReference.cleanupObsolete(stored, visited,
       hasNetworkErrors = true, scanIncomplete = false)
     assert(guarded.count() == stored.count())
-    val guarded2 = ChunkStore.cleanupObsolete(stored, visited,
+    val guarded2 = StoreReference.cleanupObsolete(stored, visited,
       hasNetworkErrors = false, scanIncomplete = true)
     assert(guarded2.count() == stored.count())
   }
@@ -136,7 +136,7 @@ class SparkE2ESpec extends SparkSuite {
   test("chunk store writes partitioned parquet and reads back losslessly") {
     import spark.implicits._
     val chunks = chunkCorpus(run1Docs)
-    val tmp = java.nio.file.Files.createTempDirectory("store").toString + "/chunks"
+    val tmp = tempDir("store").toString + "/chunks"
     ChunkStore.write(chunks.toDF(), tmp)
     // physical layout: product_name=… / version=… directory pairs —
     // the (product, version) collection scope of SURVEY §1.3
@@ -747,7 +747,7 @@ class SparkE2ESpec extends SparkSuite {
 
   test("streaming ingest: pages chunk+embed per micro-batch, parity with batch chunker") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("ingeststream")
+    val base = tempDir("ingeststream")
     val in = base.resolve("in").toString
     val store = base.resolve("store").toString
     val ckpt = base.resolve("ckpt").toString
@@ -802,7 +802,7 @@ class SparkE2ESpec extends SparkSuite {
       "redelivery converges") {
     import spark.implicits._
     import graft.sources.ChunkStore
-    val base = java.nio.file.Files.createTempDirectory("delsink")
+    val base = tempDir("delsink")
     val store = base.resolve("store").toString
     val tomb = base.resolve("tomb").toString
     new java.io.File(tomb).mkdirs()
@@ -897,11 +897,12 @@ class SparkE2ESpec extends SparkSuite {
   test("streaming sinks with vacuumKeepLast bound store growth") {
     import spark.implicits._
     import graft.sources.ChunkStore
-    val base = java.nio.file.Files.createTempDirectory("vacsink")
+    val base = tempDir("vacsink")
     val in = base.resolve("in").toString
     val store = base.resolve("store").toString
     new java.io.File(in).mkdirs()
-    (1 to 5).foreach { b =>
+    val n = ChunkStore.MaxLiveDirs + 4
+    (1 to n).foreach { b =>
       Seq(s"doc://$b" -> s"# T$b\n\nbody $b").toDF("url", "content")
         .coalesce(1).write.parquet(s"$in/b$b")
     }
@@ -915,14 +916,16 @@ class SparkE2ESpec extends SparkSuite {
     val q = EventStream.ingestStream(stream, store,
       base.resolve("ckpt").toString, vacuumKeepLast = Some(2))
     try q.processAllAvailable() finally q.stop()
-    // 5 micro-batches minted 5 versions; retention kept the newest 2
+    // n micro-batches minted n versions, the commit at MaxLiveDirs
+    // folded into a new base, and retention deleted every dir before it
+    // (the newest 2 snapshots read only the base and the dirs after it)
     val versions = Option(new java.io.File(store).listFiles()).get
       .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(_.getName).sorted.toSeq
-    assert(versions == Seq("v3", "v4"), versions.toString)
-    // the surviving latest version holds all 5 documents
+      .map(_.getName.substring(1).toInt).sorted.toSeq
+    assert(versions == (ChunkStore.MaxLiveDirs until n), versions.toString)
+    // the latest snapshot holds all n documents
     assert(ChunkStore.readLatest(spark, store).get
-      .select("url").distinct().count() == 5)
+      .select("url").distinct().count() == n)
   }
 
   test("stream-stream interval join matches the batch interval join") {

@@ -2,13 +2,13 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.LeftSemi
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Expression, In,
+  InSet, Literal}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually
@@ -17,9 +17,10 @@ import graft.operators.Sync
 
 /** Pins the plan shapes of `Sync.syncRun`'s three pinned stages, read
   * from the executed plans of its localCheckpoint calls: chunking is a
-  * narrow map (no Exchange, no Window), and the embed stage reads
-  * reusable embeddings only through a broadcast semi-join on the
-  * processed urls, so no chunk_id dedup runs over the whole store. */
+  * narrow map (no Exchange, no Window), and the embed stage of an
+  * incremental run reads reusable embeddings only through a filter on
+  * the processed urls at the store scan, so no chunk_id dedup runs over
+  * the whole store. */
 class SyncPlanSpec extends SparkSuite with AdaptiveSparkPlanHelper
     with Eventually {
 
@@ -62,7 +63,7 @@ class SyncPlanSpec extends SparkSuite with AdaptiveSparkPlanHelper
   }
 
   test("the chunk stage is a narrow map: no Exchange, no Window") {
-    val base = java.nio.file.Files.createTempDirectory("syncplan1")
+    val base = tempDir("syncplan1")
     val plans = checkpointPlans {
       Sync.syncRun(spark, docs(corpus: _*), base.resolve("store").toString,
         base.resolve("state").toString, runId = 1).collect()
@@ -72,11 +73,10 @@ class SyncPlanSpec extends SparkSuite with AdaptiveSparkPlanHelper
       chunk.treeString)
     assert(collect(chunk) { case w: WindowExec => w }.isEmpty,
       chunk.treeString)
-    Sync.deleteTree(base.toFile)
   }
 
-  test("the embed stage reads the store only under a semi-join on url") {
-    val base = java.nio.file.Files.createTempDirectory("syncplan2")
+  test("the embed stage reads the store only through a url filter") {
+    val base = tempDir("syncplan2")
     val store = base.resolve("store").toString
     val state = base.resolve("state").toString
     Sync.syncRun(spark, docs(corpus: _*), store, state, runId = 1).collect()
@@ -88,20 +88,18 @@ class SyncPlanSpec extends SparkSuite with AdaptiveSparkPlanHelper
     val embed = stage(plans, 2)
     val scans = collect(embed) { case f: FileSourceScanExec => f }
     assert(scans.nonEmpty, s"the resync must read the store\n${embed.treeString}")
-    // every path from the store scan up to the chunk_id dedup passes a
-    // broadcast LeftSemi join keyed on url
+    // every store scan under the chunk_id dedup is filtered to the
+    // processed urls (a membership test on url, pushed to the scan)
     val aggs = collect(embed) { case a: BaseAggregateExec => a }
     assert(aggs.nonEmpty, embed.treeString)
-    for (a <- aggs; s <- collect(a) { case f: FileSourceScanExec => f }) {
-      val semis = collect(a) {
-        case j: BroadcastHashJoinExec if j.joinType == LeftSemi &&
-            j.leftKeys.exists(_.references.exists(_.name == "url")) &&
-            find(j.left)(_ eq s).isDefined => j
-      }
-      assert(semis.nonEmpty,
-        s"store scan reaches the dedup without a url semi-join\n" +
-          embed.treeString)
-    }
-    Sync.deleteTree(base.toFile)
+    def onUrl(e: Expression) = e.references.exists(_.name == "url")
+    for (a <- aggs; s <- collect(a) { case f: FileSourceScanExec => f })
+      assert(s.dataFilters.exists(_.exists {
+          case In(v, _) => onUrl(v)
+          case InSet(v, _) => onUrl(v)
+          case EqualTo(v, _: Literal) => onUrl(v)
+          case _ => false
+        }), s"store scan reaches the dedup without a url filter\n" +
+        embed.treeString)
   }
 }

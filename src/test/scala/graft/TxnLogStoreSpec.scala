@@ -39,7 +39,7 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
       TxnLogStore.commit(root, 1L, Seq("f2"), Seq("f0"))
       // retain from v1: f0 is referenced by v0 only → vacuumed;
       // f1 and f2 are referenced by v1 → kept
-      val deleted = TxnLogStore.vacuum(spark, root, retainFrom = 1L)
+      val deleted = TxnLogStore.vacuum(root, retainFrom = 1L)
       assert(deleted == Seq("f0"))
       // the retained snapshot still reads completely
       val v1 = TxnLogStore.liveFiles(spark, root, 1L)
