@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
@@ -48,6 +49,22 @@ object Tables {
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     }
+
+  /** A parquet scan of exactly `leaves`, each directory's data files as
+    * the caller listed them, read as `schema`: the file index answers
+    * from that listing, so the scan lists and infers nothing. */
+  private[graft] def listedParquet(spark: SparkSession,
+      leaves: Map[Path, Array[FileStatus]], schema: StructType): DataFrame = {
+    val listing = new FileStatusCache {
+      override def getLeafFiles(p: Path) = leaves.get(p)
+      override def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new InMemoryFileIndex(spark, leaves.keys.toSeq.sortBy(_.toString),
+        Map.empty, Some(schema), listing),
+      new StructType(), schema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Normalize events.ts to TimestampType whatever the parquet carries.
     * Earlier driver testdata wrote TIMESTAMP(NANOS), which Spark 4 reads

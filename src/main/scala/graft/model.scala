@@ -21,14 +21,3 @@ final case class Chunk(
     chunk_index: Int,
     total_chunks: Int
 )
-
-/** A raw input document before normalization/chunking (FIXTURES.md §1). */
-final case class RawDoc(
-    url: String,
-    product_name: String,
-    version: String,
-    source_type: String, // website | github | zendesk | local_directory | code | s3
-    format: String,      // md | html | pdf | doc | docx | <code ext>
-    content: String,
-    modification_time: java.sql.Timestamp
-)

@@ -7,7 +7,7 @@ import graft.functions.TextUtil
 /** The chunking operators — the core "flatMap" of the pipeline
   * (SURVEY.md §2.3). Pure functions `String => Seq[Chunk]`; the
   * per-document line scan is stateful but documents are independent, so at
-  * scale this runs as `Dataset[RawDoc].flatMap(chunkMarkdown)` with no
+  * scale this runs as a per-document `flatMap(chunkMarkdown)` with no
   * shuffle at all: chunking is embarrassingly parallel.
   *
   * Semantics replicated from the reference implementation:

@@ -940,7 +940,7 @@ object DocPipeline {
   }
 
   /** WARC → ingest pipeline END-TO-END as an oracle row: the fixture
-    * archives flow through [[graft.sources.Warc.warcHtmlBodies]]
+    * archives flow through the WARC connector
     * (gunzip + record walk + the 200/text-html filter — the 404 docs
     * drop here, exactly as a crawler's error pages would) into the
     * REAL page-extraction path ([[graft.functions.HtmlToMarkdown
@@ -952,7 +952,7 @@ object DocPipeline {
     // r20 (r19 verdict task 3): the batch composition consumes `body`
     // from the V2 connector — which STREAMS each archive off the
     // filesystem with column pruning and the warc_type pushdown —
-    // instead of warcHtmlBodies' whole-archive content column. The
+    // instead of a whole-archive content column. The
     // scale probe showed the connector composition 2.2× faster at 10x
     // (extraction parallelizes across the file listing), and it
     // removes a content-fed entry point. Output rows are IDENTICAL:
@@ -1215,8 +1215,7 @@ object DocPipeline {
     // r20 (r19 verdict task 3): WET through the V2 connector too —
     // conversion records' text consumed from the pruned `body` column
     // off bucketed multi-doc WET files, no content column. Same rows:
-    // the WET convention is UTF-8 text, decoded exactly as
-    // warcWetText does.
+    // the WET convention is UTF-8 text.
     val base = stagedArchiveDir(s, dir, "wetv2",
       graft.sources.Warc.fixtureWetRaw, ".warc.wet")
     s.read.format("graft.sources.v2.WarcSource").load(base.toString)

@@ -2,11 +2,8 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -665,17 +662,9 @@ object Similarity {
     else {
       // the listing answers from the loaded build, so the file index
       // asks the filesystem nothing
-      val leaves = chosen.groupBy(_.getPath.getParent)
-      val listing = new FileStatusCache {
-        override def getLeafFiles(p: Path) = leaves.get(p).map(_.toArray)
-        override def putLeafFiles(p: Path, f: Array[FileStatus]): Unit = ()
-        override def invalidateAll(): Unit = ()
-      }
-      val scan = s.baseRelationToDataFrame(HadoopFsRelation(
-        new InMemoryFileIndex(s, leaves.keys.toSeq.sortBy(_.toString),
-          Map.empty, Some(files.schema), listing),
-        new StructType(), files.schema, None, new ParquetFileFormat,
-        Map.empty)(s))
+      val scan = Tables.listedParquet(s,
+        chosen.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray },
+        files.schema)
       val live = scan.filter(col("vec_id").isNotNull &&
         col("embedding").isNotNull)
       Some(excludeId.fold(live)(id => live.filter(col("vec_id") =!= id))

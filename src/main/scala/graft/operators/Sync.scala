@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 import graft.Tables
 
 /** One stored/embedded chunk row — the versioned chunk store's schema
@@ -258,36 +259,63 @@ object Sync {
     * The same content under a new url (a moved doc) therefore re-embeds,
     * as the reference's point ids do.
     *
-    * Scale: posexplode is a narrow map over the processed docs only;
-    * only the reusable rows are deduplicated by chunk_id, so a run that
-    * restricts them to its processed urls never shuffles the store. */
+    * Scale: posexplode is a narrow map over the processed docs only,
+    * and the reusable rows join as they are, with no deduplication, so
+    * a run that restricts them to its processed urls broadcasts them
+    * and never shuffles the store. */
   private[graft] def embedDelta(processed: DataFrame,
       reusable: DataFrame): DataFrame = {
-    import processed.sparkSession.implicits._
     val rows = processed
       .select(col("url"), col("n_chunks").as("total_chunks"),
         posexplode(arrays_zip(col("chunk_ids"), col("contents"))))
       .select(col("url"), col("pos").as("chunk_index"),
         col("total_chunks"), col("col.chunk_ids").as("chunk_id"),
         col("col.contents").as("content"))
-    rows.join(reusable.select("chunk_id", "embedding")
-        .dropDuplicates("chunk_id"), Seq("chunk_id"), "left")
+    // a chunk id stored twice (a url that repeats a piece of its text)
+    // matches both copies. They carry one embedding, a function of the
+    // content, and a join emits the matches of a row together, so the
+    // first row of each (url, chunk_index) run is the row: no shuffle
+    // deduplicates the stored side
+    rows.join(reusable.select("chunk_id", "embedding"), Seq("chunk_id"), "left")
       .select(col("url"), col("chunk_index"), col("total_chunks"),
         col("chunk_id"), col("content"), col("embedding"))
-      .as[(String, Int, Int, String, String, Option[Array[Float]])]
-      .map { case (u, i, t, id, c, e) =>
-        (u, i, t, id, c,
-          e.getOrElse(graft.functions.Embedder.embed(c)), e.isEmpty)
-      }
+      .as(ReuseRow)
+      .mapPartitions { it =>
+        var last: (String, Int) = null
+        it.filter { r =>
+          val first = last == null || last._1 != r._1 || last._2 != r._2
+          last = (r._1, r._2)
+          first
+        }.map { case (u, i, t, id, c, e) =>
+          (u, i, t, id, c,
+            e.getOrElse(graft.functions.Embedder.embed(c)), e.isEmpty)
+        }
+      }(EmbeddedRow)
       .toDF("url", "chunk_index", "total_chunks", "chunk_id", "content",
         "embedding", "was_embedded")
   }
 
-  /** chunks_embedded of an [[embedDelta]] frame, counted in one job. */
-  private[graft] def chunksEmbedded(embedded: DataFrame): Long = {
-    import embedded.sparkSession.implicits._
-    embedded.select("was_embedded").as[Boolean].rdd.filter(identity).count()
-  }
+  /** [[embedDelta]]'s typed rows, derived once: an encoder derived per
+    * call costs a sync tens of milliseconds of driver time. */
+  private lazy val ReuseRow =
+    Encoders.product[(String, Int, Int, String, String, Option[Array[Float]])]
+  private lazy val EmbeddedRow =
+    Encoders.product[(String, Int, Int, String, String, Array[Float], Boolean)]
+  private[graft] lazy val StoredChunks = Encoders.product[StoredChunk]
+
+  /** `rows` with `embedded` observing how many of them the embedder
+    * produced (`was_embedded`), minus that flag: the frame a sync
+    * commits, counted by the commit's own write. */
+  private[graft] def observeEmbedded(rows: DataFrame,
+      embedded: Observation): DataFrame =
+    rows.observe(embedded, count(when(col("was_embedded"), 1)).as("n"))
+      .drop("was_embedded")
+
+  /** The count [[observeEmbedded]] took, once the commit wrote its
+    * rows; 0 when it wrote none. */
+  private[graft] def embeddedCount(embedded: Observation,
+      written: Boolean): Long =
+    if (written) embedded.get("n").asInstanceOf[Long] else 0L
 
   /** One complete incremental sync run — the reference's per-source run
     * loop (doc2vec.ts:675-790) composed from the operators above and the
@@ -323,70 +351,80 @@ object Sync {
     * no chunks has no incoming signature, so it is never new or updated
     * and never counts in urls_processed.
     *
-    * Scale: three pinned stages, chunk → diff → embed. Chunking is a
-    * narrow map (one row per doc). The diff shuffles a few numbers per
-    * url on each side: the incoming doc's fingerprint and the store's
-    * partial fingerprint sums; only the changed urls reach the driver.
-    * Only the processed docs are exploded into chunk rows, reuse reads
-    * only their urls' stored rows, and the commit writes only those
-    * rows: embed and write work follow the delta, not the store (but
-    * for a fold, once per [[graft.sources.ChunkStore.MaxLiveDirs]]
-    * commits). */
+    * Scale: two passes and nothing materialized between them. The diff
+    * pass chunks every incoming doc (a narrow map, one row per doc) and
+    * aggregates both sides by url in one shuffle: a doc's chunk count
+    * and fingerprint sums, and the store's partial sums per url; only
+    * the changed urls reach the driver. The write pass reads `incoming`
+    * again, cut to the processed urls below the chunking, so only those
+    * docs are chunked again and exploded into chunk rows; reuse reads
+    * only their urls' stored rows, and the commit writes only those rows
+    * and counts the embedded ones as it writes. Embed and write work
+    * follow the delta, not the store (but for a fold, once per
+    * [[graft.sources.ChunkStore.MaxLiveDirs]] commits). An incremental
+    * run costs four Spark jobs: the diff's shuffle stage and status
+    * action, the broadcast of the reusable rows and the write. A forced
+    * run into an empty store costs three, and reads `incoming` twice in
+    * full. The flag read and write and the store's log fold run on the
+    * driver. */
   def syncRun(s: SparkSession, incoming: DataFrame, storeRoot: String,
       statePath: String, runId: Long, urlPrefix: String = "",
       hasNetworkErrors: Boolean = false, scanIncomplete: Boolean = false,
       chunkSize: Int = 128): DataFrame = {
-    import s.implicits._
     import graft.sources.{ChunkStore, SyncState}
     val force = SyncState.forceFullSync(s, statePath, urlPrefix)
-    val docs = chunksOfUrls(incoming, chunkSize).localCheckpoint(true)
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
-      .getOrElse(s.emptyDataset[StoredChunk].toDF())
+      .getOrElse(s.emptyDataset(StoredChunks).toDF())
 
-    val storedSig = storedChunks
-      .groupBy("url").agg(count(lit(1)).as("n"),
-        sum(lowSlice(col("chunk_id"))).as("lo"),
-        sum(highSlice(col("chunk_id"))).as("hi"))
-      .select(col("url"),
-        concat_ws(":", col("n"), col("lo"), col("hi")).as("stored_sig"))
+    // the diff: one url-keyed aggregate over both sides in one shuffle.
+    // An incoming doc contributes its chunk count and fingerprint sums
+    // (none when it has no chunks), a stored row its share of them
     def total(slice: Column => Column): Column =
       aggregate(transform(col("chunk_ids"), slice), lit(0L), _ + _)
-    val incomingSig = docs
-      .select(col("url"), when(col("n_chunks") > 0, concat_ws(":",
-        col("n_chunks"), total(lowSlice), total(highSlice))).as("sig"))
-      .groupBy("url")
-      .agg(count(lit(1)).as("n_rows"), first(col("sig")).as("sig"))
+    val none = lit(null).cast("long")
+    val sides = chunksOfUrls(incoming, chunkSize)
+      .select(col("url"), lit(1L).as("docs"),
+        when(col("n_chunks") > 0, col("n_chunks").cast("long")).as("n"),
+        total(lowSlice).as("lo"), total(highSlice).as("hi"),
+        none.as("stored_n"), none.as("stored_lo"), none.as("stored_hi"))
+      .unionByName(storedChunks.select(col("url"), lit(0L).as("docs"),
+        none.as("n"), none.as("lo"), none.as("hi"), lit(1L).as("stored_n"),
+        lowSlice(col("chunk_id")).as("stored_lo"),
+        highSlice(col("chunk_id")).as("stored_hi")))
+    val sig = Seq("n", "lo", "hi")
+    val status = sides.groupBy("url")
+      .agg(sum("docs").as("docs"), sig.map(c => max(c).as(c)) ++
+        sig.map(c => sum(s"stored_$c").as(s"stored_$c")): _*)
       .select(col("url"),
-        when(col("n_rows") > 1, raise_error(
+        when(col("docs") > 1, raise_error(
             concat(lit("sync batch repeats url "), col("url"))))
-          .otherwise(col("sig")).as("sig"))
-      .filter(col("sig").isNotNull)
-    val joined = incomingSig
-      .join(storedSig, Seq("url"), "full_outer")
-      .withColumn("status",
-        when(col("sig").isNull, "deleted")
-          .when(col("stored_sig").isNull, "new")
-          .when(col("sig") =!= col("stored_sig"), "updated")
-          .otherwise("unchanged"))
-      .localCheckpoint(true)
+          .when(col("n").isNull,
+            when(col("stored_n").isNotNull, "deleted"))
+          .when(col("stored_n").isNull, "new")
+          .when(sig.map(c => col(c) =!= col(s"stored_$c")).reduce(_ || _),
+            "updated")
+          .otherwise("unchanged").as("status"))
 
-    // one job, no shuffle: the changed urls' statuses and the count of
-    // the unchanged ones
-    val (changed, nUnchanged) = joined.select("url", "status")
-      .as[(String, String)].rdd
+    // one action after the shuffle: the changed urls' statuses and the
+    // count of the unchanged ones (a url with no chunks on either side
+    // has no status)
+    val (changed, nUnchanged) = status.as(UrlStatus).rdd
       .aggregate((Vector.empty[(String, String)], 0L))(
-        { case ((xs, n), r) =>
-            if (r._2 == "unchanged") (xs, n + 1) else (xs :+ r, n) },
+        { case ((xs, n), r) => r._2 match {
+            case null => (xs, n)
+            case "unchanged" => (xs, n + 1)
+            case _ => (xs :+ r, n) } },
         { case ((xs, n), (ys, m)) => (xs ++ ys, n + m) })
     val statuses = changed.groupMap(_._2)(_._1).withDefaultValue(Vector.empty)
     val upserted = statuses("new") ++ statuses("updated")
     val cleanup = !hasNetworkErrors && !scanIncomplete
     val (processed, reusable) =
-      if (force) (docs, storedChunks)
-      else (docs.filter(col("url").isin(upserted: _*)),
+      if (force) (chunksOfUrls(incoming, chunkSize), storedChunks)
+      else (chunksOfUrls(incoming.filter(col("url").isin(upserted: _*)),
+          chunkSize),
         storedChunks.filter(col("url").isin(upserted: _*)))
-    val embedded = embedDelta(processed, reusable).localCheckpoint(true)
-    val rows = embedded.drop("was_embedded")
+    val embedded = Observation()
+    val rows = observeEmbedded(embedDelta(processed, reusable), embedded)
 
     // a forced run rewrites the store as its rows, plus the stored rows
     // of the urls it did not chunk when the cleanup guard keeps them
@@ -394,7 +432,7 @@ object Sync {
       if (force) ChunkStore.commit(s, storeRoot, Some(
           if (cleanup) rows
           else rows.unionByName(storedChunks.join(
-            docs.filter(col("n_chunks") > 0).select("url"), Seq("url"),
+            processed.filter(col("n_chunks") > 0).select("url"), Seq("url"),
             "left_anti"))), Nil, replace = true)
       else ChunkStore.commit(s, storeRoot,
         Option.when(upserted.nonEmpty)(rows),
@@ -403,13 +441,21 @@ object Sync {
       hasNetworkErrors)
 
     def n(status: String): Long = statuses(status).size.toLong
-    Seq((n("new"), n("updated"), nUnchanged, n("deleted"), runId, force,
+    s.createDataFrame(java.util.List.of(Row(n("new"), n("updated"),
+        nUnchanged, n("deleted"), runId, force,
         upserted.size + (if (force) nUnchanged else 0L),
-        chunksEmbedded(embedded), version))
-      .toDF("items_new", "items_updated", "items_unchanged",
-        "items_deleted", "run_id", "force_full_sync", "urls_processed",
-        "chunks_embedded", "store_version")
+        embeddedCount(embedded, force || upserted.nonEmpty), version)),
+      Counters)
   }
+
+  private lazy val UrlStatus = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+
+  /** [[syncRun]]'s counters row. */
+  private val Counters = StructType(Seq("items_new", "items_updated",
+      "items_unchanged", "items_deleted", "run_id", "force_full_sync",
+      "urls_processed", "chunks_embedded", "store_version")
+    .map(f => StructField(f,
+      if (f == "force_full_sync") BooleanType else LongType, nullable = false)))
 
   /** The FULL sync state machine across three consecutive runs as one
     * ORACLE row — the reference's e2e contract (tests/e2e.test.ts:165,

@@ -182,30 +182,8 @@ object TextAnalysis {
         "over_embed_cap")
       .orderBy("doc_id")
 
-  /** REAL BPE token counting: merges trained once on a deterministic
-    * driver-side sample (doc_id < 50 — tokenizer training is a bounded
-    * one-time artifact, the standard practice), encoding distributed as
-    * a per-partition kernel with the merge table riding the closure and
-    * the rank map + word cache built once per partition. Declared
-    * no-oracle (BPE's iterative greedy merge isn't SQL-expressible);
-    * the companion BpeTokenizerSpec pins train/encode/decode semantics
-    * instead. */
-  def tokenCountBpe(s: SparkSession, dir: String,
-      numMerges: Int = 200): DataFrame = {
-    import s.implicits._
-    import graft.functions.BpeTokenizer
-    val sample = Tables.documents(s, dir)
-      .filter(col("doc_id") < 50).orderBy("doc_id")
-      .select("text").as[String].collect()
-    val merges = BpeTokenizer.train(sample.toSeq, numMerges)
-    bpeEncodeCounts(
-      Tables.documents(s, dir).select("doc_id", "text").as[(Long, String)],
-      merges)
-      .orderBy("doc_id")
-  }
-
-  /** Distributed BPE encode+count kernel shared by [[tokenCountBpe]]
-    * and [[tokenCountBpeOracle]]: the merge table rides the closure
+  /** Distributed BPE encode+count kernel of [[tokenCountBpeOracle]]:
+    * the merge table rides the closure
     * like a broadcast; rank map and word cache are built once per
     * partition. */
   private def bpeEncodeCounts(
@@ -269,9 +247,8 @@ object TextAnalysis {
     * (for in-vocabulary words encode ≡ training replay: a merge's
     * components always form at earlier ranks) shifts the counts and
     * fails the hash. The end-of-word sentinel prints as '!' (it is a
-    * live symbol in 4 of the 6 learned merges). Real-corpus BPE at 200
-    * merges stays available as [[tokenCountBpe]], semantics pinned in
-    * BpeTokenizerSpec/BpePropertySpec. */
+    * live symbol in 4 of the 6 learned merges). The tokenizer's own
+    * semantics are pinned in BpeTokenizerSpec/BpePropertySpec. */
   def tokenCountBpeOracle(s: SparkSession, dir: String,
       numMerges: Int = 6): DataFrame = {
     import s.implicits._

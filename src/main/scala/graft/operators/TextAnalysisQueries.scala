@@ -194,9 +194,7 @@ object TextAnalysisQueries {
          SELECT doc_id, rank, term, tf, df, score FROM ranked
          WHERE rank <= 3 ORDER BY doc_id, rank"""),
     // full oracle since r13: planted 6-word construction whose merge
-    // table DuckDB RELEARNS in six unrolled SQL training rounds (the
-    // real-corpus 200-merge variant stays in the library as
-    // TextAnalysis.tokenCountBpe, pinned by BpeTokenizerSpec)
+    // table DuckDB RELEARNS in six unrolled SQL training rounds
     // an INDEPENDENT BPE implementation in SQL: relearn the merge
     // table from the planted construction (word j of BpeOracleWords
     // repeats doc_id % (j+3) times per document; training sample =

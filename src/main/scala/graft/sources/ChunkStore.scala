@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.api.java.UDF2
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 
 /** The engine's chunk store (SURVEY.md §2.6), with the reference's two
   * write disciplines:
@@ -48,16 +50,16 @@ object ChunkStore {
       .parquet(path)
 
   /** Most live data directories a snapshot may have. A read lists
-    * every live directory on the driver and its filter maps each file
-    * to its directory, so the fixed cost of a read grows with the
-    * count; 8 keeps it near a one-directory store's, while a fold, which
-    * rewrites the whole store as every commit did before, runs on at
-    * most one commit in eight. */
+    * every live directory on the driver and scans each one's files, so
+    * the fixed cost of a read grows with the count; 8 keeps it near a
+    * one-directory store's, while a fold, which rewrites the whole
+    * store as every commit did before, runs on at most one commit in
+    * eight. */
   private[graft] val MaxLiveDirs = 8
 
   /** Most retract entries a snapshot may carry. Every entry is a url on
-    * the driver and one literal in the read's filter (an `InSet`
-    * shipped with every scan task): 100,000 urls of about 100 bytes
+    * the driver and at most one key of the read's url map, which is
+    * shipped with every scan task: 100,000 urls of about 100 bytes
     * keep that near 10 MB, far above a 1%-edit resync (tens of urls)
     * and below a rewrite's memory. A commit that would pass it folds,
     * as one that would pass [[MaxLiveDirs]] does, and a fold resets
@@ -85,30 +87,43 @@ object ChunkStore {
 
   /** One scan over every live directory, so Spark packs their small
     * files into few tasks, minus the rows whose url a commit after
-    * their directory's retracted. A row's directory is looked up by its
-    * `_metadata.file_name` (every file of the store comes from a Spark
-    * write, whose file names carry the write's unique job id), and each
-    * retracted url is one literal, tested against the directories
-    * older than its retraction. */
+    * their directory's retracted. The scan takes the files listed here
+    * and the schema of one footer ([[graft.Tables.footerSchema]]), so it
+    * lists nothing again. Without retractions it is the bare scan.
+    *
+    * The retract rule is one plan for any store state, so its generated
+    * code compiles once per session: a row is dropped when its url maps
+    * to a live directory at or after its own in `newest`, the index of
+    * the newest directory each url is retracted from. The row's
+    * directory is the parent of its `_metadata.file_path`, and the test
+    * is one hash lookup of its url; `newest` holds each pending url
+    * once, so it stays within [[MaxRetractedUrls]]. */
   private def readSnapshot(spark: SparkSession, root: String,
       snap: TxnLogStore.Snapshot): Option[DataFrame] =
     Option.when(snap.live.nonEmpty) {
       val conf = spark.sessionState.newHadoopConf()
-      val dirs = snap.live.map { case (dir, gone) =>
+      val dirs = snap.live.map { case (dir, _) =>
         val p = new Path(root, dir)
-        (p, p.getFileSystem(conf).listStatus(p).toSeq
-          .filter(graft.Tables.isDataFile), gone)
+        val fs = p.getFileSystem(conf)
+        fs.makeQualified(p) -> fs.listStatus(p).filter(graft.Tables.isDataFile)
       }
       val scan = graft.Tables.footerSchema(spark, dirs.flatMap(_._2))
-        .fold(spark.read)(spark.read.schema)
-        .parquet(dirs.map(_._1.toString): _*)
-      val dirOf = typedLit(dirs.zipWithIndex.flatMap { case ((_, fs, _), i) =>
-        fs.map(_.getPath.getName -> i) }.toMap).apply(col("_metadata.file_name"))
-      val dead = dirs.zipWithIndex.collect { case ((_, _, gone), i)
-          if gone.nonEmpty => dirOf <= i && col("url").isin(gone.toSeq: _*)
+        .fold(spark.read.parquet(dirs.map(_._1.toString): _*))(
+          graft.Tables.listedParquet(spark, dirs.filter(_._2.nonEmpty).toMap, _))
+      val newest = snap.live.zipWithIndex
+        .flatMap { case ((_, gone), i) => gone.map(_ -> i) }.toMap
+      if (newest.isEmpty) scan
+      else {
+        val index = snap.live.map(_._1).zipWithIndex.toMap
+        val retracted = udf(new UDF2[String, String, Boolean] {
+          def call(url: String, file: String): Boolean =
+            url != null && newest.get(url).exists { i =>
+              val dir = file.substring(0, file.lastIndexOf('/'))
+              index(dir.substring(dir.lastIndexOf('/') + 1)) <= i
+            }
+        }, BooleanType)
+        scan.filter(!retracted(col("url"), col("_metadata.file_path")))
       }
-      dead.reduceOption(_ || _)
-        .fold(scan)(d => scan.filter(!coalesce(d, lit(false))))
     }
 
   /** The one write path of the store: commit `rows` (every row of the

@@ -46,7 +46,6 @@ object DocExtract {
   private val NumDifatOff = 72
   private val HeaderDifatOff = 76
   private val EndOfChain = 0xFFFFFFFEL
-  private val FreeSect = 0xFFFFFFFFL
 
   private def u16(b: Array[Byte], i: Int): Int =
     ((b(i + 1) & 0xff) << 8) | (b(i) & 0xff)

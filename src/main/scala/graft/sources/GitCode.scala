@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{StoredChunk, Sync}
@@ -125,7 +125,13 @@ object GitCode {
     * processed files come to the driver as (url, chunk count) pairs;
     * an incremental run's reuse, retraction and commit follow the DIFF
     * (changed files + their chunks), never the repo — the reference's
-    * cost model. A FULL run lists the stored urls to count its purge. */
+    * cost model. Nothing is materialized between the file list and the
+    * commit, which chunks the processed files again and counts the
+    * embedded chunks as it writes: an incremental run costs six Spark
+    * jobs (the file list and the stale-url list, and the commit write's
+    * three, two of them broadcasts). The watermark is read and written
+    * on the driver. A FULL run lists the stored urls to count its
+    * purge. */
   def codeRun(s: SparkSession, tree: DataFrame, storeRoot: String,
       statePath: String, runId: Long, headSha: String,
       diffOutput: Option[String], repoPath: String,
@@ -159,32 +165,31 @@ object GitCode {
       case None => files
     }
     // per-file URL through the real kernel (typed map: pure function),
-    // chunked and PINNED once: the chunk rows and the driver-side file
-    // list both read this frame
-    val docs = Sync.chunksOfUrls(processFiles.as[(String, String)]
+    // chunked; the driver-side file list and the commit each read it
+    val docs = Sync.chunksOfUrls(processFiles.as(PathText)
       .map { case (p, t) =>
         (codeFileUrl(p, repoPath, None, Some(urlPrefix)), t)
-      }.toDF("url", "text"), 128).localCheckpoint(true)
+      }(PathText).toDF("url", "text"), 128)
     // the processed files on the driver: files_processed, the urls to
     // upsert and the files that chunk to nothing
-    val processed = docs.select("url", "n_chunks").as[(String, Int)].collect()
+    val processed = docs.select("url", "n_chunks").as(UrlChunks).collect()
     val chunked = processed.collect { case (u, n) if n > 0 => u }.toSeq
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
-      .getOrElse(s.emptyDataset[StoredChunk].toDF())
-    val embedded = Sync.embedDelta(docs,
-        if (mode == "full") storedChunks
-        else storedChunks.filter(col("url").isin(chunked: _*)))
-      .localCheckpoint(true)
-    val newRows = embedded.drop("was_embedded")
+      .getOrElse(s.emptyDataset(Sync.StoredChunks).toDF())
+    val chunkRows = Sync.embedDelta(docs,
+      if (mode == "full") storedChunks
+      else storedChunks.filter(col("url").isin(chunked: _*)))
+    val embedded = Observation()
 
-    val (version, urlsDeleted) =
+    val (version, written, urlsDeleted) =
       if (mode == "full") {
         // the whole store becomes the chunked scan: every stored url it
         // did not chunk is purged
         val stored = storedChunks.select("url").distinct().as[String]
           .collect().toSet
-        (ChunkStore.commit(s, storeRoot, Some(newRows), Nil, replace = true),
-          (stored -- chunked).size.toLong)
+        (ChunkStore.commit(s, storeRoot,
+          Some(Sync.observeEmbedded(chunkRows, embedded)), Nil,
+          replace = true), true, (stored -- chunked).size.toLong)
       } else {
         val gone = (deleteUrls ++ processed.collect { case (u, 0) => u }).toSet
         val upserted = chunked.filterNot(gone)
@@ -195,18 +200,22 @@ object GitCode {
         // reference counters count urls whose delete actually removed
         // chunks (doc2vec.ts:1270-1273), not every requested url
         (ChunkStore.commit(s, storeRoot,
-          Option.when(upserted.nonEmpty)(
-            if (upserted.size == chunked.size) newRows
-            else newRows.filter(!col("url").isin(gone.toSeq: _*))),
-          stale.toSeq), (stale & gone).size.toLong)
+          Option.when(upserted.nonEmpty)(Sync.observeEmbedded(
+            if (upserted.size == chunked.size) chunkRows
+            else chunkRows.filter(!col("url").isin(gone.toSeq: _*)),
+            embedded)),
+          stale.toSeq), upserted.nonEmpty, (stale & gone).size.toLong)
       }
     SyncState.setMetadata(s, statePath, shaKey, headSha, runId)
 
-    Seq((runId, mode, processed.length.toLong, Sync.chunksEmbedded(embedded),
-        urlsDeleted, version))
+    Seq((runId, mode, processed.length.toLong,
+        Sync.embeddedCount(embedded, written), urlsDeleted, version))
       .toDF("run_id", "mode", "files_processed", "chunks_embedded",
         "urls_deleted", "store_version")
   }
+
+  private lazy val PathText = Encoders.tuple(Encoders.STRING, Encoders.STRING)
+  private lazy val UrlChunks = Encoders.tuple(Encoders.STRING, Encoders.scalaInt)
 
   /** The GitHub code source's FULL state machine across four syncs as
     * one oracle row — the treatment `sync_run_e2e` gave the generic

@@ -368,9 +368,10 @@ object Warc {
   /** WARC corpus → one row per record: a streaming per-row flatMap
     * (zero shuffle, max residency one record); gzip is transparent.
     * The body surfaces as a checksum + length rather than raw bytes so
-    * the row stays narrow — the markdown pipeline consumes bodies via
-    * [[warcHtmlBodies]]. Parse errors are dropped here (schema parity
-    * with the oracle row); [[warcQuarantine]] is the error surface. */
+    * the row stays narrow — the markdown pipeline consumes bodies
+    * through the WARC connector. Parse errors are dropped here (schema
+    * parity with the oracle row); [[warcQuarantine]] is the error
+    * surface. */
   def warcRecords(s: SparkSession, warcs: DataFrame): DataFrame = {
     import s.implicits._
     warcs.select("path", "content")
@@ -433,49 +434,6 @@ object Warc {
       }
       override def next(): T = it.next()
     }
-
-  /** The ingest hookup: 200-status text/html response records as
-    * (url, html) rows — exactly the shape the crawler hands to
-    * HtmlToMarkdown, so archives and live crawls share one pipeline
-    * from here down. Charset-aware ([[htmlCharset]]): declared
-    * charset, meta sniff, UTF-8 probe, ISO-8859-1 fallback. */
-  def warcHtmlBodies(s: SparkSession, warcs: DataFrame): DataFrame = {
-    import s.implicits._
-    warcs.select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        parseWarcEvents(new java.io.ByteArrayInputStream(bytes))
-          .collect {
-            case Right(r) if r.warcType == "response" &&
-              r.httpStatus == 200 &&
-              r.httpContentType.startsWith("text/html") =>
-              (r.targetUri, decodeHtml(r.httpContentType, r.body))
-          }
-      }
-      .toDF("url", "html")
-  }
-
-  /** WET sibling format (Common Crawl's extracted-text distribution):
-    * the same ISO 28500 framing, but records are `conversion`s whose
-    * block is the page's extracted plain text (UTF-8 by the WET
-    * convention). One (url, text, n_chars) row per conversion record —
-    * the entry point for corpora that skip HTML entirely. Same
-    * streaming per-row flatMap as [[warcRecords]], zero shuffle. */
-  def warcWetText(s: SparkSession, warcs: DataFrame): DataFrame = {
-    import s.implicits._
-    warcs.select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (_, bytes) =>
-        parseWarcEvents(new java.io.ByteArrayInputStream(bytes))
-          .collect {
-            case Right(r) if r.warcType == "conversion" =>
-              val text = new String(r.body,
-                java.nio.charset.StandardCharsets.UTF_8)
-              (r.targetUri, text, text.length.toLong)
-          }
-      }
-      .toDF("url", "text", "n_chars")
-  }
 
   // ── CDX index + record-level sliced access ─────────────────────────
 
@@ -692,43 +650,15 @@ object Warc {
       }
     }
 
-  /** CDX over Common Crawl's member-per-record `.warc.gz` layout:
-    * one gzip member per record, coordinates = COMPRESSED (offset,
-    * length) from [[gzipMembers]] — the convention real CC CDX files
-    * use, because it turns record access into a compressed SEEK (read
-    * the member, gunzip just it) instead of decompress-forward. Plain
-    * (non-gzip) archives keep uncompressed parser coordinates; the
-    * `compressed` column records which system each row is in. */
-  def warcCdxIndexCompressed(s: SparkSession, warcs: DataFrame)
-      : DataFrame = {
-    import s.implicits._
-    warcs.select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        if (bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f &&
-          (bytes(1) & 0xff) == 0x8b) {
-          gzipMembers(bytes).iterator.zipWithIndex.flatMap {
-            case ((off, len), k) =>
-              readRecordSlice(bytes, off, len, compressedCoords = true)
-                .map(r => (path, k, r.warcType, r.targetUri,
-                  r.httpStatus, off, len, true))
-          }
-        } else {
-          parseWarcEvents(new java.io.ByteArrayInputStream(bytes))
-            .collect { case Right(r) =>
-              (path, r.idx, r.warcType, r.targetUri, r.httpStatus,
-                r.offset, r.recBytes, false)
-            }
-        }
-      }
-      .toDF("path", "record_idx", "warc_type", "url", "http_status",
-        "offset", "rec_bytes", "compressed")
-  }
-
-  /** [[warcCdxIndexCompressed]] straight off the FILESYSTEM — the
-    * index-build twin of [[warcFetchSlicesFromFiles]], with no content
-    * column anywhere: gzip archives walk member-at-a-time through the
-    * STREAMING [[memberWalk]] (max residency one member = one record
+  /** CDX over Common Crawl's member-per-record `.warc.gz` layout,
+    * straight off the FILESYSTEM: one gzip member per record,
+    * coordinates = COMPRESSED (offset, length), the convention real CC
+    * CDX files use; plain archives keep uncompressed parser
+    * coordinates, and the `compressed` column records which system
+    * each row is in. The index-build twin of
+    * [[warcFetchSlicesFromFiles]], with no content column anywhere:
+    * gzip archives walk member-at-a-time through the STREAMING
+    * [[memberWalk]] (max residency one member = one record
     * in the CC layout), plain archives through the streaming record
     * walk — so building a CDX over archives far past the 2 GiB cap is
     * bounded-memory end to end. One partition per file (archives are

@@ -68,66 +68,62 @@ class CodeSyncE2eSpec extends SparkSuite {
 
   test("codeRun re-embeds a rename under its new URL (url-scoped ids)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("codeone")
-    try {
-      val store = s"$base/store"
-      val state = s"$base/state"
-      val prefix = "https://github.com/o/r/blob/main"
-      val t1 = Seq(("a.py", "alpha content"), ("b.py", "beta content"))
-        .toDF("path", "text")
-      val r1 = GitCode.codeRun(spark, t1, store, state, 1L, "s1", None,
-        "/repo", prefix, "o/r", "main").collect().head
-      assert(r1.getAs[String]("mode") == "full")
-      assert(r1.getAs[Long]("chunks_embedded") == 2L)
-      // rename a.py → c.py, content identical: the old URL is purged
-      // and the chunk re-embeds because chunk ids are url-scoped
-      val t2 = Seq(("c.py", "alpha content"), ("b.py", "beta content"))
-        .toDF("path", "text")
-      val r2 = GitCode.codeRun(spark, t2, store, state, 2L, "s2",
-        Some("R100\ta.py\tc.py"), "/repo", prefix, "o/r", "main")
-        .collect().head
-      assert(r2.getAs[String]("mode") == "incremental")
-      assert(r2.getAs[Long]("files_processed") == 1L)
-      assert(r2.getAs[Long]("chunks_embedded") == 1L,
-        "renamed content must re-embed under the new url")
-      assert(r2.getAs[Long]("urls_deleted") == 1L)
-      val urls = graft.sources.ChunkStore.readLatest(spark, store).get
-        .select("url").as[String].collect().toSet
-      assert(urls == Set(s"$prefix/c.py", s"$prefix/b.py"))
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    val base = tempDir("codeone")
+    val store = s"$base/store"
+    val state = s"$base/state"
+    val prefix = "https://github.com/o/r/blob/main"
+    val t1 = Seq(("a.py", "alpha content"), ("b.py", "beta content"))
+      .toDF("path", "text")
+    val r1 = GitCode.codeRun(spark, t1, store, state, 1L, "s1", None,
+      "/repo", prefix, "o/r", "main").collect().head
+    assert(r1.getAs[String]("mode") == "full")
+    assert(r1.getAs[Long]("chunks_embedded") == 2L)
+    // rename a.py → c.py, content identical: the old URL is purged
+    // and the chunk re-embeds because chunk ids are url-scoped
+    val t2 = Seq(("c.py", "alpha content"), ("b.py", "beta content"))
+      .toDF("path", "text")
+    val r2 = GitCode.codeRun(spark, t2, store, state, 2L, "s2",
+      Some("R100\ta.py\tc.py"), "/repo", prefix, "o/r", "main")
+      .collect().head
+    assert(r2.getAs[String]("mode") == "incremental")
+    assert(r2.getAs[Long]("files_processed") == 1L)
+    assert(r2.getAs[Long]("chunks_embedded") == 1L,
+      "renamed content must re-embed under the new url")
+    assert(r2.getAs[Long]("urls_deleted") == 1L)
+    val urls = graft.sources.ChunkStore.readLatest(spark, store).get
+      .select("url").as[String].collect().toSet
+    assert(urls == Set(s"$prefix/c.py", s"$prefix/b.py"))
   }
 
   test("codeRun purges a file edited to empty, in both modes") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("codeempty")
-    try {
-      val store = s"$base/store"
-      val state = s"$base/state"
-      val prefix = "https://github.com/o/r/blob/main"
-      def urls(): Set[String] = graft.sources.ChunkStore
-        .readLatest(spark, store).get.select("url").as[String]
-        .collect().toSet
-      def run(files: Seq[(String, String)], id: Long,
-          diff: Option[String]) =
-        GitCode.codeRun(spark, files.toDF("path", "text"), store, state,
-          id, s"s$id", diff, "/repo", prefix, "o/r", "main")
-          .collect().head
-      run(Seq("a.py" -> "alpha content", "b.py" -> "beta content",
-        "c.py" -> "gamma content"), 1L, None)
-      // incremental: a.py modified to empty
-      val r2 = run(Seq("a.py" -> "", "b.py" -> "beta content",
-        "c.py" -> "gamma content"), 2L, Some("M\ta.py"))
-      assert(r2.getAs[String]("mode") == "incremental")
-      assert(r2.getAs[Long]("chunks_embedded") == 0L)
-      assert(r2.getAs[Long]("urls_deleted") == 1L)
-      assert(urls() == Set(s"$prefix/b.py", s"$prefix/c.py"))
-      // full (no diff for a moved SHA): c.py edited to spaces only
-      val r3 = run(Seq("a.py" -> "", "b.py" -> "beta content",
-        "c.py" -> "    "), 3L, None)
-      assert(r3.getAs[String]("mode") == "full")
-      assert(r3.getAs[Long]("chunks_embedded") == 0L)
-      assert(r3.getAs[Long]("urls_deleted") == 1L)
-      assert(urls() == Set(s"$prefix/b.py"))
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    val base = tempDir("codeempty")
+    val store = s"$base/store"
+    val state = s"$base/state"
+    val prefix = "https://github.com/o/r/blob/main"
+    def urls(): Set[String] = graft.sources.ChunkStore
+      .readLatest(spark, store).get.select("url").as[String]
+      .collect().toSet
+    def run(files: Seq[(String, String)], id: Long,
+        diff: Option[String]) =
+      GitCode.codeRun(spark, files.toDF("path", "text"), store, state,
+        id, s"s$id", diff, "/repo", prefix, "o/r", "main")
+        .collect().head
+    run(Seq("a.py" -> "alpha content", "b.py" -> "beta content",
+      "c.py" -> "gamma content"), 1L, None)
+    // incremental: a.py modified to empty
+    val r2 = run(Seq("a.py" -> "", "b.py" -> "beta content",
+      "c.py" -> "gamma content"), 2L, Some("M\ta.py"))
+    assert(r2.getAs[String]("mode") == "incremental")
+    assert(r2.getAs[Long]("chunks_embedded") == 0L)
+    assert(r2.getAs[Long]("urls_deleted") == 1L)
+    assert(urls() == Set(s"$prefix/b.py", s"$prefix/c.py"))
+    // full (no diff for a moved SHA): c.py edited to spaces only
+    val r3 = run(Seq("a.py" -> "", "b.py" -> "beta content",
+      "c.py" -> "    "), 3L, None)
+    assert(r3.getAs[String]("mode") == "full")
+    assert(r3.getAs[Long]("chunks_embedded") == 0L)
+    assert(r3.getAs[Long]("urls_deleted") == 1L)
+    assert(urls() == Set(s"$prefix/b.py"))
   }
 }

@@ -5,24 +5,32 @@ import org.apache.spark.sql.functions._
 import graft.operators.Sync
 import graft.sources.{GitCode, SyncState}
 
-/** Job budget of the sync paths: reading the sync flag runs no Spark
-  * job, a table load none, and an incremental `syncRun` or `codeRun`
-  * at most the number measured when the budget was set. A path that
-  * gains a job (a schema-inference job, a counter aggregate, a
-  * broadcast) fails here. */
+/** Job budget of the sync paths: reading or writing the sync flag runs
+  * no Spark job, a table load none, and an incremental `syncRun` or
+  * `codeRun`, or a full ingest, at most the number measured when the
+  * budget was set. A path that gains a job (a schema-inference job, a
+  * counter aggregate, a broadcast, a checkpoint) fails here. */
 class SyncBudgetSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private lazy val jobs = new JobCount(spark.sparkContext)
 
   /** Most jobs an incremental `syncRun(...).collect()` may run: the
-    * chunk checkpoint, three for the diff (two shuffle stages under AQE
-    * and its checkpoint), the driver-side status list, three for the
-    * embed checkpoint, the store commit, the sync flag write and the
-    * embedded-chunk count. The full-copy store ran 22 here. */
-  private val SyncRunBudget = 11
-  /** Most jobs an incremental `codeRun(...).collect()` may run. The
-    * full-copy store ran 23 here. */
-  private val CodeRunBudget = 10
+    * url diff's shuffle stage (both sides in one aggregate) and its
+    * status action, then the broadcast of the reusable stored rows and
+    * the commit write, which also counts the embedded chunks. The flag
+    * and the store's log are read and written on the driver. The
+    * full-copy store ran 22 here, the first commit-log store 11. */
+  private val SyncRunBudget = 4
+  /** Most jobs a forced `syncRun(...).collect()` into an empty store
+    * (the full ingest) may run: the diff's shuffle stage and status
+    * action, and the write. The first commit-log store ran 8 here. */
+  private val IngestBudget = 3
+  /** Most jobs an incremental `codeRun(...).collect()` may run: the
+    * processed-file list, whose allowed-set semi-join broadcasts, and
+    * the stale-url list; then the commit write as in `syncRun`, which
+    * broadcasts the allowed set again. The full-copy store ran 23 here,
+    * the first commit-log store 10. */
+  private val CodeRunBudget = 6
 
   /** The first 60 docs; the `second` corpus appends to every 10th doc,
     * drops doc 7 and adds doc 60. */
@@ -43,6 +51,23 @@ class SyncBudgetSpec extends SparkSuite {
     SyncState.markSyncComplete(spark, state, "p", 1L, hasNetworkErrors = false)
     assert(jobs.of { force = SyncState.forceFullSync(spark, state, "p") } == 0)
     assert(!force)
+  }
+
+  test("the sync flag is written with no job") {
+    val state = tempDir("budgetflagw").resolve("state").toString
+    assert(jobs.of { SyncState.markSyncComplete(spark, state, "p", 1L,
+      hasNetworkErrors = false) } == 0)
+    assert(!SyncState.forceFullSync(spark, state, "p"))
+  }
+
+  test("a full ingest stays within its job budget") {
+    val base = tempDir("budgetingest")
+    var r: org.apache.spark.sql.Row = null
+    val n = jobs.of { r = Sync.syncRun(spark, corpus(second = false),
+      base.resolve("store").toString, base.resolve("state").toString, 1L).head() }
+    assert(r.getAs[Boolean]("force_full_sync") && r.getAs[Long]("items_new") > 0)
+    assert(r.getAs[Long]("chunks_embedded") > 0)
+    assert(n <= IngestBudget, s"full ingest ran $n jobs")
   }
 
   test("an incremental syncRun stays within its job budget") {
