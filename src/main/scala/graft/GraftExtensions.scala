@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.DotProductF
 
@@ -21,8 +20,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinColumnPruning)
-    // the IVF top-k rewrite (fires only for scans registered in
-    // KnnIndexRegistry)
+    // the IVF top-k rewrite (fires only for scans of a path with an
+    // IVF manifest, see KnnIndexRegistry)
     e.injectOptimizerRule(_ => graft.plans.KnnIvfRewrite)
   }
 }

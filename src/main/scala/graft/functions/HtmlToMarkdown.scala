@@ -1,6 +1,6 @@
 package graft.functions
 
-import scala.collection.mutable.{ArrayBuffer, ListBuffer}
+import scala.collection.mutable.ListBuffer
 
 /** HTML → Markdown normalization (SURVEY.md §2.2), the reference's
   * sanitize-allowlist + Turndown pipeline (content-processor.ts:142-275)
@@ -17,9 +17,6 @@ import scala.collection.mutable.{ArrayBuffer, ListBuffer}
   */
 object HtmlToMarkdown {
 
-  private val allowed = Set("h1", "h2", "h3", "h4", "h5", "h6", "p", "a",
-    "ul", "ol", "li", "b", "i", "strong", "em", "code", "pre", "div",
-    "span", "table", "thead", "tbody", "tr", "th", "td", "blockquote", "br")
   private val dropWithContent = Set("script", "style", "head", "noscript",
     "template", "iframe")
   private val voidTags = Set("br", "hr", "img", "input", "meta", "link")

@@ -253,7 +253,6 @@ object Chunker {
     val parts = ArrayBuffer[Int](bodyStart)
     depth = 0
     i = bodyStart
-    var lineStart = bodyStart
     while (i < close) {
       val c = source.charAt(i)
       if (c == '{' || c == '(' || c == '[') depth += 1

@@ -159,8 +159,7 @@ object Compliance {
   }
 
   /** Reconciliation across the three PERSISTED surfaces. */
-  private def report(s: SparkSession, dir: String,
-      base: String): DataFrame = {
+  private def report(s: SparkSession, base: String): DataFrame = {
     val nTomb = s.read.schema("doc_id LONG")
       .parquet(s"$base/store/tombstones")
       .select("doc_id").distinct().count()
@@ -214,7 +213,7 @@ object Compliance {
         .select(col("doc_id"), col("source"), tok.as("tok"))
         .filter(purged(col("doc_id")))
       applyPurgeBatch(s, base.toString, keys)
-      report(s, dir, base.toString)
+      report(s, base.toString)
     } finally Sync.deleteTree(base.toFile)
   }
 
@@ -250,7 +249,7 @@ object Compliance {
         }
         .option("checkpointLocation", s"$base/ckpt").start()
       try q.processAllAvailable() finally q.stop()
-      report(s, dir, base.toString)
+      report(s, base.toString)
     }
   }
 }

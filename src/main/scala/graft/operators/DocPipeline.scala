@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Chunk, Tables}
+import graft.Tables
 
 /** Input projection of the documents table (top-level: Spark encoders
   * need public classes for codegen). */
@@ -643,13 +643,13 @@ object DocPipeline {
       .flatMap { id =>
         val nf = 2 + (id % 3).toInt
         val (bw, bh) = (2, 2) // 16x16 frames
-        def grid(f: Int, g: (Int, Int) => Long): Array[Int] =
+        def grid(g: (Int, Int) => Long): Array[Int] =
           Array.tabulate(bw * bh)(p => g(p % bw, p / bw).toInt)
         val jpegs = (0 until nf).map { f =>
           Multimodal.jpegEncodeColorDcOnly(16, 16,
-            grid(f, (bx, by) => ((id + f * 9 + bx * 3 + by * 7) % 50) - 25),
-            grid(f, (bx, by) => ((id * 5 + f + bx * 11 + by * 2) % 40) - 20),
-            grid(f, (bx, by) => ((id * 3 + f * 7 + bx * 5 + by * 13) % 40) - 20))
+            grid((bx, by) => ((id + f * 9 + bx * 3 + by * 7) % 50) - 25),
+            grid((bx, by) => ((id * 5 + f + bx * 11 + by * 2) % 40) - 20),
+            grid((bx, by) => ((id * 3 + f * 7 + bx * 5 + by * 13) % 40) - 20))
         }
         val avi = Multimodal.aviEncodeMjpeg(16, 16, 40000, jpegs)
         val frames = Multimodal.demuxAviFrames(avi).getOrElse(
@@ -1245,7 +1245,6 @@ object DocPipeline {
     * mis-seek yields no row or a wrong checksum, never a silent
     * pass. */
   def warcCdxGzPruned(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // r20: the whole path is FILE-NATIVE now — fixtures staged as
     // bucketed member-per-record `.warc.gz` files (100 docs per file,
     // the CC per-file work-unit shape), the CDX built by the STREAMING

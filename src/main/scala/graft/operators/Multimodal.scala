@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.functions.TextUtil
 
 /** Multimodal columns (builder-prompt requirement): image/audio/video as
@@ -846,7 +845,7 @@ object Multimodal {
       def nextBit(): Int = {
         if (bits == 0) {
           if (pos >= b.length) throw new IllegalStateException("eof")
-          var byteV = b(pos) & 0xff
+          val byteV = b(pos) & 0xff
           pos += 1
           if (byteV == 0xff) {
             val m = if (pos < b.length) b(pos) & 0xff else 0xd9
@@ -1040,7 +1039,7 @@ object Multimodal {
         def nextBit(): Int = {
           if (bits == 0) {
             if (pos >= n) throw new IllegalStateException("eof")
-            var byteV = b(pos) & 0xff
+            val byteV = b(pos) & 0xff
             pos += 1
             if (byteV == 0xff) {
               val m = if (pos < n) b(pos) & 0xff else 0xd9
@@ -2295,7 +2294,7 @@ object Multimodal {
     * deterministic fake dimensions from the payload hash, so non-image
     * media (audio, video containers) still flow through the metadata
     * pipeline with stable values. */
-  def decodeStub(bytes: Array[Byte], sha: String): (Int, Int, Int) = {
+  def decodeStub(sha: String): (Int, Int, Int) = {
     val w = 64 + (java.lang.Long.parseLong(sha.substring(0, 4), 16) % 1024).toInt
     val h = 64 + (java.lang.Long.parseLong(sha.substring(4, 8), 16) % 1024).toInt
     (w, h, 3)
@@ -2416,7 +2415,7 @@ object Multimodal {
         batch.iterator.map { case (path, mime, bytes) =>
           val sha = TextUtil.sha256HexBytes(bytes)
           val (w, h, c) = decodeImageHeader(bytes)
-            .getOrElse(decodeStub(bytes, sha))
+            .getOrElse(decodeStub(sha))
           val feat =
             decodePngPixels(bytes).orElse(decodeGifPixels(bytes))
               .orElse(decodeBmpPixels(bytes))

@@ -352,10 +352,9 @@ object Similarity {
   /** Spherical-KMeans (Lloyd) refinement of the IVF seed centroids:
     * `iters` rounds of assign-to-argmax-dot / mean / re-normalize,
     * starting from the data-adaptive seeds. Empty cells keep their
-    * previous centroid. Used only by the PERSISTED index path
-    * ([[buildIvfIndex]]) — the oracle-checked inline entry ([[annIvf]])
-    * keeps the raw seeds so the DuckDB oracle can reproduce the
-    * quantizer bit-for-bit.
+    * previous centroid. `iters <= 0` returns the seeds unchanged: the
+    * IVF oracle rows build their index that way ([[stagedIndex]]), so
+    * the DuckDB oracle can reproduce the quantizer bit-for-bit.
     *
     * Scale: each iteration is ONE corpus pass via `treeAggregate` — the
     * per-partition state is an nlist×dim double array (16×64 ≈ 8 KB)
@@ -414,13 +413,10 @@ object Similarity {
     * cached blocks to leak. The centroids are Lloyd-refined from the
     * seeds (`lloydIters` spherical k-means rounds — better cell balance
     * and recall at the same nprobe cost; FAISS builds its IVF coarse
-    * quantizer the same way). They go into the in-dir manifest, which
-    * probes read, and into a `<indexDir>.centroids` parquet copy.
-    *
-    * The build registers the index in [[graft.plans.KnnIndexRegistry]].
-    * The first [[probeIvf]] of this build loads its cell files and
-    * schema into that entry, and later probes reuse them until the
-    * manifest changes. */
+    * quantizer the same way) and go into the in-dir manifest, which
+    * registers the index in [[graft.plans.KnnIndexRegistry]]. The first
+    * [[probeIvf]] of this build loads its seeds, cell files and schema,
+    * and later probes reuse them until the manifest changes. */
   def buildIvfIndex(s: SparkSession, dir: String, indexDir: String,
       nlist: Int = IvfNlist, lloydIters: Int = IvfLloydIters): Unit = {
     import s.implicits._
@@ -432,14 +428,7 @@ object Similarity {
         (id, label, emb, argmaxCell(emb, cents)) }
       .toDF("vec_id", "label", "embedding", "cell")
       .write.mode("overwrite").partitionBy("cell").parquet(indexDir)
-    cents.zipWithIndex.map { case (emb, c) => (c, emb) }.toSeq
-      .toDF("cell", "embedding")
-      .write.mode("overwrite").parquet(indexDir + ".centroids")
-    // self-describing index: the in-dir manifest makes the KNN→IVF
-    // optimizer rewrite durable across sessions and JVMs — any session
-    // that sorts this path by cosine recovers the quantizer from disk
-    graft.plans.KnnIndexRegistry
-      .registerPersistent(indexDir, cents, IvfNprobe)
+    graft.plans.KnnIndexRegistry.writeManifest(indexDir, cents, IvfNprobe)
   }
 
   /** Incremental IVF maintenance — the index-side twin of the
@@ -655,16 +644,17 @@ object Similarity {
       queryVec: Array[Float], nprobe: Int,
       excludeId: Option[Long]): Option[DataFrame] = {
     val entry = graft.plans.KnnIndexRegistry.probeEntry(s, indexDir)
-    val files = entry.files.get
+      .getOrElse(throw new IllegalArgumentException(s"$indexDir is not an " +
+        s"IVF index: it has no readable ${graft.plans.KnnIndexRegistry.ManifestName}"))
     val chosen = topCells(queryVec, entry.seeds, nprobe).toSeq
-      .flatMap(c => files.cells.getOrElse(c, Nil))
+      .flatMap(c => entry.cells.getOrElse(c, Nil))
     if (chosen.isEmpty) None
     else {
       // the listing answers from the loaded build, so the file index
       // asks the filesystem nothing
       val scan = Tables.listedParquet(s,
         chosen.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray },
-        files.schema)
+        entry.schema)
       val live = scan.filter(col("vec_id").isNotNull &&
         col("embedding").isNotNull)
       Some(excludeId.fold(live)(id => live.filter(col("vec_id") =!= id))
@@ -713,182 +703,132 @@ object Similarity {
       Row(id, c) }.toSeq.asJava, ProbeSchema)
   }
 
-  /** IVF ANN as one declarative plan (the oracle-checked entry):
-    * assign cells, pick the query's `nprobe` best cells, filter
-    * candidates, exact cosine top-k. No KMeans fit, nothing cached; the
-    * only driver work is the 16-row seed fetch, and the quantizer
-    * arithmetic is reproduced bit-for-bit by the DuckDB oracle. */
-  def annIvf(s: SparkSession, dir: String, k: Int = 10,
-      nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): DataFrame = {
+  /** The raw-seed IVF index of each corpus dir that the IVF oracle rows
+    * probe: built once by [[buildIvfIndex]] with `lloydIters = 0`
+    * (vec_id 1..nlist as centroids, so the DuckDB oracle re-derives the
+    * quantizer bit-for-bit) under a temp root that is removed on JVM
+    * exit, and reused by every later call — build once, probe many is
+    * the serving shape. */
+  private val stagedIndexes =
+    scala.collection.concurrent.TrieMap.empty[String, String]
+
+  private[graft] def stagedIndex(s: SparkSession, dir: String): String =
+    stagedIndexes.getOrElseUpdate(dir, {
+      val root = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        graft.operators.Sync.deleteTree(root.toFile)))
+      val p = root.resolve("ivf").toString
+      buildIvfIndex(s, dir, p, lloydIters = 0)
+      p
+    })
+
+  /** The query vectors of the IVF oracle rows: `(vec_id, embedding)`
+    * of the vectors with id below `n`, by id. */
+  private def queryVecs(s: SparkSession, dir: String,
+      n: Int): Array[(Long, Array[Float])] = {
     import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    val e = Tables.embeddings(s, dir)
-    val seeds = ivfSeeds(s, dir, nlist)
-    val assigned = ivfAssign(s, dir, nlist)
-    val qcells = e.filter(col("vec_id") === 0)
-      .select("embedding").as[Array[Float]]
-      .flatMap(emb => topCells(emb, seeds, nprobe))
-      .toDF("cell")
-    val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    assigned.join(broadcast(qcells), "cell")
-      .filter(col("vec_id") =!= 0)
-      .join(e.select("vec_id", "embedding"), "vec_id")
-      .crossJoin(broadcast(q))
-      .withColumn("cosine", cosineExpr("qv", "embedding"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("cosine").desc, col("vec_id"))))
-      .select(col("rank").cast("long").as("rank"), col("vec_id"))
-      .orderBy("rank")
+    Tables.embeddings(s, dir).filter(col("vec_id") < n)
+      .select("vec_id", "embedding").as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
   }
 
-  /** Staged raw-seed IVF indexes for the optimizer-rewrite row, one per
-    * corpus dir: built once (cell-partitioned parquet under a temp
-    * root), registered in [[graft.plans.KnnIndexRegistry]], reused
-    * across invocations — build-once/probe-many is the serving shape.
-    * The temp root is removed on JVM exit. */
-  private val rewriteIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The ids [[probeIvf]] returns for query `id` on the staged index of
+    * `dir`, best first, the query itself excluded. */
+  private def stagedProbe(s: SparkSession, dir: String, id: Long,
+      qv: Array[Float], k: Int, nprobe: Int): Array[Long] =
+    probeIvf(s, stagedIndex(s, dir), qv, k, nprobe, Some(id))
+      .collect().map(_.getLong(0))
+
+  /** IVF ANN, the oracle-checked entry: [[probeIvf]] of vector 0 on the
+    * staged raw-seed index, self excluded, as `(rank, vec_id)`. An
+    * empty corpus has no query and yields the typed empty frame. */
+  def annIvf(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+    import s.implicits._
+    queryVecs(s, dir, 1).toSeq
+      .flatMap { case (id, qv) => stagedProbe(s, dir, id, qv, k, IvfNprobe) }
+      .zipWithIndex.map { case (id, i) => (i + 1L, id) }
+      .toDF("rank", "vec_id")
+  }
 
   /** SURVEY §4 optional-Catalyst item 3, the ORACLE row: the user
     * writes the brute-force KNN plan — `ORDER BY cosine(q, embedding)
     * DESC LIMIT k` over the index table, no mention of cells — and
-    * [[graft.plans.KnnIvfRewrite]] rewrites it onto the registered IVF
-    * index by injecting the coarse-quantizer partition filter at
-    * optimization time. The index uses the RAW seed quantizer (vec_id
-    * 1..nlist, argmax projection — `emb_ann_ivf`'s machinery, not the
-    * Lloyd-refined build), so the rewritten plan's result is
-    * bit-identical to the explicit IVF path and the row SHARES
-    * `emb_ann_ivf`'s DuckDB oracle: a rewrite that fired on the wrong
-    * shape, pruned the wrong cells, or failed to fire at all (falling
-    * back to exact KNN, whose top-k differs from IVF's on this corpus)
-    * is a hash mismatch. The plan itself is pinned in PlanAuditSpec
-    * (PartitionFilters: cell IN (...), ≤ nprobe/nlist of partitions
-    * scanned). */
-  /** Stage + register the rewrite row's index for `dir` (idempotent);
-    * returns the index path. Exposed package-private so PlanAuditSpec
-    * can pin the scan stage in isolation (AQE hides the scan from a
-    * whole-query collectLeaves). */
-  private[graft] def ensureRewriteIndex(s: SparkSession, dir: String,
-      nlist: Int = IvfNlist, nprobe: Int = IvfNprobe): String = {
-    import s.implicits._
-    graft.functions.VectorExprs.register(s)
-    graft.plans.KnnIvfRewrite.register(s)
-    val seeds = ivfSeeds(s, dir, nlist)
-    val idx = rewriteIndexCache.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_knn_rewrite_idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.operators.Sync.deleteTree(root.toFile)))
-      val p = root.resolve("ivf").toString
-      Tables.embeddings(s, dir)
-        .select("vec_id", "embedding").as[(Long, Array[Float])]
-        .map { case (id, emb) => (id, emb, argmaxCell(emb, seeds)) }
-        .toDF("vec_id", "embedding", "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(p)
-      // durable registration: the manifest travels with the index, so
-      // a brand-new session recovers the quantizer on first lookup
-      graft.plans.KnnIndexRegistry.writeManifest(p, seeds, nprobe)
-      p
-    })
-    // (re-)register every call: the registry is process-global and a
-    // spec's clear() must not strand a cached index unregistered
-    graft.plans.KnnIndexRegistry.register(idx, seeds, nprobe)
-    idx
-  }
-
-  /** The declarative KNN the user writes against the index table — no
-    * cell column anywhere; [[graft.plans.KnnIvfRewrite]] injects the
-    * quantizer prune. Split from the rank projection so the plan pin
-    * can audit the scan stage. */
+    * [[graft.plans.KnnIvfRewrite]] rewrites it onto the staged index
+    * by injecting the coarse-quantizer partition filter at optimization
+    * time. The index is [[annIvf]]'s raw-seed one, so the rewritten
+    * plan's result equals the probe's and the row SHARES `emb_ann_ivf`'s
+    * DuckDB oracle: a rewrite that fired on the wrong shape, pruned the
+    * wrong cells, or failed to fire at all (falling back to exact KNN,
+    * whose top-k differs from IVF's on this corpus) is a hash mismatch.
+    * The plan itself is pinned in PlanAuditSpec (PartitionFilters:
+    * cell IN (...), ≤ nprobe/nlist of partitions scanned).
+    *
+    * This is the declarative KNN the user writes against the index
+    * table — no cell column anywhere; the rule injects the quantizer
+    * prune. Split from the rank projection so the plan pin can audit the
+    * scan stage. */
   private[graft] def knnRewriteScan(s: SparkSession, dir: String,
       k: Int = 10): Option[DataFrame] = {
-    import s.implicits._
     // empty corpus: no query vector, no index to build — the caller
     // emits the typed empty frame
-    val q0 = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").as[Array[Float]].take(1)
-    if (q0.isEmpty) return None
-    val idx = ensureRewriteIndex(s, dir)
-    // the query vector as a SQL literal: vec 0's embedding, each float
-    // through a string cast (shortest-repr round-trip, so the folded
-    // literal is bit-identical to the stored vector)
-    val qv = q0.head
-    val qSql =
-      qv.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ",", ")")
-    val cosSql = s"dot_f($qSql, embedding) / (sqrt(dot_f($qSql, $qSql))" +
-      s" * sqrt(dot_f(embedding, embedding)))"
-    Some(s.read.parquet(idx)
-      .filter(col("vec_id") =!= 0)
-      .withColumn("cosine", expr(cosSql))
-      .orderBy(expr(cosSql).desc, col("vec_id"))
-      .limit(k))
+    queryVecs(s, dir, 1).headOption.map { case (_, qv) =>
+      graft.functions.VectorExprs.register(s)
+      graft.plans.KnnIvfRewrite.register(s)
+      // the query vector as a SQL literal: vec 0's embedding, each float
+      // through a string cast (shortest-repr round-trip, so the folded
+      // literal is bit-identical to the stored vector)
+      val qSql =
+        qv.map(v => s"CAST('$v' AS FLOAT)").mkString("array(", ",", ")")
+      val cosSql = s"dot_f($qSql, embedding) / (sqrt(dot_f($qSql, $qSql))" +
+        s" * sqrt(dot_f(embedding, embedding)))"
+      s.read.parquet(stagedIndex(s, dir))
+        .filter(col("vec_id") =!= 0)
+        .withColumn("cosine", expr(cosSql))
+        .orderBy(expr(cosSql).desc, col("vec_id"))
+        .limit(k)
+    }
   }
 
-  def knnRewriteIvf(s: SparkSession, dir: String, k: Int = 10): DataFrame =
-    knnRewriteScan(s, dir, k) match {
-      case Some(scan) =>
-        scan
-          .withColumn("rank", row_number().over(
-            Window.orderBy(col("cosine").desc, col("vec_id"))))
-          .select(col("rank").cast("long").as("rank"), col("vec_id"))
-          .orderBy("rank")
-      case None =>
-        s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("rank",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("vec_id",
-              org.apache.spark.sql.types.LongType))))
-    }
+  def knnRewriteIvf(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
+    import s.implicits._
+    knnRewriteScan(s, dir, k).fold(Seq.empty[(Long, Long)].toDF("rank", "vec_id"))(
+      _.withColumn("rank", row_number().over(
+          Window.orderBy(col("cosine").desc, col("vec_id"))))
+        .select(col("rank").cast("long").as("rank"), col("vec_id"))
+        .orderBy("rank"))
+  }
 
   /** Recall@k calibration of the IVF probe against exact KNN — the
     * number an ANN deployment actually tunes nprobe by: for each of the
-    * first `nQueries` vectors, the IVF candidate top-k (probing the
-    * query's [[IvfNprobe]] best cells, self excluded) is intersected
-    * with the exact top-k over the ENTIRE corpus (same self-exclusion).
-    * One row per query: overlap count and recall in permille. Both
-    * rankings and the intersection are integer/argmax arithmetic over
-    * the same left-to-right dot products as the standalone rows, so the
-    * oracle re-derives the figure bit-exactly — this is a COMPOSITION
-    * row over `emb_ann_ivf` and `emb_knn_exact`'s machineries, pinning
-    * the seam (candidate domains, self-exclusion, tie-breaks) between
-    * them.
+    * first `nQueries` vectors, the [[probeIvf]] top-k on the staged
+    * raw-seed index (probing the query's `nprobe` best cells, self
+    * excluded) is intersected with the exact top-k over the ENTIRE
+    * corpus (same self-exclusion). One row per query: overlap count and
+    * recall in permille. Both rankings and the intersection are
+    * integer/argmax arithmetic over the same left-to-right dot products
+    * as the standalone rows, so the oracle re-derives the figure
+    * bit-exactly — this is a COMPOSITION row over `emb_ann_ivf` and
+    * `emb_knn_exact`'s machineries, pinning the seam (candidate domains,
+    * self-exclusion, tie-breaks) between them.
     *
-    * Scale: queries broadcast; the exact side is the brute-force scan
-    * the recall DEFINITION requires (run on a sample in production);
-    * the ANN side inherits the IVF plan. The final intersection joins
-    * two ≤ k·|queries|-row sets. */
+    * Scale: one probe per query; the exact side is the brute-force scan
+    * the recall DEFINITION requires (run on a sample in production),
+    * queries broadcast. The final intersection joins two
+    * ≤ k·|queries|-row sets. */
   def ivfRecall(s: SparkSession, dir: String, k: Int = 10,
-      nQueries: Int = 5, nlist: Int = IvfNlist,
-      nprobe: Int = IvfNprobe): DataFrame = {
+      nQueries: Int = 5, nprobe: Int = IvfNprobe): DataFrame = {
     import s.implicits._
     graft.functions.VectorExprs.register(s)
     val e = Tables.embeddings(s, dir)
-    val seeds = ivfSeeds(s, dir, nlist)
-    val assigned = ivfAssign(s, dir, nlist)
     val queries = e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val qcells = e.filter(col("vec_id") < nQueries)
-      .select("vec_id", "embedding").as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        topCells(emb, seeds, nprobe).map(c => (qid, c))
-      }
-      .toDF("query_id", "cell")
+    val ann = queryVecs(s, dir, nQueries).toSeq
+      .flatMap { case (id, qv) =>
+        stagedProbe(s, dir, id, qv, k, nprobe).map(id -> _) }
+      .toDF("query_id", "vec_id")
 
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
-    val ann = assigned.join(broadcast(qcells), "cell")
-      .join(e.select("vec_id", "embedding"), "vec_id")
-      .join(broadcast(queries), "query_id")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosineExpr("qv", "embedding"))
-      .withColumn("rank", row_number().over(wq))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id")
-
     val exact = e.select(col("vec_id"), col("embedding"))
       .crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))

@@ -5,10 +5,11 @@ import graft.QuerySpec
 /** The embedding-similarity rows: exact and approximate KNN, IVF/PQ/LSH
   * indexes, recall reports and clustering; one [[graft.QuerySpec]] per row. */
 object SimilarityQueries {
-  /** The IVF top-k oracle — shared verbatim by `emb_ann_ivf` (the
-    * explicit declarative IVF plan) and `emb_knn_rewrite` (the same
-    * result computed through the KnnIvfRewrite optimizer rule): both
-    * engine paths must reproduce this quantizer arithmetic exactly. */
+  /** The IVF top-k oracle — shared verbatim by `emb_ann_ivf`
+    * (`Similarity.probeIvf` on the staged raw-seed index) and
+    * `emb_knn_rewrite` (the same result computed through the
+    * KnnIvfRewrite optimizer rule over that index): both engine paths
+    * must reproduce this quantizer arithmetic exactly. */
   private def annIvfOracleSql: String =
     s"""WITH e AS (SELECT vec_id,
            list_transform(embedding, v -> CAST(v AS DOUBLE)) AS emb

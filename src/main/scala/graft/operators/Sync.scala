@@ -35,22 +35,15 @@ final case class StoredChunk(url: String, chunk_index: Int,
   */
 object Sync {
 
-  private val ChunkSize = 128
+  /** Characters per chunk of every sync and code run. */
+  private[graft] val ChunkSize = 128
 
-  /** (url, chunk_index, chunk_id, piece) token chunks of a corpus. */
-  private def chunksOf(docs: DataFrame): DataFrame = {
-    val idx = docs
-      .withColumn("i", explode(sequence(lit(0),
-        ceil(length(col("text")).cast("double") / ChunkSize).cast("int") - 1)))
-      .withColumn("piece",
-        trim(expr(s"substring(text, i*$ChunkSize+1, $ChunkSize)")))
-      .filter(col("piece") =!= "")
-    idx
-      .withColumn("url", concat(lit("doc://"), col("doc_id")))
-      .withColumn("chunk_id",
-        sha2(concat(col("url"), lit("::"), col("piece")), 256))
-      .select("url", "i", "chunk_id", "piece")
-  }
+  /** (url, chunk_id): one row per chunk of the simulated corpus `docs`,
+    * the [[chunksOfUrls]] chunks of its `doc://<doc_id>` urls. */
+  private def chunkRows(docs: DataFrame): DataFrame =
+    chunksOfUrls(docs.select(concat(lit("doc://"), col("doc_id")).as("url"),
+        col("text")), ChunkSize)
+      .select(col("url"), explode(col("chunk_ids")).as("chunk_id"))
 
   private def storedDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).filter(col("doc_id") % 13 =!= 0)
@@ -88,10 +81,10 @@ object Sync {
 
   /** Unsorted per-url diff statuses — shared with skipCascade. */
   private def urlStatuses(s: SparkSession, dir: String): DataFrame = {
-    val stored = signatures(chunksOf(storedDocs(s, dir)))
+    val stored = signatures(chunkRows(storedDocs(s, dir)))
       .withColumnRenamed("sig", "stored_sig")
       .withColumnRenamed("n_chunks", "stored_chunks")
-    val incoming = signatures(chunksOf(incomingDocs(s, dir)))
+    val incoming = signatures(chunkRows(incomingDocs(s, dir)))
     incoming.join(stored, Seq("url"), "left")
       .withColumn("status",
         when(col("stored_sig").isNull, "new")
@@ -108,8 +101,8 @@ object Sync {
 
   /** Unsorted per-url to-embed counts — shared with skipCascade. */
   private def chunkDeltaCounts(s: SparkSession, dir: String): DataFrame = {
-    val stored = chunksOf(storedDocs(s, dir)).select("chunk_id")
-    chunksOf(incomingDocs(s, dir))
+    val stored = chunkRows(storedDocs(s, dir)).select("chunk_id")
+    chunkRows(incomingDocs(s, dir))
       .join(stored, Seq("chunk_id"), "left_anti")
       .groupBy(col("url"))
       .agg(count(lit(1)).as("chunks_to_embed"))
@@ -191,7 +184,7 @@ object Sync {
   def cleanup(s: SparkSession, dir: String): DataFrame = {
     val visited = incomingDocs(s, dir)
       .select(concat(lit("doc://"), col("doc_id")).as("url"))
-    chunksOf(storedDocs(s, dir))
+    chunkRows(storedDocs(s, dir))
       .join(visited, Seq("url"), "left_anti")
       .groupBy(col("url"))
       .agg(count(lit(1)).as("chunks_deleted"))
@@ -369,8 +362,8 @@ object Sync {
     * driver. */
   def syncRun(s: SparkSession, incoming: DataFrame, storeRoot: String,
       statePath: String, runId: Long, urlPrefix: String = "",
-      hasNetworkErrors: Boolean = false, scanIncomplete: Boolean = false,
-      chunkSize: Int = 128): DataFrame = {
+      hasNetworkErrors: Boolean = false,
+      scanIncomplete: Boolean = false): DataFrame = {
     import graft.sources.{ChunkStore, SyncState}
     val force = SyncState.forceFullSync(s, statePath, urlPrefix)
     val storedChunks = ChunkStore.readLatest(s, storeRoot)
@@ -382,7 +375,7 @@ object Sync {
     def total(slice: Column => Column): Column =
       aggregate(transform(col("chunk_ids"), slice), lit(0L), _ + _)
     val none = lit(null).cast("long")
-    val sides = chunksOfUrls(incoming, chunkSize)
+    val sides = chunksOfUrls(incoming, ChunkSize)
       .select(col("url"), lit(1L).as("docs"),
         when(col("n_chunks") > 0, col("n_chunks").cast("long")).as("n"),
         total(lowSlice).as("lo"), total(highSlice).as("hi"),
@@ -419,9 +412,9 @@ object Sync {
     val upserted = statuses("new") ++ statuses("updated")
     val cleanup = !hasNetworkErrors && !scanIncomplete
     val (processed, reusable) =
-      if (force) (chunksOfUrls(incoming, chunkSize), storedChunks)
+      if (force) (chunksOfUrls(incoming, ChunkSize), storedChunks)
       else (chunksOfUrls(incoming.filter(col("url").isin(upserted: _*)),
-          chunkSize),
+          ChunkSize),
         storedChunks.filter(col("url").isin(upserted: _*)))
     val embedded = Observation()
     val rows = observeEmbedded(embedDelta(processed, reusable), embedded)
@@ -552,7 +545,7 @@ object Sync {
     * verdict per point class: obsolete DATA urls get deleted, metadata
     * points are kept even though their urls look obsolete. */
   def metadataExclusion(s: SparkSession, dir: String): DataFrame = {
-    val dataPoints = chunksOf(storedDocs(s, dir))
+    val dataPoints = chunkRows(storedDocs(s, dir))
       .select(col("url")).withColumn("is_metadata", lit(false))
     val metaPoints = Tables.documents(s, dir)
       .filter(col("doc_id") % 25 === 0)
@@ -576,10 +569,10 @@ object Sync {
   /** Per-run counters (reference SourceRunStats, types.ts:158-190):
     * items_new/updated/unchanged/deleted + chunks_added/deleted. */
   def runCounters(s: SparkSession, dir: String): DataFrame = {
-    val stored = signatures(chunksOf(storedDocs(s, dir)))
+    val stored = signatures(chunkRows(storedDocs(s, dir)))
       .withColumnRenamed("sig", "stored_sig")
       .withColumnRenamed("n_chunks", "stored_chunks")
-    val incoming = signatures(chunksOf(incomingDocs(s, dir)))
+    val incoming = signatures(chunkRows(incomingDocs(s, dir)))
     val joined = incoming.join(stored, Seq("url"), "full_outer")
       .withColumn("status",
         when(col("sig").isNull, "deleted")

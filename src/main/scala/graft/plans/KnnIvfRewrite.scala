@@ -2,7 +2,7 @@ package graft.plans
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -14,76 +14,48 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, StructType}
 
 import graft.functions.DotProductF
 
-/** ANN index registry: declaring an IVF index for a path opts KNN
-  * queries over that path into index-accelerated (approximate) answers.
-  *
-  * This is the contract every vector store ships: the user REGISTERS an
-  * index over a corpus, and from then on `ORDER BY cosine DESC LIMIT k`
-  * against it is answered through the index — approximate by
-  * declaration, with `nprobe` the declared recall/cost dial. The
-  * registry holds only index METADATA (the nlist seed centroids and the
-  * probe width, a few KB); the rewrite never fires for unregistered
-  * paths, so ordinary sorts are untouched.
+/** ANN index registry: an IVF index is registered by the manifest its
+  * build writes into the index directory ([[writeManifest]]), and by
+  * nothing else. KNN queries over a registered path are answered
+  * through the index, approximately by declaration, with `nprobe` the
+  * declared recall/cost dial: [[graft.operators.Similarity.probeIvf]]
+  * probes it, and [[KnnIvfRewrite]] rewrites `ORDER BY cosine DESC
+  * LIMIT k` against it. Both load the index through [[probeEntry]]; the
+  * in-memory map only caches loaded builds. A path without a readable
+  * manifest is not an index, so ordinary sorts are untouched.
   */
 object KnnIndexRegistry {
-  /** An index's quantizer, plus what a probe reads of one on-disk build
-    * once a probe has loaded it ([[probeEntry]]). */
-  final case class Entry(seeds: Array[Array[Float]], nprobe: Int,
-      files: Option[ProbeFiles] = None)
-
-  /** One on-disk build as a probe reads it: each cell's leaf data files
+  /** One on-disk build as a probe reads it: the quantizer (the nlist
+    * seed centroids and the probe width), each cell's leaf data files
     * and their schema, loaded when the manifest had `fingerprint`
     * (modification time, length). */
-  final case class ProbeFiles(fingerprint: (Long, Long),
-      cells: Map[Int, Seq[FileStatus]], schema: StructType)
+  final case class Entry(seeds: Array[Array[Float]], nprobe: Int,
+      fingerprint: (Long, Long), cells: Map[Int, Seq[FileStatus]],
+      schema: StructType)
 
   /** Manifest file written INSIDE the index directory. The underscore
     * prefix makes Spark's file index treat it as metadata (like
     * `_SUCCESS`), so it never pollutes the parquet scan — and because
-    * it travels WITH the index, any session that scans the path can
-    * recover the quantizer without out-of-band registration. This is
-    * what makes the registry durable: the in-memory map is just a
-    * cache over the on-disk manifests. */
+    * it travels WITH the index, any session or JVM that scans the path
+    * recovers the quantizer from disk. */
   val ManifestName = "_graft_knn_manifest"
 
   private val entries = TrieMap.empty[String, Entry]
-  /** Paths probed on disk and found manifest-less — cached so ordinary
-    * sorts over non-index tables pay the filesystem round-trip at most
-    * once per path per process. Invalidated by [[register]]/[[clear]]. */
-  private val misses = TrieMap.empty[String, Unit]
 
-  /** Canonical registry key: local paths (no scheme, or `file:`)
-    * normalize to the bare absolute path so `register("/x")` matches a
-    * scan of `file:/x`; any other filesystem keeps its full
-    * scheme+authority URI — at cluster scale `hdfs://nn/x` and a local
-    * `/x` are different indexes and must not collide. */
+  /** Canonical cache key: local paths (no scheme, or `file:`)
+    * normalize to the bare absolute path so `/x` matches a scan of
+    * `file:/x`; any other filesystem keeps its full scheme+authority
+    * URI — at cluster scale `hdfs://nn/x` and a local `/x` are
+    * different indexes and must not collide. */
   private def canon(p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
+    val hp = new Path(p)
     val u = hp.toUri
     if (u.getScheme == null || u.getScheme == "file")
       new java.io.File(u.getPath).getAbsolutePath.stripSuffix("/")
     else hp.toString.stripSuffix("/")
   }
 
-  def register(indexPath: String, seeds: Array[Array[Float]],
-      nprobe: Int): Unit = {
-    val k = canon(indexPath)
-    misses.remove(k)
-    entries(k) = Entry(seeds, nprobe)
-  }
-
-  /** Register AND persist: writes the manifest beside the index data so
-    * a brand-new session (or JVM) recovers the entry on first lookup.
-    * Seeds are serialized as base64 of their IEEE-754 bytes — the
-    * round-trip is bit-exact, so a recovered quantizer ranks cells
-    * identically to the session that built the index. */
-  def registerPersistent(indexPath: String, seeds: Array[Array[Float]],
-      nprobe: Int): Unit = {
-    writeManifest(indexPath, seeds, nprobe)
-    register(indexPath, seeds, nprobe)
-  }
-
-  def clear(): Unit = { entries.clear(); misses.clear() }
+  def clear(): Unit = entries.clear()
 
   private def seedsToB64(seeds: Array[Array[Float]]): String = {
     val dim = if (seeds.isEmpty) 0 else seeds(0).length
@@ -101,10 +73,10 @@ object KnnIndexRegistry {
       Array.fill(dim)(bb.getFloat))
   }
 
-  /** The IVF index manifest (`kind=ivf`): the loaders read it back,
-    * and the reader rejects any other `kind` for the KNN→IVF optimizer
-    * rewrite (a table without a raw `embedding` column cannot be pruned
-    * under a cosine sort). */
+  /** Register the index at `indexPath`: write its `kind=ivf` manifest.
+    * Seeds are serialized as base64 of their IEEE-754 bytes — the
+    * round-trip is bit-exact, so a recovered quantizer ranks cells
+    * identically to the session that built the index. */
   def writeManifest(indexPath: String, seeds: Array[Array[Float]],
       nprobe: Int): Unit = {
     val dim = if (seeds.isEmpty) 0 else seeds(0).length
@@ -115,117 +87,81 @@ object KnnIndexRegistry {
          |dim=$dim
          |seeds=${seedsToB64(seeds)}
          |""".stripMargin
-    val p = new org.apache.hadoop.fs.Path(indexPath, ManifestName)
+    val p = new Path(indexPath, ManifestName)
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val out = fs.create(p, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
-  /** Probe `<dir>/_graft_knn_manifest` on the index's own filesystem;
-    * malformed, absent, or a non-`ivf` kind → None for the REWRITE
-    * path (the rewrite stands down, exact scan runs — degraded
-    * performance, never a wrong answer). */
-  private[plans] def loadManifest(dir: org.apache.hadoop.fs.Path)
-      : Option[Entry] =
-    readManifestAt(dir, new org.apache.hadoop.conf.Configuration()).collect {
-      case ("ivf", seeds, nprobe) => Entry(seeds, nprobe)
-    }
-
-  /** (kind, seeds, nprobe) of the manifest in `dir`; malformed or
-    * absent → None. */
-  private def readManifestAt(dir: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Option[(String, Array[Array[Float]], Int)] =
+  /** (seeds, nprobe) of the manifest at `p`; malformed, unreadable or a
+    * kind other than `ivf` → None. */
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+      p: Path): Option[(Array[Array[Float]], Int)] =
     try {
-      val p = new org.apache.hadoop.fs.Path(dir, ManifestName)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
       val in = fs.open(p)
       val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](8192)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          new String(buf.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
       val lines = text.linesIterator.toSeq
-      if (!lines.headOption.exists(_.startsWith("graft-knn-manifest")))
-        return None
-      val kv = lines.tail.flatMap { l =>
+      val kv = lines.drop(1).flatMap { l =>
         l.split("=", 2) match {
           case Array(k, v) => Some(k -> v)
           case _ => None
         }
       }.toMap
-      for {
+      if (!lines.headOption.exists(_.startsWith("graft-knn-manifest")) ||
+          kv.get("kind").exists(_ != "ivf")) None
+      else for {
         nprobe <- kv.get("nprobe").map(_.toInt)
         dim <- kv.get("dim").map(_.toInt)
         b64 <- kv.get("seeds")
-      } yield (kv.getOrElse("kind", "ivf"), seedsFromB64(b64, dim), nprobe)
+      } yield (seedsFromB64(b64, dim), nprobe)
     } catch { case _: Exception => None }
 
   private val CellDir = """cell=(\d+)""".r
 
-  /** The entry of the index at `indexDir` with its [[ProbeFiles]]. A
-    * build is loaded once: its seeds from the manifest, each cell's leaf
-    * files from one listing, the schema from one footer. Every call
-    * compares the manifest's fingerprint, one status call through the
-    * session's Hadoop conf, with the loaded one, so a rebuild at the
-    * same path by any writer is reloaded. (A rebuild rewrites the
-    * manifest after its data, far later than the filesystem's
-    * modification-time resolution.) */
-  private[graft] def probeEntry(s: SparkSession, indexDir: String): Entry = {
-    val conf = s.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val manifest = new org.apache.hadoop.fs.Path(dir, ManifestName)
-    val fs = manifest.getFileSystem(conf)
+  /** The loaded build of the index at `indexDir`; None when the path
+    * has no manifest or a malformed one (a probe then fails, and the
+    * rewrite stands down so the exact scan runs — degraded performance,
+    * never a wrong answer). A build is loaded once: its seeds from the
+    * manifest, each cell's leaf files from one listing, the schema from
+    * one footer. Every call compares the manifest's fingerprint, one
+    * status call through the session's Hadoop conf, with the loaded
+    * one, so a rebuild or a new manifest at the same path by any writer
+    * is reloaded. (A rebuild rewrites the manifest after its data, far
+    * later than the filesystem's modification-time resolution.) */
+  private[graft] def probeEntry(s: SparkSession,
+      indexDir: String): Option[Entry] = {
+    val dir = new Path(indexDir)
+    val manifest = new Path(dir, ManifestName)
+    val fs = manifest.getFileSystem(s.sessionState.newHadoopConf())
     val st =
-      try fs.getFileStatus(manifest)
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"$indexDir is not an IVF index: it has no $ManifestName") }
-    val fingerprint = (st.getModificationTime, st.getLen)
-    val key = canon(indexDir)
-    entries.get(key) match {
-      case Some(e) if e.files.exists(_.fingerprint == fingerprint) => e
-      case _ =>
-        val (_, seeds, nprobe) = readManifestAt(dir, conf).getOrElse(
-          throw new IllegalArgumentException(s"$indexDir: malformed $ManifestName"))
-        val cells = fs.listStatus(dir).toSeq.flatMap { d =>
-          d.getPath.getName match {
-            case CellDir(c) if d.isDirectory =>
-              Some(c.toInt -> fs.listStatus(d.getPath).toSeq
-                .filter(graft.Tables.isDataFile))
-            case _ => None
-          }
-        }.toMap
-        val schema = graft.Tables
-          .footerSchema(s, cells.values.flatten.toSeq)
-          .getOrElse(new StructType())
-        val e = Entry(seeds, nprobe,
-          Some(ProbeFiles(fingerprint, cells, schema)))
-        entries(key) = e
-        e
+      try Some(fs.getFileStatus(manifest))
+      catch { case _: java.io.FileNotFoundException => None }
+    st.flatMap { st =>
+      val fingerprint = (st.getModificationTime, st.getLen)
+      val key = canon(indexDir)
+      entries.get(key).filter(_.fingerprint == fingerprint).orElse {
+        readManifest(fs, manifest).map { case (seeds, nprobe) =>
+          val cells = fs.listStatus(dir).toSeq.flatMap { d =>
+            d.getPath.getName match {
+              case CellDir(c) if d.isDirectory =>
+                Some(c.toInt -> fs.listStatus(d.getPath).toSeq
+                  .filter(graft.Tables.isDataFile))
+              case _ => None
+            }
+          }.toMap
+          val schema = graft.Tables
+            .footerSchema(s, cells.values.flatten.toSeq)
+            .getOrElse(new StructType())
+          val e = Entry(seeds, nprobe, fingerprint, cells, schema)
+          entries(key) = e
+          e
+        }
+      }
     }
   }
-
-  private[plans] def lookup(
-      rootPaths: Seq[org.apache.hadoop.fs.Path]): Option[Entry] =
-    rootPaths match {
-      case Seq(p) =>
-        val key = canon(p.toString)
-        entries.get(key).orElse {
-          if (misses.contains(key)) None
-          else loadManifest(p) match {
-            case some @ Some(e) => entries(key) = e; some
-            case None => misses(key) = (); None
-          }
-        }
-      case _ => None
-    }
 }
 
 /** SURVEY §4 optional-Catalyst item 3: a `Rule[LogicalPlan]` that
@@ -240,16 +176,16 @@ object KnnIndexRegistry {
   * shape, extracts the (constant-folded) query vector literal from the
   * sort key's `dot_f(queryLit, embedding)` term, ranks the registry's
   * centroids against it ON THE DRIVER at optimization time (nlist dot
-  * products — pure metadata math, the same `topCells` arithmetic the
-  * explicit `annIvf` path uses), and narrows the scan to the `nprobe`
+  * products — pure metadata math, the same `topCells` arithmetic
+  * [[graft.operators.Similarity.probeIvf]] uses), and narrows the scan to the `nprobe`
   * best cells. FileSourceStrategy then turns the injected predicate
   * into PartitionFilters: candidate IO drops to ~nprobe/nlist of the
   * corpus, which is the entire point of IVF at 100 TB.
   *
   * Safety rails: fires only under a Limit (pruning an UNLIMITED sort
   * would change its full result set, top-k is the approximable shape),
-  * only for single-root scans registered in [[KnnIndexRegistry]] (the
-  * registration IS the user's opt-in to approximate answers), only when
+  * only for single-root scans with an IVF manifest (the manifest IS
+  * the user's opt-in to approximate answers), only when
   * the first sort key is a Descending expression whose `dot_f` pairs a
   * foldable float-array literal with the scanned relation's own
   * embedding column, and never twice (rewritten relations are tagged —
@@ -341,12 +277,14 @@ object KnnIvfRewrite extends Rule[LogicalPlan] {
       child: LogicalPlan): Option[LogicalPlan] = {
     // the index relation: single-root file scan of a registered path,
     // exposing the quantizer's `cell` partition column, not yet rewritten
-    val target = findRelation(child).collect {
+    val target = findRelation(child).flatMap {
       case rel @ LogicalRelation(fs: HadoopFsRelation, out, _, _, _)
           if rel.getTagValue(RewrittenTag).isEmpty &&
             out.exists(_.name == "cell") &&
-            KnnIndexRegistry.lookup(fs.location.rootPaths).isDefined =>
-        (rel, KnnIndexRegistry.lookup(fs.location.rootPaths).get)
+            fs.location.rootPaths.size == 1 =>
+        KnnIndexRegistry.probeEntry(fs.sparkSession,
+          fs.location.rootPaths.head.toString).map(rel -> _)
+      case _ => None
     }
     target.flatMap { case (rel, entry) =>
       val embedding =

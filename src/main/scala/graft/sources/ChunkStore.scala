@@ -38,17 +38,6 @@ import org.apache.spark.sql.types.BooleanType
   * has the same discipline (one sync process per collection). */
 object ChunkStore {
 
-  /** Partitioned by (product_name, version) — the collection scope of
-    * SURVEY §1.3 (reference database.ts:28 keys one collection per
-    * `<product>_<version>`): a query scoped to one product+version
-    * prunes to exactly that directory pair at PLANNING time, so a
-    * one-table-many-versions store never scans other versions' files.
-    * PlanAuditSpec pins the pruning against the live plan. */
-  def write(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy("product_name", "version")
-      .parquet(path)
-
   /** Most live data directories a snapshot may have. A read lists
     * every live directory on the driver and scans each one's files, so
     * the fixed cost of a read grows with the count; 8 keeps it near a
@@ -292,9 +281,6 @@ object ChunkStore {
         .localCheckpoint(true)
     } finally graft.operators.Sync.deleteTree(base.toFile)
   }
-
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Chunk inspector (reference controller/chunk-inspector.ts:42-206):
     * all chunks of one url, created_at attached via LEFT JOIN on

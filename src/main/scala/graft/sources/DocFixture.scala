@@ -113,7 +113,7 @@ object DocFixture {
       if (b.isEmpty) Seq((t1.length, (1024L * 2) | (1L << 30)))
       else Seq((t1.length, (1024L * 2) | (1L << 30)), (s2.length, 2048L))
     val n = pieces.length
-    var p = tblOrigin
+    val p = tblOrigin
     tbl(p) = 0x02
     val lcbPlc = 4 * (n + 1) + 8 * n
     putU32(tbl, p + 1, lcbPlc.toLong)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.{StoredChunk, Sync}
+import graft.operators.Sync
 
 /** Pure semantics of the GitHub code source's incremental layer
   * (reference doc2vec.ts:1347-1464): the SHA watermark key, the
@@ -169,7 +169,7 @@ object GitCode {
     val docs = Sync.chunksOfUrls(processFiles.as(PathText)
       .map { case (p, t) =>
         (codeFileUrl(p, repoPath, None, Some(urlPrefix)), t)
-      }(PathText).toDF("url", "text"), 128)
+      }(PathText).toDF("url", "text"), Sync.ChunkSize)
     // the processed files on the driver: files_processed, the urls to
     // upsert and the files that chunk to nothing
     val processed = docs.select("url", "n_chunks").as(UrlChunks).collect()

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Chunk
-import graft.functions.HtmlToMarkdown
 import graft.operators.Chunker
 
 /** Local-directory / code-directory source (SURVEY.md §2.1, reference

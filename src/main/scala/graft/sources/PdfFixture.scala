@@ -127,7 +127,7 @@ object PdfFixture {
       crypt: Option[(Int, String, String, Boolean, Boolean)]): Array[Byte] = {
     val (finalObjs, encryptFrag) = crypt match {
       case None => (objs, "")
-      case Some((r, userPw, ownerPw, literalOU, _)) if r >= 5 =>
+      case Some((r, userPw, ownerPw, _, _)) if r >= 5 =>
         val (fileKey, dict) = v5Credentials(userPw, ownerPw, id0, r)
         val encNum = objs.map(_.num).max + 1
         val enc = objs.map { ro =>

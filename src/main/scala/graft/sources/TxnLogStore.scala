@@ -142,8 +142,7 @@ object TxnLogStore {
   }
 
   /** Live file set at `version`: fold of the ordered log prefix. */
-  private[graft] def liveFiles(s: SparkSession, root: String,
-      version: Long): Seq[String] =
+  private[graft] def liveFiles(root: String, version: Long): Seq[String] =
     snapshot(root, version).live.map(_._1)
 
   /** Stage the immutable data files of the three-commit fixture. */
@@ -155,11 +154,41 @@ object TxnLogStore {
         .write.parquet(s"$root/f$r"))
   }
 
-  /** The per-version snapshot report shared by the batch and streaming
-    * rows. */
+  /** The fixture's three commits, (adds, removes) at versions 0..2:
+    * add f0+f1; add f2 while removing f0 (a rewrite); add f3. */
+  private val FixtureCommits = Seq(Seq("f0", "f1") -> Seq.empty[String],
+    Seq("f2") -> Seq("f0"), Seq("f3") -> Seq.empty[String])
+
+  /** Stage the three-commit fixture under a fresh temp root, run `f`
+    * on its store root and delete it; `f` materializes its result. */
+  private def onFixture(s: SparkSession, dir: String, prefix: String)(
+      f: String => DataFrame): DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    try {
+      val root = s"$base/store"
+      stageDataFiles(s, dir, root)
+      FixtureCommits.zipWithIndex.foreach { case ((adds, removes), v) =>
+        commit(root, v.toLong, adds, removes) }
+      f(root)
+    } finally graft.operators.Sync.deleteTree(base.toFile)
+  }
+
+  /** The compaction job: rewrite the head's live set into one file
+    * `fc` and swap it in atomically by a single commit. */
+  private def compact(s: SparkSession, root: String): Unit = {
+    val live = liveFiles(root, latestVersion(root))
+    s.read.schema("doc_id LONG")
+      .parquet(live.map(f => s"$root/$f"): _*)
+      .coalesce(1).write.parquet(s"$root/fc")
+    commitOptimistic(root, Seq("fc"), live)
+  }
+
+  /** Every snapshot of the store at `root`, version 0 to the head: live
+    * file count plus row count / id checksum of the folded table
+    * state. Shared by every txn row. */
   private def snapshotReport(s: SparkSession, root: String): DataFrame =
-    (0L to 2L).map { v =>
-      val files = liveFiles(s, root, v)
+    (0L to latestVersion(root)).map { v =>
+      val files = liveFiles(root, v)
       val state =
         if (files.isEmpty)
           s.createDataFrame(s.sparkContext
@@ -182,17 +211,8 @@ object TxnLogStore {
   /** Stage the three-commit fixture and report every snapshot:
     * per version, live file count plus row count / id checksum of the
     * folded table state. */
-  def txnLogReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("txnlog")
-    try {
-      val root = s"$base/store"
-      stageDataFiles(s, dir, root)
-      commit(root, 0L, Seq("f0", "f1"), Seq.empty)
-      commit(root, 1L, Seq("f2"), Seq("f0")) // rewrite: f0 evicted
-      commit(root, 2L, Seq("f3"), Seq.empty)
-      snapshotReport(s, root)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+  def txnLogReport(s: SparkSession, dir: String): DataFrame =
+    onFixture(s, dir, "txnlog")(snapshotReport(s, _))
 
   /** Streaming twin of [[txnLogReport]]: the SAME three commits arrive
     * as a micro-batch stream of commit requests, applied through
@@ -242,12 +262,9 @@ object TxnLogStore {
       stageDataFiles(s, dir, root)
       val reqDir = base.resolve("requests")
       java.nio.file.Files.createDirectories(reqDir)
-      Seq("""{"adds":"f0,f1","removes":""}""",
-        """{"adds":"f2","removes":"f0"}""",
-        """{"adds":"f3","removes":""}""").zipWithIndex.foreach {
-        case (line, i) =>
-          java.nio.file.Files.writeString(reqDir.resolve(s"commit$i.json"),
-            line)
+      FixtureCommits.zipWithIndex.foreach { case ((adds, removes), i) =>
+        java.nio.file.Files.writeString(reqDir.resolve(s"commit$i.json"),
+          s"""{"adds":"${adds.mkString(",")}","removes":"${removes.mkString(",")}"}""")
       }
       graft.streaming.Replay.stamp(reqDir.toString)
       val q = graft.streaming.Replay.read(s, base, Seq("requests"), "json")
@@ -270,37 +287,11 @@ object TxnLogStore {
     * post-compaction snapshot to the three fixture snapshots; content
     * preservation (same rows, same checksum, fewer files) is the
     * contract the shared-construction oracle re-derives. */
-  def compactionTxnReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("txncompact")
-    try {
-      val root = s"$base/store"
-      stageDataFiles(s, dir, root)
-      commit(root, 0L, Seq("f0", "f1"), Seq.empty)
-      commit(root, 1L, Seq("f2"), Seq("f0"))
-      commit(root, 2L, Seq("f3"), Seq.empty)
-      // the compaction job: rewrite the head's live set into one file,
-      // swap atomically in a single commit
-      val head = latestVersion(root)
-      val live = liveFiles(s, root, head)
-      s.read.schema("doc_id LONG")
-        .parquet(live.map(f => s"$root/$f"): _*)
-        .coalesce(1).write.parquet(s"$root/fc")
-      commitOptimistic(root, Seq("fc"), live)
-      (0L to 3L).map { v =>
-        val files = liveFiles(s, root, v)
-        s.read.schema("doc_id LONG")
-          .parquet(files.map(f => s"$root/$f"): _*)
-          .agg(lit(v).as("version"),
-            lit(files.length.toLong).as("n_files"),
-            count(lit(1)).as("n_rows"),
-            coalesce(sum(col("doc_id")), lit(0L)).as("sum_doc_id"))
-      }.reduce(_ unionByName _)
-        .select(col("version"), col("n_files"),
-          col("n_rows").cast("long"), col("sum_doc_id").cast("long"))
-        .orderBy("version")
-        .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+  def compactionTxnReport(s: SparkSession, dir: String): DataFrame =
+    onFixture(s, dir, "txncompact") { root =>
+      compact(s, root)
+      snapshotReport(s, root)
+    }
 
   /** Vacuum with a retention horizon — the space-for-history trade the
     * log layout defers: data files referenced by NO snapshot at or
@@ -329,19 +320,9 @@ object TxnLogStore {
     * reader path never referenced a vacuumed file). Oracle: pure
     * construction arithmetic (5 staged files; head references only the
     * compacted one; membership = slices 1,2,3). */
-  def vacuumTxnReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("txnvacuum")
-    try {
-      val root = s"$base/store"
-      stageDataFiles(s, dir, root)
-      commit(root, 0L, Seq("f0", "f1"), Seq.empty)
-      commit(root, 1L, Seq("f2"), Seq("f0"))
-      commit(root, 2L, Seq("f3"), Seq.empty)
-      val live = liveFiles(s, root, latestVersion(root))
-      s.read.schema("doc_id LONG")
-        .parquet(live.map(f => s"$root/$f"): _*)
-        .coalesce(1).write.parquet(s"$root/fc")
-      commitOptimistic(root, Seq("fc"), live)
+  def vacuumTxnReport(s: SparkSession, dir: String): DataFrame =
+    onFixture(s, dir, "txnvacuum") { root =>
+      compact(s, root)
       def diskFiles: Long = Option(new java.io.File(root).listFiles())
         .getOrElse(Array.empty)
         .count(f => f.isDirectory && f.getName != "_log").toLong
@@ -350,7 +331,7 @@ object TxnLogStore {
       val deleted = vacuum(root, retainFrom = head)
       val after = diskFiles
       s.read.schema("doc_id LONG")
-        .parquet(liveFiles(s, root, head).map(f => s"$root/$f"): _*)
+        .parquet(liveFiles(root, head).map(f => s"$root/$f"): _*)
         .agg(lit(before).as("n_disk_before"), lit(after).as("n_disk_after"),
           lit(deleted.length.toLong).as("n_vacuumed"),
           count(lit(1)).as("head_rows"),
@@ -359,6 +340,5 @@ object TxnLogStore {
           col("n_vacuumed"), col("head_rows").cast("long"),
           col("head_sum").cast("long"))
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+    }
 }

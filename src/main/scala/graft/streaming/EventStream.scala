@@ -122,74 +122,29 @@ object EventStream {
       ()
     }
 
+  /** The product name and version every streamed chunk carries. */
+  private val StreamProduct = "stream"
+  private val StreamVersion = "v1"
+
   /** The reference's whole WRITE path as one Structured Streaming job
     * (readStream pages → chunk → embed → merge): each micro-batch of
     * (url, content) markdown pages runs the SAME heading-aware chunker
-    * and hermetic embedder as the batch path — typed per-row kernels,
-    * embarrassingly parallel, no shuffle before the store merge — and
-    * merges into the versioned chunk store. Chunk rows carry the
-    * DocumentChunk identity columns plus the embedding, so a streamed
-    * store answers the same retrieval queries as a batch-built one.
-    * At-least-once redelivery converges: chunk ids are content hashes
-    * and the merge replaces whole urls
-    * ([[graft.sources.ChunkStore.upsertVersioned]]'s contract). */
-  /** Chunk-level EMBED SKIP for the streaming sink — the reference's
-    * hash check (doc2vec.ts:515-553) applied per micro-batch: a chunk
-    * id is the sha-256 of its url::content, so an id already in the
-    * store proves the content is byte-identical and its stored
-    * embedding is reusable. Returns the chunk frame with `embedding`
-    * filled (reused or freshly computed) plus an `embedding_reused`
-    * flag (callers drop it before the merge; tests read it).
+    * and hermetic embedder as the batch path — one typed per-row
+    * kernel, embarrassingly parallel, no shuffle before the store
+    * merge — and merges into the versioned chunk store. Chunk rows
+    * carry the DocumentChunk identity columns plus the embedding, so a
+    * streamed store answers the same retrieval queries as a batch-built
+    * one. At-least-once redelivery converges: chunk ids are content
+    * hashes and the merge replaces whole urls
+    * ([[graft.sources.ChunkStore.upsertVersioned]]'s contract).
     *
-    * Scale shape: the 100 TB store is NEVER shuffled — the incoming
-    * batch's ids (micro-batch-sized) BROADCAST onto one map-side pass
-    * over the store to collect the hits, and the hits (≤ batch size)
-    * broadcast back onto the incoming chunks. The embed kernel then
-    * runs only on the misses. On a corpus where most syncs touch few
-    * documents, this removes the dominant per-batch cost exactly like
-    * the batch path's anti-join-before-embed. */
-  private[graft] def embedWithReuse(chunks: DataFrame,
-      stored: Option[DataFrame]): DataFrame = {
-    val s = chunks.sparkSession
-    import s.implicits._
-    val hits = stored match {
-      case Some(st) if st.columns.contains("embedding") =>
-        st.select(col("chunk_id"), col("embedding"))
-          .join(org.apache.spark.sql.functions
-            .broadcast(chunks.select("chunk_id").distinct()), "chunk_id")
-          .dropDuplicates("chunk_id")
-          .withColumnRenamed("embedding", "stored_embedding")
-      case _ => s.emptyDataset[(String, Array[Float])]
-        .toDF("chunk_id", "stored_embedding")
-    }
-    chunks
-      .join(org.apache.spark.sql.functions.broadcast(hits),
-        Seq("chunk_id"), "left")
-      .select(col("url"), col("chunk_id"), col("chunk_index"),
-        col("total_chunks"), col("section"), col("content"),
-        col("stored_embedding"))
-      .as[(String, String, Int, Int, String, String, Option[Seq[Float]])]
-      .map { case (url, cid, idx, total, section, content, storedEmb) =>
-        val emb = storedEmb.map(_.toArray)
-          .getOrElse(graft.functions.Embedder.embed(content))
-        (url, cid, idx, total, section, content, emb, storedEmb.isDefined)
-      }
-      .toDF("url", "chunk_id", "chunk_index", "total_chunks",
-        "section", "content", "embedding", "embedding_reused")
-  }
-
-  /** `embedReuse` selects the chunk-level embed-skip
-    * ([[embedWithReuse]]): OFF by default because the URL-diff layer
-    * already skips unchanged PAGES before they reach this sink, and
-    * with a cheap local embedder the store probe costs more than
-    * embedding; turn it ON when the embedder is the expensive step (a
-    * batched service) and syncs re-deliver overlapping content — the
-    * probe (two broadcasts, store never shuffled) then replaces the
-    * dominant per-batch cost. */
+    * Every chunk is embedded: with the local embedder, probing the
+    * store for reusable embeddings costs more than embedding (measured
+    * with `graft.TimeQuery` on the three stream store rows), and the
+    * URL-diff layer already skips unchanged pages before they reach
+    * this sink. */
   def ingestStream(pages: DataFrame, storeRoot: String,
-      checkpointDir: String, productName: String = "stream",
-      version: String = "v1", vacuumKeepLast: Option[Int] = None,
-      embedReuse: Boolean = false)
+      checkpointDir: String, vacuumKeepLast: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -197,33 +152,17 @@ object EventStream {
         val s = batch.sparkSession
         import s.implicits._
         if (!batchIsEmpty(batch)) {
-          val embedded =
-            if (embedReuse) {
-              val chunks = batch.select("url", "content")
-                .as[(String, String)]
-                .flatMap { case (url, md) =>
-                  graft.operators.Chunker
-                    .chunkMarkdown(md, productName, version, url)
-                    .map(c => (c.url, c.chunk_id, c.chunk_index,
-                      c.total_chunks, c.section, c.content))
-                }
-                .toDF("url", "chunk_id", "chunk_index", "total_chunks",
-                  "section", "content")
-              embedWithReuse(chunks,
-                graft.sources.ChunkStore.readLatest(s, storeRoot))
-                .drop("embedding_reused")
-            } else
-              batch.select("url", "content")
-                .as[(String, String)]
-                .flatMap { case (url, md) =>
-                  graft.operators.Chunker
-                    .chunkMarkdown(md, productName, version, url)
-                    .map(c => (c.url, c.chunk_id, c.chunk_index,
-                      c.total_chunks, c.section, c.content,
-                      graft.functions.Embedder.embed(c.content)))
-                }
-                .toDF("url", "chunk_id", "chunk_index", "total_chunks",
-                  "section", "content", "embedding")
+          val embedded = batch.select("url", "content")
+            .as[(String, String)]
+            .flatMap { case (url, md) =>
+              graft.operators.Chunker
+                .chunkMarkdown(md, StreamProduct, StreamVersion, url)
+                .map(c => (c.url, c.chunk_id, c.chunk_index,
+                  c.total_chunks, c.section, c.content,
+                  graft.functions.Embedder.embed(c.content)))
+            }
+            .toDF("url", "chunk_id", "chunk_index", "total_chunks",
+              "section", "content", "embedding")
           graft.sources.ChunkStore.upsertVersioned(s, storeRoot, embedded)
           maybeVacuum(storeRoot, vacuumKeepLast)
         }
@@ -295,7 +234,7 @@ object EventStream {
     parityRun(s, dir, deletePhase = true)
 
   /** Protocol rows prove PROTOCOL correctness (multi-micro-batch
-    * versioned merges, purge, reuse) — their evidential value is in the
+    * versioned merges, purge, re-sync) — their evidential value is in the
     * number of merges crossed, not the corpus size, so the staged
     * fixture is capped. The cap sits above the sf0.01 correctness
     * corpus (500 docs — the DuckDB gate output is unchanged) and keeps
@@ -303,15 +242,12 @@ object EventStream {
     * rep, which round 11 measured at ~20% of the whole bench. */
   val ParityFixtureDocs = 1000L
 
-  /** RE-SYNC parity — the embed-skip's oracle row: a 200-doc slice is
-    * ingested with `embedReuse = true`, then the SAME pages are
-    * delivered again as a second streaming sync (fresh checkpoint, the
-    * at-least-once world's full re-crawl). The second sync re-chunks
-    * but reuses every stored embedding (chunk ids all hit), and the
-    * final store must STILL hash-match the batch derivation — proving
-    * the reuse path leaves the store bit-identical across a full
-    * redundant re-sync. Flag-level reuse evidence is pinned separately
-    * in the embedWithReuse test. */
+  /** RE-SYNC parity: a 200-doc slice is ingested, then the SAME pages
+    * are delivered again as a second streaming sync (fresh checkpoint,
+    * the at-least-once world's full re-crawl). The second sync
+    * re-chunks and re-embeds every page and replaces every url, and the
+    * final store must STILL hash-match the batch derivation — proving a
+    * full redundant re-sync leaves the store bit-identical. */
   def streamResyncParity(s: SparkSession, dir: String): DataFrame =
     parityRun(s, dir, deletePhase = false, resyncPhase = true,
       docCap = 200)
@@ -319,7 +255,7 @@ object EventStream {
   /** The store rows: batch/delete parity keep the 4-micro-batch ingest
     * contract; the resync row runs 2+2 (two syncs; per-trigger
     * streaming overhead dominates this row, and two batches per sync
-    * already exercise cross-batch reuse). The staged page and tombstone
+    * already cross a batch boundary). The staged page and tombstone
     * files are pure functions of the corpus slice; the store and the
     * checkpoints live in the run's work dir. */
   private def parityRun(s: SparkSession, dir: String,
@@ -338,7 +274,7 @@ object EventStream {
       val store = s"$work/store"
       def runIngest(ckpt: String): Unit = {
         val q = ingestStream(Replay.read(s, in, Seq("in")), store,
-          s"$work/$ckpt", embedReuse = resyncPhase)
+          s"$work/$ckpt")
         try q.processAllAvailable() finally q.stop()
       }
       runIngest("ckpt")

@@ -54,7 +54,7 @@ object StreamQueries {
              AND doc_id % 13 <> 0) t
          ORDER BY url, chunk_index""",
       protocol = true),
-    // after a fully REDUNDANT second sync with embed-reuse on, the
+    // after a fully REDUNDANT second sync, the
     // store must still match the batch derivation of the 200-doc slice
     QuerySpec("stream_resync_parity", EventStream.streamResyncParity(_, _),
       """SELECT 'doc://'||doc_id AS url, CAST(0 AS BIGINT) AS chunk_index,

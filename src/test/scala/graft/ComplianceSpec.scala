@@ -75,7 +75,7 @@ class ComplianceSpec extends SparkSuite {
       call("applyPurgeBatch", spark, base.toString, b0, Long.box(0L))
       call("applyPurgeBatch", spark, base.toString, b0, Long.box(0L))
       call("applyPurgeBatch", spark, base.toString, b1, Long.box(1L))
-      val got = call("report", spark, dir, base.toString)
+      val got = call("report", spark, base.toString)
         .asInstanceOf[org.apache.spark.sql.DataFrame].collect().toSeq
       assert(got == expected,
         "replay + restart must land the identical reconciliation — " +

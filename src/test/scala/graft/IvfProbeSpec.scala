@@ -9,14 +9,15 @@ import graft.sources.ChunkStore
   * sort), bit for bit, and the loaded index handle and store reads
   * against rebuilds. */
 class IvfProbeSpec extends SparkSuite {
+  import IvfProbeSpec.Built
   import Similarity.{IvfNlist, IvfNprobe}
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val sfIndex: String = {
+  private lazy val sfIndex: Built = {
     val idx = tempDir("ivfprobe").resolve("ivf").toString
     Similarity.buildIvfIndex(spark, dir, idx)
-    idx
+    Built(idx, IvfReference.indexSeeds(spark, dir, Similarity.IvfLloydIters))
   }
 
   private lazy val sfVecs: Map[Long, Array[Float]] = {
@@ -28,14 +29,14 @@ class IvfProbeSpec extends SparkSuite {
   /** An index over `vecs`, built with the raw seed quantizer (the
     * vectors with ids 1..16). */
   private def build(vecs: Seq[(Long, Array[Float])],
-      at: Option[String] = None): String = {
+      at: Option[String] = None): Built = {
     import spark.implicits._
     val base = tempDir("ivfvecs")
     vecs.map { case (id, v) => (id, 0, v) }.toDF("vec_id", "label", "embedding")
       .repartition(3).write.parquet(base.resolve("embeddings.parquet").toString)
     val idx = at.getOrElse(base.resolve("ivf").toString)
     Similarity.buildIvfIndex(spark, base.toString, idx, lloydIters = 0)
-    idx
+    Built(idx, IvfReference.indexSeeds(spark, base.toString))
   }
 
   private def gaussian(seed: Int, n: Int): IndexedSeq[Array[Float]] = {
@@ -50,11 +51,12 @@ class IvfProbeSpec extends SparkSuite {
 
   /** The kernel's rows equal the reference plan's, in order and bit for
     * bit; returns them. */
-  private def parity(idx: String, q: Array[Float], k: Int = 10,
+  private def parity(idx: Built, q: Array[Float], k: Int = 10,
       nprobe: Int = IvfNprobe, excludeId: Option[Long] = None): Seq[(Long, Long)] = {
-    val got = Similarity.probeIvf(spark, idx, q, k, nprobe, excludeId)
+    val got = Similarity.probeIvf(spark, idx.path, q, k, nprobe, excludeId)
     assert(got.columns.toSeq == Seq("vec_id", "cosine"))
-    val want = bits(IvfReference.probeIvf(spark, idx, q, k, nprobe, excludeId))
+    val want = bits(IvfReference.probeIvf(spark, idx.path, idx.seeds, q, k,
+      nprobe, excludeId))
     assert(bits(got) == want)
     want
   }
@@ -116,9 +118,9 @@ class IvfProbeSpec extends SparkSuite {
     val base = gaussian(17, 60)
     val idx = build(base.indices.map(i => i.toLong -> base(i)))
     val q = base(5)
-    val best = Similarity.topCells(q, IvfReference.indexSeeds(spark, idx), 2)
+    val best = Similarity.topCells(q, idx.seeds, 2)
     // the best cell loses its files before the first probe loads the build
-    Sync.deleteTree(new java.io.File(idx, s"cell=${best(0)}"))
+    Sync.deleteTree(new java.io.File(idx.path, s"cell=${best(0)}"))
     val rest = parity(idx, q, k = 50, nprobe = 2)
     assert(rest.nonEmpty)
     assert(parity(idx, q, nprobe = 1).isEmpty)
@@ -132,24 +134,22 @@ class IvfProbeSpec extends SparkSuite {
     val p = tempDir("ivfrebuild").resolve("ivf")
     // every cell probed: the answer is the exact top 5 of what is on
     // disk, led by the query's own vector
-    def check(q: (Long, Array[Float])): Unit = {
+    def check(built: Built, q: (Long, Array[Float])): Unit = {
       val got = bits(Similarity.probeIvf(spark, p.toString, q._2, k = 5,
         nprobe = IvfNlist))
       assert(got.size == 5 && got.head._1 == q._1)
-      assert(got == bits(IvfReference.probeIvf(spark, p.toString, q._2, k = 5,
-        nprobe = IvfNlist)))
+      assert(got == bits(IvfReference.probeIvf(spark, p.toString,
+        built.seeds, q._2, k = 5, nprobe = IvfNlist)))
     }
-    build(a, Some(p.toString))
-    check(a(30))
+    check(build(a, Some(p.toString)), a(30))
     // this process rebuilds P over other vectors
-    build(b, Some(p.toString))
-    check(b(30))
+    check(build(b, Some(p.toString)), b(30))
     // another writer replaces P with its own build of the first vectors;
     // this process's registry still holds the loaded build of `b`
-    val other = java.nio.file.Paths.get(build(a))
+    val other = build(a)
     Sync.deleteTree(p.toFile)
-    java.nio.file.Files.move(other, p)
-    check(a(30))
+    java.nio.file.Files.move(java.nio.file.Paths.get(other.path), p)
+    check(other, a(30))
   }
 
   test("a store deleted and re-synced reads its new rows") {
@@ -180,7 +180,7 @@ class IvfProbeSpec extends SparkSuite {
 
   // last: it stops the suite's session
   test("a build loaded in a stopped session serves the next session") {
-    val idx = sfIndex
+    val idx = sfIndex.path
     val q = sfVecs(0L)
     val before = bits(Similarity.probeIvf(spark, idx, q))
     spark.stop()
@@ -188,4 +188,9 @@ class IvfProbeSpec extends SparkSuite {
     try assert(bits(Similarity.probeIvf(next, idx, q)) == before)
     finally next.stop()
   }
+}
+
+object IvfProbeSpec {
+  /** A built index and the seeds the reference recomputes for it. */
+  final case class Built(path: String, seeds: Array[Array[Float]])
 }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The KnnIvfRewrite optimizer rule (SURVEY §4 optional-Catalyst item
-  * 3): a declarative `ORDER BY cosine DESC LIMIT k` over a registered
-  * IVF index table is rewritten onto the index's cell partitions; the
-  * guard rails (registration opt-in, limit-only, descending-only,
+  * 3): a declarative `ORDER BY cosine DESC LIMIT k` over an IVF index
+  * table with a manifest is rewritten onto the index's cell partitions;
+  * the guard rails (manifest opt-in, limit-only, descending-only,
   * idempotency under the fixed-point batch) are pinned as hard as the
   * happy path. */
 class KnnRewriteSpec extends SparkSuite(cpus = 2) {
@@ -33,7 +33,7 @@ class KnnRewriteSpec extends SparkSuite(cpus = 2) {
       rows.toDF("vec_id", "embedding", "cell")
         .write.partitionBy("cell").parquet(idx)
     }
-    graft.plans.KnnIndexRegistry.register(idx, seeds, 2)
+    graft.plans.KnnIndexRegistry.writeManifest(idx, seeds, 2)
   }
 
   private def cosSql(qv: Array[Float]): String = {
@@ -166,7 +166,6 @@ class KnnRewriteSpec extends SparkSuite(cpus = 2) {
   test("durability: a brand-new session with an EMPTY registry recovers " +
       "the quantizer from the on-disk manifest and still rewrites") {
     setUp()
-    graft.plans.KnnIndexRegistry.writeManifest(idx, seeds, 2)
     graft.plans.KnnIndexRegistry.clear() // simulate process restart
     val s2 = spark.newSession()
     graft.functions.VectorExprs.register(s2)
@@ -220,6 +219,33 @@ class KnnRewriteSpec extends SparkSuite(cpus = 2) {
       .take(5).map(_._1)
     assert(df.collect().map(_.getLong(0)).toSeq == exact.toSeq)
     graft.plans.KnnIndexRegistry.clear()
+  }
+
+  test("a manifest rewritten by another writer is seen by the next " +
+      "rewrite") {
+    import org.apache.spark.sql.catalyst.expressions.In
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    // the cell ids of the injected partition filter
+    def injectedCells(): Set[Int] = spark.read.parquet(idx)
+      .filter(col("vec_id") =!= 0)
+      .orderBy(expr(cosSql(rows.head._2)).desc, col("vec_id"))
+      .limit(5).queryExecution.optimizedPlan.collect { case f: Filter =>
+        f.condition.collect {
+          case In(a, lits) if a.references.exists(_.name == "cell") =>
+            lits.map(_.eval().toString.toInt)
+        }.flatten
+      }.flatten.toSet
+    setUp()
+    assert(injectedCells() ==
+      graft.operators.Similarity.topCells(rows.head._2, seeds, 2).toSet)
+    // another session or JVM rebuilds the quantizer: new seeds, and
+    // nprobe 2 → 10, so the manifest's length changes even within one
+    // modification-time tick
+    val rebuilt = (0 until 6).map(_ => Array.fill(8)(rnd.nextFloat())).toArray
+    graft.plans.KnnIndexRegistry.writeManifest(idx, rebuilt, 10)
+    assert(injectedCells() ==
+      graft.operators.Similarity.topCells(rows.head._2, rebuilt, 10).toSet)
+    assert(injectedCells().size == 6)
   }
 
   private def cosine(a: Array[Float], b: Array[Float]): Double = {

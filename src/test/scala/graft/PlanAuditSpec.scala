@@ -612,7 +612,7 @@ class PlanAuditSpec extends SparkSuite {
       .collectFirst {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
             if f.metadata.get("Location").exists(
-              _.contains("graft_knn_rewrite_idx")) => f
+              _.contains("graft_ivf_idx")) => f
       }.getOrElse(fail("no index FileSourceScanExec in the plan"))
     assert(scan.partitionFilters.mkString(";").contains("cell"),
       s"cell not in PartitionFilters: ${scan.partitionFilters}")
@@ -620,39 +620,5 @@ class PlanAuditSpec extends SparkSuite {
         graft.operators.Similarity.IvfNprobe,
       s"scanned ${scan.selectedPartitions.partitionCount} cells, " +
         s"nprobe is ${graft.operators.Similarity.IvfNprobe}")
-  }
-
-  test("chunk store prunes to one (product_name, version) partition pair") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    // 2 products × 3 versions: a collection-scoped read (SURVEY §1.3)
-    // must prune to ONE of the six partition directories at planning
-    // time — at one-table-many-versions scale, a store partitioned by
-    // product alone rescans every version's files for each query
-    val tmp = java.nio.file.Files.createTempDirectory("prune").toString +
-      "/chunks"
-    val rows = for (p <- Seq("alpha", "beta"); v <- Seq("1.0", "2.0", "3.0");
-                    i <- 0 until 4)
-      yield (s"doc://$p/$v/$i", p, v, s"c$p$v$i", s"content $i")
-    graft.sources.ChunkStore.write(
-      rows.toDF("url", "product_name", "version", "chunk_id", "content"),
-      tmp)
-    val scoped = graft.sources.ChunkStore.read(spark, tmp)
-      .filter(col("product_name") === "alpha" && col("version") === "2.0")
-    assert(scoped.count() == 4)
-    val scan = scoped.queryExecution.executedPlan.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.getOrElse(fail("no FileSourceScanExec in the plan"))
-    val pf = scan.partitionFilters.mkString(";")
-    assert(pf.contains("product_name") && pf.contains("version"),
-      s"both partition columns must reach the scan's PartitionFilters: $pf")
-    // the pruning evidence itself: the scan selected exactly the one
-    // partition directory's files, not all six
-    assert(scan.selectedPartitions.partitionCount == 1,
-      s"expected 1 pruned partition, scanned " +
-        s"${scan.selectedPartitions.partitionCount}")
-    graft.operators.Sync.deleteTree(
-      new java.io.File(tmp).getParentFile)
   }
 }

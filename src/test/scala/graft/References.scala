@@ -100,15 +100,14 @@ object DedupReference {
 object IvfReference {
   import graft.operators.Similarity._
 
-  /** The seeds of a built index, read from its `.centroids` parquet
-    * copy rather than the manifest the probe kernel reads. */
-  def indexSeeds(s: SparkSession, indexDir: String): Array[Array[Float]] = {
-    import s.implicits._
-    s.read.parquet(indexDir + ".centroids")
-      .orderBy("cell").select("embedding").as[Array[Float]].collect()
-  }
+  /** The seeds a build over the corpus at `dir` with `lloydIters`
+    * Lloyd rounds quantizes with, recomputed from the corpus rather
+    * than read from the manifest the probe kernel reads. */
+  def indexSeeds(s: SparkSession, dir: String,
+      lloydIters: Int = 0): Array[Array[Float]] =
+    lloydRefine(s, dir, ivfSeeds(s, dir, IvfNlist), lloydIters)
 
-  /** Probe a built IVF index: rank the persisted centroids against the
+  /** Probe a built IVF index: rank its centroids `seeds` against the
     * query on the driver (nlist dot products — pure math, no corpus
     * pass), read only the `nprobe` best partitions, exact cosine
     * re-rank. The cell filter is a partition filter on the scan. Pass
@@ -117,12 +116,11 @@ object IvfReference {
     * Zero-norm vectors have no direction, so they take no part in a
     * cosine ranking: zero-norm candidates are skipped, and a zero-norm
     * query returns no rows (the cosine would divide by zero). */
-  def probeIvf(s: SparkSession, indexDir: String, queryVec: Array[Float],
+  def probeIvf(s: SparkSession, indexDir: String,
+      seeds: Array[Array[Float]], queryVec: Array[Float],
       k: Int = 10, nprobe: Int = IvfNprobe,
       excludeId: Option[Long] = None): DataFrame = {
-    import s.implicits._
     graft.functions.VectorExprs.register(s)
-    val seeds = indexSeeds(s, indexDir)
     val cells = topCells(queryVec, seeds, nprobe)
     val q = s.createDataFrame(Seq(Tuple1(queryVec))).toDF("qv")
     val scan = s.read.parquet(indexDir)

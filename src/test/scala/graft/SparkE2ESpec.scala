@@ -133,25 +133,6 @@ class SparkE2ESpec extends SparkSuite {
     assert(guarded2.count() == stored.count())
   }
 
-  test("chunk store writes partitioned parquet and reads back losslessly") {
-    import spark.implicits._
-    val chunks = chunkCorpus(run1Docs)
-    val tmp = tempDir("store").toString + "/chunks"
-    ChunkStore.write(chunks.toDF(), tmp)
-    // physical layout: product_name=… / version=… directory pairs —
-    // the (product, version) collection scope of SURVEY §1.3
-    val partDirs = new java.io.File(tmp).listFiles()
-      .filter(_.isDirectory)
-    assert(partDirs.exists(_.getName.startsWith("product_name=")))
-    assert(partDirs.filter(_.getName.startsWith("product_name="))
-      .forall(_.listFiles().exists(_.getName.startsWith("version="))),
-      "every product partition must nest version partitions")
-    val back = ChunkStore.read(spark, tmp)
-    assert(back.count() == chunks.count())
-    assert(back.select("chunk_id").except(
-      chunks.toDF().select("chunk_id")).count() == 0)
-  }
-
   test("markdown store upsert and 404 cleanup") {
     import spark.implicits._
     val stored = Seq(
@@ -430,7 +411,12 @@ class SparkE2ESpec extends SparkSuite {
     // recall needs wide probing (nprobe=10 of nlist=16) even with the
     // data-adaptive seed centroids; on corpora with real cluster
     // structure the default nprobe=4 is the scale setting
-    val ivf = Similarity.annIvf(spark, dir, k = 10, nprobe = 10)
+    val qv = graft.Tables.embeddings(spark, dir)
+      .filter(col("vec_id") === 0)
+      .select("embedding").head().getAs[scala.collection.Seq[Float]](0)
+      .toArray
+    val ivf = Similarity.probeIvf(spark, Similarity.stagedIndex(spark, dir),
+      qv, k = 10, nprobe = 10, excludeId = Some(0L))
       .collect().map(_.getAs[Long]("vec_id")).toSet
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.8, s"IVF recall $recall below 0.8")
@@ -532,23 +518,23 @@ class SparkE2ESpec extends SparkSuite {
   test("IVF build/probe: partition-pruned probe matches the inline plan") {
     val dir = "/root/testdata/sf0.001"
     val idx = tempDir("ivfidx").resolve("ivf").toString
-    // lloydIters=0 keeps the raw seed quantizer, so the persisted-index
-    // probe must agree bit-for-bit with the inline (oracle-checked) plan
+    // lloydIters=0 keeps the raw seed quantizer, so the probe must agree
+    // with the inline reference plan over the recomputed seeds, and with
+    // the oracle-checked emb_ann_ivf row on its own staged index
     Similarity.buildIvfIndex(spark, dir, idx, lloydIters = 0)
+    val seeds = IvfReference.indexSeeds(spark, dir)
     val qv = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") === 0)
       .select("embedding").head().getAs[scala.collection.Seq[Float]](0)
       .toArray
     // excludeId drops the query's self-match before the limit, so all
-    // 10 probe slots are real neighbors, directly comparable to annIvf
-    // (which excludes vec_id 0 internally)
+    // 10 probe slots are real neighbors
     val probe = Similarity.probeIvf(spark, idx, qv, k = 10,
       excludeId = Some(0L))
     // the probe must read its cells' files only, not filter the index:
     // its scan is exactly the leaf files of the query's topCells cells,
     // listed here from disk
-    val cells = Similarity.topCells(qv, IvfReference.indexSeeds(spark, idx),
-      Similarity.IvfNprobe)
+    val cells = Similarity.topCells(qv, seeds, Similarity.IvfNprobe)
     val leaves = cells.toSeq.flatMap { c =>
       Option(new java.io.File(idx, s"cell=$c").listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
@@ -557,11 +543,13 @@ class SparkE2ESpec extends SparkSuite {
       Similarity.IvfNprobe, Some(0L)).get.inputFiles
       .map(u => new java.io.File(new java.net.URI(u)).getAbsolutePath).toSet
     assert(leaves.nonEmpty && scanned == leaves, s"$scanned vs $leaves")
-    val got = probe.collect().map(_.getAs[Long]("vec_id")).toSet
-    val want = Similarity.annIvf(spark, dir, k = 10)
-      .collect().map(_.getAs[Long]("vec_id")).toSet
+    val got = probe.collect().map(_.getAs[Long]("vec_id")).toSeq
+    val want = IvfReference.probeIvf(spark, idx, seeds, qv, k = 10,
+      excludeId = Some(0L)).collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(got.size == 10 && got == want,
       s"probe $got diverges from inline $want")
+    assert(Similarity.annIvf(spark, dir).collect()
+      .map(_.getAs[Long]("vec_id")).toSeq == got)
   }
 
   test("IVF probe skips zero-norm candidates; a zero-norm query returns k lowest ids") {
@@ -644,17 +632,15 @@ class SparkE2ESpec extends SparkSuite {
     // 0.80/0.96 vs refined 0.78/0.96 at nprobe 4/10), so the recall
     // gates here are parity bounds; the strict-improvement recall claim
     // is proven on a corpus WITH structure in the next test.
-    def loadCents(idx: String): Array[Array[Float]] =
-      spark.read.parquet(idx + ".centroids")
-        .orderBy("cell").select("embedding").as[Array[Float]].collect()
     def objective(cents: Array[Array[Float]]): Double = {
       val per = vecs.values.map { v =>
         1.0 - cos(v, cents(Similarity.argmaxCell(v, cents)))
       }
       per.sum / per.size
     }
-    val (seedObj, refObj) = (objective(loadCents(seedIdx)),
-      objective(loadCents(refIdx)))
+    val refCents = IvfReference.indexSeeds(spark, dir, Similarity.IvfLloydIters)
+    val (seedObj, refObj) = (objective(IvfReference.indexSeeds(spark, dir)),
+      objective(refCents))
     info(s"objective: seed=$seedObj refined=$refObj")
     assert(refObj < seedObj,
       s"Lloyd did not decrease the quantization objective: $refObj >= $seedObj")
@@ -667,7 +653,7 @@ class SparkE2ESpec extends SparkSuite {
         s"refined recall $refined below 0.9 at nprobe=10")
     }
     // (2) refined centroids are unit-norm (spherical k-means invariant)
-    loadCents(refIdx).foreach { c =>
+    refCents.foreach { c =>
       val n = math.sqrt(c.map(x => x.toDouble * x).sum)
       assert(math.abs(n - 1.0) < 1e-3, s"centroid norm $n drifted from 1")
     }
@@ -864,34 +850,6 @@ class SparkE2ESpec extends SparkSuite {
       .orderBy("url").collect().map(_.getString(0)).toSeq
     assert(afterMix == Seq("doc://a"), afterMix)
     assert(ChunkStore.latestVersion(store) == vQuiet + 1)
-  }
-
-  test("streaming embed-skip reuses stored embeddings by chunk id") {
-    import spark.implicits._
-    // the stored embedding is a SENTINEL no real embedder would emit:
-    // seeing it in the output proves the value was reused, not
-    // recomputed (chunk ids are content hashes, so id equality ⇒
-    // identical content ⇒ reuse is sound)
-    val stored = Seq(("c1", Array(9f, 9f))).toDF("chunk_id", "embedding")
-    val chunks = Seq(
-      ("u", "c1", 0, 2, "s", "text one"),
-      ("u", "c2", 1, 2, "s", "text two"))
-      .toDF("url", "chunk_id", "chunk_index", "total_chunks",
-        "section", "content")
-    val out = graft.streaming.EventStream
-      .embedWithReuse(chunks, Some(stored))
-      .collect().map(r => r.getString(1) ->
-        ((r.getSeq[Float](6).toSeq, r.getBoolean(7)))).toMap
-    val (e1, r1) = out("c1")
-    assert(r1 && e1 == Seq(9f, 9f), s"c1 not reused: $e1")
-    val (e2, r2) = out("c2")
-    assert(!r2 && e2 ==
-      graft.functions.Embedder.embed("text two").toSeq,
-      "c2 must be freshly embedded")
-    // no store yet → everything embeds fresh
-    val cold = graft.streaming.EventStream
-      .embedWithReuse(chunks, None).collect()
-    assert(cold.forall(!_.getBoolean(7)))
   }
 
   test("streaming sinks with vacuumKeepLast bound store growth") {

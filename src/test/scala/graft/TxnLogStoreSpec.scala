@@ -16,17 +16,17 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     TxnLogStore.commit(root, 0L, Seq("a", "b"), Seq.empty)
     TxnLogStore.commit(root, 1L, Seq("c"), Seq("a"))
     TxnLogStore.commit(root, 2L, Seq("d"), Seq.empty)
-    assert(TxnLogStore.liveFiles(spark, root, 0L) == Seq("a", "b"))
-    assert(TxnLogStore.liveFiles(spark, root, 1L) == Seq("b", "c"))
-    assert(TxnLogStore.liveFiles(spark, root, 2L) == Seq("b", "c", "d"))
+    assert(TxnLogStore.liveFiles(root, 0L) == Seq("a", "b"))
+    assert(TxnLogStore.liveFiles(root, 1L) == Seq("b", "c"))
+    assert(TxnLogStore.liveFiles(root, 2L) == Seq("b", "c", "d"))
     // a version beyond the log sees the full fold; before it, nothing
-    assert(TxnLogStore.liveFiles(spark, root, 99L) == Seq("b", "c", "d"))
-    assert(TxnLogStore.liveFiles(spark, root, -1L).isEmpty)
+    assert(TxnLogStore.liveFiles(root, 99L) == Seq("b", "c", "d"))
+    assert(TxnLogStore.liveFiles(root, -1L).isEmpty)
     // a stranded tmp file (crashed writer) is never folded
     java.nio.file.Files.writeString(
       new java.io.File(s"$root/_log/00003.json.tmp").toPath,
       """{"act":"add","file":"ghost"}""")
-    assert(TxnLogStore.liveFiles(spark, root, 99L) == Seq("b", "c", "d"))
+    assert(TxnLogStore.liveFiles(root, 99L) == Seq("b", "c", "d"))
   }
 
   test("vacuum honors the retention horizon and keeps retained reads whole") {
@@ -43,7 +43,7 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     val deleted = TxnLogStore.vacuum(root, retainFrom = 1L)
     assert(deleted == Seq("f0"))
     // the retained snapshot still reads completely
-    val v1 = TxnLogStore.liveFiles(spark, root, 1L)
+    val v1 = TxnLogStore.liveFiles(root, 1L)
     assert(v1 == Seq("f1", "f2"))
     assert(spark.read.schema("doc_id LONG")
       .parquet(v1.map(f => s"$root/$f"): _*).count() == 10L)
@@ -51,7 +51,7 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     // contract, not a silent wrong answer
     intercept[Exception] {
       spark.read.schema("doc_id LONG")
-        .parquet(TxnLogStore.liveFiles(spark, root, 0L)
+        .parquet(TxnLogStore.liveFiles(root, 0L)
           .map(f => s"$root/$f"): _*).count()
     }
   }
@@ -65,10 +65,10 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     TxnLogStore.commit(root, 99999L, Seq("a"), Seq.empty)
     TxnLogStore.commit(root, 100000L, Seq("b"), Seq("a"))
     assert(TxnLogStore.latestVersion(root) == 100000L)
-    assert(TxnLogStore.liveFiles(spark, root, 100000L) == Seq("b"))
+    assert(TxnLogStore.liveFiles(root, 100000L) == Seq("b"))
     // numeric ordering, not lexicographic: 100000.json sorts AFTER
     // 99999.json even though it compares lower as a string
-    assert(TxnLogStore.liveFiles(spark, root, 99999L) == Seq("a"))
+    assert(TxnLogStore.liveFiles(root, 99999L) == Seq("a"))
     val next = TxnLogStore.commitOptimistic(root, Seq("c"), Seq.empty)
     assert(next == 100001L)
   }
@@ -113,7 +113,7 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     intercept[java.nio.file.FileAlreadyExistsException] {
       TxnLogStore.commit(root, 0L, Seq("thief"), Seq.empty)
     }
-    assert(TxnLogStore.liveFiles(spark, root, 0L) == Seq("a"))
+    assert(TxnLogStore.liveFiles(root, 0L) == Seq("a"))
     // 4 threads × 5 optimistic commits: 20 total, all 20 versions
     // distinct and every writer's files present in the final fold
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -131,7 +131,7 @@ class TxnLogStoreSpec extends SparkSuite(cpus = 2) {
     pool.shutdown()
     assert(versions.toSet.size == 20, s"duplicate versions: $versions")
     assert(versions.min == 1L && versions.max == 20L)
-    val live = TxnLogStore.liveFiles(spark, root, 20L)
+    val live = TxnLogStore.liveFiles(root, 20L)
     val expected = (for (w <- 0 until 4; i <- 0 until 5)
       yield s"w$w-$i").toSet + "a"
     assert(live.toSet == expected, "a racing commit was lost")
