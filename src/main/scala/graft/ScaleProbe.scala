@@ -430,13 +430,13 @@ under 1 (wall-clock at 10x: minutes -> seconds).
 **`dedup_simhash_pairs` now REFUSES above the gate** (round-12
 guardrail): the explicit 32/6 report row is kept for corpus sizes
 where a 2.7e-4 pair rate is the intent, but above
-`SimhashAutoMaxDocs` it demands `acceptQuadratic=true` and names the
-wide kernel — its 3x/10x cells read "refused" and e reads "guarded",
+`SimhashAutoMaxDocs` it refuses and names the size-routed and
+wide kernels — its 3x/10x cells read "refused" and e reads "guarded",
 which is the desired scale behavior (round 11 measured the unguarded
 row at e=2.0, 105 s at 10x; nothing can now hit that by accident).
 The bench path for `curation_funnel`/`curation_runs` additionally
-consumes staged inputs (`graft.curation.cache`), staging the same
-size-routed kernel.
+consumes staged inputs (`StageCache`, keyed by the corpus
+fingerprint), staging the same size-routed kernel.
 
 **The 32/6-consumer rows are timed through the engine path**: their
 ORACLE rows now refuse above the gate (`QuerySpec.sizeGuarded`, a DuckDB-parity

@@ -1,8 +1,8 @@
 package graft
 
 /** Dev tool: time named SparkEntry queries N times each under the same
-  * session/caching conditions the bench uses (warmup action, streaming
-  * StageCache active, curation cache staged when the row needs it).
+  * session/caching conditions the bench uses (warmup action, StageCache
+  * active for the streaming inputs and the curation funnel's stages).
   * Exists for regression adjudication — the round-14 verdict flagged
   * `stream_join_parity` drifting 5.9→10.6 s across three one-rep
   * readings, undecidable without a repeated-measures run; the full
@@ -20,24 +20,14 @@ object TimeQuery {
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).count()
     // shutdown hook (matching the bench's pattern) so a crashed run
-    // cleans up too, and the props don't leak into a later session in
-    // the same JVM (r15 ADVICE: curation_* invocations leaked the
-    // curation temp dir and left both props set)
+    // cleans up too, and the prop doesn't leak into a later session in
+    // the same JVM (r15 ADVICE)
     val cacheRoot = java.nio.file.Files
       .createTempDirectory("graft_timeq_streams")
     sys.props(graft.streaming.StageCache.Prop) = cacheRoot.toString
-    val curationCache: Option[java.nio.file.Path] =
-      if (names.exists(_.startsWith("curation_"))) {
-        val c = java.nio.file.Files.createTempDirectory("graft_timeq_cache")
-        graft.operators.Curation.stageFunnelInputs(spark, sfDir, c.toString)
-        sys.props(graft.operators.Curation.CacheProp) = c.toString
-        Some(c)
-      } else None
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       graft.operators.Sync.deleteTree(cacheRoot.toFile)
-      curationCache.foreach(c => graft.operators.Sync.deleteTree(c.toFile))
       sys.props.remove(graft.streaming.StageCache.Prop)
-      sys.props.remove(graft.operators.Curation.CacheProp)
     }))
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

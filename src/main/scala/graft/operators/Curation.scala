@@ -463,53 +463,38 @@ object Curation {
       .orderBy("stage")
   }
 
-  /** JVM property naming a directory of staged funnel inputs (written
-    * by [[stageFunnelInputs]]). When set and populated,
-    * [[funnelAuto]]/[[curationRunsAuto]] consume the persisted SimHash
-    * pair and contamination tables instead of re-deriving both
-    * candidate sets per report — exactly how a 100 TB pipeline owner
-    * feeds the funnel from stored stage outputs. Unset (the Verify /
-    * oracle path) they recompute; the report is content-identical
-    * either way, so the oracle rows don't depend on the cache. */
-  val CacheProp = "graft.curation.cache"
+  /** The funnel's two expensive candidate sets — the size-routed
+    * near-dup pairs and the decontamination ids — read from their
+    * [[graft.streaming.StageCache]] stage, keyed by the corpus dir and
+    * its fingerprint, when a stage cache is set: the first report stages
+    * them and every later one joins the stored id sets, as a pipeline
+    * owner feeds the funnel from stored stage outputs. With no cache
+    * (the Verify / oracle path) both are None and the report
+    * recomputes; it is content-identical either way. */
+  private def stagedInputs(s: SparkSession,
+      dir: String): (Option[DataFrame], Option[DataFrame]) =
+    graft.streaming.StageCache
+      .staged(s"funnel_${graft.streaming.StageCache.dirKey(dir)}") { d =>
+        Dedup.nearDupPairsAuto(s, dir).write.parquet(s"$d/neardup_pairs")
+        decontaminate(s, dir).write.parquet(s"$d/contamination")
+      } match {
+      case Some(d) => (Some(s.read.parquet(s"$d/neardup_pairs")),
+        Some(s.read.parquet(s"$d/contamination")))
+      case None => (None, None)
+    }
 
-  /** Persist the funnel's two expensive candidate sets under
-    * `cacheDir` (idempotent — existing tables are kept): the SimHash
-    * near-dup pairs and the decontamination id set. Bench stages these
-    * once before its timing loop so the funnel entries measure the
-    * REPORT (one scan + two id-set joins), not an upstream recompute. */
-  def stageFunnelInputs(s: SparkSession, dir: String,
-      cacheDir: String): Unit = {
-    val nd = new java.io.File(cacheDir, "neardup_pairs")
-    if (!isStaged(nd))
-      Dedup.nearDupPairsAuto(s, dir)
-        .write.mode("overwrite").parquet(nd.toString)
-    val ct = new java.io.File(cacheDir, "contamination")
-    if (!isStaged(ct))
-      decontaminate(s, dir).write.mode("overwrite").parquet(ct.toString)
+  /** [[funnel]] on the staged inputs when a stage cache is set, else
+    * recomputed. */
+  def funnelAuto(s: SparkSession, dir: String): DataFrame = {
+    val (pairs, contam) = stagedInputs(s, dir)
+    funnel(s, dir, pairs, contam)
   }
 
-  /** A staged table is valid only once Spark's `_SUCCESS` marker is in
-    * place — bare directory existence would treat a crashed mid-write
-    * staging run as a cache forever (the partial table would be both
-    * consumed and never re-staged, silently skewing funnel numbers). */
-  private def isStaged(table: java.io.File): Boolean =
-    new java.io.File(table, "_SUCCESS").exists()
-
-  private def cachedInput(s: SparkSession, name: String): Option[DataFrame] =
-    sys.props.get(CacheProp).map(new java.io.File(_, name))
-      .filter(isStaged).map(f => s.read.parquet(f.toString))
-
-  /** [[funnel]] that consumes staged inputs when [[CacheProp]] points
-    * at a populated cache dir, else recomputes. */
-  def funnelAuto(s: SparkSession, dir: String): DataFrame =
-    funnel(s, dir, cachedInput(s, "neardup_pairs"),
-      cachedInput(s, "contamination"))
-
   /** [[curationRuns]] with the same staged-input resolution. */
-  def curationRunsAuto(s: SparkSession, dir: String): DataFrame =
-    curationRuns(s, dir, cachedInput(s, "neardup_pairs"),
-      cachedInput(s, "contamination"))
+  def curationRunsAuto(s: SparkSession, dir: String): DataFrame = {
+    val (pairs, contam) = stagedInputs(s, dir)
+    curationRuns(s, dir, pairs, contam)
+  }
 
   /** Per-stage provenance of one curation run — [[funnel]] recast as
     * the run-stats table a pipeline owner stores next to the data

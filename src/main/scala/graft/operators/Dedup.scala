@@ -18,10 +18,11 @@ import graft.Tables
   *   - MinHash: per-doc signatures in one pass; candidate pairs from a
   *     bucket join on (permutation, min-hash) agreement — classic LSH
   *     banding shape, shuffle ∝ signature size not corpus size.
-  *   - SimHash: 32-bit (report, Hamming ≤6) and 60-bit (scale,
-  *     Hamming ≤3) signatures; candidate pairs from an exact banded
-  *     equi-join on block values (pigeonhole), each pair emitted once
-  *     by its first agreeing band — never an all-pairs scan.
+  *   - SimHash: one signature kernel at two widths, 32-bit (report,
+  *     Hamming ≤6) and 60-bit (scale, Hamming ≤3). Both layouts feed
+  *     one band join: band i keys on the signature masked to its
+  *     blocks, an exact equi-join (pigeonhole) that emits each pair
+  *     once, by its first agreeing band — never an all-pairs scan.
   *   - embedding cosine: banded-LSH candidates with an exact cosine
   *     re-rank ([[embeddingPairs]]); IVF-cell-bounded pairs in
   *     [[semanticDedup]].
@@ -43,6 +44,8 @@ object Dedup {
     * (the 7-band pigeonhole argument in [[simhashPairs]] holds for any
     * threshold ≤ 6; raising it requires re-deriving the banding). */
   val SimhashMaxDist = 6L
+  /** Signature width of the 32/6 report kernel. */
+  val SimhashBits = 32
   val perms: Seq[(Int, Long, Long)] = (0 until NumPerms).map { j =>
     (j, (2654435761L * (j + 1)) % P, (1013904223L * (j + 1)) % P)
   }
@@ -277,27 +280,32 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** (doc_id, simhash): 32-bit SimHash over distinct word-3-gram
-    * shingles (hash bits weighted ±1, bit set where the sum is
-    * positive). Per-document kernel in one typed pass — the relational
-    * form (shingles × 32 bit-rows through two shuffled groupBys) moves
-    * 32× the postings for the same arithmetic. */
+  /** (doc_id, simhash): the 32-bit report signature of every document
+    * with at least one shingle, [[simhashOf]] at [[SimhashBits]]. */
   def simhashSignatures(s: SparkSession, dir: String): DataFrame =
-    simhashOf(Tables.documents(s, dir)).orderBy("doc_id")
+    simhashOf(Tables.documents(s, dir), SimhashBits).orderBy("doc_id")
 
-  private def simhashOf(docs: DataFrame): DataFrame = {
+  /** (doc_id, simhash): the `bits`-wide SimHash over distinct word-3-gram
+    * shingles, for both kernels (32-bit report, 60-bit scale). Each
+    * shingle's weight is the first `bits` bits of its sha256, every bit
+    * counted ±1; a signature bit is set where its sum is positive, and
+    * a document without shingles has no row. Per-document kernel in one
+    * typed pass — the relational form (shingles × `bits` bit-rows
+    * through two shuffled groupBys) moves `bits`× the postings for the
+    * same arithmetic. */
+  private[operators] def simhashOf(docs: DataFrame, bits: Int): DataFrame = {
     import docs.sparkSession.implicits._
     docs
       .select("doc_id", "text").as[(Long, String)]
       .flatMap { case (docId, text) =>
-        val sums = new Array[Long](32)
+        val sums = new Array[Long](bits)
         var any = false
         shingleSet(text).foreach { sh =>
           any = true
-          val w32 = graft.functions.TextUtil.sha256Prefix(sh, 32)
+          val w = graft.functions.TextUtil.sha256Prefix(sh, bits)
           var b = 0
-          while (b < 32) {
-            sums(b) += 2 * ((w32 >> b) & 1L) - 1
+          while (b < bits) {
+            sums(b) += 2 * ((w >> b) & 1L) - 1
             b += 1
           }
         }
@@ -305,89 +313,96 @@ object Dedup {
         else {
           var sig = 0L
           var b = 0
-          while (b < 32) { if (sums(b) > 0) sig |= (1L << b); b += 1 }
+          while (b < bits) { if (sums(b) > 0) sig |= (1L << b); b += 1 }
           Iterator.single((docId, sig))
         }
       }
       .toDF("doc_id", "simhash")
   }
 
-  /** SimHash near-dup pairs: Hamming distance ≤ 6. Candidate generation
-    * is banded, not quadratic: the 32-bit signature splits into 7 bands
-    * (5+5+5+5+4+4+4 bits); ≤6 differing bits can corrupt at most 6
-    * bands, so every qualifying pair matches exactly on ≥1 band
-    * (pigeonhole) — output identical to the all-pairs scan, but the join
-    * is a hash join on (band, value) whose cost follows bucket sizes,
-    * not corpus². */
-  def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(s, dir, corpusSize = None, acceptQuadratic = false)
-
-  /** Guarded form of the 32/6 report kernel. The candidate JOIN is
-    * banded (never corpus²), but at dist ≤ 6 the random collision rate
-    * r ≈ 2.7e-4 makes the OUTPUT itself quadratic above
+  /** SimHash near-dup pairs: Hamming distance ≤ 6 on the 32-bit
+    * signature, sorted. Candidate generation is banded, not quadratic:
+    * the signature splits into 7 bands (5+5+5+5+4+4+4 bits); ≤6
+    * differing bits can corrupt at most 6 bands, so every qualifying
+    * pair matches exactly on ≥1 band (pigeonhole) — output identical to
+    * the all-pairs scan, from a hash join whose cost follows bucket
+    * sizes, not corpus².
+    *
+    * The JOIN is never corpus², but at dist ≤ 6 the random collision
+    * rate r ≈ 2.7e-4 makes the OUTPUT itself quadratic above
     * [[SimhashAutoMaxDocs]] documents — no plan outruns its own result
-    * set. Above the gate this refuses (directing callers to
+    * set. Above the gate this refuses, directing callers to
     * [[simhashPairsWide]], the measured-linear 60/3 kernel, or to
-    * [[nearDupPairsAuto]] which routes by size) unless the caller
-    * explicitly accepts the quadratic output with
-    * `acceptQuadratic = true` — the bounded-corpus report escape
-    * hatch. `corpusSize` skips the routing count when known. */
-  def simhashPairs(s: SparkSession, dir: String,
-      corpusSize: Option[Long], acceptQuadratic: Boolean): DataFrame = {
-    val n = corpusSize.getOrElse(Ingest.docCount(s, dir))
-    require(acceptQuadratic || n <= SimhashAutoMaxDocs,
+    * [[nearDupPairsAuto]], which routes by size. */
+  def simhashPairs(s: SparkSession, dir: String): DataFrame = {
+    val n = Ingest.docCount(s, dir)
+    require(n <= SimhashAutoMaxDocs,
       s"simhashPairs(32/6) on $n docs (> SimhashAutoMaxDocs=" +
         s"$SimhashAutoMaxDocs): the dist-6 output is quadratic at this " +
         "size. Use simhashPairsWide (60/3 scale kernel) or " +
-        "nearDupPairsAuto (size-routed), or pass acceptQuadratic=true " +
-        "for a bounded-corpus report.")
-    simhashPairsOf(simhashOf(Tables.documents(s, dir)))
+        "nearDupPairsAuto (size-routed).")
+    simhashPairsOf(simhashOf(Tables.documents(s, dir), SimhashBits))
       .orderBy("doc_a", "doc_b")
   }
 
-  /** The 32/6 band layout: (bit offset, mask) of each band. */
-  private val SimhashBands: Seq[(Int, Long)] =
-    Seq((0, 31L), (5, 31L), (10, 31L), (15, 31L), (20, 15L), (24, 15L),
-      (28, 15L))
+  /** The 32/6 layout's blocks as in-place masks, one band each:
+    * (bit offset, width) 5+5+5+5+4+4+4. */
+  private val SimhashBlocks: Seq[Long] =
+    Seq(0 -> 5, 5 -> 5, 10 -> 5, 15 -> 5, 20 -> 4, 24 -> 4, 28 -> 4)
+      .map { case (off, w) => ((1L << w) - 1) << off }
 
   /** Unsorted 32/6 pairs of a (doc_id, simhash) frame, each
     * (doc_a, doc_b) once. */
-  private[operators] def simhashPairsOf(sigDf: DataFrame): DataFrame = {
-    val sig = sigDf.localCheckpoint(true) // both join sides
-    // (doc_id, simhash, band, value)
+  private[operators] def simhashPairsOf(sigDf: DataFrame): DataFrame =
+    bandedPairs(sigDf.localCheckpoint(true), SimhashBlocks,
+      SimhashBlocks.indices.map(Seq(_)), SimhashMaxDist, identity)
+
+  /** The one SimHash band join, for every layout: unsorted
+    * (doc_a, doc_b, hamming) pairs of `sig` at Hamming ≤ `maxDist`,
+    * each pair once. `blocks` are disjoint bit masks of the signature
+    * and band i keys on `simhash & mask(i)`, mask(i) the union of the
+    * blocks `bands(i)`: two signatures agree on every block of a band
+    * exactly when their masked values are equal, so the candidates
+    * come from one equi-join on (band, long key). Exact when every pair
+    * within `maxDist` agrees on all blocks of at least one band — each
+    * layout's pigeonhole argument. `side` shapes the join's right side
+    * (the wide kernel's delta batch); the caller checkpoints `sig`,
+    * which both sides read. */
+  private def bandedPairs(sig: DataFrame, blocks: Seq[Long],
+      bands: Seq[Seq[Int]], maxDist: Long,
+      side: DataFrame => DataFrame): DataFrame = {
+    val masks = bands.map(_.map(blocks).reduce(_ | _))
+    // (doc_id, simhash, band, key)
     val banded = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array(SimhashBands.map { case (off, mask) =>
-        shiftright(col("simhash"), off).bitwiseAND(mask)
-      }: _*)).as(Seq("band", "value")))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.value") === col("b.value") &&
+      posexplode(array(masks.map(col("simhash").bitwiseAND(_)): _*))
+        .as(Seq("band", "key")))
+    banded.as("a").join(side(banded).as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.simhash").as("sa"), col("b.simhash").as("sb"),
         col("a.band").as("band"))
       .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= SimhashMaxDist &&
-        firstAgreeingBand(SimhashBands, SimhashBands.indices.map(Seq(_))))
+      .filter(col("hamming") <= maxDist && firstAgreeingBand(blocks, bands))
       .select("doc_a", "doc_b", "hamming")
   }
 
   /** Band-join row filter that emits each pair ONCE, with no dedup
     * shuffle: a row survives only if its band is the pair's first
-    * agreeing band. `blocks` are the (bit offset, mask) blocks of the
-    * signature and `bands(i)` the blocks band i keys on. With
-    * eq = the blocks where `sa ^ sb` is zero and below(i) = the blocks
-    * under band i's highest block that band i leaves out, the row
-    * survives iff eq & below(i) == 0. Exactly one joined band passes:
-    * a band joins only if all its blocks agree, and the only agreeing
-    * band containing every agreeing block below its top is the one made
-    * of the lowest agreeing blocks (for single-block bands: the lowest
-    * agreeing band). Reads columns sa, sb and band. */
-  private def firstAgreeingBand(blocks: Seq[(Int, Long)],
+    * agreeing band. `blocks` are the signature's block masks and
+    * `bands(i)` the blocks band i keys on. With eq = the blocks where
+    * `sa ^ sb` is zero and below(i) = the blocks under band i's highest
+    * block that band i leaves out, the row survives iff
+    * eq & below(i) == 0. Exactly one joined band passes: a band joins
+    * only if all its blocks agree, and the only agreeing band containing
+    * every agreeing block below its top is the one made of the lowest
+    * agreeing blocks (for single-block bands: the lowest agreeing
+    * band). Reads columns sa, sb and band. */
+  private def firstAgreeingBand(blocks: Seq[Long],
       bands: Seq[Seq[Int]]): Column = {
     val x = col("sa").bitwiseXOR(col("sb"))
-    val eq = blocks.zipWithIndex.map { case ((off, mask), j) =>
-      when(shiftright(x, off).bitwiseAND(mask) === 0L, lit(1L << j))
-        .otherwise(lit(0L))
+    val eq = blocks.zipWithIndex.map { case (mask, j) =>
+      when(x.bitwiseAND(mask) === 0L, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
     val below = bands.map { band =>
       ((1L << band.max) - 1) & ~band.map(1L << _).sum
@@ -403,64 +418,27 @@ object Dedup {
   val SimhashWideBits = 60
   val SimhashWideMaxDist = 3L
 
-  /** (doc_id, simhash60): the wide form of [[simhashSignatures]] —
-    * same shingle set, same ±1 weighting, 60 bits from the first 15
-    * sha256 hex chars of each shingle. */
-  def simhashWideSignatures(s: SparkSession, dir: String): DataFrame =
-    simhashWideOf(Tables.documents(s, dir))
-
-  private def simhashWideOf(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .flatMap { case (docId, text) =>
-        val sums = new Array[Long](SimhashWideBits)
-        var any = false
-        shingleSet(text).foreach { sh =>
-          any = true
-          val w = graft.functions.TextUtil.sha256Prefix(sh, SimhashWideBits)
-          var b = 0
-          while (b < SimhashWideBits) {
-            sums(b) += 2 * ((w >> b) & 1L) - 1
-            b += 1
-          }
-        }
-        if (!any) Iterator.empty
-        else {
-          var sig = 0L
-          var b = 0
-          while (b < SimhashWideBits) {
-            if (sums(b) > 0) sig |= (1L << b); b += 1
-          }
-          Iterator.single((docId, sig))
-        }
-      }
-      .toDF("doc_id", "simhash")
-  }
-
   /** SCALE near-dup pairs: Hamming ≤ [[SimhashWideMaxDist]] on the
-    * 60-bit signature, candidates from ADAPTIVE m-of-n compound
-    * banding (Manku et al. WWW'07 §3). Why [[simhashPairs]]'s 32/6
-    * semantic cannot be the 100 TB default: its random-collision rate
-    * is Σ_{i≤6} C(32,i)/2^32 ≈ 2.7e-4, so the TRUE pair set itself
-    * grows ~N² (334k pairs at 50k docs — measured by the 10x scale
-    * probe as a 92 s cluster step). At 3-of-60 the random rate is
+    * 60-bit signature, candidates from ADAPTIVE m-of-n banding (Manku
+    * et al. WWW'07 §3). Why [[simhashPairs]]'s 32/6 semantic cannot be
+    * the 100 TB default: its random-collision rate is
+    * Σ_{i≤6} C(32,i)/2^32 ≈ 2.7e-4, so the TRUE pair set itself grows
+    * ~N² (334k pairs at 50k docs — measured by the 10x scale probe as a
+    * 92 s cluster step). At 3-of-60 the random rate is
     * Σ_{i≤3} C(60,i)/2^60 ≈ 3e-14: output is true near-identicals
     * only, linear in corpus size.
     *
-    * Banding exactness: split the 60 bits into n equal blocks and key
-    * each doc by every m-subset of block values; ≤3 corrupted bits
-    * corrupt ≤3 blocks, so with n = m+3 every qualifying pair shares
-    * at least one UNCORRUPTED m-subset key (pigeonhole). m is chosen
-    * from the corpus count so the compound key carries
-    * ≥ log2(N)+8 bits — the false-candidate expectation N²·C(n,m)/2^K
-    * then stays ≈ N·C(n,m)/256, i.e. LINEAR, at every N (the fixed
-    * 7-band layout of the 32-bit form loses exactly this property).
-    * Each doc emits C(n,m) keyed rows — 4..120 for n ≤ 10 — which is
-    * the bounded price of exact banding, not a corpus² term. */
+    * Banding exactness: split the 60 bits into n equal blocks and make
+    * every m-subset of blocks a band; ≤3 corrupted bits corrupt ≤3
+    * blocks, so with n = m+3 every qualifying pair agrees on at least
+    * one band (pigeonhole). m is chosen from the corpus count so a band
+    * key carries ≥ log2(N)+8 bits — the false-candidate expectation
+    * N²·C(n,m)/2^K then stays ≈ N·C(n,m)/256, i.e. LINEAR, at every N
+    * (the fixed 7-band layout of the 32-bit form loses exactly this
+    * property). Each doc emits C(n,m) keyed rows — 4..120 for n ≤ 10 —
+    * which is the bounded price of exact banding, not a corpus² term. */
   def simhashPairsWide(s: SparkSession, dir: String): DataFrame =
-    simhashPairsWideOf(simhashWideSignatures(s, dir))
+    simhashPairsWideOf(simhashOf(Tables.documents(s, dir), SimhashWideBits))
       .orderBy("doc_a", "doc_b")
 
   /** Unsorted wide pairs of a (doc_id, simhash) frame, each
@@ -480,98 +458,79 @@ object Dedup {
     // reused: both join sides (and the size count when not given)
     val sig = sigDf.localCheckpoint(true)
     val n0 = docCount.getOrElse(sig.count())
-    // smallest block count n (dividing 60, n = m+3) whose compound key
+    // smallest block count n (dividing 60, n = m+3) whose band key
     // width m*60/n reaches log2(N)+8 bits
     val needBits = math.ceil(math.log(math.max(n0, 2).toDouble) /
       math.log(2.0)).toInt + 8
     val n = Seq(4, 5, 6, 10).find { nn =>
       (nn - 3) * (SimhashWideBits / nn) >= needBits
     }.getOrElse(10)
-    val m = n - 3
     val blockBits = SimhashWideBits / n
-    val blockMask = (1L << blockBits) - 1
-    val blocks = (0 until n).map(b => (b * blockBits, blockMask))
-    val combos: Seq[Seq[Int]] =
-      (0 until n).combinations(m).map(_.toSeq).toSeq
-    // (doc_id, simhash, combo, key): C(n,m) compound keys per doc
-    val keyCols = combos.zipWithIndex.map { case (combo, ci) =>
-      struct(lit(ci).as("combo"),
-        concat_ws(":", combo.map(b =>
-          expr(s"(simhash >> ${b * blockBits}) & $blockMask")): _*)
-          .as("key"))
-    }
-    val banded = sig.select(col("doc_id"), col("simhash"),
-      explode(array(keyCols: _*)).as("ck"))
-      .select(col("doc_id"), col("simhash"),
-        col("ck.combo").as("combo"), col("ck.key").as("key"))
-    val bSide = newFrom match {
+    val blocks = (0 until n).map(b => ((1L << blockBits) - 1) << (b * blockBits))
+    val bands = (0 until n).combinations(n - 3).map(_.toSeq).toSeq
+    val side: DataFrame => DataFrame = newFrom match {
       case Some(f) =>
-        val batch = banded.filter(col("doc_id") >= f)
         // the promised fallback: an oversized delta takes the ordinary
         // band-key shuffle instead of a force-broadcast OOM (Spark
         // never vetoes an explicit hint); sig is checkpointed, so the
         // count is a cheap local scan
-        if (sig.filter(col("doc_id") >= f).count() <= DeltaBroadcastMaxDocs)
-          broadcast(batch)
-        else batch
-      case None => banded
+        val small =
+          sig.filter(col("doc_id") >= f).count() <= DeltaBroadcastMaxDocs
+        banded => {
+          val batch = banded.filter(col("doc_id") >= f)
+          if (small) broadcast(batch) else batch
+        }
+      case None => identity
     }
-    banded.as("a").join(bSide.as("b"),
-        col("a.combo") === col("b.combo") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("sa"), col("b.simhash").as("sb"),
-        col("a.combo").as("band"))
-      .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= SimhashWideMaxDist &&
-        firstAgreeingBand(blocks, combos))
-      .select("doc_a", "doc_b", "hamming")
+    bandedPairs(sig, blocks, bands, SimhashWideMaxDist, side)
   }
 
-  /** The ORACLE row for the wide kernel, on a corpus that actually
-    * contains near-identicals: every 25th document is unioned back
-    * verbatim under a shifted id, and the wide kernel must find
-    * exactly those (original, copy) pairs — planted ground truth the
-    * all-pairs DuckDB mirror verifies, since at 3-of-60 the natural
-    * corpus pairs nothing (random rate ≈ 3e-14). Dist-1..3 capture is
-    * pinned separately by the banding property test (planted bit
-    * flips vs brute force); text edits can't plant a GUARANTEED
-    * Hamming bound, copies can. */
-  def simhashWideDemo(s: SparkSession, dir: String): DataFrame = {
+  /** Id offset of the wide-kernel rows' planted copies: ids at or above
+    * it are copies (the oracle SQL spells out the same literal). */
+  private val PlantedIdShift = 10000000L
+
+  /** (doc_id, text) of the wide-kernel rows' planted corpus: every
+    * document, plus every 25th one again, verbatim, under its id +
+    * [[PlantedIdShift]]. At 3-of-60 the natural corpus pairs nothing
+    * (random rate ≈ 3e-14), so the wide kernel must find exactly the
+    * (original, copy) pairs — planted ground truth the all-pairs DuckDB
+    * mirror verifies. Dist-1..3 capture is pinned separately by the
+    * banding property test (planted bit flips vs brute force); text
+    * edits can't plant a GUARANTEED Hamming bound, copies can. */
+  private def plantedCopies(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val copies = docs.filter(col("doc_id") % 25 === 0)
-      .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-    simhashPairsWideOf(simhashWideOf(docs.unionByName(copies)))
-      .orderBy("doc_a", "doc_b")
+    docs.unionByName(docs.filter(col("doc_id") % 25 === 0)
+      .select((col("doc_id") + PlantedIdShift).as("doc_id"), col("text")))
   }
+
+  /** The ORACLE row for the wide kernel: its pairs on the
+    * [[plantedCopies]] corpus. */
+  def simhashWideDemo(s: SparkSession, dir: String): DataFrame =
+    simhashPairsWideOf(simhashOf(plantedCopies(s, dir), SimhashWideBits))
+      .orderBy("doc_a", "doc_b")
 
   /** Incremental WIDE-kernel dedup — [[minhashPairsDelta]]'s twin on
-    * the 100 TB SimHash path: the new batch (every 25th document
-    * planted back verbatim under a shifted id — the same ground-truth
-    * construction as [[simhashWideDemo]], here playing the role of
-    * today's delta) band-joins against the corpus with the store side
-    * never self-paired, and each new document gets a verdict row:
-    * partner count, best (minimum) Hamming distance, lowest partner
-    * id. Every planted copy must report exactly its original at
-    * Hamming 0 — and at 3-of-60 the natural corpus contributes
-    * nothing (random rate ≈ 3e-14) — so the all-pairs DuckDB mirror
-    * is exact ground truth. Pristine new docs (no shingles → no
-    * signature) are absent, as in [[minhashPairs]]. */
+    * the 100 TB SimHash path: the planted copies of [[plantedCopies]]
+    * play today's delta and band-join against the corpus with the
+    * store side never self-paired, and each new document gets a
+    * verdict row: partner count, best (minimum) Hamming distance,
+    * lowest partner id. Every planted copy must report exactly its
+    * original at Hamming 0 — and at 3-of-60 the natural corpus
+    * contributes nothing — so the all-pairs DuckDB mirror is exact
+    * ground truth. Pristine new docs (no shingles → no signature) are
+    * absent, as in [[minhashPairs]]. */
   def simhashWideDelta(s: SparkSession, dir: String): DataFrame = {
-    val cut = 10000000L
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val copies = docs.filter(col("doc_id") % 25 === 0)
-      .select((col("doc_id") + cut).as("doc_id"), col("text"))
     // checkpointed here because BOTH the pair kernel and the verdict's
     // new-doc list read it — without this the signature flatMap runs
     // twice
-    val sig = simhashWideOf(docs.unionByName(copies)).localCheckpoint(true)
-    val pairs = simhashPairsWideOf(sig, Some(cut))
+    val sig = simhashOf(plantedCopies(s, dir), SimhashWideBits)
+      .localCheckpoint(true)
+    val pairs = simhashPairsWideOf(sig, Some(PlantedIdShift))
     val verdict = pairs.groupBy(col("doc_b").as("doc_id"))
       .agg(count(lit(1)).as("n_partners"),
         min(col("hamming")).as("best_hamming"),
         min(col("doc_a")).as("first_partner"))
-    sig.filter(col("doc_id") >= cut).select("doc_id").distinct()
+    sig.filter(col("doc_id") >= PlantedIdShift).select("doc_id").distinct()
       .join(verdict, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_partners"), lit(0L)).as("n_partners"),
@@ -729,9 +688,9 @@ object Dedup {
   def nearDupPairsAuto(s: SparkSession, dir: String,
       corpusSize: Option[Long] = None): DataFrame = {
     val n = corpusSize.getOrElse(Ingest.docCount(s, dir))
-    if (n <= SimhashAutoMaxDocs)
-      simhashPairsOf(simhashOf(Tables.documents(s, dir)))
-    else simhashPairsWideOf(simhashWideSignatures(s, dir), docCount = Some(n))
+    val docs = Tables.documents(s, dir)
+    if (n <= SimhashAutoMaxDocs) simhashPairsOf(simhashOf(docs, SimhashBits))
+    else simhashPairsWideOf(simhashOf(docs, SimhashWideBits), docCount = Some(n))
   }
 
   /** Clusters over the size-routed near-dup pair evidence
@@ -777,18 +736,15 @@ object Dedup {
       .orderBy("cluster_id")
 
   /** The dedup ENDGAME on the SCALE kernel: connected components over
-    * the wide (60-bit/dist-3) pairs of the planted-copy corpus — the
+    * the wide (60-bit/dist-3) pairs of the [[plantedCopies]] corpus — the
     * full 100 TB chain (wide signatures → adaptive banding → union-find
     * retention) as one oracle row. Each planted copy clusters with its
     * original (canonical = the lower id); everything else stays a
     * singleton unless naturally near-identical. */
   def simhashWideClusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val copies = docs.filter(col("doc_id") % 25 === 0)
-      .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-    val corpus = docs.unionByName(copies)
+    val corpus = plantedCopies(s, dir)
     clustersOf(corpus.select(col("doc_id")),
-      simhashPairsWideOf(simhashWideOf(corpus))).orderBy("doc_id")
+      simhashPairsWideOf(simhashOf(corpus, SimhashWideBits))).orderBy("doc_id")
   }
 
   /** Embedding near-dup pairs: banded-LSH candidate generation (the same

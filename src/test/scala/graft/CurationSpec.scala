@@ -122,7 +122,7 @@ class CurationSpec extends SparkSuite {
 
   test("funnel fed from persisted stage outputs equals the recomputing form") {
     import graft.operators.Dedup
-    val base = java.nio.file.Files.createTempDirectory("funnelstage")
+    val base = tempDir("funnelstage")
     val pairsDir = base.resolve("simhash_pairs").toString
     val contamDir = base.resolve("contaminated").toString
     // the pipeline owner's flow: stage outputs persisted once...
@@ -164,8 +164,7 @@ class CurationSpec extends SparkSuite {
     // the durable channel: two recorded runs of the same corpus share
     // the run id AND the write is idempotent — re-recording overwrites
     // the run's partition instead of appending duplicate stage rows
-    val table = java.nio.file.Files
-      .createTempDirectory("curruns").resolve("curation_runs").toString
+    val table = tempDir("curruns").resolve("curation_runs").toString
     val id1 = Curation.recordRun(spark, dir, table)
     val id2 = Curation.recordRun(spark, dir, table)
     assert(id1 == ids.head && id2 == id1)
@@ -196,26 +195,24 @@ class CurationSpec extends SparkSuite {
   }
 
   test("staged funnel inputs: Auto path is content-identical to recompute") {
-    val cache = java.nio.file.Files
-      .createTempDirectory("graftcache").toString
+    import graft.streaming.StageCache
+    def plan(): String = Curation.funnelAuto(spark, dir)
+      .queryExecution.optimizedPlan.toString.toLowerCase
     val recomputedFunnel = Curation.funnel(spark, dir).collect().toSeq
     val recomputedRuns = Curation.curationRuns(spark, dir).collect().toSeq
+    sys.props(StageCache.Prop) = tempDir("graftcache").toString
     try {
-      Curation.stageFunnelInputs(spark, dir, cache)
-      // idempotent: a second stage call keeps the existing tables
-      Curation.stageFunnelInputs(spark, dir, cache)
-      sys.props(Curation.CacheProp) = cache
+      // the first report stages both inputs; the later ones read them
       val cachedFunnel = Curation.funnelAuto(spark, dir).collect().toSeq
       val cachedRuns = Curation.curationRunsAuto(spark, dir).collect().toSeq
       assert(cachedFunnel == recomputedFunnel)
       assert(cachedRuns == recomputedRuns)
       // and the cached plan really skips the SimHash banding recompute
-      val plan = Curation.funnelAuto(spark, dir)
-        .queryExecution.optimizedPlan.toString.toLowerCase
-      assert(!plan.contains("posexplode"),
-        "staged funnel should not re-derive SimHash bands:\n" + plan.take(2000))
-    } finally sys.props.remove(Curation.CacheProp)
+      assert(!plan().contains("posexplode"),
+        "staged funnel should not re-derive SimHash bands:\n" + plan().take(2000))
+    } finally sys.props.remove(StageCache.Prop)
     // with the property cleared, Auto falls back to recompute
+    assert(plan().contains("posexplode"))
     assert(Curation.funnelAuto(spark, dir).collect().toSeq == recomputedFunnel)
   }
 

@@ -2,13 +2,15 @@ package graft.operators
 
 import graft.SparkSuite
 
-/** Exactness pin for the wide SimHash kernel's adaptive m-of-n
-  * compound banding: on planted signatures with pairs at Hamming
-  * distance 0..3 (and decoys at 4..6), the banded join must return
-  * EXACTLY the brute-force pair set — the pigeonhole argument tested,
-  * not assumed. The oracle row (dedup_simhash_wide) can only plant
-  * dist-0 copies (text edits cannot guarantee a Hamming bound), so
-  * dist 1..3 capture lives here. */
+/** Exactness pin for the SimHash band join's two layouts (the wide
+  * kernel's adaptive m-of-n banding, the report kernel's 7 bands): on
+  * planted signatures with pairs at Hamming distance 0..3 (and decoys
+  * at 4..6), the banded join must return EXACTLY the brute-force pair
+  * set — the pigeonhole argument tested, not assumed. The oracle row
+  * (dedup_simhash_wide) can only plant dist-0 copies (text edits cannot
+  * guarantee a Hamming bound), so dist 1..3 capture lives here, and so
+  * does the value-by-value pin of the 60-bit signature, which those
+  * copies match at Hamming 0 whatever the kernel computes. */
 class SimhashWideSpec extends SparkSuite {
 
   private def bruteForce(sigs: Seq[(Long, Long)],
@@ -133,46 +135,58 @@ class SimhashWideSpec extends SparkSuite {
     assert(rows(Dedup.nearDupPairsAuto(spark, dir)) == report)
   }
 
-  test("explicit 32/6 simhashPairs refuses above the gate unless opted in") {
-    val dir = "/root/testdata/sf0.001"
-    val big = Dedup.SimhashAutoMaxDocs + 1
-    val e = intercept[IllegalArgumentException] {
-      Dedup.simhashPairs(spark, dir, Some(big), acceptQuadratic = false)
-    }
+  test("explicit 32/6 simhashPairs refuses above the gate") {
+    import spark.implicits._
+    val dir = tempDir("simhashgate").toString
+    (0L to Dedup.SimhashAutoMaxDocs).map(i => (i, s"doc $i", "en", "s"))
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[IllegalArgumentException](Dedup.simhashPairs(spark, dir))
     assert(e.getMessage.contains("simhashPairsWide"))
     assert(e.getMessage.contains("nearDupPairsAuto"))
-    // the escape hatch still runs (the corpus is actually tiny — only
-    // the CLAIMED size trips the guard) and matches the unguarded row
-    val opted = Dedup
-      .simhashPairs(spark, dir, Some(big), acceptQuadratic = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val base = Dedup.simhashPairs(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(opted == base)
+  }
+
+  test("60-bit signatures equal a relational SimHash, value by value") {
+    val dir = "/root/testdata/sf0.001"
+    val got = Dedup.simhashOf(graft.Tables.documents(spark, dir),
+        Dedup.SimhashWideBits)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the first 15 hex chars of each shingle's sha256, ±1 per bit over
+    // the document's distinct shingles, then the sign of each bit sum
+    val expected = Dedup.shingles(spark, dir)
+      .selectExpr("doc_id",
+        "CAST(conv(substring(sha2(shingle, 256), 1, 15), 16, 10) AS BIGINT) AS w")
+      .selectExpr("doc_id", "w", "explode(sequence(0, 59)) AS b")
+      .groupBy("doc_id", "b")
+      .agg(org.apache.spark.sql.functions
+        .expr("sum(2 * (shiftright(w, b) & 1) - 1)").as("s"))
+      .groupBy("doc_id")
+      .agg(org.apache.spark.sql.functions
+        .expr("sum(IF(s > 0, shiftleft(1L, b), 0L))").as("simhash"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(expected.size >= 400, s"degenerate corpus: ${expected.size} docs")
+    // the pin reaches the bits a 32-bit kernel cannot set
+    assert(expected.values.count(_ >>> 32 != 0) > expected.size / 2)
+    assert(got.keySet == expected.keySet)
+    val differ = expected.keys.toSeq.filter(id => got(id) != expected(id))
+    val nDiffer = differ.size
+    assert(nDiffer == 0, s"of ${expected.size} signatures; (doc, kernel, " +
+      s"relational): ${differ.take(3).map(id => (id, got(id), expected(id)))}")
   }
 
   test("docCount cache stays bounded when a dir's data is rewritten") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_doccount").toFile
-    try {
-      val dir = tmp.getAbsolutePath
-      def write(n: Int): Unit =
-        (0 until n).map(i => (i.toLong, s"text $i", "en", "src0"))
-          .toDF("doc_id", "text", "lang", "source")
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      write(10)
-      assert(Ingest.docCount(spark, dir) == 10L)
-      // rewriting under the SAME path must refresh the count; the cache
-      // is keyed by directory, so the refresh replaces the entry
-      Thread.sleep(1100) // mtime granularity: force a new fingerprint
-      write(25)
-      assert(Ingest.docCount(spark, dir) == 25L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+    val dir = tempDir("graft_doccount").toString
+    def write(n: Int): Unit =
+      (0 until n).map(i => (i.toLong, s"text $i", "en", "src0"))
+        .toDF("doc_id", "text", "lang", "source")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    write(10)
+    assert(Ingest.docCount(spark, dir) == 10L)
+    // rewriting under the SAME path must refresh the count; the cache
+    // is keyed by directory, so the refresh replaces the entry
+    Thread.sleep(1100) // mtime granularity: force a new fingerprint
+    write(25)
+    assert(Ingest.docCount(spark, dir) == 25L)
   }
 }

@@ -52,6 +52,16 @@ if [ -n "$HANDMAP" ]; then
   exit 1
 fi
 
+echo "[gate] 0e/3 one stage cache"
+PROPREAD="$(grep -rn 'sys.props.get(' src/main |
+  grep -vE '^src/main/scala/graft/(streaming/StageCache|Bench)\.scala:' || true)"
+if [ -n "$PROPREAD" ]; then
+  echo "$PROPREAD"
+  echo "[gate] FAIL: system-property read outside StageCache.scala and" \
+    "Bench.scala (stage cached inputs through StageCache)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
