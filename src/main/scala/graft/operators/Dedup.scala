@@ -249,7 +249,7 @@ object Dedup {
     * zeros / -1. Documents with fewer than 3 words have no shingles
     * and no verdict, exactly as they have no [[minhashPairs]] row. */
   def minhashPairsDelta(s: SparkSession, dir: String): DataFrame = {
-    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head
+    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head()
     // empty corpus: batch from 0 selects nothing downstream and the
     // pipeline shape yields the empty result with the right schema
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
@@ -1067,7 +1067,7 @@ object Dedup {
     * window can hit many store documents). */
   def substringSpansDelta(s: SparkSession, dir: String): DataFrame = {
     val W = SubstrWindow
-    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head
+    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head()
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     val from = maxId * 4 / 5
     val wins = sampledWindows(s, dir).localCheckpoint(true)
@@ -1098,7 +1098,7 @@ object Dedup {
     * store set plays the role the frozen quantizer plays in
     * `stream_ivf_parity`. */
   def substrDeltaStreamParity(s: SparkSession, dir: String): DataFrame = {
-    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head
+    val maxRow = Tables.documents(s, dir).agg(max(col("doc_id"))).head()
     if (maxRow.isNullAt(0)) return substringSpansDelta(s, dir)
     val from = maxRow.getLong(0) * 4 / 5
     val W = SubstrWindow

@@ -414,9 +414,11 @@ object Similarity {
     * seeds (`lloydIters` spherical k-means rounds — better cell balance
     * and recall at the same nprobe cost; FAISS builds its IVF coarse
     * quantizer the same way) and go into the in-dir manifest, which
-    * registers the index in [[graft.plans.KnnIndexRegistry]]. The first
-    * [[probeIvf]] of this build loads its seeds, cell files and schema,
-    * and later probes reuse them until the manifest changes. */
+    * registers the index in [[graft.plans.KnnIndexRegistry]]. The build
+    * writes no handle: the first [[probeIvf]] of it loads its seeds,
+    * cell files and schema, and, within the registry's memory rule,
+    * reads its rows in one Spark job to keep them on the driver. Later
+    * probes reuse them until the manifest changes. */
   def buildIvfIndex(s: SparkSession, dir: String, indexDir: String,
       nlist: Int = IvfNlist, lloydIters: Int = IvfLloydIters): Unit = {
     import s.implicits._
@@ -484,7 +486,7 @@ object Similarity {
       .localCheckpoint(true)
 
   def ivfAppendReport(s: SparkSession, dir: String): DataFrame = {
-    val maxRow = Tables.embeddings(s, dir).agg(max(col("vec_id"))).head
+    val maxRow = Tables.embeddings(s, dir).agg(max(col("vec_id"))).head()
     if (maxRow.isNullAt(0))
       return s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], ivfAppendSchema)
@@ -517,7 +519,7 @@ object Similarity {
     * mismatch. Two id-range slices replay in ascending mtime order so
     * the batch boundary is deterministic. */
   def ivfAppendStreamParity(s: SparkSession, dir: String): DataFrame = {
-    val maxRow = Tables.embeddings(s, dir).agg(max(col("vec_id"))).head
+    val maxRow = Tables.embeddings(s, dir).agg(max(col("vec_id"))).head()
     if (maxRow.isNullAt(0)) return ivfAppendReport(s, dir)
     val cut = maxRow.getLong(0) * 4 / 5
     val seeds = ivfSeeds(s, dir, IvfNlist)
@@ -636,45 +638,92 @@ object Similarity {
     acc
   }
 
-  /** The candidates of a probe: `vec_id` and `embedding` of the vectors
-    * in the query's `nprobe` cells, read from exactly those cells' leaf
-    * files with the build's known schema, so the scan lists and infers
-    * nothing. None when the cells hold no file. */
-  private[graft] def probeCandidates(s: SparkSession, indexDir: String,
-      queryVec: Array[Float], nprobe: Int,
-      excludeId: Option[Long]): Option[DataFrame] = {
-    val entry = graft.plans.KnnIndexRegistry.probeEntry(s, indexDir)
-      .getOrElse(throw new IllegalArgumentException(s"$indexDir is not an " +
-        s"IVF index: it has no readable ${graft.plans.KnnIndexRegistry.ManifestName}"))
-    val chosen = topCells(queryVec, entry.seeds, nprobe).toSeq
-      .flatMap(c => entry.cells.getOrElse(c, Nil))
+  /** The probe's `(vec_id, cosine)` of each candidate, the one scoring
+    * both probe paths share: `excludeId` and zero-norm candidates are
+    * skipped, and a zero-norm query scores every other candidate 0.0. */
+  private def scored(rows: Iterator[(Long, Array[Float])],
+      queryVec: Array[Float],
+      excludeId: Option[Long]): Iterator[(Long, Double)] = {
+    val qq = dotF(queryVec, queryVec)
+    rows.flatMap { case (id, e) =>
+      val ee = dotF(e, e)
+      if (excludeId.contains(id) ||
+          SQLOrderingUtil.compareDoubles(ee, 0.0) <= 0) None
+      else if (qq == 0.0) Some(id -> 0.0)
+      else Some(id -> dotF(queryVec, e) / (math.sqrt(qq) * math.sqrt(ee)))
+    }
+  }
+
+  /** The candidates in `cells` of build `e`: `vec_id` and `embedding` of
+    * the rows with both, read from exactly those cells' leaf files with
+    * the build's known schema, so the scan lists and infers nothing.
+    * None when the cells hold no file. */
+  private[graft] def probeCandidates(s: SparkSession,
+      e: graft.plans.KnnIndexRegistry.Entry,
+      cells: Seq[Int]): Option[DataFrame] = {
+    val chosen = cells.flatMap(c => e.cells.getOrElse(c, Nil))
     if (chosen.isEmpty) None
     else {
       // the listing answers from the loaded build, so the file index
       // asks the filesystem nothing
       val scan = Tables.listedParquet(s,
         chosen.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray },
-        entry.schema)
-      val live = scan.filter(col("vec_id").isNotNull &&
-        col("embedding").isNotNull)
-      Some(excludeId.fold(live)(id => live.filter(col("vec_id") =!= id))
+        e.schema)
+      Some(scan.filter(col("vec_id").isNotNull && col("embedding").isNotNull)
         .select("vec_id", "embedding"))
     }
   }
 
+  /** The `k` best candidates in `cells` of build `e`, in probe order,
+    * read from their files in one Spark job: each partition keeps its
+    * `k` best in a bounded heap, and the driver merges at most `k` ×
+    * partitions rows. This is the probe of a build over the registry's
+    * memory rule; `k` is positive. */
+  private[graft] def probeFiles(s: SparkSession,
+      e: graft.plans.KnnIndexRegistry.Entry, cells: Seq[Int],
+      queryVec: Array[Float], k: Int,
+      excludeId: Option[Long]): Array[(Long, Double)] = {
+    import s.implicits._
+    probeCandidates(s, e, cells).fold(Array.empty[(Long, Double)]) { df =>
+      firstK(df.as[(Long, Array[Float])].mapPartitions { it =>
+        firstK(scored(it, queryVec, excludeId), k).iterator
+      }.collect().iterator, k)
+    }
+  }
+
+  /** Every cell's candidates of build `e`, read in one Spark job: the
+    * rows a resident build keeps. */
+  private def residentRows(s: SparkSession,
+      e: graft.plans.KnnIndexRegistry.Entry): graft.plans.KnnIndexRegistry.Rows = {
+    import s.implicits._
+    val CellFile = """.*/cell=(\d+)/[^/]*""".r
+    probeCandidates(s, e, e.cells.keys.toSeq).fold(
+        Map.empty: graft.plans.KnnIndexRegistry.Rows) {
+      _.select(input_file_name(), col("vec_id"), col("embedding"))
+        .as[(String, Long, Array[Float])].collect()
+        .groupMap { case (CellFile(c), _, _) => c.toInt } {
+          case (_, id, v) => (id, v) }
+    }
+  }
+
   /** Probe a built IVF index: rank the build's centroids against the
-    * query on the driver, read only the `nprobe` best cells' files, and
-    * return the `k` best `(vec_id, cosine)` rows, cosine descending and
-    * vec_id ascending on ties. Pass `excludeId` to drop a known
+    * query on the driver, score only the `nprobe` best cells' vectors,
+    * and return the `k` best `(vec_id, cosine)` rows, cosine descending
+    * and vec_id ascending on ties. Pass `excludeId` to drop a known
     * self-match *before* the limit so all `k` result slots are real
     * neighbors.
     *
-    * Cost: one Spark job. The index's seeds, cell files and schema are
-    * loaded once per on-disk build and kept in its
-    * [[graft.plans.KnnIndexRegistry]] entry; each probe checks them
-    * against one status call on the manifest. Each partition keeps its
-    * `k` best candidates in a bounded heap, and the driver merges at
-    * most `k` × partitions rows into a local frame.
+    * Cost: the index's seeds, cell files and schema are loaded once per
+    * on-disk build and kept in its [[graft.plans.KnnIndexRegistry]]
+    * entry; each probe checks them against one status call on the
+    * manifest. A build within the registry's memory rule
+    * ([[graft.plans.KnnIndexRegistry.MaxResidentBytes]]) has its rows
+    * read in one Spark job by its first probe and kept on the driver;
+    * that probe and every later one score the chosen cells' rows there
+    * and start no Spark job. A larger build is probed from its chosen
+    * cells' files by one Spark job ([[probeFiles]]). Either way the
+    * answer is a local frame, which runs one SQL execution and no job
+    * when collected.
     *
     * The cosine is `dot_f`'s: double accumulation over the shorter
     * length, each norm over its own vector. Zero-norm vectors have no
@@ -685,22 +734,22 @@ object Similarity {
   def probeIvf(s: SparkSession, indexDir: String, queryVec: Array[Float],
       k: Int = 10, nprobe: Int = IvfNprobe,
       excludeId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val qq = dotF(queryVec, queryVec)
-    val kept = probeCandidates(s, indexDir, queryVec, nprobe, excludeId) match {
-      case Some(candidates) if k > 0 =>
-        candidates.as[(Long, Array[Float])].mapPartitions { it =>
-          firstK(it.flatMap { case (id, e) =>
-            val ee = dotF(e, e)
-            if (SQLOrderingUtil.compareDoubles(ee, 0.0) <= 0) None
-            else if (qq == 0.0) Some(id -> 0.0)
-            else Some(id -> dotF(queryVec, e) / (math.sqrt(qq) * math.sqrt(ee)))
-          }, k).iterator
-        }.collect()
-      case _ => Array.empty[(Long, Double)]
-    }
-    s.createDataFrame(firstK(kept.iterator, k).map { case (id, c) =>
-      Row(id, c) }.toSeq.asJava, ProbeSchema)
+    val e = graft.plans.KnnIndexRegistry.probeEntry(s, indexDir)
+      .getOrElse(throw new IllegalArgumentException(s"$indexDir is not an " +
+        s"IVF index: it has no readable ${graft.plans.KnnIndexRegistry.ManifestName}"))
+    val cells = topCells(queryVec, e.seeds, nprobe).toSeq
+    val kept =
+      if (k <= 0) Array.empty[(Long, Double)]
+      else graft.plans.KnnIndexRegistry.resident(indexDir, e)(
+          residentRows(s, e)) match {
+        case Some(rows) =>
+          firstK(scored(cells.iterator.flatMap(c =>
+            rows.getOrElse(c, Array.empty[(Long, Array[Float])]).iterator),
+            queryVec, excludeId), k)
+        case None => probeFiles(s, e, cells, queryVec, k, excludeId)
+      }
+    s.createDataFrame(kept.map { case (id, c) => Row(id, c) }.toSeq.asJava,
+      ProbeSchema)
   }
 
   /** The raw-seed IVF index of each corpus dir that the IVF oracle rows

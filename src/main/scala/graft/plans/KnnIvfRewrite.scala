@@ -21,17 +21,39 @@ import graft.functions.DotProductF
   * declared recall/cost dial: [[graft.operators.Similarity.probeIvf]]
   * probes it, and [[KnnIvfRewrite]] rewrites `ORDER BY cosine DESC
   * LIMIT k` against it. Both load the index through [[probeEntry]]; the
-  * in-memory map only caches loaded builds. A path without a readable
-  * manifest is not an index, so ordinary sorts are untouched.
+  * in-memory maps only cache loaded builds and, for the probe, the rows
+  * of the builds within [[MaxResidentBytes]]. A path without a readable
+  * manifest is not an index, so ordinary sorts are untouched, and its
+  * cached build is dropped.
   */
 object KnnIndexRegistry {
   /** One on-disk build as a probe reads it: the quantizer (the nlist
     * seed centroids and the probe width), each cell's leaf data files
     * and their schema, loaded when the manifest had `fingerprint`
-    * (modification time, length). */
+    * (modification time, length). A probe of a build that fits
+    * [[MaxResidentBytes]] also keeps the build's rows on the driver
+    * ([[resident]]) and reads no file after its first probe. */
   final case class Entry(seeds: Array[Array[Float]], nprobe: Int,
       fingerprint: (Long, Long), cells: Map[Int, Seq[FileStatus]],
-      schema: StructType)
+      schema: StructType) {
+    /** The build's data-file bytes: what the memory rule counts. */
+    val bytes: Long = cells.valuesIterator.flatten.map(_.getLen).sum
+  }
+
+  /** A resident build's live rows, `(vec_id, embedding)` by cell. */
+  type Rows = Map[Int, Array[(Long, Array[Float])]]
+
+  /** The memory rule: the data-file bytes of every resident build,
+    * summed, stay at or below 1/16 of the driver's max heap. Floats in
+    * parquet barely compress, so a build's file bytes are about the
+    * size of its decoded rows: 64 floats are 256 bytes in the file and
+    * a 272-byte array plus about 40 bytes of id and tuple on the heap.
+    * The rule thus keeps the resident rows under 1/12 of the heap,
+    * which leaves the driver's other work its room. (A build whose
+    * vectors repeat can compress far below its decoded size; the rule
+    * does not guard against that.) A build over the rule, and any build
+    * at 100 TB, is probed from its files by a Spark job. */
+  val MaxResidentBytes: Long = Runtime.getRuntime.maxMemory / 16
 
   /** Manifest file written INSIDE the index directory. The underscore
     * prefix makes Spark's file index treat it as metadata (like
@@ -41,6 +63,10 @@ object KnnIndexRegistry {
   val ManifestName = "_graft_knn_manifest"
 
   private val entries = TrieMap.empty[String, Entry]
+
+  /** The resident rows by canonical path, with the build they were
+    * read from. */
+  private val residents = TrieMap.empty[String, (Entry, Rows)]
 
   /** Canonical cache key: local paths (no scheme, or `file:`)
     * normalize to the bare absolute path so `/x` matches a scan of
@@ -55,7 +81,14 @@ object KnnIndexRegistry {
     else hp.toString.stripSuffix("/")
   }
 
-  def clear(): Unit = entries.clear()
+  def clear(): Unit = { entries.clear(); residents.clear() }
+
+  /** Whether the registry holds a loaded build or resident rows of the
+    * index at `indexDir`. */
+  private[graft] def holds(indexDir: String): Boolean = {
+    val key = canon(indexDir)
+    entries.contains(key) || residents.contains(key)
+  }
 
   private def seedsToB64(seeds: Array[Array[Float]]): String = {
     val dim = if (seeds.isEmpty) 0 else seeds(0).length
@@ -124,13 +157,15 @@ object KnnIndexRegistry {
   /** The loaded build of the index at `indexDir`; None when the path
     * has no manifest or a malformed one (a probe then fails, and the
     * rewrite stands down so the exact scan runs — degraded performance,
-    * never a wrong answer). A build is loaded once: its seeds from the
-    * manifest, each cell's leaf files from one listing, the schema from
-    * one footer. Every call compares the manifest's fingerprint, one
-    * status call through the session's Hadoop conf, with the loaded
+    * never a wrong answer), and then the path's loaded build and its
+    * resident rows are dropped. A build is loaded once: its seeds from
+    * the manifest, each cell's leaf files from one listing, the schema
+    * from one footer. Every call compares the manifest's fingerprint,
+    * one status call through the session's Hadoop conf, with the loaded
     * one, so a rebuild or a new manifest at the same path by any writer
-    * is reloaded. (A rebuild rewrites the manifest after its data, far
-    * later than the filesystem's modification-time resolution.) */
+    * is reloaded, and the old build's resident rows are dropped. (A
+    * rebuild rewrites the manifest after its data, far later than the
+    * filesystem's modification-time resolution.) */
   private[graft] def probeEntry(s: SparkSession,
       indexDir: String): Option[Entry] = {
     val dir = new Path(indexDir)
@@ -139,9 +174,9 @@ object KnnIndexRegistry {
     val st =
       try Some(fs.getFileStatus(manifest))
       catch { case _: java.io.FileNotFoundException => None }
-    st.flatMap { st =>
+    val key = canon(indexDir)
+    val loaded = st.flatMap { st =>
       val fingerprint = (st.getModificationTime, st.getLen)
-      val key = canon(indexDir)
       entries.get(key).filter(_.fingerprint == fingerprint).orElse {
         readManifest(fs, manifest).map { case (seeds, nprobe) =>
           val cells = fs.listStatus(dir).toSeq.flatMap { d =>
@@ -157,10 +192,37 @@ object KnnIndexRegistry {
             .getOrElse(new StructType())
           val e = Entry(seeds, nprobe, fingerprint, cells, schema)
           entries(key) = e
+          residents.remove(key)
           e
         }
       }
     }
+    if (loaded.isEmpty) { entries.remove(key); residents.remove(key) }
+    loaded
+  }
+
+  /** The rows of build `e` of the index at `indexDir`, held on the
+    * driver: read by `load` on the first call for this build, when the
+    * build fits [[MaxResidentBytes]] beside every other resident build,
+    * and kept until [[probeEntry]] drops them. None when the build does
+    * not fit; the caller then reads the build's files. */
+  private[graft] def resident(indexDir: String, e: Entry)(
+      load: => Rows): Option[Rows] = {
+    val key = canon(indexDir)
+    def held = residents.get(key).collect {
+      case (r, rows) if r.fingerprint == e.fingerprint => rows }
+    held.orElse(synchronized {
+      held.orElse {
+        val others = residents.iterator
+          .collect { case (k, (r, _)) if k != key => r.bytes }.sum
+        if (others + e.bytes > MaxResidentBytes) None
+        else {
+          val rows = load
+          residents(key) = (e, rows)
+          Some(rows)
+        }
+      }
+    })
   }
 }
 
@@ -257,7 +319,7 @@ object KnnIvfRewrite extends Rule[LogicalPlan] {
     })
 
   private def toFloats(e: Expression): Array[Float] =
-    e.eval(null).asInstanceOf[ArrayData].toFloatArray
+    e.eval(null).asInstanceOf[ArrayData].toFloatArray()
 
   /** The ranked relation, reached ONLY through row-preserving nodes
     * (Project/Filter): dropping candidate rows of the relation being

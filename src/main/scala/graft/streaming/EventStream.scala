@@ -371,7 +371,7 @@ object EventStream {
     val sentinels = Flush.dirs.tail.map(_ -> Seq("__sentinel__")) ++
       Typed.dirs.tail.map(_ -> Seq("click", "error"))
     sentinels.foreach { case (d, types) =>
-      types.map(t => (-1L, future, -1L, t, 0.0)).toDF(events.columns: _*)
+      types.map(t => (-1L, future, -1L, t, 0.0)).toDF(events.columns.toIndexedSeq: _*)
         .coalesce(1).write.parquet(s"$base/$d")
     }
     Replay.stamp(("in0" +: sentinels.map(_._1)).map(d => s"$base/$d"): _*)

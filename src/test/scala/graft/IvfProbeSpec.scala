@@ -4,13 +4,17 @@ import org.apache.spark.sql.DataFrame
 import graft.operators.{DocPipeline, Similarity, Sync}
 import graft.sources.ChunkStore
 
-/** `Similarity.probeIvf`'s per-partition top-k kernel against the plan
-  * it replaced ([[IvfReference]]: crossJoin, `dot_f` cosine, global
-  * sort), bit for bit, and the loaded index handle and store reads
-  * against rebuilds. */
+/** `Similarity.probeIvf` against the plan it replaced
+  * ([[IvfReference]]: crossJoin, `dot_f` cosine, global sort), bit for
+  * bit, on both of its paths: the rows a build keeps resident in its
+  * index handle, and the per-partition top-k kernel over the files of a
+  * build over the memory rule (`Similarity.probeFiles`, called
+  * directly). Also the loaded index handle and store reads against
+  * rebuilds and deletes. */
 class IvfProbeSpec extends SparkSuite {
   import IvfProbeSpec.Built
   import Similarity.{IvfNlist, IvfNprobe}
+  import graft.plans.KnnIndexRegistry
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -49,8 +53,28 @@ class IvfProbeSpec extends SparkSuite {
     df.collect().toSeq.map(r =>
       (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
 
-  /** The kernel's rows equal the reference plan's, in order and bit for
-    * bit; returns them. */
+  /** The rows of the probe from files, the path of a build over the
+    * memory rule, as [[bits]] gives them. */
+  private def fileBits(idx: String, q: Array[Float], k: Int, nprobe: Int,
+      excludeId: Option[Long]): Seq[(Long, Long)] = {
+    val e = KnnIndexRegistry.probeEntry(spark, idx).get
+    if (k <= 0) Nil
+    else Similarity.probeFiles(spark, e, Similarity.topCells(q, e.seeds,
+        nprobe).toSeq, q, k, excludeId).toSeq
+      .map { case (id, c) => (id, java.lang.Double.doubleToRawLongBits(c)) }
+  }
+
+  /** Whether the build at `idx` is resident: asking for its rows does
+    * not call the loader. */
+  private def isResident(idx: String): Boolean = {
+    val e = KnnIndexRegistry.probeEntry(spark, idx).get
+    try KnnIndexRegistry.resident(idx, e)(
+      throw new NoSuchElementException(s"$idx is not resident")).isDefined
+    catch { case _: NoSuchElementException => false }
+  }
+
+  /** The probe's rows equal the reference plan's, in order and bit for
+    * bit, from the resident rows and from the files; returns them. */
   private def parity(idx: Built, q: Array[Float], k: Int = 10,
       nprobe: Int = IvfNprobe, excludeId: Option[Long] = None): Seq[(Long, Long)] = {
     val got = Similarity.probeIvf(spark, idx.path, q, k, nprobe, excludeId)
@@ -58,6 +82,7 @@ class IvfProbeSpec extends SparkSuite {
     val want = bits(IvfReference.probeIvf(spark, idx.path, idx.seeds, q, k,
       nprobe, excludeId))
     assert(bits(got) == want)
+    assert(fileBits(idx.path, q, k, nprobe, excludeId) == want)
     want
   }
 
@@ -176,6 +201,86 @@ class IvfProbeSpec extends SparkSuite {
     val (second, secondPage) = contents()
     assert(second.exists(_.contains("second text")) && secondPage == second)
     assert(!second.exists(_.contains("first text")))
+  }
+
+  test("a cold and a warm probe equal the reference plan; the first loads the build") {
+    val base = gaussian(25, 80)
+    val idx = build(base.indices.map(i => i.toLong -> base(i)))
+    assert(!isResident(idx.path))
+    val cold = parity(idx, base(9), excludeId = Some(9L))
+    assert(isResident(idx.path))
+    assert(parity(idx, base(9), excludeId = Some(9L)) == cold)
+    assert(cold.size == 10 && !cold.exists(_._1 == 9L))
+    // a second nprobe on the same loaded build
+    val wide = parity(idx, base(9), k = 30, nprobe = 5)
+    assert(wide.size > 10 && wide.take(10).map(_._1).contains(9L))
+    assert(parity(idx, base(9), k = 0).isEmpty)
+    assert(isResident(idx.path))
+  }
+
+  test("zero-norm and NaN candidates: the resident rows equal the reference plan") {
+    val base = gaussian(27, 50)
+    val (zeros, nans) = (Set(20L, 33L), Set(25L, 41L))
+    val vecs = base.indices.map { i =>
+      val id = i.toLong
+      val v = base(i).clone()
+      if (zeros(id)) java.util.Arrays.fill(v, 0f)
+      if (nans(id)) v(3) = Float.NaN
+      id -> v
+    }
+    val idx = build(vecs)
+    val rows = parity(idx, base(4), k = 100, nprobe = IvfNlist)
+    assert(rows.map(_._1).toSet == vecs.map(_._1).toSet -- zeros)
+    // a NaN cosine sorts first under Spark's double ordering
+    assert(rows.take(2).map(_._1).toSet == nans)
+    parity(idx, base(30), k = 5, excludeId = Some(30L))
+  }
+
+  test("a zero-norm query scores 0.0 from the resident rows and from the files") {
+    val base = gaussian(29, 60)
+    val idx = build(base.indices.map(i => i.toLong -> base(i)))
+    val zero = new Array[Float](base(0).length)
+    Seq(1, 3).foreach { nprobe =>
+      val got = bits(Similarity.probeIvf(spark, idx.path, zero, k = 7,
+        nprobe = nprobe, excludeId = Some(0L)))
+      assert(got == fileBits(idx.path, zero, 7, nprobe, Some(0L)))
+      // the lowest ids of cells 0 until nprobe, every cosine 0.0
+      val cells = (0 until nprobe).toSet
+      val want = base.indices.map(_.toLong).filter(id => id != 0L &&
+        cells(Similarity.argmaxCell(base(id.toInt), idx.seeds))).take(7)
+      assert(got == want.map(_ -> 0L))
+    }
+  }
+
+  test("a rebuild by another writer after a warm probe is read, not the resident rows") {
+    // both builds hold seed ids 1..16; past those, b's ids are new
+    val a = gaussian(31, 40).zipWithIndex.map { case (v, i) => i.toLong -> v }
+    val b = gaussian(32, 40).zipWithIndex.map { case (v, i) =>
+      (if (i <= IvfNlist) i.toLong else 1000L + i) -> v }
+    val p = tempDir("ivfwarm").resolve("ivf")
+    val first = build(a, Some(p.toString))
+    (0 until 2).foreach(_ => parity(first, a(30)._2, k = 5, nprobe = IvfNlist))
+    assert(isResident(p.toString))
+    val other = build(b)
+    Sync.deleteTree(p.toFile)
+    java.nio.file.Files.move(java.nio.file.Paths.get(other.path), p)
+    val got = Similarity.probeIvf(spark, p.toString, b(30)._2, k = 5,
+      nprobe = IvfNlist).collect().map(_.getLong(0)).toSeq
+    // id 1030 exists only in the new build
+    assert(got.size == 5 && got.head == b(30)._1, got)
+    parity(Built(p.toString, other.seeds), b(30)._2, k = 5, nprobe = IvfNlist)
+  }
+
+  test("a deleted index fails the next probe and leaves the registry") {
+    val base = gaussian(33, 40)
+    val idx = build(base.indices.map(i => i.toLong -> base(i)))
+    parity(idx, base(2))
+    assert(KnnIndexRegistry.holds(idx.path) && isResident(idx.path))
+    Sync.deleteTree(new java.io.File(idx.path))
+    val err = intercept[IllegalArgumentException](
+      Similarity.probeIvf(spark, idx.path, base(2)))
+    assert(err.getMessage.contains("is not an IVF index"))
+    assert(!KnnIndexRegistry.holds(idx.path))
   }
 
   // last: it stops the suite's session

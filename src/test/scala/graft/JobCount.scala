@@ -38,3 +38,43 @@ final class JobCount(sc: SparkContext) extends SparkListener {
     } finally sc.removeSparkListener(this)
   }
 }
+
+/** Counts the SQL executions a block of driver code runs in a session,
+  * on its `QueryExecutionListener` bus. A marker action runs before and
+  * after the block: the bus delivers executions in order, so the ones
+  * between the two markers are the block's. */
+final class ExecutionCount(spark: org.apache.spark.sql.SparkSession)
+    extends org.apache.spark.sql.util.QueryExecutionListener {
+  import org.apache.spark.sql.execution.QueryExecution
+
+  private val seen = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+
+  def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+  def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+
+  private def marker(): QueryExecution = {
+    val d = spark.range(1)
+    d.collect()
+    d.queryExecution
+  }
+
+  /** The executions delivered before `m`, `m` taken off the queue. */
+  private def until(m: QueryExecution): Int = {
+    val next = () => seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+    var n = 0
+    var qe = next()
+    while (qe != null && !qe.eq(m)) { n += 1; qe = next() }
+    assert(qe != null, "listener bus did not drain")
+    n
+  }
+
+  /** The SQL executions `f` runs. */
+  def of(f: => Unit): Int = {
+    spark.listenerManager.register(this)
+    try {
+      until(marker())
+      f
+      until(marker())
+    } finally spark.listenerManager.unregister(this)
+  }
+}

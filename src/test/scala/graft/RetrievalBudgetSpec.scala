@@ -4,13 +4,17 @@ import org.apache.spark.sql.functions._
 import graft.operators.{DocPipeline, Similarity, Sync}
 import graft.sources.ChunkStore
 
-/** Job budget of the retrieval calls: a probe runs exactly one Spark
-  * job, a store read none, and a page lookup at most two. A call that
-  * gains a job (a schema-inference job, a sort's sampling job, a second
-  * pass over the index) fails here. */
+/** Job budget of the retrieval calls. A probe's first call on a build
+  * runs at most one job, which reads the build's rows into the index
+  * handle, and every later probe of that build runs no job and one SQL
+  * execution, the collect of its local answer frame. A store read runs
+  * no job, and a page lookup at most two. A call that gains a job (a
+  * schema-inference job, a sort's sampling job, a second pass over the
+  * index, a warm probe that reads files again) fails here. */
 class RetrievalBudgetSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private lazy val jobs = new JobCount(spark.sparkContext)
+  private lazy val executions = new ExecutionCount(spark)
 
   private lazy val index: String = {
     val idx = tempDir("budgetivf").resolve("ivf").toString
@@ -34,13 +38,16 @@ class RetrievalBudgetSpec extends SparkSuite {
       .select("embedding").as[Array[Float]].head()
   }
 
-  test("a probe runs exactly one job, on a fresh build and on a loaded one") {
-    val (q0, q1) = (query(0L), query(1L))
+  test("a probe runs at most one job on a fresh build and none on a loaded one") {
+    val (q0, q1, q2) = (query(0L), query(1L), query(2L))
     val idx = index
     var rows = 0
-    assert(jobs.of { rows = Similarity.probeIvf(spark, idx, q0).collect().length } == 1)
+    val cold = jobs.of { rows = Similarity.probeIvf(spark, idx, q0).collect().length }
+    assert(cold <= 1, s"the first probe ran $cold jobs")
     assert(rows == 10)
-    assert(jobs.of { rows = Similarity.probeIvf(spark, idx, q1).collect().length } == 1)
+    assert(jobs.of { rows = Similarity.probeIvf(spark, idx, q1).collect().length } == 0)
+    assert(rows == 10)
+    assert(executions.of { rows = Similarity.probeIvf(spark, idx, q2).collect().length } == 1)
     assert(rows == 10)
   }
 

@@ -531,16 +531,17 @@ class SparkE2ESpec extends SparkSuite {
     // 10 probe slots are real neighbors
     val probe = Similarity.probeIvf(spark, idx, qv, k = 10,
       excludeId = Some(0L))
-    // the probe must read its cells' files only, not filter the index:
-    // its scan is exactly the leaf files of the query's topCells cells,
-    // listed here from disk
+    // a probe from files must read its cells' files only, not filter
+    // the index: the scan of the query's topCells cells is exactly their
+    // leaf files, listed here from disk
     val cells = Similarity.topCells(qv, seeds, Similarity.IvfNprobe)
     val leaves = cells.toSeq.flatMap { c =>
       Option(new java.io.File(idx, s"cell=$c").listFiles()).toSeq.flatten
         .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
     }.toSet
-    val scanned = Similarity.probeCandidates(spark, idx, qv,
-      Similarity.IvfNprobe, Some(0L)).get.inputFiles
+    val entry = graft.plans.KnnIndexRegistry.probeEntry(spark, idx).get
+    val scanned = Similarity.probeCandidates(spark, entry, cells.toSeq)
+      .get.inputFiles
       .map(u => new java.io.File(new java.net.URI(u)).getAbsolutePath).toSet
     assert(leaves.nonEmpty && scanned == leaves, s"$scanned vs $leaves")
     val got = probe.collect().map(_.getAs[Long]("vec_id")).toSeq
