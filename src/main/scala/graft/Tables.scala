@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,9 +22,10 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = p.getFileSystem(conf)
     val files = if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
-    footerSchema(spark, files).fold(spark.read)(spark.read.schema)
+    footerSchema(spark, files, conf).fold(spark.read)(spark.read.schema)
       .parquet(path)
   }
 
@@ -39,12 +42,15 @@ object Tables {
     * path, its `org.apache.spark.sql.parquet.row.metadata` (or, from a
     * writer other than Spark, the converted parquet schema). None when
     * no file is data, so the caller leaves inference, and its error
-    * for an empty directory, to Spark. */
+    * for an empty directory, to Spark. The footer is opened with the
+    * caller's `conf`: the reader's default options would build a fresh
+    * Hadoop `Configuration`, which parses its XML resources again on
+    * every call. */
   private[graft] def footerSchema(spark: SparkSession,
-      files: Seq[FileStatus]): Option[StructType] =
+      files: Seq[FileStatus], conf: Configuration): Option[StructType] =
     files.filter(isDataFile).sortBy(_.getPath.toString).headOption.map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+        HadoopReadOptions.builder(conf).build())
       val footer = try reader.getFooter finally reader.close()
       ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))

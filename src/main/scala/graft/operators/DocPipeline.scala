@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.ChunkStore
 
 /** Input projection of the documents table (top-level: Spark encoders
   * need public classes for codegen). */
@@ -145,18 +146,25 @@ object DocPipeline {
     * never an analysis failure (the Spark analog of SQLite's "no such
     * column" retry; schema inspection replaces the error probe).
     *
-    * Cost: at most two Spark jobs. The url and range filters run in the
-    * parallel scan; only the page's rows cross one exchange into a
-    * single partition, which is sorted by `chunk_index` in place. A
-    * global `orderBy` would add a range-sampling job that re-scans the
-    * whole store. */
+    * Cost: `chunks` as [[ChunkStore.readLatest]] returned it, from a
+    * store whose snapshot fits the driver's memory rule, is answered from
+    * the rows its snapshot handle keeps ([[ChunkStore.residentPage]]):
+    * the handle's first page lookup reads them in one Spark job, and
+    * every later one returns a local frame, which runs one SQL execution
+    * and no job when collected. Any other frame, a projection of that
+    * one included, runs at most two Spark jobs: the url and range filters
+    * run in the parallel scan, and only the page's rows cross one
+    * exchange into a single partition, which is sorted by `chunk_index`
+    * in place. A global `orderBy` would add a range-sampling job that
+    * re-scans the whole store. */
   def getChunksFromStore(chunks: DataFrame, url: String,
       range: Option[(Int, Int)] = None): DataFrame = {
-    val page = chunks.filter(col("url") === url)
+    lazy val page = chunks.filter(col("url") === url)
     if (chunks.columns.contains("chunk_index")) {
-      range.fold(page) { case (a, b) =>
-        page.filter(col("chunk_index").between(a, b)) }
-        .repartition(1).sortWithinPartitions("chunk_index")
+      ChunkStore.residentPage(chunks, url, range).getOrElse(
+        range.fold(page) { case (a, b) =>
+          page.filter(col("chunk_index").between(a, b)) }
+          .repartition(1).sortWithinPartitions("chunk_index"))
     } else {
       val legacy = Seq("chunk_id", "content", "url", "section",
         "heading_hierarchy").filter(chunks.columns.contains)

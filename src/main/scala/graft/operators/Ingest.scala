@@ -373,62 +373,62 @@ object Ingest {
     import s.implicits._
     import graft.sources.ApiSources
     val base = java.nio.file.Files.createTempDirectory("issuese2e")
-    val recs = Tables.events(s, dir).filter(col("event_id") < 200)
-      .select(
-        col("event_id").as("number"),
-        concat(lit("Event "), col("event_type"), lit(" "),
-          col("event_id")).as("title"),
-        concat(lit("user"), col("user_id")).as("user_login"),
-        when(col("event_type") === "error", lit("closed"))
-          .otherwise(lit("open")).as("state"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-          .as("created_at"),
-        concat(lit("2024-02-"),
-          lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
-          lit("T00:00:00Z")).as("updated_at"),
-        when(col("event_type") === "click", array(lit("ui"), lit("p1")))
-          .otherwise(array().cast("array<string>")).as("labels"),
-        concat(lit("Body for event "), col("event_id"),
-          when(col("event_id") % 3 === 0, lit(". (edited)"))
-            .otherwise(lit("."))).as("body"),
-        (col("event_id") % 5 === 0).as("is_pull_request"),
-        concat(lit("github://issues/"), col("event_id")).as("html_url"),
-        (col("event_id") / 40).cast("int").as("page"))
-      .localCheckpoint(true)
-    (0 until 5).foreach { p =>
-      recs.filter(col("page") === p).drop("page").coalesce(1)
-        .write.mode("overwrite").json(s"$base/page-$p")
-    }
-    val chunks = ApiSources.ingestIssues(s, s"$base/page-*",
-        "events-docs", "1.0", updatedAfter = Some("2024-02-14T12:00:00Z"))
-      .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
-      .toDF("url", "chunk_id", "section", "total_chunks")
-    // prior store: ids < 150 rendered through the SAME kernels from the
-    // pre-edit records (what the previous sync embedded)
-    val prior = Tables.events(s, dir).filter(col("event_id") < 150)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
-      .as[(Long, Long, String, String)]
-      .flatMap { case (id, user, etype, iso) =>
-        val issue = graft.sources.Renderers.Issue(
-          id, s"Event $etype $id", s"user$user",
-          if (etype == "error") "closed" else "open",
-          iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
-          if (etype == "click") Seq("ui", "p1") else Seq.empty,
-          Some(s"Body for event $id."), id % 5 == 0, Seq.empty)
-        Chunker.chunkMarkdown(Renderers.renderIssue(issue),
-            "events-docs", "1.0", s"github://issues/$id")
-          .map(c => (c.url, c.chunk_id))
-      }.toDF("url", "stored_id")
-    val out = chunks.join(prior, Seq("url"), "left")
-      .withColumn("action",
-        when(col("stored_id").isNull, "new")
-          .when(col("stored_id") =!= col("chunk_id"), "changed")
-          .otherwise("unchanged"))
-      .select("url", "chunk_id", "section", "total_chunks", "action")
-      .orderBy("url").localCheckpoint(true)
-    Sync.deleteTree(base.toFile)
-    out
+    try {
+      val recs = Tables.events(s, dir).filter(col("event_id") < 200)
+        .select(
+          col("event_id").as("number"),
+          concat(lit("Event "), col("event_type"), lit(" "),
+            col("event_id")).as("title"),
+          concat(lit("user"), col("user_id")).as("user_login"),
+          when(col("event_type") === "error", lit("closed"))
+            .otherwise(lit("open")).as("state"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+            .as("created_at"),
+          concat(lit("2024-02-"),
+            lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
+            lit("T00:00:00Z")).as("updated_at"),
+          when(col("event_type") === "click", array(lit("ui"), lit("p1")))
+            .otherwise(array().cast("array<string>")).as("labels"),
+          concat(lit("Body for event "), col("event_id"),
+            when(col("event_id") % 3 === 0, lit(". (edited)"))
+              .otherwise(lit("."))).as("body"),
+          (col("event_id") % 5 === 0).as("is_pull_request"),
+          concat(lit("github://issues/"), col("event_id")).as("html_url"),
+          (col("event_id") / 40).cast("int").as("page"))
+        .localCheckpoint(true)
+      (0 until 5).foreach { p =>
+        recs.filter(col("page") === p).drop("page").coalesce(1)
+          .write.mode("overwrite").json(s"$base/page-$p")
+      }
+      val chunks = ApiSources.ingestIssues(s, s"$base/page-*",
+          "events-docs", "1.0", updatedAfter = Some("2024-02-14T12:00:00Z"))
+        .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
+        .toDF("url", "chunk_id", "section", "total_chunks")
+      // prior store: ids < 150 rendered through the SAME kernels from the
+      // pre-edit records (what the previous sync embedded)
+      val prior = Tables.events(s, dir).filter(col("event_id") < 150)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
+        .as[(Long, Long, String, String)]
+        .flatMap { case (id, user, etype, iso) =>
+          val issue = graft.sources.Renderers.Issue(
+            id, s"Event $etype $id", s"user$user",
+            if (etype == "error") "closed" else "open",
+            iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
+            if (etype == "click") Seq("ui", "p1") else Seq.empty,
+            Some(s"Body for event $id."), id % 5 == 0, Seq.empty)
+          Chunker.chunkMarkdown(Renderers.renderIssue(issue),
+              "events-docs", "1.0", s"github://issues/$id")
+            .map(c => (c.url, c.chunk_id))
+        }.toDF("url", "stored_id")
+      chunks.join(prior, Seq("url"), "left")
+        .withColumn("action",
+          when(col("stored_id").isNull, "new")
+            .when(col("stored_id") =!= col("chunk_id"), "changed")
+            .otherwise("unchanged"))
+        .select("url", "chunk_id", "section", "total_chunks", "action")
+        .orderBy("url").localCheckpoint(true)
+    } finally Sync.deleteTree(base.toFile)
   }
 
   /** End-to-end Zendesk-tickets ingest composition (reference

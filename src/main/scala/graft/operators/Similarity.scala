@@ -716,14 +716,13 @@ object Similarity {
     * Cost: the index's seeds, cell files and schema are loaded once per
     * on-disk build and kept in its [[graft.plans.KnnIndexRegistry]]
     * entry; each probe checks them against one status call on the
-    * manifest. A build within the registry's memory rule
-    * ([[graft.plans.KnnIndexRegistry.MaxResidentBytes]]) has its rows
-    * read in one Spark job by its first probe and kept on the driver;
-    * that probe and every later one score the chosen cells' rows there
-    * and start no Spark job. A larger build is probed from its chosen
-    * cells' files by one Spark job ([[probeFiles]]). Either way the
-    * answer is a local frame, which runs one SQL execution and no job
-    * when collected.
+    * manifest. A build within the driver's memory rule
+    * ([[graft.ResidentMemory]]) has its rows read in one Spark job by its
+    * first probe and kept on the driver; that probe and every later one
+    * score the chosen cells' rows there and start no Spark job. A larger
+    * build is probed from its chosen cells' files by one Spark job
+    * ([[probeFiles]]). Either way the answer is a local frame, which runs
+    * one SQL execution and no job when collected.
     *
     * The cosine is `dot_f`'s: double accumulation over the shorter
     * length, each norm over its own vector. Zero-norm vectors have no

@@ -22,38 +22,27 @@ import graft.functions.DotProductF
   * probes it, and [[KnnIvfRewrite]] rewrites `ORDER BY cosine DESC
   * LIMIT k` against it. Both load the index through [[probeEntry]]; the
   * in-memory maps only cache loaded builds and, for the probe, the rows
-  * of the builds within [[MaxResidentBytes]]. A path without a readable
-  * manifest is not an index, so ordinary sorts are untouched, and its
-  * cached build is dropped.
+  * of the builds within [[graft.ResidentMemory]]'s rule. A path without
+  * a readable manifest is not an index, so ordinary sorts are untouched,
+  * and its cached build is dropped.
   */
 object KnnIndexRegistry {
   /** One on-disk build as a probe reads it: the quantizer (the nlist
     * seed centroids and the probe width), each cell's leaf data files
     * and their schema, loaded when the manifest had `fingerprint`
-    * (modification time, length). A probe of a build that fits
-    * [[MaxResidentBytes]] also keeps the build's rows on the driver
-    * ([[resident]]) and reads no file after its first probe. */
+    * (modification time, length). A probe of a build within
+    * [[graft.ResidentMemory]]'s rule also keeps the build's rows on the
+    * driver ([[resident]]) and reads no file after its first probe. */
   final case class Entry(seeds: Array[Array[Float]], nprobe: Int,
       fingerprint: (Long, Long), cells: Map[Int, Seq[FileStatus]],
       schema: StructType) {
-    /** The build's data-file bytes: what the memory rule counts. */
+    /** The build's data-file bytes: what the memory rule counts
+      * ([[graft.ResidentMemory]]). */
     val bytes: Long = cells.valuesIterator.flatten.map(_.getLen).sum
   }
 
   /** A resident build's live rows, `(vec_id, embedding)` by cell. */
   type Rows = Map[Int, Array[(Long, Array[Float])]]
-
-  /** The memory rule: the data-file bytes of every resident build,
-    * summed, stay at or below 1/16 of the driver's max heap. Floats in
-    * parquet barely compress, so a build's file bytes are about the
-    * size of its decoded rows: 64 floats are 256 bytes in the file and
-    * a 272-byte array plus about 40 bytes of id and tuple on the heap.
-    * The rule thus keeps the resident rows under 1/12 of the heap,
-    * which leaves the driver's other work its room. (A build whose
-    * vectors repeat can compress far below its decoded size; the rule
-    * does not guard against that.) A build over the rule, and any build
-    * at 100 TB, is probed from its files by a Spark job. */
-  val MaxResidentBytes: Long = Runtime.getRuntime.maxMemory / 16
 
   /** Manifest file written INSIDE the index directory. The underscore
     * prefix makes Spark's file index treat it as metadata (like
@@ -65,8 +54,16 @@ object KnnIndexRegistry {
   private val entries = TrieMap.empty[String, Entry]
 
   /** The resident rows by canonical path, with the build they were
-    * read from. */
+    * read from. (A build whose vectors repeat can compress far below its
+    * decoded size; the memory rule, which counts file bytes, does not
+    * guard against that.) */
   private val residents = TrieMap.empty[String, (Entry, Rows)]
+
+  /** Drop the resident rows of `key` and their place in the account. */
+  private def dropRows(key: String): Unit = {
+    residents.remove(key)
+    graft.ResidentMemory.release(s"ivf:$key")
+  }
 
   /** Canonical cache key: local paths (no scheme, or `file:`)
     * normalize to the bare absolute path so `/x` matches a scan of
@@ -81,7 +78,7 @@ object KnnIndexRegistry {
     else hp.toString.stripSuffix("/")
   }
 
-  def clear(): Unit = { entries.clear(); residents.clear() }
+  def clear(): Unit = { entries.clear(); residents.keys.foreach(dropRows) }
 
   /** Whether the registry holds a loaded build or resident rows of the
     * index at `indexDir`. */
@@ -170,7 +167,8 @@ object KnnIndexRegistry {
       indexDir: String): Option[Entry] = {
     val dir = new Path(indexDir)
     val manifest = new Path(dir, ManifestName)
-    val fs = manifest.getFileSystem(s.sessionState.newHadoopConf())
+    val conf = s.sessionState.newHadoopConf()
+    val fs = manifest.getFileSystem(conf)
     val st =
       try Some(fs.getFileStatus(manifest))
       catch { case _: java.io.FileNotFoundException => None }
@@ -188,24 +186,25 @@ object KnnIndexRegistry {
             }
           }.toMap
           val schema = graft.Tables
-            .footerSchema(s, cells.values.flatten.toSeq)
+            .footerSchema(s, cells.values.flatten.toSeq, conf)
             .getOrElse(new StructType())
           val e = Entry(seeds, nprobe, fingerprint, cells, schema)
           entries(key) = e
-          residents.remove(key)
+          dropRows(key)
           e
         }
       }
     }
-    if (loaded.isEmpty) { entries.remove(key); residents.remove(key) }
+    if (loaded.isEmpty) { entries.remove(key); dropRows(key) }
     loaded
   }
 
   /** The rows of build `e` of the index at `indexDir`, held on the
     * driver: read by `load` on the first call for this build, when the
-    * build fits [[MaxResidentBytes]] beside every other resident build,
-    * and kept until [[probeEntry]] drops them. None when the build does
-    * not fit; the caller then reads the build's files. */
+    * build's file bytes fit [[graft.ResidentMemory]]'s rule beside
+    * everything else resident, and kept until [[probeEntry]] drops them.
+    * None when the build does not fit; the caller then reads the build's
+    * files. */
   private[graft] def resident(indexDir: String, e: Entry)(
       load: => Rows): Option[Rows] = {
     val key = canon(indexDir)
@@ -213,13 +212,12 @@ object KnnIndexRegistry {
       case (r, rows) if r.fingerprint == e.fingerprint => rows }
     held.orElse(synchronized {
       held.orElse {
-        val others = residents.iterator
-          .collect { case (k, (r, _)) if k != key => r.bytes }.sum
-        if (others + e.bytes > MaxResidentBytes) None
-        else {
-          val rows = load
+        residents.remove(key)
+        graft.ResidentMemory.admit(s"ivf:$key") { room =>
+          Option.when(e.bytes <= room)(load -> e.bytes)
+        }.map { rows =>
           residents(key) = (e, rows)
-          Some(rows)
+          rows
         }
       }
     })

@@ -1,10 +1,16 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.api.java.UDF2
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType}
 
 /** The engine's chunk store (SURVEY.md §2.6), with the reference's two
   * write disciplines:
@@ -59,20 +65,152 @@ object ChunkStore {
     * store. */
   def latestVersion(root: String): Long = TxnLogStore.latestVersion(root)
 
-  /** Current contents, or None for an empty store. */
-  def readLatest(spark: SparkSession, root: String): Option[DataFrame] =
-    readVersion(spark, root, latestVersion(root))
+  /** Current contents, or None for an empty store. The read runs no
+    * Spark job.
+    *
+    * Cost: one listing of `_log` and one status call on its head commit.
+    * Each store root keeps one snapshot [[Handle]], keyed by the head
+    * commit's number, modification time and length. While the head is
+    * unchanged, the call returns the handle's frame without folding the
+    * log, listing the live directories or reading a footer. A commit, or
+    * a store deleted and re-synced (its version numbers repeat, its
+    * commit files are new), changes the head: the call then reads the
+    * snapshot as [[readVersion]] does and drops the old handle with its
+    * resident rows. A frame of another session is never returned. */
+  def readLatest(spark: SparkSession, root: String): Option[DataFrame] = {
+    val key = new java.io.File(root).getAbsolutePath
+    val log = TxnLogStore.actionFiles(root)
+    val head = log.lastOption.map { case (v, f) =>
+      val a = java.nio.file.Files.readAttributes(f.toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      (v, a.lastModifiedTime, a.size)
+    }
+    handles.get(key)
+      .filter(h => head.contains(h.head) && h.frame.sparkSession.eq(spark))
+      .map(_.frame)
+      .orElse {
+        handles.remove(key).foreach(_.drop())
+        for {
+          h <- head
+          (frame, bytes) <- readSnapshot(spark, root, TxnLogStore.fold(log))
+        } yield {
+          handles(key) = new Handle(key, h, frame, bytes)
+          frame
+        }
+      }
+  }
 
   /** Contents as of commit `version` (time travel), or None when that
     * snapshot has no data directory. The log is folded on the driver and
     * the live `v<i>` are listed and read with the schema of one footer
     * ([[graft.Tables.footerSchema]]), so the read runs no Spark job: the
     * result is the rows of each `v<i>` whose url no commit after i
-    * retracted. Nothing is cached between calls, so a store deleted and
-    * re-synced (its version numbers repeat) reads its new rows. */
+    * retracted. */
   def readVersion(spark: SparkSession, root: String,
       version: Long): Option[DataFrame] =
-    readSnapshot(spark, root, TxnLogStore.snapshot(root, version))
+    readSnapshot(spark, root, TxnLogStore.snapshot(root, version)).map(_._1)
+
+  /** The snapshot handle of each store root, by absolute path. */
+  private val handles = TrieMap.empty[String, Handle]
+
+  /** A store root's snapshot as [[readLatest]] returned it, at log head
+    * `head` (commit number, modification time, length), with its data
+    * files' bytes. Within [[graft.ResidentMemory]]'s rule it also keeps
+    * the snapshot's rows on the driver, by url and sorted by
+    * `chunk_index`, for [[residentPage]]. */
+  private final class Handle(key: String,
+      val head: (Long, java.nio.file.attribute.FileTime, Long),
+      val frame: DataFrame, fileBytes: Long) {
+
+    /** The rows by url, read by the first page lookup in one Spark job;
+      * None when the snapshot has no string `url` and integral
+      * `chunk_index`, or does not fit the memory rule. */
+    lazy val rows: Option[Map[String, Array[InternalRow]]] = {
+      val schema = frame.schema
+      def ordinal(name: String) =
+        Option(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+      val ordinals = for {
+        u <- ordinal("url")
+        if schema(u).dataType == StringType
+        i <- ordinal("chunk_index")
+        if Set[DataType](IntegerType, LongType)(schema(i).dataType)
+      } yield (u, i)
+      ordinals.flatMap { case (u, i) =>
+        graft.ResidentMemory.admit(s"store:$key") { room =>
+          if (fileBytes > room) None
+          else collectWithin(room).map { case (rs, bytes) =>
+            rs.filterNot(_.isNullAt(u)).groupBy(_.getUTF8String(u).toString)
+              .map { case (url, page) =>
+                url -> page.sortBy(r => (!r.isNullAt(i), index(r, i)))
+                  .toArray[InternalRow] } -> bytes
+          }
+        }
+      }
+    }
+
+    /** The snapshot's rows as compact copies, with the bytes they count,
+      * from one Spark job; None when they pass `room`. A task stops
+      * copying once its own rows pass `room`, so no task ships more than
+      * that. */
+    private def collectWithin(room: Long): Option[(Array[UnsafeRow], Long)] = {
+      val (schema, perRow) = (frame.schema, RowBytes)
+      val parts = frame.queryExecution.toRdd.mapPartitions { it =>
+        val copy = UnsafeProjection.create(schema)
+        val kept = Array.newBuilder[UnsafeRow]
+        var bytes = 0L
+        while (it.hasNext && bytes <= room) {
+          val r = copy(it.next()).copy()
+          bytes += perRow + r.getSizeInBytes
+          kept += r
+        }
+        Iterator(Option.when(bytes <= room)(kept.result() -> bytes))
+      }.collect()
+      Option.when(parts.forall(_.isDefined))(parts.flatten)
+        .map(ps => ps.flatMap(_._1) -> ps.map(_._2).sum)
+        .filter(_._2 <= room)
+    }
+
+    /** The page of `url` in `range` from the resident rows, as a local
+      * frame; None when the snapshot keeps no rows. */
+    def page(url: String, range: Option[(Int, Int)]): Option[DataFrame] =
+      rows.map { byUrl =>
+        val i = frame.schema.fieldIndex("chunk_index")
+        val all = byUrl.getOrElse(url, Array.empty[InternalRow])
+        val kept = range.fold(all) { case (a, b) => all.filter { r =>
+          !r.isNullAt(i) && index(r, i) >= a && index(r, i) <= b } }
+        GraftSqlBridge.ofRows(frame.sparkSession, LocalRelation(
+          DataTypeUtils.toAttributes(frame.schema), kept.toSeq))
+      }
+
+    private def index(r: InternalRow, i: Int): Long =
+      if (r.isNullAt(i)) 0L
+      else frame.schema(i).dataType match {
+        case IntegerType => r.getInt(i).toLong
+        case _ => r.getLong(i)
+      }
+
+    /** Release the resident rows' place in the memory rule. */
+    def drop(): Unit = graft.ResidentMemory.release(s"store:$key")
+  }
+
+  /** What a resident row counts beside its bytes: the row object and its
+    * byte array's header. */
+  private val RowBytes = 48L
+
+  /** The page of `url` in `range` when `chunks` is the frame of a current
+    * snapshot handle (the same logical plan [[readLatest]] returned) that
+    * keeps its rows: that handle's rows of `url`, sorted by
+    * `chunk_index` with nulls first, those outside `range` (and those
+    * without a `chunk_index`, when a range is given) left out, as a local
+    * frame that runs no Spark job. The handle's first page lookup reads
+    * its rows in one job. None for any other frame, a projection of the
+    * handle's frame included, and for a snapshot over the memory rule. */
+  private[graft] def residentPage(chunks: DataFrame, url: String,
+      range: Option[(Int, Int)]): Option[DataFrame] = {
+    val plan = chunks.queryExecution.logical
+    handles.valuesIterator.find(_.frame.queryExecution.logical.eq(plan))
+      .flatMap(_.page(url, range))
+  }
 
   /** One scan over every live directory, so Spark packs their small
     * files into few tasks, minus the rows whose url a commit after
@@ -88,7 +226,7 @@ object ChunkStore {
     * is one hash lookup of its url; `newest` holds each pending url
     * once, so it stays within [[MaxRetractedUrls]]. */
   private def readSnapshot(spark: SparkSession, root: String,
-      snap: TxnLogStore.Snapshot): Option[DataFrame] =
+      snap: TxnLogStore.Snapshot): Option[(DataFrame, Long)] =
     Option.when(snap.live.nonEmpty) {
       val conf = spark.sessionState.newHadoopConf()
       val dirs = snap.live.map { case (dir, _) =>
@@ -96,12 +234,13 @@ object ChunkStore {
         val fs = p.getFileSystem(conf)
         fs.makeQualified(p) -> fs.listStatus(p).filter(graft.Tables.isDataFile)
       }
-      val scan = graft.Tables.footerSchema(spark, dirs.flatMap(_._2))
+      val scan = graft.Tables.footerSchema(spark, dirs.flatMap(_._2), conf)
         .fold(spark.read.parquet(dirs.map(_._1.toString): _*))(
           graft.Tables.listedParquet(spark, dirs.filter(_._2.nonEmpty).toMap, _))
+      val bytes = dirs.iterator.flatMap(_._2).map(_.getLen).sum
       val newest = snap.live.zipWithIndex
         .flatMap { case ((_, gone), i) => gone.map(_ -> i) }.toMap
-      if (newest.isEmpty) scan
+      if (newest.isEmpty) scan -> bytes
       else {
         val index = snap.live.map(_._1).zipWithIndex.toMap
         val retracted = udf(new UDF2[String, String, Boolean] {
@@ -111,7 +250,7 @@ object ChunkStore {
               index(dir.substring(dir.lastIndexOf('/') + 1)) <= i
             }
         }, BooleanType)
-        scan.filter(!retracted(col("url"), col("_metadata.file_path")))
+        scan.filter(!retracted(col("url"), col("_metadata.file_path"))) -> bytes
       }
     }
 
@@ -144,7 +283,7 @@ object ChunkStore {
       if (!fold) rows
       else {
         val kept = if (replace) None else readSnapshot(spark, root, snap)
-          .map(df => if (retract.isEmpty) df
+          .map(_._1).map(df => if (retract.isEmpty) df
             else df.filter(!col("url").isin(retract: _*)))
         (kept ++ rows).reduceOption(_ unionByName _)
       }

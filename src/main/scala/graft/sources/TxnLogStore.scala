@@ -93,7 +93,7 @@ object TxnLogStore {
     * become invisible to its own readers (which would stall
     * [[latestVersion]] and make [[commitOptimistic]] exhaust retries
     * against its own commit). */
-  private def actionFiles(root: String): Array[(Long, java.io.File)] =
+  private[graft] def actionFiles(root: String): Array[(Long, java.io.File)] =
     Option(new java.io.File(s"$root/_log").listFiles())
       .getOrElse(Array.empty)
       .filter(_.getName.matches("\\d+\\.json"))
@@ -114,11 +114,15 @@ object TxnLogStore {
   private[graft] final case class Snapshot(
       live: Vector[(String, Set[String])], pending: Int)
 
-  /** Fold commits 0..`version`. Retract entries older than every live
-    * file apply to nothing and are dropped, so a commit that removes
-    * every live file (a rewrite) resets the fold. */
-  private[graft] def snapshot(root: String, version: Long): Snapshot = {
-    val (live, retracts) = actionFiles(root).takeWhile(_._1 <= version)
+  /** Fold commits 0..`version`. */
+  private[graft] def snapshot(root: String, version: Long): Snapshot =
+    fold(actionFiles(root).takeWhile(_._1 <= version))
+
+  /** Fold the listed action files `log`, in order. Retract entries older
+    * than every live file apply to nothing and are dropped, so a commit
+    * that removes every live file (a rewrite) resets the fold. */
+  private[graft] def fold(log: Iterable[(Long, java.io.File)]): Snapshot = {
+    val (live, retracts) = log
       .foldLeft((Vector.empty[(String, Long)],
           Vector.empty[(Long, Vector[String])])) {
         case ((files, gone), (v, f)) =>

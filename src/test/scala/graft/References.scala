@@ -135,6 +135,21 @@ object IvfReference {
   }
 }
 
+/** From [[graft.operators.DocPipeline]]: the page lookup as a Spark plan
+  * over any frame with `url` and `chunk_index`, the path every store
+  * page took before snapshot handles kept their rows resident. The url
+  * and range filters run in the scan; the page crosses one exchange into
+  * a single partition, sorted by `chunk_index` (nulls first). */
+object DocPipelineReference {
+  def getChunksFromStore(chunks: DataFrame, url: String,
+      range: Option[(Int, Int)]): DataFrame = {
+    val page = chunks.filter(col("url") === url)
+    range.fold(page) { case (a, b) =>
+      page.filter(col("chunk_index").between(a, b)) }
+      .repartition(1).sortWithinPartitions("chunk_index")
+  }
+}
+
 /** From [[graft.sources.ChunkStore]] and [[graft.operators.Sync]]: the
   * full-copy store every sync wrote before the commit log — the
   * plan-level upsert and guarded cleanup, written as a complete `v<N>`

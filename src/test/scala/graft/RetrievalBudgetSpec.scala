@@ -8,9 +8,12 @@ import graft.sources.ChunkStore
   * runs at most one job, which reads the build's rows into the index
   * handle, and every later probe of that build runs no job and one SQL
   * execution, the collect of its local answer frame. A store read runs
-  * no job, and a page lookup at most two. A call that gains a job (a
-  * schema-inference job, a sort's sampling job, a second pass over the
-  * index, a warm probe that reads files again) fails here. */
+  * no job. A page lookup's first call on a store snapshot runs at most
+  * one job, which reads the snapshot's rows into its handle, and every
+  * later one runs no job and one SQL execution. A call that gains a job
+  * (a schema-inference job, a sort's sampling job, a second pass over
+  * the index or the store, a warm probe or page that reads files again)
+  * fails here. */
 class RetrievalBudgetSpec extends SparkSuite {
   private val dir = "/root/testdata/sf0.001"
   private lazy val jobs = new JobCount(spark.sparkContext)
@@ -56,18 +59,23 @@ class RetrievalBudgetSpec extends SparkSuite {
     assert(jobs.of { ChunkStore.readLatest(spark, root).get } == 0)
   }
 
-  test("a page lookup, store read included, runs at most two jobs") {
+  test("a page lookup runs at most one job on a fresh snapshot and none on a loaded one") {
     val root = store
-    val url = ChunkStore.readLatest(spark, root).get
+    val top = ChunkStore.readLatest(spark, root).get
       .groupBy("url").count().orderBy(col("count").desc, col("url"))
-      .head().getString(0)
+      .head()
+    val url = top.getString(0)
+    assert(top.getLong(1) >= 3)
     var page = Array.empty[org.apache.spark.sql.Row]
-    val n = jobs.of {
-      page = DocPipeline.getChunksFromStore(
-        ChunkStore.readLatest(spark, root).get, url, Some((0, 2))).collect()
-    }
-    assert(n <= 2, s"page lookup ran $n jobs")
+    def lookup(range: (Int, Int)): Unit = page = DocPipeline.getChunksFromStore(
+      ChunkStore.readLatest(spark, root).get, url, Some(range)).collect()
+    val cold = jobs.of(lookup((0, 2)))
+    assert(cold <= 1, s"the first page lookup ran $cold jobs")
     assert(page.nonEmpty &&
       page.map(_.getAs[Int]("chunk_index")).toSeq == page.indices)
+    assert(jobs.of(lookup((1, 2))) == 0)
+    assert(page.map(_.getAs[Int]("chunk_index")).toSeq == Seq(1, 2))
+    assert(executions.of(lookup((0, 1))) == 1)
+    assert(page.map(_.getAs[Int]("chunk_index")).toSeq == Seq(0, 1))
   }
 }

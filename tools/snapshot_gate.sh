@@ -66,12 +66,13 @@ echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
 
-echo "[gate] 1b/3 retrieval and sync job budgets"
-sbt -batch "testOnly graft.RetrievalBudgetSpec graft.SyncBudgetSpec" \
+echo "[gate] 1b/3 retrieval and sync job budgets, resident store pages"
+sbt -batch "testOnly graft.RetrievalBudgetSpec graft.SyncBudgetSpec graft.StorePageSpec" \
   >/tmp/gate_budget.log 2>&1 || {
   tail -30 /tmp/gate_budget.log
   echo "[gate] FAIL: a probe, a page lookup, a table load, the sync flag" \
-    "read or an incremental syncRun/codeRun gained a Spark job"; exit 1; }
+    "read or an incremental syncRun/codeRun gained a Spark job, or a" \
+    "resident store page differs from the Spark plan"; exit 1; }
 
 OUT="$(mktemp -d /tmp/gate_verify.XXXXXX)"
 echo "[gate] 2/3 spot Verify at $SF_DIR -> $OUT"
