@@ -78,4 +78,19 @@ class RetrievalBudgetSpec extends SparkSuite {
     assert(executions.of(lookup((0, 1))) == 1)
     assert(page.map(_.getAs[Int]("chunk_index")).toSeq == Seq(0, 1))
   }
+
+  test("a page lookup, store read included, runs at most two jobs") {
+    val root = store
+    val url = ChunkStore.readLatest(spark, root).get
+      .groupBy("url").count().orderBy(col("count").desc, col("url"))
+      .head().getString(0)
+    var page = Array.empty[org.apache.spark.sql.Row]
+    val n = jobs.of {
+      page = DocPipeline.getChunksFromStore(
+        ChunkStore.readLatest(spark, root).get, url, Some((0, 2))).collect()
+    }
+    assert(n <= 2, s"page lookup ran $n jobs")
+    assert(page.nonEmpty &&
+      page.map(_.getAs[Int]("chunk_index")).toSeq == page.indices)
+  }
 }
