@@ -5,7 +5,9 @@ package graft
   * ([[graft.plans.KnnIndexRegistry]]) and the rows store snapshots keep
   * for their page lookups ([[graft.sources.ChunkStore]]), summed, stay at
   * or below [[MaxBytes]]. Each holder is one key of one account; a holder
-  * that drops its value releases its key.
+  * that drops its value releases its key, and a holder that no longer
+  * lives (its index or store deleted, its session stopped) is dropped by
+  * the next [[admit]] of any key.
   *
   * Each holder counts its value at about its decoded size on the heap.
   * Floats in parquet barely compress, so an IVF build counts its data
@@ -21,20 +23,27 @@ private[graft] object ResidentMemory {
     * 100 TB, is answered from its files by Spark jobs. */
   val MaxBytes: Long = Runtime.getRuntime.maxMemory / 16
 
-  private val held = scala.collection.mutable.Map.empty[String, Long]
+  /** A held value's bytes, whether its holder still lives, and how to
+    * make the holder drop the value. */
+  private final case class Held(bytes: Long, live: () => Boolean, drop: () => Unit)
+
+  private val held = scala.collection.mutable.Map.empty[String, Held]
 
   /** Load and hold a value under `key`, releasing the key's earlier
-    * value (its holder drops that value too). `load` gets the bytes left
-    * beside every other key and returns the value with the bytes it
-    * counts, or None when it cannot fit; a value over the room is not
-    * held. Loads run one at a time, so two holders never both count on
-    * the same room. */
-  def admit[T](key: String)(load: Long => Option[(T, Long)]): Option[T] =
+    * value (its holder drops that value too) and every value whose
+    * holder no longer `live`s, which `drop` makes the holder let go.
+    * `load` gets the bytes left beside every other key and returns the
+    * value with the bytes it counts, or None when it cannot fit; a value
+    * over the room is not held. Loads run one at a time, so two holders
+    * never both count on the same room. */
+  def admit[T](key: String, live: () => Boolean, drop: () => Unit)(
+      load: Long => Option[(T, Long)]): Option[T] =
     synchronized {
       held.remove(key)
-      val room = MaxBytes - held.valuesIterator.sum
+      held.filter(!_._2.live()).foreach { case (k, h) => held.remove(k); h.drop() }
+      val room = MaxBytes - held.valuesIterator.map(_.bytes).sum
       load(room).collect { case (value, bytes) if bytes <= room =>
-        held(key) = bytes
+        held(key) = Held(bytes, live, drop)
         value
       }
     }

@@ -202,7 +202,9 @@ object KnnIndexRegistry {
   /** The rows of build `e` of the index at `indexDir`, held on the
     * driver: read by `load` on the first call for this build, when the
     * build's file bytes fit [[graft.ResidentMemory]]'s rule beside
-    * everything else resident, and kept until [[probeEntry]] drops them.
+    * everything else resident, and kept until [[probeEntry]] drops them
+    * or, once a local build's manifest is gone, the next admit of any
+    * resident ([[graft.ResidentMemory.admit]]) does.
     * None when the build does not fit; the caller then reads the build's
     * files. */
   private[graft] def resident(indexDir: String, e: Entry)(
@@ -213,7 +215,11 @@ object KnnIndexRegistry {
     held.orElse(synchronized {
       held.orElse {
         residents.remove(key)
-        graft.ResidentMemory.admit(s"ivf:$key") { room =>
+        // a local build lives while its manifest does
+        val live = () => !key.startsWith("/") ||
+          new java.io.File(key, ManifestName).isFile
+        graft.ResidentMemory.admit(s"ivf:$key", live,
+            () => residents.remove(key)) { room =>
           Option.when(e.bytes <= room)(load -> e.bytes)
         }.map { rows =>
           residents(key) = (e, rows)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode, SparkSession}
@@ -68,23 +69,27 @@ object ChunkStore {
   /** Current contents, or None for an empty store. The read runs no
     * Spark job.
     *
-    * Cost: one listing of `_log` and one status call on its head commit.
-    * Each store root keeps one snapshot [[Handle]], keyed by the head
-    * commit's number, modification time and length. While the head is
+    * Cost: one listing of `_log`, and one status call on its head commit
+    * and a read of its first line. Each store root keeps one snapshot
+    * [[Handle]], keyed by the head commit's number, modification time,
+    * length and random id ([[TxnLogStore.commitId]]). While the head is
     * unchanged, the call returns the handle's frame without folding the
     * log, listing the live directories or reading a footer. A commit, or
-    * a store deleted and re-synced (its version numbers repeat, its
-    * commit files are new), changes the head: the call then reads the
-    * snapshot as [[readVersion]] does and drops the old handle with its
-    * resident rows. A frame of another session is never returned. */
+    * a store deleted and re-synced (its version numbers and commit bytes
+    * repeat, its commit ids are new), changes the head: the call then
+    * reads the snapshot as [[readVersion]] does and drops the old handle
+    * with its resident rows. A frame of another session is never
+    * returned, and the handles of stopped sessions and deleted stores
+    * are dropped. */
   def readLatest(spark: SparkSession, root: String): Option[DataFrame] = {
     val key = new java.io.File(root).getAbsolutePath
     val log = TxnLogStore.actionFiles(root)
     val head = log.lastOption.map { case (v, f) =>
       val a = java.nio.file.Files.readAttributes(f.toPath,
         classOf[java.nio.file.attribute.BasicFileAttributes])
-      (v, a.lastModifiedTime, a.size)
+      (v, a.lastModifiedTime, a.size, TxnLogStore.commitId(f))
     }
+    handles.foreach { case (k, h) => if (!h.live && handles.remove(k, h)) h.drop() }
     handles.get(key)
       .filter(h => head.contains(h.head) && h.frame.sparkSession.eq(spark))
       .map(_.frame)
@@ -114,17 +119,24 @@ object ChunkStore {
   private val handles = TrieMap.empty[String, Handle]
 
   /** A store root's snapshot as [[readLatest]] returned it, at log head
-    * `head` (commit number, modification time, length), with its data
-    * files' bytes. Within [[graft.ResidentMemory]]'s rule it also keeps
-    * the snapshot's rows on the driver, by url and sorted by
+    * `head` (commit number, modification time, length, id), with its
+    * data files' bytes. Within [[graft.ResidentMemory]]'s rule it also
+    * keeps the snapshot's rows on the driver, by url and sorted by
     * `chunk_index`, for [[residentPage]]. */
   private final class Handle(key: String,
-      val head: (Long, java.nio.file.attribute.FileTime, Long),
+      val head: (Long, java.nio.file.attribute.FileTime, Long, String),
       val frame: DataFrame, fileBytes: Long) {
+
+    /** Whether the handle's session runs and its store's log is there;
+      * a handle that is not live is dropped ([[readLatest]],
+      * [[graft.ResidentMemory.admit]]). */
+    def live: Boolean = !frame.sparkSession.sparkContext.isStopped &&
+      new java.io.File(key, "_log").isDirectory
 
     /** The rows by url, read by the first page lookup in one Spark job;
       * None when the snapshot has no string `url` and integral
-      * `chunk_index`, or does not fit the memory rule. */
+      * `chunk_index`, or does not fit the memory rule. A snapshot whose
+      * files alone pass the room runs no job. */
     lazy val rows: Option[Map[String, Array[InternalRow]]] = {
       val schema = frame.schema
       def ordinal(name: String) =
@@ -136,7 +148,8 @@ object ChunkStore {
         if Set[DataType](IntegerType, LongType)(schema(i).dataType)
       } yield (u, i)
       ordinals.flatMap { case (u, i) =>
-        graft.ResidentMemory.admit(s"store:$key") { room =>
+        graft.ResidentMemory.admit(s"store:$key", () => live,
+            () => handles.remove(key, this)) { room =>
           if (fileBytes > room) None
           else collectWithin(room).map { case (rs, bytes) =>
             rs.filterNot(_.isNullAt(u)).groupBy(_.getUTF8String(u).toString)
@@ -149,25 +162,36 @@ object ChunkStore {
     }
 
     /** The snapshot's rows as compact copies, with the bytes they count,
-      * from one Spark job; None when they pass `room`. A task stops
-      * copying once its own rows pass `room`, so no task ships more than
-      * that. */
+      * from one Spark job; None when they do not fit, or the job fails.
+      * What the driver receives is bounded, not each task's share: with
+      * `room` capped at half of `spark.driver.maxResultSize`, each of
+      * the scan's n tasks ships its rows only while they count at most
+      * `room / n`, so all of them ship at most `room`. The other half of
+      * the result cap is left to the results' serialization (under 1% of
+      * a row's bytes) and metrics. A skewed snapshot that fits `room`
+      * but not its shares is answered by the Spark plan. */
     private def collectWithin(room: Long): Option[(Array[UnsafeRow], Long)] = {
+      val rdd = frame.queryExecution.toRdd
+      val maxResult = frame.sparkSession.sparkContext.getConf
+        .getSizeAsBytes("spark.driver.maxResultSize", "1g")
+      val cap = (if (maxResult > 0) room.min(maxResult / 2) else room) /
+        rdd.getNumPartitions.max(1)
       val (schema, perRow) = (frame.schema, RowBytes)
-      val parts = frame.queryExecution.toRdd.mapPartitions { it =>
-        val copy = UnsafeProjection.create(schema)
-        val kept = Array.newBuilder[UnsafeRow]
-        var bytes = 0L
-        while (it.hasNext && bytes <= room) {
-          val r = copy(it.next()).copy()
-          bytes += perRow + r.getSizeInBytes
-          kept += r
-        }
-        Iterator(Option.when(bytes <= room)(kept.result() -> bytes))
-      }.collect()
-      Option.when(parts.forall(_.isDefined))(parts.flatten)
-        .map(ps => ps.flatMap(_._1) -> ps.map(_._2).sum)
-        .filter(_._2 <= room)
+      try {
+        val parts = rdd.mapPartitions { it =>
+          val copy = UnsafeProjection.create(schema)
+          val kept = Array.newBuilder[UnsafeRow]
+          var bytes = 0L
+          while (it.hasNext && bytes <= cap) {
+            val r = copy(it.next()).copy()
+            bytes += perRow + r.getSizeInBytes
+            kept += r
+          }
+          Iterator(Option.when(bytes <= cap)(kept.result() -> bytes))
+        }.collect()
+        Option.when(parts.forall(_.isDefined))(parts.flatten)
+          .map(ps => ps.flatMap(_._1) -> ps.map(_._2).sum)
+      } catch { case NonFatal(_) => None }
     }
 
     /** The page of `url` in `range` from the resident rows, as a local

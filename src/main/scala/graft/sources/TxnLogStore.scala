@@ -17,6 +17,11 @@ import graft.Tables
   *     ([[ChunkStore]]) upserts by adding the new rows of a url and
   *     retracting its older ones.
   *
+  * Each commit starts with one more line, `{"act":"commit","id":...}`,
+  * a random id that the fold ignores: a store deleted and written again
+  * repeats its first commits byte for byte, and the id tells them
+  * apart ([[commitId]]).
+  *
   * Data files are immutable; logical deletes and rewrites are log
   * entries; readers at any version see exactly what its prefix of the
   * log retains. Every action line is written and read with Jackson, so
@@ -47,9 +52,10 @@ object TxnLogStore {
       retracts: Seq[String] = Nil): Unit = {
     val dir = new java.io.File(s"$root/_log")
     dir.mkdirs()
-    val lines = adds.map(action("add", "file", _)) ++
-      removes.map(action("remove", "file", _)) ++
-      retracts.map(action("retract", "url", _))
+    val lines = action("commit", "id", java.util.UUID.randomUUID.toString) +:
+      (adds.map(action("add", "file", _)) ++
+        removes.map(action("remove", "file", _)) ++
+        retracts.map(action("retract", "url", _)))
     val tmp = new java.io.File(dir,
       f"$version%05d.json.tmp${java.lang.Thread.currentThread().getId}%d")
     java.nio.file.Files.writeString(tmp.toPath, lines.mkString("\n"))
@@ -99,6 +105,13 @@ object TxnLogStore {
       .filter(_.getName.matches("\\d+\\.json"))
       .map(f => f.getName.stripSuffix(".json").toLong -> f)
       .sortBy(_._1)
+
+  /** The first line of the commit file `f`: its random id, or its first
+    * action for a commit written before ids were. */
+  private[graft] def commitId(f: java.io.File): String = {
+    val in = java.nio.file.Files.newBufferedReader(f.toPath)
+    try String.valueOf(in.readLine()) finally in.close()
+  }
 
   /** Highest committed version in the log (-1 when empty). */
   private[graft] def latestVersion(root: String): Long =

@@ -10,10 +10,17 @@ import graft.sources.ChunkStore
   * before ([[DocPipelineReference]]): every url of a multi-commit store
   * over ranges inside, across and outside its chunks, a url with no
   * rows, null `chunk_index` rows, a legacy store, a frame derived from
-  * the handle's, a commit after a warm page, and a snapshot over the
-  * memory rule. */
-class StorePageSpec extends SparkSuite(cpus = 2) {
+  * the handle's, a commit after a warm page, a store written again with
+  * the same commit bytes, snapshots whose rows pass the memory rule or
+  * the driver's result cap, and a deleted store's place in the memory
+  * account. The suite's result cap is small
+  * ([[MaxResult]]), so a fill that ships more fails its job. */
+class StorePageSpec extends SparkSuite(cpus = 2,
+    conf = Seq("spark.driver.maxResultSize" -> "8m")) {
   import spark.implicits._
+
+  /** The suite's `spark.driver.maxResultSize`. */
+  private val MaxResult = 8L << 20
 
   /** Commit `rows` of `(url, chunk_index, content)` as one upsert. */
   private def upsert(root: String, rows: Seq[(String, Option[Int], String)]): Long =
@@ -152,7 +159,7 @@ class StorePageSpec extends SparkSuite(cpus = 2) {
     val root = tempDir("storefull").resolve("store").toString
     upsert(root, doc("doc://a", 3, "one"))
     val filler = "test:storepage-filler"
-    ResidentMemory.admit(filler)(room => Some(() -> room))
+    ResidentMemory.admit(filler, () => true, () => ())(room => Some(() -> room))
     try {
       val stored = ChunkStore.readLatest(spark, root).get
       assert(ChunkStore.residentPage(stored, "doc://a", None).isEmpty)
@@ -160,5 +167,122 @@ class StorePageSpec extends SparkSuite(cpus = 2) {
         DocPipelineReference.getChunksFromStore(stored, "doc://a", None).collect(),
         "over the rule")
     } finally ResidentMemory.release(filler)
+  }
+
+  test("a store deleted and written again with the same head times reads its new rows") {
+    val root = tempDir("storeagain").resolve("store").toString
+    def contents(): Seq[String] =
+      check(root, "doc://a", None).map(_.getAs[String]("content")).toSeq
+    upsert(root, doc("doc://a", 2, "one"))
+    assert(contents() == Seq("one doc://a chunk 0", "one doc://a chunk 1"))
+    val head = new java.io.File(root, "_log/00000.json").toPath
+    val (time, size) = (java.nio.file.Files.getLastModifiedTime(head),
+      java.nio.file.Files.size(head))
+    graft.operators.Sync.deleteTree(new java.io.File(root))
+    upsert(root, doc("doc://a", 2, "two"))
+    // the clock that stamps files is coarse: two stores made within one
+    // tick have the same head version, length and time
+    java.nio.file.Files.setLastModifiedTime(head, time)
+    assert(java.nio.file.Files.size(head) == size)
+    assert(contents() == Seq("two doc://a chunk 0", "two doc://a chunk 1"))
+  }
+
+  /** A store of `commits` commits, each one url of 20 chunks of 40 kB
+    * that compress about twentyfold in parquet: 0.8 MB of rows and some
+    * 40 kB of files a commit. Each call makes a new store, with its own
+    * fill. Returns its root, its rows' bytes and its files'. */
+  private def compressible(commits: Int): (String, Long, Long) = {
+    val root = tempDir("storewide").resolve("store").toString
+    (0 until commits).foreach { c =>
+      upsert(root, (0 until 20).map(i =>
+        (s"doc://wide/$c", Some(i), s"$c $i " + "x" * 40000)))
+    }
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      .filter(_.toString.endsWith(".parquet"))
+      .mapToLong(java.nio.file.Files.size(_)).sum
+    (root, commits * 20L * 40000, files)
+  }
+
+  /** The bytes of the task results the driver receives while `f` runs. */
+  private def resultBytes(f: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    @volatile var barrierJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") ==
+            "resultbytes-barrier")) barrierJob = e.jobId
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == barrierJob) barrier.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobGroup("resultbytes-barrier", "resultbytes-barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(barrier.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    bytes.get
+  }
+
+  /** The page of each of the first 6 urls of a compressible store takes
+    * the Spark path and equals the reference plan. */
+  private def assertSparkPages(root: String): Unit = {
+    val stored = ChunkStore.readLatest(spark, root).get
+    (0 until 6).foreach { c =>
+      val url = s"doc://wide/$c"
+      assert(ChunkStore.residentPage(stored, url, Some((3, 5))).isEmpty)
+      assertSamePage(DocPipeline.getChunksFromStore(stored, url, Some((3, 5))).collect(),
+        DocPipelineReference.getChunksFromStore(stored, url, Some((3, 5))).collect(),
+        url)
+    }
+  }
+
+  test("rows over the room take the Spark path, and their fill ships at most the room") {
+    val (root, rowBytes, fileBytes) = compressible(6)
+    val stored = ChunkStore.readLatest(spark, root).get
+    assert(stored.queryExecution.toRdd.getNumPartitions >= 2)
+    // each task's rows fit the room; all of them do not
+    val room = rowBytes * 3 / 4
+    assert(fileBytes < room && room < MaxResult / 2)
+    val filler = "test:storepage-filler"
+    ResidentMemory.admit(filler, () => true, () => ())(r => Some(() -> (r - room)))
+    try {
+      val shipped = resultBytes(ChunkStore.residentPage(stored, "doc://wide/0", None))
+      assert(shipped <= room, s"the fill shipped $shipped bytes into a room of $room")
+      assertSparkPages(root)
+    } finally ResidentMemory.release(filler)
+  }
+
+  test("rows over spark.driver.maxResultSize take the Spark path") {
+    val (root, rowBytes, _) = compressible(12)
+    assert(rowBytes > MaxResult && rowBytes < ResidentMemory.MaxBytes)
+    val stored = ChunkStore.readLatest(spark, root).get
+    val shipped = resultBytes(ChunkStore.residentPage(stored, "doc://wide/0", None))
+    assert(shipped <= MaxResult / 2, s"the fill shipped $shipped bytes")
+    assertSparkPages(root)
+  }
+
+  test("a deleted store's rows leave the memory account at the next admit") {
+    def room(): Long = {
+      var r = 0L
+      ResidentMemory.admit("test:storepage-probe", () => true, () => ()) { x =>
+        r = x; None }
+      r
+    }
+    val base = tempDir("storegone")
+    val root = base.resolve("store").toString
+    upsert(root, doc("doc://a", 3, "one"))
+    val before = room()
+    val stored = ChunkStore.readLatest(spark, root).get
+    assert(ChunkStore.residentPage(stored, "doc://a", None).isDefined)
+    assert(room() < before)
+    graft.operators.Sync.deleteTree(base.toFile)
+    assert(room() == before)
+    assert(ChunkStore.residentPage(stored, "doc://a", None).isEmpty)
   }
 }
