@@ -313,14 +313,11 @@ object Bench {
     // it against persisted stage outputs. Outputs, stores, and
     // checkpoints stay per-run; results are bit-identical (Verify
     // never sets this prop and keeps build-per-run behavior).
-    val streamCacheRoot = java.nio.file.Files
-      .createTempDirectory("graft_bench_streams")
-    sys.props(graft.streaming.StageCache.Prop) = streamCacheRoot.toString
-    // The staging root holds corpus-sized replay trees; without this
-    // hook every bench run leaked them in /tmp (r14 ADVICE). A hook
-    // (not end-of-main deletion) so a crashed run cleans up too.
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.operators.Sync.deleteTree(streamCacheRoot.toFile)))
+    // The staging root holds corpus-sized replay trees: a held scratch
+    // dir, so it goes with the scratch root at JVM exit, after a
+    // crashed run too.
+    sys.props(graft.streaming.StageCache.Prop) =
+      Scratch.held("graft_bench_streams").toString
 
     sentinel() // warm the sentinel plan itself
     // INTERLEAVED sentinels: one before the run, one every

@@ -16,7 +16,7 @@ object Demo {
     import spark.implicits._
 
     // chunk store: upsert-by-url through the commit log
-    val store = java.nio.file.Files.createTempDirectory("store")
+    val store = Scratch.held("store")
       .resolve("chunks").toString
     ChunkStore.upsertVersioned(spark, store,
       Seq(("doc://a", "h1"), ("doc://a", "h2"), ("doc://b", "h3"))
@@ -27,7 +27,7 @@ object Demo {
       .orderBy("url", "chunk_id").collect().mkString(" "))
 
     // structured streaming over a staged slice of the events table
-    val tmp = java.nio.file.Files.createTempDirectory("ev").toString
+    val tmp = Scratch.held("ev").toString
     Tables.events(spark, "/root/testdata/sf0.001").limit(300)
       .coalesce(1).write.mode("overwrite").parquet(tmp)
     val q = EventStream.windowedCounts(EventStream.readEvents(spark, tmp))
@@ -39,7 +39,7 @@ object Demo {
     q.stop()
 
     // local-directory source: scan → dispatch → chunk
-    val ldir = java.nio.file.Files.createTempDirectory("demo-docs")
+    val ldir = Scratch.held("demo-docs")
     java.nio.file.Files.writeString(ldir.resolve("guide.md"),
       "# Demo Guide\n\n" + "Useful words here. " * 40)
     java.nio.file.Files.writeString(ldir.resolve("app.py"),
@@ -115,7 +115,7 @@ object Demo {
 
     // persisted IVF index (Lloyd-refined centroids) + partition-pruned probe
     val sf = "/root/testdata/sf0.001"
-    val ivfDir = java.nio.file.Files.createTempDirectory("demo-ivf")
+    val ivfDir = Scratch.held("demo-ivf")
       .resolve("ivf").toString
     graft.operators.Similarity.buildIvfIndex(spark, sf, ivfDir)
     val qv = Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
@@ -126,7 +126,7 @@ object Demo {
       .collect().map(_.getLong(0)).mkString(","))
 
     // curation provenance: record a run, read the durable channel back
-    val runsDir = java.nio.file.Files.createTempDirectory("demo-runs")
+    val runsDir = Scratch.held("demo-runs")
       .resolve("curation_runs").toString
     val runId = graft.operators.Curation.recordRun(spark, sf, runsDir)
     println("CURATION RUN " + runId + " -> " +
@@ -141,7 +141,7 @@ object Demo {
       .mkString(" "))
 
     // full streaming ingest: pages -> chunk -> embed -> versioned store
-    val ibase = java.nio.file.Files.createTempDirectory("demo-ingest")
+    val ibase = Scratch.held("demo-ingest")
     val pagesDir = ibase.resolve("pages").toString
     new java.io.File(pagesDir).mkdirs()
     Seq("doc://p" -> ("# Page\n\n" + "streamed words. " * 50))

@@ -23,13 +23,12 @@ object Explain {
       if (n == "q_search_bm25_indexed") {
         println("---------- inner scoring plan over the persisted " +
           "index ----------")
-        val base = java.nio.file.Files.createTempDirectory("lexidxplan")
-        try {
+        graft.Scratch.within("lexidxplan") { base =>
           graft.operators.Retrieval.buildLexicalIndex(
             spark, sfDir, base.toString)
           graft.operators.Retrieval
             .bm25IndexedScoring(spark, base.toString).explain("formatted")
-        } finally graft.operators.Sync.deleteTree(base.toFile)
+        }
       }
     }
     spark.stop()

@@ -19,16 +19,10 @@ object TimeQuery {
     val spark = GraftSession.local(GraftSession.defaultCpus)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).count()
-    // shutdown hook (matching the bench's pattern) so a crashed run
-    // cleans up too, and the prop doesn't leak into a later session in
-    // the same JVM (r15 ADVICE)
-    val cacheRoot = java.nio.file.Files
-      .createTempDirectory("graft_timeq_streams")
-    sys.props(graft.streaming.StageCache.Prop) = cacheRoot.toString
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      graft.operators.Sync.deleteTree(cacheRoot.toFile)
-      sys.props.remove(graft.streaming.StageCache.Prop)
-    }))
+    // a held scratch dir, as in the bench: it goes with the scratch
+    // root at JVM exit, after a crashed run too
+    sys.props(graft.streaming.StageCache.Prop) =
+      Scratch.held("graft_timeq_streams").toString
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (0 until n + 1).map { i =>

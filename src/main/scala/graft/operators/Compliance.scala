@@ -145,9 +145,8 @@ object Compliance {
     // explicitly (bounded by nlist: a metadata-scale driver loop)
     val emptied = affected.except(survivors.select("cell").distinct())
       .collect().map(_.get(0))
-    emptied.foreach { c =>
-      Sync.deleteTree(new java.io.File(s"$base/index/cell=$c"))
-    }
+    emptied.foreach(c =>
+      graft.Scratch.delete(java.nio.file.Paths.get(s"$base/index/cell=$c")))
     // commit: atomic pointer flip AFTER every surface landed
     val ptr = mvPointer(base)
     ptr.getParentFile.mkdirs()
@@ -201,9 +200,8 @@ object Compliance {
 
   /** Batch sweep: build, apply the whole request in one pass,
     * reconcile. */
-  def purgeSweep(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("purge")
-    try {
+  def purgeSweep(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("purge") { base =>
       // bench sessions stage the pristine surfaces once and copy them
       // in (the run mutates all three); Verify builds per run
       graft.streaming.StageCache.materialize(
@@ -214,8 +212,7 @@ object Compliance {
         .filter(purged(col("doc_id")))
       applyPurgeBatch(s, base.toString, keys)
       report(s, base.toString)
-    } finally Sync.deleteTree(base.toFile)
-  }
+    }
 
   /** Streaming sweep: the SAME purge request arrives as a stream of
     * key files (two ascending id-range slices), each micro-batch
@@ -224,8 +221,8 @@ object Compliance {
     * share one DuckDB oracle, so a request lost or replayed across
     * micro-batch boundaries, or maintenance reading stale state
     * between triggers, lands as a hash mismatch. */
-  def purgeSweepStream(s: SparkSession, dir: String): DataFrame = {
-    graft.streaming.Replay.work { base =>
+  def purgeSweepStream(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("replay") { base =>
       // surfaces AND the staged request slices are pure functions of
       // the corpus — one cached tree covers both; mtime-preserving
       // copy keeps the replay order
@@ -251,5 +248,4 @@ object Compliance {
       try q.processAllAvailable() finally q.stop()
       report(s, base.toString)
     }
-  }
 }

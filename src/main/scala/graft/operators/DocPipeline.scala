@@ -987,7 +987,8 @@ object DocPipeline {
     * as bucketed multi-record archives (100 docs per file — the
     * per-FILE work-unit shape of a real archive set), built once per
     * (corpus, session) under the bench's StageCache and per-run
-    * otherwise. Uncached dirs are cleaned at JVM exit (not eagerly):
+    * otherwise. An uncached staging is a [[graft.Scratch.held]] dir,
+    * removed with the scratch root when the JVM exits (not eagerly):
     * the returned query plans READ the staged files lazily, and
     * deferring the delete keeps the composition un-checkpointed — so
     * its physical plan (WarcScan, pushdown, pruning) stays auditable
@@ -1002,24 +1003,17 @@ object DocPipeline {
     import s.implicits._
     val ids = Tables.documents(s, dir).select("doc_id").as[Long]
       .collect().sorted // fixture staging only; |docs| ids on the driver
-    val (base, cached) = graft.streaming.StageCache.resolve(
-      s"${tag}_${graft.streaming.StageCache.dirKey(dir)}") { base =>
+    def build(base: java.nio.file.Path): Unit =
       ids.grouped(100).zipWithIndex.foreach { case (bucket, k) =>
         val out = new java.io.ByteArrayOutputStream()
         bucket.foreach(id => out.write(fixture(id)))
         java.nio.file.Files.write(
           base.resolve(f"bucket$k%05d$ext"), out.toByteArray)
       }
-    }
-    if (!cached) deleteAtExit(base)
-    base
+    graft.streaming.StageCache.staged(
+        s"${tag}_${graft.streaming.StageCache.dirKey(dir)}")(build)
+      .getOrElse { val base = graft.Scratch.held(tag); build(base); base }
   }
-
-  /** JVM-exit cleanup for uncached fixture staging (the StageCache'd
-    * bench path is cleaned by the bench's own cache-root hook). */
-  private def deleteAtExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      graft.operators.Sync.deleteTree(p.toFile)))
 
   /** WARC quarantine surface as an oracle row: every 17th doc's
     * archive is TRUNCATED mid-header (odd ids additionally gzip the
@@ -1107,10 +1101,9 @@ object DocPipeline {
     import s.implicits._
     val ids = Tables.documents(s, dir).select("doc_id").as[Long]
       .collect().sorted // fixture staging only
-    val base = java.nio.file.Files.createTempDirectory("warcstream")
-    val ckpt = java.nio.file.Files.createTempDirectory("warcstreamckpt")
-    val outDir = java.nio.file.Files.createTempDirectory("warcstreamout")
-    try {
+    graft.Scratch.within("warcstream") { work =>
+      def sub(d: String) = java.nio.file.Files.createDirectory(work.resolve(d))
+      val (base, ckpt, outDir) = (sub("in"), sub("ckpt"), sub("out"))
       val buckets = ids.grouped(100).toArray
       def writeWave(range: Range): Unit = range.foreach { k =>
         val out = new java.io.ByteArrayOutputStream()
@@ -1142,10 +1135,6 @@ object DocPipeline {
       s.read.parquet(outDir.toString)
         .orderBy("doc_id")
         .localCheckpoint(true)
-    } finally {
-      Sync.deleteTree(base.toFile)
-      Sync.deleteTree(ckpt.toFile)
-      Sync.deleteTree(outDir.toFile)
     }
   }
 
@@ -1163,10 +1152,9 @@ object DocPipeline {
     import s.implicits._
     val ids = Tables.documents(s, dir).select("doc_id").as[Long]
       .collect().sorted // fixture staging only
-    val base = java.nio.file.Files.createTempDirectory("warcsi")
-    val ckpt = java.nio.file.Files.createTempDirectory("warcsickpt")
-    val outDir = java.nio.file.Files.createTempDirectory("warcsiout")
-    try {
+    graft.Scratch.within("warcsi") { work =>
+      def sub(d: String) = java.nio.file.Files.createDirectory(work.resolve(d))
+      val (base, ckpt, outDir) = (sub("in"), sub("ckpt"), sub("out"))
       val buckets = ids.grouped(100).toArray
       def writeWave(range: Range): Unit = range.foreach { k =>
         val out = new java.io.ByteArrayOutputStream()
@@ -1205,10 +1193,6 @@ object DocPipeline {
       s.read.parquet(outDir.toString)
         .orderBy("doc_id")
         .localCheckpoint(true)
-    } finally {
-      Sync.deleteTree(base.toFile)
-      Sync.deleteTree(ckpt.toFile)
-      Sync.deleteTree(outDir.toFile)
     }
   }
 

@@ -372,8 +372,7 @@ object Ingest {
   def ingestIssuesE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ApiSources
-    val base = java.nio.file.Files.createTempDirectory("issuese2e")
-    try {
+    graft.Scratch.within("issuese2e") { base =>
       val recs = Tables.events(s, dir).filter(col("event_id") < 200)
         .select(
           col("event_id").as("number"),
@@ -428,7 +427,7 @@ object Ingest {
             .otherwise("unchanged"))
         .select("url", "chunk_id", "section", "total_chunks", "action")
         .orderBy("url").localCheckpoint(true)
-    } finally Sync.deleteTree(base.toFile)
+    }
   }
 
   /** End-to-end Zendesk-tickets ingest composition (reference
@@ -457,121 +456,120 @@ object Ingest {
   def ingestTicketsE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ApiSources
-    val base = java.nio.file.Files.createTempDirectory("ticketse2e")
-    val recs = Tables.events(s, dir).filter(col("event_id") < 200)
-      .withColumn("created_iso",
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-      .select(
-        col("event_id").as("id"),
-        concat(lit("Ticket "), col("event_type"), lit(" "),
-          col("event_id")).as("subject"),
-        when(col("event_id") % 11 === 0, lit("deleted"))
-          .when(col("event_type") === "error", lit("open"))
-          .otherwise(lit("solved")).as("status"),
-        when(col("event_id") % 3 === 0, lit(null).cast("string"))
-          .when(col("event_id") % 2 === 0, lit("high"))
-          .otherwise(lit("low")).as("priority"),
-        when(col("event_type") === "error", lit("incident"))
-          .otherwise(lit(null).cast("string")).as("type"),
-        col("user_id").as("requester_id"),
-        when(col("event_id") % 4 === 0, lit(null).cast("long"))
-          .otherwise(col("user_id") + 1).as("assignee_id"),
-        col("created_iso").as("created_at"),
-        concat(lit("2024-02-"),
-          lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
-          lit("T00:00:00Z")).as("updated_at"),
-        when(col("event_id") % 6 === 0, lit(null).cast("long"))
-          .otherwise(col("user_id") % 25).as("organization_id"),
-        when(col("event_type") === "click", array(lit("ui"), lit("bug")))
-          .otherwise(array().cast("array<string>")).as("tags"),
-        when(col("event_id") % 7 === 0, lit(null).cast("string"))
-          .otherwise(concat(lit("Ticket description "), col("event_id"),
-            when(col("event_id") % 3 === 0, lit(". (edited)"))
-              .otherwise(lit(".")))).as("description"),
-        expr("""array(
-          named_struct(
-            'author_id', user_id + 1000, 'created_at', created_iso,
-            'public', true,
-            'body', CASE WHEN event_id % 4 = 0 THEN 'decoy body'
-              WHEN event_id % 5 = 0 THEN ''
-              ELSE concat('Reply&nbsp;for&nbsp;ticket ', event_id, '.')
-              END,
-            'plain_body', CASE WHEN event_id % 4 = 0
-              THEN concat('Plain reply for ticket ', event_id, '.')
-              ELSE CAST(NULL AS STRING) END,
-            'html_body', CASE WHEN event_id % 4 = 0
-              THEN '<p>decoy html</p>' ELSE CAST(NULL AS STRING) END),
-          named_struct(
-            'author_id', user_id + 2000, 'created_at', created_iso,
-            'public', false,
-            'body', concat('Internal note ', event_id, '.'),
-            'plain_body', CAST(NULL AS STRING),
-            'html_body', CAST(NULL AS STRING)))""").as("comments"),
-        (col("event_id") / 40).cast("int").as("page"))
-      .localCheckpoint(true)
-    (0 until 5).foreach { p =>
-      recs.filter(col("page") === p).drop("page").coalesce(1)
-        .write.mode("overwrite").json(s"$base/page-$p")
+    graft.Scratch.within("ticketse2e") { base =>
+      val recs = Tables.events(s, dir).filter(col("event_id") < 200)
+        .withColumn("created_iso",
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+        .select(
+          col("event_id").as("id"),
+          concat(lit("Ticket "), col("event_type"), lit(" "),
+            col("event_id")).as("subject"),
+          when(col("event_id") % 11 === 0, lit("deleted"))
+            .when(col("event_type") === "error", lit("open"))
+            .otherwise(lit("solved")).as("status"),
+          when(col("event_id") % 3 === 0, lit(null).cast("string"))
+            .when(col("event_id") % 2 === 0, lit("high"))
+            .otherwise(lit("low")).as("priority"),
+          when(col("event_type") === "error", lit("incident"))
+            .otherwise(lit(null).cast("string")).as("type"),
+          col("user_id").as("requester_id"),
+          when(col("event_id") % 4 === 0, lit(null).cast("long"))
+            .otherwise(col("user_id") + 1).as("assignee_id"),
+          col("created_iso").as("created_at"),
+          concat(lit("2024-02-"),
+            lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
+            lit("T00:00:00Z")).as("updated_at"),
+          when(col("event_id") % 6 === 0, lit(null).cast("long"))
+            .otherwise(col("user_id") % 25).as("organization_id"),
+          when(col("event_type") === "click", array(lit("ui"), lit("bug")))
+            .otherwise(array().cast("array<string>")).as("tags"),
+          when(col("event_id") % 7 === 0, lit(null).cast("string"))
+            .otherwise(concat(lit("Ticket description "), col("event_id"),
+              when(col("event_id") % 3 === 0, lit(". (edited)"))
+                .otherwise(lit(".")))).as("description"),
+          expr("""array(
+            named_struct(
+              'author_id', user_id + 1000, 'created_at', created_iso,
+              'public', true,
+              'body', CASE WHEN event_id % 4 = 0 THEN 'decoy body'
+                WHEN event_id % 5 = 0 THEN ''
+                ELSE concat('Reply&nbsp;for&nbsp;ticket ', event_id, '.')
+                END,
+              'plain_body', CASE WHEN event_id % 4 = 0
+                THEN concat('Plain reply for ticket ', event_id, '.')
+                ELSE CAST(NULL AS STRING) END,
+              'html_body', CASE WHEN event_id % 4 = 0
+                THEN '<p>decoy html</p>' ELSE CAST(NULL AS STRING) END),
+            named_struct(
+              'author_id', user_id + 2000, 'created_at', created_iso,
+              'public', false,
+              'body', concat('Internal note ', event_id, '.'),
+              'plain_body', CAST(NULL AS STRING),
+              'html_body', CAST(NULL AS STRING)))""").as("comments"),
+          (col("event_id") / 40).cast("int").as("page"))
+        .localCheckpoint(true)
+      (0 until 5).foreach { p =>
+        recs.filter(col("page") === p).drop("page").coalesce(1)
+          .write.mode("overwrite").json(s"$base/page-$p")
+      }
+      val orgs = Tables.nation(s, dir)
+        .select(col("n_name").as("name"), col("n_nationkey").as("id"))
+      // staging guard only: on an empty fixture corpus there are no orgs
+      // (and no tickets) to exclude; resolveExcludedOrgs keeps its
+      // fail-on-unresolvable contract for real configs
+      val excluded =
+        if (orgs.isEmpty) Seq.empty[Long]
+        else ApiSources.resolveExcludedOrgs(orgs, Seq("NATION_3", "NATION_7"))
+      val (chunksDs, deleted) = ApiSources.ingestTickets(s, s"$base/page-*",
+        "support", "1.0", excludedOrgIds = excluded,
+        updatedAfter = Some("2024-02-14T12:00:00Z"))
+      val chunks = chunksDs
+        .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
+        .toDF("url", "chunk_id", "section", "total_chunks")
+      // prior store: ids < 150, active then (today's deletions were
+      // stored — the purge hits real urls), org config unchanged,
+      // pre-edit descriptions
+      val prior = Tables.events(s, dir)
+        .filter(col("event_id") < 150 && col("event_id") % 11 =!= 0 &&
+          !(col("event_id") % 6 =!= 0 &&
+            (col("user_id") % 25).isin(3L, 7L)))
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
+        .as[(Long, Long, String, String)]
+        .flatMap { case (id, user, etype, iso) =>
+          val t = Renderers.Ticket(
+            id, s"Ticket $etype $id",
+            if (etype == "error") "open" else "solved",
+            if (id % 3 == 0) None
+            else Some(if (id % 2 == 0) "high" else "low"),
+            if (etype == "error") Some("incident") else None,
+            user, if (id % 4 == 0) None else Some(user + 1),
+            iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
+            if (etype == "click") Seq("ui", "bug") else Seq.empty,
+            if (id % 7 == 0) None else Some(s"Ticket description $id."),
+            Seq(
+              Renderers.TicketComment(user + 1000, iso, isPublic = true,
+                if (id % 4 == 0) s"Plain reply for ticket $id."
+                else if (id % 5 == 0) ""
+                else s"Reply&nbsp;for&nbsp;ticket $id."),
+              Renderers.TicketComment(user + 2000, iso, isPublic = false,
+                s"Internal note $id.")))
+          Chunker.chunkMarkdown(Renderers.renderTicket(t),
+              "support", "1.0", s"zendesk://ticket/$id")
+            .map(c => (c.url, c.chunk_id))
+        }.toDF("url", "stored_id")
+      val delta = chunks.join(prior, Seq("url"), "left")
+        .withColumn("action",
+          when(col("stored_id").isNull, "new")
+            .when(col("stored_id") =!= col("chunk_id"), "changed")
+            .otherwise("unchanged"))
+        .select("url", "chunk_id", "section", "total_chunks", "action")
+      val purge = deleted.select(col("url"), lit("").as("chunk_id"),
+        lit("").as("section"), lit(0L).as("total_chunks"),
+        lit("purge").as("action"))
+      delta.unionByName(purge)
+        .orderBy("url", "action").localCheckpoint(true)
     }
-    val orgs = Tables.nation(s, dir)
-      .select(col("n_name").as("name"), col("n_nationkey").as("id"))
-    // staging guard only: on an empty fixture corpus there are no orgs
-    // (and no tickets) to exclude; resolveExcludedOrgs keeps its
-    // fail-on-unresolvable contract for real configs
-    val excluded =
-      if (orgs.isEmpty) Seq.empty[Long]
-      else ApiSources.resolveExcludedOrgs(orgs, Seq("NATION_3", "NATION_7"))
-    val (chunksDs, deleted) = ApiSources.ingestTickets(s, s"$base/page-*",
-      "support", "1.0", excludedOrgIds = excluded,
-      updatedAfter = Some("2024-02-14T12:00:00Z"))
-    val chunks = chunksDs
-      .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
-      .toDF("url", "chunk_id", "section", "total_chunks")
-    // prior store: ids < 150, active then (today's deletions were
-    // stored — the purge hits real urls), org config unchanged,
-    // pre-edit descriptions
-    val prior = Tables.events(s, dir)
-      .filter(col("event_id") < 150 && col("event_id") % 11 =!= 0 &&
-        !(col("event_id") % 6 =!= 0 &&
-          (col("user_id") % 25).isin(3L, 7L)))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
-      .as[(Long, Long, String, String)]
-      .flatMap { case (id, user, etype, iso) =>
-        val t = Renderers.Ticket(
-          id, s"Ticket $etype $id",
-          if (etype == "error") "open" else "solved",
-          if (id % 3 == 0) None
-          else Some(if (id % 2 == 0) "high" else "low"),
-          if (etype == "error") Some("incident") else None,
-          user, if (id % 4 == 0) None else Some(user + 1),
-          iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
-          if (etype == "click") Seq("ui", "bug") else Seq.empty,
-          if (id % 7 == 0) None else Some(s"Ticket description $id."),
-          Seq(
-            Renderers.TicketComment(user + 1000, iso, isPublic = true,
-              if (id % 4 == 0) s"Plain reply for ticket $id."
-              else if (id % 5 == 0) ""
-              else s"Reply&nbsp;for&nbsp;ticket $id."),
-            Renderers.TicketComment(user + 2000, iso, isPublic = false,
-              s"Internal note $id.")))
-        Chunker.chunkMarkdown(Renderers.renderTicket(t),
-            "support", "1.0", s"zendesk://ticket/$id")
-          .map(c => (c.url, c.chunk_id))
-      }.toDF("url", "stored_id")
-    val delta = chunks.join(prior, Seq("url"), "left")
-      .withColumn("action",
-        when(col("stored_id").isNull, "new")
-          .when(col("stored_id") =!= col("chunk_id"), "changed")
-          .otherwise("unchanged"))
-      .select("url", "chunk_id", "section", "total_chunks", "action")
-    val purge = deleted.select(col("url"), lit("").as("chunk_id"),
-      lit("").as("section"), lit(0L).as("total_chunks"),
-      lit("purge").as("action"))
-    val out = delta.unionByName(purge)
-      .orderBy("url", "action").localCheckpoint(true)
-    Sync.deleteTree(base.toFile)
-    out
   }
 
   /** End-to-end Zendesk help-center ARTICLES ingest composition
@@ -598,81 +596,80 @@ object Ingest {
   def ingestArticlesE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.sources.ApiSources
-    val base = java.nio.file.Files.createTempDirectory("articlese2e")
-    val recs = Tables.events(s, dir).filter(col("event_id") < 200)
-      .select(
-        col("event_id").as("id"),
-        concat(lit("Article "), col("event_type"), lit(" "),
-          col("event_id")).as("title"),
-        col("user_id").as("author_id"),
-        (col("event_id") % 10).as("section_id"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-          .as("created_at"),
-        concat(lit("2024-02-"),
-          lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
-          lit("T00:00:00Z")).as("updated_at"),
-        when(col("event_id") % 9 === 0, lit(null).cast("long"))
-          .otherwise(col("event_id") % 7 - 3).as("vote_sum"),
-        when(col("event_id") % 9 === 0, lit(null).cast("long"))
-          .otherwise(col("event_id") % 5 + 1).as("vote_count"),
-        when(col("event_type") === "click",
-            array(lit("faq"), lit("howto")))
-          .otherwise(array().cast("array<string>")).as("label_names"),
-        when(col("event_id") % 7 === 0, lit(null).cast("string"))
-          .when(col("event_id") % 4 === 0,
-            concat(lit("<p>Body for article "), col("event_id"),
-              lit(" with <strong>bold</strong> text"),
-              when(col("event_id") % 3 === 0, lit(". (edited)</p>"))
-                .otherwise(lit(".</p>"))))
-          .otherwise(concat(lit("Body for article "), col("event_id"),
-            when(col("event_id") % 3 === 0, lit(". (edited)"))
-              .otherwise(lit(".")))).as("body"),
-        when(col("event_id") % 5 === 0, lit(null).cast("string"))
-          .otherwise(concat(lit("https://help.example.com/articles/"),
-            col("event_id"))).as("html_url"),
-        (col("event_id") / 40).cast("int").as("page"))
-      .localCheckpoint(true)
-    (0 until 5).foreach { p =>
-      recs.filter(col("page") === p).drop("page").coalesce(1)
-        .write.mode("overwrite").json(s"$base/page-$p")
+    graft.Scratch.within("articlese2e") { base =>
+      val recs = Tables.events(s, dir).filter(col("event_id") < 200)
+        .select(
+          col("event_id").as("id"),
+          concat(lit("Article "), col("event_type"), lit(" "),
+            col("event_id")).as("title"),
+          col("user_id").as("author_id"),
+          (col("event_id") % 10).as("section_id"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+            .as("created_at"),
+          concat(lit("2024-02-"),
+            lpad(((col("event_id") % 28) + 1).cast("string"), 2, "0"),
+            lit("T00:00:00Z")).as("updated_at"),
+          when(col("event_id") % 9 === 0, lit(null).cast("long"))
+            .otherwise(col("event_id") % 7 - 3).as("vote_sum"),
+          when(col("event_id") % 9 === 0, lit(null).cast("long"))
+            .otherwise(col("event_id") % 5 + 1).as("vote_count"),
+          when(col("event_type") === "click",
+              array(lit("faq"), lit("howto")))
+            .otherwise(array().cast("array<string>")).as("label_names"),
+          when(col("event_id") % 7 === 0, lit(null).cast("string"))
+            .when(col("event_id") % 4 === 0,
+              concat(lit("<p>Body for article "), col("event_id"),
+                lit(" with <strong>bold</strong> text"),
+                when(col("event_id") % 3 === 0, lit(". (edited)</p>"))
+                  .otherwise(lit(".</p>"))))
+            .otherwise(concat(lit("Body for article "), col("event_id"),
+              when(col("event_id") % 3 === 0, lit(". (edited)"))
+                .otherwise(lit(".")))).as("body"),
+          when(col("event_id") % 5 === 0, lit(null).cast("string"))
+            .otherwise(concat(lit("https://help.example.com/articles/"),
+              col("event_id"))).as("html_url"),
+          (col("event_id") / 40).cast("int").as("page"))
+        .localCheckpoint(true)
+      (0 until 5).foreach { p =>
+        recs.filter(col("page") === p).drop("page").coalesce(1)
+          .write.mode("overwrite").json(s"$base/page-$p")
+      }
+      val chunks = ApiSources.ingestArticles(s, s"$base/page-*",
+          "helpcenter", "1.0", updatedAfter = Some("2024-02-14T12:00:00Z"))
+        .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
+        .toDF("url", "chunk_id", "section", "total_chunks")
+      // prior store: ids < 150 rendered through the SAME kernels from the
+      // pre-edit records (what the previous sync embedded)
+      val prior = Tables.events(s, dir).filter(col("event_id") < 150)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
+        .as[(Long, Long, String, String)]
+        .flatMap { case (id, user, etype, iso) =>
+          val a = Renderers.Article(
+            id, s"Article $etype $id", user, id % 10,
+            iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
+            if (id % 9 == 0) 0L else id % 7 - 3,
+            if (id % 9 == 0) 0L else id % 5 + 1,
+            if (etype == "click") Seq("faq", "howto") else Seq.empty,
+            if (id % 7 == 0) None
+            else if (id % 4 == 0) Some(
+              s"<p>Body for article $id with <strong>bold</strong> text.</p>")
+            else Some(s"Body for article $id."))
+          val url =
+            if (id % 5 == 0) s"zendesk://article/$id"
+            else s"https://help.example.com/articles/$id"
+          Chunker.chunkMarkdown(Renderers.renderArticle(a),
+              "helpcenter", "1.0", url)
+            .map(c => (c.url, c.chunk_id))
+        }.toDF("url", "stored_id")
+      chunks.join(prior, Seq("url"), "left")
+        .withColumn("action",
+          when(col("stored_id").isNull, "new")
+            .when(col("stored_id") =!= col("chunk_id"), "changed")
+            .otherwise("unchanged"))
+        .select("url", "chunk_id", "section", "total_chunks", "action")
+        .orderBy("url").localCheckpoint(true)
     }
-    val chunks = ApiSources.ingestArticles(s, s"$base/page-*",
-        "helpcenter", "1.0", updatedAfter = Some("2024-02-14T12:00:00Z"))
-      .map(c => (c.url, c.chunk_id, c.section, c.total_chunks.toLong))
-      .toDF("url", "chunk_id", "section", "total_chunks")
-    // prior store: ids < 150 rendered through the SAME kernels from the
-    // pre-edit records (what the previous sync embedded)
-    val prior = Tables.events(s, dir).filter(col("event_id") < 150)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss'Z'").as("iso"))
-      .as[(Long, Long, String, String)]
-      .flatMap { case (id, user, etype, iso) =>
-        val a = Renderers.Article(
-          id, s"Article $etype $id", user, id % 10,
-          iso, "2024-02-%02dT00:00:00Z".format((id % 28) + 1),
-          if (id % 9 == 0) 0L else id % 7 - 3,
-          if (id % 9 == 0) 0L else id % 5 + 1,
-          if (etype == "click") Seq("faq", "howto") else Seq.empty,
-          if (id % 7 == 0) None
-          else if (id % 4 == 0) Some(
-            s"<p>Body for article $id with <strong>bold</strong> text.</p>")
-          else Some(s"Body for article $id."))
-        val url =
-          if (id % 5 == 0) s"zendesk://article/$id"
-          else s"https://help.example.com/articles/$id"
-        Chunker.chunkMarkdown(Renderers.renderArticle(a),
-            "helpcenter", "1.0", url)
-          .map(c => (c.url, c.chunk_id))
-      }.toDF("url", "stored_id")
-    val out = chunks.join(prior, Seq("url"), "left")
-      .withColumn("action",
-        when(col("stored_id").isNull, "new")
-          .when(col("stored_id") =!= col("chunk_id"), "changed")
-          .otherwise("unchanged"))
-      .select("url", "chunk_id", "section", "total_chunks", "action")
-      .orderBy("url").localCheckpoint(true)
-    Sync.deleteTree(base.toFile)
-    out
   }
 
   /** Crawl frontier: BFS over a deterministic link graph (doc i links

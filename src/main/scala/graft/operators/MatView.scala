@@ -187,7 +187,7 @@ object MatView {
     if (Tables.lineitem(s, dir).take(1).isEmpty)
       return incrementalRefresh(s, dir)
     val (store, adds, dels) = parts(s, dir)
-    graft.streaming.Replay.work { base =>
+    graft.Scratch.within("replay") { base =>
       // the pristine tree (base store, MV v0, typed empty logs, staged
       // delta slices) is a pure function of the corpus — bench
       // sessions stage it once and copy it in (the run mutates the

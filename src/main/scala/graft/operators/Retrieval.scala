@@ -163,13 +163,11 @@ object Retrieval {
     * not the corpus. Builds into a temp dir here (the oracle-row
     * form); a deployment calls [[buildLexicalIndex]] once. */
   def bm25SearchIndexed(s: SparkSession, dir: String,
-      k: Int = 5): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("lexidx")
-    try {
+      k: Int = 5): DataFrame =
+    graft.Scratch.within("lexidx") { base =>
       buildLexicalIndex(s, dir, base.toString)
       bm25IndexedScoring(s, base.toString, k).localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+    }
 
   /** The query-time half of [[bm25SearchIndexed]], split out so the
     * plan auditor (graft.Explain / PlanAuditSpec) can show the

@@ -318,14 +318,12 @@ object Similarity {
   @volatile private var lloydPlantedDir: String = null
 
   /** Stage the planted embeddings table once per JVM (4,800 tiny rows;
-    * bench reps re-read, not re-write), deleted at JVM exit. */
+    * bench reps re-read, not re-write) in a [[graft.Scratch.held]]
+    * dir. */
   private def stageLloydPlanted(s: SparkSession): String = synchronized {
     if (lloydPlantedDir == null) {
       import s.implicits._
-      val root = java.nio.file.Files.createTempDirectory("lloydplanted")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.operators.Sync.deleteTree(root.toFile)))
-      val dir = root.toString
+      val dir = graft.Scratch.held("lloydplanted").toString
       s.range(1, LloydPlantedN + 1L).as[Long]
         .map(i => (i, lloydPlantedVec(i)))
         .toDF("vec_id", "embedding")
@@ -495,8 +493,7 @@ object Similarity {
     // all precede the cut, so the oracle's full-corpus seed rule is
     // the same quantizer
     val seeds = ivfSeeds(s, dir, IvfNlist)
-    val base = java.nio.file.Files.createTempDirectory("ivfappend")
-    try {
+    graft.Scratch.within("ivfappend") { base =>
       val idx = s"$base/codes"
       val emb = Tables.embeddings(s, dir)
       ivfAssignWith(emb.filter(col("vec_id") < cut), seeds)
@@ -504,7 +501,7 @@ object Similarity {
       ivfAssignWith(emb.filter(col("vec_id") >= cut), seeds)
         .write.mode("append").partitionBy("cell").parquet(idx)
       ivfOccupancyReport(s, idx, cut)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** Streaming form of [[ivfAppendReport]] — embeddings ARRIVE as a
@@ -754,18 +751,15 @@ object Similarity {
   /** The raw-seed IVF index of each corpus dir that the IVF oracle rows
     * probe: built once by [[buildIvfIndex]] with `lloydIters = 0`
     * (vec_id 1..nlist as centroids, so the DuckDB oracle re-derives the
-    * quantizer bit-for-bit) under a temp root that is removed on JVM
-    * exit, and reused by every later call — build once, probe many is
-    * the serving shape. */
+    * quantizer bit-for-bit) under a [[graft.Scratch.held]] dir, and
+    * reused by every later call — build once, probe many is the
+    * serving shape. */
   private val stagedIndexes =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   private[graft] def stagedIndex(s: SparkSession, dir: String): String =
     stagedIndexes.getOrElseUpdate(dir, {
-      val root = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.operators.Sync.deleteTree(root.toFile)))
-      val p = root.resolve("ivf").toString
+      val p = graft.Scratch.held("graft_ivf_idx").resolve("ivf").toString
       buildIvfIndex(s, dir, p, lloydIters = 0)
       p
     })

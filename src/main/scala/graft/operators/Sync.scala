@@ -481,57 +481,49 @@ object Sync {
     * Scale: three [[syncRun]] invocations (url/chunk_id-keyed joins);
     * the corpora are bounded slices so the row stays protocol-sized in
     * the bench. */
-  def syncRunE2e(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("syncrune2e")
-    val store = base.resolve("store").toString
-    val state = base.resolve("state").toString
-    val docs = Tables.documents(s, dir)
-    def corpus(df: DataFrame): DataFrame =
-      df.select(concat(lit("doc://"), col("doc_id")).as("url"), col("text"))
-    val a = corpus(docs.filter(col("doc_id") < 250 && col("doc_id") % 5 =!= 4))
-    val b = corpus(docs.filter(col("doc_id") < 280 && col("doc_id") % 7 =!= 3)
-      .withColumn("text", when(col("doc_id") % 10 === 6,
-        concat(col("text"), lit(" v2 tokens"))).otherwise(col("text"))))
-    val c = corpus(docs.filter(col("doc_id") < 280 && col("doc_id") % 6 =!= 5)
-      .withColumn("text", when(col("doc_id") % 9 === 2,
-        concat(col("text"), lit(" v3 tokens"))).otherwise(col("text"))))
-    val prefix = "e2e://src"
-    def pack(r: DataFrame): DataFrame = r.select(
-      lit("counters").as("kind"),
-      concat(lit("run:"), col("run_id")).as("key"),
-      concat(
-        lit("force="), col("force_full_sync").cast("string"),
-        lit("|new="), col("items_new"),
-        lit("|upd="), col("items_updated"),
-        lit("|unch="), col("items_unchanged"),
-        lit("|del="), col("items_deleted"),
-        lit("|proc="), col("urls_processed"),
-        lit("|emb="), col("chunks_embedded"),
-        lit("|ver="), col("store_version")).as("payload"))
-    // syncRun's side effects (store version write, metadata flag) are
-    // eager, so the three runs sequence correctly here
-    val r1 = pack(syncRun(s, a, store, state, 1L, prefix,
-      hasNetworkErrors = true))
-    val r2 = pack(syncRun(s, b, store, state, 2L, prefix))
-    val r3 = pack(syncRun(s, c, store, state, 3L, prefix,
-      scanIncomplete = true))
-    val finalStore = graft.sources.ChunkStore.readLatest(s, store).get
-      .select(lit("store").as("kind"),
-        concat(col("url"), lit("#"),
-          lpad(col("chunk_index").cast("string"), 4, "0")).as("key"),
-        concat(col("chunk_id"), lit("|"), col("total_chunks")).as("payload"))
-    // pin before deleting the temp tree (the frame reads lazily from it)
-    val out = r1.unionByName(r2).unionByName(r3).unionByName(finalStore)
-      .orderBy("kind", "key").localCheckpoint(true)
-    deleteTree(base.toFile)
-    out
-  }
-
-  /** Recursive temp-tree cleanup shared by the e2e staging rows. */
-  private[graft] def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete()
-  }
+  def syncRunE2e(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("syncrune2e") { base =>
+      val store = base.resolve("store").toString
+      val state = base.resolve("state").toString
+      val docs = Tables.documents(s, dir)
+      def corpus(df: DataFrame): DataFrame =
+        df.select(concat(lit("doc://"), col("doc_id")).as("url"), col("text"))
+      val a = corpus(docs.filter(col("doc_id") < 250 && col("doc_id") % 5 =!= 4))
+      val b = corpus(docs.filter(col("doc_id") < 280 && col("doc_id") % 7 =!= 3)
+        .withColumn("text", when(col("doc_id") % 10 === 6,
+          concat(col("text"), lit(" v2 tokens"))).otherwise(col("text"))))
+      val c = corpus(docs.filter(col("doc_id") < 280 && col("doc_id") % 6 =!= 5)
+        .withColumn("text", when(col("doc_id") % 9 === 2,
+          concat(col("text"), lit(" v3 tokens"))).otherwise(col("text"))))
+      val prefix = "e2e://src"
+      def pack(r: DataFrame): DataFrame = r.select(
+        lit("counters").as("kind"),
+        concat(lit("run:"), col("run_id")).as("key"),
+        concat(
+          lit("force="), col("force_full_sync").cast("string"),
+          lit("|new="), col("items_new"),
+          lit("|upd="), col("items_updated"),
+          lit("|unch="), col("items_unchanged"),
+          lit("|del="), col("items_deleted"),
+          lit("|proc="), col("urls_processed"),
+          lit("|emb="), col("chunks_embedded"),
+          lit("|ver="), col("store_version")).as("payload"))
+      // syncRun's side effects (store version write, metadata flag) are
+      // eager, so the three runs sequence correctly here
+      val r1 = pack(syncRun(s, a, store, state, 1L, prefix,
+        hasNetworkErrors = true))
+      val r2 = pack(syncRun(s, b, store, state, 2L, prefix))
+      val r3 = pack(syncRun(s, c, store, state, 3L, prefix,
+        scanIncomplete = true))
+      val finalStore = graft.sources.ChunkStore.readLatest(s, store).get
+        .select(lit("store").as("kind"),
+          concat(col("url"), lit("#"),
+            lpad(col("chunk_index").cast("string"), 4, "0")).as("key"),
+          concat(col("chunk_id"), lit("|"), col("total_chunks")).as("payload"))
+      // pin before deleting the temp tree (the frame reads lazily from it)
+      r1.unionByName(r2).unionByName(r3).unionByName(finalStore)
+        .orderBy("kind", "key").localCheckpoint(true)
+    }
 
   /** Qdrant metadata-point exclusion parity (reference
     * database.ts:192-215 metadata upsert; 566-574 `must_not

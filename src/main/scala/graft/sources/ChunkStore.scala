@@ -375,9 +375,8 @@ object ChunkStore {
     *
     * Scale: each upsert writes only its batch and logs its urls;
     * reports are one aggregate per version. */
-  def timeTravelReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("ttravel")
-    try {
+  def timeTravelReport(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("ttravel") { base =>
       val root = s"$base/store"
       buildVersionedFixture(s, dir, root)
       (0L to 2L).map { v =>
@@ -388,8 +387,7 @@ object ChunkStore {
       }.reduce(_ unionByName _)
         .orderBy("version")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+    }
 
   /** Change-data-capture feed between consecutive store versions —
     * what a downstream consumes to stay incremental without rescanning
@@ -406,9 +404,8 @@ object ChunkStore {
     * version-sized); a production feed persists per-commit change
     * files instead of diffing snapshots — the diff here doubles as the
     * VALIDATOR such a feed would be checked against. */
-  def changeFeedReport(s: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("cdcfeed")
-    try {
+  def changeFeedReport(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("cdcfeed") { base =>
       val root = s"$base/store"
       buildVersionedFixture(s, dir, root)
       (0L to 1L).map { v =>
@@ -442,8 +439,7 @@ object ChunkStore {
           col("sum_id_updated").cast("long"))
         .orderBy("from_v")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
-  }
+    }
 
   /** Chunk inspector (reference controller/chunk-inspector.ts:42-206):
     * all chunks of one url, created_at attached via LEFT JOIN on

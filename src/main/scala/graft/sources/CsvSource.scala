@@ -37,8 +37,7 @@ object CsvSource {
     * keeps. */
   def scanCsv(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("csvsrc")
-    try {
+    graft.Scratch.within("csvsrc") { base =>
       csvLines(docs).write.text(s"$base/in")
       val df = s.read
         .schema("doc_id LONG, lang STRING, n_chars LONG, title STRING, _corrupt_record STRING")
@@ -58,6 +57,6 @@ object CsvSource {
             .as("sum_title_len"))
         .orderBy("lang")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 }

@@ -32,8 +32,7 @@ object EvolvingSource {
   def scanEvolved(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select("doc_id", "source", "lang", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("evolve")
-    try {
+    graft.Scratch.within("evolve") { base =>
       val p = s"$base/tbl"
       docs.filter(pmod(col("doc_id"), lit(3)) === 0)
         .select("doc_id", "source").write.parquet(p)
@@ -53,7 +52,7 @@ object EvolvingSource {
           coalesce(sum(col("doc_id")), lit(0L)).as("sum_doc_id"))
         .orderBy("gen")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** The EXPECTED schema contract of the evolved drop zone — what a
@@ -76,8 +75,7 @@ object EvolvingSource {
   def scanContract(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select("doc_id", "source", "lang", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("contract")
-    try {
+    graft.Scratch.within("contract") { base =>
       val p = s"$base/tbl"
       docs.filter(pmod(col("doc_id"), lit(3)) === 0)
         .select("doc_id", "source").write.parquet(p)
@@ -110,6 +108,6 @@ object EvolvingSource {
         .withColumn("rogue_columns", lit(rogue.mkString(",")))
         .orderBy("gen")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 }

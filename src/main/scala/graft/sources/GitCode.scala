@@ -250,92 +250,91 @@ object GitCode {
     * — this row pins the SEAMS.) */
   def codeSyncE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val base = java.nio.file.Files.createTempDirectory("codesync")
-    val store = s"$base/store"
-    val state = s"$base/state"
-    val repoPath = "/repo"
-    val repo = "acme/docs"
-    val branch = "main"
-    val urlPrefix = s"https://github.com/$repo/blob/$branch"
-    val docs = Tables.documents(s, dir)
+    graft.Scratch.within("codesync") { base =>
+      val store = s"$base/store"
+      val state = s"$base/state"
+      val repoPath = "/repo"
+      val repo = "acme/docs"
+      val branch = "main"
+      val urlPrefix = s"https://github.com/$repo/blob/$branch"
+      val docs = Tables.documents(s, dir)
 
-    def tree(stage: Int): DataFrame = {
-      val id = col("doc_id")
-      val inS1 = id < 120
-      val adds2 = id >= 120 && id < 135
-      val adds3 = id >= 135 && id < 145
-      val member2 = (inS1 && id % 10 =!= 3) || adds2
-      val member3 = (member2 && !(id % 9 === 0 && id < 135)) || adds3
-      val member = stage match {
-        case 1 => inS1
-        case 2 => member2
-        case _ => member3
+      def tree(stage: Int): DataFrame = {
+        val id = col("doc_id")
+        val inS1 = id < 120
+        val adds2 = id >= 120 && id < 135
+        val adds3 = id >= 135 && id < 145
+        val member2 = (inS1 && id % 10 =!= 3) || adds2
+        val member3 = (member2 && !(id % 9 === 0 && id < 135)) || adds3
+        val member = stage match {
+          case 1 => inS1
+          case 2 => member2
+          case _ => member3
+        }
+        val path =
+          if (stage >= 2)
+            when(inS1 && id % 10 === 7,
+              concat(lit("src/moved/f"), id, lit(".py")))
+              .otherwise(concat(lit("src/f"), id, lit(".py")))
+          else concat(lit("src/f"), id, lit(".py"))
+        val t1 =
+          if (stage >= 2)
+            when(inS1 && id % 10 === 1, concat(col("text"), lit(" v2")))
+              .otherwise(col("text"))
+          else col("text")
+        val t2 =
+          if (stage >= 3)
+            when(member2 && id % 12 === 5, concat(t1, lit(" v3")))
+              .otherwise(t1)
+          else t1
+        docs.filter(member).select(path.as("path"), t2.as("text"))
       }
-      val path =
-        if (stage >= 2)
-          when(inS1 && id % 10 === 7,
-            concat(lit("src/moved/f"), id, lit(".py")))
-            .otherwise(concat(lit("src/f"), id, lit(".py")))
-        else concat(lit("src/f"), id, lit(".py"))
-      val t1 =
-        if (stage >= 2)
-          when(inS1 && id % 10 === 1, concat(col("text"), lit(" v2")))
-            .otherwise(col("text"))
-        else col("text")
-      val t2 =
-        if (stage >= 3)
-          when(member2 && id % 12 === 5, concat(t1, lit(" v3")))
-            .otherwise(t1)
-        else t1
-      docs.filter(member).select(path.as("path"), t2.as("text"))
+
+      // run 2's staged `git diff --name-status sha1..sha2` stdout —
+      // driver-sized in production too (it's a shell-out's output)
+      // one scan for both id slices (they partition id < 135)
+      val ids135 = docs.filter(col("doc_id") < 135)
+        .select("doc_id").as[Long].collect().sorted
+      val s1Ids = ids135.filter(_ < 120)
+      val adds2Ids = ids135.filter(_ >= 120)
+      val diff2 = (
+        adds2Ids.map(id => s"A\tsrc/f$id.py") ++
+          s1Ids.filter(_ % 10 == 1).map(id => s"M\tsrc/f$id.py") ++
+          s1Ids.filter(_ % 10 == 3).map(id => s"D\tsrc/f$id.py") ++
+          s1Ids.filter(_ % 10 == 7)
+            .map(id => s"R100\tsrc/f$id.py\tsrc/moved/f$id.py")
+        ).mkString("\n")
+
+      def pack(r: DataFrame): DataFrame = r.select(
+        lit("counters").as("kind"),
+        concat(lit("run:"), col("run_id")).as("key"),
+        concat(
+          lit("mode="), col("mode"),
+          lit("|files="), col("files_processed"),
+          lit("|emb="), col("chunks_embedded"),
+          lit("|del="), col("urls_deleted"),
+          lit("|ver="), col("store_version")).as("payload"))
+
+      // codeRun's side effects (store version, watermark) are eager, so
+      // the four runs sequence correctly
+      val r1 = pack(codeRun(s, tree(1), store, state, 1L, "sha1", None,
+        repoPath, urlPrefix, repo, branch))
+      val r2 = pack(codeRun(s, tree(2), store, state, 2L, "sha2",
+        Some(diff2), repoPath, urlPrefix, repo, branch))
+      val r3 = pack(codeRun(s, tree(3), store, state, 3L, "sha3", None,
+        repoPath, urlPrefix, repo, branch))
+      val r4 = pack(codeRun(s, tree(3), store, state, 4L, "sha3", None,
+        repoPath, urlPrefix, repo, branch))
+
+      val finalStore = ChunkStore.readLatest(s, store).get
+        .select(lit("store").as("kind"),
+          concat(col("url"), lit("#"),
+            lpad(col("chunk_index").cast("string"), 4, "0")).as("key"),
+          concat(col("chunk_id"), lit("|"), col("total_chunks"))
+            .as("payload"))
+      r1.unionByName(r2).unionByName(r3).unionByName(r4)
+        .unionByName(finalStore)
+        .orderBy("kind", "key").localCheckpoint(true)
     }
-
-    // run 2's staged `git diff --name-status sha1..sha2` stdout —
-    // driver-sized in production too (it's a shell-out's output)
-    // one scan for both id slices (they partition id < 135)
-    val ids135 = docs.filter(col("doc_id") < 135)
-      .select("doc_id").as[Long].collect().sorted
-    val s1Ids = ids135.filter(_ < 120)
-    val adds2Ids = ids135.filter(_ >= 120)
-    val diff2 = (
-      adds2Ids.map(id => s"A\tsrc/f$id.py") ++
-        s1Ids.filter(_ % 10 == 1).map(id => s"M\tsrc/f$id.py") ++
-        s1Ids.filter(_ % 10 == 3).map(id => s"D\tsrc/f$id.py") ++
-        s1Ids.filter(_ % 10 == 7)
-          .map(id => s"R100\tsrc/f$id.py\tsrc/moved/f$id.py")
-      ).mkString("\n")
-
-    def pack(r: DataFrame): DataFrame = r.select(
-      lit("counters").as("kind"),
-      concat(lit("run:"), col("run_id")).as("key"),
-      concat(
-        lit("mode="), col("mode"),
-        lit("|files="), col("files_processed"),
-        lit("|emb="), col("chunks_embedded"),
-        lit("|del="), col("urls_deleted"),
-        lit("|ver="), col("store_version")).as("payload"))
-
-    // codeRun's side effects (store version, watermark) are eager, so
-    // the four runs sequence correctly
-    val r1 = pack(codeRun(s, tree(1), store, state, 1L, "sha1", None,
-      repoPath, urlPrefix, repo, branch))
-    val r2 = pack(codeRun(s, tree(2), store, state, 2L, "sha2",
-      Some(diff2), repoPath, urlPrefix, repo, branch))
-    val r3 = pack(codeRun(s, tree(3), store, state, 3L, "sha3", None,
-      repoPath, urlPrefix, repo, branch))
-    val r4 = pack(codeRun(s, tree(3), store, state, 4L, "sha3", None,
-      repoPath, urlPrefix, repo, branch))
-
-    val finalStore = ChunkStore.readLatest(s, store).get
-      .select(lit("store").as("kind"),
-        concat(col("url"), lit("#"),
-          lpad(col("chunk_index").cast("string"), 4, "0")).as("key"),
-        concat(col("chunk_id"), lit("|"), col("total_chunks"))
-          .as("payload"))
-    val out = r1.unionByName(r2).unionByName(r3).unionByName(r4)
-      .unionByName(finalStore)
-      .orderBy("kind", "key").localCheckpoint(true)
-    graft.operators.Sync.deleteTree(base.toFile)
-    out
   }
 }

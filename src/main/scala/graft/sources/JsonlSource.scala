@@ -52,8 +52,7 @@ object JsonlSource {
     * quarantine accounting, JSON edition. */
   def scanJsonl(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "lang", "n_chars")
-    val base = java.nio.file.Files.createTempDirectory("jsonlsrc")
-    try {
+    graft.Scratch.within("jsonlsrc") { base =>
       jsonLines(docs).write.text(s"$base/in")
       val df = s.read
         .schema("doc_id LONG, meta STRUCT<lang: STRING, n_chars: LONG>, " +
@@ -74,6 +73,6 @@ object JsonlSource {
             .as("sum_tags"))
         .orderBy("lang")
         .localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 }

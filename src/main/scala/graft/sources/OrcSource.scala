@@ -28,11 +28,10 @@ object OrcSource {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"),
         split(col("text"), " ", -1).as("tokens"), col("lang"))
-    val base = java.nio.file.Files.createTempDirectory("orcsrc")
-    try {
+    graft.Scratch.within("orcsrc") { base =>
       docs.write.partitionBy("lang").orc(s"$base/in")
       scanStaged(s, s"$base/in").localCheckpoint(true)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** The read side alone (stage path injected) so PlanAuditSpec can

@@ -180,14 +180,13 @@ object TxnLogStore {
     * on its store root and delete it; `f` materializes its result. */
   private def onFixture(s: SparkSession, dir: String, prefix: String)(
       f: String => DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(prefix)
-    try {
+    graft.Scratch.within(prefix) { base =>
       val root = s"$base/store"
       stageDataFiles(s, dir, root)
       FixtureCommits.zipWithIndex.foreach { case ((adds, removes), v) =>
         commit(root, v.toLong, adds, removes) }
       f(root)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    }
   }
 
   /** The compaction job: rewrite the head's live set into one file
@@ -273,8 +272,8 @@ object TxnLogStore {
     }
   }
 
-  def txnLogStreamReport(s: SparkSession, dir: String): DataFrame = {
-    graft.streaming.Replay.work { base =>
+  def txnLogStreamReport(s: SparkSession, dir: String): DataFrame =
+    graft.Scratch.within("replay") { base =>
       val root = s"$base/store"
       stageDataFiles(s, dir, root)
       val reqDir = base.resolve("requests")
@@ -292,7 +291,6 @@ object TxnLogStore {
       try q.processAllAvailable() finally q.stop()
       snapshotReport(s, root)
     }
-  }
 
   /** Compaction THROUGH the log — the job `store_compaction` plans,
     * executed with transaction-log semantics: the live files of the
@@ -326,8 +324,7 @@ object TxnLogStore {
       .filter(f => f.isDirectory && f.getName != "_log")
       .map(_.getName).toSeq.sorted
     val doomed = onDisk.filterNot(referenced.contains)
-    doomed.foreach(f =>
-      graft.operators.Sync.deleteTree(new java.io.File(s"$root/$f")))
+    doomed.foreach(f => graft.Scratch.delete(java.nio.file.Paths.get(root, f)))
     doomed
   }
 

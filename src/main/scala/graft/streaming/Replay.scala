@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The staged-replay protocol of the `stream_*` parity rows (the two
@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * input files are staged once ([[StageCache]]), stamped so the file
   * source replays them in a fixed order, streamed one file per
   * trigger, and a run's work dir and uncached staging are deleted even
-  * when the run throws. */
+  * when the run throws. A run with no staged input takes its work dir
+  * from `Scratch.within("replay")` directly. */
 private[graft] object Replay {
 
   /** Stamps every file the file source reads under `dirs` (names not
@@ -42,24 +43,15 @@ private[graft] object Replay {
       .option("maxFilesPerTrigger", 1)
       .load(dirs.mkString(s"$base/{", ",", "}"))
 
-  /** Runs `body` in a fresh work dir, deleted when it returns or
-    * throws. */
-  def work[T](body: Path => T): T = {
-    val dir = Files.createTempDirectory("replay")
-    try body(dir) finally graft.operators.Sync.deleteTree(dir.toFile)
-  }
-
   /** Runs `body` over the staging for `key` and a fresh work dir. The
     * staging is built by `build` at most once per cache root, or afresh
     * per run when no cache is set ([[StageCache.resolve]]). The work
-    * dir and an uncached staging are deleted when `body` returns or
-    * throws; a cached staging belongs to the cache. What `body` returns
-    * must not read from either dir: pin it. */
+    * dir and an uncached staging are [[graft.Scratch]] dirs deleted
+    * when `body` returns or throws; a cached staging belongs to the
+    * cache. What `body` returns must not read from either dir: pin
+    * it. */
   def staged[T](key: String)(build: Path => Unit)(
       body: (Path, Path) => T): T =
-    work { dir =>
-      val (in, cached) = StageCache.resolve(key)(build)
-      try body(in, dir)
-      finally if (!cached) graft.operators.Sync.deleteTree(in.toFile)
-    }
+    StageCache.resolve(key)(build)(in =>
+      graft.Scratch.within("replay")(body(in, _)))
 }

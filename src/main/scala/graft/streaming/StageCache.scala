@@ -6,9 +6,10 @@ package graft.streaming
   * much of it re-writing identical fixture parquet per invocation) and
   * the curation funnel's candidate sets ([[staged]]).
   *
-  * The bench main points [[Prop]] at a per-process temp dir; each
-  * row then stages its read-only files ONCE per (row, sf-dir) key and
-  * replays them on every subsequent invocation — exactly the reuse a
+  * Bench and TimeQuery point [[Prop]] at a [[graft.Scratch.held]] dir,
+  * removed with the scratch root at JVM exit; each row then stages its
+  * read-only files ONCE per (row, sf-dir) key and replays them on
+  * every subsequent invocation — exactly the reuse a
   * pipeline owner gets from persisted stage outputs. Mutable surfaces
   * (output stores, checkpoints, staged MVs) are NEVER cached: every
   * run gets a fresh work dir, so results stay bit-identical to the
@@ -61,19 +62,17 @@ object StageCache {
   def materialize(key: String, into: java.nio.file.Path)(
       build: java.nio.file.Path => Unit): Unit =
     sys.props.get(Prop) match {
-      case Some(_) =>
-        val (staged, _) = resolve(key)(build)
-        copyTree(staged, into)
+      case Some(root) => copyTree(cached(root, key)(build), into)
       case None => build(into)
     }
 
   /** For read-only stage OUTPUTS a report can consume in place of a
-    * recompute (the curation funnel's candidate sets): the dir staged
-    * under `key`, built once, when the cache is set; None otherwise,
-    * and the caller recomputes. */
+    * recompute (the curation funnel's candidate sets, the bucketed
+    * archive fixtures): the dir staged under `key`, built once, when
+    * the cache is set; None otherwise, and the caller recomputes. */
   def staged(key: String)(
       build: java.nio.file.Path => Unit): Option[java.nio.file.Path] =
-    sys.props.get(Prop).map(_ => resolve(key)(build)._1)
+    sys.props.get(Prop).map(cached(_, key)(build))
 
   private def copyTree(src: java.nio.file.Path,
       dst: java.nio.file.Path): Unit = {
@@ -94,39 +93,37 @@ object StageCache {
   }
 
   // Per-key build locks: two threads sharing a key must not race the
-  // marker check-then-wipe-then-build — one's deleteTree could destroy
+  // marker check-then-wipe-then-build — one's delete could destroy
   // the other's half-built tree and the marker would then bless a
   // corrupt cache (r14 ADVICE). Bench runs rows serially today, but
   // nothing enforced that contract until this lock did.
   private val keyLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Resolve the staging dir for `key`: under the cache root when the
-    * prop is set (building at most once; concurrent callers of the
-    * same key serialize on a per-key lock), else a fresh temp dir
-    * built unconditionally, and deleted again if its build throws.
-    * Returns (path, cached) — a cached dir must NOT be deleted by the
-    * caller's teardown. */
-  def resolve(key: String)(
-      build: java.nio.file.Path => Unit): (java.nio.file.Path, Boolean) =
+  /** Runs `use` over the staging dir for `key`: under the cache root
+    * when the prop is set (built at most once; concurrent callers of
+    * the same key serialize on a per-key lock), else a fresh
+    * [[graft.Scratch]] dir built for this call and deleted when `use`
+    * returns or throws. */
+  def resolve[T](key: String)(build: java.nio.file.Path => Unit)(
+      use: java.nio.file.Path => T): T =
     sys.props.get(Prop) match {
-      case Some(root) =>
-        keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
-          val dir = java.nio.file.Paths.get(root, key)
-          val marker = dir.resolve("_STAGED")
-          if (!java.nio.file.Files.exists(marker)) {
-            graft.operators.Sync.deleteTree(dir.toFile)
-            java.nio.file.Files.createDirectories(dir)
-            build(dir)
-            java.nio.file.Files.writeString(marker, "ok")
-          }
-          (dir, true)
-        }
+      case Some(root) => use(cached(root, key)(build))
       case None =>
-        val dir = java.nio.file.Files.createTempDirectory("graftstage")
-        try build(dir)
-        catch { case e: Throwable =>
-          graft.operators.Sync.deleteTree(dir.toFile); throw e }
-        (dir, false)
+        graft.Scratch.within("graftstage") { dir => build(dir); use(dir) }
+    }
+
+  private def cached(root: String, key: String)(
+      build: java.nio.file.Path => Unit): java.nio.file.Path =
+    keyLocks.computeIfAbsent(key, _ => new Object).synchronized {
+      val dir = java.nio.file.Paths.get(root, key)
+      val marker = dir.resolve("_STAGED")
+      if (!java.nio.file.Files.exists(marker)) {
+        graft.Scratch.delete(dir)
+        java.nio.file.Files.createDirectories(dir)
+        build(dir)
+        java.nio.file.Files.writeString(marker, "ok")
+      }
+      dir
     }
 }

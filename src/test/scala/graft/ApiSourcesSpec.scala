@@ -6,7 +6,7 @@ import graft.sources.ApiSources
 class ApiSourcesSpec extends SparkSuite(cpus = 2) {
 
   private lazy val jsonPath: String = {
-    val d = Files.createTempDirectory("issues")
+    val d = tempDir("issues")
     val lines = Seq(
       """{"number":1,"title":"Crash on start","user_login":"alice","state":"open","created_at":"2024-01-10T00:00:00Z","updated_at":"2024-02-01T00:00:00Z","labels":["bug"],"body":"It crashes hard.","is_pull_request":false,"html_url":"https://gh.io/r/issues/1"}""",
       """{"number":2,"title":"Add dark mode","user_login":"bob","state":"open","created_at":"2024-01-15T00:00:00Z","updated_at":"2024-03-01T00:00:00Z","labels":[],"body":null,"is_pull_request":true,"html_url":"https://gh.io/r/pull/2"}""",
@@ -35,7 +35,7 @@ class ApiSourcesSpec extends SparkSuite(cpus = 2) {
   }
 
   private lazy val ticketsPath: String = {
-    val d = Files.createTempDirectory("tickets")
+    val d = tempDir("tickets")
     val lines = Seq(
       """{"id":10,"subject":"Login broken","status":"open","priority":"high","type":"incident","requester_id":101,"assignee_id":7,"created_at":"2024-02-01T00:00:00Z","updated_at":"2024-02-02T00:00:00Z","tags":["auth"],"description":"Cannot log in.","comments":[{"author_id":5,"created_at":"2024-02-01T01:00:00Z","public":true,"body":"Looking into it."},{"author_id":6,"created_at":"2024-02-01T02:00:00Z","public":false,"body":"Internal escalation"}]}""",
       """{"id":11,"subject":"Gone","status":"deleted","priority":null,"type":null,"requester_id":102,"assignee_id":null,"created_at":"2024-02-01T00:00:00Z","updated_at":"2024-02-03T00:00:00Z","tags":[],"description":null,"comments":[]}""",
@@ -93,7 +93,7 @@ class ApiSourcesSpec extends SparkSuite(cpus = 2) {
   }
 
   private lazy val articlesPath: String = {
-    val d = Files.createTempDirectory("articles")
+    val d = tempDir("articles")
     val lines = Seq(
       """{"id":301,"title":"Install guide","author_id":42,"section_id":7,"created_at":"2024-03-01T10:00:00Z","updated_at":"2024-03-05T11:00:00Z","vote_sum":5,"vote_count":9,"label_names":["howto"],"body":"<p>Run the <code>installer</code>.</p>","html_url":"https://x.zendesk.com/hc/articles/301"}""",
       """{"id":302,"title":"Empty one","author_id":43,"section_id":8,"created_at":"2024-01-01T00:00:00Z","updated_at":"2024-01-02T00:00:00Z","vote_sum":null,"vote_count":null,"label_names":[],"body":null,"html_url":null}""")
@@ -127,7 +127,7 @@ class ApiSourcesSpec extends SparkSuite(cpus = 2) {
     intercept[IllegalArgumentException] {
       ApiSources.resolveExcludedOrgs(orgs, Seq("Acme", "NoSuchOrg"))
     }
-    val d = Files.createTempDirectory("orgtickets")
+    val d = tempDir("orgtickets")
     Files.writeString(d.resolve("t.jsonl"), Seq(
       """{"id":20,"subject":"In scope","status":"open","priority":null,"type":null,"requester_id":1,"assignee_id":null,"organization_id":102,"created_at":"2024-02-01T00:00:00Z","updated_at":"2024-02-01T00:00:00Z","tags":[],"description":"x","comments":[]}""",
       """{"id":21,"subject":"Excluded","status":"open","priority":null,"type":null,"requester_id":2,"assignee_id":null,"organization_id":101,"created_at":"2024-02-01T00:00:00Z","updated_at":"2024-02-01T00:00:00Z","tags":[],"description":"y","comments":[]}""",
@@ -141,7 +141,7 @@ class ApiSourcesSpec extends SparkSuite(cpus = 2) {
   }
 
   test("comment body preference: plain_body > html_body > body") {
-    val d = Files.createTempDirectory("bodytickets")
+    val d = tempDir("bodytickets")
     Files.writeString(d.resolve("t.jsonl"),
       """{"id":30,"subject":"Pref","status":"open","priority":null,"type":null,"requester_id":1,"assignee_id":null,"created_at":"2024-02-01T00:00:00Z","updated_at":"2024-02-01T00:00:00Z","tags":[],"description":"d","comments":[{"author_id":1,"created_at":"2024-02-01T01:00:00Z","public":true,"plain_body":"PLAIN","html_body":"<p>HTML</p>","body":"RAW"},{"author_id":2,"created_at":"2024-02-01T02:00:00Z","public":true,"html_body":"<p>H2</p>","body":"RAW2"}]}""")
     val (chunks, _) = ApiSources.ingestTickets(spark,

@@ -21,20 +21,18 @@ class CsvSourceSpec extends SparkSuite {
 
   test("quoted comma-bearing titles parse field-exactly") {
     import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("csvspec")
-    try {
-      CsvSource.csvLines(
-        Tables.documents(spark, dir).select("doc_id", "lang", "n_chars")
-          .filter(col("doc_id") === 1))
-        .write.text(s"$base/in")
-      val row = spark.read
-        .schema("doc_id LONG, lang STRING, n_chars LONG, title STRING, _corrupt_record STRING")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(s"$base/in").collect().head
-      assert(row.getAs[String]("title") == "t,1",
-        "the embedded comma must stay inside the quoted field")
-      assert(row.getAs[String]("_corrupt_record") == null)
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    val base = tempDir("csvspec")
+    CsvSource.csvLines(
+      Tables.documents(spark, dir).select("doc_id", "lang", "n_chars")
+        .filter(col("doc_id") === 1))
+      .write.text(s"$base/in")
+    val row = spark.read
+      .schema("doc_id LONG, lang STRING, n_chars LONG, title STRING, _corrupt_record STRING")
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .csv(s"$base/in").collect().head
+    assert(row.getAs[String]("title") == "t,1",
+      "the embedded comma must stay inside the quoted field")
+    assert(row.getAs[String]("_corrupt_record") == null)
   }
 }

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Zero-row parquet copies of the driver tables, with the production
-  * schemas, in a fresh temp dir the caller deletes. */
+  * schemas, written into `base`. */
 object EmptyCorpus {
-  def stage(spark: SparkSession): java.nio.file.Path = {
+  def stage(spark: SparkSession,
+      base: java.nio.file.Path): java.nio.file.Path = {
     val src = "/root/testdata/sf0.001"
-    val base = java.nio.file.Files.createTempDirectory("sf-empty")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$src/$t.parquet").limit(0)
@@ -25,15 +25,15 @@ object EmptyCorpus {
 class EmptyCorpusSpec extends SparkSuite {
 
   test("every registered query runs on an empty corpus") {
-    val emptyDir = EmptyCorpus.stage(spark)
+    val emptyDir = EmptyCorpus.stage(spark, tempDir("sf-empty"))
     val failures =
-      try SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
         try { fn(spark, emptyDir.toString).count(); None }
         catch { case e: Throwable =>
           Some(s"$name: ${e.getClass.getSimpleName}: " +
             s"${Option(e.getMessage).getOrElse("").linesIterator.toSeq.headOption.getOrElse("")}")
         }
-      } finally graft.operators.Sync.deleteTree(emptyDir.toFile)
+      }
     assert(failures.isEmpty,
       s"${failures.length} queries crash on an empty corpus:\n" +
         failures.mkString("\n"))

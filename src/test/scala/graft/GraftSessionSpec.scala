@@ -44,14 +44,12 @@ class GraftSessionSpec extends SparkSuite(cpus = 3) {
   }
 
   test("a local FileSystem write leaves no .crc sidecar") {
-    val dir = Files.createTempDirectory("graftsession")
-    try {
-      val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(new Path(dir.resolve("part").toUri))
-      try out.write("x".getBytes("UTF-8")) finally out.close()
-      assert(Files.exists(dir.resolve("part")))
-      assert(dir.toFile.list().toSeq == Seq("part"))
-    } finally graft.operators.Sync.deleteTree(dir.toFile)
+    val dir = tempDir("graftsession")
+    val fs = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(dir.resolve("part").toUri))
+    try out.write("x".getBytes("UTF-8")) finally out.close()
+    assert(Files.exists(dir.resolve("part")))
+    assert(dir.toFile.list().toSeq == Seq("part"))
   }
 
   test("a second call returns the active session") {

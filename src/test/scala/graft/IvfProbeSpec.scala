@@ -145,7 +145,7 @@ class IvfProbeSpec extends SparkSuite {
     val q = base(5)
     val best = Similarity.topCells(q, idx.seeds, 2)
     // the best cell loses its files before the first probe loads the build
-    Sync.deleteTree(new java.io.File(idx.path, s"cell=${best(0)}"))
+    Scratch.delete(java.nio.file.Paths.get(idx.path, s"cell=${best(0)}"))
     val rest = parity(idx, q, k = 50, nprobe = 2)
     assert(rest.nonEmpty)
     assert(parity(idx, q, nprobe = 1).isEmpty)
@@ -172,7 +172,7 @@ class IvfProbeSpec extends SparkSuite {
     // another writer replaces P with its own build of the first vectors;
     // this process's registry still holds the loaded build of `b`
     val other = build(a)
-    Sync.deleteTree(p.toFile)
+    Scratch.delete(p)
     java.nio.file.Files.move(java.nio.file.Paths.get(other.path), p)
     check(other, a(30))
   }
@@ -195,7 +195,7 @@ class IvfProbeSpec extends SparkSuite {
     val v = ChunkStore.latestVersion(store)
     val (first, firstPage) = contents()
     assert(first.exists(_.contains("first text")) && firstPage == first)
-    Sync.deleteTree(base.toFile)
+    Scratch.delete(base)
     sync("# Second\n\nA second text replaces it.")
     assert(ChunkStore.latestVersion(store) == v)
     val (second, secondPage) = contents()
@@ -262,7 +262,7 @@ class IvfProbeSpec extends SparkSuite {
     (0 until 2).foreach(_ => parity(first, a(30)._2, k = 5, nprobe = IvfNlist))
     assert(isResident(p.toString))
     val other = build(b)
-    Sync.deleteTree(p.toFile)
+    Scratch.delete(p)
     java.nio.file.Files.move(java.nio.file.Paths.get(other.path), p)
     val got = Similarity.probeIvf(spark, p.toString, b(30)._2, k = 5,
       nprobe = IvfNlist).collect().map(_.getLong(0)).toSeq
@@ -276,7 +276,7 @@ class IvfProbeSpec extends SparkSuite {
     val idx = build(base.indices.map(i => i.toLong -> base(i)))
     parity(idx, base(2))
     assert(KnnIndexRegistry.holds(idx.path) && isResident(idx.path))
-    Sync.deleteTree(new java.io.File(idx.path))
+    Scratch.delete(java.nio.file.Paths.get(idx.path))
     val err = intercept[IllegalArgumentException](
       Similarity.probeIvf(spark, idx.path, base(2)))
     assert(err.getMessage.contains("is not an IVF index"))

@@ -12,11 +12,10 @@ class KnnRewriteSpec extends SparkSuite(cpus = 2) {
 
   override def afterAll(): Unit = {
     graft.plans.KnnIndexRegistry.clear()
-    graft.operators.Sync.deleteTree(tmp.toFile)
     super.afterAll()
   }
 
-  private lazy val tmp = java.nio.file.Files.createTempDirectory("knnspec")
+  private lazy val tmp = tempDir("knnspec")
   private lazy val idx = tmp.resolve("ivf").toString
   private val rnd = new scala.util.Random(7)
   private lazy val rows = (0 until 100).map { i =>

@@ -9,7 +9,7 @@ import graft.sources.LocalDirectory
 class LocalDirectorySpec extends SparkSuite(cpus = 2) {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("localdir")
+    val d = tempDir("localdir")
     val sub = Files.createDirectory(d.resolve("sub"))
     Files.writeString(d.resolve("guide.md"),
       "# Guide\n\n" + "Useful words here. " * 40)

@@ -16,7 +16,7 @@ class MatViewSpec extends SparkSuite {
   /** Planted lineitem: orderkey%10 encodes the row's role (7=insert,
     * 3=delete, else kept store row). */
   private lazy val plantedDir: String = {
-    val d = Files.createTempDirectory("mvspec").toString
+    val d = tempDir("mvspec").toString
     import spark.implicits._
     val rows = Seq(
       // group 100: INSERT-ONLY — no store row, MV row must appear
@@ -75,43 +75,41 @@ class MatViewSpec extends SparkSuite {
 
   test("a replayed micro-batch never double-applies its delta") {
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("mvreplay").toString
-    try {
-      import spark.implicits._
-      // store: one group with two rows; the batch inserts one row and
-      // deletes one stored row — replaying it must leave the MV as if
-      // applied once (count 2, not 3/1)
-      val store = Seq(
-        (1L, 10L, 1, 5L, ts("1995-01-01")),
-        (1L, 11L, 1, 7L, ts("1995-02-01")))
-        .toDF("l_partkey", "l_orderkey", "l_linenumber", "qty",
-          "l_shipdate")
-      store.write.parquet(s"$base/store0")
-      store.groupBy("l_partkey").agg(
-        count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
-        min(col("l_shipdate")).as("min_ship"),
-        max(col("l_shipdate")).as("max_ship"))
-        .write.parquet(s"$base/mv/v0")
-      store.select("l_orderkey", "l_linenumber").limit(0)
-        .write.parquet(s"$base/dels/b_init")
-      store.limit(0).write.parquet(s"$base/adds/b_init")
-      val batch = Seq(
-        (1L, 17L, 1, 3L, ts("1996-01-01"), 1L),
-        (1L, 10L, 1, 5L, ts("1995-01-01"), -1L))
-        .toDF("l_partkey", "l_orderkey", "l_linenumber", "qty",
-          "l_shipdate", "sgn")
-      MatView.mvApplyBatch(spark, base, batch, 0L)
-      val once = spark.read.parquet(s"$base/mv/v1").collect().toSeq
-      // the replay: same batch, same id — Spark retries deliver exactly
-      // this shape after a foreachBatch failure
-      MatView.mvApplyBatch(spark, base, batch, 0L)
-      val twice = spark.read.parquet(s"$base/mv/v1").collect().toSeq
-      assert(once == twice, "replay double-applied the delta")
-      assert(once.head.getAs[Long]("n_rows") == 2L)
-      assert(once.head.getAs[Long]("sum_qty") == 10L)
-      // tombstone log holds the delete exactly once
-      assert(spark.read.option("recursiveFileLookup", "true")
-        .parquet(s"$base/dels").count() == 1L)
-    } finally graft.operators.Sync.deleteTree(new java.io.File(base))
+    val base = tempDir("mvreplay").toString
+    import spark.implicits._
+    // store: one group with two rows; the batch inserts one row and
+    // deletes one stored row — replaying it must leave the MV as if
+    // applied once (count 2, not 3/1)
+    val store = Seq(
+      (1L, 10L, 1, 5L, ts("1995-01-01")),
+      (1L, 11L, 1, 7L, ts("1995-02-01")))
+      .toDF("l_partkey", "l_orderkey", "l_linenumber", "qty",
+        "l_shipdate")
+    store.write.parquet(s"$base/store0")
+    store.groupBy("l_partkey").agg(
+      count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"),
+      min(col("l_shipdate")).as("min_ship"),
+      max(col("l_shipdate")).as("max_ship"))
+      .write.parquet(s"$base/mv/v0")
+    store.select("l_orderkey", "l_linenumber").limit(0)
+      .write.parquet(s"$base/dels/b_init")
+    store.limit(0).write.parquet(s"$base/adds/b_init")
+    val batch = Seq(
+      (1L, 17L, 1, 3L, ts("1996-01-01"), 1L),
+      (1L, 10L, 1, 5L, ts("1995-01-01"), -1L))
+      .toDF("l_partkey", "l_orderkey", "l_linenumber", "qty",
+        "l_shipdate", "sgn")
+    MatView.mvApplyBatch(spark, base, batch, 0L)
+    val once = spark.read.parquet(s"$base/mv/v1").collect().toSeq
+    // the replay: same batch, same id — Spark retries deliver exactly
+    // this shape after a foreachBatch failure
+    MatView.mvApplyBatch(spark, base, batch, 0L)
+    val twice = spark.read.parquet(s"$base/mv/v1").collect().toSeq
+    assert(once == twice, "replay double-applied the delta")
+    assert(once.head.getAs[Long]("n_rows") == 2L)
+    assert(once.head.getAs[Long]("sum_qty") == 10L)
+    // tombstone log holds the delete exactly once
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$base/dels").count() == 1L)
   }
 }

@@ -568,32 +568,30 @@ class PlanAuditSpec extends SparkSuite {
     // the src_scan_orc read side: of 5 lang partition dirs only the 2
     // selected ones may reach IO, and the row-level predicate must be
     // pushed to the ORC reader rather than filtered post-scan
-    val base = java.nio.file.Files.createTempDirectory("orcplan")
-    try {
-      graft.Tables.documents(spark, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          split(col("text"), " ", -1).as("tokens"), col("lang"))
-        .write.partitionBy("lang").orc(s"$base/in")
-      // the scan stage alone (same read+filter the full query plans;
-      // the aggregate on top would wrap the plan in AQE and hide the
-      // FileSourceScanExec from collectLeaves)
-      val df = spark.read.orc(s"$base/in")
-        .filter(col("lang").isin("en", "fr") && col("n_chars") >= 200)
-      df.count()
-      val scan = df.queryExecution.executedPlan.collectLeaves()
-        .collectFirst {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.getOrElse(fail("no FileSourceScanExec in the plan"))
-      val pf = scan.partitionFilters.mkString(";")
-      assert(pf.contains("lang"),
-        s"lang must reach the scan's PartitionFilters: $pf")
-      assert(scan.selectedPartitions.partitionCount == 2,
-        s"expected 2 pruned lang partitions, scanned " +
-          s"${scan.selectedPartitions.partitionCount}")
-      assert(scan.metadata.get("PushedFilters").exists(
-          _.contains("GreaterThanOrEqual(n_chars,200)")),
-        s"n_chars predicate not pushed: ${scan.metadata.get("PushedFilters")}")
-    } finally graft.operators.Sync.deleteTree(base.toFile)
+    val base = tempDir("orcplan")
+    graft.Tables.documents(spark, dir)
+      .select(col("doc_id"), col("source"), col("n_chars"),
+        split(col("text"), " ", -1).as("tokens"), col("lang"))
+      .write.partitionBy("lang").orc(s"$base/in")
+    // the scan stage alone (same read+filter the full query plans;
+    // the aggregate on top would wrap the plan in AQE and hide the
+    // FileSourceScanExec from collectLeaves)
+    val df = spark.read.orc(s"$base/in")
+      .filter(col("lang").isin("en", "fr") && col("n_chars") >= 200)
+    df.count()
+    val scan = df.queryExecution.executedPlan.collectLeaves()
+      .collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }.getOrElse(fail("no FileSourceScanExec in the plan"))
+    val pf = scan.partitionFilters.mkString(";")
+    assert(pf.contains("lang"),
+      s"lang must reach the scan's PartitionFilters: $pf")
+    assert(scan.selectedPartitions.partitionCount == 2,
+      s"expected 2 pruned lang partitions, scanned " +
+        s"${scan.selectedPartitions.partitionCount}")
+    assert(scan.metadata.get("PushedFilters").exists(
+        _.contains("GreaterThanOrEqual(n_chars,200)")),
+      s"n_chars predicate not pushed: ${scan.metadata.get("PushedFilters")}")
   }
 
   test("emb_knn_rewrite: the optimizer rule prunes the index scan to " +

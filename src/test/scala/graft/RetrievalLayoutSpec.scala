@@ -14,89 +14,77 @@ class RetrievalLayoutSpec extends SparkSuite {
 
   test("bm25: a doc saturated in the query term outranks a longer diluted one") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bm25").toString
-    try {
-      // doc 1: short, dense in "spark"; doc 2: long, one mention; doc 3
-      // has none. Under any BM25 parametrization 1 > 2 and 3 is absent.
-      val docs = Seq(
-        (1L, "spark spark spark join", "en", "s", 22L),
-        (2L, ("filler " * 40).trim + " spark", "en", "s", 286L),
-        (3L, "row scan table batch", "en", "s", 20L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val out = Retrieval.bm25Search(spark, tmp)
-        .filter($"query_id" === 0L).collect()
-      val ranked = out.sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("doc_id"))
-      assert(ranked.head == 1L)
-      assert(ranked.contains(2L) && !ranked.contains(3L))
-      // scores strictly ordered and positive
-      val scores = out.sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("score"))
-      assert(scores.sameElements(scores.sorted.reverse) && scores.last > 0)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("bm25").toString
+    // doc 1: short, dense in "spark"; doc 2: long, one mention; doc 3
+    // has none. Under any BM25 parametrization 1 > 2 and 3 is absent.
+    val docs = Seq(
+      (1L, "spark spark spark join", "en", "s", 22L),
+      (2L, ("filler " * 40).trim + " spark", "en", "s", 286L),
+      (3L, "row scan table batch", "en", "s", 20L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = Retrieval.bm25Search(spark, tmp)
+      .filter($"query_id" === 0L).collect()
+    val ranked = out.sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("doc_id"))
+    assert(ranked.head == 1L)
+    assert(ranked.contains(2L) && !ranked.contains(3L))
+    // scores strictly ordered and positive
+    val scores = out.sortBy(_.getAs[Long]("rank")).map(_.getAs[Long]("score"))
+    assert(scores.sameElements(scores.sorted.reverse) && scores.last > 0)
   }
 
   test("bm25: idf punishes ubiquitous terms — rarer term dominates the sum") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bm25b").toString
-    try {
-      // "customer" appears in every doc (df=N), "query" in doc 5 only.
-      val docs = (1L to 5L).map { i =>
-        val t = if (i == 5L) "customer query alpha" else "customer beta gamma"
-        (i, t, "en", "s", t.length.toLong)
-      }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val out = Retrieval.bm25Search(spark, tmp)
-        .filter($"query_id" === 2L).collect()
-        .sortBy(_.getAs[Long]("rank"))
-      assert(out.head.getAs[Long]("doc_id") == 5L)
-      assert(out.head.getAs[Long]("matched_terms") == 2L)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("bm25b").toString
+    // "customer" appears in every doc (df=N), "query" in doc 5 only.
+    val docs = (1L to 5L).map { i =>
+      val t = if (i == 5L) "customer query alpha" else "customer beta gamma"
+      (i, t, "en", "s", t.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = Retrieval.bm25Search(spark, tmp)
+      .filter($"query_id" === 2L).collect()
+      .sortBy(_.getAs[Long]("rank"))
+    assert(out.head.getAs[Long]("doc_id") == 5L)
+    assert(out.head.getAs[Long]("matched_terms") == 2L)
   }
 
   test("persisted lexical index: term pushdown + parity with the inline row") {
     import graft.operators.Retrieval
-    val tmp = java.nio.file.Files.createTempDirectory("lex").toString
-    try {
-      Retrieval.buildLexicalIndex(spark, sf, tmp)
-      // the query-time contract: a term filter reaches the postings
-      // parquet scan as a pushed In-filter (row-group skipping works
-      // because the build clustered postings by term)
-      val probe = spark.read.parquet(s"$tmp/postings")
-        .filter(col("term").isin("spark", "join"))
-      val plan = probe.queryExecution.executedPlan.toString
-      assert(plan.contains("PushedFilters") && plan.contains("In(term"),
-        plan.take(2000))
-      // and the persisted path scores bit-identically to the inline row
-      val inline = Retrieval.bm25Search(spark, sf).collect().toSeq
-      val indexed = Retrieval.bm25SearchIndexed(spark, sf).collect().toSeq
-      assert(indexed == inline)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("lex").toString
+    Retrieval.buildLexicalIndex(spark, sf, tmp)
+    // the query-time contract: a term filter reaches the postings
+    // parquet scan as a pushed In-filter (row-group skipping works
+    // because the build clustered postings by term)
+    val probe = spark.read.parquet(s"$tmp/postings")
+      .filter(col("term").isin("spark", "join"))
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("PushedFilters") && plan.contains("In(term"),
+      plan.take(2000))
+    // and the persisted path scores bit-identically to the inline row
+    val inline = Retrieval.bm25Search(spark, sf).collect().toSeq
+    val indexed = Retrieval.bm25SearchIndexed(spark, sf).collect().toSeq
+    assert(indexed == inline)
   }
 
   test("phrase search: order- and adjacency-sensitive, counts overlaps") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("phr").toString
-    try {
-      // query 0 is the phrase "table hash"
-      val docs = Seq(
-        (1L, "x table hash y", "en", "s", 0L),          // 1 occurrence
-        (2L, "x hash table y", "en", "s", 0L),          // reversed: none
-        (3L, "table x hash", "en", "s", 0L),            // gapped: none
-        (4L, "table hash z table hash", "en", "s", 0L)) // 2 occurrences
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val out = graft.operators.Retrieval.phraseSearch(spark, tmp)
-        .filter($"query_id" === 0L).collect()
-      val byDoc = out.map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[Long]("n_occurrences")).toMap
-      assert(byDoc == Map(1L -> 1L, 4L -> 2L), s"got $byDoc")
-      // rank 1 is the doc with more occurrences
-      assert(out.minBy(_.getAs[Long]("rank")).getAs[Long]("doc_id") == 4L)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("phr").toString
+    // query 0 is the phrase "table hash"
+    val docs = Seq(
+      (1L, "x table hash y", "en", "s", 0L),          // 1 occurrence
+      (2L, "x hash table y", "en", "s", 0L),          // reversed: none
+      (3L, "table x hash", "en", "s", 0L),            // gapped: none
+      (4L, "table hash z table hash", "en", "s", 0L)) // 2 occurrences
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = graft.operators.Retrieval.phraseSearch(spark, tmp)
+      .filter($"query_id" === 0L).collect()
+    val byDoc = out.map(r => r.getAs[Long]("doc_id") ->
+      r.getAs[Long]("n_occurrences")).toMap
+    assert(byDoc == Map(1L -> 1L, 4L -> 2L), s"got $byDoc")
+    // rank 1 is the doc with more occurrences
+    assert(out.minBy(_.getAs[Long]("rank")).getAs[Long]("doc_id") == 4L)
   }
 
   test("bm25 on fixture: 3 queries, k rows each, ranks contiguous") {
@@ -112,53 +100,47 @@ class RetrievalLayoutSpec extends SparkSuite {
 
   test("substring spans: shared run at DIFFERENT offsets is found in both docs") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sub").toString
-    try {
-      val shared = "identical boilerplate run shared across both documents here"
-      // offsets differ by 7 — stride-k sampling would miss this; the
-      // content-defined mod-p sampling must not.
-      val docs = Seq(
-        (1L, s"aaaaaa $shared unique-tail-one-x", "en", "s", 0L),
-        (2L, s"bbbbbbbbbbbbb $shared unique-tail-two-y", "en", "s", 0L),
-        (3L, "completely unrelated text with no forty char overlap at all",
-          "en", "s", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val spans = Dedup.substringSpans(spark, tmp).collect()
-      val byDoc = spans.groupBy(_.getAs[Long]("doc_id"))
-      assert(byDoc.contains(1L) && byDoc.contains(2L))
-      assert(!byDoc.contains(3L))
-      // every reported span must lie inside the shared run's extent in
-      // its doc (start/end measured on the staged text), and be >= W
-      val w = Dedup.SubstrWindow
-      spans.filter(r => Set(1L, 2L)(r.getAs[Long]("doc_id"))).foreach { r =>
-        assert(r.getAs[Long]("span_chars") >= w)
-      }
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("sub").toString
+    val shared = "identical boilerplate run shared across both documents here"
+    // offsets differ by 7 — stride-k sampling would miss this; the
+    // content-defined mod-p sampling must not.
+    val docs = Seq(
+      (1L, s"aaaaaa $shared unique-tail-one-x", "en", "s", 0L),
+      (2L, s"bbbbbbbbbbbbb $shared unique-tail-two-y", "en", "s", 0L),
+      (3L, "completely unrelated text with no forty char overlap at all",
+        "en", "s", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val spans = Dedup.substringSpans(spark, tmp).collect()
+    val byDoc = spans.groupBy(_.getAs[Long]("doc_id"))
+    assert(byDoc.contains(1L) && byDoc.contains(2L))
+    assert(!byDoc.contains(3L))
+    // every reported span must lie inside the shared run's extent in
+    // its doc (start/end measured on the staged text), and be >= W
+    val w = Dedup.SubstrWindow
+    spans.filter(r => Set(1L, 2L)(r.getAs[Long]("doc_id"))).foreach { r =>
+      assert(r.getAs[Long]("span_chars") >= w)
+    }
   }
 
   test("substring spans: islands merge overlapping marks into one span") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sub2").toString
-    try {
-      // Two docs IDENTICAL for 120 chars: every sampled window in the
-      // run duplicates, so per doc all marks merge into ONE span
-      // covering (at least) the sampled extent — never 2+ spans inside
-      // a contiguous duplicated run.
-      val run = ("z " * 10) + "the exact same one hundred twenty char " +
-        "prefix including several sampled windows in sequence padded out"
-      val docs = Seq(
-        (1L, run + " tail-a", "en", "s", 0L),
-        (2L, run + " tail-b", "en", "s", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val spans = Dedup.substringSpans(spark, tmp).collect()
-      val d1 = spans.filter(_.getAs[Long]("doc_id") == 1L)
-      assert(d1.length == 1, s"expected one merged span, got ${d1.toSeq}")
-      assert(d1.head.getAs[Long]("span_chars") >= Dedup.SubstrWindow)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("sub2").toString
+    // Two docs IDENTICAL for 120 chars: every sampled window in the
+    // run duplicates, so per doc all marks merge into ONE span
+    // covering (at least) the sampled extent — never 2+ spans inside
+    // a contiguous duplicated run.
+    val run = ("z " * 10) + "the exact same one hundred twenty char " +
+      "prefix including several sampled windows in sequence padded out"
+    val docs = Seq(
+      (1L, run + " tail-a", "en", "s", 0L),
+      (2L, run + " tail-b", "en", "s", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val spans = Dedup.substringSpans(spark, tmp).collect()
+    val d1 = spans.filter(_.getAs[Long]("doc_id") == 1L)
+    assert(d1.length == 1, s"expected one merged span, got ${d1.toSeq}")
+    assert(d1.head.getAs[Long]("span_chars") >= Dedup.SubstrWindow)
   }
 
   test("substring spans on fixture: planted doc_id%7 boilerplate detected") {
@@ -180,47 +162,44 @@ class RetrievalLayoutSpec extends SparkSuite {
 
   test("substring delta: batch-store dup reported, batch-batch dup is not") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("subd").toString
-    try {
-      val storeRun = "store boilerplate run shared with one batch document xx"
-      val batchRun = "batch only duplicated run never seen in the store zzzz"
-      val pad = "p" // keep ids: max=25, cut=20 → batch = 20..25
-      val docs = ((1L to 19L).map { i =>
-        val t = if (i == 3L) s"store doc three $storeRun tail-$i"
-        else s"unique store content number $i with no shared windows $pad"
-        (i, t)
-      } ++ Seq(
-        // NB ids 21 = 3·7 carries the operator's planted %7 boilerplate
-        // (shared with store docs 7/14) — keep the batch-only twins on
-        // non-multiples of 7 so their only shared run is batchRun
-        20L -> s"batch doc twenty nothing shared here at all ${pad * 30}",
-        21L -> s"plain batch doc twenty one with its own words ${pad * 40}",
-        22L -> s"first batch twin $batchRun end-a",
-        23L -> s"batch doc hitting the store $storeRun end-c",
-        24L -> s"second batch twin extra prefix $batchRun end-b",
-        25L -> s"final plain batch doc unlike anything else ${pad * 50}"))
-        .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val tmp = tempDir("subd").toString
+    val storeRun = "store boilerplate run shared with one batch document xx"
+    val batchRun = "batch only duplicated run never seen in the store zzzz"
+    val pad = "p" // keep ids: max=25, cut=20 → batch = 20..25
+    val docs = ((1L to 19L).map { i =>
+      val t = if (i == 3L) s"store doc three $storeRun tail-$i"
+      else s"unique store content number $i with no shared windows $pad"
+      (i, t)
+    } ++ Seq(
+      // NB ids 21 = 3·7 carries the operator's planted %7 boilerplate
+      // (shared with store docs 7/14) — keep the batch-only twins on
+      // non-multiples of 7 so their only shared run is batchRun
+      20L -> s"batch doc twenty nothing shared here at all ${pad * 30}",
+      21L -> s"plain batch doc twenty one with its own words ${pad * 40}",
+      22L -> s"first batch twin $batchRun end-a",
+      23L -> s"batch doc hitting the store $storeRun end-c",
+      24L -> s"second batch twin extra prefix $batchRun end-b",
+      25L -> s"final plain batch doc unlike anything else ${pad * 50}"))
+      .map { case (i, t) => (i, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
 
-      val delta = graft.operators.Dedup.substringSpansDelta(spark, tmp)
-        .collect()
-      val deltaDocs = delta.map(_.getAs[Long]("doc_id")).toSet
-      // doc 23 shares a run with STORE doc 3 → must be reported
-      assert(deltaDocs.contains(23L), s"got $deltaDocs")
-      // docs 22/24 share a run only with EACH OTHER (both in batch) →
-      // the delta pass must NOT report them (store is the only probe)
-      assert(!deltaDocs.contains(22L) && !deltaDocs.contains(24L),
-        s"batch-internal dup leaked into delta: $deltaDocs")
-      // and everything reported is a batch doc
-      assert(deltaDocs.forall(_ >= 20L))
-      // the full pass DOES see the batch-batch twins — the delta's
-      // exclusion is scope, not blindness
-      val full = graft.operators.Dedup.substringSpans(spark, tmp)
-        .collect().map(_.getAs[Long]("doc_id")).toSet
-      assert(full.contains(22L) && full.contains(24L))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val delta = graft.operators.Dedup.substringSpansDelta(spark, tmp)
+      .collect()
+    val deltaDocs = delta.map(_.getAs[Long]("doc_id")).toSet
+    // doc 23 shares a run with STORE doc 3 → must be reported
+    assert(deltaDocs.contains(23L), s"got $deltaDocs")
+    // docs 22/24 share a run only with EACH OTHER (both in batch) →
+    // the delta pass must NOT report them (store is the only probe)
+    assert(!deltaDocs.contains(22L) && !deltaDocs.contains(24L),
+      s"batch-internal dup leaked into delta: $deltaDocs")
+    // and everything reported is a batch doc
+    assert(deltaDocs.forall(_ >= 20L))
+    // the full pass DOES see the batch-batch twins — the delta's
+    // exclusion is scope, not blindness
+    val full = graft.operators.Dedup.substringSpans(spark, tmp)
+      .collect().map(_.getAs[Long]("doc_id")).toSet
+    assert(full.contains(22L) && full.contains(24L))
   }
 
   test("substring apply stats reconcile with the span rows") {
@@ -265,28 +244,25 @@ class RetrievalLayoutSpec extends SparkSuite {
 
   test("CMS: colliding terms inflate the estimate, min-over-rows bounds it") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("cms").toString
-    try {
-      // 300 distinct rare terms spread over 256 buckets/row force
-      // collisions with the two heavy terms in SOME row; the min over
-      // 4 rows must still keep every estimate >= exact (one-sided).
-      val rare = (1 to 300).map(i => s"rare$i").mkString(" ")
-      val docs = Seq(
-        (1L, ("heavy " * 50).trim, "en", "s", 0L),
-        (2L, ("common " * 30).trim + " " + rare, "en", "s", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val out = graft.operators.TextAnalysis.cmsHeavyHitters(spark, tmp)
-        .collect()
-      val byTerm = out.map(r => r.getAs[String]("term") ->
-        (r.getAs[Long]("exact_count"), r.getAs[Long]("est_count"))).toMap
-      assert(byTerm("heavy") == ((50L, byTerm("heavy")._2)))
-      assert(byTerm("heavy")._2 >= 50L && byTerm("common")._2 >= 30L)
-      // sketch never undercounts any probed term
-      out.foreach(r =>
-        assert(r.getAs[Long]("overcount") >= 0L))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("cms").toString
+    // 300 distinct rare terms spread over 256 buckets/row force
+    // collisions with the two heavy terms in SOME row; the min over
+    // 4 rows must still keep every estimate >= exact (one-sided).
+    val rare = (1 to 300).map(i => s"rare$i").mkString(" ")
+    val docs = Seq(
+      (1L, ("heavy " * 50).trim, "en", "s", 0L),
+      (2L, ("common " * 30).trim + " " + rare, "en", "s", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = graft.operators.TextAnalysis.cmsHeavyHitters(spark, tmp)
+      .collect()
+    val byTerm = out.map(r => r.getAs[String]("term") ->
+      (r.getAs[Long]("exact_count"), r.getAs[Long]("est_count"))).toMap
+    assert(byTerm("heavy") == ((50L, byTerm("heavy")._2)))
+    assert(byTerm("heavy")._2 >= 50L && byTerm("common")._2 >= 30L)
+    // sketch never undercounts any probed term
+    out.foreach(r =>
+      assert(r.getAs[Long]("overcount") >= 0L))
   }
 
   // ── Compaction planner ───────────────────────────────────────────────
@@ -548,24 +524,21 @@ class RetrievalLayoutSpec extends SparkSuite {
 
   test("ngram LM: scrambled doc scores more surprising than fluent twin") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("lm").toString
-    try {
-      // 8 fluent docs repeat the same word order; doc 9 uses the same
-      // words in a transition order seen nowhere else.
-      val fluent = "alpha beta gamma delta alpha beta gamma delta"
-      val docs = ((1L to 8L).map(i => (i, fluent, "en", "s", 0L)) :+
-        (9L, "delta beta alpha gamma delta gamma beta alpha", "en", "s", 0L))
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val out = TextAnalysis.ngramLm(spark, tmp).collect()
-        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("lm_score_micro"))
-        .toMap
-      assert(out(9L) > out(1L),
-        s"scrambled ${out(9L)} should exceed fluent ${out(1L)}")
-      // fluent docs all share one score
-      assert((1L to 8L).map(out).toSet.size == 1)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(tmp))
+    val tmp = tempDir("lm").toString
+    // 8 fluent docs repeat the same word order; doc 9 uses the same
+    // words in a transition order seen nowhere else.
+    val fluent = "alpha beta gamma delta alpha beta gamma delta"
+    val docs = ((1L to 8L).map(i => (i, fluent, "en", "s", 0L)) :+
+      (9L, "delta beta alpha gamma delta gamma beta alpha", "en", "s", 0L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val out = TextAnalysis.ngramLm(spark, tmp).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("lm_score_micro"))
+      .toMap
+    assert(out(9L) > out(1L),
+      s"scrambled ${out(9L)} should exceed fluent ${out(1L)}")
+    // fluent docs all share one score
+    assert((1L to 8L).map(out).toSet.size == 1)
   }
 
   // ── Hybrid RRF fusion ────────────────────────────────────────────────

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class SitemapSourceV2Spec extends SparkSuite(cpus = 2) {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("sitemaps")
+    val d = tempDir("sitemaps")
     Files.writeString(d.resolve("idx.xml"),
       "<sitemapindex><sitemap><loc>part1</loc></sitemap>" +
         "<sitemap><loc>part2</loc></sitemap></sitemapindex>")

@@ -185,7 +185,7 @@ class SparkE2ESpec extends SparkSuite {
   }
 
   test("streaming session windows: gap-merged sessions with bounded state") {
-    val tmp = java.nio.file.Files.createTempDirectory("evsess").toString
+    val tmp = tempDir("evsess").toString
     Tables.events(spark, "/root/testdata/sf0.001")
       .limit(500).coalesce(1).write.mode("overwrite").parquet(tmp)
     val q = EventStream.sessionWindows(
@@ -203,7 +203,7 @@ class SparkE2ESpec extends SparkSuite {
   }
 
   test("stateful streaming: per-user session state via flatMapGroupsWithState") {
-    val tmp = java.nio.file.Files.createTempDirectory("evstate").toString
+    val tmp = tempDir("evstate").toString
     Tables.events(spark, "/root/testdata/sf0.001")
       .limit(400).coalesce(1).write.mode("overwrite").parquet(tmp)
     val q = EventStream.sessionStates(spark,
@@ -239,7 +239,7 @@ class SparkE2ESpec extends SparkSuite {
     assert(ev.startsWith("""{"event":"run-summary","ts":"2024-03-01T00:00:00Z","sources":["""))
     assert(ev.contains(""""counters":{"""))
     // durable channel reads back as a table, appends accumulate
-    val dir = java.nio.file.Files.createTempDirectory("runlog").toString + "/log"
+    val dir = tempDir("runlog").toString + "/log"
     RunSummary.appendJsonl(stats, dir)
     RunSummary.appendJsonl(RunSummary.sourceStats(counters, "DocsSite",
       "website", "1.0", 2000L, ok = false, error = Some("net")), dir)
@@ -456,7 +456,7 @@ class SparkE2ESpec extends SparkSuite {
   test("streaming curation: gate filters, span index dedups across micro-batches") {
     import spark.implicits._
     import graft.streaming.CurationStream
-    val base = java.nio.file.Files.createTempDirectory("curstream")
+    val base = tempDir("curstream")
     val in = base.resolve("in").toString
     val idx = base.resolve("idx").toString
     val kept = base.resolve("kept").toString
@@ -888,7 +888,7 @@ class SparkE2ESpec extends SparkSuite {
   }
 
   test("stream-stream interval join matches the batch interval join") {
-    val tmp = java.nio.file.Files.createTempDirectory("evjoin").toString
+    val tmp = tempDir("evjoin").toString
     val slice = Tables.events(spark, "/root/testdata/sf0.001").limit(600)
     slice.coalesce(1).write.mode("overwrite").parquet(tmp)
     val q = EventStream.clickErrorJoin(EventStream.readEvents(spark, tmp))
@@ -911,7 +911,7 @@ class SparkE2ESpec extends SparkSuite {
   }
 
   test("streaming dedup within watermark drops re-delivered events") {
-    val tmp = java.nio.file.Files.createTempDirectory("evdup").toString
+    val tmp = tempDir("evdup").toString
     val slice = Tables.events(spark, "/root/testdata/sf0.001").limit(300)
     // every event delivered twice (the at-least-once re-delivery case)
     slice.unionAll(slice).coalesce(1).write.mode("overwrite").parquet(tmp)

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * from [[GraftSession.local]], stopped in `afterAll`, so the tests run
   * the SQL and filesystem configuration the entry points run. `conf`
   * adds suite-specific settings, such as a warehouse dir. Directories
-  * from [[tempDir]] are deleted in `afterAll`, after the session stops. */
+  * from [[tempDir]] are [[Scratch]] dirs, deleted in `afterAll`, after
+  * the session stops. */
 abstract class SparkSuite(cpus: Int = 4, conf: Seq[(String, String)] = Nil)
     extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -19,12 +20,12 @@ abstract class SparkSuite(cpus: Int = 4, conf: Seq[(String, String)] = Nil)
 
   /** A fresh temp directory, deleted when the suite ends. */
   def tempDir(prefix: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
+    val d = Scratch.held(prefix)
     tempDirs += d
     d
   }
 
   override def afterAll(): Unit =
     try spark.stop()
-    finally tempDirs.foreach(d => graft.operators.Sync.deleteTree(d.toFile))
+    finally tempDirs.foreach(Scratch.delete)
 }

@@ -97,7 +97,7 @@ class StatsSpec extends SparkSuite {
 
   test("total_len and null accounting are exact on a planted column") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("statsspec").toString
+    val d = tempDir("statsspec").toString
     Seq((1L, "aa"), (2L, null), (3L, "bbbb")).toDF("n_nationkey", "n_name")
       .withColumn("n_regionkey", org.apache.spark.sql.functions.lit(0L))
       .write.parquet(s"$d/nation.parquet")

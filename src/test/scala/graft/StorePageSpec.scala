@@ -178,7 +178,7 @@ class StorePageSpec extends SparkSuite(cpus = 2,
     val head = new java.io.File(root, "_log/00000.json").toPath
     val (time, size) = (java.nio.file.Files.getLastModifiedTime(head),
       java.nio.file.Files.size(head))
-    graft.operators.Sync.deleteTree(new java.io.File(root))
+    Scratch.delete(java.nio.file.Paths.get(root))
     upsert(root, doc("doc://a", 2, "two"))
     // the clock that stamps files is coarse: two stores made within one
     // tick have the same head version, length and time
@@ -281,7 +281,7 @@ class StorePageSpec extends SparkSuite(cpus = 2,
     val stored = ChunkStore.readLatest(spark, root).get
     assert(ChunkStore.residentPage(stored, "doc://a", None).isDefined)
     assert(room() < before)
-    graft.operators.Sync.deleteTree(base.toFile)
+    Scratch.delete(base)
     assert(room() == before)
     assert(ChunkStore.residentPage(stored, "doc://a", None).isEmpty)
   }

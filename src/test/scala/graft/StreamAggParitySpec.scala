@@ -28,7 +28,7 @@ class StreamAggParitySpec extends SparkSuite {
       EventStream.streamFullOuterJoinParity,
       EventStream.streamRightOuterJoinParity,
       EventStream.streamEnrichParity)
-    val cache = java.nio.file.Files.createTempDirectory("stagecache")
+    val cache = tempDir("stagecache")
     sys.props(StageCache.Prop) = cache.toString
     def tree(f: java.io.File): Seq[(String, Long)] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten
@@ -48,10 +48,7 @@ class StreamAggParitySpec extends SparkSuite {
       assert(first == second, "cached replay changed a result")
       assert(tree(cache.toFile) == stamps,
         "the second round re-staged the cached inputs")
-    } finally {
-      sys.props.remove(StageCache.Prop)
-      graft.operators.Sync.deleteTree(cache.toFile)
-    }
+    } finally sys.props.remove(StageCache.Prop)
   }
 
   test("streaming dedup: planted duplicates are suppressed exactly") {
@@ -59,7 +56,7 @@ class StreamAggParitySpec extends SparkSuite {
     // the oracle row would pass vacuously), and the deduped output
     // must equal the batch distinct of the real events bit-for-bit
     import graft.streaming.{EventStream, StageCache}
-    val cache = java.nio.file.Files.createTempDirectory("dedupcache")
+    val cache = tempDir("dedupcache")
     sys.props(StageCache.Prop) = cache.toString
     try {
       val out = EventStream.streamDedupParity(spark, dir)
@@ -91,10 +88,7 @@ class StreamAggParitySpec extends SparkSuite {
       assert(out.exceptAll(expected).isEmpty &&
         expected.exceptAll(out).isEmpty,
         "deduped stream differs from the batch distinct")
-    } finally {
-      sys.props.remove(StageCache.Prop)
-      graft.operators.Sync.deleteTree(cache.toFile)
-    }
+    } finally sys.props.remove(StageCache.Prop)
   }
 
   test("rocksdb state backend emits bit-identical windowed results") {
@@ -103,7 +97,7 @@ class StreamAggParitySpec extends SparkSuite {
     // the provider REQUIRE inside the run pins that RocksDB was
     // actually used, so this cannot pass via a silent fallback
     import graft.streaming.{EventStream, StageCache}
-    val cache = java.nio.file.Files.createTempDirectory("rockscache")
+    val cache = tempDir("rockscache")
     sys.props(StageCache.Prop) = cache.toString
     try {
       val default = EventStream.streamWindowParity(spark, dir)
@@ -112,10 +106,7 @@ class StreamAggParitySpec extends SparkSuite {
         .collect().toSeq
       assert(rocks == default,
         "RocksDB-backed run differs from the default-backend run")
-    } finally {
-      sys.props.remove(StageCache.Prop)
-      graft.operators.Sync.deleteTree(cache.toFile)
-    }
+    } finally sys.props.remove(StageCache.Prop)
   }
 
   test("late replay drops exactly the late slice, nothing else") {
@@ -125,7 +116,7 @@ class StreamAggParitySpec extends SparkSuite {
     // aggregate over everything EXCEPT slice 1 — total row weight
     // n(batch_all) - n(slice1)
     import graft.streaming.{EventStream, StageCache}
-    val cache = java.nio.file.Files.createTempDirectory("latecache")
+    val cache = tempDir("latecache")
     sys.props(StageCache.Prop) = cache.toString
     try {
       val out = EventStream.streamLateParity(spark, dir)
@@ -147,10 +138,7 @@ class StreamAggParitySpec extends SparkSuite {
         "slice 1 must be entirely older than the already-played slice 2")
       assert(emitted == nReal - nLate,
         s"emitted weight $emitted != all $nReal minus late $nLate")
-    } finally {
-      sys.props.remove(StageCache.Prop)
-      graft.operators.Sync.deleteTree(cache.toFile)
-    }
+    } finally sys.props.remove(StageCache.Prop)
   }
 
   test("a regenerated corpus at the same path forces a re-stage") {
@@ -160,15 +148,15 @@ class StreamAggParitySpec extends SparkSuite {
     // fingerprint, so mutation at the same path changes the key.
     import graft.streaming.StageCache
     import java.nio.file.Files
-    val corpus = Files.createTempDirectory("corpusfp")
+    val corpus = tempDir("corpusfp")
     val f = corpus.resolve("documents.parquet")
     Files.writeString(f, "v1 corpus bytes")
-    val cache = Files.createTempDirectory("stagecachefp")
+    val cache = tempDir("stagecachefp")
     sys.props(StageCache.Prop) = cache.toString
     try {
       var builds = 0
       def stage(): Unit = {
-        StageCache.resolve(s"row_${StageCache.dirKey(corpus.toString)}") {
+        StageCache.staged(s"row_${StageCache.dirKey(corpus.toString)}") {
           _ => builds += 1 }
         ()
       }
@@ -178,11 +166,7 @@ class StreamAggParitySpec extends SparkSuite {
       assert(f.toFile.setLastModified(f.toFile.lastModified() + 60000))
       stage()
       assert(builds == 2, "mutated corpus must force a re-stage")
-    } finally {
-      sys.props.remove(StageCache.Prop)
-      graft.operators.Sync.deleteTree(cache.toFile)
-      graft.operators.Sync.deleteTree(corpus.toFile)
-    }
+    } finally sys.props.remove(StageCache.Prop)
   }
 
   test("session_window gap boundary: an exact-gap event merges") {

@@ -79,24 +79,28 @@ class StreamReplaySpec extends SparkSuite {
 
   test("every stream row has the same columns and types on an empty " +
       "corpus as on sf0.001") {
-    val empty = EmptyCorpus.stage(spark)
-    val emptySchemas =
-      try streamRows.map { case (name, fn) =>
-        name -> fn(spark, empty.toString).schema
-          .map(f => f.name -> f.dataType.simpleString)
-      } finally graft.operators.Sync.deleteTree(empty.toFile)
+    val empty = EmptyCorpus.stage(spark, tempDir("sf-empty"))
+    val emptySchemas = streamRows.map { case (name, fn) =>
+      name -> fn(spark, empty.toString).schema
+        .map(f => f.name -> f.dataType.simpleString)
+    }
     assert(emptySchemas.size == 25)
     val diffs = emptySchemas.filter { case (n, s) => s != runs(n)._2 }
     assert(diffs.isEmpty, diffs.map { case (n, s) =>
       s"$n: empty $s vs ${runs(n)._2}" }.mkString("\n"))
   }
 
-  /** Harness dirs (work dirs, uncached stagings) now under tmpdir. */
+  /** Harness dirs (work dirs, uncached stagings) now under the scratch
+    * root, where every harness dir is made. */
   private def harnessDirs(): Set[String] =
-    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles())
-      .toSeq.flatten.map(_.getName)
+    Option(Scratch.root.toFile.listFiles()).toSeq.flatten.map(_.getName)
       .filter(n => n.startsWith("replay") || n.startsWith("graftstage"))
       .toSet
+
+  test("the leak check sees a harness dir while it lives, not after") {
+    val seen = Scratch.within("replay")(_ => harnessDirs())
+    assert(seen.size == 1 && (seen -- harnessDirs()).size == 1)
+  }
 
   private def rootMessage(e: Throwable): String =
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last

@@ -120,7 +120,7 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
 
   test("a large member-per-record .warc.gz splits into record-range " +
       "partitions with byte-identical results") {
-    val d = Files.createTempDirectory("warcsplit")
+    val d = tempDir("warcsplit")
     val out = new java.io.ByteArrayOutputStream()
     (0 until 100).foreach(i => out.write(Warc.fixtureWarcMemberGz(i)))
     Files.write(d.resolve("big.warc.gz"), out.toByteArray)
@@ -145,15 +145,12 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
         .map(_.toSeq.mkString("|")).sorted.toSeq
       assert(a == b, s"split read differs: ${a.take(3)} vs ${b.take(3)}")
       assert(a.length == 200) // 2 records per doc
-    } finally {
-      spark.conf.set(key, old)
-      graft.operators.Sync.deleteTree(d.toFile)
-    }
+    } finally spark.conf.set(key, old)
   }
 
   test("a large WHOLE-STREAM-gzipped archive is NOT range-split: one " +
       "partition, streaming one-member-residency parse (r20 ADVICE)") {
-    val d = Files.createTempDirectory("warcnosplit")
+    val d = tempDir("warcnosplit")
     // one gzip member spanning the whole file — range tasks would scan
     // for boundaries that don't exist and partition 0 would buffer the
     // whole decompressed stream
@@ -169,35 +166,30 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
       assert(df.rdd.getNumPartitions == 1,
         s"whole-stream gz fanned out: ${df.rdd.getNumPartitions}")
       assert(df.count() == 100) // 50 docs x (warcinfo + response)
-    } finally {
-      spark.conf.set(key, old)
-      graft.operators.Sync.deleteTree(d.toFile)
-    }
+    } finally spark.conf.set(key, old)
   }
 
   test("hidden files (_ and . prefixed) are excluded from batch and " +
       "stream listings (r20 ADVICE: the StageCache _STAGED marker)") {
-    val d = Files.createTempDirectory("warchidden")
+    val d = tempDir("warchidden")
     Files.write(d.resolve("a.warc"), Warc.fixtureWarcRaw(2))
     Files.write(d.resolve("_STAGED"), "marker".getBytes("UTF-8"))
     Files.write(d.resolve(".hidden"), "x".getBytes("UTF-8"))
-    try {
-      val df = spark.read.format("graft.sources.v2.WarcSource")
-        .load(d.toString)
-      assert(df.rdd.getNumPartitions == 1)
-      assert(df.count() == 2) // warcinfo + response; no marker scan
-      // streaming listing skips them too
-      val ckpt = tempDir("warchiddenckpt").toString
-      val out = tempDir("warchiddenout").toString
-      val q = spark.readStream.format("graft.sources.v2.WarcSource")
-        .load(d.toString).select("url")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      assert(spark.read.parquet(out).count() == 2)
-    } finally graft.operators.Sync.deleteTree(d.toFile)
+    val df = spark.read.format("graft.sources.v2.WarcSource")
+      .load(d.toString)
+    assert(df.rdd.getNumPartitions == 1)
+    assert(df.count() == 2) // warcinfo + response; no marker scan
+    // streaming listing skips them too
+    val ckpt = tempDir("warchiddenckpt").toString
+    val out = tempDir("warchiddenout").toString
+    val q = spark.readStream.format("graft.sources.v2.WarcSource")
+      .load(d.toString).select("url")
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(spark.read.parquet(out).count() == 2)
   }
 
   test("a file landing BEFORE the committed watermark fails loudly " +
@@ -234,46 +226,48 @@ class WarcSourceV2Spec extends SparkSuite(cpus = 2) {
     // buffer anywhere in the WARC path), far past anything a
     // content-column feed could stage per row at this member count.
     // The fetch must read ONLY the (offset, rec_bytes) extents.
-    val f = Files.createTempDirectory("warcseek").resolve("big.warc.gz")
-    val rnd = new java.util.Random(7)
-    val extents = Vector.newBuilder[(Int, Long, Long, Long)]
-    val outS = new java.io.BufferedOutputStream(
-      java.nio.file.Files.newOutputStream(f), 1 << 20)
-    var off = 0L
-    var checksum42 = 0L
-    (0 until 300).foreach { k =>
-      val body = new Array[Byte](1 << 20)
-      rnd.nextBytes(body)
-      if (k == 42) {
-        var i = 0
-        while (i < body.length) {
-          checksum42 += (body(i) & 0xff).toLong * (1 + i % 97)
-          i += 1
+    // ~300 MiB on disk: deleted as soon as the test ends
+    Scratch.within("warcseek") { d =>
+      val f = d.resolve("big.warc.gz")
+      val rnd = new java.util.Random(7)
+      val extents = Vector.newBuilder[(Int, Long, Long, Long)]
+      val outS = new java.io.BufferedOutputStream(
+        java.nio.file.Files.newOutputStream(f), 1 << 20)
+      var off = 0L
+      var checksum42 = 0L
+      (0 until 300).foreach { k =>
+        val body = new Array[Byte](1 << 20)
+        rnd.nextBytes(body)
+        if (k == 42) {
+          var i = 0
+          while (i < body.length) {
+            checksum42 += (body(i) & 0xff).toLong * (1 + i % 97)
+            i += 1
+          }
         }
+        val member = Warc.gzip(Warc.warcEncode(
+          Seq(("resource", s"u://rec$k", body))))
+        outS.write(member)
+        extents += ((k, off, member.length.toLong, body.length.toLong))
+        off += member.length
       }
-      val member = Warc.gzip(Warc.warcEncode(
-        Seq(("resource", s"u://rec$k", body))))
-      outS.write(member)
-      extents += ((k, off, member.length.toLong, body.length.toLong))
-      off += member.length
+      outS.close()
+      assert(off > Warc.DefaultMaxRecordBytes,
+        s"fixture too small: $off bytes")
+      import spark.implicits._
+      val all = extents.result()
+      val cdx = Seq(all(0), all(42), all(299))
+        .map { case (k, o, l, _) => (f.toString, k, o, l) }
+        .toDF("path", "record_idx", "offset", "rec_bytes")
+      val got = Warc.warcFetchSlicesFromFiles(spark, cdx,
+        compressedCoords = true)
+        .select("record_idx", "url", "n_body_bytes", "body_checksum")
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
+          r.getLong(3))).sortBy(_._1).toSeq
+      assert(got.map(_._1) == Seq(0, 42, 299), got.toString)
+      assert(got.forall(_._3 == (1 << 20).toLong), got.toString)
+      assert(got(1)._2 == "u://rec42" && got(1)._4 == checksum42,
+        s"seek fetch decoded the wrong record: ${got(1)}")
     }
-    outS.close()
-    assert(off > Warc.DefaultMaxRecordBytes,
-      s"fixture too small: $off bytes")
-    import spark.implicits._
-    val all = extents.result()
-    val cdx = Seq(all(0), all(42), all(299))
-      .map { case (k, o, l, _) => (f.toString, k, o, l) }
-      .toDF("path", "record_idx", "offset", "rec_bytes")
-    val got = Warc.warcFetchSlicesFromFiles(spark, cdx,
-      compressedCoords = true)
-      .select("record_idx", "url", "n_body_bytes", "body_checksum")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1).toSeq
-    assert(got.map(_._1) == Seq(0, 42, 299), got.toString)
-    assert(got.forall(_._3 == (1 << 20).toLong), got.toString)
-    assert(got(1)._2 == "u://rec42" && got(1)._4 == checksum42,
-      s"seek fetch decoded the wrong record: ${got(1)}")
-    graft.operators.Sync.deleteTree(f.getParent.toFile)
   }
 }

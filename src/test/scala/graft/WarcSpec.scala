@@ -265,48 +265,46 @@ class WarcSpec extends AnyFunSuite {
       ("resource", s"u://rec$i", body)
     })
     val recs = WarcReference.parseWarc(raw)
-    val dir = java.nio.file.Files.createTempDirectory("slicefetch")
-    val file = dir.resolve("whole.warc.gz")
-    java.nio.file.Files.write(file, Warc.gzip(raw))
-    val p = new org.apache.hadoop.fs.Path(file.toString)
-    val in = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      .open(p)
-    try {
-      val fetcher = new Warc.ArchiveSliceFetcher(in)
-      // every 3rd record, ascending — the sorted-selection shape
-      // warcFetchSlicesFromFiles feeds per (task, file)
-      val picks = recs.zipWithIndex.collect {
-        case (r, i) if i % 3 == 0 => r }
-      picks.foreach { r =>
-        val slice = fetcher.readUncompressed(r.offset, r.recBytes).get
-        val rec = WarcReference.parseWarc(slice).head
-        assert(rec.targetUri == r.targetUri &&
-          java.util.Arrays.equals(rec.body, r.body),
-          s"slice at ${r.offset} decoded wrong record ${rec.targetUri}")
-      }
-      // LINEAR: one reader start, total forward work bounded by one
-      // pass over the uncompressed stream. The r20 fallback restarted
-      // per row (restarts == picks.length) and advanced
-      // sum-of-offsets ≈ O(k·file) bytes.
-      assert(fetcher.gzRestarts == 1,
-        s"expected 1 reader start, got ${fetcher.gzRestarts}")
-      assert(fetcher.gzBytesAdvanced <= raw.length,
-        s"forward work ${fetcher.gzBytesAdvanced} exceeds one pass " +
-          s"over ${raw.length} uncompressed bytes")
-      val quadraticFloor = picks.map(_.offset).sum
-      assert(fetcher.gzBytesAdvanced < quadraticFloor,
-        s"forward work ${fetcher.gzBytesAdvanced} is not sub-quadratic " +
-          s"(per-row restart floor $quadraticFloor)")
-      // an out-of-order (smaller) offset still answers correctly via
-      // one documented restart
-      val first = recs.head
-      val slice0 = fetcher.readUncompressed(first.offset,
-        first.recBytes).get
-      assert(WarcReference.parseWarc(slice0).head.targetUri == first.targetUri)
-      assert(fetcher.gzRestarts == 2)
-    } finally {
-      scala.util.Try(in.close())
-      graft.operators.Sync.deleteTree(dir.toFile)
+    Scratch.within("slicefetch") { dir =>
+      val file = dir.resolve("whole.warc.gz")
+      java.nio.file.Files.write(file, Warc.gzip(raw))
+      val p = new org.apache.hadoop.fs.Path(file.toString)
+      val in = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        .open(p)
+      try {
+        val fetcher = new Warc.ArchiveSliceFetcher(in)
+        // every 3rd record, ascending — the sorted-selection shape
+        // warcFetchSlicesFromFiles feeds per (task, file)
+        val picks = recs.zipWithIndex.collect {
+          case (r, i) if i % 3 == 0 => r }
+        picks.foreach { r =>
+          val slice = fetcher.readUncompressed(r.offset, r.recBytes).get
+          val rec = WarcReference.parseWarc(slice).head
+          assert(rec.targetUri == r.targetUri &&
+            java.util.Arrays.equals(rec.body, r.body),
+            s"slice at ${r.offset} decoded wrong record ${rec.targetUri}")
+        }
+        // LINEAR: one reader start, total forward work bounded by one
+        // pass over the uncompressed stream. The r20 fallback restarted
+        // per row (restarts == picks.length) and advanced
+        // sum-of-offsets ≈ O(k·file) bytes.
+        assert(fetcher.gzRestarts == 1,
+          s"expected 1 reader start, got ${fetcher.gzRestarts}")
+        assert(fetcher.gzBytesAdvanced <= raw.length,
+          s"forward work ${fetcher.gzBytesAdvanced} exceeds one pass " +
+            s"over ${raw.length} uncompressed bytes")
+        val quadraticFloor = picks.map(_.offset).sum
+        assert(fetcher.gzBytesAdvanced < quadraticFloor,
+          s"forward work ${fetcher.gzBytesAdvanced} is not sub-quadratic " +
+            s"(per-row restart floor $quadraticFloor)")
+        // an out-of-order (smaller) offset still answers correctly via
+        // one documented restart
+        val first = recs.head
+        val slice0 = fetcher.readUncompressed(first.offset,
+          first.recBytes).get
+        assert(WarcReference.parseWarc(slice0).head.targetUri == first.targetUri)
+        assert(fetcher.gzRestarts == 2)
+      } finally scala.util.Try(in.close())
     }
   }
 

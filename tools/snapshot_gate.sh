@@ -62,19 +62,31 @@ if [ -n "$PROPREAD" ]; then
   exit 1
 fi
 
+echo "[gate] 0f/3 one scratch owner"
+SCRATCH="$(grep -rnE 'createTempDirectory|addShutdownHook' src/main src/test |
+  grep -vE '^src/(main/scala/graft/Scratch|test/scala/graft/SparkSuite)\.scala:' ||
+  true)"
+if [ -n "$SCRATCH" ]; then
+  echo "$SCRATCH"
+  echo "[gate] FAIL: temp dir or shutdown hook outside Scratch.scala and" \
+    "SparkSuite.scala (use Scratch.within / Scratch.held, or tempDir in tests)"
+  exit 1
+fi
+
 echo "[gate] 1/3 sbt compile + Test/compile"
 sbt -batch ";compile;Test/compile" >/tmp/gate_compile.log 2>&1 || {
   tail -30 /tmp/gate_compile.log; echo "[gate] FAIL: compile"; exit 1; }
 
-echo "[gate] 1b/3 retrieval and sync job budgets, resident store pages"
-sbt -batch "testOnly graft.RetrievalBudgetSpec graft.SyncBudgetSpec graft.StorePageSpec" \
+echo "[gate] 1b/3 retrieval, sync and dedup job budgets, resident store pages"
+sbt -batch "testOnly graft.RetrievalBudgetSpec graft.SyncBudgetSpec graft.DedupBudgetSpec graft.StorePageSpec" \
   >/tmp/gate_budget.log 2>&1 || {
   tail -30 /tmp/gate_budget.log
   echo "[gate] FAIL: a probe, a page lookup, a table load, the sync flag" \
-    "read or an incremental syncRun/codeRun gained a Spark job, or a" \
-    "resident store page differs from the Spark plan"; exit 1; }
+    "read, an incremental syncRun/codeRun or keepBest gained a Spark job," \
+    "or a resident store page differs from the Spark plan"; exit 1; }
 
 OUT="$(mktemp -d /tmp/gate_verify.XXXXXX)"
+trap 'rm -rf "$OUT"' EXIT
 echo "[gate] 2/3 spot Verify at $SF_DIR -> $OUT"
 SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF_DIR $OUT" \
   >/tmp/gate_verify.log 2>&1 || {
@@ -84,5 +96,4 @@ echo "[gate] 3/3 DuckDB compare"
 python3 tools/compare.py "$SF_DIR" "$OUT" || {
   echo "[gate] FAIL: oracle compare"; exit 1; }
 
-rm -rf "$OUT"
 echo "[gate] PASS — safe to commit"
